@@ -26,7 +26,7 @@ DuckDB's replace() scan left-to-right non-overlapping, and the
 doubled delimiter means adjacent occurrences never share a matched
 character -- so greedy merge application is bit-identical in both
 engines, which makes even the iterative trainer oracle-able by
-unrolling rounds in SQL (registry._bpe_ctes).
+unrolling rounds in SQL (registry.shared._bpe_ctes).
 """
 
 from __future__ import annotations

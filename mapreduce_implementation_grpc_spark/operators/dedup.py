@@ -241,7 +241,7 @@ def minhash_signatures(
     """MinHash signature per doc: sig[p] = min over shingles of
     (a_p * portable_hash32(shingle) + b_p) % MINHASH_PRIME -- one md5
     per shingle, then flat integer mul-add-mod per permutation, all
-    reproducible in DuckDB (see registry._minhash_pairs_sql).
+    reproducible in DuckDB (see registry.oracle_builders._minhash_pairs_sql).
 
     Shape matters: shingles are EXPLODED to rows and the per-perm
     minima taken with groupBy(doc_id).agg(min...) -- flat scalar
@@ -459,7 +459,7 @@ def dedup_clusters(
     pair graph. With the portable MinHash hashing, the whole chain
     (signatures -> banded pairs -> transitive min-label closure) is
     oracle-checked against a DuckDB recursive CTE
-    (registry._dedup_clusters_sql), plus metamorphic tests (chained
+    (registry.oracle_builders._dedup_clusters_sql), plus metamorphic tests (chained
     near-dups merge into one cluster)."""
     pairs = minhash_near_dup_pairs(
         docs, text_col, min_est_jaccard=min_est_jaccard, reliable=reliable
@@ -477,7 +477,7 @@ def simhash_fp(docs: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle on doc_id, fully codegen'd. 60 bits (an md5 prefix)
     rather than 64 so the token hash and the assembled fingerprint
     stay inside signed 64-bit range in BOTH engines -- the whole
-    operator is DuckDB-oracle-checkable (registry._simhash_sql).
+    operator is DuckDB-oracle-checkable (registry.oracle_builders._simhash_sql).
 
     The 60 per-bit counters are PACKED two to a 64-bit sum (30-bit
     fields), halving the aggregate count from 61 to 31: Catalyst

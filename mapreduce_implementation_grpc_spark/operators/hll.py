@@ -43,7 +43,7 @@ def hll_registers(df: DataFrame, group_cols: list[str], item_col: str) -> DataFr
     """The stored sketch table [*group_cols, reg, mj]: per group and
     register, the max leading-zero rank. This is the MERGEABLE layout
     -- coarser grains derive from it by reg-wise max alone, never by
-    re-reading the raw rows (see registry.q_hll_user_rollup)."""
+    re-reading the raw rows (see registry.curation.q_hll_user_rollup)."""
     h = portable_hash60(F.col(item_col).cast("string"))
     w = F.shiftright(h, 8)
     bitlen = F.length(F.conv(w.cast("string"), 10, 2))

@@ -90,7 +90,7 @@ def _centroids_from(assigned: DataFrame, vec_col: str) -> DataFrame:
     similarity.ivf_centroids): order-independent, so every Lloyd
     round -- and therefore the whole iterative fit -- is
     deterministic and reproducible cross-engine; the DuckDB oracle
-    (registry._kmeans_cells_sql) unrolls the identical iterations. A
+    (registry.oracle_builders._kmeans_cells_sql) unrolls the identical iterations. A
     double-fold avg would vary with partition splits."""
     flat = assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
     dsum = F.sum(F.col("v").cast("double").cast("decimal(27,12)"))

@@ -36,7 +36,7 @@ Scale design:
   contribution is rounded to 9 decimals and summed as DECIMAL
   (associative, partitioning-independent), then string-routed back
   to double -- so every iteration is bit-identical in Spark and
-  DuckDB and the unrolled-SQL oracle (registry._pagerank_ctes)
+  DuckDB and the unrolled-SQL oracle (registry.shared._pagerank_ctes)
   hash-matches exactly. The key encoding never touches the rank
   arithmetic: per-node values are identical under the bijection.
 """

@@ -1,451 +1,18 @@
-"""Query/oracle registry package (split from the 12.5k-line
-registry.py in round 8, VERDICT r7 #3; tools/split_registry.py
-is the generator and audit trail). Parts import strictly
-earlier parts, so module-level execution order -- oracle dict
-construction, mutation, contract asserts -- is preserved.
+"""Query/oracle registry: every query as ``(spark, sf_dir) -> DataFrame``
+plus its DuckDB oracle SQL for the driver's correctness gate.
+
+Query functions live in the part modules (``reference_surface``,
+``text_shaping``, ..., ``eval_temporal2``); each ``oracles_*`` module
+holds its own oracle dict. ``assembly`` lists them once, in registry
+order, and this package exports only that public surface. Import any
+other name from the module that defines it.
 """
 
-from __future__ import annotations
-
-from .shared import (
-    Callable,
-    DataFrame,
-    F,
-    LANG_MARKERS,
-    PII_PATTERNS,
-    SparkSession,
-    Window,
-    _SQL_SHINGLES,
-    _SQL_TOKS,
-    _SQL_WORDCOUNT,
-    _SQL_WORDS,
-    _bpe_compression_sql,
-    _bpe_ctes,
-    _bpe_encode_sql,
-    _bpe_pack_sql,
-    _pagerank_ctes,
-    _sql_shingles,
-    _sql_toks,
-    analytics,
-    ann_ivf_topk,
-    ann_lsh_topk,
-    annotations,
-    bpe_like_token_count_col,
-    corpus_from_documents,
-    curate_documents,
-    decode_features,
-    decontaminate,
-    dedup_clusters,
-    doc_fingerprint_cols,
-    embedding_dup_pairs,
-    eval_overlap_report,
-    exact_dedup,
-    knn_brute_force,
-    label_propagation,
-    lang_score_cols,
-    load_table,
-    lsh_planes,
-    materialize,
-    minhash_near_dup_pairs,
-    mixture_sample,
-    ngram_jaccard_pairs,
-    normalized_col,
-    pii_redact,
-    quality_score_col,
-    quantize_embeddings,
-    read_text_corpus,
-    register_views,
-    repetition_stats,
-    resize_images,
-    sample_frames,
-    shard_manifest,
-    simhash_fp,
-    simhash_near_dup_pairs,
-    task_id_col,
-    text_stats_cols,
-    tfidf_top_terms,
-    tokenize,
-    top_k,
-    with_binary_payload,
-    with_token_array,
-    word_count,
-    word_count_rdd,
-    word_count_salted,
-    word_count_sql,
-)
-from .reference_surface import (
-    _CORPUS_TXT,
-    q_corpus_stats,
-    q_doc_idf_salted_join,
-    q_map_task_stats,
-    q_pricing_summary_sql,
-    q_tfidf_top_terms,
-    q_wordcount,
-    q_wordcount_rdd,
-    q_wordcount_salted,
-    q_wordcount_sql,
-    q_wordcount_textfile,
-    q_wordcount_topn,
-)
-from .text_shaping import (
-    BPE_MERGES,
-    q_bigram_pmi,
-    q_bpe_encode,
-    q_bpe_merges,
-    q_bpe_pair_counts,
-    q_doc_chunks,
-    q_doc_fingerprint,
-    q_inverted_index,
-    q_lang_id,
-    q_ngram_counts,
-    q_pack_sequences,
-    q_quality_score,
-    q_text_stats,
-    q_token_counts,
-    q_top_terms_per_lang,
-    q_training_shuffle_order,
-    q_vocab_ids,
-    q_vocab_ids_scalable,
-)
-from .curation import (
-    BM25_QUERY,
-    PAGERANK_ITERS,
-    PPR_SEGMENT,
-    _eq_lit,
-    q_bloom_decontaminate,
-    q_bloom_pruned_revenue,
-    q_bm25_topk,
-    q_bpe_compression_by_lang,
-    q_cms_heavy_hitters,
-    q_cms_screened_wordcount,
-    q_copurchase_butterflies,
-    q_decontaminate,
-    q_documents_sample,
-    q_duplicate_spans,
-    q_eval_overlap_report,
-    q_fuzzy_word_pairs,
-    q_hll_user_rollup,
-    q_hll_users_portable,
-    q_kmv_user_overlap,
-    q_mixture_sample,
-    q_pack_sequences_bpe,
-    q_pii_redact,
-    q_prf_rerank,
-    q_purchase_pagerank,
-    q_repetition_stats,
-    q_segment_affinity_suppliers,
-    q_shard_manifest,
-    q_temperature_sample,
-    q_token_budget_mixture,
-)
-from .dedup import (
-    q_dedup_clusters,
-    q_dedup_clusters_jaccard,
-    q_dedup_exact,
-    q_dedup_keep_best,
-    q_events_profile,
-    q_events_unpivot,
-    q_incremental_dedup,
-    q_jaccard_prefix_pairs,
-    q_leakage_safe_split,
-    q_minhash_near_dup,
-    q_ngram_jaccard,
-    q_simhash,
-    q_simhash_pairs,
-    q_user_activity_decay,
-    q_user_activity_decay_fold,
-    q_weighted_doc_sample,
-)
-from .similarity import (
-    ANN_SWEEP_PROBES,
-    _mmr_ctes,
-    _query_vectors,
-    _rank_quality_df,
-    _recall_df,
-    ANN_CLUSTERED_SWEEP,
-    CLUSTERED_N_CLUSTERS,
-    CLUSTERED_SIGMA,
-    q_ann_clustered_ivf_kmeans_recall,
-    q_ann_clustered_selectivity,
-    q_ann_ivf,
-    q_ann_ivf_kmeans,
-    q_ann_ivfpq,
-    q_ann_ivfpq_residual,
-    q_ann_banded_candidates_sweep,
-    q_ann_lsh,
-    q_ann_lsh_banded,
-    q_ann_lsh_multiprobe,
-    q_ann_rank_quality,
-    q_ann_recall,
-    q_ann_recall_lsh,
-    q_ann_recall_ivf_kmeans,
-    q_ann_recall_lsh_banded,
-    q_ann_recall_lsh_banded_sweep,
-    q_ann_recall_lsh_multiprobe,
-    q_ann_recall_sweep,
-    q_bm25_snippets,
-    q_cluster_topics,
-    q_clustered_corpus_structure,
-    q_dsir_weights,
-    q_embedding_dup_pairs,
-    q_embedding_dup_pairs_lsh,
-    q_embedding_quantize,
-    q_hybrid_rrf_topk,
-    q_kmeans_cells,
-    q_knn_cosine,
-    q_mmr_rerank,
-    q_nb_confusion,
-    q_nb_lang_scores,
-    q_pq_codes,
-    q_pq_search,
-    q_select_pretraining_corpus,
-    q_semantic_dedup,
-)
-from .multimodal_q import (
-    q_multimodal_decode,
-    q_multimodal_frames,
-    q_multimodal_meta,
-    q_multimodal_phash_dup,
-    q_multimodal_video_meta,
-    q_multimodal_resize,
-    q_pricing_summary,
-)
-from .events_analytics import (
-    _exact_ntile,
-    q_approx_distinct_users,
-    q_attribution_summary,
-    q_brands_shipped,
-    q_cheapest_supplier,
-    q_curate_documents,
-    q_customer_distribution,
-    q_customer_order_ranks,
-    q_customer_rfm,
-    q_customer_spend_percentiles,
-    q_customers_without_orders,
-    q_disjunctive_revenue,
-    q_distinct_users,
-    q_doc_perplexity,
-    q_doc_tf_cosine,
-    q_dominant_suppliers,
-    q_embedding_project,
-    q_events_anomaly_zscore,
-    q_events_asof_error,
-    q_events_asof_features,
-    q_events_asof_nearest,
-    q_events_cube,
-    q_events_cusum,
-    q_events_hopping,
-    q_events_hourly,
-    q_events_json_stats,
-    q_events_last_per_user,
-    q_events_pivot,
-    q_events_quantiles,
-    q_events_quantiles_approx,
-    q_events_quantiles_binned,
-    q_events_range_join,
-    q_events_rollup,
-    q_events_session_window,
-    q_events_sessionize,
-    q_events_trailing_hour,
-    q_events_type_trend,
-    q_important_parts,
-    q_label_centroids,
-    q_large_orders,
-    q_large_volume_customers,
-    q_late_shipments,
-    q_market_share,
-    q_nation_market_share,
-    q_order_priority_backlog,
-    q_orders_grouping_sets,
-    q_orders_monthly,
-    q_orders_price_deciles,
-    q_orders_running_total,
-    q_product_profit,
-    q_promo_revenue,
-    q_purchase_and_signup_users,
-    q_purchase_attribution,
-    q_repeat_customers,
-    q_returned_items,
-    q_revenue_by_nation,
-    q_revenue_forecast,
-    q_sales_opportunity,
-    q_segment_event_stats,
-    q_session_concurrency,
-    q_shipping_priority,
-    q_signup_funnel,
-    q_small_qty_revenue,
-    q_stratified_sample,
-    q_supplier_part_counts,
-    q_top_customers,
-    q_top_supplier,
-    q_user_retention,
-    q_user_value_twap,
-    q_volume_shipping,
-    q_waiting_suppliers,
-    q_word_skew_profile,
-)
-from .oracle_builders import (
-    _SQL_EMB_V,
-    _ann_ivf_kmeans_sql,
-    _ann_lsh_sql,
-    _bucket_terms_sql,
-    _curate_documents_sql,
-    _dedup_clusters_sql,
-    _dsir_sql,
-    _duplicate_spans_sql,
-    _ivfpq_residual_sql,
-    _ivfpq_sql,
-    _kmeans_assign_cte,
-    _kmeans_cells_sql,
-    _kmeans_ctes,
-    _kmeans_means_cte,
-    _lang_hits_sql,
-    _minhash_pairs_sql,
-    _pq_codes_sql,
-    _pq_ctes,
-    _pq_search_sql,
-    _projection_sql,
-    _semantic_dedup_sql,
-    _simhash_pairs_sql,
-    _simhash_sql,
-    _sql_sh_rows,
-    _temperature_sql,
-)
-from .graph_layout import (
-    K_ANON,
-    REACH_HOPS,
-    REACH_NATION,
-    _bfs_ctes,
-    _hits_ctes,
-    _kcore_ctes,
-    _sssp_ctes,
-    _zorder_binned_sql,
-    q_basket_rules,
-    q_calibration_bins,
-    q_containment_pairs,
-    q_cosupply_clustering,
-    q_cosupply_kcore,
-    q_cosupply_link_prediction,
-    q_cosupply_link_prediction_capped,
-    q_cosupply_triangles,
-    q_curve_locality_stats,
-    q_customer_skyline,
-    q_customer_spend_gini,
-    q_customer_spend_theil,
-    q_doc_length_quantile_norm,
-    q_embedding_dim_correlation,
-    q_embedding_dim_stats,
-    q_event_markov_entropy,
-    q_event_transitions,
-    q_events_acf,
-    q_events_gap_fill,
-    q_funnel_strict_sequence,
-    q_heaps_law_fit,
-    q_hilbert_cells,
-    q_hilbert_skipping_summary,
-    q_k_anonymity_report,
-    q_lang_js_divergence,
-    q_lang_lexical_richness,
-    q_lang_token_entropy,
-    q_market_basket_pairs,
-    q_nation_revenue_trend,
-    q_ngram_novelty,
-    q_part_sales_skyline,
-    q_parts_abc_analysis,
-    q_purchase_hits,
-    q_score_auc,
-    q_score_average_precision,
-    q_score_lift_deciles,
-    q_supplier_cheapest_reach,
-    q_supplier_reach,
-    q_term_chi2_keywords,
-    q_user_activity_streaks,
-    q_user_hazard_na,
-    q_user_survival_km,
-    q_zipf_word_fit,
-    q_zorder_cells,
-    q_zorder_skipping_summary,
-)
-from .eval_temporal import (
-    MARKOV_ORACLE_CHANNELS,
-    _absorb_p,
-    _absorption_ctes,
-    _linkage_frames,
-    _markov_transitions,
-    q_attribution_markov_removal,
-    q_brand_revenue_hhi,
-    q_cosupply_degree_assortativity,
-    q_cosupply_nation_modularity,
-    q_customer_cohort_ltv,
-    q_customer_value_migration,
-    q_embedding_mutual_nn,
-    q_embedding_mutual_nn_lsh,
-    q_event_conversion_absorption,
-    q_events_ewma_control,
-    q_events_interarrival_burstiness,
-    q_events_run_length,
-    q_feature_information_gain,
-    q_label_silhouette,
-    q_lang_simpson_diversity,
-    q_linkage_golden_record,
-    q_linkage_sorted_neighborhood,
-    q_nation_rank_movers,
-    q_nation_rank_spearman,
-    q_nation_revenue_holt,
-    q_nation_theilsen_trend,
-    q_nearest_centroid_confusion,
-    q_record_linkage_fs,
-    q_segment_order_gap_profile,
-    q_session_bounce_rate,
-    q_shipping_delay_profile,
-    q_term_keyness_g2,
-    q_user_wallet_balance,
-)
-from .eval_temporal2 import (
-    RAKE_STOPWORDS,
-    q_ab_conversion_ztest,
-    q_brand_weighted_median,
-    q_corpus_drift_psi,
-    q_customer_spend_lorenz,
-    q_dq_audit,
-    q_duplicate_charge_screen,
-    q_events_anomaly_mad,
-    q_events_dow_seasonality,
-    q_events_rolling_wau,
-    q_events_trailing_slope,
-    q_events_trimmed_mean,
-    q_events_winsorized_mean,
-    q_frequent_event_trigrams,
-    q_item_item_cf,
-    q_market_basket_triples,
-    q_nation_top_brands_others,
-    q_orders_benford,
-    q_rake_keyphrases,
-    q_segment_nation_chisq,
-    q_stratified_sample_exact,
-    q_training_negatives,
-    q_user_day_snapshot_diff,
-    q_value_drift_ks,
-)
-from .oracles_core import (
-    ORACLES,
-)
-from .oracles_ext import (
-    _hilbert_base_sql,
-    _hll_est_sql,
-    _linkage_ctes,
-    _pii_oracle_sql,
-    _recall_block,
-)
-from . import oracles_ext2  # noqa: F401  (part 13: ORACLES mutations)
-from .oracles_ext3 import (
-    _markov_removal_sql,
-    _sorted_neighborhood_oracle,
-)
 from .assembly import (
     BENCH_QUERIES,
     CANARY_QUERIES,
     EAGER_BENCH_QUERIES,
     EXTENDED_BENCH_QUERIES,
+    ORACLES,
     QUERIES,
 )

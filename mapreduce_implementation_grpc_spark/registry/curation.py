@@ -1,4 +1,7 @@
-"""registry part 03: curation (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for data curation: decontamination, sketches (CMS,
+HLL, KMV, Bloom), BM25 retrieval, PageRank, PII redaction and mixture
+sampling.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,6 @@
-"""registry part 04: dedup (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for deduplication (exact, MinHash, SimHash, prefix-
+filtered Jaccard, clusters) plus a few event-profile queries.
+"""
 
 from __future__ import annotations
 

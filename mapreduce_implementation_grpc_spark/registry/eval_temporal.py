@@ -1,4 +1,7 @@
-"""registry part 10: eval_temporal (split from the monolithic registry.py in round 8; pre-split again in round 9 -- see tools/split_eval_temporal.py)."""
+"""Registry queries for evaluation and temporal statistics: record
+linkage, Holt/Theil-Sen trends, mutual-NN matching, Markov attribution
+and rank movers.
+"""
 
 from __future__ import annotations
 

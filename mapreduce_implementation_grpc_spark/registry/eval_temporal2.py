@@ -1,4 +1,7 @@
-"""registry part 10b: eval_temporal2 (round-9 pre-split of eval_temporal before it crossed the 3,000-line ceiling; see tools/split_eval_temporal.py). New temporal/eval queries go HERE."""
+"""Registry queries for drift, anomaly and robust statistics: PSI/KS
+drift, MAD anomalies, Benford, Lorenz, trimmed/winsorized means and
+the DQ audit.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,6 @@
-"""registry part 07: events_analytics (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for event analytics: attribution, as-of and range
+joins, hopping/session windows, quantiles, CUSUM, RFM and curation.
+"""
 
 from __future__ import annotations
 

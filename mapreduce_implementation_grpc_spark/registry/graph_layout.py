@@ -1,4 +1,7 @@
-"""registry part 09: graph_layout (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for graphs (triangles, k-core, BFS, HITS, link
+prediction), data layout (Z-order/Hilbert skipping) and distribution
+statistics.
+"""
 
 from __future__ import annotations
 

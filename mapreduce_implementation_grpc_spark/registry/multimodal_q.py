@@ -1,4 +1,6 @@
-"""registry part 06: multimodal_q (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries over the multimodal fixtures: image metadata, decode,
+perceptual-hash dedup, resize, video metadata and frames.
+"""
 
 from __future__ import annotations
 

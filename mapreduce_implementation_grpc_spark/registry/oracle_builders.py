@@ -1,4 +1,6 @@
-"""registry part 08: oracle_builders (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""DuckDB SQL generators shared by the oracle modules (ANN, dedup, BPE,
+k-means, PQ and sampling oracles).
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,7 @@
-"""registry part 11: oracles_core (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""DuckDB oracle SQL for the registry queries, part 1 of 4. Each
+``oracles_*`` module owns one ``ORACLES`` dict; ``assembly`` merges
+them.
+"""
 
 from __future__ import annotations
 
@@ -39,6 +42,31 @@ from .oracle_builders import (
 )
 
 
+
+# shared by purchase_attribution and attribution_summary
+_PURCHASE_ATTRIBUTION = """
+      WITH s AS (
+        SELECT event_id, user_id, ts, event_type, value,
+               CASE WHEN lag(ts) OVER w IS NULL
+                      OR CAST(floor(epoch(ts)) AS BIGINT)
+                         - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+                    THEN 1 ELSE 0 END AS st
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
+      s2 AS (SELECT *, sum(st) OVER (PARTITION BY user_id
+                 ORDER BY ts ASC, event_id ASC ROWS UNBOUNDED PRECEDING)
+                 AS session_id FROM s),
+      s3 AS (SELECT *, first_value(event_type) OVER w2 AS first_touch,
+                    first_value(ts) OVER w2 AS first_ts
+             FROM s2
+             WINDOW w2 AS (PARTITION BY user_id, session_id
+                           ORDER BY ts ASC, event_id ASC))
+      SELECT event_id AS purchase_id, user_id,
+             strftime(ts, '%Y-%m-%d %H:%M:%S') AS purchase_s, value,
+             first_touch,
+             strftime(first_ts, '%Y-%m-%d %H:%M:%S') AS session_start_s
+      FROM s3 WHERE event_type = 'purchase'
+    """
 
 ORACLES: dict[str, str] = {
     # faithful surface
@@ -1467,31 +1495,9 @@ ORACLES: dict[str, str] = {
              CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
       FROM events GROUP BY 1, 2
     """,
-    "purchase_attribution": """
-      WITH s AS (
-        SELECT event_id, user_id, ts, event_type, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                      OR CAST(floor(epoch(ts)) AS BIGINT)
-                         - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
-                    THEN 1 ELSE 0 END AS st
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
-      s2 AS (SELECT *, sum(st) OVER (PARTITION BY user_id
-                 ORDER BY ts ASC, event_id ASC ROWS UNBOUNDED PRECEDING)
-                 AS session_id FROM s),
-      s3 AS (SELECT *, first_value(event_type) OVER w2 AS first_touch,
-                    first_value(ts) OVER w2 AS first_ts
-             FROM s2
-             WINDOW w2 AS (PARTITION BY user_id, session_id
-                           ORDER BY ts ASC, event_id ASC))
-      SELECT event_id AS purchase_id, user_id,
-             strftime(ts, '%Y-%m-%d %H:%M:%S') AS purchase_s, value,
-             first_touch,
-             strftime(first_ts, '%Y-%m-%d %H:%M:%S') AS session_start_s
-      FROM s3 WHERE event_type = 'purchase'
-    """,
+    "purchase_attribution": _PURCHASE_ATTRIBUTION,
     "attribution_summary": f"""
-      WITH att AS ({{ATTRIBUTION}})
+      WITH att AS ({_PURCHASE_ATTRIBUTION})
       SELECT first_touch, count(*) AS n_purchases,
              CAST(CAST(sum(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
                AS total_revenue

@@ -1,4 +1,6 @@
-"""registry part 12: oracles_ext (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""DuckDB oracle SQL, part 2 of 4, including the oracles composed from
+``oracles_core`` entries (recall, rerank and twin queries).
+"""
 
 from __future__ import annotations
 
@@ -19,12 +21,12 @@ from .graph_layout import (
     _sssp_ctes,
     _zorder_binned_sql,
 )
-from .oracles_core import ORACLES
+from . import oracles_core
 
-
+ORACLES: dict[str, str] = {}
 
 # the SQL-front-end twin shares the DataFrame variant's oracle
-ORACLES["pricing_summary_sql"] = ORACLES["pricing_summary"]
+ORACLES["pricing_summary_sql"] = oracles_core.ORACLES["pricing_summary"]
 
 # composed data-selection pipeline: dedup keep-set, DSIR over the
 # deduped corpus, threshold, temperature membership over the selected
@@ -49,12 +51,8 @@ ORACLES["select_pretraining_corpus"] = (
        FROM kept k JOIN sel USING (doc_id)"""
 )
 
-ORACLES["attribution_summary"] = ORACLES["attribution_summary"].replace(
-    "{ATTRIBUTION}", ORACLES["purchase_attribution"]
-)
-
 ORACLES["hybrid_rrf_topk"] = f"""
-  WITH lexb AS (SELECT * FROM ({ORACLES["bm25_topk"]})),
+  WITH lexb AS (SELECT * FROM ({oracles_core.ORACLES["bm25_topk"]})),
   lex AS (SELECT doc_id,
                  row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS r_lex
           FROM lexb),
@@ -77,7 +75,7 @@ ORACLES["hybrid_rrf_topk"] = f"""
 """
 
 ORACLES["prf_rerank"] = f"""
-  WITH bm AS (SELECT * FROM ({ORACLES["bm25_topk"]})),
+  WITH bm AS (SELECT * FROM ({oracles_core.ORACLES["bm25_topk"]})),
   fb AS (SELECT doc_id FROM bm ORDER BY bm25 DESC, doc_id ASC LIMIT 10),
   fv AS (SELECT CAST(e.embedding AS DOUBLE[]) AS dvec
          FROM embeddings e JOIN fb ON e.vec_id = fb.doc_id),
@@ -97,7 +95,7 @@ ORACLES["prf_rerank"] = f"""
 """
 
 ORACLES["bm25_snippets"] = f"""
-  WITH top AS (SELECT * FROM ({ORACLES["bm25_topk"]})
+  WITH top AS (SELECT * FROM ({oracles_core.ORACLES["bm25_topk"]})
                ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
   j AS (SELECT top.doc_id, top.bm25, d.text,
                least(CASE WHEN instr(text, 'spark') > 0 THEN instr(text, 'spark') ELSE 1000000000 END, CASE WHEN instr(text, 'join') > 0 THEN instr(text, 'join') ELSE 1000000000 END, CASE WHEN instr(text, 'fast') > 0 THEN instr(text, 'fast') ELSE 1000000000 END) AS first_pos
@@ -112,7 +110,7 @@ ORACLES["bm25_snippets"] = f"""
 # composed evaluation: both sides reuse the existing deterministic oracles
 def _recall_block(ivf_sql: str) -> str:
     return (
-        "WITH exact AS (" + ORACLES["knn_cosine"] + "),\n"
+        "WITH exact AS (" + oracles_core.ORACLES["knn_cosine"] + "),\n"
         "ann AS (" + ivf_sql + "),\n"
         """h AS (SELECT e.query_id, count(*) AS n_hits
              FROM exact e JOIN ann a ON a.query_id = e.query_id
@@ -124,11 +122,11 @@ def _recall_block(ivf_sql: str) -> str:
     )
 
 
-ORACLES["ann_recall"] = _recall_block(ORACLES["ann_ivf"])
+ORACLES["ann_recall"] = _recall_block(oracles_core.ORACLES["ann_ivf"])
 # LSH-family recall rows (round 8): same composed eval over the
 # single-bucket and multi-probe LSH blocks
 ORACLES["ann_lsh_multiprobe"] = _ann_lsh_multiprobe_sql()
-ORACLES["ann_recall_lsh"] = _recall_block(ORACLES["ann_lsh"])
+ORACLES["ann_recall_lsh"] = _recall_block(oracles_core.ORACLES["ann_lsh"])
 ORACLES["ann_recall_lsh_multiprobe"] = _recall_block(
     ORACLES["ann_lsh_multiprobe"]
 )
@@ -150,7 +148,7 @@ ORACLES["mmr_rerank"] = _mmr_ctes()
 # routing predicate; everything else is byte-identical
 ORACLES["ann_recall_sweep"] = "\nUNION ALL\n".join(
     f"SELECT CAST({np} AS BIGINT) AS n_probe, r.* FROM ("
-    + _recall_block(ORACLES["ann_ivf"].replace("pr <= 2", f"pr <= {np}"))
+    + _recall_block(oracles_core.ORACLES["ann_ivf"].replace("pr <= 2", f"pr <= {np}"))
     + ") r"
     for np in (1, 2, 4)
 )
@@ -159,8 +157,8 @@ ORACLES["ann_recall_sweep"] = "\nUNION ALL\n".join(
 # graded ranking quality: same two deterministic rankings, so nDCG's
 # per-term round(ln,9)/decimal-sum recipe keeps the eval hash-exact
 ORACLES["ann_rank_quality"] = (
-    "WITH exact AS (" + ORACLES["knn_cosine"] + "),\n"
-    "ann AS (" + ORACLES["ann_ivf"] + "),\n"
+    "WITH exact AS (" + oracles_core.ORACLES["knn_cosine"] + "),\n"
+    "ann AS (" + oracles_core.ORACLES["ann_ivf"] + "),\n"
     """j AS (SELECT a.query_id, a.rank AS ann_rank, e.rank AS exact_rank
         FROM ann a LEFT JOIN exact e ON a.query_id = e.query_id
          AND a.neighbor_id = e.neighbor_id),
@@ -215,7 +213,7 @@ def _pii_oracle_sql() -> str:
 ORACLES["pii_redact"] = _pii_oracle_sql()
 ORACLES["nb_confusion"] = (
     "SELECT lang, pred_lang, count(*) AS n_docs FROM ("
-    + ORACLES["nb_lang_scores"]
+    + oracles_core.ORACLES["nb_lang_scores"]
     + ") GROUP BY 1, 2"
 )
 
@@ -223,8 +221,8 @@ ORACLES["nb_confusion"] = (
 # the *_scalable variants are plan-level rewrites (distributed exact
 # ranking) of the same queries -- sharing the oracle is the point:
 # the hash match proves the rewrite exact
-ORACLES["vocab_ids_scalable"] = ORACLES["vocab_ids"]
-ORACLES["customer_spend_percentiles_scalable"] = ORACLES["customer_spend_percentiles"]
+ORACLES["vocab_ids_scalable"] = oracles_core.ORACLES["vocab_ids"]
+ORACLES["customer_spend_percentiles_scalable"] = oracles_core.ORACLES["customer_spend_percentiles"]
 
 def _hll_est_sql(regs_rel: str, key_sel: str, key_group: str, grain: str, gkey: str) -> str:
     """Estimate CTE chain over a register relation [*, reg, mj] --

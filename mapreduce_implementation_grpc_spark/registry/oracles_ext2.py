@@ -1,13 +1,13 @@
-"""registry part 13: oracles_ext2 (split from the monolithic registry.py in round 8; pre-split again in round 9 -- see tools/split_oracles_ext2.py)."""
+"""DuckDB oracle SQL, part 3 of 4."""
 
 from __future__ import annotations
 
 from .shared import _SQL_TOKS, _SQL_WORDCOUNT
 from .oracle_builders import _banded_pairs_sql
 from .eval_temporal import MARKOV_ORACLE_CHANNELS, _absorption_ctes
-from .oracles_core import ORACLES
 from .oracles_ext import _linkage_ctes
 
+ORACLES: dict[str, str] = {}
 
 ORACLES["market_basket_pairs"] = """
   WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),

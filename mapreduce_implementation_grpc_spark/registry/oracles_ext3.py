@@ -1,4 +1,4 @@
-"""registry part 13b: oracles_ext3 (round-9 pre-split of oracles_ext2 before it crossed the 3,000-line ceiling; see tools/split_oracles_ext2.py). New oracle SQL goes HERE."""
+"""DuckDB oracle SQL, part 4 of 4."""
 
 from __future__ import annotations
 
@@ -6,20 +6,19 @@ from .eval_temporal import (
     MARKOV_ORACLE_CHANNELS,
 )
 from .oracle_builders import (
+    _ann_ivf_kmeans_sql,
     _banded_bb_sql,
-)
-from .oracles_core import (
-    ORACLES,
 )
 from .oracles_ext import (
     _linkage_ctes,
+    _recall_block,
 )
 from .shared import (
     _SQL_TOKS,
     _SQL_WORDCOUNT,
 )
 
-
+ORACLES: dict[str, str] = {}
 
 # Delay profile: integer-rank percentile selection (the MAD oracle
 # convention), exact integer day sums for the mean.
@@ -1205,10 +1204,7 @@ ORACLES["ann_clustered_ivf_kmeans_recall"] = _clustered_ivf_kmeans_sql()
 # the standard-corpus recall rung for the learned-cell IVF path:
 # composed from the existing unrolled-Lloyd serve block (VERDICT r9
 # #3 -- the ladder's missing row)
-from .oracle_builders import _ann_ivf_kmeans_sql as _aiks  # noqa: E402
-from .oracles_ext import _recall_block as _rb  # noqa: E402
-
-ORACLES["ann_recall_ivf_kmeans"] = _rb(_aiks())
+ORACLES["ann_recall_ivf_kmeans"] = _recall_block(_ann_ivf_kmeans_sql())
 
 
 # r10: video-container metadata twin -- the Spark side goes

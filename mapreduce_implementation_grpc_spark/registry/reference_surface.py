@@ -1,4 +1,6 @@
-"""registry part 01: reference_surface (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for the reference's own surface: the word-count
+variants, the SQL front end and corpus/map-task statistics.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,6 @@
-"""registry part 05: similarity (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for vector similarity: exact kNN, LSH/IVF/PQ ANN and
+their recall rows, reranking, DSIR and naive-Bayes language scores.
+"""
 
 from __future__ import annotations
 

@@ -1,4 +1,6 @@
-"""registry part 02: text_shaping (split from the monolithic registry.py in round 8; see tools/split_registry.py)."""
+"""Registry queries for text analysis and training-data shaping: text
+stats, language ID, BPE, chunking, packing, n-grams and vocabularies.
+"""
 
 from __future__ import annotations
 

@@ -16,9 +16,42 @@ shape is pure configuration: the same plans run on local[N] or a
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _env_conf() -> dict[str, str]:
+    """Spark confs from ``SPARK_GRAFT_CONF_JSON``, merged last.
+
+    Scale-dependent overrides stay configuration, never code: a JSON
+    object of spark confs (e.g. '{"spark.sql.shuffle.partitions":
+    "2000"}' on a real cluster) lets deployments retune without
+    touching plans. Scalars pass as their JSON text (json.dumps keeps
+    true/false lowercase, which Spark parses; str() would yield Python
+    'True'). A non-object document, a null and a nested value are
+    rejected loudly instead of being set as "null" or a Python repr.
+    """
+    raw = os.environ.get("SPARK_GRAFT_CONF_JSON")
+    if not raw:
+        return {}
+    conf = json.loads(raw)
+    if not isinstance(conf, dict):
+        raise ValueError(
+            "SPARK_GRAFT_CONF_JSON must be a JSON object of spark confs, "
+            f"got a JSON {type(conf).__name__}"
+        )
+    out = {}
+    for k, v in conf.items():
+        if v is None or isinstance(v, (dict, list)):
+            kind = "null" if v is None else type(v).__name__
+            raise ValueError(
+                f"SPARK_GRAFT_CONF_JSON[{k!r}]: conf values must be "
+                f"non-null scalars, got {kind}"
+            )
+        out[k] = v if isinstance(v, str) else json.dumps(v)
+    return out
 
 
 def get_spark(
@@ -28,6 +61,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults."""
+    env_conf = _env_conf()  # validate before touching the builder
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
@@ -50,28 +84,6 @@ def get_spark(
         # failing the scan
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    # scale-dependent overrides stay configuration, never code: a
-    # JSON dict of spark confs (e.g. '{"spark.sql.shuffle.partitions":
-    # "2000"}' on a real cluster) merged last so deployments can
-    # retune without touching plans. Local defaults above are the
-    # bench-comparable baseline.
-    env_conf = os.environ.get("SPARK_GRAFT_CONF_JSON")
-    if env_conf:
-        import json
-
-        for k, v in json.loads(env_conf).items():
-            # scalars pass as their JSON text (json.dumps keeps
-            # true/false lowercase, which Spark parses; str() would
-            # yield Python 'True'); nested values are rejected loudly
-            # instead of being set as Python reprs (ADVICE r10)
-            if isinstance(v, (dict, list)):
-                raise ValueError(
-                    f"SPARK_GRAFT_CONF_JSON[{k!r}]: conf values must be "
-                    f"scalars, got {type(v).__name__}"
-                )
-            builder = builder.config(
-                k, v if isinstance(v, str) else json.dumps(v)
-            )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**env_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

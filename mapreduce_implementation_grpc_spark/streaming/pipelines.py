@@ -378,7 +378,7 @@ def streaming_session_window(
     gap: str = "30 minutes",
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """Deployment twin of registry.q_events_session_window: the SAME
+    """Deployment twin of registry.events_analytics.q_events_session_window: the SAME
     native session_window aggregation over an unbounded stream, with
     a watermark so sessions FINALIZE (append mode emits a session
     exactly once, when the watermark passes its end -- late events
@@ -763,7 +763,7 @@ def _read_seen(spark, path: str, cols: list[str]):
 
 def hll_rollup_sink(spark, path: str):
     """foreachBatch sink: continuously-maintained day-grain HLL
-    register table -- the streaming twin of registry.q_hll_user_rollup.
+    register table -- the streaming twin of registry.curation.q_hll_user_rollup.
     Each microbatch is sketched to per-(event_type, day) registers
     (operators/hll.hll_registers, shared code) and reg-wise MAX-merged
     into the stored table, which any coarser-grain estimate then reads
@@ -1032,7 +1032,7 @@ def drift_report(spark, path: str, baseline_counts: DataFrame) -> DataFrame:
 
 
 def streaming_event_transitions(events: DataFrame) -> DataFrame:
-    """Stateful streaming twin of registry.q_event_transitions'
+    """Stateful streaming twin of registry.graph_layout.q_event_transitions'
     counting stage: per-user first-order transition increments with
     cross-batch chain stitching. State per user is the last folded
     (ts_us, event_id, event_type); each microbatch sorts its slice,
@@ -1113,7 +1113,7 @@ def streaming_cusum(
     slack: str = "0.5",
     threshold: str = "4.0",
 ) -> DataFrame:
-    """Stateful online twin of registry.q_events_cusum: per-event-type
+    """Stateful online twin of registry.events_analytics.q_events_cusum: per-event-type
     daily-count CUSUM with a FROZEN baseline -- the deployment shape
     of change-point monitoring (fit mean/std per key on a batch
     window, then stream residuals with O(1) state per key; the batch
@@ -1254,7 +1254,7 @@ def streaming_cusum(
 
 
 def streaming_wallet_balance(events: DataFrame) -> DataFrame:
-    """Stateful online twin of registry.q_user_wallet_balance: the
+    """Stateful online twin of registry.eval_temporal.q_user_wallet_balance: the
     floor-at-zero running balance folded per user in arrival order --
     literally B = max(0, B + x), the recursion the batch operator
     rewrites into the Lindley-reflection closed form (two shared-sort
@@ -1335,7 +1335,7 @@ def streaming_wallet_balance(events: DataFrame) -> DataFrame:
 
 
 def streaming_duplicate_charges(events: DataFrame) -> DataFrame:
-    """Stateful online twin of registry.q_duplicate_charge_screen
+    """Stateful online twin of registry.eval_temporal2.q_duplicate_charge_screen
     (operators/dq.duplicate_charge_pairs): the double-billing screen
     as an O(1)-state fold -- per (user, type, exact-cents) key the
     state is just the LAST folded (ts_us, event_id); every arriving
@@ -1429,7 +1429,7 @@ def streaming_duplicate_charges(events: DataFrame) -> DataFrame:
 
 
 def streaming_ewma_control(events: DataFrame) -> DataFrame:
-    """Stateful online twin of registry.q_events_ewma_control: the
+    """Stateful online twin of registry.eval_temporal.q_events_ewma_control: the
     EWMA control chart as an O(1)-state fold per event type. The
     batch operator folds DAILY value totals (exact BIGINT micros)
     through z' = round_half_away((x + z) / 2); here the state

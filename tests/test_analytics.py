@@ -258,8 +258,10 @@ def test_wallet_balance_matches_sequential_lindley(spark, sf_check):
 
     from pyspark.sql import functions as F
 
+    from mapreduce_implementation_grpc_spark.sources.catalog import load_table
+
     ev = (
-        registry.load_table(spark, sf_check, "events")
+        load_table(spark, sf_check, "events")
         .filter(F.col("event_type").isin("purchase", "click"))
         .select(
             "user_id",

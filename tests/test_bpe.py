@@ -192,6 +192,7 @@ def test_degenerate_corpus_oracle_noops_instead_of_nulling(spark):
     import duckdb
 
     from mapreduce_implementation_grpc_spark import registry
+    from mapreduce_implementation_grpc_spark.registry.text_shaping import BPE_MERGES
 
     # tokens: ab x3, cd x2 -> merge1 (a,b,3), merge2 (c,d,2), then dry
     text = "ab ab ab cd cd"
@@ -204,9 +205,9 @@ def test_degenerate_corpus_oracle_noops_instead_of_nulling(spark):
 
     merges, _ = bpe.train_merges(
         spark.createDataFrame([("ab", 3), ("cd", 2)], "w string, c long"),
-        num_merges=registry.BPE_MERGES,
+        num_merges=BPE_MERGES,
     )
-    assert len(merges) == 2 < registry.BPE_MERGES  # the degenerate case is real
+    assert len(merges) == 2 < BPE_MERGES  # the degenerate case is real
     assert [tuple(m) for m in merges] == [tuple(r) for r in orows]
 
     # and the downstream encode/compression oracles must not null out

@@ -307,20 +307,19 @@ def test_staleness_report_covers_registry():
 
 
 def test_registry_has_no_shadowed_bindings():
-    """A module-level name bound twice in registry.py silently
+    """A module-level name bound twice in one registry module silently
     SHADOWS the first binding (it happened: a new def
     q_stratified_sample replaced the pre-existing alias to
     analytics.stratified_sample, changing a registered query's
-    semantics without any error), and a duplicate literal key in the
-    QUERIES dict silently drops an entry. Both are structural
-    mistakes the language won't flag -- so the contract does."""
+    semantics without any error), and a key given twice in the QUERIES
+    literal or in one module's ORACLES dict silently drops an entry.
+    Both are structural mistakes the language won't flag -- so the
+    contract does. (Keys repeated ACROSS oracle modules raise when
+    assembly merges them.)"""
     import ast
     import collections
     import glob
 
-    # the registry is a package since round 8: scan every part, and
-    # check duplicates ACROSS parts too (a name bound in two parts is
-    # the same silent-shadow bug, realized at __init__ import time)
     part_paths = sorted(
         glob.glob(
             os.path.join(
@@ -329,11 +328,11 @@ def test_registry_has_no_shadowed_bindings():
         )
     )
     assert part_paths, "registry package parts not found"
-    names = []
-    dict_nodes = []
+    checked_dicts = []
     for path in part_paths:
-        if path.endswith("__init__.py"):
-            continue  # pure re-exports of the parts' own bindings
+        part = os.path.basename(path)
+        names = []
+        keys = collections.defaultdict(list)
         tree = ast.parse(open(path).read())
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
@@ -342,6 +341,13 @@ def test_registry_has_no_shadowed_bindings():
                 for t in node.targets:
                     if isinstance(t, ast.Name):
                         names.append(t.id)
+                    elif (
+                        isinstance(t, ast.Subscript)
+                        and isinstance(t.value, ast.Name)
+                        and t.value.id == "ORACLES"
+                        and isinstance(t.slice, ast.Constant)
+                    ):
+                        keys["ORACLES"].append(t.slice.value)
             elif isinstance(node, ast.AnnAssign) and isinstance(
                 node.target, ast.Name
             ):
@@ -349,22 +355,28 @@ def test_registry_has_no_shadowed_bindings():
                 if node.target.id in ("QUERIES", "ORACLES") and isinstance(
                     node.value, ast.Dict
                 ):
-                    dict_nodes.append(node)
-    dups = sorted(
-        n for n, c in collections.Counter(names).items() if c > 1
-    )
-    assert dups == [], f"registry package binds these names twice: {dups}"
-    assert dict_nodes, "QUERIES/ORACLES dict literals not found"
-    for node in dict_nodes:
-        keys = [
-            k.value for k in node.value.keys if isinstance(k, ast.Constant)
-        ]
-        dup_keys = sorted(
-            k for k, c in collections.Counter(keys).items() if c > 1
+                    keys[node.target.id] += [
+                        k.value
+                        for k in node.value.keys
+                        if isinstance(k, ast.Constant)
+                    ]
+        dups = sorted(
+            n for n, c in collections.Counter(names).items() if c > 1
         )
-        assert dup_keys == [], (
-            f"{node.target.id} literal repeats keys: {dup_keys}"
-        )
+        assert dups == [], f"{part} binds these names twice: {dups}"
+        for dict_name, dict_keys in keys.items():
+            checked_dicts.append((part, dict_name))
+            dup_keys = sorted(
+                k for k, c in collections.Counter(dict_keys).items() if c > 1
+            )
+            assert dup_keys == [], f"{part} {dict_name} repeats keys: {dup_keys}"
+    assert sorted(checked_dicts) == [
+        ("assembly.py", "QUERIES"),
+        ("oracles_core.py", "ORACLES"),
+        ("oracles_ext.py", "ORACLES"),
+        ("oracles_ext2.py", "ORACLES"),
+        ("oracles_ext3.py", "ORACLES"),
+    ]
 
 
 def test_canary_set_is_pinned_append_only():

@@ -17,7 +17,7 @@ Families covered (cast chains cited at their definition sites):
     dec(30) etc.), so the REAL domain bound is documented per input.
   - autocorrelation (operators/acf.py:47): z = n*y - s as dec(19),
     z*z products summed to dec(38).
-  - gini s2 term (registry.q_customer_spend_gini): (2*rank) dec(18)
+  - gini s2 term (registry.graph_layout.q_customer_spend_gini): (2*rank) dec(18)
     x cents dec(19) summed to dec(38).
   - auc u2 (operators/evalmetrics.py:48): pos dec(18) x
     (2*neg_below + neg) dec(19) summed to dec(38).
@@ -102,7 +102,7 @@ def test_autocorrelation_survives_billion_row_magnitudes(spark):
 
 
 def test_gini_s2_chain_survives_billion_row_magnitudes(spark):
-    """The gini S2 accumulator (registry.q_customer_spend_gini):
+    """The gini S2 accumulator (registry.graph_layout.q_customer_spend_gini):
     (2*rank) dec(18) x cents dec(19) -> dec(38) sum. Worst case at
     10^9 customers x 10^13 cents each: S2 <= 2*10^9 x 10^13 x 10^9
     = 2*10^31 < 10^38. Feed 1000 rows carrying that total."""

@@ -12,6 +12,7 @@ import tempfile
 import pytest
 
 from mapreduce_implementation_grpc_spark import registry
+from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 
 
 def test_simpson_bounds_and_entropy_consistency(spark, sf_check):
@@ -73,7 +74,7 @@ def test_run_length_hand_computed(spark):
 def test_run_length_totals_tie_out(spark, sf_check):
     """Sum over runs = total event count per type."""
     out = registry.QUERIES["events_run_length"](spark, sf_check).collect()
-    ev = registry.load_table(spark, sf_check, "events")
+    ev = load_table(spark, sf_check, "events")
     totals = {
         r.event_type: r.cnt
         for r in ev.groupBy("event_type").count().withColumnRenamed(

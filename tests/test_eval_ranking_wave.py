@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark import registry
+from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 from mapreduce_implementation_grpc_spark.operators.evalmetrics import (
     average_precision,
     auc_rank_sum,
@@ -200,10 +201,10 @@ def test_theil_sen_differential_vs_python(spark, sf_check):
         ).collect()
     }
     # rebuild the monthly series via an independent SQL aggregation
-    li = registry.load_table(spark, sf_check, "lineitem")
-    orders = registry.load_table(spark, sf_check, "orders")
-    cust = registry.load_table(spark, sf_check, "customer")
-    nat = registry.load_table(spark, sf_check, "nation")
+    li = load_table(spark, sf_check, "lineitem")
+    orders = load_table(spark, sf_check, "orders")
+    cust = load_table(spark, sf_check, "customer")
+    nat = load_table(spark, sf_check, "nation")
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)")
     ) * F.lit(1000000).cast("decimal(7,0)")

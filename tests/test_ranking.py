@@ -87,7 +87,7 @@ def test_exact_ntile_matches_sql_semantics(spark):
     every (n, k) in a grid, including n < k and n % k != 0."""
     from pyspark.sql import functions as F
 
-    from mapreduce_implementation_grpc_spark.registry import _exact_ntile
+    from mapreduce_implementation_grpc_spark.registry.events_analytics import _exact_ntile
 
     for n in (1, 3, 5, 7, 10, 23):
         for k in (2, 5, 8):

@@ -179,11 +179,8 @@ def test_ann_rank_quality_self_eval_is_perfect(spark, sf_smoke):
     term-for-term, so any rounding applies identically)."""
     from pyspark.sql import functions as F
 
-    from mapreduce_implementation_grpc_spark.registry import (
-        QUERIES,
-        _rank_quality_df,
-        q_knn_cosine,
-    )
+    from mapreduce_implementation_grpc_spark.registry import QUERIES
+    from mapreduce_implementation_grpc_spark.registry.similarity import _rank_quality_df, q_knn_cosine
 
     exact = q_knn_cosine(spark, sf_smoke).select(
         "query_id", "neighbor_id", F.col("rank").alias("ann_rank")
@@ -208,12 +205,9 @@ def test_ann_rank_quality_k_plumbs_to_ground_truth(spark, sf_smoke):
     from mapreduce_implementation_grpc_spark.operators.similarity import (
         knn_brute_force,
     )
-    from mapreduce_implementation_grpc_spark.registry import (
-        QUERIES,
-        _query_vectors,
-        _rank_quality_df,
-        load_table,
-    )
+    from mapreduce_implementation_grpc_spark.registry import QUERIES
+    from mapreduce_implementation_grpc_spark.registry.similarity import _query_vectors, _rank_quality_df
+    from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 
     for r in QUERIES["ann_rank_quality"](spark, sf_smoke, k=3).collect():
         assert 0 <= r.n_hits <= 3

@@ -115,7 +115,7 @@ def test_sketches_merge_distributively(spark, sf_check):
 
     # --- CMS: counters add ---
     from mapreduce_implementation_grpc_spark.operators import word_count
-    from mapreduce_implementation_grpc_spark.registry import corpus_from_documents
+    from mapreduce_implementation_grpc_spark.sources.text import corpus_from_documents
 
     docs = load_table(spark, sf_check, "documents")
     def counters(d, j):
@@ -243,13 +243,11 @@ def test_cms_screen_has_no_false_negatives_and_broadcast_only_probe(spark, sf_ch
     as a confirmed candidate (CMS one-sidedness), and the probe phase
     must plan as broadcast joins only -- the whole point is that no
     full-vocabulary shuffle exists."""
-    from mapreduce_implementation_grpc_spark.registry import (
-        QUERIES,
-        corpus_from_documents,
-        normalized_col,
-        tokenize,
-        word_count,
-    )
+    from mapreduce_implementation_grpc_spark.operators.normalize import normalized_col
+    from mapreduce_implementation_grpc_spark.operators.tokenize import tokenize
+    from mapreduce_implementation_grpc_spark.operators.wordcount import word_count
+    from mapreduce_implementation_grpc_spark.registry import QUERIES
+    from mapreduce_implementation_grpc_spark.sources.text import corpus_from_documents
 
     out = QUERIES["cms_screened_wordcount"](spark, sf_check)
     plan = out._sc._jvm.PythonSQLUtils.explainString(

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark import registry
+from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 from mapreduce_implementation_grpc_spark.operators.linkage import fs_weights
 
 
@@ -84,10 +85,10 @@ def test_holt_differential_vs_python(spark, sf_check):
             spark, sf_check
         ).collect()
     }
-    li = registry.load_table(spark, sf_check, "lineitem")
-    orders = registry.load_table(spark, sf_check, "orders")
-    cust = registry.load_table(spark, sf_check, "customer")
-    nat = registry.load_table(spark, sf_check, "nation")
+    li = load_table(spark, sf_check, "lineitem")
+    orders = load_table(spark, sf_check, "orders")
+    cust = load_table(spark, sf_check, "customer")
+    nat = load_table(spark, sf_check, "nation")
     rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
         F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)")
     ) * F.lit(1000000).cast("decimal(7,0)")

@@ -403,7 +403,8 @@ def test_dedup_append_sink_exact_across_batches(spark, tmp_path):
 def test_streaming_bm25_matches_batch(spark, tmp_path, sf_smoke):
     """Frozen-statistics BM25 over a stream of the SAME corpus must
     reproduce the batch bm25 ranking scores doc-for-doc."""
-    from mapreduce_implementation_grpc_spark.registry import BM25_QUERY, QUERIES
+    from mapreduce_implementation_grpc_spark.registry import QUERIES
+    from mapreduce_implementation_grpc_spark.registry.curation import BM25_QUERY
     from mapreduce_implementation_grpc_spark.sources.catalog import load_table
     from mapreduce_implementation_grpc_spark.streaming import (
         bm25_collection_stats,

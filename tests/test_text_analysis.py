@@ -138,7 +138,8 @@ def test_bm25_ranks_matching_docs_first(spark, sf_smoke):
     terms scores exactly 0 (idf * 0 terms)."""
     from pyspark.sql import functions as F
 
-    from mapreduce_implementation_grpc_spark.registry import BM25_QUERY, QUERIES
+    from mapreduce_implementation_grpc_spark.registry import QUERIES
+    from mapreduce_implementation_grpc_spark.registry.curation import BM25_QUERY
     from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 
     top = QUERIES["bm25_topk"](spark, sf_smoke).limit(10).collect()

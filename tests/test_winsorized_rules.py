@@ -283,7 +283,7 @@ def test_conversion_absorption_probabilities_valid(spark, sf_check):
     }
     assert rows["purchase"] == 1.0
     assert all(0.0 <= p <= 1.0 for p in rows.values())
-    from mapreduce_implementation_grpc_spark.registry import (
+    from mapreduce_implementation_grpc_spark.registry.eval_temporal import (
         q_event_conversion_absorption,
     )
 

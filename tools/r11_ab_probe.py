@@ -199,9 +199,9 @@ def cms_screened_wordcount_joins(tokens, denom=500) -> DataFrame:
 
 
 def q_cms_joins(spark, sf_dir) -> DataFrame:
-    from mapreduce_implementation_grpc_spark.registry import (
-        corpus_from_documents, normalized_col, tokenize,
-    )
+    from mapreduce_implementation_grpc_spark.operators.normalize import normalized_col
+    from mapreduce_implementation_grpc_spark.operators.tokenize import tokenize
+    from mapreduce_implementation_grpc_spark.sources.text import corpus_from_documents
 
     corpus = corpus_from_documents(spark, sf_dir)
     tokens = tokenize(corpus.select(normalized_col("line").alias("norm")), "norm")
