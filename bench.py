@@ -122,6 +122,46 @@ FINAL_REPORT_QUERIES = [
 ]
 
 
+FINAL_LINE_BUDGET = 1880  # chars; readers parse the last ~2000 chars of stdout
+
+
+def final_line(
+    final: dict, timings: dict[str, float], budget: int = FINAL_LINE_BUDGET
+) -> dict:
+    """Fill the one-line report's `queries` and `queries_omitted`.
+
+    The reported set is pinned, not load-dependent (a slowest-that-fit
+    selection rotated with host drift, so fast queries could never be
+    compared round-over-round): every FINAL_REPORT_QUERIES entry that
+    ran, then the slowest other queries while the line still fits
+    `budget` chars. Raises ValueError if the pinned entries alone
+    overflow the budget -- a reader of the stdout tail would get a
+    truncated line."""
+    queries = final["queries"] = {}
+
+    def size() -> int:
+        final["queries_omitted"] = len(timings) - len(queries)
+        return len(json.dumps(final, separators=(",", ":")))
+
+    for name in FINAL_REPORT_QUERIES:
+        if name in timings:
+            queries[name] = timings[name]
+    if size() > budget:
+        raise ValueError(
+            f"the pinned FINAL_REPORT_QUERIES line is {size()} chars, over "
+            f"the {budget}-char budget"
+        )
+    for name in sorted(timings, key=timings.get, reverse=True):
+        if name in queries:
+            continue
+        queries[name] = timings[name]
+        if size() > budget:
+            del queries[name]
+            break
+    size()
+    return final
+
+
 def _run(df) -> None:
     """Fully evaluate the plan (all columns, all rows) without
     collecting: the noop sink consumes every row executor-side."""
@@ -331,43 +371,24 @@ def main() -> None:
         pass  # read-only checkout: stdout lines are still authoritative
     print(json.dumps(full, separators=(",", ":")))
 
-    # r11 (VERDICT r10 #2): the reported set is PINNED, not
-    # load-dependent. r10's slowest-that-fit selection rotated with
-    # host drift (6 false "dropped" / 7 false "new" in PERF_r10), so
-    # fast queries could never be compared round-over-round through
-    # the final line. The membership is now FINAL_REPORT_QUERIES --
-    # exactly the set the r10 artifact reported, append-only from
-    # here on (update the list each round with any additions) -- plus
-    # whatever slowest extras still fit the budget. Timings and their
-    # methodology are unchanged; only the reporting window membership
-    # is deterministic now.
-    budget = 1880  # chars; driver tail window is ~2000
-    final = {
-        "metric": "total_query_seconds",
-        "value": total,
-        "unit": "sec",
-        "queries": {},
-        "sf": float(sf),
-        "method": f"median_of_{runs};fresh_jvm_tiers",
-        "n_queries": len(timings),
-        "canary_total_sec": out["canary_total_sec"],
-        "eager_total_sec": out["eager_total_sec"],
-        "extended_total_sec": out["extended_total_sec"],
-        "n_queries_all": out["n_queries_all"],
-        "queries_omitted": 0,
-        "full": "BENCH.json",
-    }
-    for name in FINAL_REPORT_QUERIES:
-        if name in timings:
-            final["queries"][name] = timings[name]
-    for name in sorted(timings, key=timings.get, reverse=True):
-        if name in final["queries"]:
-            continue
-        final["queries"][name] = timings[name]
-        if len(json.dumps(final, separators=(",", ":"))) > budget:
-            del final["queries"][name]
-            break
-    final["queries_omitted"] = len(timings) - len(final["queries"])
+    final = final_line(
+        {
+            "metric": "total_query_seconds",
+            "value": total,
+            "unit": "sec",
+            "queries": {},
+            "sf": float(sf),
+            "method": f"median_of_{runs};fresh_jvm_tiers",
+            "n_queries": len(timings),
+            "canary_total_sec": out["canary_total_sec"],
+            "eager_total_sec": out["eager_total_sec"],
+            "extended_total_sec": out["extended_total_sec"],
+            "n_queries_all": out["n_queries_all"],
+            "queries_omitted": 0,
+            "full": "BENCH.json",
+        },
+        timings,
+    )
     print(json.dumps(final, separators=(",", ":")))
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.normalize import normalized_col
+from ..operators.normalize import NORMALIZE_PATTERN, normalized_col
 from ..operators.tokenize import tokens_col
 
 # Marker stopwords per language for the heuristic language ID.
@@ -64,10 +64,10 @@ def text_stats_cols(text: Column | str, toks: Column | None = None) -> list[Colu
     n_tokens = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
     raw_len = F.length(text)
-    # chars surviving the [^a-zA-Z0-9\s] strip (pre-trim, pre-lower:
+    # chars surviving the normalize strip (pre-trim, pre-lower:
     # length is case/trim-insensitive enough only if measured the
     # same way both sides -- so measure strip-only, no trim).
-    kept_len = F.length(F.regexp_replace(text, r"[^a-zA-Z0-9\s]", ""))
+    kept_len = F.length(F.regexp_replace(text, NORMALIZE_PATTERN, ""))
     sum_tok_len = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
     return [
         n_tokens.cast("long").alias("n_tokens"),
@@ -100,7 +100,7 @@ def quality_score_col(text: Column | str, toks: Column | None = None) -> Column:
     n_tokens = F.size(toks)
     safe_n = F.greatest(n_tokens, F.lit(1))
     raw_len = F.length(text)
-    kept_len = F.length(F.regexp_replace(text, r"[^a-zA-Z0-9\s]", ""))
+    kept_len = F.length(F.regexp_replace(text, NORMALIZE_PATTERN, ""))
     punct_ratio = (raw_len - kept_len) / F.greatest(raw_len, F.lit(1))
     distinct_ratio = F.size(F.array_distinct(toks)) / safe_n
     length_score = F.least(n_tokens / F.lit(50.0), F.lit(1.0))

@@ -44,6 +44,12 @@ def _stack_checks(agg_row: DataFrame, checks: list[str]) -> DataFrame:
     )
 
 
+def _sum0(col: F.Column) -> F.Column:
+    """sum() that reports 0, not NULL, over an empty input (an
+    ungrouped aggregate over no rows)."""
+    return F.coalesce(F.sum(col), F.lit(0))
+
+
 def _row_local(df: DataFrame, checks: dict[str, F.Column]) -> DataFrame:
     """One scan: every check is a conditional count over the same
     pass; `checks` maps name -> violation predicate."""
@@ -187,17 +193,17 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "full_outer",
         )
         .agg(
-            F.sum(F.when(F.col("_o").isNull(), F.col("_cnt")).otherwise(0)).alias(
+            _sum0(F.when(F.col("_o").isNull(), F.col("_cnt")).otherwise(0)).alias(
                 "_fk_viol"
             ),
-            F.sum(F.when(F.col("_l").isNull(), 1).otherwise(0)).alias(
+            _sum0(F.when(F.col("_l").isNull(), 1).otherwise(0)).alias(
                 "_noline_viol"
             ),
-            F.sum(
+            _sum0(
                 F.when(F.col("_o").isNotNull() & F.col("_l").isNotNull(), 1)
                 .otherwise(0)
             ).alias("_recon_n"),
-            F.sum(
+            _sum0(
                 F.when(
                     F.col("_o").isNotNull()
                     & F.col("_l").isNotNull()

@@ -10,6 +10,26 @@ Semantics pinned to the DuckDB oracle (FIXTURES.md):
   trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
 `trim` is added on both sides so leading/trailing whitespace cannot
 produce empty tokens in only one engine.
+
+The engine spells the class `[^\\p{Alnum}\\s]` (java.util.regex), the
+oracle `[^a-zA-Z0-9\\s]` (RE2). Without the UNICODE_CHARACTER_CLASS
+flag, which Spark never sets for the default UTF8_BINARY collation,
+Java's `\\p{Alnum}` is exactly the US-ASCII `[a-zA-Z0-9]`, so both
+remove the same code points: tests/test_normalize_kernel.py compares
+the two spellings on every Unicode scalar value. The three-range
+negated class is the slow form on the JVM: normalizing the benchmark's
+1.9 MB word-count corpus took 1.17 CPU-s with it and 0.26 CPU-s with
+`\\p{Alnum}` (same-JVM A/B, SCALING.md "O2 normalize kernel"), and
+every text operator pays this cost.
+
+One known parity gap, outside every fixture: Java's `\\s` (like the
+reference's C `isspace`) counts U+000B (vertical tab) as whitespace,
+RE2's `\\s` does not, so the engine splits "a\\x0bb" into two tokens
+where the oracle strips the U+000B and keeps one.
+
+NORMALIZE_PATTERN is the only Spark-side spelling of the class; the
+other text paths (text_stats' punctuation ratio, the SQL word count)
+build from it.
 """
 
 from __future__ import annotations
@@ -17,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-NORMALIZE_PATTERN = r"[^a-zA-Z0-9\s]"
+NORMALIZE_PATTERN = r"[^\p{Alnum}\s]"
 
 
 def normalized_col(col: Column | str) -> Column:

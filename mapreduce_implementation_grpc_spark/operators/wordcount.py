@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .normalize import normalized_col
-from .tokenize import tokenize
+from .normalize import NORMALIZE_PATTERN, normalized_col
+from .tokenize import TOKEN_SPLIT_PATTERN, tokenize
 
 WORD_COUNT_SCHEMA = StructType(
     [StructField("word", StringType(), False), StructField("cnt", LongType(), False)]
@@ -42,6 +42,12 @@ def word_count(corpus: DataFrame, text_col: str = "line") -> DataFrame:
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
 
 
+def _sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal (backslash escapes are on by
+    default, so a regex's backslashes are doubled)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def word_count_sql(spark: SparkSession, corpus: DataFrame, text_col: str = "line") -> DataFrame:
     """Same plan via the SQL front end (identical Catalyst output)."""
     corpus.createOrReplaceTempView("__corpus")
@@ -50,7 +56,8 @@ def word_count_sql(spark: SparkSession, corpus: DataFrame, text_col: str = "line
         SELECT word, count(*) AS cnt
         FROM (
           SELECT explode(filter(split(trim(lower(regexp_replace({text_col},
-                   '[^a-zA-Z0-9\\\\s]', ''))), '\\\\s+'), t -> t != '')) AS word
+                   {_sql_string(NORMALIZE_PATTERN)}, ''))),
+                   {_sql_string(TOKEN_SPLIT_PATTERN)}), t -> t != '')) AS word
           FROM __corpus
         )
         GROUP BY word

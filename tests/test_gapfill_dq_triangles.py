@@ -109,6 +109,24 @@ def test_dq_audit_fires_on_known_defects(spark, sf_smoke):
     assert rows["orders_fk_customer"].n_checked == n_orders
 
 
+def test_dq_audit_order_grain_checks_report_zero_on_empty_tables(spark, sf_smoke, tmp_path):
+    """Empty orders AND empty lineitem: the order-grain full-outer join
+    has no rows, and its ungrouped sums must report 0, not NULL."""
+    import os
+
+    sf_dir = tmp_path / "sf_empty"
+    sf_dir.mkdir()
+    for name in ("orders", "lineitem"):
+        load_table(spark, sf_smoke, name).limit(0).write.parquet(str(sf_dir / f"{name}.parquet"))
+    for name in ("customer", "events", "documents"):
+        os.symlink(os.path.join(sf_smoke, f"{name}.parquet"), sf_dir / f"{name}.parquet")
+    rows = {
+        r.check_name: r for r in registry.QUERIES["dq_audit"](spark, str(sf_dir)).collect()
+    }
+    for check in ("lineitem_fk_orders", "orders_have_lineitems", "orders_totalprice_reconciles"):
+        assert (rows[check].n_checked, rows[check].n_violations) == (0, 0), check
+
+
 def test_dq_monitor_sink_totals_and_replay(spark, tmp_path):
     """Streaming DQ monitor: totals equal the batch predicates over
     everything streamed, and a crashed-batch replay (same batch_id)
