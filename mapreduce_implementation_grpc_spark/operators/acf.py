@@ -33,7 +33,11 @@ decimal overflow raises loudly rather than wrapping past that.
 
 Contract: the input must be a COMPLETE series per group (every t in
 0..n-1 present exactly once -- zero-fill gaps upstream; the registry
-query builds a dense day spine). A constant series (z = 0, den = 0)
+query builds a dense day spine). lead() aligns by POSITION, so a gap
+or a repeated t would silently pair the wrong points; the plan checks
+the contract on every row (min t = 0 and each next t = t + 1 within
+the group) and fails via raise_error inside the same window pass, no
+extra job. A constant series (z = 0, den = 0)
 has no defined autocorrelation and is excluded, mirroring the OLS
 constant-x rule in regression.py.
 
@@ -57,7 +61,8 @@ def autocorrelation(
 ) -> DataFrame:
     """series[group, t (0..n-1 dense), y (integral)] ->
     [group, lag, n_points, acf] for lag 1..max_lag, constant groups
-    dropped.
+    dropped. A group whose t is not exactly 0..n-1 fails the query
+    (raise_error) instead of returning misaligned lags.
 
     One window pass: per-group n and S are whole-partition window
     aggregates and the k-step alignment is lead(z, k) over the same
@@ -73,6 +78,8 @@ def autocorrelation(
 
     wp = Window.partitionBy(group_col)
     wo = Window.partitionBy(group_col).orderBy(F.asc("_t"))
+    next_t = F.lead("_t", 1).over(wo)
+    dense = (F.col("_t0") == 0) & (next_t.isNull() | (next_t == F.col("_t") + 1))
     z = series.select(
         group_col,
         F.count("*").over(wp).alias("_n"),
@@ -82,10 +89,23 @@ def autocorrelation(
         .cast("decimal(19,0)")
         .alias("_z"),
         F.col(t_col).alias("_t"),
+        F.min(t_col).over(wp).alias("_t0"),
     ).select(
         group_col,
         "_n",
-        "_z",
+        # the contract check rides the column every row's aggregate
+        # reads, so it cannot be pruned away
+        F.when(dense, F.col("_z"))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"autocorrelation: {t_col} of group "),
+                    F.col(group_col).cast("string"),
+                    F.lit(" is not the dense series 0..n-1"),
+                )
+            )
+        )
+        .alias("_z"),
         *[
             F.lead("_z", k).over(wo).alias(f"_z{k}")
             for k in range(1, max_lag + 1)

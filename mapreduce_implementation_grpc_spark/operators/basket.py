@@ -39,7 +39,6 @@ def market_basket_pairs(
     sf_dir: str,
     min_pair_orders: int = 2,
     top_n: int = 50,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Top part pairs by lift: [p1, p2, pair_n, support, confidence,
     lift], lift desc with (p1, p2) tie-break. `confidence` is
@@ -51,7 +50,7 @@ def market_basket_pairs(
         .distinct()
     )
     # three consumers: the pair self-join (twice) + item counts + total
-    b = materialize(b, reliable=reliable)
+    b = materialize(b)
     nn = b.agg(F.count_distinct("o").alias("n"))
     item = b.groupBy("p").agg(F.count("*").alias("item_n"))
     a1 = b.select("o", F.col("p").alias("p1"))
@@ -93,7 +92,6 @@ def market_basket_triples(
     sf_dir: str,
     min_orders: int = 2,
     top_n: int = 30,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """A-priori level 3: top part TRIPLES by lift -- [p1, p2, p3,
     tri_n, support, confidence, lift] (p1 < p2 < p3), where
@@ -118,7 +116,7 @@ def market_basket_triples(
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    b = materialize(b, reliable=reliable)
+    b = materialize(b)
     nn = b.agg(F.count_distinct("o").alias("n"))
     item = b.groupBy("p").agg(F.count("*").alias("item_n"))
     a1 = b.select("o", F.col("p").alias("p1"))
@@ -132,7 +130,7 @@ def market_basket_triples(
     )
     # consumed by: per-order semi join, two sub-pair prunes, and the
     # confidence join
-    fp = materialize(pairs, reliable=reliable)
+    fp = materialize(pairs)
     fp_keys = fp.select("p1", "p2")
     op = (
         a1.join(a2, "o")
@@ -196,7 +194,6 @@ def association_rules(
     sf_dir: str,
     min_pair_orders: int = 2,
     top_n: int = 50,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Directed association rules from the pair stage: each surviving
     unordered pair emits BOTH directions a=>c with the full classical
@@ -213,7 +210,7 @@ def association_rules(
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    b = materialize(b, reliable=reliable)
+    b = materialize(b)
     nn = b.agg(F.count_distinct("o").alias("n"))
     item = b.groupBy("p").agg(F.count("*").alias("item_n"))
     a1 = b.select("o", F.col("p").alias("p1"))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..materialize import materialize, materialize_eager, release
+from ..materialize import materialize, materialize_eager
 from ..operators.normalize import normalized_col
 from ..operators.tokenize import tokens_col
 
@@ -301,7 +301,6 @@ def minhash_near_dup_pairs(
     num_perm: int = DEFAULT_NUM_PERM,
     bands: int = DEFAULT_BANDS,
     min_est_jaccard: float = 0.3,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Banded-LSH near-duplicate pairs.
 
@@ -317,12 +316,9 @@ def minhash_near_dup_pairs(
     # the signature aggregation feeds THREE consumers (band explode,
     # candidate side A, candidate side B); one shared materialization
     # instead of replaying the whole shingle pipeline per consumer
-    # (measured 2x at sf0.1). Both modes stay lazy for the driver's
-    # build-then-act contract; `reliable` picks the executor-loss
-    # story for this CORPUS-SIZED table (materialize.py).
+    # (measured 2x at sf0.1).
     sigs = materialize(
-        minhash_signatures(docs, text_col, k, num_perm, with_shset=True),
-        reliable=reliable,
+        minhash_signatures(docs, text_col, k, num_perm, with_shset=True)
     )
     # slim (doc_id, band_id, band_hash) rows: the self-join and the
     # distinct-pairs shuffle move only three scalars per row -- the
@@ -366,9 +362,7 @@ def minhash_near_dup_pairs(
     )
 
 
-def label_propagation(
-    pairs: DataFrame, max_iter: int = 20, reliable: bool | None = None
-) -> DataFrame:
+def label_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Connected components over an undirected pair graph via
     iterative min-label propagation with pointer jumping:
     DataFrame[doc_id, cluster] where cluster = smallest doc_id
@@ -383,10 +377,7 @@ def label_propagation(
     handful of rounds. Per-round eager pinning (materialize_eager)
     truncates the growing lineage so round N doesn't replay rounds
     1..N-1, and the loop exits early via an inexpensive changed-count
-    check; `reliable=True` swaps the pin for DISK_ONLY persist WITH
-    lineage so a lost executor recomputes a round instead of failing
-    the clustering, keeping only the prior + current label tables
-    pinned.
+    check.
 
     Raises RuntimeError if the iteration budget is exhausted while
     labels are still moving: a silently under-merged clustering is a
@@ -395,14 +386,12 @@ def label_propagation(
     edges = materialize_eager(
         pairs.union(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        ),
-        reliable=reliable,
+        )
     )
     labels = materialize_eager(
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id")),
-        reliable=reliable,
+        .withColumn("label", F.col("doc_id"))
     )
     changed = None
     for _ in range(max_iter):
@@ -427,8 +416,7 @@ def label_propagation(
             .select(
                 "doc_id",
                 F.least(F.col("label"), F.coalesce(F.col("ll"), F.col("label"))).alias("label"),
-            ),
-            reliable=reliable,
+            )
         )
         changed = (
             new_labels.alias("n")
@@ -436,7 +424,6 @@ def label_propagation(
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        release(labels)
         labels = new_labels
         if changed == 0:
             break
@@ -453,7 +440,6 @@ def dedup_clusters(
     text_col: str = "text",
     min_est_jaccard: float = 0.3,
     max_iter: int = 20,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate clusters: connected components over the MinHash
     pair graph. With the portable MinHash hashing, the whole chain
@@ -462,9 +448,9 @@ def dedup_clusters(
     (registry.oracle_builders._dedup_clusters_sql), plus metamorphic tests (chained
     near-dups merge into one cluster)."""
     pairs = minhash_near_dup_pairs(
-        docs, text_col, min_est_jaccard=min_est_jaccard, reliable=reliable
+        docs, text_col, min_est_jaccard=min_est_jaccard
     ).select("doc_a", "doc_b")
-    return label_propagation(pairs, max_iter, reliable=reliable)
+    return label_propagation(pairs, max_iter)
 
 
 def simhash_fp(docs: DataFrame, text_col: str = "text") -> DataFrame:

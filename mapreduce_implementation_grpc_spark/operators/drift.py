@@ -117,7 +117,6 @@ def ks_test(
     sample_b: DataFrame,
     value_col: str = "v",
     n_buckets: int = 1024,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic: one row
     [n_a, n_b, ks_d, at_value] where ks_d = max over distinct values
@@ -140,7 +139,7 @@ def ks_test(
             F.coalesce(F.col("_cb"), F.lit(0)).alias("_cb"),
         )
     )
-    bk = bucketize_by_key(counts, "_v", n_buckets=n_buckets, reliable=reliable)
+    bk = bucketize_by_key(counts, "_v", n_buckets=n_buckets)
     offs_a = bucket_offsets(bk, weight=F.col("_ca")).withColumnRenamed(
         "_off", "_offa"
     ).withColumnRenamed("_tot", "_na")

@@ -50,7 +50,6 @@ def auc_rank_sum(
     score_col: str = "score",
     label_col: str = "label",
     n_buckets: int = 1024,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact tie-corrected ROC AUC of `score_col` predicting the 0/1
     `label_col`: one row [n_pos, n_neg, u2, auc] where u2 = 2U (the
@@ -66,9 +65,7 @@ def auc_rank_sum(
     # (neg-weighted) + a within-bucket running sum ending at the
     # PREVIOUS row -- each score is one row post-groupBy, so "previous
     # rows in score order" is exactly "strictly lower scores"
-    bk = bucketize_by_key(
-        per_score, "_s", n_buckets=n_buckets, reliable=reliable
-    )
+    bk = bucketize_by_key(per_score, "_s", n_buckets=n_buckets)
     offs = bucket_offsets(bk, weight=F.col("_neg"))
     w_below = (
         Window.partitionBy("_bkt")
@@ -161,7 +158,6 @@ def average_precision(
     score_col: str = "score",
     label_col: str = "label",
     n_buckets: int = 1024,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact tie-aware average precision (area under the PR curve by
     right-step interpolation) of `score_col` predicting the 0/1
@@ -186,10 +182,7 @@ def average_precision(
         F.count("*").alias("_n"),
         F.sum(F.col(label_col).cast("long")).alias("_pos"),
     )
-    bk = bucketize_by_key(
-        per_score, "_s", ascending=False, n_buckets=n_buckets,
-        reliable=reliable,
-    )
+    bk = bucketize_by_key(per_score, "_s", ascending=False, n_buckets=n_buckets)
     btot = bk.groupBy("_bkt").agg(
         F.sum("_n").alias("_bn"), F.sum("_pos").alias("_bp")
     )
@@ -243,7 +236,6 @@ def lift_table(
     label_col: str = "label",
     n_deciles: int = 10,
     n_buckets: int = 1024,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Gain/lift table of `score_col` predicting the 0/1 `label_col`:
     [decile, n_rows, n_pos, resp_rate, lift, cum_capture] with decile
@@ -266,10 +258,7 @@ def lift_table(
         F.count("*").alias("_n"),
         F.sum(F.col(label_col).cast("long")).alias("_pos"),
     )
-    bk = bucketize_by_key(
-        per_score, "_s", ascending=False, n_buckets=n_buckets,
-        reliable=reliable,
-    )
+    bk = bucketize_by_key(per_score, "_s", ascending=False, n_buckets=n_buckets)
     btot = bk.groupBy("_bkt").agg(F.sum("_n").alias("_bn"))
     w_off = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     w_all = Window.orderBy("_bkt").rowsBetween(

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import materialize, materialize_eager, release
+from ..materialize import materialize, materialize_eager
 from ..sources.catalog import load_table
 
 
@@ -73,7 +73,6 @@ def copurchase_butterflies(
     top_n: int = 50,
     max_degree: int | None = None,
     segment: str | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Top customer pairs by shared-supplier count, with butterfly
     support C(shared, 2): [custkey_1, custkey_2, shared_suppliers,
@@ -99,9 +98,7 @@ def copurchase_butterflies(
     a supplier in one partition), minus the self-join's two
     exchanges, its sort, and the standalone distinct. Per-group
     memory is deg customer keys — strictly smaller than the C(deg,2)
-    rows any form emits. `reliable` is kept for signature parity;
-    the single-chain plan no longer pins an intermediate."""
-    del reliable  # no multi-consumer intermediate left to pin
+    rows any form emits. The single-chain plan pins no intermediate."""
     raw = purchase_edges(spark, sf_dir, segment=segment, distinct=False)
     nbrs = raw.groupBy("suppkey").agg(
         F.sort_array(F.collect_set("custkey")).alias("cs")
@@ -141,7 +138,6 @@ def copurchase_butterflies(
 def cosupply_edges(
     spark: SparkSession,
     sf_dir: str,
-    reliable: bool | None = None,
     keep_weight: bool = False,
 ) -> DataFrame:
     """Thresholded supplier co-supply graph: an undirected edge
@@ -180,7 +176,7 @@ def cosupply_edges(
     )
     w = pairs.groupBy("s1", "s2").agg(F.count("*").alias("c"))
     # threshold agg + edge filter both read the pair weights
-    w = materialize(w, reliable=reliable)
+    w = materialize(w)
     thr = w.agg(
         (F.sum("c").cast("double") / F.count("*") * F.lit(1.1)).alias("_thr")
     )
@@ -191,9 +187,7 @@ def cosupply_edges(
     return kept.select("s1", "s2", "c") if keep_weight else kept.select("s1", "s2")
 
 
-def cosupply_triangles(
-    spark: SparkSession, sf_dir: str, reliable: bool | None = None
-) -> DataFrame:
+def cosupply_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-supplier triangle participation in the co-supply graph:
     [suppkey, n_triangles], descending. Exact, via degree-ordered
     wedge counting (node-iterator++ / Suri-Vassilvitskii's MapReduce
@@ -208,16 +202,13 @@ def cosupply_triangles(
     generating more than its sqrt-bounded out-neighborhood squared.
     Degree attach + closing check are plain equi-joins; AQE broadcasts
     the node-sized degree table when it fits."""
-    return triangle_counts(
-        cosupply_edges(spark, sf_dir, reliable=reliable), reliable=reliable
-    )
+    return triangle_counts(cosupply_edges(spark, sf_dir))
 
 
 def kcore(
     undirected_edges: DataFrame,
     k: int,
     max_rounds: int = 20,
-    reliable: bool | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """The k-core of an undirected (s1, s2) edge list: iteratively
@@ -232,15 +223,11 @@ def kcore(
     count. Like dedup_clusters' pointer jumping, each round is
     EAGERLY pinned (the convergence check runs a count anyway) so
     the plan never nests; non-convergence within `max_rounds` raises
-    LOUDLY rather than returning a half-peeled graph. `reliable=True`
-    pins each round via DISK_ONLY persist WITH lineage (an executor
-    lost mid-peel recomputes from the previous round instead of
-    killing the query); only the prior and current rounds stay
-    pinned, so executor disk holds at most 2x the edge list.
+    LOUDLY rather than returning a half-peeled graph.
     `stats`, when given, receives {"rounds": N, "edges_in": E0,
     "edges_out": E1} -- the peel-depth instrumentation the scaling
     probe records (tools/graph_probe.py)."""
-    cur = materialize_eager(undirected_edges, reliable=reliable)
+    cur = materialize_eager(undirected_edges)
     n_edges = cur.count()
     if stats is not None:
         stats["rounds"] = 0
@@ -259,11 +246,9 @@ def kcore(
         nxt = materialize_eager(
             cur.join(keep.withColumnRenamed("v", "s1"), "s1", "left_semi")
             .join(keep.withColumnRenamed("v", "s2"), "s2", "left_semi")
-            .select("s1", "s2"),
-            reliable=reliable,
+            .select("s1", "s2")
         )
         n_next = nxt.count()
-        release(cur)
         cur = nxt
         if stats is not None:
             stats["rounds"] += 1
@@ -285,20 +270,16 @@ def kcore(
     )
 
 
-def cosupply_kcore(
-    spark: SparkSession, sf_dir: str, k: int = 8, reliable: bool | None = None
-) -> DataFrame:
+def cosupply_kcore(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
     """k-core of the thresholded co-supply graph (see cosupply_edges)."""
-    return kcore(cosupply_edges(spark, sf_dir, reliable=reliable), k, reliable=reliable)
+    return kcore(cosupply_edges(spark, sf_dir), k)
 
 
-def triangle_counts(
-    undirected_edges: DataFrame, reliable: bool | None = None
-) -> DataFrame:
+def triangle_counts(undirected_edges: DataFrame) -> DataFrame:
     """Per-node triangle participation [suppkey, n_triangles] for an
     undirected edge list with columns (s1, s2), s1 < s2, no
     duplicates. See cosupply_triangles for the algorithm and bounds."""
-    edges = materialize(undirected_edges, reliable=reliable)
+    edges = materialize(undirected_edges)
     deg = (
         edges.select(F.col("s1").alias("v"))
         .unionByName(edges.select(F.col("s2").alias("v")))
@@ -357,9 +338,7 @@ def triangle_counts(
     )
 
 
-def clustering_coefficients(
-    undirected_edges: DataFrame, reliable: bool | None = None
-) -> DataFrame:
+def clustering_coefficients(undirected_edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per node (Watts & Strogatz):
     c(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1)) for every node
     with deg >= 2 -- the fraction of a node's neighbor pairs that are
@@ -377,14 +356,14 @@ def clustering_coefficients(
 
     Input: undirected (s1, s2) edge list, s1 < s2, no duplicates.
     Output: [suppkey, degree, n_triangles, clustering_coeff]."""
-    edges = materialize(undirected_edges, reliable=reliable)
+    edges = materialize(undirected_edges)
     deg = (
         edges.select(F.col("s1").alias("suppkey"))
         .unionByName(edges.select(F.col("s2").alias("suppkey")))
         .groupBy("suppkey")
         .agg(F.count("*").alias("degree"))
     )
-    tri = triangle_counts(edges, reliable=reliable)
+    tri = triangle_counts(edges)
     return (
         deg.filter(F.col("degree") >= 2)
         .join(tri, "suppkey", "left")
@@ -407,7 +386,6 @@ def bfs_hops(
     undirected_edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distance over an undirected (s1, s2) edge
     list: [suppkey, hops] for every node within max_hops of ANY
@@ -428,8 +406,7 @@ def bfs_hops(
             F.col("s1").alias("u"), F.col("s2").alias("v")
         ).unionByName(
             undirected_edges.select(F.col("s2").alias("u"), F.col("s1").alias("v"))
-        ),
-        reliable=reliable,
+        )
     )
     visited = sources.select(
         F.col(sources.columns[0]).alias("suppkey"),
@@ -441,14 +418,12 @@ def bfs_hops(
             und.join(frontier.withColumnRenamed("suppkey", "u"), "u")
             .select(F.col("v").alias("suppkey"))
             .distinct()
-            .join(visited.select("suppkey"), "suppkey", "left_anti"),
-            reliable=reliable,
+            .join(visited.select("suppkey"), "suppkey", "left_anti")
         )
         visited = materialize(
             visited.unionByName(
                 nxt.select("suppkey", F.lit(h).cast("long").alias("hops"))
-            ),
-            reliable=reliable,
+            )
         )
         frontier = nxt
     return visited
@@ -458,7 +433,6 @@ def sssp_min_cost(
     weighted_edges: DataFrame,
     sources: DataFrame,
     rounds: int = 3,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Bounded-round Bellman-Ford over an undirected weighted edge
     list (s1, s2, w; INTEGER weights): [suppkey, min_cost] = the
@@ -495,8 +469,7 @@ def sssp_min_cost(
     und = materialize(
         checked.selectExpr("s1 as u", "s2 as v", "w").unionByName(
             checked.selectExpr("s2 as u", "s1 as v", "w")
-        ),
-        reliable=reliable,
+        )
     )
     dist = sources.select(
         F.col(sources.columns[0]).alias("suppkey"),
@@ -513,8 +486,7 @@ def sssp_min_cost(
         dist = materialize(
             dist.unionByName(relaxed)
             .groupBy("suppkey")
-            .agg(F.min("min_cost").alias("min_cost")),
-            reliable=reliable,
+            .agg(F.min("min_cost").alias("min_cost"))
         )
     return dist
 
@@ -524,17 +496,16 @@ def cosupply_cheapest_reach(
     sf_dir: str,
     sources: DataFrame,
     rounds: int = 3,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Weighted blast radius: cheapest <= `rounds`-hop path cost from
     a supplier seed set over the thresholded co-supply graph, edge
     cost = (max co-supply weight + 1) - c, so the STRONGEST tie is
     the cheapest hop (cost >= 1: a path cost is never free). The max
     is a 1-row broadcast aggregate over the thresholded edges."""
-    we = cosupply_edges(spark, sf_dir, reliable=reliable, keep_weight=True)
-    we = materialize(we, reliable=reliable)
+    we = cosupply_edges(spark, sf_dir, keep_weight=True)
+    we = materialize(we)
     mx = we.agg((F.max("c") + F.lit(1)).alias("_mx"))
     weighted = we.crossJoin(F.broadcast(mx)).select(
         "s1", "s2", (F.col("_mx") - F.col("c")).cast("long").alias("w")
     )
-    return sssp_min_cost(weighted, sources, rounds=rounds, reliable=reliable)
+    return sssp_min_cost(weighted, sources, rounds=rounds)

@@ -52,14 +52,11 @@ def hits_scores(
     iters: int = 3,
     segment: str | None = None,
     broadcast_scores: bool = True,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """[node_type ('hub'|'authority'), node_key, score] after `iters`
     max-normalized HITS rounds, score desc / key asc within type.
     Hubs start at 1.0; scores are relative (max = 1.0 each side)."""
-    edges = materialize(
-        purchase_edges(spark, sf_dir, segment=segment), reliable=reliable
-    )
+    edges = materialize(purchase_edges(spark, sf_dir, segment=segment))
     hubs = edges.select("custkey").distinct().select(
         F.col("custkey").alias("c"), F.lit(1.0).alias("h")
     )
@@ -74,8 +71,7 @@ def hits_scores(
         araw = materialize(
             edges.join(hside, F.col("custkey") == F.col("c"))
             .groupBy("suppkey")
-            .agg(_s2d(_dec_sum("h")).alias("ar")),
-            reliable=reliable,
+            .agg(_s2d(_dec_sum("h")).alias("ar"))
         )
         amax = araw.agg(F.max("ar").alias("am"))
         auths = araw.crossJoin(F.broadcast(amax)).select(
@@ -85,8 +81,7 @@ def hits_scores(
         hraw = materialize(
             edges.join(aside, F.col("suppkey") == F.col("s"))
             .groupBy("custkey")
-            .agg(_s2d(_dec_sum("a")).alias("hr")),
-            reliable=reliable,
+            .agg(_s2d(_dec_sum("a")).alias("hr"))
         )
         hmax = hraw.agg(F.max("hr").alias("hm"))
         hubs = hraw.crossJoin(F.broadcast(hmax)).select(

@@ -226,7 +226,6 @@ def sorted_neighborhood_pairs(
     window: int = 10,
     threshold: float = 0.0,
     top_n: int = 100,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood record linkage (Hernandez & Stolfo 1995):
     the blocking-recall companion of `fs_score_pairs`. Both record
@@ -280,7 +279,6 @@ def sorted_neighborhood_pairs(
         "bal",
         tiebreaks=[F.asc("role"), F.asc("rid")],
         out_col="rn",
-        reliable=reliable,
     )
     band = F.expr(f"rn DIV {window}")
     left = r.filter(F.col("role") == 0).select(

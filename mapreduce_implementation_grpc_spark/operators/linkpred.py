@@ -60,13 +60,12 @@ def link_prediction(
     undirected_edges: DataFrame,
     top_n: int = 20,
     max_degree: int | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Top non-adjacent pairs by Adamic-Adar for an undirected
     (s1, s2) edge list with s1 < s2 and no duplicates:
     [s1, s2, common_neighbors, jaccard, adamic_adar], ordered
     adamic_adar desc, common_neighbors desc, s1, s2."""
-    edges = materialize(undirected_edges, reliable=reliable)
+    edges = materialize(undirected_edges)
     und = edges.select(
         F.col("s1").alias("w"), F.col("s2").alias("x")
     ).unionByName(edges.select(F.col("s2").alias("w"), F.col("s1").alias("x")))
@@ -84,8 +83,7 @@ def link_prediction(
     # `nb` is pinned: it feeds the wedge explosion AND both endpoint
     # degree lookups of the jaccard.
     nb = materialize(
-        und.groupBy("w").agg(F.sort_array(F.collect_set("x")).alias("xs")),
-        reliable=reliable,
+        und.groupBy("w").agg(F.sort_array(F.collect_set("x")).alias("xs"))
     )
     deg = nb.select("w", F.size("xs").alias("d"))
     # a degree-1 center cannot host a wedge, and dropping it keeps
@@ -149,7 +147,6 @@ def cosupply_link_prediction(
     sf_dir: str,
     top_n: int = 20,
     max_degree: int | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Link prediction over the thresholded co-supply graph
     (graph_motifs.cosupply_edges): which supplier pairs are closest
@@ -158,8 +155,7 @@ def cosupply_link_prediction(
     40M wedges in tools/linkpred_probe.py's ladder); None is the
     exact oracle-of-record form."""
     return link_prediction(
-        cosupply_edges(spark, sf_dir, reliable=reliable),
+        cosupply_edges(spark, sf_dir),
         top_n=top_n,
         max_degree=max_degree,
-        reliable=reliable,
     )

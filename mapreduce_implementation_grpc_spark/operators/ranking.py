@@ -52,7 +52,6 @@ def bucketize_by_key(
     key: str,
     ascending: bool = True,
     n_buckets: int = 1024,
-    reliable: bool | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Append `_ak` (the key as an ascending double) and `_bkt` (a
@@ -83,9 +82,8 @@ def bucketize_by_key(
         ).cast("double"),
     ).otherwise(raw if ascending else -raw)
     # the stats aggregate + every downstream consumer share ONE
-    # materialization of the (table-sized) input; `reliable` picks the
-    # executor-loss story (materialize.py)
-    base = materialize(df.withColumn("_ak", ak), reliable=reliable)
+    # materialization of the (table-sized) input
+    base = materialize(df.withColumn("_ak", ak))
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(n_buckets))
     bucket = F.when(F.col("_hi") <= F.col("_lo"), F.lit(0)).otherwise(
         F.least(
@@ -165,7 +163,6 @@ def with_global_row_number(
     n_buckets: int = 1024,
     out_col: str = "rn",
     total_col: str | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Append the exact global `row_number() OVER (ORDER BY key
     [DESC], *tiebreaks)` as `out_col` (and optionally the total row
@@ -176,9 +173,7 @@ def with_global_row_number(
     for the 2^53 caveat on huge integer keys); `tiebreaks` are
     F.asc/F.desc columns applied after the key, exactly as in a
     window ORDER BY."""
-    bk = bucketize_by_key(
-        df, key, ascending=ascending, n_buckets=n_buckets, reliable=reliable
-    )
+    bk = bucketize_by_key(df, key, ascending=ascending, n_buckets=n_buckets)
     offsets = bucket_offsets(bk)
     w_local = Window.partitionBy("_bkt").orderBy(F.asc("_ak"), *tiebreaks)
     ranked = (

@@ -37,7 +37,6 @@ def sorted_shingle_sets(
     docs: DataFrame,
     text_col: str = "text",
     k: int = DEFAULT_SHINGLE_K,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """[doc_id, st (shingles sorted rarest-first), sz] -- the shared
     input of every prefix-filtered set join; materialized once (the
@@ -55,7 +54,7 @@ def sorted_shingle_sets(
         )
         .withColumn("sz", F.size("st"))
     )
-    return materialize(sets, reliable=reliable)
+    return materialize(sets)
 
 
 def jaccard_prefix_pairs(
@@ -64,19 +63,14 @@ def jaccard_prefix_pairs(
     k: int = DEFAULT_SHINGLE_K,
     t_num: int = 4,
     t_den: int = 5,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """All (doc_a < doc_b) pairs with Jaccard(shingle sets) >=
     t_num/t_den, exactly. The threshold is a RATIONAL so the final
     predicate is pure integer arithmetic (t_den*inter >= t_num*union)
     -- no float compare to disagree across engines; the reported
-    jaccard itself is the one rounded double division.
-
-    `reliable` picks the executor-loss story for the shared
-    sorted-shingle-sets table (see materialize.py): the table is
-    CORPUS-SIZED, so on a long 100 TB run pass reliable=True to
-    survive executor loss at the cost of a disk persist."""
-    sets = sorted_shingle_sets(docs, text_col=text_col, k=k, reliable=reliable)
+    jaccard itself is the one rounded double division. The shared
+    sorted-shingle-sets table is pinned once (materialize.py)."""
+    sets = sorted_shingle_sets(docs, text_col=text_col, k=k)
     plen = (
         F.col("sz")
         - F.ceil(F.col("sz") * F.lit(t_num) / F.lit(t_den)).cast("int")
@@ -144,7 +138,6 @@ def containment_prefix_pairs(
     k: int = DEFAULT_SHINGLE_K,
     t_num: int = 9,
     t_den: int = 10,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """All DIRECTED pairs (doc_small != doc_big) with containment
     C(small in big) = |S_small & S_big| / |S_small| >= t_num/t_den,
@@ -165,7 +158,7 @@ def containment_prefix_pairs(
     rounded int/int division. The registry oracle is the NAIVE
     all-pairs SQL -- the hash match proves the prefix filter
     lossless."""
-    sets = sorted_shingle_sets(docs, text_col=text_col, k=k, reliable=reliable)
+    sets = sorted_shingle_sets(docs, text_col=text_col, k=k)
     plen = (
         F.col("sz")
         - F.ceil(F.col("sz") * F.lit(t_num) / F.lit(t_den)).cast("int")

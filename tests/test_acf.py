@@ -63,6 +63,30 @@ def test_lag1_of_smooth_series_positive(spark):
     assert rows[0].acf > 0.8
 
 
+def test_non_dense_series_fails_inside_the_plan(spark):
+    # lead() aligns by position: a gapped or repeated t would pair the
+    # wrong points, so the contract is checked per row in the plan
+    ys = [(i * 37 + (i * i) % 11) % 23 for i in range(12)]
+    dense = [("ok", t, y) for t, y in enumerate(ys)]
+    schema = "g string, t long, y long"
+    gapped = [r for r in dense if r[1] != 5]
+    duped = dense + [("ok", 5, 3)]
+    shifted = [(g, t + 1, y) for g, t, y in dense]
+    for rows in (gapped, duped, shifted):
+        df = spark.createDataFrame(rows, schema)
+        with pytest.raises(Exception, match="is not the dense series"):
+            autocorrelation(df, "g", "t", "y", 3).collect()
+    # a dense group is unaffected by the check
+    got = {
+        r.lag: r.acf
+        for r in autocorrelation(
+            spark.createDataFrame(dense, schema), "g", "t", "y", 3
+        ).collect()
+    }
+    for k in range(1, 4):
+        assert got[k] == pytest.approx(_py_acf(ys, k), abs=1e-15), k
+
+
 def test_events_acf_oracle(spark, sf_check):
     assert_matches_oracle(
         registry.QUERIES["events_acf"](spark, sf_check),

@@ -1,114 +1,70 @@
-"""materialize.py: the reliable/fast materialization switch.
+"""materialize.py: the one pin mechanism per need.
 
-reliable=False (localCheckpoint) is correct-and-fastest in single-JVM
-local mode but on a real cluster an executor loss kills the job (no
-lineage). reliable=True (DISK_ONLY persist, lineage retained) must
-produce IDENTICAL results -- the parity tests here pin that, and the
-mechanism test pins which primitive each mode actually uses.
+The mechanism tests pin which primitive each function uses (lineage
+truncated to a LogicalRDD block scan). The job-count test pins what
+`materialize` costs at call time, so a change of mechanism that moves
+work into or out of DataFrame construction shows up here on purpose.
+The iterative-loop tests pin the expected fixpoints of the two
+operators that pin every round.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.materialize import (
     materialize,
     materialize_eager,
     pin_before_overwrite,
-    release,
 )
 from mapreduce_implementation_grpc_spark.operators.dedup import label_propagation
-from mapreduce_implementation_grpc_spark.operators.graph_motifs import (
-    copurchase_butterflies,
-    kcore,
-)
-from mapreduce_implementation_grpc_spark.operators.ranking import (
-    with_global_row_number,
-)
-from mapreduce_implementation_grpc_spark.operators.setjoin import (
-    jaccard_prefix_pairs,
-)
+from mapreduce_implementation_grpc_spark.operators.graph_motifs import kcore
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
 
 
 def test_materialize_mechanisms(spark):
-    df = spark.range(10)
-    fast = materialize(df, reliable=False)
     # localCheckpoint truncates lineage: the analyzed plan becomes a
     # LogicalRDD block scan, not the original Range
-    assert "LogicalRDD" in fast._jdf.queryExecution().analyzed().toString()
-    rel = materialize(spark.range(10), reliable=True)
-    assert rel.storageLevel == StorageLevel.DISK_ONLY
-    assert rel.count() == 10
-    rel.unpersist()
-
-
-def test_env_default_flips_to_reliable(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_MATERIALIZE", "1")
-    rel = materialize(spark.range(7))
-    assert rel.storageLevel == StorageLevel.DISK_ONLY
-    rel.unpersist()
-    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_MATERIALIZE")
-    fast = materialize(spark.range(7))
-    assert fast.storageLevel == StorageLevel.NONE  # localCheckpoint path
-
-
-def test_reliable_parity_prefix_join(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog tonight"),
-            (2, "the quick brown fox jumps over the lazy dog today"),
-            (3, "completely unrelated text about parquet footers here"),
-        ],
-        "doc_id long, text string",
-    )
-    fast = sorted(map(tuple, jaccard_prefix_pairs(docs, t_num=1, t_den=2).collect()))
-    rel = sorted(
-        map(tuple, jaccard_prefix_pairs(docs, t_num=1, t_den=2, reliable=True).collect())
-    )
-    assert fast == rel and fast  # identical and non-empty
-
-
-def test_reliable_parity_ranking(spark):
-    df = spark.createDataFrame(
-        [(float(i % 7), str(i)) for i in range(50)], "k double, t string"
-    )
-    fast = sorted(
-        map(tuple, with_global_row_number(df, "k", tiebreaks=[F.asc("t")]).collect())
-    )
-    rel = sorted(
-        map(
-            tuple,
-            with_global_row_number(
-                df, "k", tiebreaks=[F.asc("t")], reliable=True
-            ).collect(),
-        )
-    )
-    assert fast == rel
-
-
-def test_reliable_parity_butterflies(spark, sf_smoke):
-    fast = copurchase_butterflies(spark, sf_smoke, top_n=10).collect()
-    rel = copurchase_butterflies(spark, sf_smoke, top_n=10, reliable=True).collect()
-    assert list(map(tuple, fast)) == list(map(tuple, rel)) and fast
+    pinned = materialize(spark.range(10))
+    assert "LogicalRDD" in _analyzed(pinned)
+    assert pinned.count() == 10
 
 
 def test_materialize_eager_mechanisms(spark):
-    # fast path: eager localCheckpoint -- lineage truncated to a block scan
-    fast = materialize_eager(spark.range(10), reliable=False)
-    assert "LogicalRDD" in fast._jdf.queryExecution().analyzed().toString()
-    assert fast.count() == 10
-    # reliable path: DISK_ONLY persist, ALREADY materialized (the
-    # forcing count ran inside materialize_eager), lineage retained
-    rel = materialize_eager(spark.range(10), reliable=True)
-    assert rel.storageLevel == StorageLevel.DISK_ONLY
-    assert "LogicalRDD" not in rel._jdf.queryExecution().analyzed().toString()
-    assert rel.count() == 10
-    release(rel)
-    assert rel.storageLevel == StorageLevel.NONE
-    # release is a harmless no-op on the localCheckpoint path
-    release(fast)
-    assert fast.count() == 10
+    pinned = materialize_eager(spark.range(10))
+    assert "LogicalRDD" in _analyzed(pinned)
+    assert pinned.count() == 10
+    # the blocks belong to the checkpointed RDD, not to a cache entry:
+    # unpersist is a no-op and the pinned table stays readable
+    pinned.unpersist()
+    assert pinned.count() == 10
+
+
+def _jobs_launched_by(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_job_count_at_call_time(spark):
+    # an exchange-free subtree is planned without running anything
+    assert _jobs_launched_by(
+        spark, "pin_range", lambda: materialize(spark.range(100))
+    ) == 0
+    # an exchange is planned under AQE (the session default), which
+    # submits its shuffle-map stage as a job inside the call
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    grouped = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    assert _jobs_launched_by(
+        spark, "pin_groupby", lambda: materialize(grouped)
+    ) >= 1
 
 
 def test_pin_before_overwrite_truncates_lineage(spark, tmp_path):
@@ -118,33 +74,31 @@ def test_pin_before_overwrite_truncates_lineage(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.range(5).write.parquet(path)
     pinned = pin_before_overwrite(spark.read.parquet(path))
-    analyzed = pinned._jdf.queryExecution().analyzed().toString()
+    analyzed = _analyzed(pinned)
     assert "LogicalRDD" in analyzed and path not in analyzed
     pinned.write.mode("overwrite").parquet(path)
     assert spark.read.parquet(path).count() == 5
 
 
-def test_reliable_parity_kcore(spark):
+def test_kcore_peels_pendants_to_the_clique(spark):
     # a 4-clique {1,2,3,4} with two pendant nodes: the 3-core is the
     # clique, found by peeling the pendants -- a genuinely multi-round
-    # fixpoint under BOTH per-round pinning modes (the sf0.001
-    # co-supply graph is empty after thresholding, so a synthetic
-    # graph exercises the loop where the fixture cannot)
+    # fixpoint of the per-round pin (the sf0.001 co-supply graph is
+    # empty after thresholding, so a synthetic graph exercises the
+    # loop where the fixture cannot)
     clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     edges = spark.createDataFrame(clique + [(4, 9), (9, 12)], "s1 long, s2 long")
-    fast = sorted(map(tuple, kcore(edges, 3).collect()))
-    rel = sorted(map(tuple, kcore(edges, 3, reliable=True).collect()))
-    assert fast == rel
-    assert fast == [(1, 3), (2, 3), (3, 3), (4, 3)]
+    stats: dict = {}
+    got = sorted(map(tuple, kcore(edges, 3, stats=stats).collect()))
+    assert got == [(1, 3), (2, 3), (3, 3), (4, 3)]
+    assert stats["rounds"] >= 2
 
 
-def test_reliable_parity_label_propagation(spark):
+def test_label_propagation_chain_and_pair(spark):
     # a chain 1-2-3-4 plus an isolated pair 10-11: pointer jumping
-    # must converge identically under both per-round pinning modes
+    # converges to the smallest reachable id per component
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (4, 3), (10, 11)], "doc_a long, doc_b long"
     )
-    fast = sorted(map(tuple, label_propagation(pairs).collect()))
-    rel = sorted(map(tuple, label_propagation(pairs, reliable=True).collect()))
-    assert fast == rel
-    assert fast == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
+    got = sorted(map(tuple, label_propagation(pairs).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]

@@ -292,12 +292,17 @@ def test_salted_join_spreads_hot_keys_and_never_broadcasts(spark, sf_check):
     ), plan
 
 
+_PIN_CALL = re.compile(r"\.(localCheckpoint|persist|cache|checkpoint)\(")
+
+
 def test_no_bare_local_checkpoint_outside_materialize():
-    """Every materialization pin must route through materialize.py so
-    the executor-loss story (reliable persist vs lineage truncation,
-    and the one documented overwrite-safety exception) is chosen at a
-    single audited site -- a bare localCheckpoint() elsewhere silently
-    opts an operator out of the reliable-mode sweep."""
+    """Every pin of an intermediate (localCheckpoint, persist, cache,
+    checkpoint) must route through materialize.py. That module is the
+    one place that chooses the mechanism, and with it what an executor
+    lost mid-query costs (lineage truncation fails the query; a
+    lineage-keeping pin recomputes). A bare pin elsewhere would carry
+    its own answer to that question, and changing the mechanism would
+    no longer be a one-file edit."""
     import os
 
     pkg = os.path.join(os.path.dirname(__file__), "..",
@@ -310,7 +315,7 @@ def test_no_bare_local_checkpoint_outside_materialize():
             path = os.path.join(root, fname)
             with open(path) as fh:
                 for i, line in enumerate(fh, 1):
-                    if ".localCheckpoint(" in line:
+                    if _PIN_CALL.search(line):
                         offenders.append(f"{path}:{i}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
 
