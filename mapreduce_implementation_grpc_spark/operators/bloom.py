@@ -41,39 +41,29 @@ M_LOG2 = 17                # k=3 -- size m ~ 17.5 bits/item in practice
 NUM_HASHES = 3  # 3 * 17 = 51 bits consumed of the 60-bit hash
 
 
-def _positions(sh, fast: bool = False):
+def _positions(sh):
     """NUM_HASHES bit positions in [0, M): disjoint 17-bit fields of
-    one base hash.
+    one 60-bit md5 prefix (portable_hash60) -- pure shift/modulo on a
+    positive BIGINT, bit-identical in DuckDB ((h >> 17j) % 131072),
+    which is what makes the registry bloom queries fully
+    oracle-checkable. The bitmap and the probe both take their
+    positions from here, so they cannot disagree on the hash family.
 
-    fast=False (default): 60-bit md5 prefix (portable_hash60) -- pure
-    shift/modulo on a positive BIGINT, bit-identical in DuckDB
-    ((h >> 17j) % 131072), which is what makes the registry bloom
-    queries fully oracle-checkable.
-
-    fast=True: xxhash64 -- NOT DuckDB-portable, but ~5-8x cheaper per
-    probe (measured, tools/prefix_join_probe.py): md5 is a
-    cryptographic hash and at 32M wide fact rows its cost exceeded
-    the entire shuffle the filter was saving. Production pruning
-    should use fast=True; the md5 form exists for the correctness
-    gates. xxhash64 is signed, so fields go through pmod."""
-    if fast:
-        h = F.xxhash64(sh)
-        return [
-            F.pmod(F.shiftright(h, M_LOG2 * j), F.lit(M))
-            for j in range(NUM_HASHES)
-        ]
+    Cost: md5 is a cryptographic hash. At 32 M wide fact rows the
+    probe costs more per row than a single-box in-memory shuffle of
+    those rows (SCALING.md, "Bloom-join pruning"), so locally the
+    prune loses to the plain join and wins only when shuffle bytes
+    cross a network. A cheaper hash family would be an edit here
+    that loses DuckDB portability, not a caller-chosen flag."""
     h = portable_hash60(sh)
     return [F.shiftright(h, M_LOG2 * j) % M for j in range(NUM_HASHES)]
 
 
-def bloom_bitmap(items: DataFrame, col: str = "sh", fast: bool = False) -> DataFrame:
+def bloom_bitmap(items: DataFrame, col: str = "sh") -> DataFrame:
     """[slot, bits]: the Bloom bitmap of `items[col]`, 32 bits per
-    slot row. Built with one partial-agg'd groupBy on <= SLOTS keys.
-    `fast` picks the hash family and MUST match the probe side
-    (bloom_prune) -- mixed families break the no-false-negative
-    guarantee silently."""
+    slot row. Built with one partial-agg'd groupBy on <= SLOTS keys."""
     pos = items.select(
-        F.explode(F.array(*_positions(F.col(col), fast))).alias("p")
+        F.explode(F.array(*_positions(F.col(col)))).alias("p")
     )
     return (
         pos.select(
@@ -87,9 +77,7 @@ def bloom_bitmap(items: DataFrame, col: str = "sh", fast: bool = False) -> DataF
     )
 
 
-def bloom_prune(
-    fact: DataFrame, key, bitmap: DataFrame, fast: bool = False
-) -> DataFrame:
+def bloom_prune(fact: DataFrame, key, bitmap: DataFrame) -> DataFrame:
     """Map-side Bloom pre-filter of `fact` rows whose `key` (a string
     column expression) MAY be in the set the `bitmap` was built over
     -- the manual form of a runtime filter / bloom-join pruning. The
@@ -97,9 +85,10 @@ def bloom_prune(
     the fact side never shuffles here; survivors (members + the ~0.4%
     false positives) still need the exact join, but only THEY pay its
     shuffle. No false negatives: a member always has all bits set.
-    `fast` must match the bitmap's (see bloom_bitmap)."""
+    The per-row md5 probe is the cost side of the trade (see
+    _positions)."""
     probe = fact.withColumn("_bk", key)
-    for j, pcol in enumerate(_positions(F.col("_bk"), fast)):
+    for j, pcol in enumerate(_positions(F.col("_bk"))):
         probe = probe.withColumn(f"_s{j}", F.shiftright(pcol, 5)).withColumn(
             f"_b{j}", (pcol % BITS_PER_SLOT).cast("int")
         )

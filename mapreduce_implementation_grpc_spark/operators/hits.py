@@ -19,10 +19,15 @@ rounds its terms to 9 dp, sums as DECIMAL(20,9) (associative =>
 partition-order-independent), and string-routes back to double; the
 oracle unrolls the fixed iteration count as MATERIALIZED CTEs.
 
-Scale: per round, two edge-keyed shuffles (the joins) and two
-node-sized aggregates; score tables are node-sized and
-broadcast-gated exactly like pagerank's rank side. Fixed iteration
-count -- plan depth is static, no driver-side convergence loop.
+Scale: per round, two joins of the edge list against a broadcast
+node-sized score table (hubs, then authorities) and two node-sized
+aggregates. Like pagerank's rank side, every round ships a |V|-row
+table to every executor, so the plan assumes the hub and authority
+tables fit one executor; SCALING.md measured pagerank's key join
+winning at 9.75 M edges. Switching plans is an edit here that
+chooses from an observable size, with a benchmark workload on each
+side, not a caller flag. Fixed iteration count -- plan depth is
+static, no driver-side convergence loop.
 
 Reference parity: the reference engine has no graph surface; this is
 extension surface over the same orders x lineitem edges as
@@ -51,7 +56,6 @@ def hits_scores(
     sf_dir: str,
     iters: int = 3,
     segment: str | None = None,
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """[node_type ('hub'|'authority'), node_key, score] after `iters`
     max-normalized HITS rounds, score desc / key asc within type.
@@ -62,14 +66,13 @@ def hits_scores(
     )
     auths = None
     for _ in range(iters):
-        hside = F.broadcast(hubs) if broadcast_scores else hubs
         # each raw table feeds its own max AND the division: without
         # pinning, every round re-expands the previous round's whole
         # subtree into both consumers -- an exponentially duplicated
         # plan that re-executed visibly (21 s cold / 7.6 s warm at
         # sf0.1; 4.0 s warm pinned)
         araw = materialize(
-            edges.join(hside, F.col("custkey") == F.col("c"))
+            edges.join(F.broadcast(hubs), F.col("custkey") == F.col("c"))
             .groupBy("suppkey")
             .agg(_s2d(_dec_sum("h")).alias("ar"))
         )
@@ -77,9 +80,8 @@ def hits_scores(
         auths = araw.crossJoin(F.broadcast(amax)).select(
             F.col("suppkey").alias("s"), (F.col("ar") / F.col("am")).alias("a")
         )
-        aside = F.broadcast(auths) if broadcast_scores else auths
         hraw = materialize(
-            edges.join(aside, F.col("suppkey") == F.col("s"))
+            edges.join(F.broadcast(auths), F.col("suppkey") == F.col("s"))
             .groupBy("custkey")
             .agg(_s2d(_dec_sum("a")).alias("hr"))
         )

@@ -15,10 +15,15 @@ damped sum r' = 0.15 + 0.85 * sum(r_u / deg_u) over in-neighbors.
 Scale design:
 - the edge list is built ONCE (one distinct over the fact join),
   carries its degree, and is lazily checkpointed; each power
-  iteration is one join (ranks are |V| rows, broadcastable at any
-  realistic vertex count -- but planned as a plain key join so the
-  same code works when |V| outgrows a broadcast) plus one grouped
-  sum with map-side partials;
+  iteration is one broadcast join of the |V|-row rank table (a
+  shuffle-free scan of the edge list) plus one grouped sum with
+  map-side partials. The degree table and the PPR teleport
+  indicator are |V| rows too and are broadcast the same way. Limit:
+  every iteration ships a |V|-row table to every executor, so the
+  plan assumes |V| fits one executor; SCALING.md measured a plain
+  key join winning at 9.75 M edges. Switching plans is an edit here
+  that chooses from an observable size, with a benchmark workload
+  on each side, not a caller flag;
 - iteration count is a constant (power iteration converges
   geometrically; rank ORDER stabilizes long before values), so the
   whole loop is a fixed-depth plan -- no driver-side collects at all;
@@ -71,17 +76,9 @@ def _node_key(node: F.Column) -> F.Column:
     ).cast("long")
 
 
-def _purchase_graph_keys(
-    spark: SparkSession, sf_dir: str, broadcast_small: bool = True
-) -> DataFrame:
-    """Symmetrized edge list [src, dst, d] on LONG node keys.
-
-    `broadcast_small` is the same |V|-scale gate as `broadcast_ranks`
-    below: the degree table is exactly |V| rows, so at web scale
-    (where the caller passes broadcast_ranks=False) the degree join
-    must also plan as a plain key join -- an ungated F.broadcast here
-    would silently assume |V| fits one executor even on the
-    "no-broadcast" path."""
+def _purchase_graph_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetrized edge list [src, dst, d] on LONG node keys; the
+    |V|-row degree table joins back as a broadcast."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     e0 = (
@@ -96,21 +93,18 @@ def _purchase_graph_keys(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     deg = e.groupBy(F.col("src").alias("dsrc")).agg(F.count("*").alias("d"))
-    dside = F.broadcast(deg) if broadcast_small else deg
     return (
-        e.join(dside, F.col("src") == F.col("dsrc"))
+        e.join(F.broadcast(deg), F.col("src") == F.col("dsrc"))
         .select("src", "dst", "d")
         .transform(materialize)
     )
 
 
-def purchase_graph(
-    spark: SparkSession, sf_dir: str, broadcast_small: bool = True
-) -> DataFrame:
+def purchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized edge list [src, dst, d(egree of src)] with the
     presentation string labels -- a relabeled view over the long-keyed
     builder the iterations actually shuffle (see module docstring)."""
-    return _purchase_graph_keys(spark, sf_dir, broadcast_small).select(
+    return _purchase_graph_keys(spark, sf_dir).select(
         _label(F.col("src")).alias("src"),
         _label(F.col("dst")).alias("dst"),
         "d",
@@ -121,22 +115,18 @@ def pagerank(
     spark: SparkSession,
     sf_dir: str,
     iters: int = 3,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """DataFrame[node, r] after `iters` damped power iterations from
     uniform r0 = 1.0. Deterministic and engine-portable (see module
     docstring); serve with an orderBy+limit for a top-k report.
 
-    broadcast_ranks is the NB-classifier-style scale gate: the rank
-    table is exactly |V| rows, so broadcasting it makes each
-    iteration a shuffle-FREE scan of the checkpointed edge list plus
-    one partial-agg'd contribution sum (measured 1.35x at sf0.1) --
-    valid up to ~1e7 vertices. For a web-scale graph pass False: the
-    same loop plans a plain key join (edge list shuffles per
-    iteration, the vanilla Pregel cost) with no driver-side rank
-    materialization."""
-    ewd = _purchase_graph_keys(spark, sf_dir, broadcast_small=broadcast_ranks)
-    return _power_iterate(ewd, None, iters, broadcast_ranks)
+    The rank table is exactly |V| rows and is broadcast every
+    iteration, so each iteration is a shuffle-free scan of the
+    checkpointed edge list plus one partial-agg'd contribution sum
+    (measured 1.35x over the key join at sf0.1). The limit is the
+    module docstring's: |V| must fit one executor."""
+    ewd = _purchase_graph_keys(spark, sf_dir)
+    return _power_iterate(ewd, None, iters)
 
 
 def personalized_pagerank(
@@ -144,20 +134,18 @@ def personalized_pagerank(
     sf_dir: str,
     seeds: DataFrame,
     iters: int = 3,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass lands only on the `seeds`
     node set (DataFrame[node], presentation labels) instead of
     uniformly -- the standard graph-proximity recommendation primitive
     ('which suppliers are close to THIS customer segment'). Same
-    exactness recipe and scale gate as `pagerank`; the per-node
+    exactness recipe and |V| limit as `pagerank`; the per-node
     teleport indicator is a 0/1 double joined once (the SEED side is
     broadcast -- seed sets are small by nature; the |V|-row indicator
-    itself goes through the broadcast_ranks gate inside the
-    iteration), so non-seed nodes earn rank only through incoming
-    walk mass. Seed labels are parsed to the internal long keys once,
-    seed-set-sized work."""
-    ewd = _purchase_graph_keys(spark, sf_dir, broadcast_small=broadcast_ranks)
+    is broadcast inside every iteration, like the ranks), so non-seed
+    nodes earn rank only through incoming walk mass. Seed labels are
+    parsed to the internal long keys once, seed-set-sized work."""
+    ewd = _purchase_graph_keys(spark, sf_dir)
     ind = (
         ewd.select("src").distinct()
         .join(
@@ -174,15 +162,10 @@ def personalized_pagerank(
                 F.coalesce(F.col("i1"), F.lit(0.0)).alias("ind"))
         .transform(materialize)
     )
-    return _power_iterate(ewd, ind, iters, broadcast_ranks)
+    return _power_iterate(ewd, ind, iters)
 
 
-def _power_iterate(
-    ewd: DataFrame,
-    ind: DataFrame | None,
-    iters: int,
-    broadcast_ranks: bool,
-) -> DataFrame:
+def _power_iterate(ewd: DataFrame, ind: DataFrame | None, iters: int) -> DataFrame:
     """Shared damped power iteration; `ind` is the per-node teleport
     indicator (None = uniform 1.0, classic PageRank). Iterates on the
     long node keys; the presentation label is rebuilt once on the
@@ -194,8 +177,7 @@ def _power_iterate(
     else:
         ranks = ind.select(F.col("inode").alias("node"), F.col("ind").alias("r"))
     for _ in range(iters):
-        rside = F.broadcast(ranks) if broadcast_ranks else ranks
-        contrib = ewd.join(rside, F.col("src") == F.col("node")).select(
+        contrib = ewd.join(F.broadcast(ranks), F.col("src") == F.col("node")).select(
             "dst",
             F.round(F.col("r") / F.col("d"), 9).cast("decimal(12,9)").alias("term"),
         )
@@ -206,10 +188,8 @@ def _power_iterate(
         if ind is None:
             ranks = sums.select("node", (F.lit(TELEPORT) + walk).alias("r"))
         else:
-            # the indicator is |V| rows -- same scale gate as ranks
-            iside = F.broadcast(ind) if broadcast_ranks else ind
             ranks = (
-                sums.join(iside, F.col("node") == F.col("inode"))
+                sums.join(F.broadcast(ind), F.col("node") == F.col("inode"))
                 .select("node", (F.lit(TELEPORT) * F.col("ind") + walk).alias("r"))
             )
     return ranks.select(_label(F.col("node")).alias("node"), "r")

@@ -110,40 +110,12 @@ def mad_outliers(
     )
 
 
-def _grouped_cumsum(grain: DataFrame, weight_col: str) -> DataFrame:
-    """Per-group cumulative weight over a (g, v)-grain frame WITHOUT
-    a per-group sort of the whole grain: group-scoped two-level
-    bucketing (operators/ranking.py) -- per-(g, _bkt) local windows
-    plus group-partitioned offset windows over the <= 1024-row
-    per-group bucket aggregate. Appends [cw, tw]. This is the
-    all-distinct-values escape hatch the robust_probe ladder
-    measured as the naive-window wall (weighted_median 14.9 s at
-    16M distinct rows in 8 groups)."""
-    from .ranking import bucket_offsets, bucketize_by_key
-
-    bk = bucketize_by_key(grain, "v", group_cols=["g"])
-    offs = bucket_offsets(bk, weight=F.col(weight_col), group_cols=["g"])
-    w_local = (
-        Window.partitionBy("g", "_bkt")
-        .orderBy(F.asc("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        bk.withColumn("_lc", F.sum(weight_col).over(w_local))
-        .join(offs, ["g", "_bkt"])
-        .withColumn("cw", F.col("_off") + F.col("_lc"))
-        .withColumn("tw", F.col("_tot"))
-        .drop("_ak", "_bkt", "_lc", "_off", "_tot")
-    )
-
-
 def weighted_median(
     df: DataFrame,
     group_col: str,
     value_col: str,
     weight_col: str,
     out_col: str = "weighted_median",
-    scalable: bool = False,
 ) -> DataFrame:
     """Exact lower weighted median per group: the smallest value v
     with 2 * cumweight(<= v) >= total weight -- the
@@ -162,7 +134,14 @@ def weighted_median(
     via min(struct)). Windows run over the distinct-value aggregate
     -- fact rows never cross a sort. Weights must be integral
     (cents/micros); zero-total groups are dropped (no mass, no
-    median)."""
+    median).
+
+    Limit: each group's distinct values are sorted in one window
+    partition, so a group whose values never tie sorts a fact-sized
+    partition (14.9 s at 16 M distinct rows in 8 groups, SCALING.md).
+    Quantize or pre-bucket such keys first. A bucketed cumsum measured
+    a wash on one box; bringing it back is an edit here that picks it
+    from the grain size, with a benchmark workload on each side."""
     if out_col in (group_col, "total_weight"):
         raise ValueError(
             f"weighted_median: out_col {out_col!r} collides with an "
@@ -171,20 +150,13 @@ def weighted_median(
     grain = df.groupBy(
         F.col(group_col).alias("g"), F.col(value_col).alias("v")
     ).agg(F.sum(weight_col).alias("w"))
-    if scalable:
-        # scalable=True swaps the per-group grain sort for the
-        # group-scoped two-level bucket cumsum -- identical numbers
-        # (parity-tested), no fact-sized window partition; use it
-        # when values don't tie (the measured wall regime)
-        cum = _grouped_cumsum(grain, "w")
-    else:
-        wc = Window.partitionBy("g").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        wt = Window.partitionBy("g")
-        cum = grain.withColumn("cw", F.sum("w").over(wc)).withColumn(
-            "tw", F.sum("w").over(wt)
-        )
+    wc = Window.partitionBy("g").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    wt = Window.partitionBy("g")
+    cum = grain.withColumn("cw", F.sum("w").over(wc)).withColumn(
+        "tw", F.sum("w").over(wt)
+    )
     picked = (
         cum.filter((F.col("tw") > 0) & (2 * F.col("cw") >= F.col("tw")))
         .groupBy("g")
@@ -200,7 +172,6 @@ def trimmed_mean(
     group_col: str,
     cents_col: str,
     trim_pct: int = 5,
-    scalable: bool = False,
 ) -> DataFrame:
     """Exact two-sided trimmed mean per group over an integer-cents
     column: drop the lowest and highest k = floor(n * trim_pct/100)
@@ -221,7 +192,8 @@ def trimmed_mean(
     grain with counts (heavy ties collapse -- 2dp money makes this
     grain far smaller than the facts); one per-group cumulative
     window over that grain; one final per-group aggregate. ANSI mode
-    makes a 2^63 overflow of kept*cents loud."""
+    makes a 2^63 overflow of kept*cents loud. Same limit as
+    weighted_median: the window sorts each group's distinct values."""
     if not 0 <= int(trim_pct) < 50:
         raise ValueError(
             f"trimmed_mean: trim_pct={trim_pct} -- a two-sided trim "
@@ -231,23 +203,15 @@ def trimmed_mean(
     grain = df.groupBy(
         F.col(group_col).alias("g"), F.col(cents_col).alias("v")
     ).agg(F.count("*").alias("cnt"))
-    if scalable:
-        cum = (
-            _grouped_cumsum(grain, "cnt")
-            .withColumnRenamed("cw", "cum")
-            .withColumnRenamed("tw", "n")
-            .withColumn("k", F.expr(f"(n * {int(trim_pct)}) div 100"))
-        )
-    else:
-        wc = Window.partitionBy("g").orderBy("v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        wt = Window.partitionBy("g")
-        cum = (
-            grain.withColumn("cum", F.sum("cnt").over(wc))
-            .withColumn("n", F.sum("cnt").over(wt))
-            .withColumn("k", F.expr(f"(n * {int(trim_pct)}) div 100"))
-        )
+    wc = Window.partitionBy("g").orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    wt = Window.partitionBy("g")
+    cum = (
+        grain.withColumn("cum", F.sum("cnt").over(wc))
+        .withColumn("n", F.sum("cnt").over(wt))
+        .withColumn("k", F.expr(f"(n * {int(trim_pct)}) div 100"))
+    )
     kept = F.greatest(
         F.lit(0).cast("long"),
         F.least(F.col("cum"), F.col("n") - F.col("k"))

@@ -76,7 +76,6 @@ def doc_idf_sum(
     docs: DataFrame,
     text_col: str = "text",
     n_salt: int = 16,
-    salted: bool = True,
 ) -> DataFrame:
     """Per-document total inverse document frequency -- the token-
     level join-back that makes join skew concrete: every token row
@@ -87,8 +86,9 @@ def doc_idf_sum(
     The vocabulary is corpus-derived: at 100 TB it is far beyond the
     broadcast threshold (hundreds of millions of types once tails,
     typos, and code identifiers are in), which is what forces a
-    shuffle join and makes `salted=True` the scale plan.
-    `salted=False` is the naive twin for A/B measurement.
+    shuffle join; the join-back is always `salted_join`, so a hot
+    word's rows spread over `n_salt` tasks at the price of an
+    `n_salt`-fold replicated vocabulary.
 
     Exactness: idf terms are round-9dp decimals, so the per-doc sum is
     associative (partition-order-independent) and string-routed back
@@ -110,11 +110,7 @@ def doc_idf_sum(
         .cast("decimal(12,9)")
         .alias("idf"),
     )
-    joined = (
-        salted_join(toks, idf, "word", salt_from="doc_id", n_salt=n_salt)
-        if salted
-        else toks.join(idf, "word")
-    )
+    joined = salted_join(toks, idf, "word", salt_from="doc_id", n_salt=n_salt)
     return joined.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.sum("idf").cast("string").cast("double").alias("idf_sum"),

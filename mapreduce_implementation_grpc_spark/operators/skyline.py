@@ -98,7 +98,6 @@ def skyline(
     df: DataFrame,
     dims: list[str],
     buckets: int = GRID_BUCKETS,
-    local_prune: bool = True,
 ) -> DataFrame:
     """Exact d-dimensional skyline of `df` maximizing the integral
     columns `dims`: grid-prune, then per-partition local skyline,
@@ -116,9 +115,7 @@ def skyline(
     partitioning, but the final anti-join makes the OUTPUT exactly
     the mathematical skyline regardless -- partition-invariance is
     pytest-pinned."""
-    survivors = grid_survivors(df, dims, buckets)
-    if local_prune:
-        survivors = local_skyline(survivors, dims)
+    survivors = local_skyline(grid_survivors(df, dims, buckets), dims)
     return survivors.alias("s").join(
         F.broadcast(survivors.alias("t")),
         _dominates("t", "s", dims),

@@ -39,6 +39,23 @@ def _dec2dbl(col):
     return col.cast("string").cast("double")
 
 
+def _avg6(dec_sum: str, n: str, scale: int):
+    """`dec_sum / n` rounded HALF_UP to 6 decimals, as a double, for a
+    non-negative exact decimal sum column with `scale` digits over a
+    count column `n`. The rounding is integer arithmetic on the sum in
+    10^-scale units, so the 6-dp value is the exact quotient's, and the
+    one IEEE op left (an exact integer over 10^6) is correctly rounded
+    in every engine. `round(sum_double / n, 6)` is not portable: Spark
+    rounds the double's shortest decimal string, DuckDB the binary
+    value, so a quotient ending in 5 at the 7th decimal (264573.6778125
+    = 50798146.14 / 192) splits .813 / .812."""
+    units = f"cast({dec_sum} * {10 ** scale} as bigint)"
+    return F.expr(
+        f"cast((2 * {units} * {10 ** (6 - scale)} + {n}) div (2 * {n}) as double)"
+        " / 1000000"
+    )
+
+
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate on the fact table.
     Filter + column pruning push into the parquet scan."""
@@ -55,16 +72,23 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dec2dbl(F.sum(_dec(F.col("l_quantity")))).alias("sum_qty"),
+            F.sum(_dec(F.col("l_quantity"))).alias("_sq"),
             _dec2dbl(F.sum(_dec(F.col("l_extendedprice")))).alias("sum_base_price"),
             _dec2dbl(F.sum(disc_price)).alias("sum_disc_price"),
             _dec2dbl(F.sum(charge)).alias("sum_charge"),
-            # avg computed as exact-decimal sum cast to double, divided by
-            # count: identical IEEE result in any engine (decimal-avg
-            # rounding rules are engine-specific; this form is not)
-            F.round(_dec2dbl(F.sum(_dec(F.col("l_quantity")))) / F.count("*"), 6).alias("avg_qty"),
-            F.round(_dec2dbl(F.sum(_dec(F.col("l_discount"), 4))) / F.count("*"), 6).alias("avg_disc"),
+            F.sum(_dec(F.col("l_discount"), 4)).alias("_sd"),
             F.count("*").alias("count_order"),
+        )
+        .select(
+            "l_returnflag",
+            "l_linestatus",
+            _dec2dbl(F.col("_sq")).alias("sum_qty"),
+            "sum_base_price",
+            "sum_disc_price",
+            "sum_charge",
+            _avg6("_sq", "count_order", 2).alias("avg_qty"),
+            _avg6("_sd", "count_order", 4).alias("avg_disc"),
+            "count_order",
         )
     )
 
@@ -260,10 +284,13 @@ def orders_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_orders"),
-            _dec2dbl(F.sum(_dec(F.col("o_totalprice")))).alias("revenue"),
-            F.round(
-                _dec2dbl(F.sum(_dec(F.col("o_totalprice")))) / F.count("*"), 6
-            ).alias("avg_order_value"),
+            F.sum(_dec(F.col("o_totalprice"))).alias("_s"),
+        )
+        .select(
+            "month",
+            "n_orders",
+            _dec2dbl(F.col("_s")).alias("revenue"),
+            _avg6("_s", "n_orders", 2).alias("avg_order_value"),
         )
     )
 

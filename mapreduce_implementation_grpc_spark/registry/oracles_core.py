@@ -1068,12 +1068,14 @@ ORACLES: dict[str, str] = {
       FROM events GROUP BY event_type
     """,
     "orders_monthly": """
-      SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-             count(*) AS n_orders,
-             CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS revenue,
-             round(CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                   / count(*), 6) AS avg_order_value
-      FROM orders GROUP BY 1
+      SELECT month, n_orders,
+             CAST(CAST(s AS VARCHAR) AS DOUBLE) AS revenue,
+             CAST((2 * CAST(s * 100 AS BIGINT) * 10000 + n_orders) // (2 * n_orders)
+                  AS DOUBLE) / 1000000 AS avg_order_value
+      FROM (SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
+                   count(*) AS n_orders,
+                   sum(CAST(o_totalprice AS DECIMAL(18,2))) AS s
+            FROM orders GROUP BY 1)
     """,
     "events_pivot": """
       SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
@@ -1221,8 +1223,10 @@ ORACLES: dict[str, str] = {
         CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
                  * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
                  * (CAST(1 AS DECIMAL(8,4)) + CAST(l_tax AS DECIMAL(8,4)))) AS VARCHAR) AS DOUBLE) AS sum_charge,
-        round(CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) / count(*), 6) AS avg_qty,
-        round(CAST(CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) / count(*), 6) AS avg_disc,
+        CAST((2 * CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT) * 10000 + count(*))
+             // (2 * count(*)) AS DOUBLE) / 1000000 AS avg_qty,
+        CAST((2 * CAST(sum(CAST(l_discount AS DECIMAL(18,4))) * 10000 AS BIGINT) * 100 + count(*))
+             // (2 * count(*)) AS DOUBLE) / 1000000 AS avg_disc,
         count(*) AS count_order
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'

@@ -83,8 +83,10 @@ def q_pricing_summary_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
           CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
                         * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
                         * (CAST(1 AS DECIMAL(8,4)) + CAST(l_tax AS DECIMAL(8,4)))) AS STRING) AS DOUBLE) AS sum_charge,
-          round(CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS STRING) AS DOUBLE) / count(*), 6) AS avg_qty,
-          round(CAST(CAST(sum(CAST(l_discount AS DECIMAL(18,4))) AS STRING) AS DOUBLE) / count(*), 6) AS avg_disc,
+          CAST((2 * CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT) * 10000 + count(*))
+               div (2 * count(*)) AS DOUBLE) / 1000000 AS avg_qty,
+          CAST((2 * CAST(sum(CAST(l_discount AS DECIMAL(18,4))) * 10000 AS BIGINT) * 100 + count(*))
+               div (2 * count(*)) AS DOUBLE) / 1000000 AS avg_disc,
           count(*) AS count_order
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'

@@ -363,3 +363,36 @@ def test_user_state_asof_point_in_time(spark, sf_check):
         if r.valid_from <= at and (r.valid_to is None or r.valid_to > at)
     }
     assert {r.user_id: r.state for r in rows} == want
+
+
+def test_orders_monthly_average_rounds_the_exact_quotient(spark, sf_smoke, tmp_path):
+    """One month of 192 orders with revenue 50798146.14: the exact mean
+    264573.6778125 rounds HALF_UP to .677813 in both engines. Rounding
+    the double quotient instead splits them (Spark rounds its shortest
+    string .813, DuckDB the binary value .67781249998... to .812)."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_implementation_grpc_spark.sources.catalog import TABLES
+
+    schema = pq.read_schema(os.path.join(sf_smoke, "orders.parquet"))
+    day = datetime.datetime(1996, 6, 15)
+    prices = [264573.68] * 191 + [264573.26]
+    rows = [
+        dict(zip(schema.names, (i, 1, "O", p, day, "1-URGENT")))
+        for i, p in enumerate(prices)
+    ]
+    sf_dir = tmp_path / "sf_month"
+    sf_dir.mkdir()
+    pq.write_table(pa.Table.from_pylist(rows, schema), sf_dir / "orders.parquet")
+    for name in TABLES:
+        if name != "orders":
+            os.symlink(os.path.join(sf_smoke, f"{name}.parquet"), sf_dir / f"{name}.parquet")
+    got = registry.QUERIES["orders_monthly"](spark, str(sf_dir))
+    r = got.collect()[0]
+    assert (r.month, r.n_orders, r.revenue) == ("1996-06", 192, 50798146.14)
+    assert r.avg_order_value == 264573.677813
+    assert_matches_oracle(got, registry.ORACLES["orders_monthly"], str(sf_dir))

@@ -74,12 +74,10 @@ def test_join_oracle_parity(spark, sf_check, name):
     )
 
 
-def test_bloom_fast_hash_path_equivalent_and_no_false_negatives(spark):
-    """The xxhash64 fast path (production pruning) must preserve the
-    Bloom guarantees of the md5 portable path: zero false negatives
-    (every member survives the prune) and join-result equivalence.
-    Mixed hash families are the documented foot-gun, so the test also
-    pins that a fast bitmap with a portable probe DOES break."""
+def test_bloom_prune_no_false_negatives(spark):
+    """The md5 bitmap and probe keep the Bloom guarantee: zero false
+    negatives (every member survives the prune, so the exact join over
+    survivors is complete) while actually pruning non-members."""
     from pyspark.sql import functions as F
 
     from mapreduce_implementation_grpc_spark.operators.bloom import (
@@ -96,14 +94,9 @@ def test_bloom_fast_hash_path_equivalent_and_no_false_negatives(spark):
     )
     expected = fact.join(keys, "skey").count()
     assert expected > 0
-    for fast in (False, True):
-        bm = bloom_bitmap(keys, "skey", fast=fast)
-        pruned = bloom_prune(fact, F.col("skey"), bm, fast=fast)
-        # no false negatives: the exact join over survivors is complete
-        assert pruned.join(keys, "skey").count() == expected
-        # and it actually pruned (not a pass-through)
-        assert pruned.count() < fact.count()
-    # mismatched families lose members -- the guarantee breaks loudly
-    bm_fast = bloom_bitmap(keys, "skey", fast=True)
-    mixed = bloom_prune(fact, F.col("skey"), bm_fast, fast=False)
-    assert mixed.join(keys, "skey").count() < expected
+    bm = bloom_bitmap(keys, "skey")
+    pruned = bloom_prune(fact, F.col("skey"), bm)
+    # no false negatives: the exact join over survivors is complete
+    assert pruned.join(keys, "skey").count() == expected
+    # and it actually pruned (not a pass-through)
+    assert pruned.count() < fact.count()

@@ -55,59 +55,6 @@ def test_degree_monotone_within_suppliers(spark, sf_smoke):
         assert ranks[hi] >= ranks[lo]
 
 
-def test_broadcast_gate_fallback_is_identical(spark, sf_smoke):
-    """The shuffle-join fallback (web-scale path) must produce the
-    exact same rank vector as the broadcast-ranks default. The gate
-    now also covers the |V|-row degree join inside purchase_graph,
-    so this exercises the fully-ungated path end to end."""
-    a = sorted(map(tuple, pagerank(spark, sf_smoke, broadcast_ranks=True).collect()))
-    b = sorted(map(tuple, pagerank(spark, sf_smoke, broadcast_ranks=False).collect()))
-    assert a == b and len(a) > 0
-
-
-def test_ungated_path_forces_no_broadcast(spark, sf_smoke):
-    """broadcast_ranks=False must leave NO user-forced broadcast hint
-    on any |V|-row table (degrees, ranks): with the auto-broadcast
-    threshold disabled, the executed plan may not contain a
-    BroadcastHashJoin anywhere (AQE size-based choices are fine at
-    small SF, but a *hint* would survive to web scale)."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            pagerank(spark, sf_smoke, iters=1, broadcast_ranks=False)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "BroadcastHashJoin" not in plan, plan[:2000]
-
-
-def test_ppr_broadcast_gate_fallback_is_identical(spark, sf_smoke):
-    """Personalized PageRank's teleport-indicator join goes through
-    the same scale gate; the ungated path must be bit-identical."""
-    from mapreduce_implementation_grpc_spark.operators.pagerank import (
-        personalized_pagerank,
-        purchase_graph,
-    )
-
-    seeds = (
-        purchase_graph(spark, sf_smoke)
-        .select(F.col("src").alias("node"))
-        .filter(F.col("node").startswith("c"))
-        .distinct()
-        .limit(5)
-    )
-    seeds = spark.createDataFrame(seeds.collect())  # pin the seed set
-    a = sorted(map(tuple, personalized_pagerank(
-        spark, sf_smoke, seeds, broadcast_ranks=True).collect()))
-    b = sorted(map(tuple, personalized_pagerank(
-        spark, sf_smoke, seeds, broadcast_ranks=False).collect()))
-    assert a == b and len(a) > 0
-
-
 def test_ppr_with_all_seeds_equals_classic(spark, sf_smoke):
     """Personalized PageRank degenerates to classic PageRank when the
     seed set is every node — pins that the seeded teleport math is the

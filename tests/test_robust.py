@@ -6,7 +6,11 @@ from __future__ import annotations
 import pytest
 
 from mapreduce_implementation_grpc_spark import registry
-from mapreduce_implementation_grpc_spark.operators.robust import mad_outliers
+from mapreduce_implementation_grpc_spark.operators.robust import (
+    mad_outliers,
+    trimmed_mean,
+    weighted_median,
+)
 
 
 def _df(spark, rows):
@@ -74,3 +78,27 @@ def test_dow_seasonality_invariants(spark, sf_check):
         # weighted mean of seasonal indices is ~1
         wavg = sum(r.seasonal_index * r.n for r in rs) / n
         assert wavg == pytest.approx(1.0, abs=1e-9), t
+
+
+def test_parameter_guards_raise(spark):
+    """Degenerate parameters fail loudly at build time, not with
+    NaN/short output at execution time."""
+    import pytest
+
+    from mapreduce_implementation_grpc_spark.operators.curation import (
+        stratified_sample,
+    )
+    from mapreduce_implementation_grpc_spark.operators.regression import (
+        trailing_ols,
+    )
+
+    df = spark.createDataFrame([("g", 1, 1)], "g string, v long, w long")
+    with pytest.raises(ValueError, match="collides"):
+        weighted_median(df, "g", "v", "w", out_col="total_weight")
+    with pytest.raises(ValueError, match="trim_pct"):
+        trimmed_mean(df, "g", "v", trim_pct=50)
+    with pytest.raises(ValueError, match="width"):
+        trailing_ols(df, ["g"], "v", "w", width=0)
+    docs = spark.createDataFrame([("en", 1)], "lang string, doc_id long")
+    with pytest.raises(ValueError, match="fraction"):
+        stratified_sample(docs, num=3, den=2)

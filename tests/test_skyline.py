@@ -109,8 +109,9 @@ def test_customer_skyline_members_are_undominated(spark, sf_check):
 
 
 def test_local_skyline_stage_is_lossless(spark):
-    """With and without the local mapInPandas prune (and across
-    different partitionings) the final skyline is identical."""
+    """Across different partitionings the final skyline (local
+    mapInPandas prune, then the pairwise stage) is the brute-force
+    one."""
     from mapreduce_implementation_grpc_spark.operators.skyline import (
         local_skyline,
     )
@@ -119,13 +120,9 @@ def test_local_skyline_stage_is_lossless(spark):
     df = spark.createDataFrame(pts, "x long, y long, z long")
     dims = ["x", "y", "z"]
     want = _brute_skyline(pts)
-    plain = {(r.x, r.y, r.z) for r in skyline(df, dims, local_prune=False).collect()}
-    pruned = {(r.x, r.y, r.z) for r in skyline(df, dims, local_prune=True).collect()}
-    repart = {
-        (r.x, r.y, r.z)
-        for r in skyline(df.repartition(7), dims, local_prune=True).collect()
-    }
-    assert plain == pruned == repart == want
+    pruned = {(r.x, r.y, r.z) for r in skyline(df, dims).collect()}
+    repart = {(r.x, r.y, r.z) for r in skyline(df.repartition(7), dims).collect()}
+    assert pruned == repart == want
     # the local stage output is a superset of the skyline
     local = {(r.x, r.y, r.z) for r in local_skyline(df, dims).collect()}
     assert want <= local

@@ -98,8 +98,6 @@ def bloom_join_ladder(
     keyset.count()
     bitmap = bloom_bitmap(keyset, "skey").persist()
     bitmap.count()
-    bitmap_fast = bloom_bitmap(keyset, "skey", fast=True).persist()
-    bitmap_fast.count()
     conf = spark.conf
     saved = conf.get("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -118,11 +116,8 @@ def bloom_join_ladder(
             naive = fact.hint("merge").join(keyset, "skey")
             pruned = bloom_prune(fact, F.col("skey"), bitmap)
             bloomed = pruned.hint("merge").join(keyset, "skey")
-            pruned_fast = bloom_prune(fact, F.col("skey"), bitmap_fast, fast=True)
-            bloomed_fast = pruned_fast.hint("merge").join(keyset, "skey")
             n_match = naive.count()
             assert bloomed.count() == n_match, "bloom path changed results"
-            assert bloomed_fast.count() == n_match, "fast bloom changed results"
             survivors = pruned.count()
 
             def timed(df) -> float:
@@ -131,7 +126,7 @@ def bloom_join_ladder(
                 return round(time.perf_counter() - t0, 2)
 
             timed(naive)  # warm both shapes before the measured runs
-            timed(bloomed_fast)
+            timed(bloomed)
             out.append(
                 {
                     "fact_rows": n,
@@ -139,7 +134,6 @@ def bloom_join_ladder(
                     "bloom_survivors": survivors,
                     "naive_join_s": timed(naive),
                     "bloom_md5_join_s": timed(bloomed),
-                    "bloom_fast_join_s": timed(bloomed_fast),
                 }
             )
             fact.unpersist()

@@ -88,10 +88,6 @@ def main() -> None:
             grain = facts.select("g", "v").distinct().count()
             t_trim, _ = timed(trimmed_mean(facts, "g", "v"))
             t_wmed, _ = timed(weighted_median(facts, "g", "v", "w"))
-            t_trim_s, _ = timed(trimmed_mean(facts, "g", "v", scalable=True))
-            t_wmed_s, _ = timed(
-                weighted_median(facts, "g", "v", "w", scalable=True)
-            )
             row = {
                 "regime": regime,
                 "n_rows": n_rows,
@@ -99,8 +95,6 @@ def main() -> None:
                 "grain_ratio": round(grain / n_rows, 4),
                 "trimmed_mean_sec": round(t_trim, 2),
                 "weighted_median_sec": round(t_wmed, 2),
-                "trimmed_mean_scalable_sec": round(t_trim_s, 2),
-                "weighted_median_scalable_sec": round(t_wmed_s, 2),
             }
             rows.append(row)
             print(json.dumps(row), flush=True)
