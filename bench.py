@@ -32,7 +32,7 @@ tiered into FRESH JVM SUBPROCESSES:
               baselines, one JVM (split if it outgrows a batch).
 
 The per-tier accumulation-vs-fresh A/B that motivated this layout is
-measured in tools/bench_ab_probe.py and recorded in SCALING.md.
+recorded in SCALING.md ("Round-8: bench accumulation A/B").
 """
 
 from __future__ import annotations
@@ -204,10 +204,6 @@ def worker(spec_path: str) -> None:
     t0 = time.perf_counter()
     _run(registry.QUERIES["wordcount"](spark, spec["sf_dir"]))
     cal_warmup = time.perf_counter() - t0
-    # optional untimed preload (tools/bench_ab_probe.py uses it to
-    # reproduce the accumulated-JVM condition deliberately)
-    for name in spec.get("preload", []):
-        _run(registry.QUERIES[name](spark, spec["sf_dir"]))
 
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}

@@ -14,7 +14,7 @@ where the whole codec was tractable).
   presentation width/height (16.16 fixed point), mdhd media
   timescale/duration/language, hdlr handler (vide/soun/...), stsd
   sample-entry fourcc (codec), stsz sample count + total sample
-  bytes, stts sample-delta sum. Unknown/vendor boxes are skipped by
+  bytes. Unknown/vendor boxes are skipped by
   size (the format's own extensibility rule); malformed structure
   (box overruns its parent, truncated header, missing moov) raises
   ValueError -- loud beats silently-wrong metadata, same contract
@@ -145,21 +145,6 @@ def _parse_stsz(buf: bytes, s: int, e: int) -> tuple[int, int]:
     _require(p + 8 + 4 * count <= e, "stsz table")
     sizes = struct.unpack(f">{count}I", buf[p + 8 : p + 8 + 4 * count])
     return count, sum(sizes)
-
-
-def _parse_stts_total(buf: bytes, s: int, e: int) -> int:
-    """Sum of sample deltas (media-timescale units)."""
-    _, p = _fullbox(buf, s)
-    _require(p + 4 <= e, "stts")
-    (n_entries,) = struct.unpack(">I", buf[p : p + 4])
-    _require(p + 4 + 8 * n_entries <= e, "stts table")
-    total = 0
-    for i in range(n_entries):
-        cnt, delta = struct.unpack(
-            ">II", buf[p + 4 + 8 * i : p + 12 + 8 * i]
-        )
-        total += cnt * delta
-    return total
 
 
 def _parse_trak(buf: bytes, s: int, e: int) -> dict:

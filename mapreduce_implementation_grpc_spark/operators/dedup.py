@@ -224,13 +224,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def shingle_sets(docs: DataFrame, text_col: str = "text", k: int = DEFAULT_SHINGLE_K) -> DataFrame:
-    """DataFrame[doc_id, shset: array<string>] of distinct k-shingles."""
-    return shingle_rows(docs, text_col, k).groupBy("doc_id").agg(
-        F.collect_set("sh").alias("shset")
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     text_col: str = "text",

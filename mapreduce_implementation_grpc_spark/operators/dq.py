@@ -56,9 +56,7 @@ def _row_local(df: DataFrame, checks: dict[str, F.Column]) -> DataFrame:
     aggs = []
     for name, pred in checks.items():
         aggs.append(F.count(F.lit(1)).alias(f"{name}__checked"))
-        aggs.append(
-            F.sum(F.when(pred, 1).otherwise(0)).alias(f"{name}__viol")
-        )
+        aggs.append(_sum0(F.when(pred, 1).otherwise(0)).alias(f"{name}__viol"))
     return _stack_checks(df.agg(*aggs), list(checks))
 
 
@@ -88,9 +86,9 @@ def dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key matches nothing on either side). That removes two of the
     three order-keyed lineitem/orders shuffles and two scans.
 
-    Measured and REJECTED (tools/dq_variants_probe.py, interleaved
-    same-JVM A/B at sf0.1): the "one scan per table" maximal form --
-    all lineitem checks folded into the groupBy pass, uniqueness
+    Measured and REJECTED (interleaved same-JVM A/B at sf0.1,
+    OPTIMIZATION_r11.md section 2): the "one scan per table" maximal
+    form -- all lineitem checks folded into the groupBy pass, uniqueness
     count_distincts merged into the row-local aggregates, pinned
     intermediates. It planned at 4 scans total but measured 3.5-3.8 s
     vs 2.1-2.6 s for this shape (and 2.3-2.8 s for the r10 shape):

@@ -225,8 +225,8 @@ def kcore(
     the plan never nests; non-convergence within `max_rounds` raises
     LOUDLY rather than returning a half-peeled graph.
     `stats`, when given, receives {"rounds": N, "edges_in": E0,
-    "edges_out": E1} -- the peel-depth instrumentation the scaling
-    probe records (tools/graph_probe.py)."""
+    "edges_out": E1} -- the peel-depth instrumentation behind the
+    SCALING.md "Round-6: iterative-graph ladder" numbers."""
     cur = materialize_eager(undirected_edges)
     n_edges = cur.count()
     if stats is not None:

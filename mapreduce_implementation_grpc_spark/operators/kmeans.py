@@ -158,9 +158,3 @@ def kmeans_cells(
     return _assign(emb, cent_rows, vec_col).select(
         "vec_id", "cell", F.round("obj", 6).alias("obj")
     )
-
-
-def kmeans_inertia(assigned_with_vec: DataFrame) -> float:
-    """Sum of assignment objectives -- monotone proxy for inertia
-    (differs by the constant sum ||v||^2)."""
-    return assigned_with_vec.agg(F.sum("obj")).collect()[0][0]

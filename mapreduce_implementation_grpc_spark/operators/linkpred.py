@@ -152,7 +152,8 @@ def cosupply_link_prediction(
     (graph_motifs.cosupply_edges): which supplier pairs are closest
     to co-supplying without doing so yet. `max_degree` caps wedge
     CENTERS (the 100 TB knob -- one 8000-degree hub alone is 32M of
-    40M wedges in tools/linkpred_probe.py's ladder); None is the
+    40M wedges in the SCALING.md "Round-6: link-prediction wedge
+    fan-out" ladder); None is the
     exact oracle-of-record form."""
     return link_prediction(
         cosupply_edges(spark, sf_dir),

@@ -94,10 +94,10 @@ def bucketize_by_key(
         # GROUP-SCOPED variant: per-group value ranges, so every
         # group gets its own 1024-bucket ladder and the downstream
         # windows partition by (group, _bkt) -- no per-group sort of
-        # a fact-sized grain anywhere (the robust_probe-measured
-        # weighted-median wall). The stats table is group-sized; the
-        # join back is a plain equi-join (AQE broadcasts it when the
-        # group count is small).
+        # a fact-sized grain anywhere (the weighted-median wall in
+        # SCALING.md's "robust-aggregate ladder"). The stats table is
+        # group-sized; the join back is a plain equi-join (AQE
+        # broadcasts it when the group count is small).
         stats = base.groupBy(*group_cols).agg(
             F.min("_ak").alias("_lo"), F.max("_ak").alias("_hi")
         )

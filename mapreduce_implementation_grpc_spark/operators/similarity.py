@@ -813,7 +813,7 @@ def mutual_nearest_pairs(pairs: DataFrame, pin: bool = True) -> DataFrame:
     so `best` stays unpinned.
 
     r11 `pin` parameter (VERDICT r10 #4): interleaved same-JVM A/B
-    (tools/mutual_nn_ab_probe.py, sf0.1, two rounds) measured the
+    (sf0.1, two rounds; OPTIMIZATION_r11.md section 5) measured the
     pin a clear win on the exact path (1.75-1.98 s vs 2.76-2.97 s
     unpinned) but EXACTLY NEUTRAL on the LSH path (2.15/2.40 vs
     2.15/2.21) -- there, runtime exchange reuse already dedups the

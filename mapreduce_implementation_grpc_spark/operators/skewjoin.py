@@ -25,7 +25,7 @@ F.rand()): Spark may recompute a task after failure, and a
 nondeterministic salt would route the same row differently across
 attempts, silently dropping or duplicating join matches.
 
-Measured evidence (tools/skew_probe.py, numbers in SCALING.md):
+Measured evidence (SCALING.md, "Round-5: skewed-JOIN remedies"):
 on a 50%-hot-key fact table the salted join removes the straggler
 task; AQE's skew split fixes the same plan only once its size
 thresholds trigger.

@@ -105,8 +105,8 @@ def skyline(
 
     The local stage is what makes the final quadratic check safe at
     scale: grid pruning leaves the cells ALONG the frontier
-    (~2n/B of the input in 2-D -- measured in
-    tools/skyline_probe.py), which still squares to an infeasible
+    (~2n/B of the input in 2-D -- measured in the SCALING.md
+    "skyline pruning ladder"), which still squares to an infeasible
     candidate join at 10^7+ points. A partition-local skyline
     (the divide step of Borzsonyi's partitioned skyline) cuts those
     survivors to per-partition frontiers, and is sound by
@@ -168,8 +168,8 @@ def grid_survivors(
 ) -> DataFrame:
     """The grid-prune stage alone: every point NOT in a fully
     dominated cell -- a provably-sound superset of the skyline whose
-    size is the operator's cost driver (tools/skyline_probe.py
-    measures it against the final skyline size)."""
+    size is the operator's cost driver (the SCALING.md "skyline
+    pruning ladder" measures it against the final skyline size)."""
     if len(dims) < 2:
         raise ValueError("skyline needs >= 2 dimensions")
     stats = df.agg(

@@ -940,7 +940,7 @@ def q_embedding_mutual_nn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin=False: measured neutral on the bucketed path (exchange
     # reuse already dedups the candidate scan) and avoids pinning
     # corpus-scale candidate blocks at 100 TB -- see
-    # mutual_nearest_pairs docstring / tools/mutual_nn_ab_probe.py
+    # mutual_nearest_pairs docstring / OPTIMIZATION_r11.md section 5
     return mutual_nearest_pairs(pairs, pin=False)
 
 
@@ -1130,13 +1130,13 @@ def q_attribution_markov_removal(
     # ONE (removed, node)-keyed value iteration instead of the old
     # one-plan-per-channel Python loop (round 8, VERDICT r7 #5): the
     # removed channel is a COLUMN, so the 8 unrolled rounds exist
-    # once in the plan regardless of |channels|. tools/markov_probe.py
-    # measured the loop shape superlinear in channels (7.5 s at C=4,
-    # 91 s at C=50) vs the keyed shape flat (5.6 / 9.1 / 22.6 s at
-    # C=4/50/200) with 9dp-identical results; per-step arithmetic is
-    # the same 12dp order-independent decimal chain, so the oracle
-    # hash is unchanged. State stays model-grain: |channels| x
-    # |states| rows.
+    # once in the plan regardless of |channels|. SCALING.md "Round-8:
+    # Markov removal-effect" measured the loop shape superlinear in
+    # channels (7.5 s at C=4, 91 s at C=50) vs the keyed shape flat
+    # (5.6 / 9.1 / 22.6 s at C=4/50/200) with 9dp-identical results;
+    # per-step arithmetic is the same 12dp order-independent decimal
+    # chain, so the oracle hash is unchanged. State stays model-grain:
+    # |channels| x |states| rows.
     ch_df = spark.createDataFrame([(c,) for c in channels], "removed string")
     trx = tr.crossJoin(F.broadcast(ch_df)).filter(
         F.col("_t2") != F.col("removed")

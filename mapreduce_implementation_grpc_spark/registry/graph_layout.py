@@ -613,10 +613,10 @@ def q_cosupply_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataF
     """The 100 TB wiring of link prediction (VERDICT r6 #5): wedge
     CENTERS with degree > 256 are dropped before the self-join, so
     per-center fan-out is bounded by C(256, 2) regardless of hub size
-    -- tools/linkpred_probe.py measured one 8000-degree hub producing
-    32M of 40M wedges (and an OOM at 4M edges) in the exact form, and
-    11x speedup from a cap at 1M edges. Cap choice: the sf0.1
-    co-supply graph's degree floor is 134 (min/median/max =
+    -- SCALING.md's link-prediction ladder measured one 8000-degree
+    hub producing 32M of 40M wedges (and an OOM at 4M edges) in the
+    exact form, and 11x speedup from a cap at 1M edges. Cap choice: the
+    sf0.1 co-supply graph's degree floor is 134 (min/median/max =
     134/296/559), so the r6-suggested 64 empties the benched result;
     256 keeps the sub-median half of centers while still bounding a
     100TB hub to 32k wedges. The cap is embedded in the oracle's

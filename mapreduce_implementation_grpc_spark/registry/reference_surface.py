@@ -107,7 +107,8 @@ def q_doc_idf_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     each hot word over 16 salt partitions and replicates the vocab
     side 16x. The oracle is the NAIVE SQL join, so the driver's hash
     match proves salting changes partitioning only, never results.
-    Measured straggler evidence: tools/skew_probe.py -> SCALING.md."""
+    Measured straggler evidence: SCALING.md, "Round-5: skewed-JOIN
+    remedies"."""
     from ..operators.skewjoin import doc_idf_sum
 
     return doc_idf_sum(load_table(spark, sf_dir, "documents"))

@@ -24,10 +24,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     writer.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
-
-
 def write_word_counts_text(df: DataFrame, path: str) -> None:
     """Reference-format sink: lines of "<word> <count>"
     (greeter_server.cc:115-121). Distributed write -- one part file

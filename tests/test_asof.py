@@ -4,13 +4,56 @@ parity for the feature-attach query."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import Row, Window
+from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark import registry
 from mapreduce_implementation_grpc_spark.operators.asof import asof_join
 from tests.oracle_utils import assert_matches_oracle
+
+
+# Synthetic event stream for the nearest-asof differential below.
+N_USERS = 1_000
+TOL_US = 2 * 3600 * 1_000_000
+SPAN_S = 30 * 86400
+
+
+def synth_events(spark, n: int):
+    """n events over N_USERS users, pseudo-random timestamps across a
+    30-day window (xxhash-scattered, so per-user streams interleave),
+    2-decimal values. No driver data, no files."""
+    # user via hash, NOT id % N_USERS: the test splits event types by
+    # id % 5, and a modular user assignment would hand purchases and
+    # clicks DISJOINT user sets (id%5==0 -> user multiple of 5...) --
+    # every join silently empty
+    return (
+        spark.range(n)
+        .select(
+            F.col("id").alias("event_id"),
+            F.pmod(F.xxhash64("id", F.lit(7)), F.lit(N_USERS)).alias("user_id"),
+            F.timestamp_micros(
+                F.lit(1704067200000000)
+                + F.pmod(F.xxhash64("id"), F.lit(SPAN_S)) * 1_000_000
+            ).alias("ts"),
+            (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(2000)).cast("double") / 100.0
+             ).alias("value"),
+        )
+        .repartition(int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)))
+    )
+
+
+def nearest_naive(purchases, clicks):
+    pairs = purchases.join(clicks, "user_id").filter(
+        F.abs(F.col("cus") - F.col("pus")) <= TOL_US
+    )
+    w = Window.partitionBy("purchase_id").orderBy(
+        F.abs(F.col("cus") - F.col("pus")).asc(),
+        (F.col("cus") - F.col("pus")).asc(),
+    )
+    return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
 
 
 def _ts(h, m=0):
@@ -145,12 +188,11 @@ def test_asof_nearest_matches_naive_pair_join(spark):
     """Differential: on 20k synthetic events (hash-scattered users and
     timestamps), the union+window nearest join returns EXACTLY the
     naive pair-join argmin pairs, tie-break included."""
-    import tools.temporal_probe as tp
     from pyspark.sql import functions as F
 
     from mapreduce_implementation_grpc_spark.operators.asof import asof_join_nearest
 
-    ev = tp.synth_events(spark, 20_000).localCheckpoint()
+    ev = synth_events(spark, 20_000).localCheckpoint()
     purchases = ev.filter(F.col("event_id") % 5 == 0).select(
         "user_id", "ts", F.col("event_id").alias("purchase_id")
     )
@@ -161,7 +203,7 @@ def test_asof_nearest_matches_naive_pair_join(spark):
     )
     op = asof_join_nearest(
         purchases, clicks, by="user_id", value_cols=["click_id"],
-        tolerance_us=tp.TOL_US,
+        tolerance_us=TOL_US,
     )
     got = {
         (r.purchase_id, r.click_id)
@@ -179,7 +221,7 @@ def test_asof_nearest_matches_naive_pair_join(spark):
     )
     want = {
         (r.purchase_id, r.click_id)
-        for r in tp.nearest_naive(p2, c2).select("purchase_id", "click_id").collect()
+        for r in nearest_naive(p2, c2).select("purchase_id", "click_id").collect()
     }
     assert got and got == want
 

@@ -111,7 +111,8 @@ def test_dq_audit_fires_on_known_defects(spark, sf_smoke):
 
 def test_dq_audit_order_grain_checks_report_zero_on_empty_tables(spark, sf_smoke, tmp_path):
     """Empty orders AND empty lineitem: the order-grain full-outer join
-    has no rows, and its ungrouped sums must report 0, not NULL."""
+    and the row-local scans see no rows, and their ungrouped sums must
+    report 0, not NULL (the oracle's count(*) FILTER gives 0)."""
     import os
 
     sf_dir = tmp_path / "sf_empty"
@@ -123,7 +124,19 @@ def test_dq_audit_order_grain_checks_report_zero_on_empty_tables(spark, sf_smoke
     rows = {
         r.check_name: r for r in registry.QUERIES["dq_audit"](spark, str(sf_dir)).collect()
     }
-    for check in ("lineitem_fk_orders", "orders_have_lineitems", "orders_totalprice_reconciles"):
+    empty_table_checks = sorted(c for c in rows if c.startswith(("lineitem_", "orders_")))
+    for check in (
+        "lineitem_fk_orders",
+        "orders_have_lineitems",
+        "orders_totalprice_reconciles",
+        "lineitem_qty_in_1_50",
+        "lineitem_discount_in_0_01",
+        "lineitem_returnflag_domain",
+        "lineitem_pk_nonnull",
+        "orders_totalprice_positive",
+    ):
+        assert check in empty_table_checks, check
+    for check in empty_table_checks:
         assert (rows[check].n_checked, rows[check].n_violations) == (0, 0), check
 
 

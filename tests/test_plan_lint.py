@@ -194,6 +194,12 @@ def test_ivfpq_serve_broadcasts_tables(spark, sf_check):
     for name in ("ann_ivfpq", "ann_ivfpq_residual", "pq_search"):
         plan = _plan(spark, sf_check, name)
         assert "BroadcastHashJoin" in plan, f"{name}: lookup join not broadcast"
+        # the coarse cell rides through the encode; no join back to
+        # the corpus's own cell assignment by vec_id (r9 had one per
+        # side on the residual path)
+        assert not re.search(r"Join \[vec_id#\d+L?\], \[vec_id#", plan), (
+            f"{name}: codes rejoined to their cells by vec_id"
+        )
         assert "CartesianProduct" not in plan, name
         n_hash_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
         assert n_hash_exchanges <= 3, (

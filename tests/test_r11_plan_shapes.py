@@ -1,7 +1,7 @@
 """Round-11 optimization shape pins (mirror of test_r10_plan_shapes):
 each test fails loudly if a pathology removed this round creeps back.
-Evidence for the shapes: plans/r11/*_{before,after}.txt and the
-interleaved A/Bs in OPTIMIZATION_r11.md."""
+Each docstring names the old shape it rejects; the measurements behind
+the rewrites are the interleaved A/Bs in OPTIMIZATION_r11.md."""
 
 from __future__ import annotations
 
@@ -21,18 +21,32 @@ def _join_nodes(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) [A-Za-z]*Join", plan, re.M))
 
 
-def test_pagerank_iterates_on_long_keys(spark, sf_smoke):
-    """The label strings are rebuilt ONCE at the end (shiftright on
-    the final |V|-row projection); the edge build and iterations must
-    not manufacture 'c<id>'/'s<id>' strings below the shuffles."""
-    plan = _plan(spark, sf_smoke, "purchase_pagerank")
+def _assert_long_node_keys(plan: str, max_concat: int) -> None:
     assert "shiftright" in plan, (
         "pagerank label rebuild gone -- node keys are presentation "
         "strings again, every edge-grain shuffle pays UTF8 keys"
     )
-    # the single concat belongs to the final relabel projection; the
-    # r10 shape carried it inside the edge build below the distinct
-    assert plan.count("concat(") <= 2, plan.count("concat(")
+    # the r10 shape broadcast string-keyed degree/rank tables into
+    # every iteration (3 in purchase_pagerank, 6 in the PPR query)
+    assert "HashedRelationBroadcastMode(List(input[0, string" not in plan
+    # the concats belong to the final relabel projection; the r10
+    # shape carried them inside the edge build below the distinct
+    assert plan.count("concat(") <= max_concat, plan.count("concat(")
+
+
+def test_pagerank_iterates_on_long_keys(spark, sf_smoke):
+    """The label strings are rebuilt ONCE at the end (shiftright on
+    the final |V|-row projection); the edge build and iterations must
+    not manufacture 'c<id>'/'s<id>' strings below the shuffles."""
+    _assert_long_node_keys(_plan(spark, sf_smoke, "purchase_pagerank"), 2)
+
+
+def test_personalized_pagerank_iterates_on_long_keys(spark, sf_smoke):
+    """segment_affinity_suppliers runs personalized PageRank on the
+    same long keys (measured 3 concats, all in the relabel)."""
+    _assert_long_node_keys(
+        _plan(spark, sf_smoke, "segment_affinity_suppliers"), 6
+    )
 
 
 def test_dq_audit_order_trio_is_one_join(spark, sf_smoke):
@@ -65,3 +79,12 @@ def test_cms_probe_is_join_free(spark, sf_smoke):
     assert "BroadcastHashJoin" not in plan, (
         "per-sketch hash joins back on the token stream"
     )
+
+
+def test_mutual_nn_lsh_candidates_are_not_pinned(spark, sf_smoke):
+    """On the LSH path the candidate pin measured neutral (runtime
+    exchange reuse already dedups the bucketed scan), so the query
+    passes pin=False and holds no corpus-scale candidate blocks; the
+    exact path keeps its pin (test_r10_plan_shapes)."""
+    plan = _plan(spark, sf_smoke, "embedding_mutual_nn_lsh")
+    assert "ExistingRDD" not in plan, "LSH mutual-NN candidates pinned again"

@@ -1,12 +1,15 @@
 """The registry package exports only its public surface (QUERIES,
 ORACLES and the bench tier lists); every other name is imported from
-the module that defines it. These checks need no Spark session."""
+the module that defines it. Code and the two reference documents name
+only scripts, ledgers and plan directories that exist. These checks
+need no Spark session."""
 
 from __future__ import annotations
 
 import ast
 import importlib
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -18,14 +21,14 @@ PKG = "mapreduce_implementation_grpc_spark"
 CALLERS = ["tests", "tools", "bench.py", "perfbench", "__spark_entry__.py"]
 
 
-def _caller_files():
-    for entry in CALLERS:
+def _caller_files(entries=CALLERS, suffixes=(".py",)):
+    for entry in entries:
         path = os.path.join(REPO, entry)
         if os.path.isfile(path):
             yield path
             continue
         for root, _, names in os.walk(path):
-            yield from (os.path.join(root, n) for n in sorted(names) if n.endswith(".py"))
+            yield from (os.path.join(root, n) for n in sorted(names) if n.endswith(suffixes))
 
 
 def _registry_names(path):
@@ -125,3 +128,47 @@ def test_built_package_includes_registry(tmp_path):
     ).stdout.split()
     assert out[0].startswith(str(lib))
     assert int(out[1]) > 0
+
+
+# Repo-relative paths to the recorded-evidence areas: a script or JSON
+# ledger under tools/, a plan-dump round directory, or an import of a
+# tools module.
+_PATH_REF = re.compile(r"\b(tools/\w+\.(?:py|json)|plans/r\d+)\b")
+_TOOLS_IMPORT = re.compile(r"^\s*(?:from|import)\s+(tools\.\w+)", re.M)
+
+
+def _dangling_paths(text: str) -> list[str]:
+    refs = set(_PATH_REF.findall(text))
+    refs |= {m.replace(".", "/") + ".py" for m in _TOOLS_IMPORT.findall(text)}
+    return sorted(r for r in refs if not os.path.exists(os.path.join(REPO, r)))
+
+
+def test_cited_tools_and_plan_paths_exist():
+    """A docstring or comment that cites a deleted probe script or plan
+    dump sends the reader to nothing; an import of one fails only when
+    that one test runs."""
+    entries = [PKG, *CALLERS, "README.md", "PARITY.md"]
+    dangling = [
+        f"{os.path.relpath(path, REPO)}: {ref}"
+        for path in _caller_files(entries, (".py", ".md"))
+        for ref in _dangling_paths(open(path).read())
+    ]
+    assert dangling == []
+
+
+def test_dangling_path_detector_catches_planted_paths():
+    # built by concatenation so this file does not cite them itself
+    missing_script = "tools/" + "no_such_probe.py"
+    missing_ledger = "tools/" + "no_such_ledger.json"
+    missing_plans = "plans/" + "r99"
+    missing_module = "tools." + "no_such_module"
+    text = (
+        f"see {missing_script} and {missing_ledger}; dumps in "
+        f"{missing_plans}/q_after.txt\n"
+        f"    import {missing_module} as m\n"
+        "numbers from tools/check_correctness.py and tools/scale_probe.json\n"
+        "from tools.scale_probe_data import x\n"
+    )
+    assert _dangling_paths(text) == sorted(
+        [missing_ledger, missing_script, "tools/" + "no_such_module.py", missing_plans]
+    )
