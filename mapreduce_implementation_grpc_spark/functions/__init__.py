@@ -6,7 +6,7 @@ from .text_stats import (
     rolling_hash_col,
     text_stats_cols,
 )
-from .vectors import cosine_col, dot_col, l2_norm_col
+from .vectors import dot_col, l2_norm_col
 
 __all__ = [
     "bpe_like_token_count_col",
@@ -15,7 +15,6 @@ __all__ = [
     "quality_score_col",
     "rolling_hash_col",
     "text_stats_cols",
-    "cosine_col",
     "dot_col",
     "l2_norm_col",
 ]

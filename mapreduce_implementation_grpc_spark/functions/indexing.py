@@ -32,26 +32,26 @@ from pyspark.sql import functions as F
 from ..operators.normalize import normalized_col
 from ..operators.tokenize import tokens_col
 
+TEXT_COL = "text"
+GROUP_COL = "lang"
 
-def _doc_tokens(docs: DataFrame, text_col: str = "text", extra: tuple[str, ...] = ()) -> DataFrame:
+
+def _doc_tokens(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
     """DataFrame[doc_id, *extra, tok]: one row per token occurrence,
     tokenization identical to the word-count pipeline (O2+O5)."""
     return docs.select(
         "doc_id",
         *extra,
-        F.explode(tokens_col(normalized_col(text_col))).alias("tok"),
+        F.explode(tokens_col(normalized_col(TEXT_COL))).alias("tok"),
     )
 
 
 def inverted_index(
     docs: DataFrame,
-    text_col: str = "text",
-    k: int = 3,
-    min_df: int = 2,
     max_df: int = 20,
 ) -> DataFrame:
     """Phrase (k-token shingle) inverted index with df bounds: for
-    each phrase appearing in [min_df, max_df] distinct docs, the
+    each phrase appearing in [2, max_df] distinct docs, the
     document frequency and the sorted posting list (comma-joined
     string, so the gate can hash it). The same index shape that backs
     contamination lookup and phrase search over a training corpus.
@@ -65,17 +65,16 @@ def inverted_index(
     exceeds max_df entries."""
     from ..operators.dedup import shingle_rows_flat
 
-    pairs = shingle_rows_flat(docs, text_col, k).distinct()
+    pairs = shingle_rows_flat(docs).distinct()
     agg = pairs.groupBy(F.col("sh").alias("phrase")).agg(
         F.count("*").alias("df"),
         F.concat_ws(",", F.sort_array(F.collect_list("doc_id"))).alias("postings"),
     )
-    return agg.filter((F.col("df") >= min_df) & (F.col("df") <= max_df))
+    return agg.filter((F.col("df") >= 2) & (F.col("df") <= max_df))
 
 
 def bigram_pmi(
     docs: DataFrame,
-    text_col: str = "text",
     min_count: int = 5,
 ) -> DataFrame:
     """Pointwise mutual information for adjacent-token bigrams with
@@ -92,9 +91,7 @@ def bigram_pmi(
     are 1-row broadcasts. The min_count filter is applied to the
     bigram side BEFORE the joins, shrinking the join probe to the
     surviving collocations."""
-    toks = docs.select(
-        F.explode(F.array(tokens_col(normalized_col(text_col)))).alias("toks")
-    )
+    toks = docs.select(F.explode(F.array(tokens_col(normalized_col(TEXT_COL)))).alias("toks"))
     n_tok = F.size("toks")
     idx = F.when(n_tok >= 2, F.sequence(F.lit(1), n_tok - 1)).otherwise(
         F.array().cast("array<int>")
@@ -109,7 +106,7 @@ def bigram_pmi(
     ).select("g.w1", "g.w2")
 
     uni = (
-        docs.select(F.explode(tokens_col(normalized_col(text_col))).alias("w"))
+        docs.select(F.explode(tokens_col(normalized_col(TEXT_COL))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
@@ -125,9 +122,7 @@ def bigram_pmi(
     # from the per-doc token counts so it is exact even for 0/1-token docs.
     nb = (
         docs.select(
-            F.greatest(
-                F.size(tokens_col(normalized_col(text_col))) - 1, F.lit(0)
-            ).alias("nb")
+            F.greatest(F.size(tokens_col(normalized_col(TEXT_COL))) - 1, F.lit(0)).alias("nb")
         )
         .agg(F.sum("nb").cast("double").alias("n_big_total"))
     )
@@ -154,8 +149,6 @@ def bigram_pmi(
 
 def top_terms_per_group(
     docs: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
     """Top-k most frequent terms per group (per-language vocabulary
@@ -166,14 +159,12 @@ def top_terms_per_group(
     -- n_groups * vocab rows, not corpus rows, and never a single-
     partition global sort."""
     counts = (
-        _doc_tokens(docs, text_col, extra=(group_col,))
-        .groupBy(group_col, F.col("tok").alias("word"))
+        _doc_tokens(docs, extra=(GROUP_COL,))
+        .groupBy(GROUP_COL, F.col("tok").alias("word"))
         .agg(F.count("*").alias("cnt"))
     )
-    w = Window.partitionBy(group_col).orderBy(F.desc("cnt"), F.asc("word"))
+    w = Window.partitionBy(GROUP_COL).orderBy(F.desc("cnt"), F.asc("word"))
     return (
-        counts.select(
-            group_col, "word", "cnt", F.row_number().over(w).cast("long").alias("rn")
-        )
+        counts.select(GROUP_COL, "word", "cnt", F.row_number().over(w).cast("long").alias("rn"))
         .filter(F.col("rn") <= k)
     )

@@ -41,7 +41,7 @@ def _toks(text: Column | str) -> Column:
     return tokens_col(normalized_col(text))
 
 
-def with_token_array(docs, text_col: str = "text", out_col: str = "toks"):
+def with_token_array(docs):
     """Materialize the token array ONCE behind an explode(array(...))
     Generate barrier. Without it, CollapseProject inlines the whole
     tokenize pipeline (regex replace + split + filter) into every
@@ -49,9 +49,7 @@ def with_token_array(docs, text_col: str = "text", out_col: str = "toks"):
     5x, lang_id 6x (measured 1.5x wall on text_stats at 200k docs).
     Pass the materialized column into the *_cols functions via their
     `toks=` parameter."""
-    return docs.select(
-        "*", F.explode(F.array(tokens_col(normalized_col(text_col)))).alias(out_col)
-    )
+    return docs.select("*", F.explode(F.array(tokens_col(normalized_col("text")))).alias("toks"))
 
 
 def text_stats_cols(text: Column | str, toks: Column | None = None) -> list[Column]:

@@ -25,7 +25,7 @@ from ..operators.normalize import normalized_col
 from ..operators.tokenize import tokenize
 
 
-def tfidf_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def tfidf_scores(docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, word, tf, score] for every (doc, term).
 
     df(t) is a count()-over-Window(word) on the tf result rather than
@@ -35,9 +35,7 @@ def tfidf_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     is one scan and one fewer shuffle. The count-only window needs no
     ordering, so even a hot word's partition is a single streaming
     pass."""
-    words = tokenize(
-        docs.select("doc_id", normalized_col(text_col).alias("norm")), "norm", keep=["doc_id"]
-    )
+    words = tokenize(docs.select("doc_id", normalized_col("text").alias("norm")), keep=["doc_id"])
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     df_t = F.count("*").over(Window.partitionBy("word"))
@@ -47,12 +45,12 @@ def tfidf_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, text_col: str = "text", top_n: int = 3) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame) -> DataFrame:
     """Top-N terms per doc by tf-idf (score desc, word asc)."""
-    scored = tfidf_scores(docs, text_col)
+    scored = tfidf_scores(docs)
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("word"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
+        .filter(F.col("rn") <= 3)
         .select("doc_id", "word", "tf", "score", F.col("rn").cast("long").alias("rn"))
     )

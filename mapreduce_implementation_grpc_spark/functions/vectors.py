@@ -33,7 +33,3 @@ def l2_norm_col(a: Column | str) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
     )
-
-
-def cosine_col(a: Column | str, b: Column | str) -> Column:
-    return dot_col(a, b) / (l2_norm_col(a) * l2_norm_col(b))

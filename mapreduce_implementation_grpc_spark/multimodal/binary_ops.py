@@ -49,13 +49,13 @@ DECODED_FEATURE_SCHEMA = StructType(
 )
 
 
-def with_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_binary_payload(docs: DataFrame) -> DataFrame:
     """Attach an opaque binary payload + typed metadata struct.
 
     Here the payload is the UTF-8 bytes of the text (the container
     has no media files); for real corpora the column would come
     straight from parquet/lance as `binary`."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
         "doc_id",
         payload.alias("payload"),
@@ -235,9 +235,11 @@ def decode_features(payload_df: DataFrame, real_codec: bool = False) -> DataFram
     """Arrow-batched decode: binary payload -> fixed-width feature
     vector via mapInPandas (one Python crossing per ~10k-row batch).
 
-    real_codec=True is the integration point for an actual
-    image/audio library (PIL/torchaudio/...) -- not available in this
-    container, so it raises immediately rather than pretending."""
+    By default each payload goes through the stub decoder
+    (fake_decode_batch). real_codec=True decodes the actual PNG, JPEG,
+    GIF or WAV bytes with the pure-numpy codecs
+    (codecs.real_decode_features) into a feature vector of the same
+    shape, and raises ValueError on any other format."""
     if real_codec:
         from mapreduce_implementation_grpc_spark.multimodal.codecs import (
             real_decode_features,

@@ -143,7 +143,7 @@ def png_decode(payload: bytes) -> np.ndarray:
     return img[:, :, 0] if channels == 1 else img
 
 
-def png_encode(img: np.ndarray, compress_level: int = 6) -> bytes:
+def png_encode(img: np.ndarray) -> bytes:
     """uint8 array (h, w) or (h, w, {1,3,4}) -> PNG bytes (filter 0)."""
     arr = np.asarray(img, dtype=np.uint8)
     if arr.ndim == 2:
@@ -156,7 +156,7 @@ def png_encode(img: np.ndarray, compress_level: int = 6) -> bytes:
     # filter byte 0 prepended to each scanline
     scan = np.zeros((h, w * ch + 1), dtype=np.uint8)
     scan[:, 1:] = arr.reshape(h, w * ch)
-    idat = zlib.compress(scan.tobytes(), compress_level)
+    idat = zlib.compress(scan.tobytes(), 6)
 
     def chunk(ctype: bytes, data: bytes) -> bytes:
         return (
@@ -485,7 +485,7 @@ def _lzw_encode_literals(indices: np.ndarray, min_code_size: int) -> bytes:
     return bytes(out)
 
 
-def gif_encode(frames: list[np.ndarray], delay_cs: int = 4) -> bytes:
+def gif_encode(frames: list[np.ndarray]) -> bytes:
     """List of (h, w, 3) uint8 RGB frames -> animated GIF89a bytes.
 
     Builds one global palette from the union of colors (<= 256 or
@@ -513,7 +513,7 @@ def gif_encode(frames: list[np.ndarray], delay_cs: int = 4) -> bytes:
     out += table.tobytes()
     for f in range(len(frames)):
         # graphic control: disposal 1, no transparency
-        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0x04, delay_cs, 0) + b"\x00"
+        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0x04, 4, 0) + b"\x00"
         out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
         out.append(min_code_size)
         lzw = _lzw_encode_literals(indices[f], min_code_size)

@@ -285,8 +285,7 @@ def _stub_track(track_id: int, handler: bytes, codec: bytes, width: int,
 
 
 def mp4_write_stub(width: int = 64, height: int = 36, n_frames: int = 24,
-                   fps: int = 12, codec: bytes = b"avc1",
-                   with_audio: bool = False, version: int = 0,
+                   fps: int = 12, with_audio: bool = False, version: int = 0,
                    largesize_mdat: bool = False) -> bytes:
     """Deterministic minimal conformant MP4: real box layout, opaque
     deterministic mdat filler (NOT encoded video). version=1 emits
@@ -305,7 +304,7 @@ def mp4_write_stub(width: int = 64, height: int = 36, n_frames: int = 24,
                         0x40000000)
     mvhd += b"\x00" * 24 + struct.pack(">I", 99)  # predefined + next_track
 
-    tracks = _stub_track(1, b"vide", codec, width, height, n_frames,
+    tracks = _stub_track(1, b"vide", b"avc1", width, height, n_frames,
                          timescale, delta, 512, version)
     if with_audio:
         tracks += _stub_track(2, b"soun", b"mp4a", 0, 0, n_frames * 4,

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+LEFT_TS = "ts"
+
 
 def _micros(c: Column) -> Column:
     """Epoch microseconds for TIMESTAMP or TIMESTAMP_NTZ input: NTZ
@@ -75,7 +77,6 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     by: str,
-    left_ts: str = "ts",
     right_ts: str = "ts",
     value_cols: list[str] | None = None,
     tolerance_us: int | None = None,
@@ -103,7 +104,7 @@ def asof_join_nearest(
     value_cols = value_cols or [
         c for c in right.columns if c not in (by, right_ts)
     ]
-    left_payload = [c for c in left.columns if c not in (by, left_ts)]
+    left_payload = [c for c in left.columns if c not in (by, LEFT_TS)]
     _validate_asof_columns(
         left, right, left_payload, value_cols,
         reserved={"_t", "_tus", "_side", "_snap", "_rts", "asof_ts_us"},
@@ -115,8 +116,8 @@ def asof_join_nearest(
 
     l_side = left.select(
         F.col(by),
-        _micros(F.col(left_ts)).alias("_tus"),
-        F.col(left_ts).alias("_t"),
+        _micros(F.col(LEFT_TS)).alias("_tus"),
+        F.col(LEFT_TS).alias("_t"),
         F.lit(1).alias("_side"),
         *[F.col(c) for c in left_payload],
         F.lit(None).cast(snap_type).alias("_snap"),
@@ -124,7 +125,7 @@ def asof_join_nearest(
     r_side = right.select(
         F.col(by),
         _micros(F.col(right_ts)).alias("_tus"),
-        F.col(right_ts).cast(left.schema[left_ts].dataType).alias("_t"),
+        F.col(right_ts).cast(left.schema[LEFT_TS].dataType).alias("_t"),
         F.lit(0).alias("_side"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_payload],
         F.struct(
@@ -166,7 +167,7 @@ def asof_join_nearest(
     )
     return carried.select(
         by,
-        F.col("_t").alias(left_ts),
+        F.col("_t").alias(LEFT_TS),
         *left_payload,
         chosen["_rts"].alias("asof_ts_us"),
         *[chosen[c].alias(c) for c in value_cols],
@@ -177,17 +178,14 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     by: str,
-    left_ts: str = "ts",
     right_ts: str = "ts",
-    value_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Left as-of join. Returns every left row plus, for each name in
-    value_cols, the value from the latest right row whose right_ts <=
-    the left row's left_ts (same `by` key); NULL when no such row."""
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (by, right_ts)
-    ]
-    left_payload = [c for c in left.columns if c not in (by, left_ts)]
+    """Left as-of join. Returns every left row plus, for each right
+    column other than `by` and right_ts, the value from the latest right
+    row whose right_ts <= the left row's ts (same `by` key); NULL when
+    no such row."""
+    value_cols = [c for c in right.columns if c not in (by, right_ts)]
+    left_payload = [c for c in left.columns if c not in (by, LEFT_TS)]
     _validate_asof_columns(
         left, right, left_payload, value_cols,
         reserved={"_t", "_side", "_snap"},
@@ -198,7 +196,7 @@ def asof_join(
 
     l_side = left.select(
         F.col(by),
-        F.col(left_ts).alias("_t"),
+        F.col(LEFT_TS).alias("_t"),
         F.lit(1).alias("_side"),
         *[F.col(c) for c in left_payload],
         F.lit(None).cast(snap_type).alias("_snap"),
@@ -225,7 +223,7 @@ def asof_join(
     )
     return carried.filter(F.col("_side") == 1).select(
         by,
-        F.col("_t").alias(left_ts),
+        F.col("_t").alias(LEFT_TS),
         *left_payload,
         *[F.col(f"_snap.{c}").alias(c) for c in value_cols],
     )

@@ -33,16 +33,16 @@ from pyspark.sql import functions as F
 from ..materialize import materialize
 from ..sources.catalog import load_table
 
+MIN_ORDERS = 2
+
 
 def market_basket_pairs(
     spark: SparkSession,
     sf_dir: str,
-    min_pair_orders: int = 2,
-    top_n: int = 50,
 ) -> DataFrame:
     """Top part pairs by lift: [p1, p2, pair_n, support, confidence,
     lift], lift desc with (p1, p2) tie-break. `confidence` is
-    P(p2 in basket | p1 in basket); pairs below `min_pair_orders`
+    P(p2 in basket | p1 in basket); pairs below 2 orders
     co-occurrences are pruned before any metric join."""
     b = (
         load_table(spark, sf_dir, "lineitem")
@@ -60,7 +60,7 @@ def market_basket_pairs(
         .filter(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count("*").alias("pair_n"))
-        .filter(F.col("pair_n") >= min_pair_orders)
+        .filter(F.col("pair_n") >= 2)
     )
     out = (
         pairs.join(
@@ -83,15 +83,13 @@ def market_basket_pairs(
             ).alias("lift"),
         )
         .orderBy(F.desc("lift"), F.asc("p1"), F.asc("p2"))
-        .limit(top_n)
+        .limit(50)
     )
 
 
 def market_basket_triples(
     spark: SparkSession,
     sf_dir: str,
-    min_orders: int = 2,
-    top_n: int = 30,
 ) -> DataFrame:
     """A-priori level 3: top part TRIPLES by lift -- [p1, p2, p3,
     tri_n, support, confidence, lift] (p1 < p2 < p3), where
@@ -126,7 +124,7 @@ def market_basket_triples(
         .filter(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count("*").alias("pair_n"))
-        .filter(F.col("pair_n") >= min_orders)
+        .filter(F.col("pair_n") >= MIN_ORDERS)
     )
     # consumed by: per-order semi join, two sub-pair prunes, and the
     # confidence join
@@ -154,7 +152,7 @@ def market_basket_triples(
     tri = (
         ext.groupBy("p1", "p2", "p3")
         .agg(F.count("*").alias("tri_n"))
-        .filter(F.col("tri_n") >= min_orders)
+        .filter(F.col("tri_n") >= MIN_ORDERS)
     )
     out = (
         tri.join(fp.select("p1", "p2", "pair_n"), ["p1", "p2"])
@@ -185,15 +183,13 @@ def market_basket_triples(
             ).alias("lift"),
         )
         .orderBy(F.desc("lift"), F.asc("p1"), F.asc("p2"), F.asc("p3"))
-        .limit(top_n)
+        .limit(30)
     )
 
 
 def association_rules(
     spark: SparkSession,
     sf_dir: str,
-    min_pair_orders: int = 2,
-    top_n: int = 50,
 ) -> DataFrame:
     """Directed association rules from the pair stage: each surviving
     unordered pair emits BOTH directions a=>c with the full classical
@@ -220,7 +216,7 @@ def association_rules(
         .filter(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count("*").alias("pair_n"))
-        .filter(F.col("pair_n") >= min_pair_orders)
+        .filter(F.col("pair_n") >= 2)
     )
     directed = pairs.select(
         F.col("p1").alias("antecedent"),
@@ -270,5 +266,5 @@ def association_rules(
             conviction.alias("conviction"),
         )
         .orderBy(F.desc("lift"), F.asc("antecedent"), F.asc("consequent"))
-        .limit(top_n)
+        .limit(50)
     )

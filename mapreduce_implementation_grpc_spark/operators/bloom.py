@@ -109,16 +109,14 @@ def bloom_prune(fact: DataFrame, key, bitmap: DataFrame) -> DataFrame:
 def bloom_decontaminate_audit(
     train_docs: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
-    k: int = DECONTAM_NGRAM_K,
 ) -> DataFrame:
     """[bloom_hit, exact_hit, n_docs]: per training doc, does the
     Bloom probe flag it, does the exact n-gram match flag it --
     aggregated to the confusion matrix. (bloom=false, exact=true)
     cannot occur; (true, false) counts the false positives the exact
     re-check must clean up."""
-    train_sh = shingle_rows_flat(train_docs, text_col, k).distinct()
-    eval_sh = shingle_rows_flat(eval_docs, text_col, k).select("sh").distinct()
+    train_sh = shingle_rows_flat(train_docs, DECONTAM_NGRAM_K).distinct()
+    eval_sh = shingle_rows_flat(eval_docs, DECONTAM_NGRAM_K).select("sh").distinct()
     bitmap = bloom_bitmap(eval_sh)
 
     # probe each of the NUM_HASHES positions via its own broadcast

@@ -42,10 +42,10 @@ from ..sources.catalog import load_table
 SEP = "||"
 
 
-def word_freqs_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs_df(docs: DataFrame) -> DataFrame:
     """(word, count) over normalized whitespace tokens -- the single
     corpus scan; everything else in BPE training iterates on this."""
-    words = tokenize(docs.select(normalized_col(text_col).alias("norm")), "norm")
+    words = tokenize(docs.select(normalized_col("text").alias("norm")))
     return words.groupBy(F.col("word").alias("w")).agg(F.count("*").alias("c"))
 
 

@@ -33,7 +33,6 @@ DEFAULT_PACK_BUDGET = 256
 
 def doc_chunks(
     docs: DataFrame,
-    text_col: str = "text",
     chunk_size: int = DEFAULT_CHUNK_SIZE,
     stride: int = DEFAULT_STRIDE,
 ) -> DataFrame:
@@ -48,7 +47,7 @@ def doc_chunks(
     Generate as a value; per-chunk work is a slice of an in-memory
     array."""
     toks_df = docs.select(
-        "doc_id", tokens_col(normalized_col(text_col)).alias("toks")
+        "doc_id", tokens_col(normalized_col("text")).alias("toks")
     ).filter(F.size("toks") > 0)
     starts = F.sequence(
         F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)), F.lit(stride)
@@ -67,9 +66,7 @@ def doc_chunks(
 
 def pack_sequences(
     docs: DataFrame,
-    text_col: str = "text",
     budget: int = DEFAULT_PACK_BUDGET,
-    shard_col: str = "source",
 ) -> DataFrame:
     """DataFrame[doc_id, source, n_tokens, bin_id, offset]:
     deterministic sequential packing. Within each shard (source),
@@ -83,8 +80,8 @@ def pack_sequences(
     across shards and never needs a global sort -- the scale-safe
     form (a corpus-global ordering would be a single-partition
     window)."""
-    n_tok = bpe_like_token_count_col(text_col)
-    base = docs.select("doc_id", F.col(shard_col).alias("source"), n_tok.alias("n_tokens"))
+    n_tok = bpe_like_token_count_col("text")
+    base = docs.select("doc_id", "source", n_tok.alias("n_tokens"))
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")

@@ -35,7 +35,7 @@ def _bucket(word, j: int):
     return F.shiftright(portable_hash60(word), CMS_W_LOG2 * j) % CMS_W
 
 
-def cms_screened_wordcount(tokens: DataFrame, denom: int = 500) -> DataFrame:
+def cms_screened_wordcount(tokens: DataFrame) -> DataFrame:
     """Two-phase sketch-screened exact heavy hitters over a raw token
     stream [word]: the pattern that replaces a full-vocabulary
     shuffle with (tiny sketch shuffle + candidate-only shuffle).
@@ -45,7 +45,7 @@ def cms_screened_wordcount(tokens: DataFrame, denom: int = 500) -> DataFrame:
     partial-reduces to <= 4096 rows per partition before the (tiny)
     shuffle. The frequency threshold derives from the sketch itself:
     row 0's counters sum to the exact token total N, so
-    T = N div `denom` costs no extra pass. Phase 2 re-scans tokens,
+    T = N div 500 costs no extra pass. Phase 2 re-scans tokens,
     probes the 4 broadcast 1024-row sketches map-side, and keeps only
     tokens whose estimate clears T: the ONLY word-keyed shuffle
     carries candidate occurrences (partial-agg'd), not the whole
@@ -81,10 +81,13 @@ def cms_screened_wordcount(tokens: DataFrame, denom: int = 500) -> DataFrame:
     # operators the whole token stream streamed through. The 4x1024
     # counters are ONE 4096-entry map; the probe is now a single
     # 1-row broadcast cross join and est is 4 map lookups. Lookup
-    # keys j*W + b are exactly the old per-row (j, bucket) pairs;
-    # both passes hash the identical token stream, so every probed
-    # bucket exists in the map and element_at never returns null --
-    # the same totality the old inner joins had.
+    # keys j*W + b are exactly the old per-row (j, bucket) pairs.
+    # Both passes must hash the identical token stream, so every
+    # probed bucket exists in the map -- the totality the old inner
+    # joins had. element_at returns NULL on a missing key and least()
+    # skips NULLs, which would silently underestimate; the probe
+    # raises instead, inside the same projection (no job, no
+    # exchange).
     cmap = counters.agg(
         F.map_from_entries(
             F.collect_list(
@@ -97,12 +100,22 @@ def cms_screened_wordcount(tokens: DataFrame, denom: int = 500) -> DataFrame:
     )
     thr = (
         counters.filter(F.col("j") == 0)
-        .agg(F.expr(f"sum(c) div {denom}").alias("thr"))
+        .agg(F.expr("sum(c) div 500").alias("thr"))
+    )
+    missing = F.raise_error(
+        F.concat(
+            F.lit("cms_screened_wordcount: probe token "),
+            F.col("word"),
+            F.lit(" hashes to a bucket the build scan never counted"),
+        )
     )
     est = F.least(
         *[
-            F.element_at(
-                F.col("_m"), F.lit(j).cast("long") * CMS_W + _bucket(F.col("word"), j)
+            F.coalesce(
+                F.element_at(
+                    F.col("_m"), F.lit(j).cast("long") * CMS_W + _bucket(F.col("word"), j)
+                ),
+                missing,
             )
             for j in range(CMS_D)
         ]
@@ -122,8 +135,8 @@ def cms_screened_wordcount(tokens: DataFrame, denom: int = 500) -> DataFrame:
     )
 
 
-def cms_heavy_hitters(wc: DataFrame, topn: int = 20) -> DataFrame:
-    """[word, true_cnt, est_cnt, overcount] for the `topn` most
+def cms_heavy_hitters(wc: DataFrame) -> DataFrame:
+    """[word, true_cnt, est_cnt, overcount] for the 20 most
     frequent words of a (word, cnt) table: the CMS estimate next to
     the truth, with the structurally non-negative overcount."""
     sketches = [
@@ -132,7 +145,7 @@ def cms_heavy_hitters(wc: DataFrame, topn: int = 20) -> DataFrame:
         )
         for j in range(CMS_D)
     ]
-    top = wc.orderBy(F.desc("cnt"), F.asc("word")).limit(topn)
+    top = wc.orderBy(F.desc("cnt"), F.asc("word")).limit(20)
     probed = top
     for j in range(CMS_D):
         probed = probed.withColumn(f"b{j}", _bucket(F.col("word"), j)).join(

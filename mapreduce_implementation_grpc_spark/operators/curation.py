@@ -56,11 +56,13 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
     ("phone", r"\b\d{3}[-.]\d{3}[-.]\d{4}\b", "<PHONE>"),
 )
 
+SPAN_NGRAM_K = 8
+GROUP_COL = "lang"
+
 
 def decontaminate(
     train_docs: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
     k: int = DECONTAM_NGRAM_K,
 ) -> DataFrame:
     """Benchmark decontamination: for each training doc, the number
@@ -76,8 +78,8 @@ def decontaminate(
     Exchange), so distinct-counting AFTER the join is the only
     corpus-side shuffle -- and it sees matched rows only, a vanishing
     fraction."""
-    train_sh = shingle_rows_flat(train_docs, text_col, k)
-    eval_sh = shingle_rows_flat(eval_docs, text_col, k).select("sh").distinct()
+    train_sh = shingle_rows_flat(train_docs, k)
+    eval_sh = shingle_rows_flat(eval_docs, k).select("sh").distinct()
     hits = train_sh.join(F.broadcast(eval_sh), "sh")
     return hits.groupBy("doc_id").agg(
         F.count_distinct("sh").alias("n_shared_ngrams")
@@ -87,8 +89,6 @@ def decontaminate(
 def eval_overlap_report(
     train_docs: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
-    k: int = DECONTAM_NGRAM_K,
 ) -> DataFrame:
     """The eval-side complement of `decontaminate`: for each EVAL doc,
     how much of it the training corpus has already seen — distinct
@@ -104,9 +104,9 @@ def eval_overlap_report(
     shingles reach the distinct (a vanishing fraction). The per-doc
     report then joins eval's own shingles against that tiny hit set
     by broadcast — the corpus never shuffles at all."""
-    ev_sh = shingle_rows_flat(eval_docs, text_col, k).distinct()
+    ev_sh = shingle_rows_flat(eval_docs, DECONTAM_NGRAM_K).distinct()
     ev_set = ev_sh.select("sh").distinct()
-    train_sh = shingle_rows_flat(train_docs, text_col, k)
+    train_sh = shingle_rows_flat(train_docs, DECONTAM_NGRAM_K)
     hit_set = (
         train_sh.join(F.broadcast(ev_set), "sh").select("sh").distinct()
         .withColumn("hit", F.lit(1).cast("long"))
@@ -153,7 +153,7 @@ def _longest_equal_run(arr):
     return F.aggregate(arr, init, merge, lambda acc: acc["best"])
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition metrics per document:
 
     - n_tokens
@@ -173,9 +173,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     parallel at scan speed. Replaced the previous 3-branch
     explode+window+join shape (3 corpus tokenizations, 4 shuffles);
     measured 1.24 s -> 0.83 s at sf0.1, identical oracle output."""
-    toks_df = docs.select(
-        "doc_id", tokens_col(normalized_col(text_col)).alias("toks")
-    )
+    toks_df = docs.select("doc_id", tokens_col(normalized_col("text")).alias("toks"))
     n = F.size("toks")
     # bigram array: zip the tokens with themselves shifted by one
     # (slice args evaluated once per row); < 2 tokens -> no bigrams
@@ -206,11 +204,11 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def pii_cols(text_col: str = "text"):
+def pii_cols():
     """(count_cols, redacted_col) column expressions for the PII
     pass -- shared by the batch operator and the streaming curation
     pipeline (same expressions, incremental execution)."""
-    cur = F.col(text_col)
+    cur = F.col("text")
     count_cols = []
     for name, pat, repl in PII_PATTERNS:
         count_cols.append(
@@ -222,7 +220,7 @@ def pii_cols(text_col: str = "text"):
     return count_cols, cur
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """PII redaction: replace emails / IPv4s / SSN-shaped / phone-
     shaped substrings with typed placeholder tokens, counting each.
 
@@ -230,7 +228,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     order, so an overlapping match is attributed to exactly one type
     in both engines. Pure column expressions -- one codegen'd
     projection, zero shuffles, linear scan at any scale."""
-    count_cols, redacted = pii_cols(text_col)
+    count_cols, redacted = pii_cols()
     return docs.select(
         "doc_id",
         *count_cols,
@@ -239,12 +237,7 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_budget_mixture(
-    docs: DataFrame,
-    budget_tokens: int = 3000,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def token_budget_mixture(docs: DataFrame) -> DataFrame:
     """Token-budget corpus composition: fill each group's TOKEN budget
     greedily with its highest-quality documents -- the primitive for
     assembling a pretraining mixture specified in tokens per language
@@ -262,33 +255,31 @@ def token_budget_mixture(
     hash shuffle on the group for the window; nothing global."""
     from ..functions.text_stats import quality_score_col, with_token_array
 
-    scored = with_token_array(docs, text_col=text_col).select(
+    scored = with_token_array(docs).select(
         "doc_id",
-        F.col(group_col),
+        F.col(GROUP_COL),
         F.size("toks").cast("long").alias("n_toks"),
-        quality_score_col(text_col, toks=F.col("toks")).alias("quality"),
+        quality_score_col("text", toks=F.col("toks")).alias("quality"),
     )
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy(GROUP_COL)
         .orderBy(F.desc("quality"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     kept = scored.withColumn(
         "cum_before", F.coalesce(F.sum("n_toks").over(w), F.lit(0))
-    ).filter(F.col("cum_before") < budget_tokens)
-    return kept.groupBy(group_col).agg(
+    ).filter(F.col("cum_before") < 3000)
+    return kept.groupBy(GROUP_COL).agg(
         F.count("*").alias("n_docs_kept"),
         F.sum("n_toks").alias("tokens_kept"),
         F.min("quality").alias("min_quality"),
     )
 
 
-def mixture_sample(
-    docs: DataFrame, group_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
+def mixture_sample(docs: DataFrame) -> DataFrame:
     """Mixture-balanced deterministic sampling: down-sample every
     group to (approximately) the size of the smallest group, so the
-    kept corpus is balanced across `group_col` (the data-mixing
+    kept corpus is balanced across `lang` (the data-mixing
     primitive for training-set composition).
 
     Membership is a pure function of content -- u = first 8 hex chars
@@ -297,38 +288,36 @@ def mixture_sample(
     mirrored by the DuckDB oracle. The per-group counts are a tiny
     aggregate joined back by broadcast; the corpus itself is filtered
     in place with no shuffle."""
-    counts = docs.groupBy(group_col).agg(F.count("*").alias("n_g"))
+    counts = docs.groupBy(GROUP_COL).agg(F.count("*").alias("n_g"))
     min_n = counts.agg(F.min("n_g").alias("min_n"))
     u = (
-        F.conv(F.substring(F.md5(normalized_col(text_col)), 1, 8), 16, 10).cast("long")
+        F.conv(F.substring(F.md5(normalized_col("text")), 1, 8), 16, 10).cast("long")
         / F.lit(4294967296.0)
     )
     keep = ["doc_id"] + [
-        c for c in dict.fromkeys((group_col, "lang", "source")) if c in docs.columns
+        c for c in (GROUP_COL, "source") if c in docs.columns
     ]
     return (
-        docs.join(F.broadcast(counts), group_col)
+        docs.join(F.broadcast(counts), GROUP_COL)
         .crossJoin(F.broadcast(min_n))
         .filter(u < F.col("min_n") / F.col("n_g"))
         .select(*keep)
     )
 
 
-def shard_manifest(
-    docs: DataFrame, n_shards: int = 8, text_col: str = "text"
-) -> DataFrame:
+def shard_manifest(docs: DataFrame) -> DataFrame:
     """Deterministic output-shard manifest: assign each doc to
-    shard = doc_id // ceil((max_id+1)/n_shards) and report per-shard
+    shard = doc_id // ceil((max_id+1)/8) and report per-shard
     doc/token totals and doc_id bounds -- the bookkeeping a sharded
     training-data export writes next to its files.
 
     Shard width derives from a 1-row max aggregate broadcast back, so
     assignment is a per-row expression; the only shuffle is the final
-    n_shards-row aggregation."""
+    8-row aggregation."""
     bounds = docs.agg(F.max("doc_id").alias("max_id"))
-    width = F.ceil((F.col("max_id") + 1) / F.lit(n_shards))
+    width = F.ceil((F.col("max_id") + 1) / F.lit(8))
     shard = F.floor(F.col("doc_id") / width).cast("long")
-    n_toks = F.size(tokens_col(normalized_col(text_col)))
+    n_toks = F.size(tokens_col(normalized_col("text")))
     return (
         docs.crossJoin(F.broadcast(bounds))
         .select(shard.alias("shard_id"), "doc_id", n_toks.alias("n_toks"))
@@ -357,13 +346,11 @@ def write_training_shards(
     )
 
 
-def duplicate_spans(
-    docs: DataFrame, text_col: str = "text", k: int = 8, min_count: int = 2
-) -> DataFrame:
+def duplicate_spans(docs: DataFrame) -> DataFrame:
     """Exact-substring duplicate spans (the distributed shape of Lee
     et al., "Deduplicating Training Data Makes Language Models
-    Better", ACL 2022): every k-token window whose exact text occurs
-    >= min_count times anywhere in the corpus (any doc, including the
+    Better", ACL 2022): every 8-token window whose exact text occurs
+    >= 2 times anywhere in the corpus (any doc, including the
     same one) marks its token positions as duplicated; overlapping
     marked windows merge into maximal spans per doc.
 
@@ -382,16 +369,16 @@ def duplicate_spans(
     from pyspark.sql import Window
 
     toks = docs.select(
-        "doc_id", F.posexplode(tokens_col(normalized_col(text_col))).alias("pos", "tok")
+        "doc_id", F.posexplode(tokens_col(normalized_col("text"))).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
+    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, SPAN_NGRAM_K)]
     sh = (
         toks.select(
             "doc_id",
             F.col("pos").cast("long").alias("pos"),
             F.when(
-                F.lead("tok", k - 1).over(w).isNotNull(), F.concat_ws(" ", *parts)
+                F.lead("tok", SPAN_NGRAM_K - 1).over(w).isNotNull(), F.concat_ws(" ", *parts)
             ).alias("sh"),
         )
         .filter(F.col("sh").isNotNull())
@@ -404,7 +391,7 @@ def duplicate_spans(
     occ = Window.partitionBy("sh")
     marked = (
         sh.withColumn("c", F.count("*").over(occ))
-        .filter(F.col("c") >= min_count)
+        .filter(F.col("c") >= 2)
         .select("doc_id", "pos")
     )
 
@@ -414,7 +401,7 @@ def duplicate_spans(
     upto = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
         Window.unboundedPreceding, 0
     )
-    x = marked.withColumn("e_pos", F.col("pos") + k).withColumn(
+    x = marked.withColumn("e_pos", F.col("pos") + SPAN_NGRAM_K).withColumn(
         "run_max", F.max("e_pos").over(prev)
     )
     flag = (
@@ -437,9 +424,7 @@ def duplicate_spans(
     )
 
 
-def temperature_sample(
-    docs: DataFrame, group_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
+def temperature_sample(docs: DataFrame) -> DataFrame:
     """Temperature-based group rebalancing (the mT5 / multilingual-
     pretraining recipe, alpha = 0.5): target share of group g is
     proportional to (n_g / N)^alpha -- larger than proportional for
@@ -468,13 +453,13 @@ def temperature_sample(
         F.sqrt(F.col("n_g").cast("double") / F.col("n_tot").cast("double")), 12
     ).cast("decimal(14,12)")
     rates = (
-        docs.groupBy(group_col)
+        docs.groupBy(GROUP_COL)
         .agg(F.count("*").alias("n_g"))
         .withColumn("n_tot", F.sum("n_g").over(everything))
         .withColumn("t", t)
         .withColumn("s", F.sum("t").over(everything).cast("string").cast("double"))
         .select(
-            group_col,
+            GROUP_COL,
             F.least(
                 F.lit(1.0),
                 (
@@ -486,14 +471,14 @@ def temperature_sample(
         )
     )
     u = (
-        F.conv(F.substring(F.md5(normalized_col(text_col)), 1, 8), 16, 10).cast("long")
+        F.conv(F.substring(F.md5(normalized_col("text")), 1, 8), 16, 10).cast("long")
         / F.lit(4294967296.0)
     )
     keep = ["doc_id"] + [
-        c for c in dict.fromkeys((group_col, "lang", "source")) if c in docs.columns
+        c for c in (GROUP_COL, "source") if c in docs.columns
     ]
     return (
-        docs.join(F.broadcast(rates), group_col)
+        docs.join(F.broadcast(rates), GROUP_COL)
         .filter(u < F.col("rate"))
         .select(*keep)
     )

@@ -44,6 +44,9 @@ DEFAULT_NUM_PERM = 16
 MINHASH_PRIME = 4294967311
 SIMHASH_BITS = 60  # 15 md5 hex chars -> [0, 2^60): fits signed 64-bit
 
+TEXT_COL = "text"
+FP_COL = "simhash"
+
 
 def portable_hash32(col: Column) -> Column:
     """32-bit base hash both engines compute identically: first 8 hex
@@ -58,13 +61,12 @@ def portable_hash60(col: Column) -> Column:
 
 
 def minhash_perm_constants(
-    num_perm: int = DEFAULT_NUM_PERM, seed: int = 0x5EED5EED
-) -> list[tuple[int, int]]:
+    ) -> list[tuple[int, int]]:
     """Deterministic (a_p, b_p) for the p-th MinHash permutation
     h_p(x) = (a_p * x + b_p) % MINHASH_PRIME, generated by a fixed
     64-bit LCG so the identical literals can be embedded in the
     DuckDB oracle SQL (same trick as the ann_lsh plane literals)."""
-    state = seed & ((1 << 64) - 1)
+    state = 0x5EED5EED
 
     def nxt() -> int:
         nonlocal state
@@ -72,7 +74,7 @@ def minhash_perm_constants(
         return state
 
     return [
-        (nxt() % ((1 << 30) - 1) + 1, nxt() % MINHASH_PRIME) for _ in range(num_perm)
+        (nxt() % ((1 << 30) - 1) + 1, nxt() % MINHASH_PRIME) for _ in range(DEFAULT_NUM_PERM)
     ]
 # 8 bands of 2 rows: collision prob = 1-(1-j^2)^8, i.e. ~96% recall at
 # j=0.57, ~27% at j=0.2 -- tuned to surface near-dups while the exact
@@ -80,8 +82,8 @@ def minhash_perm_constants(
 DEFAULT_BANDS = 8
 
 
-def shingle_rows(docs: DataFrame, text_col: str = "text", k: int = DEFAULT_SHINGLE_K) -> DataFrame:
-    """DataFrame[doc_id, sh] of k-token shingles, one row each.
+def shingle_rows(docs: DataFrame) -> DataFrame:
+    """DataFrame[doc_id, sh] of k-token shingles (k = DEFAULT_SHINGLE_K), one row each.
 
     Built as posexplode + window lead over (doc_id, pos) rather than a
     higher-order `transform(sequence(...), i -> slice(toks, i, k))`
@@ -96,18 +98,20 @@ def shingle_rows(docs: DataFrame, text_col: str = "text", k: int = DEFAULT_SHING
 
     toks = docs.select(
         F.col("doc_id"),
-        F.posexplode(tokens_col(normalized_col(text_col))).alias("pos", "tok"),
+        F.posexplode(tokens_col(normalized_col(TEXT_COL))).alias("pos", "tok"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
+    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, DEFAULT_SHINGLE_K)]
     sh = toks.select(
         "doc_id",
-        F.when(F.lead("tok", k - 1).over(w).isNotNull(), F.concat_ws(" ", *parts)).alias("sh"),
+        F.when(
+            F.lead("tok", DEFAULT_SHINGLE_K - 1).over(w).isNotNull(), F.concat_ws(" ", *parts)
+        ).alias("sh"),
     )
     return sh.filter(F.col("sh").isNotNull())
 
 
-def shingle_rows_flat(docs: DataFrame, text_col: str = "text", k: int = DEFAULT_SHINGLE_K) -> DataFrame:
+def shingle_rows_flat(docs: DataFrame, k: int = DEFAULT_SHINGLE_K) -> DataFrame:
     """DataFrame[doc_id, sh] of k-token shingles built WITHOUT any
     shuffle: the token array is materialized once per row behind an
     explode(array(...)) Generate barrier (so CollapseProject cannot
@@ -122,7 +126,7 @@ def shingle_rows_flat(docs: DataFrame, text_col: str = "text", k: int = DEFAULT_
     aggregations downstream."""
     toksed = docs.select(
         "doc_id",
-        F.explode(F.array(tokens_col(normalized_col(text_col)))).alias("toks"),
+        F.explode(F.array(tokens_col(normalized_col(TEXT_COL)))).alias("toks"),
     )
     n = F.size("toks")
     idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
@@ -132,7 +136,7 @@ def shingle_rows_flat(docs: DataFrame, text_col: str = "text", k: int = DEFAULT_
     return toksed.select("doc_id", F.explode(sh_arr).alias("sh"))
 
 
-def keep_best_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def keep_best_dedup(docs: DataFrame) -> DataFrame:
     """Quality-ranked exact dedup: among docs whose NORMALIZED text
     collides, keep the copy with the highest composite quality score
     (ties by smallest doc_id) -- the curation-grade variant of
@@ -147,10 +151,10 @@ def keep_best_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     from ..functions.text_stats import quality_score_col, with_token_array
 
-    scored = with_token_array(docs, text_col=text_col).select(
+    scored = with_token_array(docs).select(
         "doc_id",
-        F.md5(normalized_col(text_col)).alias("fp_md5"),
-        quality_score_col(text_col, toks=F.col("toks")).alias("quality"),
+        F.md5(normalized_col(TEXT_COL)).alias("fp_md5"),
+        quality_score_col(TEXT_COL, toks=F.col("toks")).alias("quality"),
     )
     w = Window.partitionBy("fp_md5").orderBy(F.desc("quality"), F.asc("doc_id"))
     wg = Window.partitionBy("fp_md5")
@@ -164,12 +168,12 @@ def keep_best_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by md5 of normalized text: one row per
     distinct content, keeping the smallest doc_id as canonical.
     Scale: shuffle key is a 128-bit digest -- uniformly distributed,
     skew-free regardless of content skew."""
-    fp = docs.select(F.col("doc_id"), F.md5(normalized_col(text_col)).alias("fp_md5"))
+    fp = docs.select(F.col("doc_id"), F.md5(normalized_col(TEXT_COL)).alias("fp_md5"))
     return fp.groupBy("fp_md5").agg(
         F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_dups")
     )
@@ -177,10 +181,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
     max_doc_freq: int = 3,
-    min_jaccard: float = 0.05,
 ) -> DataFrame:
     """Exact shingle-Jaccard for pairs sharing at least one *rare*
     shingle (document frequency <= max_doc_freq).
@@ -191,7 +192,7 @@ def ngram_jaccard_pairs(
     (MinHash banding below is the fully general variant; this one is
     SQL-expressible and oracle-checked.)
     """
-    sh = shingle_rows(docs, text_col, k).distinct()
+    sh = shingle_rows(docs).distinct()
     shingled = sh.groupBy("doc_id").agg(F.collect_set("sh").alias("shset"))
     rare = (
         sh.groupBy("sh")
@@ -220,15 +221,12 @@ def ngram_jaccard_pairs(
                 6,
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
+        .filter(F.col("jaccard") >= 0.05)
     )
 
 
 def minhash_signatures(
     docs: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
-    num_perm: int = DEFAULT_NUM_PERM,
     with_shset: bool = False,
 ) -> DataFrame:
     """MinHash signature per doc: sig[p] = min over shingles of
@@ -244,11 +242,11 @@ def minhash_signatures(
     array_min -- gets its input tree inlined per perm/band by
     CollapseProject and falls out of codegen: ~100x slower at 5k
     docs, catastrophically worse at scale.) Docs with no shingles
-    (fewer than k tokens) drop out, as documented."""
-    sh = shingle_rows(docs, text_col, k).withColumn("hb", portable_hash32(F.col("sh")))
+    (fewer than DEFAULT_SHINGLE_K tokens) drop out, as documented."""
+    sh = shingle_rows(docs).withColumn("hb", portable_hash32(F.col("sh")))
     aggs = [
         F.min((F.lit(a) * F.col("hb") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{p}")
-        for p, (a, b) in enumerate(minhash_perm_constants(num_perm))
+        for p, (a, b) in enumerate(minhash_perm_constants())
     ]
     if with_shset:
         # same shuffle also carries the shingle set, so downstream
@@ -256,20 +254,18 @@ def minhash_signatures(
         # subplan instead of recomputing the shingle pipeline per use
         aggs.append(F.collect_set("sh").alias("shset"))
     sig = sh.groupBy("doc_id").agg(*aggs)
-    out = ["doc_id", F.array(*[F.col(f"h{p}") for p in range(num_perm)]).alias("sig")]
+    out = ["doc_id", F.array(*[F.col(f"h{p}") for p in range(DEFAULT_NUM_PERM)]).alias("sig")]
     if with_shset:
         out.append(F.col("shset"))
     return sig.select(*out)
 
 
-def band_key_rows(
-    sigs: DataFrame, num_perm: int = DEFAULT_NUM_PERM, bands: int = DEFAULT_BANDS
-) -> DataFrame:
+def band_key_rows(sigs: DataFrame) -> DataFrame:
     """Slim (doc_id, band_id, band_hash) rows from a signature table:
     the LSH collision keys. Shared by the batch near-dup join and the
     streaming near-dup append sink (streaming/pipelines.py) so both
     use the identical banding."""
-    rows_per_band = num_perm // bands
+    rows_per_band = DEFAULT_NUM_PERM // DEFAULT_BANDS
     return sigs.select(
         "doc_id",
         F.explode(
@@ -281,23 +277,16 @@ def band_key_rows(
                         for r in range(rows_per_band)
                     ])).alias("band_hash"),
                 )
-                for b in range(bands)
+                for b in range(DEFAULT_BANDS)
             ])
         ).alias("band"),
     ).select("doc_id", "band.band_id", "band.band_hash")
 
 
-def minhash_near_dup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    min_est_jaccard: float = 0.3,
-) -> DataFrame:
+def minhash_near_dup_pairs(docs: DataFrame) -> DataFrame:
     """Banded-LSH near-duplicate pairs.
 
-    sig split into `bands` bands of num_perm/bands rows; docs sharing
+    sig split into DEFAULT_BANDS bands of DEFAULT_NUM_PERM/DEFAULT_BANDS rows; docs sharing
     any band hash become candidates (groupBy band bucket -- a shuffle
     on (band_id, band_hash), never a cross join). Candidates are then
     scored with BOTH the signature estimate and the exact shingle
@@ -305,19 +294,17 @@ def minhash_near_dup_pairs(
     a pathological bucket (e.g. empty-doc cluster) is handled by AQE
     skew-join splitting.
     """
-    rows_per_band = num_perm // bands
+    rows_per_band = DEFAULT_NUM_PERM // DEFAULT_BANDS
     # the signature aggregation feeds THREE consumers (band explode,
     # candidate side A, candidate side B); one shared materialization
     # instead of replaying the whole shingle pipeline per consumer
     # (measured 2x at sf0.1).
-    sigs = materialize(
-        minhash_signatures(docs, text_col, k, num_perm, with_shset=True)
-    )
+    sigs = materialize(minhash_signatures(docs, with_shset=True))
     # slim (doc_id, band_id, band_hash) rows: the self-join and the
     # distinct-pairs shuffle move only three scalars per row -- the
     # signature/shingle arrays are re-attached to the (few) surviving
     # candidate pairs afterwards
-    banded = band_key_rows(sigs, num_perm, bands)
+    banded = band_key_rows(sigs)
 
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -338,7 +325,7 @@ def minhash_near_dup_pairs(
     )
     est = (
         F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        / F.lit(float(num_perm))
+        / F.lit(float(DEFAULT_NUM_PERM))
     )
     return (
         cand.join(side_a, "doc_a")
@@ -351,7 +338,7 @@ def minhash_near_dup_pairs(
                 F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb")), 6
             ).alias("jaccard"),
         )
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
+        .filter(F.col("est_jaccard") >= 0.3)
     )
 
 
@@ -428,25 +415,18 @@ def label_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     return labels.select("doc_id", F.col("label").alias("cluster"))
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_est_jaccard: float = 0.3,
-    max_iter: int = 20,
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """Near-duplicate clusters: connected components over the MinHash
     pair graph. With the portable MinHash hashing, the whole chain
     (signatures -> banded pairs -> transitive min-label closure) is
     oracle-checked against a DuckDB recursive CTE
     (registry.oracle_builders._dedup_clusters_sql), plus metamorphic tests (chained
     near-dups merge into one cluster)."""
-    pairs = minhash_near_dup_pairs(
-        docs, text_col, min_est_jaccard=min_est_jaccard
-    ).select("doc_a", "doc_b")
-    return label_propagation(pairs, max_iter)
+    pairs = minhash_near_dup_pairs(docs).select("doc_a", "doc_b")
+    return label_propagation(pairs)
 
 
-def simhash_fp(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_fp(docs: DataFrame) -> DataFrame:
     """SIMHASH_BITS-bit (60) SimHash over tokens: bit i of the
     fingerprint is set when more token hashes have bit i set than
     clear (the sign of the classic +/-1 sum). Computed as 60
@@ -468,7 +448,7 @@ def simhash_fp(docs: DataFrame, text_col: str = "text") -> DataFrame:
     corpus row and the parquet page for it); an assert_true trips
     loudly rather than wrapping silently if that ever happens."""
     toks = docs.select(
-        F.col("doc_id"), F.explode(tokens_col(normalized_col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode(tokens_col(normalized_col(TEXT_COL))).alias("tok")
     ).withColumn("h", portable_hash60(F.col("tok")))
     # The wide expressions are assembled as SQL strings and parsed
     # JVM-side in ONE F.expr call each: building them as nested Column
@@ -498,9 +478,7 @@ def simhash_fp(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return agg.select("doc_id", F.expr(fp).alias("simhash"))
 
 
-def hamming_banded_pairs(
-    fp: DataFrame, max_hamming: int = 3, fp_col: str = "simhash", n_bits: int = 64
-) -> DataFrame:
+def hamming_banded_pairs(fp: DataFrame, max_hamming: int = 3, n_bits: int = 64) -> DataFrame:
     """All pairs within Hamming distance <= max_hamming of an
     n_bits-wide fingerprint column, via band-equality join (never a
     cross join).
@@ -538,13 +516,13 @@ def hamming_banded_pairs(
     offsets = [sum(widths[:i]) for i in range(n_bands)]
     banded = fp.select(
         "doc_id",
-        fp_col,
+        FP_COL,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band_id"),
-                        F.shiftright(F.col(fp_col), offsets[b])
+                        F.shiftright(F.col(FP_COL), offsets[b])
                         .bitwiseAND(F.lit((1 << widths[b]) - 1))
                         .alias("band_val"),
                     )
@@ -552,7 +530,7 @@ def hamming_banded_pairs(
                 ]
             )
         ).alias("band"),
-    ).select("doc_id", fp_col, "band.band_id", "band.band_val")
+    ).select("doc_id", FP_COL, "band.band_id", "band.band_val")
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -564,20 +542,16 @@ def hamming_banded_pairs(
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col(f"a.{fp_col}").bitwiseXOR(F.col(f"b.{fp_col}"))).alias("hamming"),
+            F.bit_count(F.col(f"a.{FP_COL}").bitwiseXOR(F.col(f"b.{FP_COL}"))).alias("hamming"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
         .filter(F.col("hamming") <= max_hamming)
     )
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame, text_col: str = "text", max_hamming: int = 3
-) -> DataFrame:
+def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs with guaranteed recall: fingerprint via
     simhash_fp, pairing via hamming_banded_pairs, whose band count
     adapts to max_hamming so the pigeonhole guarantee always covers
     the requested threshold."""
-    return hamming_banded_pairs(
-        simhash_fp(docs, text_col), max_hamming, n_bits=SIMHASH_BITS
-    )
+    return hamming_banded_pairs(simhash_fp(docs), max_hamming, n_bits=SIMHASH_BITS)

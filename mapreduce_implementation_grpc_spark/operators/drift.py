@@ -44,6 +44,8 @@ from pyspark.sql import functions as F
 
 from .ranking import bucket_offsets, bucketize_by_key
 
+VALUE_COL = "v"
+
 
 def categorical_drift(
     base: DataFrame, curr: DataFrame, cat_col: str
@@ -115,7 +117,6 @@ def categorical_drift_from_counts(a: DataFrame, b: DataFrame) -> DataFrame:
 def ks_test(
     sample_a: DataFrame,
     sample_b: DataFrame,
-    value_col: str = "v",
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic: one row
@@ -123,11 +124,11 @@ def ks_test(
     of |F_a(v) - F_b(v)| (right-continuous empirical CDFs) and
     at_value is the smallest value attaining it."""
     counts = (
-        sample_a.select(F.col(value_col).alias("_v"))
+        sample_a.select(F.col(VALUE_COL).alias("_v"))
         .groupBy("_v")
         .agg(F.count("*").alias("_ca"))
         .join(
-            sample_b.select(F.col(value_col).alias("_v"))
+            sample_b.select(F.col(VALUE_COL).alias("_v"))
             .groupBy("_v")
             .agg(F.count("*").alias("_cb")),
             "_v",

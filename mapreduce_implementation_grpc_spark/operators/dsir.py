@@ -57,7 +57,6 @@ def _tokens(docs: DataFrame, text_col: str, max_vocab: int | None):
 def dsir_log_ratios(
     docs: DataFrame,
     target_source: str = "src0",
-    text_col: str = "text",
     max_vocab: int | None = None,
 ) -> DataFrame:
     """DataFrame[w, lr]: per-token log-likelihood ratio
@@ -65,7 +64,7 @@ def dsir_log_ratios(
     This is the reusable serve artifact: join it onto any per-doc
     token stream (batch dsir_weights, or an unbounded stream via
     streaming.streaming_dsir_filter) and sum."""
-    toks = _tokens(docs, text_col, max_vocab)
+    toks = _tokens(docs, "text", max_vocab)
     is_target = F.col("source") == target_source
     # Both LMs trained in ONE pass over the token stream: conditional
     # counts per token, plus the two totals from the same aggregates.
@@ -93,7 +92,6 @@ def dsir_log_ratios(
 def dsir_weights(
     docs: DataFrame,
     target_source: str = "src0",
-    text_col: str = "text",
     max_vocab: int | None = None,
 ) -> DataFrame:
     """DataFrame[doc_id, lang, source, dsir_logw]: importance log-
@@ -102,9 +100,9 @@ def dsir_weights(
     trained on the pool. Raw docs with zero tokens are excluded (no
     evidence). dsir_logw is the decimal-exact sum cast to double and
     rounded to 6dp."""
-    toks = _tokens(docs, text_col, max_vocab)
+    toks = _tokens(docs, "text", max_vocab)
     hint = F.broadcast if max_vocab is not None else (lambda df: df)
-    ratios = dsir_log_ratios(docs, target_source, text_col, max_vocab)
+    ratios = dsir_log_ratios(docs, target_source, max_vocab)
 
     raw_hist = (
         toks.filter(F.col("source") != target_source)

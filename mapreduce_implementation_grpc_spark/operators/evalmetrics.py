@@ -44,22 +44,24 @@ from pyspark.sql import functions as F
 
 from .ranking import bucket_offsets, bucketize_by_key
 
+LABEL_COL = "label"
+N_BINS = 10
+N_DECILES = 10
+
 
 def auc_rank_sum(
     scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
     n_buckets: int = 1024,
 ) -> DataFrame:
-    """Exact tie-corrected ROC AUC of `score_col` predicting the 0/1
-    `label_col`: one row [n_pos, n_neg, u2, auc] where u2 = 2U (the
+    """Exact tie-corrected ROC AUC of `score` predicting the 0/1
+    `label`: one row [n_pos, n_neg, u2, auc] where u2 = 2U (the
     doubled Mann-Whitney statistic, exact integer as DECIMAL(38,0))
     and auc = u2 / (2 * n_pos * n_neg) as one deterministic double
     chain. Degenerate inputs (no positives or no negatives) raise
     loudly rather than returning a meaningless 0/0."""
-    per_score = scored.groupBy(F.col(score_col).alias("_s")).agg(
-        F.sum(F.col(label_col).cast("long")).alias("_pos"),
-        F.sum(F.lit(1) - F.col(label_col).cast("long")).alias("_neg"),
+    per_score = scored.groupBy(F.col("score").alias("_s")).agg(
+        F.sum(F.col(LABEL_COL).cast("long")).alias("_pos"),
+        F.sum(F.lit(1) - F.col(LABEL_COL).cast("long")).alias("_neg"),
     )
     # negatives strictly below each distinct score: bucket offsets
     # (neg-weighted) + a within-bucket running sum ending at the
@@ -119,17 +121,16 @@ def calibration_bins(
     scored: DataFrame,
     p_col: Column,
     label_col: Column,
-    n_bins: int = 10,
 ) -> DataFrame:
     """Reliability-diagram bins for a probability column in [0, 1]:
     [bin, n, frac_pos, mean_p, abs_gap] per non-empty bin, bin =
-    floor(p * n_bins) with p = 1.0 clamped into the last bin.
+    floor(p * N_BINS) with p = 1.0 clamped into the last bin.
     mean_p accumulates 9dp-decimal-rounded terms (order-independent
     sums, the doc_perplexity recipe) string-routed back to double;
     frac_pos is one int/int division; abs_gap = |mean_p - frac_pos|
     on those deterministic doubles. One partial-agg'd pass; output is
     n_bins rows."""
-    b = F.least(F.lit(n_bins - 1), F.floor(p_col * F.lit(n_bins))).cast("long")
+    b = F.least(F.lit(N_BINS - 1), F.floor(p_col * F.lit(N_BINS))).cast("long")
     return (
         scored.groupBy(b.alias("bin"))
         .agg(
@@ -153,15 +154,10 @@ def calibration_bins(
     )
 
 
-def average_precision(
-    scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-    n_buckets: int = 1024,
-) -> DataFrame:
+def average_precision(scored: DataFrame) -> DataFrame:
     """Exact tie-aware average precision (area under the PR curve by
-    right-step interpolation) of `score_col` predicting the 0/1
-    `label_col`: one row [n_pos, n_total, ap] with
+    right-step interpolation) of `score` predicting the 0/1
+    `label`: one row [n_pos, n_total, ap] with
 
         ap = (1/n_pos) * sum over distinct scores s (descending) of
                  pos_s * (cum_pos(s) / cum_n(s))
@@ -178,11 +174,11 @@ def average_precision(
     (per-bucket totals are the only rows crossing a single-partition
     exchange; within-bucket running sums are parallel windows). Heavy
     ties collapse at the first groupBy instead of skewing a sort."""
-    per_score = scored.groupBy(F.col(score_col).alias("_s")).agg(
+    per_score = scored.groupBy(F.col("score").alias("_s")).agg(
         F.count("*").alias("_n"),
-        F.sum(F.col(label_col).cast("long")).alias("_pos"),
+        F.sum(F.col(LABEL_COL).cast("long")).alias("_pos"),
     )
-    bk = bucketize_by_key(per_score, "_s", ascending=False, n_buckets=n_buckets)
+    bk = bucketize_by_key(per_score, "_s", ascending=False)
     btot = bk.groupBy("_bkt").agg(
         F.sum("_n").alias("_bn"), F.sum("_pos").alias("_bp")
     )
@@ -230,18 +226,12 @@ def average_precision(
     return agg.select("n_pos", "n_total", ap.alias("ap"))
 
 
-def lift_table(
-    scored: DataFrame,
-    score_col: str = "score",
-    label_col: str = "label",
-    n_deciles: int = 10,
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Gain/lift table of `score_col` predicting the 0/1 `label_col`:
+def lift_table(scored: DataFrame) -> DataFrame:
+    """Gain/lift table of `score` predicting the 0/1 `label`:
     [decile, n_rows, n_pos, resp_rate, lift, cum_capture] with decile
     0 = the highest-scored slice. Deciles are BLOCK-ASSIGNED: every
     row tied at a distinct score goes to the decile of the block's
-    FIRST row (decile = (n_deciles * rows_strictly_above) DIV n,
+    FIRST row (decile = (N_DECILES * rows_strictly_above) DIV n,
     exact integer division -- no per-row global rank, no float
     boundary). Decile populations are therefore approximately-equal
     (ties never split), which is the deterministic, scale-honest
@@ -251,14 +241,14 @@ def lift_table(
 
     lift = (pos_d/n_d) / (pos_total/n_total) as one fixed IEEE chain;
     cum_capture = cumulative share of all positives captured through
-    the decile (a window over <= n_deciles rows). Distributed shape:
+    the decile (a window over <= N_DECILES rows). Distributed shape:
     identical to `average_precision` -- distinct-score grain + the
     two-level bucketed cumsum."""
-    per_score = scored.groupBy(F.col(score_col).alias("_s")).agg(
+    per_score = scored.groupBy(F.col("score").alias("_s")).agg(
         F.count("*").alias("_n"),
-        F.sum(F.col(label_col).cast("long")).alias("_pos"),
+        F.sum(F.col(LABEL_COL).cast("long")).alias("_pos"),
     )
-    bk = bucketize_by_key(per_score, "_s", ascending=False, n_buckets=n_buckets)
+    bk = bucketize_by_key(per_score, "_s", ascending=False)
     btot = bk.groupBy("_bkt").agg(F.sum("_n").alias("_bn"))
     w_off = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
     w_all = Window.orderBy("_bkt").rowsBetween(
@@ -283,8 +273,8 @@ def lift_table(
         .withColumn(
             "decile",
             F.least(
-                F.lit(n_deciles - 1),
-                F.expr(f"{n_deciles} * _above DIV _totn"),
+                F.lit(N_DECILES - 1),
+                F.expr(f"{N_DECILES} * _above DIV _totn"),
             ).cast("long"),
         )
     )

@@ -44,10 +44,8 @@ def gap_fill_forward(
     key: str,
     ts_col: str,
     value_col: str,
-    step: str = "1 hour",
-    bucket_trunc: str = "hour",
 ) -> DataFrame:
-    """Densify `df` to one row per `key` per `step` bucket between
+    """Densify `df` to one row per `key` per one-hour bucket between
     that key's first and last observation, forward-filling
     `value_col`. Output: [key, bucket (timestamp), filled_value,
     is_gap] where is_gap marks synthesized rows. The last observation
@@ -58,7 +56,7 @@ def gap_fill_forward(
         F.desc(ts_col), *[F.desc(c) for c in tie_cols]
     )
     obs = (
-        df.withColumn("bucket", F.date_trunc(bucket_trunc, F.col(ts_col)))
+        df.withColumn("bucket", F.date_trunc("hour", F.col(ts_col)))
         .withColumn("_rn", F.row_number().over(pick))
         .filter(F.col("_rn") == 1)
         .select(key, "bucket", F.col(value_col).alias("_obs"))
@@ -69,7 +67,7 @@ def gap_fill_forward(
     grid = span.select(
         key,
         F.explode(
-            F.sequence(F.col("_lo"), F.col("_hi"), F.expr(f"INTERVAL {step}"))
+            F.sequence(F.col("_lo"), F.col("_hi"), F.expr("INTERVAL 1 hour"))
         ).alias("bucket"),
     )
     fill = Window.partitionBy(key).orderBy("bucket").rowsBetween(

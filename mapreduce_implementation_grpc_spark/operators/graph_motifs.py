@@ -70,7 +70,6 @@ def purchase_edges(
 def copurchase_butterflies(
     spark: SparkSession,
     sf_dir: str,
-    top_n: int = 50,
     max_degree: int | None = None,
     segment: str | None = None,
 ) -> DataFrame:
@@ -131,7 +130,7 @@ def copurchase_butterflies(
         .orderBy(
             F.desc("shared_suppliers"), F.asc("custkey_1"), F.asc("custkey_2")
         )
-        .limit(top_n)
+        .limit(50)
     )
 
 
@@ -270,9 +269,9 @@ def kcore(
     )
 
 
-def cosupply_kcore(spark: SparkSession, sf_dir: str, k: int = 8) -> DataFrame:
-    """k-core of the thresholded co-supply graph (see cosupply_edges)."""
-    return kcore(cosupply_edges(spark, sf_dir), k)
+def cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """8-core of the thresholded co-supply graph (see cosupply_edges)."""
+    return kcore(cosupply_edges(spark, sf_dir), 8)
 
 
 def triangle_counts(undirected_edges: DataFrame) -> DataFrame:

@@ -54,18 +54,16 @@ def _s2d(c: F.Column) -> F.Column:
 def hits_scores(
     spark: SparkSession,
     sf_dir: str,
-    iters: int = 3,
-    segment: str | None = None,
 ) -> DataFrame:
-    """[node_type ('hub'|'authority'), node_key, score] after `iters`
+    """[node_type ('hub'|'authority'), node_key, score] after three
     max-normalized HITS rounds, score desc / key asc within type.
     Hubs start at 1.0; scores are relative (max = 1.0 each side)."""
-    edges = materialize(purchase_edges(spark, sf_dir, segment=segment))
+    edges = materialize(purchase_edges(spark, sf_dir))
     hubs = edges.select("custkey").distinct().select(
         F.col("custkey").alias("c"), F.lit(1.0).alias("h")
     )
     auths = None
-    for _ in range(iters):
+    for _ in range(3):
         # each raw table feeds its own max AND the division: without
         # pinning, every round re-expands the previous round's whole
         # subtree into both consumers -- an exponentially duplicated

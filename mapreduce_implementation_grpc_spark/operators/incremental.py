@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 
 from .normalize import normalized_col
 
+TEXT_COL = "text"
+
 
 def _fingerprints(docs: DataFrame, text_col: str) -> DataFrame:
     return docs.select(
@@ -34,26 +36,22 @@ def _fingerprints(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def incremental_dedup_exact(
-    new_docs: DataFrame, corpus_docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def incremental_dedup_exact(new_docs: DataFrame, corpus_docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, fp_md5] of new-batch docs that are novel
     w.r.t. the existing corpus (no corpus doc has the same normalized
     content). Anti-join keyed on the md5 digest: uniform key
     distribution regardless of content skew, and the corpus side
     carries only (fp) -- never the text."""
-    new_fp = _fingerprints(new_docs, text_col)
-    corpus_fp = _fingerprints(corpus_docs, text_col).select("fp_md5").distinct()
+    new_fp = _fingerprints(new_docs, TEXT_COL)
+    corpus_fp = _fingerprints(corpus_docs, TEXT_COL).select("fp_md5").distinct()
     return new_fp.join(corpus_fp, "fp_md5", "left_anti").select("doc_id", "fp_md5")
 
 
-def incremental_dedup_report(
-    new_docs: DataFrame, corpus_docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def incremental_dedup_report(new_docs: DataFrame, corpus_docs: DataFrame) -> DataFrame:
     """One-row ingest report: batch size, novel count, duplicate
     count. The novel side reuses `incremental_dedup_exact`; the two
     counts are tiny aggregates."""
-    novel = incremental_dedup_exact(new_docs, corpus_docs, text_col)
+    novel = incremental_dedup_exact(new_docs, corpus_docs)
     n_new = new_docs.select(F.count("*").alias("n_batch"))
     n_novel = novel.select(F.count("*").alias("n_novel"))
     return (

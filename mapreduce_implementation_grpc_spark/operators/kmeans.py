@@ -142,7 +142,6 @@ def kmeans_cells(
     emb: DataFrame,
     k: int = 8,
     n_iter: int = 5,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """DataFrame[vec_id, cell, obj]: k-means cell per vector (obj =
     final assignment objective, for inertia checks).
@@ -154,7 +153,7 @@ def kmeans_cells(
     groupBy("vec_id").agg(min(struct(obj, cell))) -- one narrow
     shuffle -- but coarse quantizers live at k <= a few hundred,
     where the literal wins outright."""
-    cent_rows = kmeans_fit(emb, k, n_iter, vec_col)
-    return _assign(emb, cent_rows, vec_col).select(
+    cent_rows = kmeans_fit(emb, k, n_iter)
+    return _assign(emb, cent_rows, "embedding").select(
         "vec_id", "cell", F.round("obj", 6).alias("obj")
     )

@@ -43,14 +43,14 @@ KMV_K = 256
 HASH_SPACE = float(1 << 60)
 
 
-def kmin_values(df: DataFrame, col: Column, k: int = KMV_K) -> DataFrame:
-    """[h]: the k smallest distinct portable hashes of `col` -- the
-    KMV sketch, as a k-row table (mergeable by union + re-trim)."""
+def kmin_values(df: DataFrame, col: Column) -> DataFrame:
+    """[h]: the KMV_K smallest distinct portable hashes of `col` -- the
+    KMV sketch, as a KMV_K-row table (mergeable by union + re-trim)."""
     return (
         df.select(portable_hash60(col.cast("string")).alias("h"))
         .distinct()
         .orderBy("h")
-        .limit(k)
+        .limit(KMV_K)
     )
 
 
@@ -59,15 +59,14 @@ def kmv_intersection_report(
     b: DataFrame,
     col_a: Column,
     col_b: Column,
-    k: int = KMV_K,
 ) -> DataFrame:
     """One row: [est_union, est_jaccard, est_intersection,
     exact_intersection, rel_err] for the value sets a[col_a], b[col_b].
-    Estimates derive ONLY from the two k-row sketches; the exact
+    Estimates derive ONLY from the two KMV_K-row sketches; the exact
     intersection rides along to measure the error."""
-    ka = materialize(kmin_values(a, col_a, k))
-    kb = materialize(kmin_values(b, col_b, k))
-    ku = materialize(ka.unionByName(kb).distinct().orderBy("h").limit(k))
+    ka = materialize(kmin_values(a, col_a))
+    kb = materialize(kmin_values(b, col_b))
+    ku = materialize(ka.unionByName(kb).distinct().orderBy("h").limit(KMV_K))
     stats = ku.agg(F.max("h").alias("hk"), F.count("*").alias("kct"))
     common = (
         ku.join(ka, "h", "left_semi")
@@ -81,10 +80,8 @@ def kmv_intersection_report(
     )
     row = stats.crossJoin(F.broadcast(common)).crossJoin(F.broadcast(exact))
     est_union = F.when(
-        F.col("kct") < k, F.col("kct").cast("double")
-    ).otherwise(
-        F.round(F.lit(float(k - 1)) * F.lit(HASH_SPACE) / F.col("hk"), 6)
-    )
+        F.col("kct") < KMV_K, F.col("kct").cast("double")
+    ).otherwise(F.round(F.lit(float(KMV_K - 1)) * F.lit(HASH_SPACE) / F.col("hk"), 6))
     row = row.withColumn("est_union", est_union)
     est_j = F.round(F.col("cj") / F.col("kct"), 6)
     est_i = F.round(F.col("cj") * F.col("est_union") / F.col("kct"), 6)

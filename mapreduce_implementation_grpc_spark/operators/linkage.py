@@ -50,6 +50,8 @@ FS_FIELDS: list[tuple[str, float, float]] = [
     ("seg", 0.95, 0.20),
 ]
 
+SN_WINDOW = 10
+
 
 def fs_weights() -> dict[str, tuple[float, float]]:
     """{field: (w_agree, w_disagree)} as exact Python doubles -- the
@@ -101,18 +103,16 @@ def fs_score_pairs(
     master: DataFrame,
     contacts: DataFrame,
     block_cols: list[str],
-    threshold: float = 0.0,
-    top_n: int = 100,
 ) -> DataFrame:
     """Score blocked candidate pairs. `master` must carry
     [custkey, nm, bal, seg, *block_cols], `contacts`
     [contact_id, nm, bal, seg, *block_cols]. Output: [custkey,
     contact_id, nm_agree, bal_agree, seg_agree, score, is_match]
-    ordered score desc then keys, top_n rows."""
+    ordered score desc then keys, top 100 rows."""
     return (
-        _scored_pairs(master, contacts, block_cols, threshold)
+        _scored_pairs(master, contacts, block_cols, 0.0)
         .orderBy(F.desc("score"), F.asc("custkey"), F.asc("contact_id"))
-        .limit(top_n)
+        .limit(100)
     )
 
 
@@ -120,13 +120,12 @@ def fs_match_pairs(
     master: DataFrame,
     contacts: DataFrame,
     block_cols: list[str],
-    threshold: float = 0.0,
 ) -> DataFrame:
     """Every pair classified a match -- [custkey, contact_id],
     unordered/unlimited (no global sort: match volume is
     cluster-sized, not report-sized)."""
     return (
-        _scored_pairs(master, contacts, block_cols, threshold)
+        _scored_pairs(master, contacts, block_cols, 0.0)
         .filter(F.col("is_match"))
         .select("custkey", "contact_id")
     )
@@ -223,14 +222,11 @@ def golden_records(
 def sorted_neighborhood_pairs(
     master: DataFrame,
     contacts: DataFrame,
-    window: int = 10,
-    threshold: float = 0.0,
-    top_n: int = 100,
 ) -> DataFrame:
     """Sorted-neighborhood record linkage (Hernandez & Stolfo 1995):
     the blocking-recall companion of `fs_score_pairs`. Both record
     sets are merged into ONE globally bal-sorted sequence and every
-    master-contact pair within `window` rank positions is scored with
+    master-contact pair within SN_WINDOW rank positions is scored with
     the same Fellegi-Sunter weights -- so a balance corruption that
     crosses a floor(bal) boundary (invisible to the (nation, blk)
     blocking equi-join, the module docstring's documented recall
@@ -238,7 +234,7 @@ def sorted_neighborhood_pairs(
     in the sort, never out of the neighborhood.
 
     Output [custkey, contact_id, rank_gap, cross_block, nm_agree,
-    bal_agree, seg_agree, score, is_match], top_n rows ordered
+    bal_agree, seg_agree, score, is_match], top 100 rows ordered
     RECOVERED-first (is_match AND cross_block, then score desc, then
     keys): the matches the blocking join could NOT have produced --
     the whole point of the method -- lead the report instead of
@@ -250,8 +246,8 @@ def sorted_neighborhood_pairs(
     bucketed machinery (ranking.with_global_row_number -- per-bucket
     totals are the only single-partition rows), and the neighborhood
     join is a BANDED equi-join: each probe row explodes into its
-    three adjacent rank bands (band id = rn DIV window) and pairs
-    only meet inside a band -- candidates are O(n * window / band),
+    three adjacent rank bands (band id = rn DIV SN_WINDOW) and pairs
+    only meet inside a band -- candidates are O(n * SN_WINDOW / band),
     never a rank theta-join. Window width trades recall against the
     per-band fan-out, exactly like blocking granularity."""
     from .ranking import with_global_row_number
@@ -280,7 +276,7 @@ def sorted_neighborhood_pairs(
         tiebreaks=[F.asc("role"), F.asc("rid")],
         out_col="rn",
     )
-    band = F.expr(f"rn DIV {window}")
+    band = F.expr(f"rn DIV {SN_WINDOW}")
     left = r.filter(F.col("role") == 0).select(
         F.col("rid").alias("custkey"),
         F.col("nm").alias("_nm_m"),
@@ -301,9 +297,7 @@ def sorted_neighborhood_pairs(
         F.col("rn").alias("_rn_c"),
         band.alias("_band"),
     )
-    pairs = left.join(right, "_band").filter(
-        F.abs(F.col("_rn_m") - F.col("_rn_c")) <= window
-    )
+    pairs = left.join(right, "_band").filter(F.abs(F.col("_rn_m") - F.col("_rn_c")) <= SN_WINDOW)
     agrees = {
         f: (F.col(f"_{f}_m") == F.col(f"_{f}_c")) for f, _, _ in FS_FIELDS
     }
@@ -323,12 +317,12 @@ def sorted_neighborhood_pairs(
             *[agrees[f].alias(f"{f}_agree") for f, _, _ in FS_FIELDS],
             score.alias("score"),
         )
-        .withColumn("is_match", F.col("score") > F.lit(float(threshold)))
+        .withColumn("is_match", F.col("score") > F.lit(0.0))
         .orderBy(
             (F.col("is_match") & F.col("cross_block")).desc(),
             F.desc("score"),
             F.asc("custkey"),
             F.asc("contact_id"),
         )
-        .limit(top_n)
+        .limit(100)
     )

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from .normalize import normalized_col
 from .tokenize import tokens_col
 
+TEXT_COL = "text"
+
 
 def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
     """DataFrame[doc_id, w1, w2, m]: per-doc adjacent-bigram
@@ -57,12 +59,10 @@ def _doc_bigrams(docs: DataFrame, text_col: str) -> DataFrame:
     return grams.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("m"))
 
 
-def bigram_cross_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_cross_entropy(docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, n_bigrams, cross_entropy(6dp)] for every doc
     with at least one bigram."""
-    toks = docs.select(
-        "doc_id", F.explode(tokens_col(normalized_col(text_col))).alias("w")
-    )
+    toks = docs.select("doc_id", F.explode(tokens_col(normalized_col(TEXT_COL))).alias("w"))
     uni = toks.groupBy("w").agg(F.count("*").alias("c1"))
     vocab = uni.agg(F.count("*").cast("double").alias("v"))
     # the per-doc bigram subplan feeds two consumers (the global model
@@ -70,7 +70,7 @@ def bigram_cross_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # is corpus-sized (unlike the small minhash signature table, where
     # lazy localCheckpoint wins), so materializing it costs more than
     # recomputing -- measured slower at sf0.1 (2.8 s vs 2.0 s)
-    docbg = _doc_bigrams(docs, text_col)
+    docbg = _doc_bigrams(docs, TEXT_COL)
     big = docbg.groupBy("w1", "w2").agg(F.sum("m").alias("c12"))
 
     # `vocab` here is a 1-ROW count scalar (not the vocabulary rows),

@@ -38,9 +38,7 @@ from .normalize import normalized_col
 from .tokenize import tokens_col
 
 
-def nb_lang_scores(
-    docs: DataFrame, text_col: str = "text", max_vocab: int | None = None
-) -> DataFrame:
+def nb_lang_scores(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
     """DataFrame[doc_id, lang, pred_lang, nb_score]: the true label,
     the NB prediction, and the winning log-score (6dp). Docs with no
     tokens are excluded (no evidence).
@@ -57,9 +55,7 @@ def nb_lang_scores(
     which IS safely broadcast. Out-of-vocabulary tokens drop from
     training and scoring alike, so K >= V reproduces the full-vocab
     answer exactly."""
-    toks = docs.select(
-        "doc_id", "lang", F.explode(tokens_col(normalized_col(text_col))).alias("w")
-    )
+    toks = docs.select("doc_id", "lang", F.explode(tokens_col(normalized_col("text"))).alias("w"))
     if max_vocab is not None:
         keep = (
             toks.groupBy("w")

@@ -45,5 +45,5 @@ def normalized_col(col: Column | str) -> Column:
     return F.trim(F.lower(F.regexp_replace(col, NORMALIZE_PATTERN, "")))
 
 
-def normalize_text(df: DataFrame, in_col: str = "line", out_col: str = "norm") -> DataFrame:
-    return df.withColumn(out_col, normalized_col(in_col))
+def normalize_text(df: DataFrame) -> DataFrame:
+    return df.withColumn("norm", normalized_col("line"))

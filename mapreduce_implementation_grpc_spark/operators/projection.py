@@ -32,33 +32,31 @@ from .similarity import _mix64
 # offset the flat index so projection planes differ from LSH planes
 PROJ_SEED = 7_777_777
 
+DIM = 64
 
-def projection_planes(k: int = 8, dim: int = 64) -> list[list[float]]:
-    """k deterministic pseudo-random directions in [-0.5, 0.5)."""
+
+def projection_planes() -> list[list[float]]:
+    """8 deterministic pseudo-random DIM-wide directions in [-0.5, 0.5)."""
     return [
-        [_mix64(PROJ_SEED + p * dim + d) / 2.0**64 - 0.5 for d in range(dim)]
-        for p in range(k)
+        [_mix64(PROJ_SEED + p * DIM + d) / 2.0**64 - 0.5 for d in range(DIM)]
+        for p in range(8)
     ]
 
 
 def project_embeddings(
     emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-    dim: int = 64,
     decimals: int = 6,
 ) -> DataFrame:
-    """(id, p0..p{k-1}): the vector's coordinates along the k
+    """(id, p0..p7): the vector's coordinates along the 8
     projection directions, rounded for cross-engine comparison.
     Sequential double fold in element order == DuckDB
     list_dot_product, so results hash-match exactly at `decimals`."""
-    planes = projection_planes(k, dim)
+    planes = projection_planes()
     cols = [
         F.round(
             F.aggregate(
                 F.zip_with(
-                    F.col(vec_col),
+                    F.col("embedding"),
                     F.array(*[F.lit(w) for w in plane]),
                     lambda x, y: x.cast("double") * y,
                 ),
@@ -69,4 +67,4 @@ def project_embeddings(
         ).alias(f"p{p}")
         for p, plane in enumerate(planes)
     ]
-    return emb.select(F.col(id_col), *cols)
+    return emb.select(F.col("vec_id"), *cols)

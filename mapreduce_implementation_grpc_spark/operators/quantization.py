@@ -28,11 +28,13 @@ from pyspark.sql import functions as F
 
 DEFAULT_LEVELS = 255  # int8 code range [0, 255]
 
+VEC_COL = "embedding"
 
-def dim_minmax(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+
+def dim_minmax(emb: DataFrame) -> DataFrame:
     """1-row DataFrame[mins: array<double>, maxs: array<double>] of
     per-dimension bounds, ordered by dimension index."""
-    flat = emb.select(F.posexplode(vec_col).alias("pos", "x"))
+    flat = emb.select(F.posexplode(VEC_COL).alias("pos", "x"))
     st = flat.groupBy("pos").agg(
         F.min("x").cast("double").alias("mn"), F.max("x").cast("double").alias("mx")
     )
@@ -44,19 +46,17 @@ def dim_minmax(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def quantize_embeddings(
-    emb: DataFrame, vec_col: str = "embedding", levels: int = DEFAULT_LEVELS
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame) -> DataFrame:
     """DataFrame[vec_id, codes: array<int>, mse: double].
 
-    code_i = floor((x_i - mn_i) * levels / (mx_i - mn_i)), clamped to
+    code_i = floor((x_i - mn_i) * DEFAULT_LEVELS / (mx_i - mn_i)), clamped to
     the degenerate-dimension case; reconstruction uses the cell
-    midpoint mn_i + (code_i + 0.5) * (mx_i - mn_i) / levels. The
+    midpoint mn_i + (code_i + 0.5) * (mx_i - mn_i) / DEFAULT_LEVELS. The
     expression order is mirrored token-for-token in the oracle SQL so
     codes match exactly and mse matches at 6 decimals."""
-    one = dim_minmax(emb, vec_col)
-    base = emb.select("vec_id", F.col(vec_col).alias("v")).crossJoin(F.broadcast(one))
-    lv = F.lit(float(levels))
+    one = dim_minmax(emb)
+    base = emb.select("vec_id", F.col(VEC_COL).alias("v")).crossJoin(F.broadcast(one))
+    lv = F.lit(float(DEFAULT_LEVELS))
     idx = F.sequence(F.lit(1), F.size("v"))
 
     def _parts(i):
@@ -221,7 +221,6 @@ def pq_adc_topk(
     k: int = DEFAULT_PQ_K,
     n_iter: int = DEFAULT_PQ_ITER,
     dim: int = 64,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: approximate nearest
     neighbors scanning only the compressed codes.
@@ -240,8 +239,8 @@ def pq_adc_topk(
     cells only."""
     from pyspark.sql import Window
 
-    codebooks = pq_fit(emb, m, k, n_iter, dim, vec_col)
-    codes = pq_codes(emb, m, k, n_iter, dim, vec_col, codebooks=codebooks)
+    codebooks = pq_fit(emb, m, k, n_iter, dim)
+    codes = pq_codes(emb, m, k, n_iter, dim, codebooks=codebooks)
     w = dim // m
 
     spark = emb.sparkSession
@@ -286,25 +285,16 @@ def pq_adc_topk(
 def ivfpq_topk(
     emb: DataFrame,
     queries: DataFrame,
-    topk: int = 5,
-    n_probe: int = 2,
-    coarse_k: int = 8,
-    coarse_iter: int = 3,
-    m: int = DEFAULT_PQ_M,
-    k: int = DEFAULT_PQ_K,
-    n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = 64,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ: the standard billion-scale ANN layout. A coarse
     k-means partitions the corpus into inverted lists; PQ codes
-    compress every vector; a query routes to its n_probe nearest
-    coarse cells (L2) and runs the ADC scan over ONLY those cells'
+    compress every vector; a query routes to its 2 nearest
+    coarse cells (of 8) (L2) and runs the ADC scan over ONLY those cells'
     codes.
 
     Scale posture: the coarse assignment bounds the scan to
-    n_probe/coarse_k of the corpus, the PQ codes shrink what is
-    scanned to m small ints per vector, the per-query lookup table
+    2/8 of the corpus, the PQ codes shrink what is
+    scanned to DEFAULT_PQ_M small ints per vector, the per-query lookup table
     is broadcast, and the one aggregation shuffle carries
     (query_id, vec_id) partial decimal sums. This variant encodes
     raw vectors (IVF-Flat+PQ); residual encoding drops in by
@@ -314,16 +304,15 @@ def ivfpq_topk(
 
     from .kmeans import _assign, kmeans_fit
 
-    coarse = kmeans_fit(emb, coarse_k, coarse_iter, vec_col)
+    coarse = kmeans_fit(emb, n_iter=3)
     # thread the coarse cell through the encode instead of joining
     # the code rows back to a separate assignment table by vec_id
     # (r10: the old `codes JOIN cells` was a corpus-wide shuffle the
     # narrow assign expression makes unnecessary)
-    emb_cells = _assign(emb, coarse, vec_col).select("vec_id", vec_col, "cell")
-    codebooks = pq_fit(emb, m, k, n_iter, dim, vec_col)
-    codes = pq_codes(emb_cells, m, k, n_iter, dim, vec_col,
-                     codebooks=codebooks, carry_cols=("cell",))
-    w = dim // m
+    emb_cells = _assign(emb, coarse, VEC_COL).select("vec_id", VEC_COL, "cell")
+    codebooks = pq_fit(emb)
+    codes = pq_codes(emb_cells, codebooks=codebooks, carry_cols=("cell",))
+    w = 64 // DEFAULT_PQ_M
 
     spark = emb.sparkSession
     coarse_df = spark.createDataFrame(
@@ -346,7 +335,7 @@ def ivfpq_topk(
     pw = Window.partitionBy("query_id").orderBy(F.asc("obj"), F.asc("cell"))
     probes = (
         qc.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= n_probe)
+        .filter(F.col("pr") <= 2)
         .select("query_id", "cell")
     )
 
@@ -381,7 +370,7 @@ def ivfpq_topk(
     win = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 5)
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -410,21 +399,19 @@ def ivfpq_residual_topk(
     emb: DataFrame,
     queries: DataFrame,
     topk: int = 5,
-    n_probe: int = 2,
     coarse_k: int = 8,
     coarse_iter: int = 3,
     m: int = DEFAULT_PQ_M,
     k: int = DEFAULT_PQ_K,
     n_iter: int = DEFAULT_PQ_ITER,
     dim: int = 64,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFADC proper (Jegou et al. 2011): PQ codebooks are trained on
     RESIDUALS v - coarse_centroid(cell(v)), which concentrates the
     quantizer's capacity on within-cell variation -- tighter codes
     than raw-vector PQ at the same bit budget. The serve-side lookup
     table becomes per-(query, probed cell): d2_j = ||(q - c_cell)_j -
-    codeword||^2; still |Q| * n_probe * m * k rows, still broadcast.
+    codeword||^2; still |Q| * 2 * m * k rows, still broadcast.
 
     Same scale posture as ivfpq_topk: the residual transform is a
     narrow per-row expression (one data-indexed lookup into the
@@ -434,7 +421,7 @@ def ivfpq_residual_topk(
 
     from .kmeans import _assign, kmeans_fit
 
-    coarse = kmeans_fit(emb, coarse_k, coarse_iter, vec_col)
+    coarse = kmeans_fit(emb, coarse_k, coarse_iter)
     lookup = _coarse_lookup_literal(coarse, dim)
 
     # the assign expression is narrow and already carries the vector,
@@ -442,11 +429,11 @@ def ivfpq_residual_topk(
     # the corpus back to its own assignment by vec_id (r10: the old
     # emb JOIN cells + codes JOIN cells were two corpus-wide shuffles
     # the carried `cell` column makes unnecessary)
-    res = _assign(emb, coarse, vec_col).select(
+    res = _assign(emb, coarse, VEC_COL).select(
         "vec_id",
         "cell",
         F.zip_with(
-            F.col(vec_col),
+            F.col(VEC_COL),
             F.element_at(lookup, (F.col("cell") + 1).cast("int")),
             lambda x, y: x.cast("double") - y,
         ).alias("res"),
@@ -487,7 +474,7 @@ def ivfpq_residual_topk(
     pw = Window.partitionBy("query_id").orderBy(F.asc("obj"), F.asc("cell"))
     probes = (
         qc.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= n_probe)
+        .filter(F.col("pr") <= 2)
         .select(
             "query_id",
             "cell",

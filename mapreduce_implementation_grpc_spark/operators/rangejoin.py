@@ -42,8 +42,6 @@ def time_range_pairs(
     right: DataFrame,
     key: str,
     max_gap_s: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
 ) -> DataFrame:
     """All (left, right) pairs sharing `key` with
     left_ts - max_gap_s <= right_ts <= left_ts (bounds inclusive).
@@ -60,12 +58,12 @@ def time_range_pairs(
     # cast("timestamp") first: parquet TIMESTAMP_NTZ columns are not
     # accepted by unix_micros, and with the session TZ pinned to UTC
     # (session.py) the cast is value-preserving for both variants
-    l_us = F.unix_micros(F.col(left_ts).cast("timestamp"))
+    l_us = F.unix_micros(F.col("ts").cast("timestamp"))
     l = left.withColumn("_us", l_us).withColumn(
         "_bucket", F.expr(f"_us div {w_us}")
     )
 
-    r_us = F.unix_micros(F.col(right_ts).cast("timestamp"))
+    r_us = F.unix_micros(F.col("ts").cast("timestamp"))
     r = (
         right.withColumn("_us_r", r_us)
         .withColumn("_b0", F.expr(f"_us_r div {w_us}"))

@@ -38,6 +38,9 @@ from pyspark.sql import functions as F
 
 from ..materialize import materialize
 
+GROUP_COL = "event_type"
+MAD_K = 3.0
+
 
 def _lower_median(
     counts: DataFrame, group_col: str, value_col: str, cnt_col: str, out: str
@@ -58,20 +61,15 @@ def _lower_median(
     )
 
 
-def mad_outliers(
-    df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    k: float = 3.0,
-) -> DataFrame:
+def mad_outliers(df: DataFrame) -> DataFrame:
     """Per-group robust outlier report: [group, n, med, mad,
     hampel_cut, n_outliers, max_dev], ordered by group. med/mad are
-    exact lower medians; hampel_cut = mad * k * 1.4826; n_outliers
+    exact lower medians; hampel_cut = mad * MAD_K * 1.4826; n_outliers
     counts |v - med| > hampel_cut. An all-constant group (mad = 0)
     flags every non-median value -- the honest degenerate reading."""
     counts = materialize(
         df.groupBy(
-            F.col(group_col).alias("g"), F.col(value_col).alias("v")
+            F.col(GROUP_COL).alias("g"), F.col("value").alias("v")
         ).agg(F.count("*").alias("c"))
     )
     med = _lower_median(counts, "g", "v", "c", "med")
@@ -82,7 +80,7 @@ def mad_outliers(
         .agg(F.sum("c").alias("c"))
     )
     mad = _lower_median(devs, "g", "_dev", "c", "mad")
-    cut = (F.col("mad") * F.lit(float(k)) * F.lit(1.4826)).alias("hampel_cut")
+    cut = (F.col("mad") * F.lit(MAD_K) * F.lit(1.4826)).alias("hampel_cut")
     return (
         devs.join(mad, "g")
         .groupBy("g", "med", "mad")
@@ -91,14 +89,14 @@ def mad_outliers(
             F.sum(
                 F.when(
                     F.col("_dev")
-                    > F.col("mad") * F.lit(float(k)) * F.lit(1.4826),
+                    > F.col("mad") * F.lit(MAD_K) * F.lit(1.4826),
                     F.col("c"),
                 ).otherwise(F.lit(0))
             ).alias("n_outliers"),
             F.max("_dev").alias("max_dev"),
         )
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias(GROUP_COL),
             "n",
             "med",
             "mad",
@@ -106,7 +104,7 @@ def mad_outliers(
             "n_outliers",
             "max_dev",
         )
-        .orderBy(group_col)
+        .orderBy(GROUP_COL)
     )
 
 

@@ -32,13 +32,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+ITEM_COL = "event_type"
+USER_COL = "user_id"
+
 
 def contiguous_sequences(
     events: DataFrame,
     n: int = 3,
-    user_col: str = "user_id",
-    item_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
     min_support: int = 1,
     top_n: int = 20,
 ) -> DataFrame:
@@ -48,14 +48,12 @@ def contiguous_sequences(
     ordered support desc, occurrences desc, then steps. `n` >= 2."""
     if n < 2:
         raise ValueError(f"contiguous_sequences: n must be >= 2, got {n}")
-    w = Window.partitionBy(user_col).orderBy(
-        *[F.asc(c) for c in order_cols]
-    )
-    steps = [F.col(item_col).alias("step_1")] + [
-        F.lead(item_col, i).over(w).alias(f"step_{i + 1}")
+    w = Window.partitionBy(USER_COL).orderBy(F.asc("ts"), F.asc("event_id"))
+    steps = [F.col(ITEM_COL).alias("step_1")] + [
+        F.lead(ITEM_COL, i).over(w).alias(f"step_{i + 1}")
         for i in range(1, n)
     ]
-    grams = events.select(F.col(user_col).alias("_u"), *steps).filter(
+    grams = events.select(F.col(USER_COL).alias("_u"), *steps).filter(
         F.col(f"step_{n}").isNotNull()
     )
     step_names = [f"step_{i + 1}" for i in range(n)]

@@ -30,18 +30,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
-from .dedup import DEFAULT_SHINGLE_K, shingle_rows_flat
+from .dedup import shingle_rows_flat
+
+CONTAINMENT_T_DEN = 10
+CONTAINMENT_T_NUM = 9
+JACCARD_T_DEN = 5
+JACCARD_T_NUM = 4
 
 
-def sorted_shingle_sets(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
-) -> DataFrame:
+def sorted_shingle_sets(docs: DataFrame) -> DataFrame:
     """[doc_id, st (shingles sorted rarest-first), sz] -- the shared
     input of every prefix-filtered set join; materialized once (the
     prefix explode and the pair joins all re-read it)."""
-    sh = shingle_rows_flat(docs, text_col=text_col, k=k).distinct()
+    sh = shingle_rows_flat(docs).distinct()
     dfreq = sh.groupBy("sh").agg(F.count("*").alias("df"))
     sets = (
         sh.join(dfreq, "sh")
@@ -57,23 +58,17 @@ def sorted_shingle_sets(
     return materialize(sets)
 
 
-def jaccard_prefix_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
-    t_num: int = 4,
-    t_den: int = 5,
-) -> DataFrame:
+def jaccard_prefix_pairs(docs: DataFrame) -> DataFrame:
     """All (doc_a < doc_b) pairs with Jaccard(shingle sets) >=
     t_num/t_den, exactly. The threshold is a RATIONAL so the final
     predicate is pure integer arithmetic (t_den*inter >= t_num*union)
     -- no float compare to disagree across engines; the reported
     jaccard itself is the one rounded double division. The shared
     sorted-shingle-sets table is pinned once (materialize.py)."""
-    sets = sorted_shingle_sets(docs, text_col=text_col, k=k)
+    sets = sorted_shingle_sets(docs)
     plen = (
         F.col("sz")
-        - F.ceil(F.col("sz") * F.lit(t_num) / F.lit(t_den)).cast("int")
+        - F.ceil(F.col("sz") * F.lit(JACCARD_T_NUM) / F.lit(JACCARD_T_DEN)).cast("int")
         + F.lit(1)
     )
     pref = sets.select(
@@ -89,8 +84,8 @@ def jaccard_prefix_pairs(
             pref.alias("b"),
             (F.col("a.ptok") == F.col("b.ptok"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.sz") * t_den >= F.col("b.sz") * t_num)
-            & (F.col("b.sz") * t_den >= F.col("a.sz") * t_num),
+            & (F.col("a.sz") * JACCARD_T_DEN >= F.col("b.sz") * JACCARD_T_NUM)
+            & (F.col("b.sz") * JACCARD_T_DEN >= F.col("a.sz") * JACCARD_T_NUM),
         )
         .select(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
@@ -121,7 +116,7 @@ def jaccard_prefix_pairs(
             inter.alias("inter"),
             (F.col("za").cast("long") + F.col("zb") - inter).alias("un"),
         )
-        .filter(F.lit(t_den) * F.col("inter") >= F.lit(t_num) * F.col("un"))
+        .filter(F.lit(JACCARD_T_DEN) * F.col("inter") >= F.lit(JACCARD_T_NUM) * F.col("un"))
         .select(
             "doc_a",
             "doc_b",
@@ -132,13 +127,7 @@ def jaccard_prefix_pairs(
     )
 
 
-def containment_prefix_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = DEFAULT_SHINGLE_K,
-    t_num: int = 9,
-    t_den: int = 10,
-) -> DataFrame:
+def containment_prefix_pairs(docs: DataFrame) -> DataFrame:
     """All DIRECTED pairs (doc_small != doc_big) with containment
     C(small in big) = |S_small & S_big| / |S_small| >= t_num/t_den,
     exactly -- the ASYMMETRIC near-dup Jaccard cannot see (a chunk
@@ -158,10 +147,10 @@ def containment_prefix_pairs(
     rounded int/int division. The registry oracle is the NAIVE
     all-pairs SQL -- the hash match proves the prefix filter
     lossless."""
-    sets = sorted_shingle_sets(docs, text_col=text_col, k=k)
+    sets = sorted_shingle_sets(docs)
     plen = (
         F.col("sz")
-        - F.ceil(F.col("sz") * F.lit(t_num) / F.lit(t_den)).cast("int")
+        - F.ceil(F.col("sz") * F.lit(CONTAINMENT_T_NUM) / F.lit(CONTAINMENT_T_DEN)).cast("int")
         + F.lit(1)
     )
     pref = sets.select(
@@ -179,7 +168,7 @@ def containment_prefix_pairs(
             (F.col("a.ptok") == F.col("b.ptok"))
             & (F.col("a.doc_id") != F.col("b.doc_big"))
             # |B| >= ceil(t*|A|) -- B too small to contain t of A
-            & (F.col("b.zb") * t_den >= F.col("a.sz") * t_num),
+            & (F.col("b.zb") * CONTAINMENT_T_DEN >= F.col("a.sz") * CONTAINMENT_T_NUM),
         )
         .select(F.col("a.doc_id").alias("doc_small"), "doc_big")
         .distinct()
@@ -206,7 +195,7 @@ def containment_prefix_pairs(
             inter.alias("inter"),
             F.col("za").cast("long").alias("size_small"),
         )
-        .filter(F.lit(t_den) * F.col("inter") >= F.lit(t_num) * F.col("za"))
+        .filter(F.lit(CONTAINMENT_T_DEN) * F.col("inter") >= F.lit(CONTAINMENT_T_NUM) * F.col("za"))
         .withColumn(
             "containment", F.round(F.col("inter") / F.col("size_small"), 6)
         )

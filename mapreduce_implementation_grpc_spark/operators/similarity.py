@@ -37,6 +37,10 @@ _SM_M1 = 0xBF58476D1CE4E5B9
 _SM_M2 = 0x94D049BB133111EB
 _U64 = 0xFFFFFFFFFFFFFFFF
 
+VEC_COL = "embedding"
+DIM = 64
+ID_COL = "vec_id"
+
 
 def _mix64(x: int) -> int:
     """splitmix64 finalizer (Steele et al., 'Fast Splittable
@@ -76,15 +80,15 @@ def lsh_planes(num_planes: int = DEFAULT_NUM_PLANES, dim: int = 64) -> list[list
 _CLUSTERED_SEED = 1 << 32
 
 
-def clustered_centers(n_clusters: int = 25, dim: int = 64) -> list[list[float]]:
-    """Deterministic cluster centers in [-0.5, 0.5)^dim via the same
+def clustered_centers(n_clusters: int = 25) -> list[list[float]]:
+    """Deterministic cluster centers in [-0.5, 0.5)^DIM via the same
     splitmix64 mix as lsh_planes (disjoint seed domain). Embedded as
     literals in both the Spark plan and the DuckDB oracle, so every
     clustered-fixture result stays hash-checkable."""
     return [
         [
-            _mix64(_CLUSTERED_SEED + c * dim + d) / 2.0**64 - 0.5
-            for d in range(dim)
+            _mix64(_CLUSTERED_SEED + c * DIM + d) / 2.0**64 - 0.5
+            for d in range(DIM)
         ]
         for c in range(n_clusters)
     ]
@@ -94,8 +98,6 @@ def synthetic_clustered_embeddings(
     ids: DataFrame,
     n_clusters: int = 25,
     sigma: float = 0.5,
-    dim: int = 64,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """DataFrame[vec_id, cluster, embedding(array<double>)]: a
     deterministic corpus WITH real neighborhood structure, derived
@@ -117,9 +119,9 @@ def synthetic_clustered_embeddings(
     All JVM-side expression work (md5 + element_at over a folded
     center literal): no Python crossing, codegen-friendly, and at
     100 TB the generation is a narrow map over the id column."""
-    centers = clustered_centers(n_clusters, dim)
+    centers = clustered_centers(n_clusters)
     flat = F.array(*[F.lit(float(x)) for row in centers for x in row])
-    vid = F.col(id_col)
+    vid = F.col(ID_COL)
 
     def _dim_val(d):
         hx = F.substring(
@@ -130,18 +132,16 @@ def synthetic_clustered_embeddings(
             - F.lit(0.5)
         )
         return (
-            F.element_at(
-                flat, (F.col("cluster") * dim + d + 1).cast("int")
-            )
+            F.element_at(flat, (F.col("cluster") * DIM + d + 1).cast("int"))
             + F.lit(float(sigma)) * u
         )
 
     return (
-        ids.select(id_col)
+        ids.select(ID_COL)
         .withColumn("cluster", (vid % n_clusters).cast("long"))
         .withColumn(
             "embedding",
-            F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), _dim_val),
+            F.transform(F.sequence(F.lit(0), F.lit(DIM - 1)), _dim_val),
         )
     )
 
@@ -167,10 +167,8 @@ def _bucket_col(vec, planes: list[list[float]]):
     return bucket
 
 
-def with_lsh_bucket(
-    emb: DataFrame, vec_col: str = "embedding", num_planes: int = DEFAULT_NUM_PLANES, dim: int = 64
-) -> DataFrame:
-    return emb.withColumn("bucket", _bucket_col(F.col(vec_col), lsh_planes(num_planes, dim)))
+def with_lsh_bucket(emb: DataFrame, dim: int = 64) -> DataFrame:
+    return emb.withColumn("bucket", _bucket_col(F.col(VEC_COL), lsh_planes(dim=dim)))
 
 
 LSH_BANDS = 24
@@ -179,7 +177,6 @@ LSH_ROWS_PER_BAND = 5
 
 def with_lsh_bands(
     emb: DataFrame,
-    vec_col: str = "embedding",
     bands: int = LSH_BANDS,
     rows_per_band: int = LSH_ROWS_PER_BAND,
     dim: int = 64,
@@ -248,9 +245,7 @@ def with_lsh_bands(
     # explode itself already skips null/empty arrays, so the inferred
     # pre-filter buys nothing here.
     return (
-        emb.withColumn(
-            "_bks", _band_buckets.asNondeterministic()(F.col(vec_col))
-        )
+        emb.withColumn("_bks", _band_buckets.asNondeterministic()(F.col(VEC_COL)))
         .select(
             "*", F.posexplode(F.col("_bks")).alias("band", "bucket")
         )
@@ -262,7 +257,6 @@ def knn_brute_force(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -273,7 +267,7 @@ def knn_brute_force(
     join (once per row, not once per pair); only the dot product is
     per-pair work."""
     corpus = emb.select(
-        F.col("vec_id"), F.col(vec_col).alias("vec"), l2_norm_col(vec_col).alias("vnorm")
+        F.col("vec_id"), F.col(VEC_COL).alias("vec"), l2_norm_col(VEC_COL).alias("vnorm")
     )
     q = queries.select("query_id", "qvec", l2_norm_col("qvec").alias("qnorm"))
     scored = F.broadcast(q).crossJoin(corpus).filter(F.col("query_id") != F.col("vec_id"))
@@ -293,18 +287,14 @@ def knn_brute_force(
 def ann_lsh_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    num_planes: int = DEFAULT_NUM_PLANES,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
     bucket, then exact cosine within. Same output schema as
     knn_brute_force (+bucket); recall < 1 by design -- the scale path
     when the corpus is too large to scan per query batch."""
-    planes = lsh_planes(num_planes, dim)
-    corpus = with_lsh_bucket(emb, vec_col, num_planes, dim).select(
-        "vec_id", F.col(vec_col).alias("vec"), "bucket", l2_norm_col(vec_col).alias("vnorm")
+    planes = lsh_planes()
+    corpus = with_lsh_bucket(emb).select(
+        "vec_id", F.col(VEC_COL).alias("vec"), "bucket", l2_norm_col(VEC_COL).alias("vnorm")
     )
     q = queries.withColumn("bucket", _bucket_col(F.col("qvec"), planes)).withColumn(
         "qnorm", l2_norm_col("qvec")
@@ -323,7 +313,7 @@ def ann_lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "bucket", "neighbor_id", "cosine", "rank")
     )
 
@@ -331,14 +321,10 @@ def ann_lsh_topk(
 def ann_lsh_multiprobe_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    num_planes: int = DEFAULT_NUM_PLANES,
-    dim: int = 64,
 ) -> DataFrame:
     """Multi-probe LSH ANN (Lv et al., VLDB 2007): probe the query's
     own bucket PLUS every bucket at Hamming distance 1 (flip one sign
-    bit) -- num_planes+1 probes per query. Single-bucket LSH recall
+    bit) -- DEFAULT_NUM_PLANES+1 probes per query. Single-bucket LSH recall
     is bounded by p_agree^planes (all signs must match); probing the
     1-flip shells recovers the neighbors that disagree on exactly one
     plane at the cost of probing (planes+1)/2^planes of the corpus in
@@ -347,12 +333,12 @@ def ann_lsh_multiprobe_topk(
 
     Output schema matches knn_brute_force: [query_id, neighbor_id,
     cosine, rank]."""
-    planes = lsh_planes(num_planes, dim)
-    corpus = with_lsh_bucket(emb, vec_col, num_planes, dim).select(
+    planes = lsh_planes()
+    corpus = with_lsh_bucket(emb).select(
         "vec_id",
-        F.col(vec_col).alias("vec"),
+        F.col(VEC_COL).alias("vec"),
         "bucket",
-        l2_norm_col(vec_col).alias("vnorm"),
+        l2_norm_col(VEC_COL).alias("vnorm"),
     )
     q = queries.withColumn(
         "qbucket", _bucket_col(F.col("qvec"), planes)
@@ -364,7 +350,7 @@ def ann_lsh_multiprobe_topk(
                 F.col("qbucket"),
                 *[
                     F.col("qbucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                    for i in range(num_planes)
+                    for i in range(DEFAULT_NUM_PLANES)
                 ],
             )
         ),
@@ -386,7 +372,7 @@ def ann_lsh_multiprobe_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -398,17 +384,13 @@ ANN_ROWS_PER_BAND = 7
 def ann_lsh_banded_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
     bands: int = ANN_BANDS,
-    rows_per_band: int = ANN_ROWS_PER_BAND,
-    dim: int = 64,
 ) -> DataFrame:
     """Banded-LSH ANN with exact re-ranking -- the usable-recall
     operating point of the LSH family (round 9, VERDICT r8 #1).
 
     Candidate generation: corpus and queries each hash into `bands`
-    independent tables of `rows_per_band` sign bits (with_lsh_bands);
+    independent tables of ANN_ROWS_PER_BAND sign bits (with_lsh_bands);
     a corpus vector is a candidate for a query iff they collide in
     ANY band (OR-of-ANDs). Re-rank: exact cosine over the DISTINCT
     candidate set, top-k per query. Recall tracks candidate coverage
@@ -426,17 +408,14 @@ def ann_lsh_banded_topk(
     candidate-pair grain; scoring re-joins the corpus by vec_id
     (equi-join) and the query side by broadcast. No stage is ever
     all-pairs."""
-    cand = banded_candidates(emb, queries, vec_col, bands, rows_per_band, dim)
-    return rerank_topk(cand, emb, queries, k, vec_col)
+    cand = banded_candidates(emb, queries, bands)
+    return rerank_topk(cand, emb, queries)
 
 
 def banded_candidates(
     emb: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
     bands: int = ANN_BANDS,
-    rows_per_band: int = ANN_ROWS_PER_BAND,
-    dim: int = 64,
 ) -> DataFrame:
     """DataFrame[query_id, vec_id]: the DISTINCT banded OR-of-ANDs
     candidate set (collide in ANY band). Factored out of
@@ -444,14 +423,12 @@ def banded_candidates(
     re-ranked top-k and the candidate volume (the selectivity rows)
     hashes the corpus once, not twice."""
     cb = with_lsh_bands(
-        emb.select("vec_id", vec_col), vec_col, bands, rows_per_band, dim
+        emb.select("vec_id", VEC_COL), bands, ANN_ROWS_PER_BAND
     ).select("vec_id", "band", "bucket")
     qb = with_lsh_bands(
-        queries.select("query_id", F.col("qvec").alias(vec_col)),
-        vec_col,
+        queries.select("query_id", F.col("qvec").alias(VEC_COL)),
         bands,
-        rows_per_band,
-        dim,
+        ANN_ROWS_PER_BAND,
     ).select("query_id", "band", "bucket")
     return (
         F.broadcast(qb)
@@ -466,8 +443,6 @@ def rerank_topk(
     cand: DataFrame,
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
     count_col: str | None = None,
 ) -> DataFrame:
     """Exact-cosine re-rank of a (query_id, vec_id) candidate set:
@@ -481,9 +456,7 @@ def rerank_topk(
     probe volume from ONE evaluation of the candidate pipeline
     (referencing cand twice would re-run the band hashing: Spark
     expands shared lazy subplans per consumer)."""
-    corpus = emb.select(
-        "vec_id", F.col(vec_col).alias("vec"), l2_norm_col(vec_col).alias("vnorm")
-    )
+    corpus = emb.select("vec_id", F.col(VEC_COL).alias("vec"), l2_norm_col(VEC_COL).alias("vnorm"))
     q = queries.select("query_id", "qvec", l2_norm_col("qvec").alias("qnorm"))
     scored = (
         cand.join(F.broadcast(q), "query_id")
@@ -506,12 +479,12 @@ def rerank_topk(
         )
         out_cols.append(count_col)
     return (
-        ranked.filter(F.col("rank") <= k)
+        ranked.filter(F.col("rank") <= 5)
         .select(*out_cols, F.col("rank").cast("long").alias("rank"))
     )
 
 
-def ivf_centroids(emb: DataFrame, vec_col: str = "embedding", by: str = "label") -> DataFrame:
+def ivf_centroids(emb: DataFrame, by: str = "label") -> DataFrame:
     """Coarse-quantizer centroids: element-wise mean per partition key
     (the `label` column stands in for k-means cell ids -- at 100 TB
     the cells come from a sampled k-means; the serving plan below is
@@ -523,7 +496,7 @@ def ivf_centroids(emb: DataFrame, vec_col: str = "embedding", by: str = "label")
     whole IVF serve plan is reproducible cross-engine and the driver
     can hash-check it; a double-fold avg would vary with partition
     splits)."""
-    flat = emb.select(F.col(by).alias("cell"), F.posexplode(vec_col).alias("pos", "v"))
+    flat = emb.select(F.col(by).alias("cell"), F.posexplode(VEC_COL).alias("pos", "v"))
     dsum = F.sum(F.col("v").cast("double").cast("decimal(27,12)"))
     means = flat.groupBy("cell", "pos").agg(
         (dsum.cast("string").cast("double") / F.count("*")).alias("c")
@@ -539,14 +512,13 @@ def _ivf_probes(
     emb: DataFrame,
     queries: DataFrame,
     n_probe: int = 2,
-    vec_col: str = "embedding",
     by: str = "label",
 ) -> DataFrame:
     """Per-query probed cells: route each query to its n_probe
     nearest centroids (queries x centroids is tiny -- both sides
     broadcast). Shared by ann_ivf_topk (serve) and
     ann_ivf_candidate_counts (cost accounting)."""
-    cents = ivf_centroids(emb, vec_col, by)
+    cents = ivf_centroids(emb, by)
     q = queries.select("query_id", "qvec", l2_norm_col("qvec").alias("qnorm"))
     qc = (
         F.broadcast(q)
@@ -567,8 +539,6 @@ def _ivf_probes(
 def ann_ivf_candidate_counts(
     emb: DataFrame,
     queries: DataFrame,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
     by: str = "label",
 ) -> DataFrame:
     """DataFrame[query_id, n_candidates]: how many corpus vectors the
@@ -577,9 +547,7 @@ def ann_ivf_candidate_counts(
     recall-vs-probe-volume tradeoff. Same probe routing as
     ann_ivf_topk; the count is a per-(query, cell) aggregate joined
     to broadcast probes, never a row-level fan-out."""
-    probes = _ivf_probes(emb, queries, n_probe, vec_col, by).select(
-        "query_id", "cell"
-    )
+    probes = _ivf_probes(emb, queries, by=by).select("query_id", "cell")
     cell_sizes = emb.groupBy(F.col(by).alias("cell")).agg(
         F.count("*").alias("_cn")
     )
@@ -612,7 +580,6 @@ def ann_ivf_topk(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 2,
-    vec_col: str = "embedding",
     by: str = "label",
 ) -> DataFrame:
     """IVF-style ANN: route each query to its n_probe nearest
@@ -621,10 +588,10 @@ def ann_ivf_topk(
     semi-filter on `cell`), never cross-joined; recall is tuned by
     n_probe. Complements ann_lsh_topk: IVF wins when vectors cluster,
     LSH when they don't."""
-    probes = _ivf_probes(emb, queries, n_probe, vec_col, by)
+    probes = _ivf_probes(emb, queries, n_probe, by)
     corpus = emb.select(
-        F.col("vec_id"), F.col(by).alias("cell"), F.col(vec_col).alias("vec"),
-        l2_norm_col(vec_col).alias("vnorm"),
+        F.col("vec_id"), F.col(by).alias("cell"), F.col(VEC_COL).alias("vec"),
+        l2_norm_col(VEC_COL).alias("vnorm"),
     )
     scored = (
         F.broadcast(probes)
@@ -647,7 +614,6 @@ def ann_ivf_topk(
 
 def embedding_dup_pairs(
     emb: DataFrame,
-    vec_col: str = "embedding",
     min_cosine: float = 0.99,
     use_lsh: bool = False,
     bands: int = LSH_BANDS,
@@ -669,12 +635,12 @@ def embedding_dup_pairs(
     grain (cosine is deterministically rounded, so duplicates are
     exact)."""
     base = (
-        with_lsh_bands(emb, vec_col, bands, rows_per_band, dim)
+        with_lsh_bands(emb, bands, rows_per_band, dim)
         if use_lsh
         else emb
     )
-    base = base.withColumn("nrm", l2_norm_col(vec_col))  # once per row, pre-join
-    cols = ["vec_id", vec_col, "nrm"] + (["band", "bucket"] if use_lsh else [])
+    base = base.withColumn("nrm", l2_norm_col(VEC_COL))  # once per row, pre-join
+    cols = ["vec_id", VEC_COL, "nrm"] + (["band", "bucket"] if use_lsh else [])
     a = base.select(*[F.col(c).alias(f"a_{c}") for c in cols])
     b = base.select(*[F.col(c).alias(f"b_{c}") for c in cols])
     cond = F.col("a_vec_id") < F.col("b_vec_id")
@@ -709,7 +675,7 @@ def embedding_dup_pairs(
             F.col("a_vec_id").alias("vec_a"),
             F.col("b_vec_id").alias("vec_b"),
             F.round(
-                dot_col(f"a_{vec_col}", f"b_{vec_col}") / (F.col("a_nrm") * F.col("b_nrm")), 6
+                dot_col(f"a_{VEC_COL}", f"b_{VEC_COL}") / (F.col("a_nrm") * F.col("b_nrm")), 6
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= min_cosine)
@@ -726,7 +692,6 @@ def semantic_dedup(
     min_cosine: float = 0.35,
     coarse_k: int = 8,
     coarse_iter: int = 3,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023,
     arXiv:2303.09540): cluster the embedding space with k-means,
@@ -749,24 +714,24 @@ def semantic_dedup(
     DuckDB-oracle-checkable end to end."""
     from .kmeans import _assign, kmeans_fit
 
-    cells = _assign(emb, kmeans_fit(emb, coarse_k, coarse_iter, vec_col), vec_col).select(
+    cells = _assign(emb, kmeans_fit(emb, coarse_k, coarse_iter), VEC_COL).select(
         "vec_id", "cell"
     )
     base = (
-        emb.select("vec_id", vec_col)
+        emb.select("vec_id", VEC_COL)
         .join(cells, "vec_id")
-        .withColumn("nrm", l2_norm_col(vec_col))
+        .withColumn("nrm", l2_norm_col(VEC_COL))
     )
     a = base.select(
         F.col("cell"),
         F.col("vec_id").alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
+        F.col(VEC_COL).alias("a_vec"),
         F.col("nrm").alias("a_nrm"),
     )
     b = base.select(
         F.col("cell"),
         F.col("vec_id").alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
+        F.col(VEC_COL).alias("b_vec"),
         F.col("nrm").alias("b_nrm"),
     )
     dropped = (

@@ -43,7 +43,6 @@ def salted_join(
     key: str | list[str],
     salt_from: str | Column,
     n_salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join `fact` (large, key-skewed) to `dim` (small next to
     fact, too big to broadcast) on `key`, spreading each hot key over
@@ -67,16 +66,12 @@ def salted_join(
     dim_s = dim.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
     )
-    return fact_s.join(dim_s.hint("shuffle_hash"), keys + ["_salt"], how).drop(
+    return fact_s.join(dim_s.hint("shuffle_hash"), keys + ["_salt"], "inner").drop(
         "_salt"
     )
 
 
-def doc_idf_sum(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_salt: int = 16,
-) -> DataFrame:
+def doc_idf_sum(docs: DataFrame) -> DataFrame:
     """Per-document total inverse document frequency -- the token-
     level join-back that makes join skew concrete: every token row
     joins the vocabulary's idf table on the word, and token frequency
@@ -87,8 +82,8 @@ def doc_idf_sum(
     broadcast threshold (hundreds of millions of types once tails,
     typos, and code identifiers are in), which is what forces a
     shuffle join; the join-back is always `salted_join`, so a hot
-    word's rows spread over `n_salt` tasks at the price of an
-    `n_salt`-fold replicated vocabulary.
+    word's rows spread over 16 tasks at the price of an
+    16-fold replicated vocabulary.
 
     Exactness: idf terms are round-9dp decimals, so the per-doc sum is
     associative (partition-order-independent) and string-routed back
@@ -98,7 +93,7 @@ def doc_idf_sum(
     from .tokenize import tokens_col
 
     toks = docs.select(
-        "doc_id", F.explode(tokens_col(normalized_col(text_col))).alias("word")
+        "doc_id", F.explode(tokens_col(normalized_col("text"))).alias("word")
     ).filter(F.col("word") != "")
     vocab = (
         toks.distinct().groupBy("word").agg(F.count("*").alias("df"))
@@ -110,7 +105,7 @@ def doc_idf_sum(
         .cast("decimal(12,9)")
         .alias("idf"),
     )
-    joined = salted_join(toks, idf, "word", salt_from="doc_id", n_salt=n_salt)
+    joined = salted_join(toks, idf, "word", salt_from="doc_id")
     return joined.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.sum("idf").cast("string").cast("double").alias("idf_sum"),

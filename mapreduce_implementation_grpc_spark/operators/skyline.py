@@ -97,7 +97,6 @@ def _dominates(t: str, s: str, dims: list[str]):
 def skyline(
     df: DataFrame,
     dims: list[str],
-    buckets: int = GRID_BUCKETS,
 ) -> DataFrame:
     """Exact d-dimensional skyline of `df` maximizing the integral
     columns `dims`: grid-prune, then per-partition local skyline,
@@ -115,7 +114,7 @@ def skyline(
     partitioning, but the final anti-join makes the OUTPUT exactly
     the mathematical skyline regardless -- partition-invariance is
     pytest-pinned."""
-    survivors = local_skyline(grid_survivors(df, dims, buckets), dims)
+    survivors = local_skyline(grid_survivors(df, dims), dims)
     return survivors.alias("s").join(
         F.broadcast(survivors.alias("t")),
         _dominates("t", "s", dims),
@@ -163,9 +162,7 @@ def local_skyline(df: DataFrame, dims: list[str]) -> DataFrame:
     return df.mapInPandas(part, schema)
 
 
-def grid_survivors(
-    df: DataFrame, dims: list[str], buckets: int = GRID_BUCKETS
-) -> DataFrame:
+def grid_survivors(df: DataFrame, dims: list[str]) -> DataFrame:
     """The grid-prune stage alone: every point NOT in a fully
     dominated cell -- a provably-sound superset of the skyline whose
     size is the operator's cost driver (the SCALING.md "skyline
@@ -177,13 +174,13 @@ def grid_survivors(
         *[F.max(d).alias(f"_max_{d}") for d in dims],
     )
     pts = df.crossJoin(F.broadcast(stats))
-    # fixed-width integer bucketing: idx in [0, buckets-1]; a
+    # fixed-width integer bucketing: idx in [0, GRID_BUCKETS-1]; a
     # degenerate (constant) dim collapses to bucket 0
     for d in dims:
         rng = F.col(f"_max_{d}") - F.col(f"_min_{d}") + 1
         pts = pts.withColumn(
             f"_cell_{d}",
-            F.floor((F.col(d) - F.col(f"_min_{d}")) * buckets / rng).cast("int"),
+            F.floor((F.col(d) - F.col(f"_min_{d}")) * GRID_BUCKETS / rng).cast("int"),
         )
     cell_cols = [f"_cell_{d}" for d in dims]
     pts = pts.drop(*[f"_min_{d}" for d in dims], *[f"_max_{d}" for d in dims])

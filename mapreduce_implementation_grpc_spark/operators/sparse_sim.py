@@ -38,7 +38,6 @@ def _term_counts(docs: DataFrame, text_col: str) -> DataFrame:
     """DataFrame[doc_id, word, tf] -- the per-doc term histogram."""
     words = tokenize(
         docs.select("doc_id", normalized_col(text_col).alias("norm")),
-        "norm",
         keep=["doc_id"],
     )
     return words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
@@ -46,7 +45,6 @@ def _term_counts(docs: DataFrame, text_col: str) -> DataFrame:
 
 def tf_cosine_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     max_df: int = 100,
     threshold: float = 0.3,
 ) -> DataFrame:
@@ -55,7 +53,7 @@ def tf_cosine_pairs(
 
     Returns DataFrame[doc_a, doc_b, n_shared_terms, cosine(6dp)].
     """
-    tf = _term_counts(docs, text_col)
+    tf = _term_counts(docs, "text")
     df_t = tf.groupBy("word").agg(F.count("*").alias("df"))
     kept = tf.join(df_t.filter(F.col("df") <= max_df), "word").select(
         "doc_id", "word", "tf"

@@ -47,18 +47,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+CENSORED_COL = "censored"
 
-def kaplan_meier(
-    subjects: DataFrame,
-    duration_col: str = "duration",
-    censored_col: str = "censored",
-) -> DataFrame:
+
+def kaplan_meier(subjects: DataFrame) -> DataFrame:
     """subjects[duration (integral), censored (bool)] -> KM table
     [duration, n_risk, n_events, n_censored, survival_zero,
     log_survival] ordered by duration."""
-    grain = subjects.groupBy(F.col(duration_col).alias("duration")).agg(
-        F.sum((~F.col(censored_col)).cast("long")).alias("n_events"),
-        F.sum(F.col(censored_col).cast("long")).alias("n_censored"),
+    grain = subjects.groupBy("duration").agg(
+        F.sum((~F.col(CENSORED_COL)).cast("long")).alias("n_events"),
+        F.sum(F.col(CENSORED_COL).cast("long")).alias("n_censored"),
         F.count("*").alias("_n_total"),
     )
     # at-risk at t = subjects with duration >= t: a suffix sum over
@@ -108,12 +106,10 @@ def kaplan_meier(
     ).orderBy("duration")
 
 
-def user_lifetimes(
-    events: DataFrame, horizon_days: int = 7
-) -> DataFrame:
+def user_lifetimes(events: DataFrame) -> DataFrame:
     """Per-user activity lifetime from an events table: duration =
     last active day - first active day; censored if the user was
-    still active within `horizon_days` of the corpus edge (their
+    still active within 7 days of the corpus edge (their
     lifetime is a lower bound, not an observation)."""
     spans = events.groupBy("user_id").agg(
         F.min(F.to_date("ts")).alias("_first"),
@@ -123,17 +119,11 @@ def user_lifetimes(
     return spans.crossJoin(F.broadcast(edge)).select(
         "user_id",
         F.datediff("_last", "_first").cast("long").alias("duration"),
-        (
-            F.datediff("_edge", "_last") < F.lit(horizon_days)
-        ).alias("censored"),
+        (F.datediff("_edge", "_last") < F.lit(7)).alias("censored"),
     )
 
 
-def nelson_aalen(
-    subjects: DataFrame,
-    duration_col: str = "duration",
-    censored_col: str = "censored",
-) -> DataFrame:
+def nelson_aalen(subjects: DataFrame) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator over the same
     right-censored lifetimes as `kaplan_meier`: H(t) = sum over event
     times u <= t of d(u) / n_risk(u) -- the integral-of-risk
@@ -152,9 +142,9 @@ def nelson_aalen(
     a suffix-count window for n_risk and a prefix sum for the
     hazard; the only single-partition windows run over that reduced
     grain, never subjects."""
-    grain = subjects.groupBy(F.col(duration_col).alias("duration")).agg(
-        F.sum((~F.col(censored_col)).cast("long")).alias("n_events"),
-        F.sum(F.col(censored_col).cast("long")).alias("n_censored"),
+    grain = subjects.groupBy("duration").agg(
+        F.sum((~F.col(CENSORED_COL)).cast("long")).alias("n_events"),
+        F.sum(F.col(CENSORED_COL).cast("long")).alias("n_censored"),
         F.count("*").alias("_n_total"),
     )
     w_risk = Window.orderBy("duration").rowsBetween(

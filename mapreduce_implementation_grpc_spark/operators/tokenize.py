@@ -26,7 +26,7 @@ def tokens_col(col: Column | str) -> Column:
     return F.filter(F.split(col, TOKEN_SPLIT_PATTERN), lambda t: t != F.lit(""))
 
 
-def tokenize(df: DataFrame, in_col: str = "norm", out_col: str = "word", keep: list[str] | None = None) -> DataFrame:
+def tokenize(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
     """Explode to one row per token (the reference's flatMap)."""
     cols = [F.col(c) for c in (keep or [])]
-    return df.select(*cols, F.explode(tokens_col(in_col)).alias(out_col))
+    return df.select(*cols, F.explode(tokens_col("norm")).alias("word"))

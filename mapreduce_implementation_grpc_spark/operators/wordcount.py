@@ -34,11 +34,13 @@ WORD_COUNT_SCHEMA = StructType(
     [StructField("word", StringType(), False), StructField("cnt", LongType(), False)]
 )
 
+TEXT_COL = "line"
+
 
 def word_count(corpus: DataFrame, text_col: str = "line") -> DataFrame:
     """corpus[text_col] -> DataFrame[word, cnt]; the reference's whole
     pipeline O1..O9 as one declarative plan."""
-    words = tokenize(corpus.select(normalized_col(text_col).alias("norm")), "norm")
+    words = tokenize(corpus.select(normalized_col(text_col).alias("norm")))
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
 
 
@@ -48,14 +50,14 @@ def _sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def word_count_sql(spark: SparkSession, corpus: DataFrame, text_col: str = "line") -> DataFrame:
+def word_count_sql(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """Same plan via the SQL front end (identical Catalyst output)."""
     corpus.createOrReplaceTempView("__corpus")
     return spark.sql(
         f"""
         SELECT word, count(*) AS cnt
         FROM (
-          SELECT explode(filter(split(trim(lower(regexp_replace({text_col},
+          SELECT explode(filter(split(trim(lower(regexp_replace({TEXT_COL},
                    {_sql_string(NORMALIZE_PATTERN)}, ''))),
                    {_sql_string(TOKEN_SPLIT_PATTERN)}), t -> t != '')) AS word
           FROM __corpus
@@ -65,7 +67,7 @@ def word_count_sql(spark: SparkSession, corpus: DataFrame, text_col: str = "line
     )
 
 
-def word_count_salted(corpus: DataFrame, text_col: str = "line", salt_buckets: int = 16) -> DataFrame:
+def word_count_salted(corpus: DataFrame, salt_buckets: int = 16) -> DataFrame:
     """Skew-resilient two-stage aggregation: groupBy(word, salt) then
     groupBy(word).
 
@@ -78,7 +80,7 @@ def word_count_salted(corpus: DataFrame, text_col: str = "line", salt_buckets: i
     aggregation skew on a hot GROUP BY key is still the user's problem
     -- this operator is the pattern. Result identical to word_count.
     """
-    words = tokenize(corpus.select(normalized_col(text_col).alias("norm")), "norm")
+    words = tokenize(corpus.select(normalized_col(TEXT_COL).alias("norm")))
     salted = words.withColumn(
         "salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
     )

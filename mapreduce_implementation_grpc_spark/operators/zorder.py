@@ -20,15 +20,15 @@ division, Morton interleave via shift/mask), so even the layout
 metrics are DuckDB-hash-checkable:
 
 1. per-dimension bin rank over [min, max]:
-   ``bx = ((x - lo) * 2^bits) div (hi - lo + 1)`` -- monotone, exact,
-   in [0, 2^bits) for every in-range x (positive operands, so Spark's
+   ``bx = ((x - lo) * 2^BITS) div (hi - lo + 1)`` -- monotone, exact,
+   in [0, 2^BITS) for every in-range x (positive operands, so Spark's
    truncating `div` == DuckDB's floor `//`);
 2. Morton code ``z = interleave(bx, bt)`` -- bit i of bx lands at
    2i, bit i of bt at 2i+1 (statically unrolled shift/mask sum, the
    same expression text generated for both engines);
-3. quadtree cell = high bits of z (``z >> cell_shift``): each cell is
+3. quadtree cell = high bits of z (``z >> CELL_SHIFT``): each cell is
    an axis-aligned rectangle of at most
-   2^ceil(cell_shift/2) x 2^floor(cell_shift/2) bins.
+   2^ceil(CELL_SHIFT/2) x 2^floor(CELL_SHIFT/2) bins.
 
 Scale: one stats aggregate (4 numbers, broadcast), then a map-only
 bin/interleave projection -- no shuffle until the consumer's own
@@ -49,30 +49,32 @@ from ..sources.catalog import load_table
 BITS = 8  # bins per dimension = 2^8; z fits in 16 bits
 CELL_SHIFT = 6  # cells = z >> 6 -> up to 1024 quadtree cells
 
+OUT_CTE = "hb"
 
-def morton_col(bx: Column, by: Column, bits: int = BITS) -> Column:
-    """Interleave two `bits`-wide non-negative ints: bit i of `bx` ->
+
+def morton_col(bx: Column, by: Column) -> Column:
+    """Interleave two BITS-wide non-negative ints: bit i of `bx` ->
     bit 2i, bit i of `by` -> bit 2i+1. Statically unrolled; every term
     touches disjoint output bits so plain + is a bitwise OR."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(BITS):
         z = z + F.shiftleft(F.shiftright(bx, i).bitwiseAND(F.lit(1)), 2 * i)
         z = z + F.shiftleft(F.shiftright(by, i).bitwiseAND(F.lit(1)), 2 * i + 1)
     return z
 
 
-def morton_sql(bx: str, by: str, bits: int = BITS) -> str:
+def morton_sql(bx: str, by: str) -> str:
     """The identical interleave as SQL text (DuckDB and Spark SQL both
     accept >> << &) -- generated from the same loop so the oracle
     cannot drift from the Spark column expression."""
     terms = []
-    for i in range(bits):
+    for i in range(BITS):
         terms.append(f"((({bx} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({by} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
 
 
-def _binned_events(spark: SparkSession, sf_dir: str, bits: int = BITS) -> DataFrame:
+def _binned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events with exact integer bin ranks `bx` (user_id) and `bt`
     (epoch-microsecond ts) plus the Morton code `z`. One stats
     aggregate (4 values, broadcast) + a map-only projection; lazily
@@ -87,13 +89,13 @@ def _binned_events(spark: SparkSession, sf_dir: str, bits: int = BITS) -> DataFr
         F.min("tus").alias("lo_t"),
         F.max("tus").alias("hi_t"),
     )
-    bx = F.expr(f"((user_id - lo_u) * {1 << bits}) div (hi_u - lo_u + 1)")
-    bt = F.expr(f"((tus - lo_t) * {1 << bits}) div (hi_t - lo_t + 1)")
+    bx = F.expr(f"((user_id - lo_u) * {1 << BITS}) div (hi_u - lo_u + 1)")
+    bt = F.expr(f"((tus - lo_t) * {1 << BITS}) div (hi_t - lo_t + 1)")
     return (
         base.crossJoin(F.broadcast(stats))
         .withColumn("bx", bx.cast("long"))
         .withColumn("bt", bt.cast("long"))
-        .withColumn("z", morton_col(F.col("bx"), F.col("bt"), bits))
+        .withColumn("z", morton_col(F.col("bx"), F.col("bt")))
         .drop("lo_u", "hi_u", "lo_t", "hi_t")
     )
 
@@ -101,8 +103,6 @@ def _binned_events(spark: SparkSession, sf_dir: str, bits: int = BITS) -> DataFr
 def zorder_cells(
     spark: SparkSession,
     sf_dir: str,
-    bits: int = BITS,
-    cell_shift: int = CELL_SHIFT,
 ) -> DataFrame:
     """Per-quadtree-cell layout statistics: row count and the raw
     (user_id, epoch-us) spans each contiguous z-range actually covers
@@ -110,8 +110,8 @@ def zorder_cells(
     Cells are aggregates of the binned rows: one hash shuffle on the
     cell id, nothing single-partition."""
     return (
-        _binned_events(spark, sf_dir, bits)
-        .groupBy(F.shiftright(F.col("z"), cell_shift).alias("cell"))
+        _binned_events(spark, sf_dir)
+        .groupBy(F.shiftright(F.col("z"), CELL_SHIFT).alias("cell"))
         .agg(
             F.count("*").alias("cnt"),
             (F.max("user_id") - F.min("user_id")).alias("u_span"),
@@ -121,18 +121,16 @@ def zorder_cells(
     )
 
 
-def zorder_skipping_summary(
-    spark: SparkSession, sf_dir: str, bits: int = BITS
-) -> DataFrame:
+def zorder_skipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The file-skipping tradeoff, measured: chunk the same events two
-    ways -- 256 contiguous Z-curve ranges (`z >> bits`) vs 256
+    ways -- 256 contiguous Z-curve ranges (`z >> BITS`) vs 256
     contiguous time bins (`bt`, the single-column layout the
     reference's range partitioner generalizes to) -- and total each
     chunk's per-dimension spans. Z-order bounds BOTH dimensions
     (user-range filters prune files; time filters still prune, one
     resolution coarser); the linear layout leaves every chunk spanning
     the full user range. All-integer output, hash-exact."""
-    binned = _binned_events(spark, sf_dir, bits)
+    binned = _binned_events(spark, sf_dir)
 
     def spans(chunk: Column, layout: str) -> DataFrame:
         per = binned.groupBy(chunk.alias("chunk")).agg(
@@ -148,7 +146,7 @@ def zorder_skipping_summary(
             F.sum("t_span_us").alias("sum_t_span_us"),
         )
 
-    return spans(F.shiftright(F.col("z"), bits), "zorder").unionByName(
+    return spans(F.shiftright(F.col("z"), BITS), "zorder").unionByName(
         spans(F.col("bt"), "linear_ts")
     )
 
@@ -181,25 +179,23 @@ def _hilbert_level_sql(i: int, s: int, n: int) -> tuple[str, str, str]:
     return x_sql, y_sql, d_sql
 
 
-def with_hilbert(
-    df: DataFrame, x: str = "bx", y: str = "bt", bits: int = BITS, out: str = "h"
-) -> DataFrame:
+def with_hilbert(df: DataFrame, x: str = "bx", y: str = "bt", out: str = "h") -> DataFrame:
     """Append the Hilbert curve index of integer bin ranks (`x`, `y`)
-    in [0, 2^bits) as `out`. Unlike the Morton interleave (a single
+    in [0, 2^BITS) as `out`. Unlike the Morton interleave (a single
     flat expression), the Hilbert recurrence rotates state between
     levels, so it is unrolled as a CHAIN of named columns (hx1..hd8,
     dropped at the end) -- each level references the previous by
-    name, keeping the expression tree linear in `bits` where naive
-    substitution would grow 3^bits. The chain is one map-only
+    name, keeping the expression tree linear in BITS where naive
+    substitution would grow 3^BITS. The chain is one map-only
     projection pipeline: no shuffle, stays in whole-stage codegen."""
-    n = 1 << bits
+    n = 1 << BITS
     cur = (
         df.withColumn("hx0", F.col(x))
         .withColumn("hy0", F.col(y))
         .withColumn("hd0", F.lit(0).cast("long"))
     )
-    for i in range(1, bits + 1):
-        s = 1 << (bits - i)
+    for i in range(1, BITS + 1):
+        s = 1 << (BITS - i)
         xs, ys, ds = _hilbert_level_sql(i, s, n)
         cur = (
             cur.withColumn(f"hx{i}", F.expr(xs))
@@ -208,25 +204,25 @@ def with_hilbert(
         )
     drop = [
         c
-        for i in range(bits + 1)
+        for i in range(BITS + 1)
         for c in (f"hx{i}", f"hy{i}", f"hd{i}")
     ]
-    return cur.withColumn(out, F.col(f"hd{bits}")).drop(*drop)
+    return cur.withColumn(out, F.col(f"hd{BITS}")).drop(*drop)
 
 
-def hilbert_ctes_sql(base: str, bits: int = BITS, out_cte: str = "hb") -> str:
+def hilbert_ctes_sql(base: str) -> str:
     """The identical level chain as DuckDB CTE text: `base` must
     provide hx0/hy0/hd0 (plus any passthrough columns); each level is
     `SELECT *, <generated exprs>` so the chain is linear in size. The
-    final CTE `{out_cte}` exposes hd{bits} -- alias it in the
+    final CTE `hb` exposes hd{BITS} -- alias it in the
     consumer."""
-    n = 1 << bits
+    n = 1 << BITS
     parts = []
     prev = base
-    for i in range(1, bits + 1):
-        s = 1 << (bits - i)
+    for i in range(1, BITS + 1):
+        s = 1 << (BITS - i)
         xs, ys, ds = _hilbert_level_sql(i, s, n)
-        name = out_cte if i == bits else f"{out_cte}_{i}"
+        name = OUT_CTE if i == BITS else f"{OUT_CTE}_{i}"
         parts.append(
             f"{name} AS (SELECT *, {xs} AS hx{i}, {ys} AS hy{i}, "
             f"{ds} AS hd{i} FROM {prev})"
@@ -238,16 +234,14 @@ def hilbert_ctes_sql(base: str, bits: int = BITS, out_cte: str = "hb") -> str:
 def hilbert_cells(
     spark: SparkSession,
     sf_dir: str,
-    bits: int = BITS,
-    cell_shift: int = CELL_SHIFT,
 ) -> DataFrame:
     """zorder_cells' twin on the Hilbert index: per-cell row count and
     raw per-dimension spans for contiguous Hilbert ranges. Same scale
     shape (stats broadcast + map-only projection + one hash shuffle
     on the cell id)."""
     return (
-        with_hilbert(_binned_events(spark, sf_dir, bits), bits=bits)
-        .groupBy(F.shiftright(F.col("h"), cell_shift).alias("cell"))
+        with_hilbert(_binned_events(spark, sf_dir))
+        .groupBy(F.shiftright(F.col("h"), CELL_SHIFT).alias("cell"))
         .agg(
             F.count("*").alias("cnt"),
             (F.max("user_id") - F.min("user_id")).alias("u_span"),
@@ -257,9 +251,7 @@ def hilbert_cells(
     )
 
 
-def hilbert_skipping_summary(
-    spark: SparkSession, sf_dir: str, bits: int = BITS
-) -> DataFrame:
+def hilbert_skipping_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert vs Morton under the same file-skipping metric as
     zorder_skipping_summary: 256 contiguous curve ranges each, total
     per-dimension spans. Expected (and oracle-pinned) result: the two
@@ -271,7 +263,7 @@ def hilbert_skipping_summary(
     matters for range-query caching and unaligned file boundaries --
     measured by curve_locality_stats. Keeping the tie as a checked
     result documents where curve choice does NOT matter."""
-    binned = with_hilbert(_binned_events(spark, sf_dir, bits), bits=bits)
+    binned = with_hilbert(_binned_events(spark, sf_dir))
 
     def spans(chunk: Column, layout: str) -> DataFrame:
         per = binned.groupBy(chunk.alias("chunk")).agg(
@@ -287,14 +279,12 @@ def hilbert_skipping_summary(
             F.sum("t_span_us").alias("sum_t_span_us"),
         )
 
-    return spans(F.shiftright(F.col("h"), bits), "hilbert").unionByName(
-        spans(F.shiftright(F.col("z"), bits), "zorder")
+    return spans(F.shiftright(F.col("h"), BITS), "hilbert").unionByName(
+        spans(F.shiftright(F.col("z"), BITS), "zorder")
     )
 
 
-def curve_locality_stats(
-    spark: SparkSession, sf_dir: str, bits: int = BITS
-) -> DataFrame:
+def curve_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Where Hilbert actually beats Morton, measured: walk the OCCUPIED
     grid cells in curve order and total the Manhattan distance of each
     successor step in bin space. Morton's order makes long diagonal
@@ -305,13 +295,13 @@ def curve_locality_stats(
     boundaries and range scans touch fewer distinct regions.
 
     Scale shape: the window ORDER BY runs over the DISTINCT-reduced
-    occupied-cell table (<= 4^bits aggregate rows, never the fact
+    occupied-cell table (<= 4^BITS aggregate rows, never the fact
     rows) -- the same only-aggregates-cross-SinglePartition discipline
     as the two-level ranking module."""
     from pyspark.sql import Window
 
     occ = (
-        with_hilbert(_binned_events(spark, sf_dir, bits), bits=bits)
+        with_hilbert(_binned_events(spark, sf_dir))
         .select("bx", "bt", "z", "h")
         .distinct()
     )
@@ -344,8 +334,6 @@ def write_zordered(
     path: str,
     x: str,
     y: str,
-    n_files: int = 32,
-    bits: int = BITS,
     curve: str = "morton",
 ) -> None:
     """Write `df` as parquet laid out along a space-filling curve of
@@ -370,8 +358,8 @@ def write_zordered(
         F.min(y).alias("lo_y"),
         F.max(y).alias("hi_y"),
     )
-    bx = F.expr(f"(({x} - lo_x) * {1 << bits}) div (hi_x - lo_x + 1)")
-    by = F.expr(f"(({y} - lo_y) * {1 << bits}) div (hi_y - lo_y + 1)")
+    bx = F.expr(f"(({x} - lo_x) * {1 << BITS}) div (hi_x - lo_x + 1)")
+    by = F.expr(f"(({y} - lo_y) * {1 << BITS}) div (hi_y - lo_y + 1)")
     binned = (
         df.crossJoin(F.broadcast(stats))
         .withColumn("_bx", bx.cast("long"))
@@ -379,14 +367,12 @@ def write_zordered(
         .drop("lo_x", "hi_x", "lo_y", "hi_y")
     )
     if curve == "morton":
-        keyed = binned.withColumn(
-            "_z", morton_col(F.col("_bx"), F.col("_by"), bits)
-        )
+        keyed = binned.withColumn("_z", morton_col(F.col("_bx"), F.col("_by")))
     else:
-        keyed = with_hilbert(binned, x="_bx", y="_by", bits=bits, out="_z")
+        keyed = with_hilbert(binned, x="_bx", y="_by", out="_z")
     (
         keyed.drop("_bx", "_by")
-        .repartitionByRange(n_files, "_z")
+        .repartitionByRange(32, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite")

@@ -55,7 +55,7 @@ def curate_documents(
     # max_iter=20: min-label propagation must reach the full
     # transitive closure (early exit keeps short components cheap) so
     # the result matches the oracle's recursive-CTE closure exactly
-    clusters = dedup_clusters(docs1, max_iter=20)
+    clusters = dedup_clusters(docs1)
     drop_near = clusters.filter(F.col("doc_id") != F.col("cluster")).select("doc_id")
     docs2 = docs1.join(drop_near, "doc_id", "left_anti")
 
@@ -91,8 +91,6 @@ def run_curation(
 def select_pretraining_corpus(
     spark: SparkSession,
     sf_dir: str,
-    target_source: str = "src0",
-    min_logw: float = 0.0,
 ) -> DataFrame:
     """End-to-end DATA-SELECTION pipeline (the importance-resampling
     counterpart of curate_documents' cleaning pipeline):
@@ -100,7 +98,7 @@ def select_pretraining_corpus(
         documents
           -> exact dedup              (md5 fingerprint, keep min doc_id)
           -> DSIR importance filter   (target-vs-raw log-likelihood
-                                       ratio >= min_logw: keep raw docs
+                                       ratio >= 0: keep raw docs
                                        at least as target-like as the
                                        raw average)
           -> temperature rebalancing  (mT5 alpha=0.5 language shares)
@@ -128,9 +126,9 @@ def select_pretraining_corpus(
     )
     docs1 = docs.join(keep, "doc_id", "left_semi")
 
-    w = dsir_weights(docs1, target_source=target_source)
+    w = dsir_weights(docs1)
     sel = (
-        w.filter(F.col("dsir_logw") >= min_logw)
+        w.filter(F.col("dsir_logw") >= 0.0)
         .select("doc_id", "dsir_logw")
         .transform(materialize)
     )

@@ -65,7 +65,7 @@ def q_cms_screened_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.cms import cms_screened_wordcount
 
     corpus = corpus_from_documents(spark, sf_dir)
-    tokens = tokenize(corpus.select(normalized_col("line").alias("norm")), "norm")
+    tokens = tokenize(corpus.select(normalized_col("line").alias("norm")))
     return cms_screened_wordcount(tokens)
 
 

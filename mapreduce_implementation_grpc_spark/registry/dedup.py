@@ -136,7 +136,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure the DuckDB recursive-CTE oracle computes even
     on long chain components (early exit keeps extra rounds free).
     EAGER: propagation rounds run at DataFrame-construction time."""
-    return dedup_clusters(load_table(spark, sf_dir, "documents"), max_iter=20)
+    return dedup_clusters(load_table(spark, sf_dir, "documents"))
 
 
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,7 +150,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     EAGER: cluster propagation runs at build time."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     clusters = dedup_clusters(
-        load_table(spark, sf_dir, "documents"), max_iter=20
+        load_table(spark, sf_dir, "documents")
     ).select("doc_id", F.col("cluster").alias("cl"))
     assigned = docs.join(clusters, "doc_id", "left").select(
         "doc_id", F.coalesce(F.col("cl"), F.col("doc_id")).alias("cluster")

@@ -100,7 +100,7 @@ def q_events_asof_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "feat_value",
     )
     left = ev.select("user_id", "ts", "event_id", "event_type")
-    joined = asof_join(left, right, by="user_id", left_ts="ts", right_ts="fts")
+    joined = asof_join(left, right, by="user_id", right_ts="fts")
     return joined.select(
         "event_id",
         "user_id",
@@ -158,7 +158,6 @@ def q_events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases,
         clicks,
         by="user_id",
-        left_ts="ts",
         right_ts="ts",
         value_cols=["click_id"],
         tolerance_us=2 * 3600 * 1_000_000,

@@ -373,7 +373,7 @@ def q_purchase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle unrolls the 3 rounds as MATERIALIZED CTEs."""
     from ..operators.hits import hits_scores
 
-    return hits_scores(spark, sf_dir, iters=3)
+    return hits_scores(spark, sf_dir)
 
 
 def _hits_ctes(iters: int = 3) -> str:
@@ -416,7 +416,7 @@ def q_cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash match proves the loop's stopping rule exact."""
     from ..operators.graph_motifs import cosupply_kcore
 
-    return cosupply_kcore(spark, sf_dir, k=8)
+    return cosupply_kcore(spark, sf_dir)
 
 
 def _kcore_ctes(k: int = 8, rounds: int = 8) -> str:

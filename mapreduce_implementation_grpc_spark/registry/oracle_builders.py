@@ -160,7 +160,7 @@ def _ann_lsh_multiprobe_sql(
     """
 
 
-def _projection_sql(k: int = 8, dim: int = 64) -> str:
+def _projection_sql() -> str:
     """Oracle twin of operators.projection.project_embeddings: the
     identical splitmix64-mixed plane literals (round 9 randomness
     fix), list_dot_product's sequential double fold == Spark's
@@ -171,7 +171,7 @@ def _projection_sql(k: int = 8, dim: int = 64) -> str:
         "round(list_dot_product(dvec, [{w}]), 6) AS p{p}".format(
             w=", ".join(repr(x) for x in plane), p=p
         )
-        for p, plane in enumerate(projection_planes(k, dim))
+        for p, plane in enumerate(projection_planes())
     )
     return f"""
       SELECT vec_id,
@@ -204,7 +204,7 @@ def _minhash_pairs_sql(
     rows_per_band = num_perm // bands
     sig_aggs = ",\n               ".join(
         f"min(({a} * hb + {b}) % {MINHASH_PRIME}) AS h{p}"
-        for p, (a, b) in enumerate(minhash_perm_constants(num_perm))
+        for p, (a, b) in enumerate(minhash_perm_constants())
     )
     band_selects = "\n        UNION ALL\n".join(
         "SELECT doc_id, {b} AS band_id, CAST(concat('0x', substr(md5("

@@ -1071,7 +1071,7 @@ def _clustered_v_ctes(n_clusters: int = 25, sigma: float = 0.5,
     generated vectors are bit-identical cross-engine)."""
     from ..operators.similarity import clustered_centers
 
-    cents = clustered_centers(n_clusters, dim)
+    cents = clustered_centers(n_clusters)
     vals = ",\n        ".join(
         "({c}, [{w}])".format(
             c=c, w=", ".join(_dlit(x) for x in cents[c])

@@ -121,7 +121,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O3 line count generalized: corpus-level totals in one pass."""
     docs = corpus_from_documents(spark, sf_dir)
-    words = tokenize(docs.select(normalized_col("line").alias("norm")), "norm")
+    words = tokenize(docs.select(normalized_col("line").alias("norm")))
     return words.agg(
         F.count("*").alias("n_tokens"),
         F.countDistinct("word").alias("n_distinct_words"),
@@ -137,7 +137,6 @@ def q_map_task_stats(spark: SparkSession, sf_dir: str, num_tasks: int = 4) -> Da
     words = tokenize(
         docs.select(task_id_col(F.col("doc_id"), num_tasks).alias("task_id"),
                     normalized_col("line").alias("norm")),
-        "norm",
         keep=["task_id"],
     )
     return words.groupBy("task_id").agg(

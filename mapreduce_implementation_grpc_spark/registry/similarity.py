@@ -41,7 +41,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    ann = ann_lsh_topk(emb, _query_vectors(spark, sf_dir), k=5)
+    ann = ann_lsh_topk(emb, _query_vectors(spark, sf_dir))
     return ann.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -57,7 +57,7 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_lsh_multiprobe_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    ann = ann_lsh_multiprobe_topk(emb, _query_vectors(spark, sf_dir), k=5)
+    ann = ann_lsh_multiprobe_topk(emb, _query_vectors(spark, sf_dir))
     return ann.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -265,7 +265,7 @@ def q_ann_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ann_lsh_banded_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_lsh_banded_topk(emb, _query_vectors(spark, sf_dir), k=5)
+    return ann_lsh_banded_topk(emb, _query_vectors(spark, sf_dir))
 
 
 ANN_BANDED_SWEEP = (16, 32, 64)
@@ -286,9 +286,7 @@ def q_ann_recall_lsh_banded_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings")
     out = None
     for bands in ANN_BANDED_SWEEP:
-        ann = ann_lsh_banded_topk(
-            emb, _query_vectors(spark, sf_dir), k=5, bands=bands
-        )
+        ann = ann_lsh_banded_topk(emb, _query_vectors(spark, sf_dir), bands=bands)
         r = _recall_df(spark, sf_dir, ann.select("query_id", "neighbor_id"))
         r = r.select(F.lit(bands).cast("long").alias("bands"), "*")
         out = r if out is None else out.unionByName(r)
@@ -316,14 +314,12 @@ def q_ann_banded_candidates_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     out = None
     for bands in ANN_BANDED_SWEEP:
         cb = with_lsh_bands(
-            emb.select("vec_id", "embedding"), "embedding",
-            bands, ANN_ROWS_PER_BAND,
+            emb.select("vec_id", "embedding"), bands, ANN_ROWS_PER_BAND,
         ).select("vec_id", "band", "bucket")
         qb = with_lsh_bands(
             _query_vectors(spark, sf_dir).select(
                 "query_id", F.col("qvec").alias("embedding")
             ),
-            "embedding",
             bands,
             ANN_ROWS_PER_BAND,
         ).select("query_id", "band", "bucket")
@@ -614,7 +610,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantization import ivfpq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivfpq_topk(emb, _query_vectors(spark, sf_dir), topk=5)
+    return ivfpq_topk(emb, _query_vectors(spark, sf_dir))
 
 
 def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,7 +786,7 @@ def q_ann_clustered_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # subplans per consumer; no exchange reuse here, measured)
         topk = rerank_topk(
             banded_candidates(corpus, q, bands=bands),
-            corpus, q, k=5, count_col="n_candidates",
+            corpus, q, count_col="n_candidates",
         )
         per_q = (
             topk.join(
@@ -858,7 +854,7 @@ def q_ann_clustered_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataF
         .agg(F.count("*").alias("n_hits"))
     )
     n_exact = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
-    n_cand = ann_ivf_candidate_counts(emb_cells, q, n_probe=2, by="cell")
+    n_cand = ann_ivf_candidate_counts(emb_cells, q, by="cell")
     total = corpus.agg(F.count("*").alias("_n"))
     nh = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
     ncand = F.coalesce(F.col("n_candidates"), F.lit(0)).cast("long")

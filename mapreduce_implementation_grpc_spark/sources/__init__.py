@@ -1,10 +1,9 @@
-from .catalog import TABLES, load_table, load_tables, register_views
+from .catalog import TABLES, load_table, register_views
 from .text import corpus_from_documents, read_text_corpus, with_task_id
 
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "register_views",
     "corpus_from_documents",
     "read_text_corpus",

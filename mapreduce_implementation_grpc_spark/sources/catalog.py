@@ -53,10 +53,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register temp views so plans can also be expressed via spark.sql."""
     for name in names:

@@ -32,11 +32,11 @@ def read_text_corpus(spark: SparkSession, path: str, min_partitions: int | None 
     return df
 
 
-def read_csv_table(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
+def read_csv_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """CSV source with explicit schema (schema inference is a full
     extra pass over the data -- never acceptable at 100 TB; callers
     pass the schema)."""
-    reader = spark.read.option("header", str(header).lower())
+    reader = spark.read.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
     else:
@@ -71,8 +71,8 @@ def task_id_col(key: Column, num_tasks: int = 4) -> Column:
     return (key % num_tasks).cast("int")
 
 
-def with_task_id(df: DataFrame, key: str = "doc_id", num_tasks: int = 4) -> DataFrame:
-    return df.withColumn("task_id", task_id_col(F.col(key), num_tasks))
+def with_task_id(df: DataFrame) -> DataFrame:
+    return df.withColumn("task_id", task_id_col(F.col("doc_id")))
 
 
 def read_orc_table(spark: SparkSession, path: str) -> DataFrame:

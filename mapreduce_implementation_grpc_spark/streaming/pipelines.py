@@ -3,7 +3,8 @@
 The reference is batch-only (one fixed corpus, one job;
 greeter_client.cc:398-416), but a 100 TB training-data pipeline
 ingests continuously. These are the incremental twins of the batch
-plans -- same transformations, readStream/writeStream endpoints:
+plans -- same transformations, readStream/writeStream endpoints.
+For example:
 
 - streaming_word_count: the reference query over an unbounded line
   stream. Complete-mode aggregation state is per-word partial counts
@@ -16,10 +17,15 @@ plans -- same transformations, readStream/writeStream endpoints:
   session_window (gap-based), the incremental form of
   plans.analytics.events_sessionize.
 
-All three return the *unstarted* streaming DataFrame; callers attach
+Most public functions are of two kinds. The ``streaming_*``
+functions return the *unstarted* streaming DataFrame; callers attach
 the sink (tests use format('memory'); production would use
-kafka/parquet with checkpointing). Streaming DataFrames cannot be
-collected, so these are pytest-verified (file-source fixtures ->
+kafka/parquet with checkpointing). The ``*_sink`` factories return a
+foreachBatch function that writes each microbatch to a path. Three
+batch helpers sit beside them: bm25_collection_stats fits the
+statistics streaming_bm25_scores serves, and dq_monitor_totals and
+drift_report read a sink's output back. Streaming DataFrames cannot be
+collected, so all of these are pytest-verified (file-source fixtures ->
 processAllAvailable -> compare against the batch twin) rather than
 DuckDB-oracle-checked.
 """
@@ -30,8 +36,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize, pin_before_overwrite
+from ..operators.curation import DECONTAM_NGRAM_K
 from ..operators.normalize import normalized_col
 from ..operators.tokenize import tokens_col
+
+TEXT_COL = "text"
+BM25_B = 0.75
+BM25_K1 = 1.2
+TS_COL = "ts"
+JOIN_WATERMARK = "2 hours"
 
 
 def streaming_user_totals_stateful(events: DataFrame) -> DataFrame:
@@ -263,8 +276,6 @@ def streaming_user_state_intervals(events: DataFrame) -> DataFrame:
 
 def streaming_dedup(
     docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Streaming exact dedup: first occurrence of each content
@@ -280,40 +291,36 @@ def streaming_dedup(
     exact dedup within the horizon, best-effort beyond it."""
     from ..operators.normalize import normalized_col as _norm
 
-    fp = docs.withColumn("fingerprint", F.md5(_norm(text_col)))
-    return fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(["fingerprint"])
+    fp = docs.withColumn("fingerprint", F.md5(_norm(TEXT_COL)))
+    return fp.withWatermark(TS_COL, watermark).dropDuplicatesWithinWatermark(["fingerprint"])
 
 
-def streaming_signup_purchase_join(
-    events: DataFrame,
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_signup_purchase_join(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: each purchase matched to the same
-    user's signup(s) in the preceding `horizon` -- the incremental
+    user's signup(s) in the preceding hour -- the incremental
     twin of the batch signup->purchase funnel.
 
     Both sides carry a watermark AND the join condition bounds the
     event-time distance, so Spark can evict buffered rows once the
-    watermark passes signup_ts + horizon: join state is O(events per
+    watermark passes signup_ts + 1 hour: join state is O(events per
     horizon window), never O(stream length). (An unbounded-time
     stream-stream join would buffer forever -- Spark rejects it in
     append mode for exactly that reason.)"""
     signups = (
         events.filter(F.col("event_type") == "signup")
         .select("user_id", F.col("ts").alias("signup_ts"))
-        .withWatermark("signup_ts", watermark)
+        .withWatermark("signup_ts", JOIN_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select("user_id", F.col("ts").alias("purchase_ts"), "value")
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", JOIN_WATERMARK)
     )
     return purchases.join(
         signups,
         (purchases["user_id"] == signups["user_id"])
         & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 hour")),
     ).select(
         purchases["user_id"].alias("user_id"),
         F.date_format("signup_ts", "yyyy-MM-dd HH:mm:ss").alias("signup_s"),
@@ -322,18 +329,15 @@ def streaming_signup_purchase_join(
     )
 
 
-def streaming_word_count(lines: DataFrame, text_col: str = "line") -> DataFrame:
+def streaming_word_count(lines: DataFrame) -> DataFrame:
     """Unbounded word count: same O2/O5/O6+O9 pipeline, incremental.
     Use outputMode('complete') (or 'update') on the sink."""
-    words = lines.select(
-        F.explode(tokens_col(normalized_col(text_col))).alias("word")
-    )
+    words = lines.select(F.explode(tokens_col(normalized_col("line"))).alias("word"))
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
 
 
 def streaming_event_counts(
     events: DataFrame,
-    window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Tumbling-window counts per event_type; watermark bounds state
@@ -341,7 +345,7 @@ def streaming_event_counts(
     ages out."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"),
              F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"))
         .select(
@@ -355,14 +359,13 @@ def streaming_event_counts(
 
 def streaming_sessionize(
     events: DataFrame,
-    gap: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Session windows per user: built-in gap-based session_window --
     the incremental twin of the batch lag()-based sessionizer."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -373,11 +376,7 @@ def streaming_sessionize(
     )
 
 
-def streaming_session_window(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_session_window(events: DataFrame) -> DataFrame:
     """Deployment twin of registry.events_analytics.q_events_session_window: the SAME
     native session_window aggregation over an unbounded stream, with
     a watermark so sessions FINALIZE (append mode emits a session
@@ -398,8 +397,8 @@ def streaming_session_window(
     concurrent users, not history. The collect_set per open session
     is bounded by the event-type vocabulary, not event volume."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window(F.col("ts"), gap).alias("sw"))
+        events.withWatermark("ts", "1 hour")
+        .groupBy("user_id", F.session_window(F.col("ts"), "30 minutes").alias("sw"))
         .agg(
             F.count("*").alias("n_events"),
             F.size(F.collect_set("event_type")).alias("n_types"),
@@ -414,13 +413,7 @@ def streaming_session_window(
     )
 
 
-def streaming_curate(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    min_quality: float = 0.3,
-) -> DataFrame:
+def streaming_curate(docs: DataFrame) -> DataFrame:
     """Incremental twin of the batch curation pipeline: within-
     watermark exact dedup -> quality gate -> PII redaction, over an
     unbounded document stream.
@@ -432,17 +425,15 @@ def streaming_curate(
     from ..functions.text_stats import quality_score_col
     from ..operators.curation import pii_cols
 
-    fp = docs.withColumn("fingerprint", F.md5(normalized_col(text_col)))
-    deduped = fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+    fp = docs.withColumn("fingerprint", F.md5(normalized_col(TEXT_COL)))
+    deduped = fp.withWatermark(TS_COL, "1 hour").dropDuplicatesWithinWatermark(
         ["fingerprint"]
     )
-    gated = deduped.withColumn("quality", quality_score_col(text_col)).filter(
-        F.col("quality") >= min_quality
+    gated = deduped.withColumn("quality", quality_score_col(TEXT_COL)).filter(
+        F.col("quality") >= 0.3
     )
-    count_cols, redacted = pii_cols(text_col)
-    return gated.select(
-        "doc_id", ts_col, "quality", *count_cols, redacted.alias("redacted")
-    )
+    count_cols, redacted = pii_cols()
+    return gated.select("doc_id", TS_COL, "quality", *count_cols, redacted.alias("redacted"))
 
 
 def parquet_upsert_sink(spark, path: str, key_cols: list[str]):
@@ -475,8 +466,6 @@ def parquet_upsert_sink(spark, path: str, key_cols: list[str]):
 def streaming_pq_encode(
     emb_stream: DataFrame,
     codebooks: list[list[tuple[int, list[float], float]]],
-    dim: int = 64,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Incrementally PQ-encode an unbounded embedding stream against
     PRE-TRAINED codebooks (train once in batch via
@@ -489,16 +478,12 @@ def streaming_pq_encode(
     from ..operators.quantization import pq_codes
 
     m = len(codebooks)
-    return pq_codes(
-        emb_stream, m=m, dim=dim, vec_col=vec_col, codebooks=codebooks
-    )
+    return pq_codes(emb_stream, m=m, codebooks=codebooks)
 
 
 def streaming_decontaminate(
     docs_stream: DataFrame,
     eval_docs: DataFrame,
-    text_col: str = "text",
-    k: int = 6,
 ) -> DataFrame:
     """Stateless streaming decontamination: drop every stream doc
     that shares any k-token n-gram with the (bounded, batch) eval
@@ -523,20 +508,20 @@ def streaming_decontaminate(
     if eval_docs.isEmpty():
         return docs_stream
     eval_row = (
-        shingle_rows_flat(eval_docs, text_col, k)
+        shingle_rows_flat(eval_docs, DECONTAM_NGRAM_K)
         .select("sh")
         .distinct()
         .agg(F.collect_set("sh").alias("__eval_shs"))
     )
     toksed = docs_stream.withColumn(
-        "__toks", F.explode(F.array(tokens_col(normalized_col(text_col))))
+        "__toks", F.explode(F.array(tokens_col(normalized_col(TEXT_COL))))
     )
     n = F.size("__toks")
     shingles = F.when(
-        n >= k,
+        n >= DECONTAM_NGRAM_K,
         F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.concat_ws(" ", F.slice("__toks", i, k)),
+            F.sequence(F.lit(1), n - DECONTAM_NGRAM_K + 1),
+            lambda i: F.concat_ws(" ", F.slice("__toks", i, DECONTAM_NGRAM_K)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     clean = (
@@ -586,12 +571,7 @@ def streaming_anomaly_filter(
     return scored.filter(F.abs(F.col("zscore")) > z)
 
 
-def streaming_doc_chunks(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    chunk_size: int = 32,
-    stride: int = 24,
-) -> DataFrame:
+def streaming_doc_chunks(docs_stream: DataFrame) -> DataFrame:
     """Incremental twin of the batch pretraining chunker
     (operators.chunking.doc_chunks): 1 document row -> N overlapping
     token-window chunks over an unbounded stream.
@@ -605,18 +585,12 @@ def streaming_doc_chunks(
     with partition count and leaves nothing to re-shuffle later."""
     from ..operators.chunking import doc_chunks
 
-    return doc_chunks(docs_stream, text_col=text_col,
-                      chunk_size=chunk_size, stride=stride)
+    return doc_chunks(docs_stream)
 
 
 def streaming_dsir_filter(
     docs_stream: DataFrame,
     ratios: DataFrame,
-    ts_col: str = "ts",
-    text_col: str = "text",
-    watermark: str = "1 hour",
-    window: str = "10 minutes",
-    min_logw: float | None = None,
 ) -> DataFrame:
     """Score an unbounded document stream with a BATCH-trained DSIR
     model (train once with operators.dsir.dsir_log_ratios, serve
@@ -636,13 +610,13 @@ def streaming_dsir_filter(
 
     toks = docs_stream.select(
         "doc_id",
-        ts_col,
-        F.explode(tokens_col(normalized_col(text_col))).alias("w"),
+        TS_COL,
+        F.explode(tokens_col(normalized_col(TEXT_COL))).alias("w"),
     )
-    scored = (
+    return (
         toks.join(F.broadcast(ratios), "w")
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"), F.col("doc_id"))
+        .withWatermark(TS_COL, "1 hour")
+        .groupBy(F.window(TS_COL, "10 minutes").alias("win"), F.col("doc_id"))
         .agg(F.sum("lr").alias("s"))
         .select(
             "doc_id",
@@ -650,15 +624,11 @@ def streaming_dsir_filter(
             F.round(F.col("s").cast("string").cast("double"), 6).alias("dsir_logw"),
         )
     )
-    if min_logw is not None:
-        scored = scored.filter(F.col("dsir_logw") >= min_logw)
-    return scored
 
 
 def streaming_bpe_encode(
     docs_stream: DataFrame,
     merges: list[tuple[int, str, str, str, int]],
-    text_col: str = "text",
 ) -> DataFrame:
     """Tokenize an unbounded document stream with a BATCH-trained BPE
     merge table (operators.bpe.bpe_train) — the tokenize-at-ingest
@@ -675,7 +645,7 @@ def streaming_bpe_encode(
     from ..operators.normalize import normalized_col as _norm
     from ..operators.tokenize import tokens_col
 
-    toks = tokens_col(_norm(text_col))
+    toks = tokens_col(_norm(TEXT_COL))
     n_bpe = F.aggregate(
         F.transform(toks, lambda w: encoded_len_col(w, merges)),
         F.lit(0).cast("long"),
@@ -688,9 +658,7 @@ def streaming_bpe_encode(
     )
 
 
-def streaming_decode_features(
-    docs_stream: DataFrame, text_col: str = "text", real_codec: bool = False
-) -> DataFrame:
+def streaming_decode_features(docs_stream: DataFrame) -> DataFrame:
     """Ingest-time multimodal featurization: the Arrow-batched decode
     (multimodal.binary_ops.decode_features, a stateless mapInPandas)
     composed onto an unbounded stream unchanged -- payloads are
@@ -701,12 +669,10 @@ def streaming_decode_features(
     test (the decode is a pure function of the payload bytes)."""
     from ..multimodal.binary_ops import decode_features, with_binary_payload
 
-    return decode_features(
-        with_binary_payload(docs_stream, text_col), real_codec=real_codec
-    )
+    return decode_features(with_binary_payload(docs_stream))
 
 
-def dedup_append_sink(spark, path: str, text_col: str = "text"):
+def dedup_append_sink(spark, path: str):
     """foreachBatch sink factory: continuous corpus building with
     EXACT unbounded dedup — each microbatch is fingerprinted
     (md5 of normalized text), deduped within the batch (keep the min
@@ -731,7 +697,7 @@ def dedup_append_sink(spark, path: str, text_col: str = "text"):
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         w = _W.partitionBy("fingerprint").orderBy("doc_id")
         batch = (
-            batch_df.withColumn("fingerprint", F.md5(_norm(text_col)))
+            batch_df.withColumn("fingerprint", F.md5(_norm(TEXT_COL)))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
@@ -796,7 +762,7 @@ def hll_rollup_sink(spark, path: str):
     return sink
 
 
-def near_dedup_append_sink(spark, path: str, text_col: str = "text"):
+def near_dedup_append_sink(spark, path: str):
     """foreachBatch sink: continuous NEAR-duplicate dedup -- the LSH
     complement of dedup_append_sink's exact fingerprints. The sink
     table keeps each ACCEPTED doc (at `path`/docs) plus its MinHash
@@ -829,7 +795,7 @@ def near_dedup_append_sink(spark, path: str, text_col: str = "text"):
     from ..sources.sinks import overwrite_partitions
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signatures(batch_df.select("doc_id", text_col), text_col)
+        sigs = minhash_signatures(batch_df.select("doc_id", TEXT_COL))
         keys = materialize(band_key_rows(sigs))
         seen = _read_seen(spark, f"{path}/bands", ["band_id", "band_hash", "_batch_id"])
         if seen is not None:
@@ -875,9 +841,6 @@ def streaming_bm25_scores(
     docs_stream: DataFrame,
     stats: dict,
     query: tuple[str, ...],
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Score arriving documents against a fixed query with FROZEN
     collection statistics -- the serve half of BM25: idf and average
@@ -890,7 +853,7 @@ def streaming_bm25_scores(
     from ..operators.normalize import normalized_col as _norm
     from ..operators.tokenize import tokens_col
 
-    toks = tokens_col(_norm(text_col))
+    toks = tokens_col(_norm(TEXT_COL))
     n = float(stats["n_docs"])
     avgdl = float(stats["sum_dl"]) / n
     dl = F.size(toks).cast("double")
@@ -907,8 +870,8 @@ def streaming_bm25_scores(
         # wherever it's evaluated.)
         idf = F.round(F.log(F.lit((n - df_ + 0.5) / (df_ + 0.5) + 1.0)), 9)
         tf = F.size(F.filter(toks, (lambda term: lambda x: x == F.lit(term))(t))).cast("double")
-        denom = tf + k1 * (1.0 - b + b * dl / avgdl)
-        score = score + idf * (tf * (k1 + 1.0)) / denom
+        denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
+        score = score + idf * (tf * (BM25_K1 + 1.0)) / denom
     return docs_stream.select(
         "doc_id", F.round(score, 6).alias("bm25")
     )
@@ -985,7 +948,7 @@ def dq_monitor_totals(spark, path: str) -> DataFrame:
     )
 
 
-def drift_monitor_sink(spark, path: str, cat_col: str = "lang"):
+def drift_monitor_sink(spark, path: str):
     """foreachBatch sink: continuous distribution-drift monitoring --
     the streaming half of operators/drift.categorical_drift. Every
     microbatch collapses to per-category counts (a |categories|-sized
@@ -1003,7 +966,7 @@ def drift_monitor_sink(spark, path: str, cat_col: str = "lang"):
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         rows = (
-            batch_df.groupBy(F.col(cat_col).alias("cat"))
+            batch_df.groupBy(F.col("lang").alias("cat"))
             .agg(F.count("*").alias("n"))
             .withColumn("_batch_id", F.lit(batch_id))
         )
@@ -1110,8 +1073,6 @@ def streaming_event_transitions(events: DataFrame) -> DataFrame:
 def streaming_cusum(
     events: DataFrame,
     baseline: dict,
-    slack: str = "0.5",
-    threshold: str = "4.0",
 ) -> DataFrame:
     """Stateful online twin of registry.events_analytics.q_events_cusum: per-event-type
     daily-count CUSUM with a FROZEN baseline -- the deployment shape
@@ -1171,8 +1132,8 @@ def streaming_cusum(
         ]
     )
     DAY_US = 86_400_000_000
-    slack_d = Decimal(slack)
-    thr_d = Decimal(threshold)
+    slack_d = Decimal("0.5")
+    thr_d = Decimal("4.0")
 
     # Loud build-time validation (ADVICE r5): a degenerate std would
     # otherwise surface as an opaque ZeroDivisionError inside the
@@ -1561,7 +1522,7 @@ def streaming_ewma_control(events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_incremental_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def streaming_incremental_dedup(docs: DataFrame) -> DataFrame:
     """Streaming twin of operators/incremental.incremental_dedup_exact
     (round 8): dedup an unbounded document stream against EVERYTHING
     seen so far -- the daily-ingest contract where the corpus
@@ -1640,7 +1601,7 @@ def streaming_incremental_dedup(docs: DataFrame, text_col: str = "text") -> Data
             rows, columns=["doc_id", "fp_md5", "novel", "first_doc_id"]
         )
 
-    fp = docs.withColumn("fp_md5", F.md5(_norm(text_col)))
+    fp = docs.withColumn("fp_md5", F.md5(_norm(TEXT_COL)))
     return fp.groupBy("fp_md5").applyInPandasWithState(
         update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -85,7 +85,7 @@ def test_asof_join_point_in_time(asof_frames):
     left, right = asof_frames
     out = {
         r.event_id: (r.a, r.b)
-        for r in asof_join(left, right, by="user_id", left_ts="ts", right_ts="fts").collect()
+        for r in asof_join(left, right, by="user_id", right_ts="fts").collect()
     }
     assert out[100] == (None, None)     # nothing at-or-before 9:30
     assert out[101] == (10, "x")        # boundary ts==fts matches (inclusive)
@@ -97,7 +97,7 @@ def test_asof_join_point_in_time(asof_frames):
 def test_asof_join_snapshot_is_atomic(asof_frames):
     # (a, b) must always come from the SAME right row
     left, right = asof_frames
-    rows = asof_join(left, right, by="user_id", left_ts="ts", right_ts="fts").collect()
+    rows = asof_join(left, right, by="user_id", right_ts="fts").collect()
     valid = {(None, None), (10, "x"), (20, "y"), (99, "z")}
     assert all((r.a, r.b) in valid for r in rows)
 
@@ -149,7 +149,7 @@ def test_asof_nearest_semantics(nearest_frames):
     out = {
         r.event_id: (r.tag, r.asof_ts_us)
         for r in asof_join_nearest(
-            left, right, by="user_id", left_ts="ts", right_ts="rts",
+            left, right, by="user_id", right_ts="rts",
             tolerance_us=3600 * 1_000_000,
         ).collect()
     }
@@ -171,7 +171,7 @@ def test_asof_nearest_single_exchange(nearest_frames):
 
     left, right = nearest_frames
     plan = asof_join_nearest(
-        left, right, by="user_id", left_ts="ts", right_ts="rts"
+        left, right, by="user_id", right_ts="rts"
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
 

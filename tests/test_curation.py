@@ -131,7 +131,7 @@ def test_pii_redact_is_identity_on_clean_corpus(spark, sf_smoke):
 
 def test_mixture_sample_balances_groups(spark, sf_check):
     docs = spark.read.parquet(f"{sf_check}/documents.parquet")
-    kept = mixture_sample(docs, group_col="lang")
+    kept = mixture_sample(docs)
     by_lang = {r.lang: r.n for r in kept.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     orig = {r.lang: r.n for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     min_n = min(orig.values())
@@ -161,7 +161,7 @@ def test_mixture_sample_deterministic_under_repartition(spark, sf_smoke):
 
 def test_shard_manifest_partitions_id_space(spark, sf_check):
     docs = spark.read.parquet(f"{sf_check}/documents.parquet")
-    rows = sorted(shard_manifest(docs, n_shards=8).collect(), key=lambda r: r.shard_id)
+    rows = sorted(shard_manifest(docs).collect(), key=lambda r: r.shard_id)
     assert [r.shard_id for r in rows] == list(range(8))
     assert sum(r.n_docs for r in rows) == docs.count()
     # contiguous, non-overlapping id ranges
@@ -227,7 +227,7 @@ def test_duplicate_spans_planted_repeat(spark):
     )
     spans = {
         r.doc_id: (r.span_start, r.span_end, r.n_tokens)
-        for r in duplicate_spans(docs, k=8, min_count=2).collect()
+        for r in duplicate_spans(docs).collect()
     }
     # doc 1: passage occupies tokens 3..13 -> one merged span of 10
     assert spans[1] == (3, 13, 10)
@@ -251,7 +251,7 @@ def test_duplicate_spans_within_doc_repeat(spark):
     )
     spans = sorted(
         (r.span_start, r.span_end)
-        for r in duplicate_spans(docs, k=8, min_count=2).collect()
+        for r in duplicate_spans(docs).collect()
     )
     assert spans == [(0, 8), (10, 18)]
 

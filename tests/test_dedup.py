@@ -51,7 +51,7 @@ def test_minhash_finds_exact_dup(docs):
 
 
 def test_minhash_no_false_disjoint_pair(docs):
-    pairs = minhash_near_dup_pairs(docs, min_est_jaccard=0.3).collect()
+    pairs = minhash_near_dup_pairs(docs).collect()
     assert not any({r.doc_a, r.doc_b} == {1, 4} for r in pairs)
 
 
@@ -163,7 +163,7 @@ def test_jaccard_prefix_join_is_lossless_vs_brute_force(spark):
     )
     got = sorted(
         (r.doc_a, r.doc_b, r.inter, r.union_sz, r.jaccard)
-        for r in jaccard_prefix_pairs(docs, t_num=4, t_den=5).collect()
+        for r in jaccard_prefix_pairs(docs).collect()
     )
 
     sh = shingle_rows_flat(docs).distinct()

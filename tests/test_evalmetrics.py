@@ -72,9 +72,7 @@ def test_calibration_bins_hand_computed(spark):
     df = spark.createDataFrame(rows, "p double, label int")
     got = {
         r.bin: r
-        for r in calibration_bins(
-            df, F.col("p"), F.col("label"), n_bins=10
-        ).collect()
+        for r in calibration_bins(df, F.col("p"), F.col("label")).collect()
     }
     assert set(got) == {0, 5, 9}
     b0 = got[0]

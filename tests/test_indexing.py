@@ -33,7 +33,7 @@ def test_inverted_index_postings_and_bounds(spark):
             (4, "entirely different words here", "en"),
         ],
     )
-    out = inverted_index(docs, min_df=2, max_df=10)
+    out = inverted_index(docs, max_df=10)
     rows = {r["phrase"]: r for r in out.collect()}
     # "the quick brown" occurs in docs 1,2,3; "quick brown fox" in 1,3.
     assert rows["the quick brown"]["df"] == 3
@@ -48,7 +48,7 @@ def test_inverted_index_max_df_excludes_boilerplate(spark):
     rows = [(i, "common boiler plate text", "en") for i in range(1, 6)]
     rows.append((99, "common boiler plate text", "en"))
     docs = _docs(spark, rows)
-    out = inverted_index(docs, min_df=2, max_df=5)
+    out = inverted_index(docs, max_df=5)
     # Every phrase appears in 6 docs > max_df -> empty result.
     assert out.count() == 0
 

@@ -1,24 +1,34 @@
-"""Plan-switch lint: every bool-defaulted parameter of a public function
-under ``operators/`` has a caller in the package that passes the other
-value.
-
-A boolean that picks between two physical plans for the same result,
-with no package caller on one side, is an untested and unmeasured second
-path: only a parity test ever runs it. Each operator runs one plan;
-bringing an alternative back means choosing it inside the operator from
-something observable (input size, platform), with a benchmark workload
-on each side, not adding a flag. Tests do not count as callers.
-
-A call site counts when the argument in the parameter's slot (keyword or
-positional) is anything but the default literal, except a bare name equal
-to the parameter's own name: that only forwards the switch one level up.
-Callees are matched by function name across the package.
-
-Scope: ``operators/`` only. ``multimodal/`` is out of scope:
-``real_codec`` there (and in ``streaming/pipelines.py``) selects real
-format decoding over the stub decoder. That is a capability, not a
-second plan for one result, and removing it is a separate decision.
+"""Settable-value lints: a defaulted parameter needs a caller that
+passes another value. A knob with one value in use is a constant.
 AST only; no Spark.
+
+1. Plan switches. Every bool-defaulted parameter of a public function
+   under ``operators/`` has a caller in the package that passes the
+   other value. A boolean that picks between two physical plans for the
+   same result, with no package caller on one side, is an untested and
+   unmeasured second path: only a parity test ever runs it. Each
+   operator runs one plan; bringing an alternative back means choosing
+   it inside the operator from something observable (input size,
+   platform), with a benchmark workload on each side, not adding a
+   flag. Tests do not count as callers here. A call site counts when
+   the argument in the parameter's slot (keyword or positional) is
+   anything but the default literal, except a bare name equal to the
+   parameter's own name: that only forwards the switch one level up.
+
+2. Every defaulted parameter. Each defaulted parameter of a public
+   module-level function in ``operators/``, ``functions/``,
+   ``multimodal/``, ``sources/``, ``plans/``, ``streaming/`` and
+   ``materialize.py`` is set to another value by some call in the
+   package, ``tests/``, ``tools/``, ``bench.py``, ``perfbench/`` or
+   ``__spark_entry__.py``. The rule is in `never_set_parameters`.
+   ``registry/`` is out of scope: its ``q_*(spark, sf_dir)`` signature
+   is the driver contract. So are the deployment settings of
+   ``session.get_spark``. A parameter that only tests set still counts
+   as set; ``multimodal/binary_ops.decode_features(real_codec)`` is one
+   (tests run the real PNG/JPEG/GIF/WAV decoders through it).
+
+Callees are matched by function name across all sources, so a name
+clash can only keep a parameter, never flag one.
 """
 
 from __future__ import annotations
@@ -149,3 +159,256 @@ def test_every_operator_bool_switch_has_a_package_caller_for_each_value():
         ("similarity", "embedding_dup_pairs", "use_lsh"),
         ("similarity", "mutual_nearest_pairs", "pin"),
     }
+
+
+# ---------------------------------------------------------------------------
+# Every defaulted parameter: some caller sets another value.
+
+REPO = PKG.parent
+SCOPE_DIRS = ("operators", "functions", "multimodal", "sources", "plans", "streaming")
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _params(fn) -> dict[str, tuple[int | None, ast.expr | None]]:
+    """parameter -> (positional index or None for keyword-only, default
+    node or None when the caller must supply it). ``*args`` and
+    ``**kwargs`` count as always supplied."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    pos_defaults = [None] * (len(pos) - len(a.defaults)) + list(a.defaults)
+    out = {p.arg: (i, d) for i, (p, d) in enumerate(zip(pos, pos_defaults))}
+    out.update({p.arg: (None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)})
+    for star in (a.vararg, a.kwarg):
+        if star is not None:
+            out[star.arg] = (None, None)
+    return out
+
+
+def _stores(fn, name: str) -> bool:
+    """True when `fn`'s own body (not a nested scope) assigns `name`."""
+    todo = list(fn.body) if isinstance(fn.body, list) else [fn.body]
+    while todo:
+        node = todo.pop()
+        if isinstance(node, ast.Name) and node.id == name and not isinstance(
+            node.ctx, ast.Load
+        ):
+            return True
+        if not isinstance(node, (*_FUNCS, ast.ClassDef)):
+            todo.extend(ast.iter_child_nodes(node))
+    return False
+
+
+class _Index(ast.NodeVisitor):
+    """Every def, call and by-value function reference in one module."""
+
+    def __init__(self, module: str, tree: ast.Module):
+        self.module, self.stack = module, []
+        self.defs: list[tuple[str, ast.AST, bool]] = []  # (name, node, plain)
+        self.calls: list[tuple[str, ast.Call, tuple]] = []  # (callee, call, scopes)
+        self.referenced: set[str] = set()
+        self.aliases: dict[str, str] = {}
+        self.module_level = {id(n) for n in tree.body}
+        self._callee_nodes: set[int] = set()
+        self.visit(tree)
+
+    def visit_ImportFrom(self, node):
+        for a in node.names:
+            if a.asname and a.asname != a.name:
+                self.aliases[a.asname] = a.name
+
+    def _visit_def(self, node, plain: bool):
+        self.defs.append((getattr(node, "name", "<lambda>"), node, plain))
+        self.stack.append(node)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    def visit_FunctionDef(self, node):
+        in_class = bool(self.stack) and isinstance(self.stack[-1], ast.ClassDef)
+        self._visit_def(node, plain=not in_class)
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_Lambda(self, node):
+        self._visit_def(node, plain=False)
+
+    def visit_ClassDef(self, node):
+        self.stack.append(node)
+        self.generic_visit(node)
+        self.stack.pop()
+
+    def visit_Call(self, node):
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if name is not None:
+            self._callee_nodes.add(id(f))
+            self.calls.append((name, node, tuple(self.stack)))
+        self.generic_visit(node)
+
+    def visit_Name(self, node):
+        if isinstance(node.ctx, ast.Load) and id(node) not in self._callee_nodes:
+            self.referenced.add(node.id)
+
+    def visit_Attribute(self, node):
+        if id(node) not in self._callee_nodes:
+            self.referenced.add(node.attr)
+        self.generic_visit(node)
+
+
+def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
+    """'module.function(param)' for every defaulted parameter of a public
+    module-level function in a `scope` module that no call in `sources`
+    sets to anything but its default.
+
+    A call sets a parameter when the argument in its slot (keyword or
+    positional) is not the default expression; a bare name equal to the
+    parameter's own name that forwards an enclosing function's parameter
+    sets it only when that enclosing parameter is itself set. A call with
+    ``*args`` or ``**kwargs`` sets every parameter, and so does a
+    reference to the function as a value. Callees are matched by name
+    (through ``import ... as`` aliases), so a name clash only keeps a
+    parameter."""
+    indexes = [_Index(m, ast.parse(src)) for m, src in sorted(sources.items())]
+    aliases = {k: v for ix in indexes for k, v in ix.aliases.items()}
+    referenced = {aliases.get(n, n) for ix in indexes for n in ix.referenced}
+    defs: dict[str, list[ast.AST]] = {}
+    for ix in indexes:
+        for name, node, _ in ix.defs:
+            defs.setdefault(name, []).append(node)
+
+    is_set: set[tuple[int, str]] = set()
+    forwards: list[tuple[tuple[int, str], tuple[int, str]]] = []  # (outer, inner)
+    for name, node, plain in (d for ix in indexes for d in ix.defs):
+        for p, (_, default) in _params(node).items():
+            if default is None or not plain or name in referenced:
+                is_set.add((id(node), p))
+    for ix in indexes:
+        for callee, call, scopes in ix.calls:
+            star = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            for fn in defs.get(aliases.get(callee, callee), []):
+                for p, (idx, default) in _params(fn).items():
+                    if default is None:
+                        continue
+                    arg = next((k.value for k in call.keywords if k.arg == p), None)
+                    if arg is None and idx is not None and len(call.args) > idx:
+                        arg = call.args[idx]
+                    if star:
+                        is_set.add((id(fn), p))
+                    elif arg is None or ast.dump(arg) == ast.dump(default):
+                        continue
+                    elif isinstance(arg, ast.Name) and arg.id == p:
+                        outer = next(
+                            (s for s in reversed(scopes)
+                             if isinstance(s, _FUNCS)
+                             and (p in _params(s) or _stores(s, p))),
+                            None,
+                        )
+                        if outer is None or _stores(outer, p):
+                            is_set.add((id(fn), p))
+                        else:
+                            forwards.append(((id(outer), p), (id(fn), p)))
+                    else:
+                        is_set.add((id(fn), p))
+    grew = True
+    while grew:
+        grew = False
+        for outer, inner in forwards:
+            if outer in is_set and inner not in is_set:
+                is_set.add(inner)
+                grew = True
+
+    never = []
+    for ix in indexes:
+        if ix.module not in scope:
+            continue
+        for name, node, _ in ix.defs:
+            if id(node) not in ix.module_level or name.startswith("_"):
+                continue
+            for p, (_, default) in _params(node).items():
+                if default is not None and (id(node), p) not in is_set:
+                    never.append(f"{ix.module}.{name}({p})")
+    return sorted(never)
+
+
+def _callers() -> tuple[dict[str, str], set[str]]:
+    """Every caller source (the package, tests, tools, bench.py,
+    perfbench, the driver entry) keyed by dotted module name, and the
+    modules in scope for the lint."""
+    paths = [p for d in ("mapreduce_implementation_grpc_spark", "tests", "tools",
+                         "perfbench") for p in sorted((REPO / d).rglob("*.py"))]
+    paths += [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    sources = {
+        p.relative_to(REPO).with_suffix("").as_posix().replace("/", "."): p.read_text()
+        for p in paths
+    }
+    pkg = PKG.name
+    scope = {
+        m for m in sources
+        if m == f"{pkg}.materialize"
+        or any(m.startswith(f"{pkg}.{d}.") for d in SCOPE_DIRS)
+    }
+    return sources, scope
+
+
+def test_defaulted_parameter_detector_self_test():
+    lib = (
+        "BITS = 12\n"
+        "def literal(df, text_col='text', k=3): ...\n"
+        "def constant(df, bits=BITS): ...\n"
+        "def slot(df, n=4, m=5): ...\n"
+        "def inner_set(df, k=2): ...\n"
+        "def inner_unset(df, k=2): ...\n"
+        "def inner_rebound(df, k=2): ...\n"
+        "def by_star(df, k=2): ...\n"
+        "def by_kwargs(df, k=2): ...\n"
+        "def as_value(df, k=2): ...\n"
+        "def aliased(df, k=2): ...\n"
+        "def clash(df, k=2): ...\n"
+        "def _private(df, k=2): ...\n"
+        "def required(df, k): ...\n"
+    )
+    caller = (
+        "from lib import aliased as _al\n"
+        "literal(df, text_col='text', k=4)\n"
+        "literal(df, 'text')\n"
+        "constant(df, bits=BITS)\n"
+        "slot(df, 4, 7)\n"
+        "def outer_set(df, k=2):\n"
+        "    return inner_set(df, k=k)\n"
+        "def outer_unset(df, k=2):\n"
+        "    return inner_unset(df, k=k)\n"
+        "def relay(df, k=2):\n"
+        "    return outer_set(df, k=k)\n"
+        "relay(df, k=9)\n"
+        "outer_unset(df)\n"
+        "def rebind(df, k=2):\n"
+        "    k = k + 1\n"
+        "    return inner_rebound(df, k=k)\n"
+        "by_star(*args)\n"
+        "by_kwargs(df, **opts)\n"
+        "df.transform(as_value)\n"
+        "_al(df, 5)\n"
+        "class C:\n"
+        "    def clash(self, df, k=2): ...\n"
+        "C().clash(df, 7)\n"
+    )
+    never = never_set_parameters(
+        {"pkg.operators.lib": lib, "tests.caller": caller}, {"pkg.operators.lib"}
+    )
+    assert never == [
+        "pkg.operators.lib.constant(bits)",
+        "pkg.operators.lib.inner_unset(k)",
+        "pkg.operators.lib.literal(text_col)",
+        "pkg.operators.lib.slot(n)",
+    ]
+    # `clash` keeps k: the method of the same name is called with 7
+    # (name matching can only keep a parameter). `inner_rebound` keeps
+    # k: its caller passes a local computed from k, not a forward.
+    # `outer_unset` is out of scope, so only its callee is listed.
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    sources, scope = _callers()
+    never = never_set_parameters(sources, scope)
+    assert never == [], f"{len(never)} never-set parameters: {never}"

@@ -119,7 +119,7 @@ def test_ivfpq_restricts_to_probed_cells(spark, sf_check):
     queries = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    top = ivfpq_topk(emb, queries, topk=5).collect()
+    top = ivfpq_topk(emb, queries).collect()
     assert top and all(1 <= r.rank <= 5 for r in top)
     coarse = kmeans_fit(emb, 8, 3)
     cells = {

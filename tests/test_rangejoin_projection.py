@@ -115,7 +115,7 @@ def test_projection_is_linear(spark):
 def test_projection_planes_differ_from_lsh(spark):
     from mapreduce_implementation_grpc_spark.operators.similarity import lsh_planes
 
-    assert projection_planes(8, 64) != lsh_planes(8, 64)
+    assert projection_planes() != lsh_planes(8, 64)
 
 
 def test_projection_plan_has_no_exchange(spark, sf_check):

@@ -267,6 +267,26 @@ def test_cms_screen_has_no_false_negatives_and_broadcast_only_probe(spark, sf_ch
         assert r.est_cnt >= thr         # candidate rule
 
 
+def test_cms_probe_raises_when_the_scans_see_different_tokens(spark):
+    """The probe pass assumes it hashes the same token stream as the
+    build pass. A stream that changes between the two scans must fail
+    loudly: element_at on a bucket the build never counted is NULL,
+    and least() would skip it and underestimate without a word. The
+    tokens come from a nondeterministic Python UDF because SQL uuid()
+    is seeded once per plan, so both scans would see the same words."""
+    import uuid
+
+    import pytest
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StringType
+
+    from mapreduce_implementation_grpc_spark.operators.cms import cms_screened_wordcount
+
+    fresh = F.udf(lambda _: uuid.uuid4().hex, StringType()).asNondeterministic()
+    tokens = spark.range(200).select(fresh("id").alias("word"))
+    with pytest.raises(Exception, match="bucket the build scan never counted"):
+        cms_screened_wordcount(tokens).collect()
+
 def test_bloom_prune_keeps_all_members_and_few_extras(spark, sf_check):
     """The pruning contract: every true member survives (no false
     negatives), the false-positive overhead is small, and the probe

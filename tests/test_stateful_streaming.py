@@ -558,7 +558,7 @@ def test_streaming_session_window_matches_batch_closed_sessions(
     )
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
     q = (
-        streaming_session_window(stream, watermark="1 hour")
+        streaming_session_window(stream)
         .writeStream.format("memory")
         .queryName("session_stream")
         .outputMode("append")

@@ -606,7 +606,7 @@ def test_near_dedup_sink_replay_is_idempotent(spark, tmp_path):
              "nor shuffles nor any previously indexed content at all")],
         "doc_id long, text string",
     )
-    partial = band_key_rows(minhash_signatures(new, "text")).withColumn(
+    partial = band_key_rows(minhash_signatures(new)).withColumn(
         "_batch_id", F.lit(1)
     )
     overwrite_partitions(partial, f"{out}/bands", ["_batch_id"])  # the crash point

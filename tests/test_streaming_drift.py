@@ -33,7 +33,7 @@ def _run(spark, src, out, ckpt):
     q = (
         spark.readStream.schema(SCHEMA)
         .json(src)
-        .writeStream.foreachBatch(drift_monitor_sink(spark, out, "lang"))
+        .writeStream.foreachBatch(drift_monitor_sink(spark, out))
         .trigger(availableNow=True)
         .option("checkpointLocation", ckpt)
         .start()

@@ -77,7 +77,7 @@ def test_user_lifetimes_censor_rule(spark):
         ],
         "user_id long, ts_s string, pad string",
     ).selectExpr("user_id", "CAST(ts_s AS TIMESTAMP) AS ts")
-    rows = {r.user_id: r for r in user_lifetimes(ev, horizon_days=7).collect()}
+    rows = {r.user_id: r for r in user_lifetimes(ev).collect()}
     assert rows[1].duration == 9 and not rows[1].censored  # idle 20d: churned
     assert rows[2].duration == 27 and rows[2].censored  # active at edge
     assert rows[3].duration == 0 and rows[3].censored  # joined at edge

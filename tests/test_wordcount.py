@@ -40,7 +40,7 @@ def test_normalize_strips_and_lowercases(corpus_df):
 
 
 def test_tokenize_no_empty_tokens(spark, corpus_df):
-    words = tokenize(normalize_text(corpus_df), "norm")
+    words = tokenize(normalize_text(corpus_df))
     toks = [r.word for r in words.collect()]
     assert "" not in toks
     assert toks.count("hello") == 2
@@ -61,7 +61,7 @@ def test_word_count_invariants(spark, corpus_df):
     (FIXTURES.md F2 invariants)."""
     wc = word_count(corpus_df)
     total = wc.agg(F.sum("cnt")).collect()[0][0]
-    toks = tokenize(normalize_text(corpus_df), "norm").count()
+    toks = tokenize(normalize_text(corpus_df)).count()
     assert total == toks
     wc8 = word_count(corpus_df.repartition(8))
     assert sorted(map(tuple, wc.collect())) == sorted(map(tuple, wc8.collect()))

@@ -66,7 +66,7 @@ def test_write_zordered_files_carry_bounded_ranges(spark, sf_smoke, tmp_path):
     ev = load_table(spark, sf_smoke, "events").select(
         "event_id", "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("tus")
     )
-    write_zordered(ev, str(tmp_path / "z"), x="user_id", y="tus", n_files=32)
+    write_zordered(ev, str(tmp_path / "z"), x="user_id", y="tus")
     back = spark.read.parquet(str(tmp_path / "z"))
     assert back.count() == ev.count()
     assert set(back.columns) == {"event_id", "user_id", "tus"}
@@ -177,9 +177,7 @@ def test_write_zordered_hilbert_files_carry_bounded_ranges(spark, sf_smoke, tmp_
     ev = load_table(spark, sf_smoke, "events").select(
         "event_id", "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("tus")
     )
-    write_zordered(
-        ev, str(tmp_path / "h"), x="user_id", y="tus", n_files=32, curve="hilbert"
-    )
+    write_zordered(ev, str(tmp_path / "h"), x="user_id", y="tus", curve="hilbert")
     back = spark.read.parquet(str(tmp_path / "h"))
     assert back.count() == ev.count()
     assert set(back.columns) == {"event_id", "user_id", "tus"}

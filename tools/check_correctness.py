@@ -1,8 +1,10 @@
 """Local replica of the driver's t2 correctness gate.
 
-Usage: python tools/check_correctness.py [sf_dir] [name ...]
+Usage: python tools/check_correctness.py [--write] [sf_dir] [name ...]
 Runs every registry query (or the named subset) against its DuckDB
-oracle and prints per-query row-count/schema/value-hash status.
+oracle and prints per-query row-count/schema/value-hash status. Only
+with --write is the run merged into the committed LOCAL_BATTERY.json
+ledger, so a verification run leaves the tree unchanged.
 
 Round-7 fix: hashes are computed over the PANDAS rendering of both
 result sets (`toPandas()` / `fetchdf()`) with dtype-tagged values —
@@ -40,13 +42,11 @@ def value_hash(pdf) -> str:
 
 
 def _current_round() -> int:
-    """Build round this session belongs to: one past the newest driver
-    CORRECTNESS artifact (overridable via SPARK_GRAFT_ROUND)."""
+    """Build round this run belongs to: one past the newest driver
+    CORRECTNESS artifact."""
     import glob
     import re
 
-    if os.environ.get("SPARK_GRAFT_ROUND"):
-        return int(os.environ["SPARK_GRAFT_ROUND"])
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     rounds = [
         int(m.group(1))
@@ -95,7 +95,15 @@ def record_local_battery(green: list[str], red: list[str], sf_dir: str,
         fh.write("\n")
 
 
+def split_write_flag(argv: list[str]) -> tuple[list[str], bool]:
+    """(argv without ``--write``, whether it was given): the flag may
+    sit anywhere and is never taken as the data directory or a query
+    name."""
+    return [a for a in argv if a != "--write"], "--write" in argv
+
+
 def main() -> None:
+    sys.argv, write = split_write_flag(sys.argv)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or list(registry.QUERIES)
     spark = get_spark(app_name="check", master="local[8]", shuffle_partitions=8)
@@ -132,7 +140,8 @@ def main() -> None:
             failures += 1
             red.append(name)
             print(f"  {name}: ERROR\n{traceback.format_exc()}")
-    record_local_battery(green, red, sf_dir, rows_only)
+    if write:
+        record_local_battery(green, red, sf_dir, rows_only)
     print(f"{'ALL OK' if failures == 0 else f'{failures} FAILURES'} on {sf_dir}")
     sys.exit(1 if failures else 0)
 
