@@ -33,23 +33,20 @@ from pyspark.sql import functions as F
 from ..materialize import materialize
 from ..sources.catalog import load_table
 
-MIN_ORDERS = 2
+MIN_ORDERS = 2  # co-orders that make a part pair (or triple) frequent
 
 
-def market_basket_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-) -> DataFrame:
-    """Top part pairs by lift: [p1, p2, pair_n, support, confidence,
-    lift], lift desc with (p1, p2) tie-break. `confidence` is
-    P(p2 in basket | p1 in basket); pairs below 2 orders
-    co-occurrences are pruned before any metric join."""
+def _frequent_pairs(spark: SparkSession, sf_dir: str):
+    """(b, nn, item, pairs): the distinct (order o, part p) baskets,
+    the order count n, per-part order counts item_n, and the part
+    pairs p1 < p2 sharing at least MIN_ORDERS orders with their count
+    pair_n."""
     b = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-    # three consumers: the pair self-join (twice) + item counts + total
+    # consumers: the pair self-join (twice), item counts and the total
     b = materialize(b)
     nn = b.agg(F.count_distinct("o").alias("n"))
     item = b.groupBy("p").agg(F.count("*").alias("item_n"))
@@ -60,8 +57,20 @@ def market_basket_pairs(
         .filter(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count("*").alias("pair_n"))
-        .filter(F.col("pair_n") >= 2)
+        .filter(F.col("pair_n") >= MIN_ORDERS)
     )
+    return b, nn, item, pairs
+
+
+def market_basket_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+) -> DataFrame:
+    """Top part pairs by lift: [p1, p2, pair_n, support, confidence,
+    lift], lift desc with (p1, p2) tie-break. `confidence` is
+    P(p2 in basket | p1 in basket); pairs below 2 orders
+    co-occurrences are pruned before any metric join."""
+    _, nn, item, pairs = _frequent_pairs(spark, sf_dir)
     out = (
         pairs.join(
             item.select(F.col("p").alias("p1"), F.col("item_n").alias("c1")), "p1"
@@ -109,23 +118,9 @@ def market_basket_triples(
     Exactness: counts are exact integers; c1*c2*c3 stays below 2^53
     through every tested SF (and below int64 far beyond), so the
     double divisions agree bitwise across engines."""
-    b = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    b = materialize(b)
-    nn = b.agg(F.count_distinct("o").alias("n"))
-    item = b.groupBy("p").agg(F.count("*").alias("item_n"))
+    b, nn, item, pairs = _frequent_pairs(spark, sf_dir)
     a1 = b.select("o", F.col("p").alias("p1"))
     a2 = b.select("o", F.col("p").alias("p2"))
-    pairs = (
-        a1.join(a2, "o")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
-        .agg(F.count("*").alias("pair_n"))
-        .filter(F.col("pair_n") >= MIN_ORDERS)
-    )
     # consumed by: per-order semi join, two sub-pair prunes, and the
     # confidence join
     fp = materialize(pairs)
@@ -201,23 +196,7 @@ def association_rules(
     otherwise divide by an exact float zero). Same shuffle budget as
     market_basket_pairs: the direction flip is a union of the pruned
     pair aggregate, never a second fact pass."""
-    b = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    b = materialize(b)
-    nn = b.agg(F.count_distinct("o").alias("n"))
-    item = b.groupBy("p").agg(F.count("*").alias("item_n"))
-    a1 = b.select("o", F.col("p").alias("p1"))
-    a2 = b.select("o", F.col("p").alias("p2"))
-    pairs = (
-        a1.join(a2, "o")
-        .filter(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
-        .agg(F.count("*").alias("pair_n"))
-        .filter(F.col("pair_n") >= 2)
-    )
+    _, nn, item, pairs = _frequent_pairs(spark, sf_dir)
     directed = pairs.select(
         F.col("p1").alias("antecedent"),
         F.col("p2").alias("consequent"),

@@ -34,7 +34,8 @@ from pyspark.sql import functions as F
 from .curation import DECONTAM_NGRAM_K
 from .dedup import portable_hash60, shingle_rows_flat
 
-BITS_PER_SLOT = 32  # power of two, shifts stay far from the sign bit
+SLOT_SHIFT = 5
+BITS_PER_SLOT = 1 << SLOT_SHIFT  # 32: shifts stay far from the sign bit
 SLOTS = 4096
 M = BITS_PER_SLOT * SLOTS  # 131072 bits = 2^17: ~0.4% FP at 7.5k items,
 M_LOG2 = 17                # k=3 -- size m ~ 17.5 bits/item in practice
@@ -67,7 +68,7 @@ def bloom_bitmap(items: DataFrame, col: str = "sh") -> DataFrame:
     )
     return (
         pos.select(
-            F.shiftright(F.col("p"), 5).alias("slot"),  # 32 = 2^5 bits/slot
+            F.shiftright(F.col("p"), SLOT_SHIFT).alias("slot"),
             # column-valued shift: the Python wrapper wants a literal,
             # the Catalyst expression takes columns -- go through expr
             F.expr("shiftleft(1L, cast(p % 32 as int))").alias("mask"),
@@ -89,7 +90,7 @@ def bloom_prune(fact: DataFrame, key, bitmap: DataFrame) -> DataFrame:
     _positions)."""
     probe = fact.withColumn("_bk", key)
     for j, pcol in enumerate(_positions(F.col("_bk"))):
-        probe = probe.withColumn(f"_s{j}", F.shiftright(pcol, 5)).withColumn(
+        probe = probe.withColumn(f"_s{j}", F.shiftright(pcol, SLOT_SHIFT)).withColumn(
             f"_b{j}", (pcol % BITS_PER_SLOT).cast("int")
         )
     for j in range(NUM_HASHES):
@@ -125,7 +126,7 @@ def bloom_decontaminate_audit(
     # the per-doc rollup (which the exact path needs anyway)
     probe = train_sh
     for j, pcol in enumerate(_positions(F.col("sh"))):
-        probe = probe.withColumn(f"_s{j}", F.shiftright(pcol, 5)).withColumn(
+        probe = probe.withColumn(f"_s{j}", F.shiftright(pcol, SLOT_SHIFT)).withColumn(
             f"_b{j}", (pcol % BITS_PER_SLOT).cast("int")
         )
     for j in range(NUM_HASHES):

@@ -57,6 +57,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 SPAN_NGRAM_K = 8
+SPAN_MIN_COUNT = 2  # occurrences that make a window a duplicate
 GROUP_COL = "lang"
 
 
@@ -349,9 +350,9 @@ def write_training_shards(
 def duplicate_spans(docs: DataFrame) -> DataFrame:
     """Exact-substring duplicate spans (the distributed shape of Lee
     et al., "Deduplicating Training Data Makes Language Models
-    Better", ACL 2022): every 8-token window whose exact text occurs
-    >= 2 times anywhere in the corpus (any doc, including the
-    same one) marks its token positions as duplicated; overlapping
+    Better", ACL 2022): every SPAN_NGRAM_K-token window whose exact text
+    occurs >= SPAN_MIN_COUNT times anywhere in the corpus (any doc,
+    including the same one) marks its token positions as duplicated; overlapping
     marked windows merge into maximal spans per doc.
 
     DataFrame[doc_id, span_start, span_end, n_tokens] -- token
@@ -391,7 +392,7 @@ def duplicate_spans(docs: DataFrame) -> DataFrame:
     occ = Window.partitionBy("sh")
     marked = (
         sh.withColumn("c", F.count("*").over(occ))
-        .filter(F.col("c") >= 2)
+        .filter(F.col("c") >= SPAN_MIN_COUNT)
         .select("doc_id", "pos")
     )
 

@@ -80,6 +80,7 @@ def minhash_perm_constants(
 # j=0.57, ~27% at j=0.2 -- tuned to surface near-dups while the exact
 # Jaccard re-check (always computed on candidates) kills false positives.
 DEFAULT_BANDS = 8
+MIN_EST_JACCARD = 0.3  # signature-estimate floor of a near-duplicate pair
 
 
 def shingle_rows(docs: DataFrame) -> DataFrame:
@@ -338,7 +339,7 @@ def minhash_near_dup_pairs(docs: DataFrame) -> DataFrame:
                 F.size(F.array_intersect("sa", "sb")) / F.size(F.array_union("sa", "sb")), 6
             ).alias("jaccard"),
         )
-        .filter(F.col("est_jaccard") >= 0.3)
+        .filter(F.col("est_jaccard") >= MIN_EST_JACCARD)
     )
 
 

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from .normalize import normalized_col
 from .tokenize import tokens_col
 
+TARGET_SOURCE = "src0"
+
 
 def _tokens(docs: DataFrame, text_col: str, max_vocab: int | None):
     toks = docs.select(
@@ -56,7 +58,7 @@ def _tokens(docs: DataFrame, text_col: str, max_vocab: int | None):
 
 def dsir_log_ratios(
     docs: DataFrame,
-    target_source: str = "src0",
+    target_source: str = TARGET_SOURCE,
     max_vocab: int | None = None,
 ) -> DataFrame:
     """DataFrame[w, lr]: per-token log-likelihood ratio
@@ -91,7 +93,7 @@ def dsir_log_ratios(
 
 def dsir_weights(
     docs: DataFrame,
-    target_source: str = "src0",
+    target_source: str = TARGET_SOURCE,
     max_vocab: int | None = None,
 ) -> DataFrame:
     """DataFrame[doc_id, lang, source, dsir_logw]: importance log-

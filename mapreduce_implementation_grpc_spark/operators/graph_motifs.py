@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 from ..materialize import materialize, materialize_eager
 from ..sources.catalog import load_table
 
+KCORE_K = 8  # the co-supply core's degree floor
+COSUPPLY_THRESHOLD = 1.1  # an edge needs this multiple of the mean pair weight
+
 
 def purchase_edges(
     spark: SparkSession, sf_dir: str, segment: str | None = None,
@@ -140,11 +143,11 @@ def cosupply_edges(
     keep_weight: bool = False,
 ) -> DataFrame:
     """Thresholded supplier co-supply graph: an undirected edge
-    (s1 < s2) where two suppliers co-supply MORE parts than 1.1x the
-    mean pair weight. The projection of the bipartite part-supplier
-    graph is near-complete on uniform data (measured: literally
+    (s1 < s2) where two suppliers co-supply MORE parts than
+    COSUPPLY_THRESHOLD x the mean pair weight. The projection of the
+    bipartite part-supplier graph is near-complete on uniform data (measured: literally
     complete here), so the weight threshold is what yields a graph
-    with structure; 1.1 * avg is pure IEEE ops (sum/count then *1.1)
+    with structure; threshold * avg is pure IEEE ops (sum/count then *)
     so Spark and the SQL oracle compute the bit-identical cutoff.
 
     Scale: the pair-weight build groups lineitem by PART into the
@@ -177,7 +180,9 @@ def cosupply_edges(
     # threshold agg + edge filter both read the pair weights
     w = materialize(w)
     thr = w.agg(
-        (F.sum("c").cast("double") / F.count("*") * F.lit(1.1)).alias("_thr")
+        (
+            F.sum("c").cast("double") / F.count("*") * F.lit(COSUPPLY_THRESHOLD)
+        ).alias("_thr")
     )
     kept = w.crossJoin(F.broadcast(thr)).filter(F.col("c") >= F.col("_thr"))
     # keep_weight exposes the co-supply count c (the tie-strength
@@ -270,8 +275,8 @@ def kcore(
 
 
 def cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-core of the thresholded co-supply graph (see cosupply_edges)."""
-    return kcore(cosupply_edges(spark, sf_dir), 8)
+    """KCORE_K-core of the thresholded co-supply graph (see cosupply_edges)."""
+    return kcore(cosupply_edges(spark, sf_dir), KCORE_K)
 
 
 def triangle_counts(undirected_edges: DataFrame) -> DataFrame:

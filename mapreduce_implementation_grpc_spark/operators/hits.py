@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 from ..materialize import materialize
 from .graph_motifs import purchase_edges
 
+HITS_ITERS = 3
+
 
 def _dec_sum(col: str) -> F.Column:
     return F.sum(F.round(F.col(col), 9).cast("decimal(20,9)"))
@@ -55,7 +57,7 @@ def hits_scores(
     spark: SparkSession,
     sf_dir: str,
 ) -> DataFrame:
-    """[node_type ('hub'|'authority'), node_key, score] after three
+    """[node_type ('hub'|'authority'), node_key, score] after HITS_ITERS
     max-normalized HITS rounds, score desc / key asc within type.
     Hubs start at 1.0; scores are relative (max = 1.0 each side)."""
     edges = materialize(purchase_edges(spark, sf_dir))
@@ -63,7 +65,7 @@ def hits_scores(
         F.col("custkey").alias("c"), F.lit(1.0).alias("h")
     )
     auths = None
-    for _ in range(3):
+    for _ in range(HITS_ITERS):
         # each raw table feeds its own max AND the division: without
         # pinning, every round re-expands the previous round's whole
         # subtree into both consumers -- an exponentially duplicated

@@ -37,6 +37,7 @@ M_REGISTERS = 256
 ALPHA = 0.7213 / (1.0 + 1.079 / M_REGISTERS)
 W_BITS = 52  # 60-bit hash minus the 8 register-index bits
 POW53 = float(1 << 53)
+RAW_SCALE = ALPHA * M_REGISTERS * M_REGISTERS * POW53  # the raw estimate's numerator
 
 
 def hll_registers(df: DataFrame, group_cols: list[str], item_col: str) -> DataFrame:
@@ -76,7 +77,7 @@ def estimate_from_registers(regs: DataFrame, group_cols: list[str]) -> DataFrame
     total = F.col("s_filled") + (F.lit(M_REGISTERS) - F.col("n_filled")) * F.lit(
         1 << 53
     )
-    e_raw = F.lit(ALPHA * M_REGISTERS * M_REGISTERS * POW53) / total.cast("double")
+    e_raw = F.lit(RAW_SCALE) / total.cast("double")
     v_empty = F.lit(M_REGISTERS) - F.col("n_filled")
     est = F.when(
         (e_raw <= F.lit(2.5 * M_REGISTERS)) & (v_empty > 0),

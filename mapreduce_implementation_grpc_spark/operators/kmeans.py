@@ -31,6 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+KMEANS_K = 8  # cells
+KMEANS_ITER = 3  # Lloyd rounds
+
 
 def _centroid_literal(cent_rows: list[tuple[int, list[float], float]]) -> Column:
     """Array-of-structs literal [(cell, cvec, cnorm2), ...] from the
@@ -115,8 +118,8 @@ def _collect_centroids(cents: DataFrame) -> list[tuple[int, list[float], float]]
 
 def kmeans_fit(
     emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
+    k: int = KMEANS_K,
+    n_iter: int = KMEANS_ITER,
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float], float]]:
     """Train Lloyd's k-means and return the final centroid rows
@@ -140,8 +143,8 @@ def kmeans_fit(
 
 def kmeans_cells(
     emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
+    k: int = KMEANS_K,
+    n_iter: int = KMEANS_ITER,
 ) -> DataFrame:
     """DataFrame[vec_id, cell, obj]: k-means cell per vector (obj =
     final assignment objective, for inertia checks).

@@ -22,7 +22,7 @@ pairwise similarities use the same element-order sequential fold as
 functions/vectors.py (bit-identical to DuckDB list_cosine_similarity)
 rounded HALF_UP to 6dp via Decimal(repr(x)) -- the established
 F.round/DuckDB-round-compatible recipe; the score combine uses the
-literal lam and (1.0 - lam) doubles in both engines (never a folded
+literal MMR_LAM and (1.0 - MMR_LAM) doubles in both engines (never a folded
 constant like 0.3, which is a DIFFERENT double from 1.0 - 0.7);
 argmax ties break on doc_id ascending.
 """
@@ -51,6 +51,9 @@ _OUT_SCHEMA = StructType(
 
 _Q6 = Decimal("0.000001")
 
+MMR_K = 8  # picks per query
+MMR_LAM = 0.7  # relevance weight; redundancy weighs 1.0 - MMR_LAM
+
 
 def _round6(x: float) -> float:
     return float(Decimal(repr(x)).quantize(_Q6, rounding=ROUND_HALF_UP))
@@ -74,8 +77,7 @@ def _cos6(a, b) -> float:
 
 def mmr_select(
     candidates: DataFrame,
-    k: int = 8,
-    lam: float = 0.7,
+    k: int = MMR_K,
 ) -> DataFrame:
     """Greedy MMR over per-query candidate groups.
 
@@ -83,7 +85,7 @@ def mmr_select(
     sim_q is the (already rounded) query similarity. Returns
     [query_id, doc_id, pick_rank (1-based), mmr (score at pick time,
     rounded 6dp)] with min(k, group size) rows per query."""
-    one_minus_lam = 1.0 - lam
+    one_minus_lam = 1.0 - MMR_LAM
 
     def _pick(pdf):
         import pandas as pd
@@ -104,7 +106,7 @@ def mmr_select(
                 worst = max(
                     (_cos6(embs[d], embs[s]) for s in selected), default=0.0
                 )
-                score = lam * sims[d] - one_minus_lam * worst
+                score = MMR_LAM * sims[d] - one_minus_lam * worst
                 if best_score is None or score > best_score:
                     best_d, best_score = d, score
             selected.append(best_d)

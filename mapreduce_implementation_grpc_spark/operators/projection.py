@@ -27,12 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _mix64
+from .similarity import DIM, _mix64
 
 # offset the flat index so projection planes differ from LSH planes
 PROJ_SEED = 7_777_777
-
-DIM = 64
 
 
 def projection_planes() -> list[list[float]]:

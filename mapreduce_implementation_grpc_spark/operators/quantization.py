@@ -26,9 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_LEVELS = 255  # int8 code range [0, 255]
+from .kmeans import KMEANS_ITER, KMEANS_K
+from .similarity import DIM, N_PROBE, TOPK, VEC_COL
 
-VEC_COL = "embedding"
+DEFAULT_LEVELS = 255  # int8 code range [0, 255]
 
 
 def dim_minmax(emb: DataFrame) -> DataFrame:
@@ -105,8 +106,8 @@ def pq_fit(
     m: int = DEFAULT_PQ_M,
     k: int = DEFAULT_PQ_K,
     n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = 64,
-    vec_col: str = "embedding",
+    dim: int = DIM,
+    vec_col: str = VEC_COL,
 ) -> list[list[tuple[int, list[float], float]]]:
     """Train one k-means codebook per contiguous dim/m-wide subspace
     (eager: m small Lloyd fits). Fully deterministic -- kmeans_fit
@@ -146,8 +147,8 @@ def pq_codes(
     m: int = DEFAULT_PQ_M,
     k: int = DEFAULT_PQ_K,
     n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = 64,
-    vec_col: str = "embedding",
+    dim: int = DIM,
+    vec_col: str = VEC_COL,
     codebooks: list[list[tuple[int, list[float], float]]] | None = None,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -213,14 +214,44 @@ def pq_codes(
     )
 
 
+def _codebook_df(spark, codebooks, vec: str) -> DataFrame:
+    """[j, code, <vec>]: every subspace's codewords as one small table."""
+    return spark.createDataFrame(
+        [
+            (j, int(cell), [float(x) for x in cvec])
+            for j, rows in enumerate(codebooks)
+            for (cell, cvec, _n2) in rows
+        ],
+        f"j int, code bigint, {vec} array<double>",
+    )
+
+
+def _adc_topk(scored: DataFrame, topk: int) -> DataFrame:
+    """[query_id, neighbor_id, adc_dist, rank]: the `topk` smallest
+    (query_id, vec_id, adc) rows per query, ties to the smaller id."""
+    from pyspark.sql import Window
+
+    win = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(win))
+        .filter(F.col("rank") <= topk)
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.round("adc", 6).alias("adc_dist"),
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
 def pq_adc_topk(
     emb: DataFrame,
     queries: DataFrame,
-    topk: int = 5,
+    topk: int = TOPK,
     m: int = DEFAULT_PQ_M,
     k: int = DEFAULT_PQ_K,
     n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = 64,
+    dim: int = DIM,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: approximate nearest
     neighbors scanning only the compressed codes.
@@ -237,21 +268,12 @@ def pq_adc_topk(
     O(n*m) tiny integer rows per query batch -- the whole point of
     PQ; compose with kmeans cells (IVF-PQ) to cut the scan to probed
     cells only."""
-    from pyspark.sql import Window
-
     codebooks = pq_fit(emb, m, k, n_iter, dim)
     codes = pq_codes(emb, m, k, n_iter, dim, codebooks=codebooks)
     w = dim // m
 
     spark = emb.sparkSession
-    cent_df = spark.createDataFrame(
-        [
-            (j, int(cell), [float(x) for x in cvec])
-            for j, rows in enumerate(codebooks)
-            for (cell, cvec, _n2) in rows
-        ],
-        "j int, code bigint, cvec array<double>",
-    )
+    cent_df = _codebook_df(spark, codebooks, "cvec")
     qs = F.slice(F.col("qvec"), F.col("j") * w + 1, w)
     diff = F.zip_with(qs, F.col("cvec"), lambda x, y: x.cast("double") - y)
     d2 = F.aggregate(diff, F.lit(0.0), lambda acc, z: acc + z * z)
@@ -269,17 +291,7 @@ def pq_adc_topk(
         .groupBy("query_id", "vec_id")
         .agg(dsum.cast("string").cast("double").alias("adc"))
     )
-    win = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= topk)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("adc", 6).alias("adc_dist"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _adc_topk(scored, topk)
 
 
 def ivfpq_topk(
@@ -288,12 +300,12 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ: the standard billion-scale ANN layout. A coarse
     k-means partitions the corpus into inverted lists; PQ codes
-    compress every vector; a query routes to its 2 nearest
-    coarse cells (of 8) (L2) and runs the ADC scan over ONLY those cells'
-    codes.
+    compress every vector; a query routes to its N_PROBE nearest
+    coarse cells (of KMEANS_K) (L2) and runs the ADC scan over ONLY
+    those cells' codes.
 
     Scale posture: the coarse assignment bounds the scan to
-    2/8 of the corpus, the PQ codes shrink what is
+    N_PROBE/KMEANS_K of the corpus, the PQ codes shrink what is
     scanned to DEFAULT_PQ_M small ints per vector, the per-query lookup table
     is broadcast, and the one aggregation shuffle carries
     (query_id, vec_id) partial decimal sums. This variant encodes
@@ -304,7 +316,7 @@ def ivfpq_topk(
 
     from .kmeans import _assign, kmeans_fit
 
-    coarse = kmeans_fit(emb, n_iter=3)
+    coarse = kmeans_fit(emb)
     # thread the coarse cell through the encode instead of joining
     # the code rows back to a separate assignment table by vec_id
     # (r10: the old `codes JOIN cells` was a corpus-wide shuffle the
@@ -312,7 +324,7 @@ def ivfpq_topk(
     emb_cells = _assign(emb, coarse, VEC_COL).select("vec_id", VEC_COL, "cell")
     codebooks = pq_fit(emb)
     codes = pq_codes(emb_cells, codebooks=codebooks, carry_cols=("cell",))
-    w = 64 // DEFAULT_PQ_M
+    w = DIM // DEFAULT_PQ_M
 
     spark = emb.sparkSession
     coarse_df = spark.createDataFrame(
@@ -335,18 +347,11 @@ def ivfpq_topk(
     pw = Window.partitionBy("query_id").orderBy(F.asc("obj"), F.asc("cell"))
     probes = (
         qc.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= 2)
+        .filter(F.col("pr") <= N_PROBE)
         .select("query_id", "cell")
     )
 
-    cent_df = spark.createDataFrame(
-        [
-            (j, int(cell), [float(x) for x in cvec])
-            for j, rows in enumerate(codebooks)
-            for (cell, cvec, _n2) in rows
-        ],
-        "j int, code bigint, cvec array<double>",
-    )
+    cent_df = _codebook_df(spark, codebooks, "cvec")
     qs = F.slice(F.col("qvec"), F.col("j") * w + 1, w)
     diff = F.zip_with(qs, F.col("cvec"), lambda x, y: x.cast("double") - y)
     d2 = F.aggregate(diff, F.lit(0.0), lambda acc, z: acc + z * z)
@@ -367,17 +372,7 @@ def ivfpq_topk(
         .groupBy("query_id", "vec_id")
         .agg(dsum.cast("string").cast("double").alias("adc"))
     )
-    win = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("adc", 6).alias("adc_dist"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _adc_topk(scored, TOPK)
 
 
 def _coarse_lookup_literal(
@@ -398,13 +393,13 @@ def _coarse_lookup_literal(
 def ivfpq_residual_topk(
     emb: DataFrame,
     queries: DataFrame,
-    topk: int = 5,
-    coarse_k: int = 8,
-    coarse_iter: int = 3,
+    topk: int = TOPK,
+    coarse_k: int = KMEANS_K,
+    coarse_iter: int = KMEANS_ITER,
     m: int = DEFAULT_PQ_M,
     k: int = DEFAULT_PQ_K,
     n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = 64,
+    dim: int = DIM,
 ) -> DataFrame:
     """IVFADC proper (Jegou et al. 2011): PQ codebooks are trained on
     RESIDUALS v - coarse_centroid(cell(v)), which concentrates the
@@ -451,14 +446,7 @@ def ivfpq_residual_topk(
         ],
         "cell bigint, cvec array<double>",
     )
-    cent_df = spark.createDataFrame(
-        [
-            (j, int(cw), [float(x) for x in cv])
-            for j, rows in enumerate(codebooks)
-            for (cw, cv, _n2) in rows
-        ],
-        "j int, code bigint, cwvec array<double>",
-    )
+    cent_df = _codebook_df(spark, codebooks, "cwvec")
     # probe routing: L2 argmin over coarse centroids (obj = -2 q.c + ||c||^2)
     qdot = F.aggregate(
         F.zip_with("qvec", "cvec", lambda x, y: x.cast("double") * y),
@@ -474,7 +462,7 @@ def ivfpq_residual_topk(
     pw = Window.partitionBy("query_id").orderBy(F.asc("obj"), F.asc("cell"))
     probes = (
         qc.withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= 2)
+        .filter(F.col("pr") <= N_PROBE)
         .select(
             "query_id",
             "cell",
@@ -500,14 +488,4 @@ def ivfpq_residual_topk(
         .groupBy("query_id", "vec_id")
         .agg(dsum.cast("string").cast("double").alias("adc"))
     )
-    win = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= topk)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("adc", 6).alias("adc_dist"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _adc_topk(scored, topk)

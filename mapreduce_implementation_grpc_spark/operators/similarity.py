@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_col, l2_norm_col
 from ..materialize import materialize
+from .kmeans import KMEANS_ITER, KMEANS_K
 
 DEFAULT_NUM_PLANES = 8
 
@@ -40,6 +41,9 @@ _U64 = 0xFFFFFFFFFFFFFFFF
 VEC_COL = "embedding"
 DIM = 64
 ID_COL = "vec_id"
+TOPK = 5  # neighbors kept per query by every ANN serve plan
+N_PROBE = 2  # IVF cells probed per query
+MIN_COSINE = 0.35  # near-duplicate threshold of the pair operators
 
 
 def _mix64(x: int) -> int:
@@ -54,7 +58,9 @@ def _mix64(x: int) -> int:
     return z ^ (z >> 31)
 
 
-def lsh_planes(num_planes: int = DEFAULT_NUM_PLANES, dim: int = 64) -> list[list[float]]:
+def lsh_planes(
+    num_planes: int = DEFAULT_NUM_PLANES, dim: int = DIM
+) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes in [-0.5, 0.5):
     splitmix64 on the flat index. Reproducible in any engine (the
     oracle embeds the same double literals), no RNG state.
@@ -78,9 +84,11 @@ def lsh_planes(num_planes: int = DEFAULT_NUM_PLANES, dim: int = 64) -> list[list
 # index domain disjoint from the plane index domain (planes use flat
 # indices < bands*rows*dim ~ 3e4; this starts at 2^32).
 _CLUSTERED_SEED = 1 << 32
+CLUSTERED_N_CLUSTERS = 25
+CLUSTERED_SIGMA = 0.5
 
 
-def clustered_centers(n_clusters: int = 25) -> list[list[float]]:
+def clustered_centers() -> list[list[float]]:
     """Deterministic cluster centers in [-0.5, 0.5)^DIM via the same
     splitmix64 mix as lsh_planes (disjoint seed domain). Embedded as
     literals in both the Spark plan and the DuckDB oracle, so every
@@ -90,28 +98,25 @@ def clustered_centers(n_clusters: int = 25) -> list[list[float]]:
             _mix64(_CLUSTERED_SEED + c * DIM + d) / 2.0**64 - 0.5
             for d in range(DIM)
         ]
-        for c in range(n_clusters)
+        for c in range(CLUSTERED_N_CLUSTERS)
     ]
 
 
-def synthetic_clustered_embeddings(
-    ids: DataFrame,
-    n_clusters: int = 25,
-    sigma: float = 0.5,
-) -> DataFrame:
+def synthetic_clustered_embeddings(ids: DataFrame) -> DataFrame:
     """DataFrame[vec_id, cluster, embedding(array<double>)]: a
     deterministic corpus WITH real neighborhood structure, derived
     from ids alone (VERDICT r9 #1: the driver's embeddings table is
     near-orthogonal -- sign-LSH's worst case -- so ANN selectivity
     there says nothing about clustered real embeddings).
 
-    vector = center[vec_id % n_clusters] + sigma * noise, where
+    vector = center[vec_id % CLUSTERED_N_CLUSTERS] + CLUSTERED_SIGMA *
+    noise, where
     noise_d = md5(vec_id ':' d) first-8-hex / 2^32 - 0.5 (the repo's
     standard cross-engine randomness source) and centers are
     splitmix64 literals. Every arithmetic step is exact in double
     (integer/2^32, -0.5, *0.5 are all exact; one rounding at the
     final add), so the generated doubles are bit-identical to the
-    DuckDB twin. At n_clusters=25, sigma=0.5 the corpus measures
+    DuckDB twin. At 25 clusters and sigma 0.5 the corpus measures
     within-cluster cosine ~0.80 vs cross ~0.00 -- a realistic
     topical-cluster geometry (clustered_corpus_structure is the
     measured row).
@@ -119,7 +124,7 @@ def synthetic_clustered_embeddings(
     All JVM-side expression work (md5 + element_at over a folded
     center literal): no Python crossing, codegen-friendly, and at
     100 TB the generation is a narrow map over the id column."""
-    centers = clustered_centers(n_clusters)
+    centers = clustered_centers()
     flat = F.array(*[F.lit(float(x)) for row in centers for x in row])
     vid = F.col(ID_COL)
 
@@ -133,12 +138,12 @@ def synthetic_clustered_embeddings(
         )
         return (
             F.element_at(flat, (F.col("cluster") * DIM + d + 1).cast("int"))
-            + F.lit(float(sigma)) * u
+            + F.lit(float(CLUSTERED_SIGMA)) * u
         )
 
     return (
         ids.select(ID_COL)
-        .withColumn("cluster", (vid % n_clusters).cast("long"))
+        .withColumn("cluster", (vid % CLUSTERED_N_CLUSTERS).cast("long"))
         .withColumn(
             "embedding",
             F.transform(F.sequence(F.lit(0), F.lit(DIM - 1)), _dim_val),
@@ -167,7 +172,7 @@ def _bucket_col(vec, planes: list[list[float]]):
     return bucket
 
 
-def with_lsh_bucket(emb: DataFrame, dim: int = 64) -> DataFrame:
+def with_lsh_bucket(emb: DataFrame, dim: int = DIM) -> DataFrame:
     return emb.withColumn("bucket", _bucket_col(F.col(VEC_COL), lsh_planes(dim=dim)))
 
 
@@ -179,7 +184,7 @@ def with_lsh_bands(
     emb: DataFrame,
     bands: int = LSH_BANDS,
     rows_per_band: int = LSH_ROWS_PER_BAND,
-    dim: int = 64,
+    dim: int = DIM,
 ) -> DataFrame:
     """Banded (OR-of-ANDs) hyperplane LSH: `bands` independent tables
     of `rows_per_band` planes each; a pair is a candidate if it
@@ -256,7 +261,7 @@ def with_lsh_bands(
 def knn_brute_force(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
+    k: int = TOPK,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -313,7 +318,7 @@ def ann_lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "bucket", "neighbor_id", "cosine", "rank")
     )
 
@@ -372,7 +377,7 @@ def ann_lsh_multiprobe_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -479,7 +484,7 @@ def rerank_topk(
         )
         out_cols.append(count_col)
     return (
-        ranked.filter(F.col("rank") <= 5)
+        ranked.filter(F.col("rank") <= TOPK)
         .select(*out_cols, F.col("rank").cast("long").alias("rank"))
     )
 
@@ -511,7 +516,7 @@ def ivf_centroids(emb: DataFrame, by: str = "label") -> DataFrame:
 def _ivf_probes(
     emb: DataFrame,
     queries: DataFrame,
-    n_probe: int = 2,
+    n_probe: int = N_PROBE,
     by: str = "label",
 ) -> DataFrame:
     """Per-query probed cells: route each query to its n_probe
@@ -578,8 +583,8 @@ def ann_ivf_candidate_counts(
 def ann_ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
+    k: int = TOPK,
+    n_probe: int = N_PROBE,
     by: str = "label",
 ) -> DataFrame:
     """IVF-style ANN: route each query to its n_probe nearest
@@ -614,11 +619,11 @@ def ann_ivf_topk(
 
 def embedding_dup_pairs(
     emb: DataFrame,
-    min_cosine: float = 0.99,
+    min_cosine: float = MIN_COSINE,
     use_lsh: bool = False,
     bands: int = LSH_BANDS,
     rows_per_band: int = LSH_ROWS_PER_BAND,
-    dim: int = 64,
+    dim: int = DIM,
 ) -> DataFrame:
     """Near-duplicate vector pairs by cosine.
 
@@ -689,9 +694,9 @@ def embedding_dup_pairs(
 
 def semantic_dedup(
     emb: DataFrame,
-    min_cosine: float = 0.35,
-    coarse_k: int = 8,
-    coarse_iter: int = 3,
+    min_cosine: float = MIN_COSINE,
+    coarse_k: int = KMEANS_K,
+    coarse_iter: int = KMEANS_ITER,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023,
     arXiv:2303.09540): cluster the embedding space with k-means,

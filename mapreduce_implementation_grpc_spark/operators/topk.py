@@ -19,5 +19,5 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def top_k(df: DataFrame, k: int, by: str = "cnt", tie_break: str = "word") -> DataFrame:
-    return df.orderBy(F.desc(by), F.asc(tie_break)).limit(k)
+def top_k(df: DataFrame, k: int) -> DataFrame:
+    return df.orderBy(F.desc("cnt"), F.asc("word")).limit(k)

@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from ..operators.normalize import normalized_col
 from ..sources.catalog import load_table
 
+SESSION_GAP_S = 1800  # a longer gap between a user's events starts a new session
+ASOF_AT = "2024-01-15 00:00:00"  # user_state_asof's point in time
+
 
 def _dec(col, scale: int = 2):
     return col.cast(f"decimal(18,{scale})")
@@ -160,7 +163,9 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sessionize(spark: SparkSession, sf_dir: str, gap_seconds: int = 1800) -> DataFrame:
+def events_sessionize(
+    spark: SparkSession, sf_dir: str, gap_seconds: int = SESSION_GAP_S
+) -> DataFrame:
     """Sessionization via lag: a session starts where the gap from
     the previous event of the same user exceeds gap_seconds. Output:
     per-user session count + event count. Scales as one shuffle on
@@ -1727,7 +1732,7 @@ def dominant_suppliers(
 
 
 def purchase_attribution(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = 1800
+    spark: SparkSession, sf_dir: str, gap_seconds: int = SESSION_GAP_S
 ) -> DataFrame:
     """First-touch attribution: every purchase attributed to the FIRST
     event of its session (lag-gap sessions, same 30-min rule as
@@ -1765,9 +1770,7 @@ def purchase_attribution(
     )
 
 
-def attribution_position_weighted(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = 1800
-) -> DataFrame:
+def attribution_position_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-based (U-shaped) multi-touch attribution: each
     session's FIRST purchase distributes its value across the
     non-purchase touches that precede it in the session -- 40% to the
@@ -1790,7 +1793,7 @@ def attribution_position_weighted(
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    starts = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    starts = F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
     sess = ev.withColumn(
         "session_id",
         F.sum(starts).over(w.rowsBetween(Window.unboundedPreceding, 0)),
@@ -1865,22 +1868,20 @@ def attribution_position_weighted(
     )
 
 
-def user_state_asof(
-    spark: SparkSession, sf_dir: str, at: str = "2024-01-15 00:00:00"
-) -> DataFrame:
+def user_state_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time lookup over the SCD2 interval table: every
-    user's state AS OF `at` -- the time-travel query the interval
+    user's state AS OF ASOF_AT -- the time-travel query the interval
     representation exists to answer (half-open [valid_from,
-    valid_to) semantics: a row closing exactly at `at` has already
-    yielded to its successor). Users whose history starts after `at`
-    are absent, as they should be.
+    valid_to) semantics: a row closing exactly at ASOF_AT has already
+    yielded to its successor). Users whose history starts after
+    ASOF_AT are absent, as they should be.
 
     Scale: a filter over the interval table (user-grain islands, far
     smaller than events); no new shuffle beyond the intervals' own
     single exchange. At most one row per user survives by interval
     disjointness -- asserted by the SCD2 contract tests."""
     iv = user_state_intervals(spark, sf_dir)
-    at_lit = F.lit(at)
+    at_lit = F.lit(ASOF_AT)
     return (
         iv.filter(
             (F.col("valid_from") <= at_lit)

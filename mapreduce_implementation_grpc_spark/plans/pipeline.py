@@ -28,11 +28,13 @@ from ..operators.dedup import dedup_clusters, exact_dedup
 from ..operators.normalize import normalized_col
 from ..sources.catalog import load_table
 
+MIN_QUALITY = 0.5
+
 
 def curate_documents(
     spark: SparkSession,
     sf_dir: str,
-    min_quality: float = 0.5,
+    min_quality: float = MIN_QUALITY,
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
 
@@ -81,7 +83,7 @@ def curate_documents(
 
 
 def run_curation(
-    spark: SparkSession, sf_dir: str, out_dir: str, min_quality: float = 0.5
+    spark: SparkSession, sf_dir: str, out_dir: str, min_quality: float = MIN_QUALITY
 ) -> DataFrame:
     curated = curate_documents(spark, sf_dir, min_quality)
     curated.write.mode("overwrite").partitionBy("lang").parquet(out_dir)

@@ -6,6 +6,7 @@ sampling.
 from __future__ import annotations
 
 from .shared import (
+    DEFAULT_PACK_BUDGET,
     DataFrame,
     F,
     SparkSession,
@@ -25,7 +26,8 @@ from .shared import (
     with_token_array,
     word_count,
 )
-from .text_shaping import BPE_MERGES
+from .text_shaping import _bpe_docs
+from ..streaming.pipelines import BM25_B, BM25_K1
 
 
 
@@ -278,16 +280,7 @@ def q_bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens for the same text). Composes the trained encode with a
     one-shuffle rollup; the ratio is a division of two exact counts,
     so it is bit-identical cross-engine."""
-    from ..functions.text_stats import with_token_array
-    from ..operators import bpe
-
-    merges = bpe.trained_merges(spark, sf_dir, num_merges=BPE_MERGES)
-    docs = with_token_array(load_table(spark, sf_dir, "documents"))
-    n_bpe = F.aggregate(
-        F.transform(F.col("toks"), lambda w: bpe.encoded_len_col(w, merges)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x.cast("long"),
-    )
+    docs, n_bpe = _bpe_docs(spark, sf_dir)
     n_chars = F.aggregate(
         F.transform(F.col("toks"), lambda w: F.length(w)),
         F.lit(0).cast("long"),
@@ -314,24 +307,15 @@ def q_bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str, budget: int = 256) -> DataFrame:
+def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing by the TRAINED tokenizer's real token counts
     (train BPE -> measure each doc -> lay head-to-tail into
-    budget-token blocks) -- the packing a training job actually does,
+    DEFAULT_PACK_BUDGET-token blocks) -- the packing a training job actually does,
     vs pack_sequences' length heuristic. Same scale-safe per-shard
     window; the count column is the map-only encode."""
     from pyspark.sql import Window
 
-    from ..functions.text_stats import with_token_array
-    from ..operators import bpe
-
-    merges = bpe.trained_merges(spark, sf_dir, num_merges=BPE_MERGES)
-    docs = with_token_array(load_table(spark, sf_dir, "documents"))
-    n_bpe = F.aggregate(
-        F.transform(F.col("toks"), lambda w: bpe.encoded_len_col(w, merges)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x.cast("long"),
-    )
+    docs, n_bpe = _bpe_docs(spark, sf_dir)
     base = docs.select("doc_id", "source", n_bpe.alias("n_tokens"))
     w = (
         Window.partitionBy("source")
@@ -343,12 +327,13 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str, budget: int = 256) ->
         "doc_id",
         "source",
         "n_tokens",
-        F.floor(prefix / budget).cast("long").alias("bin_id"),
-        (prefix % budget).cast("long").alias("offset"),
+        F.floor(prefix / DEFAULT_PACK_BUDGET).cast("long").alias("bin_id"),
+        (prefix % DEFAULT_PACK_BUDGET).cast("long").alias("offset"),
     )
 
 
 BM25_QUERY = ("spark", "join", "fast")
+BM25_TOPN = 50
 
 
 def _eq_lit(t: str):
@@ -357,8 +342,7 @@ def _eq_lit(t: str):
     return lambda x: x == F.lit(t)
 
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str, k1: float = 1.2,
-                b: float = 0.75, topn: int = 50) -> DataFrame:
+def q_bm25_topk(spark: SparkSession, sf_dir: str, topn: int = BM25_TOPN) -> DataFrame:
     """Lexical retrieval: Okapi BM25 top-k for a fixed query -- the
     sparse complement of the ANN dense-retrieval suite (hybrid search
     runs both and fuses). Plan: one corpus pass computes per-doc term
@@ -402,8 +386,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str, k1: float = 1.2,
         df_ = F.col(f"df_{i}").cast("double")
         idf = F.round(F.log((n - df_ + 0.5) / (df_ + 0.5) + 1.0), 9)
         tf = F.col(f"tf_{i}").cast("double")
-        denom = tf + k1 * (1.0 - b + b * F.col("dl").cast("double") / avgdl)
-        score = score + idf * (tf * (k1 + 1.0)) / denom
+        dl = F.col("dl").cast("double")
+        denom = tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
+        score = score + idf * (tf * (BM25_K1 + 1.0)) / denom
     return (
         scored.select("doc_id", F.round(score, 6).alias("bm25"))
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
@@ -411,10 +396,13 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str, k1: float = 1.2,
     )
 
 
-def q_prf_rerank(spark: SparkSession, sf_dir: str, n_feedback: int = 10,
-                 topn: int = 20) -> DataFrame:
+PRF_FEEDBACK = 10
+PRF_TOPN = 20
+
+
+def q_prf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance-feedback rerank (Rocchio-style): BM25
-    retrieves 50 candidates; the top n_feedback docs' embedding
+    retrieves 50 candidates; the top PRF_FEEDBACK docs' embedding
     CENTROID becomes the dense pseudo-query; candidates re-rank by
     cosine to it -- the classic sparse-retrieve -> dense-rerank
     composition (the other fusion besides hybrid_rrf_topk's rank
@@ -438,7 +426,7 @@ def q_prf_rerank(spark: SparkSession, sf_dir: str, n_feedback: int = 10,
     emb = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "embedding"
     )
-    fb = cand.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(n_feedback)
+    fb = cand.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(PRF_FEEDBACK)
     dims = (
         fb.join(emb, "doc_id")
         .select(F.posexplode("embedding").alias("pos", "v"))
@@ -472,7 +460,7 @@ def q_prf_rerank(spark: SparkSession, sf_dir: str, n_feedback: int = 10,
     w = Window.orderBy(F.desc("cosine"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topn)
+        .filter(F.col("rank") <= PRF_TOPN)
     )
 
 

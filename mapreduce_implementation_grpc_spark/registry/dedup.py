@@ -41,15 +41,18 @@ def q_events_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return analytics.events_unpivot(spark, sf_dir)
 
 
-def q_weighted_doc_sample(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+SAMPLE_PER_LANG = 20
+
+
+def q_weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement, per
     stratum (Efraimidis-Spirakis A-ES): each doc draws u from a
     CONTENT-FREE hash of its id (portable md5 -> (0,1)), gets key =
-    ln(u)/quality, and the top-k keys per lang are the sample --
+    ln(u)/quality, and the top-SAMPLE_PER_LANG keys per lang are the sample --
     inclusion probability proportional to the quality weight, fully
     reproducible (no RNG state, same sample in any engine or rerun).
     The quality-weighted step up from stratified_sample's uniform
-    slices: the curation move 'keep k docs per language, preferring
+    slices: the curation move 'keep SAMPLE_PER_LANG docs per language, preferring
     clean ones'.
 
     Exactness: u is exact integer arithmetic; ln runs JVM-side and is
@@ -76,7 +79,7 @@ def q_weighted_doc_sample(spark: SparkSession, sf_dir: str, k: int = 20) -> Data
     w = Window.partitionBy("lang").orderBy(F.desc(key), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= SAMPLE_PER_LANG)
         .select("doc_id", "lang", "quality", "rank")
     )
 
@@ -194,10 +197,15 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_fp(load_table(spark, sf_dir, "documents"))
 
 
+SIMHASH_MAX_HAMMING = 8
+
+
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamming <= 8 of 60 bits: close fingerprints only (16+ admits
+    """Hamming <= SIMHASH_MAX_HAMMING of 60 bits: close fingerprints only (16+ admits
     vocabulary-level noise on this small-vocab corpus). Recall is
     FULL at this threshold: the banding adapts to max_hamming
     (9 blocks for d<=8, pigeonhole) -- so the banded result equals
     the brute-force all-pairs oracle exactly."""
-    return simhash_near_dup_pairs(load_table(spark, sf_dir, "documents"), max_hamming=8)
+    return simhash_near_dup_pairs(
+        load_table(spark, sf_dir, "documents"), max_hamming=SIMHASH_MAX_HAMMING
+    )

@@ -10,11 +10,14 @@ from .shared import (
     F,
     SparkSession,
     Window,
+    analytics,
     embedding_dup_pairs,
     load_table,
     materialize,
-    top_k,
     with_token_array,
+    _customer_nation_lines,
+    _order_month,
+    _rev_micros,
 )
 
 
@@ -53,28 +56,11 @@ def q_nation_revenue_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion folds a <= calendar-months array per nation via
     F.aggregate, JVM-side, no driver loop and no per-step shuffle.
     The oracle is a recursive CTE stepping the same arithmetic."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev_micros = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-        * F.lit(1000000).cast("decimal(7,0)")
-    ).cast("decimal(25,0)")
     monthly = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (
-                (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-                - F.lit(1992 * 12 + 1)
-            ).cast("long").alias("x"),
-        )
+        _customer_nation_lines(spark, sf_dir, load_table(spark, sf_dir, "orders"))
+        .groupBy(F.col("n_name").alias("nation"), _order_month().alias("x"))
         .agg(
-            F.sum(rev_micros)
+            F.sum(_rev_micros())
             .cast("decimal(25,0)")
             .cast("string")
             .cast("double")
@@ -189,10 +175,12 @@ def q_feature_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_term_keyness_g2(
-    spark: SparkSession, sf_dir: str, top_k: int = 10, min_count: int = 5
-) -> DataFrame:
-    """Top-k keyness terms per language by the Dunning log-likelihood
+G2_TOP_K = 10
+G2_MIN_COUNT = 5
+
+
+def q_term_keyness_g2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-G2_TOP_K keyness terms per language by the Dunning log-likelihood
     ratio G2 = 2 * sum over the 2x2 table of O ln(O/E) (Dunning 1993,
     "Accurate Methods for the Statistics of Surprise and
     Coincidence") -- the low-count-honest companion of
@@ -202,7 +190,7 @@ def q_term_keyness_g2(
     contribute 0) is rounded 9dp into a DECIMAL per-word G2, and the
     per-lang ranking happens ON that exact decimal -- ulp-identical
     ordering cross-engine with word-asc tie-break. [lang, rank, word,
-    n_in_lang, g2]; candidates pruned to a >= min_count.
+    n_in_lang, g2]; candidates pruned to a >= G2_MIN_COUNT.
 
     Scale shape: identical to term_chi2_keywords -- everything after
     the tokenize pass lives at (lang, word) / vocab grain."""
@@ -216,7 +204,7 @@ def q_term_keyness_g2(
     wtot = cnt.groupBy("w").agg(F.sum("a").alias("wt"))
     ntot = ltot.agg(F.sum("lt").alias("nn"))
     j = (
-        cnt.filter(F.col("a") >= min_count)
+        cnt.filter(F.col("a") >= G2_MIN_COUNT)
         .join(F.broadcast(ltot), "lang")
         .join(wtot, "w")
         .crossJoin(F.broadcast(ntot))
@@ -248,7 +236,7 @@ def q_term_keyness_g2(
         ),
     )
     return (
-        ranked.filter(F.col("rank") <= top_k)
+        ranked.filter(F.col("rank") <= G2_TOP_K)
         .select(
             "lang",
             F.col("rank").cast("long").alias("rank"),
@@ -275,27 +263,10 @@ def q_nation_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection happen at nation x month grain (C(n_months, 2) pairs
     per nation, bounded by the calendar, never row counts). The pair
     self-join is an equi-join on nation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev_micros = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-        * F.lit(1000000).cast("decimal(7,0)")
-    ).cast("decimal(25,0)")
     monthly = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (
-                (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-                - F.lit(1992 * 12 + 1)
-            ).cast("long").alias("x"),
-        )
-        .agg(F.sum(rev_micros).cast("decimal(25,0)").alias("y"))
+        _customer_nation_lines(spark, sf_dir, load_table(spark, sf_dir, "orders"))
+        .groupBy(F.col("n_name").alias("nation"), _order_month().alias("x"))
+        .agg(F.sum(_rev_micros()).cast("decimal(25,0)").alias("y"))
     )
     # NOT pinned (r10): both pair-join sides read `monthly`, but the
     # two subtrees are identical up to aliases, so ReuseExchange
@@ -417,17 +388,12 @@ def q_brand_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     part = load_table(spark, sf_dir, "part")
     nation = load_table(spark, sf_dir, "nation")
-    rev_micros = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-        * F.lit(1000000).cast("decimal(7,0)")
-    ).cast("decimal(25,0)")
     nb = (
         li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.col("p_brand").alias("brand"))
-        .agg(F.sum(rev_micros).cast("decimal(25,0)").alias("rev"))
+        .agg(F.sum(_rev_micros()).cast("decimal(25,0)").alias("rev"))
     )
     w_rank = Window.partitionBy("nation").orderBy(
         F.desc("rev"), F.asc("brand")
@@ -735,10 +701,7 @@ def q_customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the one (cohort, age) groupBy; windows never touch order
     rows."""
     orders = load_table(spark, sf_dir, "orders")
-    midx = (
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-        - F.lit(1992 * 12 + 1)
-    ).cast("long")
+    midx = _order_month()
     om = orders.select(
         "o_custkey",
         midx.alias("_m"),
@@ -806,7 +769,7 @@ def q_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     s = ev.withColumn(
-        "_st", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+        "_st", F.when(gap.isNull() | (gap > analytics.SESSION_GAP_S), 1).otherwise(0)
     ).withColumn("_sid", F.sum("_st").over(w_run))
     sess = s.groupBy("user_id", "_sid").agg(
         F.count("*").alias("_n"),
@@ -854,10 +817,7 @@ def q_shipping_delay_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate"
     )
-    month = (
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-        - F.lit(1992 * 12 + 1)
-    ).cast("long")
+    month = _order_month()
     d = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .select(
@@ -917,9 +877,7 @@ def q_embedding_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding_dup_pairs."""
     from ..operators.similarity import mutual_nearest_pairs
 
-    pairs = embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), min_cosine=0.35
-    )
+    pairs = embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"))
     return mutual_nearest_pairs(pairs)
 
 
@@ -934,9 +892,7 @@ def q_embedding_mutual_nn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     `embedding_mutual_nn` remains the exact small-corpus twin."""
     from ..operators.similarity import mutual_nearest_pairs
 
-    pairs = embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), min_cosine=0.35, use_lsh=True
-    )
+    pairs = embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), use_lsh=True)
     # pin=False: measured neutral on the bucketed path (exchange
     # reuse already dedups the candidate scan) and avoids pinning
     # corpus-scale candidate blocks at 100 TB -- see
@@ -980,14 +936,16 @@ def _markov_transitions(spark: SparkSession, sf_dir: str):
     return ev, tr, states
 
 
-def _absorb_p(
-    tr: DataFrame, states: DataFrame, steps: int, absorb_state: str = "purchase"
-) -> DataFrame:
-    """`steps` unrolled value-iteration rounds of p(reach absorb_state
+MARKOV_STEPS = 8
+ABSORB_STATE = "purchase"
+
+
+def _absorb_p(tr: DataFrame, states: DataFrame, steps: int) -> DataFrame:
+    """`steps` unrolled value-iteration rounds of p(reach ABSORB_STATE
     within k steps) with the absorbing state clamped to 1; 12dp
     decimal per-step contributions (bit-identical cross-engine). All
     work at state grain."""
-    absorb = F.when(F.col("node") == absorb_state, F.lit(1.0))
+    absorb = F.when(F.col("node") == ABSORB_STATE, F.lit(1.0))
 
     def sdbl(col):
         return col.cast("string").cast("double")
@@ -1017,7 +975,7 @@ def _absorb_p(
 
 
 def q_event_conversion_absorption(
-    spark: SparkSession, sf_dir: str, steps: int = 8
+    spark: SparkSession, sf_dir: str, steps: int = MARKOV_STEPS
 ) -> DataFrame:
     """Absorbing-chain conversion probability: for each event type,
     the probability that a user's Markov walk (first-order, the
@@ -1045,12 +1003,10 @@ def q_event_conversion_absorption(
 MARKOV_ORACLE_CHANNELS = ("click", "error", "signup", "view")
 
 
-def q_attribution_markov_removal(
-    spark: SparkSession, sf_dir: str, steps: int = 8
-) -> DataFrame:
+def q_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov removal-effect channel attribution (Anderl et al.,
     "Mapping the customer journey"): credit each non-converting event
-    type by how much the 8-step conversion reach drops when walks can
+    type by how much the MARKOV_STEPS-step conversion reach drops when walks can
     no longer ENTER it. p_base = sum_s pi(s) p(s) with pi the
     first-event (journey-start) distribution and p the absorbing-
     chain reach of q_event_conversion_absorption; for each channel c,
@@ -1106,11 +1062,11 @@ def q_attribution_markov_removal(
             ).alias("val")
         )
 
-    base = reach(_absorb_p(tr, states, steps)).select(
+    base = reach(_absorb_p(tr, states, MARKOV_STEPS)).select(
         F.col("val").alias("p_base")
     )
     channels = sorted(
-        r.node for r in states.collect() if r.node != "purchase"
+        r.node for r in states.collect() if r.node != ABSORB_STATE
     )
     # The oracle pins this channel universe at authoring time (it is
     # unrolled into the SQL); if the generator's event-type set ever
@@ -1142,11 +1098,11 @@ def q_attribution_markov_removal(
         F.col("_t2") != F.col("removed")
     )
     sx = states.crossJoin(F.broadcast(ch_df))
-    absorb_k = F.when(F.col("node") == "purchase", F.lit(1.0))
+    absorb_k = F.when(F.col("node") == ABSORB_STATE, F.lit(1.0))
     p_k = sx.select(
         "removed", "node", absorb_k.otherwise(F.lit(0.0)).alias("p")
     )
-    for _ in range(steps):
+    for _ in range(MARKOV_STEPS):
         # rename the state side's keys before the join: both sides'
         # `removed` descends from the SAME broadcast ch_df lineage,
         # so an attribute-equality condition is ambiguous (Spark
@@ -1212,9 +1168,9 @@ def q_attribution_markov_removal(
     ).orderBy("channel")
 
 
-def _absorption_ctes(steps: int = 8) -> str:
+def _absorption_ctes() -> str:
     """Unrolled value-iteration oracle for q_event_conversion_absorption."""
-    parts = ["""nxt AS (
+    parts = [f"""nxt AS (
     SELECT event_type,
            lead(event_type) OVER (PARTITION BY user_id
                                   ORDER BY ts, event_id) AS next_type
@@ -1227,13 +1183,13 @@ def _absorption_ctes(steps: int = 8) -> str:
          FROM c JOIN tot ON c.event_type = tot.event_type),
   st AS (SELECT s AS node FROM tr UNION SELECT t2 FROM tr),
   p0 AS (SELECT node,
-                CASE WHEN node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+                CASE WHEN node = '{ABSORB_STATE}' THEN CAST(1.0 AS DOUBLE)
                      ELSE CAST(0.0 AS DOUBLE) END AS p
          FROM st)"""]
-    for k in range(1, steps + 1):
+    for k in range(1, MARKOV_STEPS + 1):
         parts.append(f"""p{k} AS (
     SELECT st.node,
-           CASE WHEN st.node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+           CASE WHEN st.node = '{ABSORB_STATE}' THEN CAST(1.0 AS DOUBLE)
                 ELSE coalesce(x.sm, CAST(0.0 AS DOUBLE)) END AS p
     FROM st LEFT JOIN (
       SELECT s AS node,
@@ -1242,24 +1198,14 @@ def _absorption_ctes(steps: int = 8) -> str:
       FROM tr JOIN p{k - 1} ON tr.t2 = p{k - 1}.node GROUP BY 1) x
     USING (node))""")
     return ",\n  ".join(parts) + f"""
-  SELECT node AS event_type, p AS p_convert FROM p{steps} ORDER BY node"""
+  SELECT node AS event_type, p AS p_convert FROM p{MARKOV_STEPS} ORDER BY node"""
 
 
-def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simplified (centroid-based) silhouette per label over the
-    embedding corpus: s_i = (b_i - a_i) / max(a_i, b_i) with a_i the
-    SQUARED distance to the own-label centroid and b_i the minimum
-    over other labels' centroids -- the O(n*k) silhouette every
-    clustering-quality dashboard uses when the O(n^2) medoid form is
-    unaffordable (Hruschka et al.'s simplified silhouette; also the
-    nearest_centroid_confusion's quality twin). [label, n_vecs,
-    mean_silhouette], silhouette terms 9dp-decimal-summed
-    (order-independent) and string-routed.
-
-    Scale shape: identical to nearest_centroid_confusion -- broadcast
-    k x dims centroids, per-(vec, label) squared distance via
-    ||v||^2 - 2<v,c> + ||c||^2 from the same decimal-exact dot/norm
-    aggregates, one vec-grain window for the b_i argmin."""
+def _label_centroid_dots(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[vec_id, label, clabel, dot, vnorm2, cnorm2]: every embedding
+    against every label centroid (the label_centroids recipe: exact
+    decimal sums, 6dp means), dots and squared norms as 12dp-decimal
+    sums string-routed to double. Centroids (k x dims) are broadcast."""
     emb = load_table(spark, sf_dir, "embeddings")
     flat = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
@@ -1292,13 +1238,26 @@ def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dot")
         )
     )
-    d2 = (
-        dots.join(vn, "vec_id")
-        .join(F.broadcast(cn), "clabel")
-        .withColumn(
-            "_d2",
-            F.col("vnorm2") - F.lit(2.0) * F.col("dot") + F.col("cnorm2"),
-        )
+    return dots.join(vn, "vec_id").join(F.broadcast(cn), "clabel")
+
+
+def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Simplified (centroid-based) silhouette per label over the
+    embedding corpus: s_i = (b_i - a_i) / max(a_i, b_i) with a_i the
+    SQUARED distance to the own-label centroid and b_i the minimum
+    over other labels' centroids -- the O(n*k) silhouette every
+    clustering-quality dashboard uses when the O(n^2) medoid form is
+    unaffordable (Hruschka et al.'s simplified silhouette; also the
+    nearest_centroid_confusion's quality twin). [label, n_vecs,
+    mean_silhouette], silhouette terms 9dp-decimal-summed
+    (order-independent) and string-routed.
+
+    Scale shape: identical to nearest_centroid_confusion -- broadcast
+    k x dims centroids, per-(vec, label) squared distance via
+    ||v||^2 - 2<v,c> + ||c||^2 from the same decimal-exact dot/norm
+    aggregates, one vec-grain window for the b_i argmin."""
+    d2 = _label_centroid_dots(spark, sf_dir).withColumn(
+        "_d2", F.col("vnorm2") - F.lit(2.0) * F.col("dot") + F.col("cnorm2")
     )
     a = d2.filter(F.col("label") == F.col("clabel")).select(
         "vec_id", "label", F.col("_d2").alias("_a")
@@ -1318,7 +1277,9 @@ def q_label_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.groupBy("label")
         .agg(
             F.count("*").alias("n_vecs"),
-            (sdbl(F.sum("_s")) / F.count("*")).alias("mean_silhouette"),
+            (F.sum("_s").cast("string").cast("double") / F.count("*")).alias(
+                "mean_silhouette"
+            ),
         )
         .orderBy("label")
     )
@@ -1515,45 +1476,8 @@ def q_nearest_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = |labels| (small by construction). One shuffle on vec_id for
     the per-(vec, label) dot aggregate; the confusion matrix is a
     k x k aggregate."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    flat = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-
-    def sdbl(c):
-        return c.cast("string").cast("double")
-
-    cent = flat.groupBy(F.col("label").alias("clabel"), "pos").agg(
-        F.round(
-            sdbl(F.sum(F.col("v").cast("decimal(27,12)"))) / F.count("*"), 6
-        ).alias("c")
-    )
-    cn = cent.groupBy("clabel").agg(
-        sdbl(F.sum((F.col("c") * F.col("c")).cast("decimal(24,12)"))).alias(
-            "cnorm2"
-        )
-    )
-    vn = flat.groupBy("vec_id").agg(
-        sdbl(F.sum((F.col("v") * F.col("v")).cast("decimal(24,12)"))).alias(
-            "vnorm2"
-        )
-    )
-    dots = (
-        flat.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "label", "clabel")
-        .agg(
-            sdbl(
-                F.sum((F.col("v") * F.col("c")).cast("decimal(24,12)"))
-            ).alias("dot")
-        )
-    )
-    scored = (
-        dots.join(vn, "vec_id")
-        .join(F.broadcast(cn), "clabel")
-        .withColumn(
-            "csim",
-            F.col("dot") / (F.sqrt("vnorm2") * F.sqrt("cnorm2")),
-        )
+    scored = _label_centroid_dots(spark, sf_dir).withColumn(
+        "csim", F.col("dot") / (F.sqrt("vnorm2") * F.sqrt("cnorm2"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("clabel"))
     pred = scored.withColumn("_rn", F.row_number().over(w)).filter(
@@ -1572,26 +1496,13 @@ def q_nation_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-year windows over the 25-row nation aggregate (reduced rows);
     revenue is exact integer micros so ranking and deltas are
     engine-exact."""
-    li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1995, 1996)
     )
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev_micros = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-        * F.lit(1000000).cast("decimal(7,0)")
-    ).cast("decimal(25,0)")
     yearly = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("yr"),
-        )
-        .agg(F.sum(rev_micros).cast("decimal(25,0)").alias("rev_micros"))
+        _customer_nation_lines(spark, sf_dir, orders)
+        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("yr"))
+        .agg(F.sum(_rev_micros()).cast("decimal(25,0)").alias("rev_micros"))
     )
     w = Window.partitionBy("yr").orderBy(F.desc("rev_micros"), F.asc("nation"))
     ranked = yearly.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -1631,26 +1542,13 @@ def q_nation_rank_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-free in the corpus size (the skyline/ztest stance). Both
     correlation chains are single IEEE expressions over exact longs,
     bit-identical cross-engine."""
-    li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.year("o_orderdate").isin(1995, 1996)
     )
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev_micros = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-        * F.lit(1000000).cast("decimal(7,0)")
-    ).cast("decimal(25,0)")
     yearly = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("yr"),
-        )
-        .agg(F.sum(rev_micros).cast("decimal(25,0)").alias("rev_micros"))
+        _customer_nation_lines(spark, sf_dir, orders)
+        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("yr"))
+        .agg(F.sum(_rev_micros()).cast("decimal(25,0)").alias("rev_micros"))
     )
     w = Window.partitionBy("yr").orderBy(F.desc("rev_micros"), F.asc("nation"))
     ranked = yearly.withColumn("rnk", F.row_number().over(w).cast("long"))

@@ -14,6 +14,7 @@ from .shared import (
     materialize,
     with_token_array,
 )
+from ..operators.basket import MIN_ORDERS
 
 
 
@@ -173,14 +174,15 @@ def q_market_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 # words plus the high-frequency modifier vocabulary, so candidate
 # phrases are short noun runs. Real corpora swap in a full stopword
 # list -- the operator shape (delimit -> islands -> deg/freq -> sum)
-# is unchanged. Mirrored literally in the SQL oracle.
+# is unchanged. The SQL oracle reads the same tuple.
 RAKE_STOPWORDS = ("the", "a", "join", "merge", "small", "fast", "slow", "big")
+RAKE_MAX_LEN = 4
+RAKE_TOPN = 20
 
 
-def q_rake_keyphrases(spark: SparkSession, sf_dir: str, max_len: int = 4,
-                      topn: int = 20) -> DataFrame:
+def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010): candidate phrases
-    are maximal stopword-delimited token runs (capped at max_len, the
+    are maximal stopword-delimited token runs (capped at RAKE_MAX_LEN, the
     standard RAKE cut); word score = deg(w)/freq(w) where deg counts
     phrase-mate co-occurrence including self; phrase score = sum of
     member word scores. Returns the top phrases by score with their
@@ -218,7 +220,7 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str, max_len: int = 4,
             ),
         ).alias("phrase"),
         F.count("*").alias("plen"),
-    ).filter(F.col("plen") <= max_len)
+    ).filter(F.col("plen") <= RAKE_MAX_LEN)
     wstat = (
         members.join(
             phr.select("doc_id", "phrase_id", "plen"), ["doc_id", "phrase_id"]
@@ -250,23 +252,26 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str, max_len: int = 4,
     return (
         agg.select("phrase", "n", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("phrase"))
-        .limit(topn)
+        .limit(RAKE_TOPN)
     )
 
 
-def q_training_negatives(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
+NEGATIVES_PER_POSITIVE = 3
+
+
+def q_training_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for (customer, part) training
     pairs -- the contrastive-training data op: every positive
-    interaction gets k pseudo-random negative parts, drawn by portable
-    hash (seeded, reproducible across runs AND engines) over the DENSE
-    part id space, then FALSE negatives (parts the customer actually
+    interaction gets NEGATIVES_PER_POSITIVE pseudo-random negative
+    parts, drawn by portable hash (seeded, reproducible across runs
+    AND engines) over the DENSE part id space, then FALSE negatives (parts the customer actually
     bought) are dropped by one anti-join against the positive set --
     rejection without iteration, the scale-safe form (retry loops
     serialize; an anti-join is one shuffle). Expected loss is
     |positives per user| / |parts| -- negligible, and exactly
     reproducible.
 
-    Plan: positives = one distinct over the order->part join; the k
+    Plan: positives = one distinct over the order->part join; the
     slots are a bounded explode; the candidate draw is map-only
     hashing; the anti-join is the only extra shuffle. Output keeps the
     slot so the (pos, slot) -> negative mapping is stable for epoch
@@ -289,7 +294,9 @@ def q_training_negatives(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
         .select(
             "custkey",
             F.col("part").alias("pos_part"),
-            F.explode(F.sequence(F.lit(1), F.lit(k))).alias("slot"),
+            F.explode(
+                F.sequence(F.lit(1), F.lit(NEGATIVES_PER_POSITIVE))
+            ).alias("slot"),
             "n_parts",
         )
         .withColumn(
@@ -313,13 +320,15 @@ def q_training_negatives(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
     ).select("custkey", "pos_part", F.col("slot").cast("long").alias("slot"), "neg_part")
 
 
-def q_item_item_cf(spark: SparkSession, sf_dir: str, min_pair: int = 2,
-                   topn: int = 5) -> DataFrame:
+CF_TOPN = 5
+
+
+def q_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative filtering (Sarwar et al., WWW'01) over
     binary order baskets: cosine sim(p1, p2) = c12 / sqrt(c1 * c2),
-    top-5 neighbors per part -- the 'customers who bought this also
-    bought' table. Reuses the A-priori pair machinery: support-pruned
-    pair counts symmetrized, then a per-item window over the pruned
+    top-CF_TOPN neighbors per part -- the 'customers who bought this also
+    bought' table. Reuses the A-priori pair machinery: pair counts
+    pruned to MIN_ORDERS co-orders, symmetrized, then a per-item window over the pruned
     neighbor lists (never the full item x item matrix).
 
     Exactness: c1*c2 is an exact integer < 2^53 at every tested SF,
@@ -341,7 +350,7 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str, min_pair: int = 2,
         .filter(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count("*").alias("c12"))
-        .filter(F.col("c12") >= min_pair)
+        .filter(F.col("c12") >= MIN_ORDERS)
     )
     sym = pairs.unionByName(
         pairs.select(
@@ -365,7 +374,7 @@ def q_item_item_cf(spark: SparkSession, sf_dir: str, min_pair: int = 2,
     w = Window.partitionBy("part").orderBy(F.desc("cosine"), F.asc("neighbor"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topn)
+        .filter(F.col("rank") <= CF_TOPN)
     )
 
 

@@ -335,9 +335,12 @@ def _exact_ntile(rn, total, k: int):
     )
 
 
-def q_customer_rfm(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+RFM_TILES = 5
+
+
+def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation -- recency / frequency / monetary
-    quintile scores (5 = best) plus a coarse segment label: the
+    RFM_TILES-tile scores (RFM_TILES = best) plus a coarse segment label: the
     classic CRM table, built WITHOUT a single global sort: each of
     the three exact NTILEs comes from the two-level bucketed global
     row_number (operators/ranking.with_global_row_number) + the
@@ -375,8 +378,8 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
             df, key, tiebreaks=[F.asc("custkey")], ascending=ascending,
             out_col="_rn", total_col="_n",
         )
-        tile = _exact_ntile(F.col("_rn"), F.col("_n"), k)
-        return ranked.withColumn(out, (F.lit(k + 1) - tile).cast("long")).drop(
+        tile = _exact_ntile(F.col("_rn"), F.col("_n"), RFM_TILES)
+        return ranked.withColumn(out, (F.lit(RFM_TILES + 1) - tile).cast("long")).drop(
             "_rn", "_n"
         )
 
@@ -408,19 +411,23 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     )
 
 
-def q_events_cusum(spark: SparkSession, sf_dir: str, slack: float = 0.5,
-                   threshold: float = 4.0) -> DataFrame:
+CUSUM_SLACK = 0.5
+CUSUM_THRESHOLD = 4.0
+
+
+def q_events_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point monitor (Page 1954) over the daily count
     series of each event type: standardize counts against the series'
     own mean/std, then the one-sided upper CUSUM
-    s_t = max(0, s_{t-1} + z_t - slack), alert when s_t > threshold --
+    s_t = max(0, s_{t-1} + z_t - CUSUM_SLACK), alert when
+    s_t > CUSUM_THRESHOLD --
     the sequential drift detector a pipeline runs on its volume
     metrics (z-score anomaly flags single spikes; CUSUM accumulates
     small sustained shifts).
 
     Cross-engine exactness: the recursion is computed in its CLOSED
     FORM s_t = P_t - min(0, min_{j<=t} P_j) with P the running prefix
-    sum of (round(z, 9) - slack) accumulated in DECIMAL(20,9) --
+    sum of (round(z, 9) - CUSUM_SLACK) accumulated in DECIMAL(20,9) --
     double running sums are NOT portable here (DuckDB's windowed sum
     aggregates via a segment tree, so its float association differs
     from Spark's sequential adds; measured: one last-ulp mismatch in
@@ -451,7 +458,7 @@ def q_events_cusum(spark: SparkSession, sf_dir: str, slack: float = 0.5,
         .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    y_dec = z.cast("decimal(20,9)") - F.lit(str(slack)).cast("decimal(20,9)")
+    y_dec = z.cast("decimal(20,9)") - F.lit(str(CUSUM_SLACK)).cast("decimal(20,9)")
     zero = F.lit("0").cast("decimal(30,9)")
     scored = (
         daily.join(
@@ -469,7 +476,7 @@ def q_events_cusum(spark: SparkSession, sf_dir: str, slack: float = 0.5,
         F.date_format("day", "yyyy-MM-dd").alias("day_s"),
         "cnt",
         s_dec.cast("string").cast("double").alias("cusum"),
-        (s_dec > F.lit(str(threshold)).cast("decimal(20,9)")).alias("alert"),
+        (s_dec > F.lit(str(CUSUM_THRESHOLD)).cast("decimal(20,9)")).alias("alert"),
     )
 
 
@@ -517,8 +524,7 @@ def q_user_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_session_concurrency(spark: SparkSession, sf_dir: str,
-                          gap_seconds: int = 1800) -> DataFrame:
+def q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak-load sweep line: per day, how many user sessions were
     active SIMULTANEOUSLY at the worst moment (capacity planning /
     peak-concurrency SLO). Sessions are 30-min-gap islands; each
@@ -538,7 +544,7 @@ def q_session_concurrency(spark: SparkSession, sf_dir: str,
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    chg = (gap.isNull() | (gap > gap_seconds)).cast("long")
+    chg = (gap.isNull() | (gap > analytics.SESSION_GAP_S)).cast("long")
     isl = ev.withColumn("chg", chg).withColumn(
         "island", F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )

@@ -12,10 +12,15 @@ from .shared import (
     Window,
     load_table,
     normalized_col,
-    top_k,
     with_token_array,
+    _SQL_COSUPPLY,
+    _customer_nation_lines,
+    _order_month,
+    _rev_micros,
 )
 from .reference_surface import q_wordcount
+from ..operators.graph_motifs import KCORE_K
+from ..operators.hits import HITS_ITERS
 
 
 
@@ -368,15 +373,15 @@ def q_event_markov_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_purchase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities over the bipartite purchase graph
-    (operators/hits.py): 3 max-normalized rounds, decimal-summed
+    (operators/hits.py): HITS_ITERS max-normalized rounds, decimal-summed
     contributions (pagerank recipe), [node_type, node_key, score].
-    The oracle unrolls the 3 rounds as MATERIALIZED CTEs."""
+    The oracle unrolls the HITS_ITERS rounds as MATERIALIZED CTEs."""
     from ..operators.hits import hits_scores
 
     return hits_scores(spark, sf_dir)
 
 
-def _hits_ctes(iters: int = 3) -> str:
+def _hits_ctes() -> str:
     """Unrolled max-normalized HITS oracle (see operators/hits.py)."""
     parts = [
         """
@@ -384,7 +389,7 @@ def _hits_ctes(iters: int = 3) -> str:
        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
   h0 AS MATERIALIZED (SELECT DISTINCT c, CAST(1.0 AS DOUBLE) AS h FROM e)"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, HITS_ITERS + 1):
         parts.append(
             f""",
   ar{i} AS MATERIALIZED (
@@ -400,18 +405,18 @@ def _hits_ctes(iters: int = 3) -> str:
         )
     parts.append(
         f"""
-  SELECT 'hub' AS node_type, c AS node_key, round(h, 9) AS score FROM h{iters}
+  SELECT 'hub' AS node_type, c AS node_key, round(h, 9) AS score FROM h{HITS_ITERS}
   UNION ALL
-  SELECT 'authority', s, round(a, 9) FROM a{iters}"""
+  SELECT 'authority', s, round(a, 9) FROM a{HITS_ITERS}"""
     )
     return "".join(parts)
 
 
 def q_cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """8-core of the thresholded co-supply graph
+    """KCORE_K-core of the thresholded co-supply graph
     (operators/graph_motifs.kcore): iterative peeling to fixpoint,
     loud on non-convergence. EAGER (each round pins + counts). The
-    oracle unrolls 8 peeling rounds as CTEs — more than any tested
+    oracle unrolls KCORE_ORACLE_ROUNDS peeling rounds as CTEs — more than any tested
     SF needs (4 at sf0.01); extra rounds are no-ops at fixpoint, so
     the hash match proves the loop's stopping rule exact."""
     from ..operators.graph_motifs import cosupply_kcore
@@ -419,17 +424,17 @@ def q_cosupply_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosupply_kcore(spark, sf_dir)
 
 
-def _kcore_ctes(k: int = 8, rounds: int = 8) -> str:
+KCORE_ORACLE_ROUNDS = 8
+
+
+def _kcore_ctes() -> str:
     """Unrolled peeling oracle over the shared co-supply edge CTEs."""
     parts = [
-        """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+        f"""
+  WITH {_SQL_COSUPPLY},
   e0 AS (SELECT s1, s2 FROM w, t WHERE c >= thr)"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, KCORE_ORACLE_ROUNDS + 1):
         # MATERIALIZED: each round references its predecessor 3x; an
         # inlined chain re-expands the base scan exponentially (4^8
         # lineitem reads blew the fd limit), a materialized one is
@@ -439,13 +444,13 @@ def _kcore_ctes(k: int = 8, rounds: int = 8) -> str:
   d{i} AS MATERIALIZED (SELECT v, count(*) AS dg FROM (SELECT s1 AS v FROM e{i-1}
            UNION ALL SELECT s2 FROM e{i-1}) GROUP BY 1),
   e{i} AS MATERIALIZED (SELECT s1, s2 FROM e{i-1}
-           WHERE s1 IN (SELECT v FROM d{i} WHERE dg >= {k})
-             AND s2 IN (SELECT v FROM d{i} WHERE dg >= {k}))"""
+           WHERE s1 IN (SELECT v FROM d{i} WHERE dg >= {KCORE_K})
+             AND s2 IN (SELECT v FROM d{i} WHERE dg >= {KCORE_K}))"""
         )
     parts.append(
         f"""
   SELECT v AS suppkey, count(*) AS core_deg
-  FROM (SELECT s1 AS v FROM e{rounds} UNION ALL SELECT s2 FROM e{rounds})
+  FROM (SELECT s1 AS v FROM e{KCORE_ORACLE_ROUNDS} UNION ALL SELECT s2 FROM e{KCORE_ORACLE_ROUNDS})
   GROUP BY 1"""
     )
     return "".join(parts)
@@ -453,6 +458,16 @@ def _kcore_ctes(k: int = 8, rounds: int = 8) -> str:
 
 REACH_NATION = "NATION_19"
 REACH_HOPS = 3
+
+
+def _reach_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """[suppkey] of every supplier in REACH_NATION."""
+    nat = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == REACH_NATION)
+    return (
+        load_table(spark, sf_dir, "supplier")
+        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select(F.col("s_suppkey").alias("suppkey"))
+    )
 
 
 def q_supplier_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,28 +480,16 @@ def q_supplier_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds as materialized CTEs."""
     from ..operators.graph_motifs import bfs_hops, cosupply_edges
 
-    nat = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name") == REACH_NATION
-    )
-    sources = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(F.col("s_suppkey").alias("suppkey"))
-    )
-    return bfs_hops(
-        cosupply_edges(spark, sf_dir), sources, max_hops=REACH_HOPS
-    )
+    edges = cosupply_edges(spark, sf_dir)
+    return bfs_hops(edges, _reach_sources(spark, sf_dir), max_hops=REACH_HOPS)
 
 
-def _bfs_ctes(rounds: int = REACH_HOPS) -> str:
+def _bfs_ctes() -> str:
     """Unrolled frontier-BFS oracle over the shared co-supply edge
     CTEs (sources = REACH_NATION's suppliers)."""
     parts = [
         f"""
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
   und AS MATERIALIZED (SELECT s1 AS u, s2 AS v FROM e
                        UNION ALL SELECT s2, s1 FROM e),
@@ -495,7 +498,7 @@ def _bfs_ctes(rounds: int = REACH_HOPS) -> str:
     WHERE n_name = '{REACH_NATION}'),
   seen0 AS MATERIALIZED (SELECT suppkey FROM v0)"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, REACH_HOPS + 1):
         parts.append(
             f""",
   f{i} AS MATERIALIZED (SELECT DISTINCT und.v AS suppkey
@@ -508,7 +511,7 @@ def _bfs_ctes(rounds: int = REACH_HOPS) -> str:
         [f"  SELECT suppkey, CAST(0 AS BIGINT) AS hops FROM v0"]
         + [
             f"  SELECT suppkey, CAST({i} AS BIGINT) FROM f{i}"
-            for i in range(1, rounds + 1)
+            for i in range(1, REACH_HOPS + 1)
         ]
     )
     return "".join(parts) + "\n" + tail
@@ -523,28 +526,17 @@ def q_supplier_cheapest_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs."""
     from ..operators.graph_motifs import cosupply_cheapest_reach
 
-    nat = load_table(spark, sf_dir, "nation").filter(
-        F.col("n_name") == REACH_NATION
-    )
-    sources = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select(F.col("s_suppkey").alias("suppkey"))
-    )
     return cosupply_cheapest_reach(
-        spark, sf_dir, sources, rounds=REACH_HOPS
+        spark, sf_dir, _reach_sources(spark, sf_dir), rounds=REACH_HOPS
     )
 
 
-def _sssp_ctes(rounds: int = REACH_HOPS) -> str:
+def _sssp_ctes() -> str:
     """Unrolled Bellman-Ford oracle over the weighted co-supply CTEs
     (sources = REACH_NATION's suppliers at cost 0)."""
     parts = [
         f"""
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2, c FROM w, t WHERE c >= thr),
   mx AS (SELECT max(c) + 1 AS mx FROM e),
   we AS MATERIALIZED (SELECT s1, s2, CAST(mx.mx - c AS BIGINT) AS wt
@@ -556,7 +548,7 @@ def _sssp_ctes(rounds: int = REACH_HOPS) -> str:
     FROM supplier JOIN nation ON s_nationkey = n_nationkey
     WHERE n_name = '{REACH_NATION}')"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, REACH_HOPS + 1):
         parts.append(
             f""",
   d{i} AS MATERIALIZED (
@@ -569,7 +561,7 @@ def _sssp_ctes(rounds: int = REACH_HOPS) -> str:
         )
     parts.append(
         f"""
-  SELECT suppkey, mc AS min_cost FROM d{rounds}"""
+  SELECT suppkey, mc AS min_cost FROM d{REACH_HOPS}"""
     )
     return "".join(parts)
 
@@ -1051,43 +1043,29 @@ def q_nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one groupBy shuffle."""
     from ..operators.regression import ols_fit
 
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    rev_micros = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
-        * F.lit(1000000).cast("decimal(7,0)")
-    ).cast("decimal(25,0)")
     monthly = (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            (
-                (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-                - F.lit(1992 * 12 + 1)
-            ).cast("long").alias("month_idx"),
-        )
-        .agg(F.sum(rev_micros).cast("decimal(25,0)").alias("rev_micros"))
+        _customer_nation_lines(spark, sf_dir, load_table(spark, sf_dir, "orders"))
+        .groupBy(F.col("n_name").alias("nation"), _order_month().alias("month_idx"))
+        .agg(F.sum(_rev_micros()).cast("decimal(25,0)").alias("rev_micros"))
     )
     return ols_fit(monthly, ["nation"], "month_idx", "rev_micros").orderBy(
         "nation"
     )
 
 
-def q_zipf_word_fit(spark: SparkSession, sf_dir: str, top_n: int = 500) -> DataFrame:
+ZIPF_TOP_N = 500
+
+
+def q_zipf_word_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit of the corpus: OLS slope of ln(count) on
-    ln(rank) over the top-N words -- the standard log-log diagnostic
+    ln(rank) over the top-ZIPF_TOP_N words -- the standard log-log diagnostic
     (slope near -1 on natural text). Ranks come from a window over
     the LIMITed top-N (reduced rows -- the full vocab never crosses a
     global sort); ln terms are rounded to 9dp and summed as DECIMAL
     (order-independent), and slope/intercept/r2 are IEEE expressions
     over the string-routed exact sums, identical in both engines."""
     wc = q_wordcount(spark, sf_dir)
-    top = wc.orderBy(F.desc("cnt"), "word").limit(top_n)
+    top = wc.orderBy(F.desc("cnt"), "word").limit(ZIPF_TOP_N)
     w = Window.orderBy(F.desc("cnt"), "word")
     pts = top.select(
         F.round(F.log(F.row_number().over(w).cast("double")), 9)
@@ -1120,7 +1098,10 @@ def q_zipf_word_fit(spark: SparkSession, sf_dir: str, top_n: int = 500) -> DataF
     )
 
 
-def q_heaps_law_fit(spark: SparkSession, sf_dir: str, n_buckets: int = 256) -> DataFrame:
+HEAPS_BUCKETS = 256
+
+
+def q_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law fit of vocabulary growth: OLS of ln(cumulative
     distinct types) on ln(cumulative tokens) over the corpus in
     doc_id order -- V = K * n^beta, the standard sublinear
@@ -1152,7 +1133,7 @@ def q_heaps_law_fit(spark: SparkSession, sf_dir: str, n_buckets: int = 256) -> D
         "tok_n",
         F.coalesce("types_new", F.lit(0)).alias("types_new"),
     )
-    bk = bucketize_by_key(base, "doc_id", n_buckets=n_buckets)
+    bk = bucketize_by_key(base, "doc_id", n_buckets=HEAPS_BUCKETS)
     off_t = bucket_offsets(bk, weight=F.col("tok_n")).select(
         "_bkt", F.col("_off").alias("_offt")
     )
@@ -1213,9 +1194,12 @@ def q_heaps_law_fit(spark: SparkSession, sf_dir: str, n_buckets: int = 256) -> D
     )
 
 
-def q_ngram_novelty(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
+NOVELTY_N = 4
+
+
+def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document n-gram novelty: the fraction of a doc's DISTINCT
-    word 4-grams never seen in any earlier document (doc_id order) --
+    word NOVELTY_N-grams never seen in any earlier document (doc_id order) --
     the within-corpus contamination/memorization screen a training
     pipeline runs before trusting "new" data (low novelty = the doc
     is stitched from text already in the corpus; the span-level
@@ -1233,13 +1217,13 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sized = docs.select(
         "doc_id", tokens_col(normalized_col(F.col("text"))).alias("t")
-    ).filter(F.size("t") >= n)
+    ).filter(F.size("t") >= NOVELTY_N)
     grams = sized.select(
         "doc_id",
         F.explode(
             F.expr(
-                f"transform(sequence(1, size(t) - {n - 1}),"
-                f" i -> concat_ws(' ', slice(t, i, {n})))"
+                f"transform(sequence(1, size(t) - {NOVELTY_N - 1}),"
+                f" i -> concat_ws(' ', slice(t, i, {NOVELTY_N})))"
             )
         ).alias("gram"),
     ).distinct()
@@ -1267,8 +1251,11 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str, n: int = 4) -> DataFrame:
     )
 
 
-def q_events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFrame:
-    """Exact daily-count autocorrelogram per event type at lags 1..7
+ACF_MAX_LAG = 7
+
+
+def q_events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact daily-count autocorrelogram per event type at lags 1..ACF_MAX_LAG
     (operators/acf.py): counts land on a dense zero-filled day spine
     (types x days -- metadata-sized), then the mean-cleared integer
     form makes every numerator/denominator an exact decimal; one IEEE
@@ -1296,7 +1283,7 @@ def q_events_acf(spark: SparkSession, sf_dir: str, max_lag: int = 7) -> DataFram
             F.coalesce("y", F.lit(0)).cast("long").alias("y"),
         )
     )
-    return autocorrelation(series, "event_type", "t", "y", max_lag=max_lag)
+    return autocorrelation(series, "event_type", "t", "y", max_lag=ACF_MAX_LAG)
 
 
 def q_user_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,9 +1344,11 @@ def q_score_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lift_table(docs)
 
 
-def q_term_chi2_keywords(
-    spark: SparkSession, sf_dir: str, top_k: int = 10, min_count: int = 5
-) -> DataFrame:
+CHI2_TOP_K = 10
+CHI2_MIN_COUNT = 5
+
+
+def q_term_chi2_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k chi-square keyword terms per language -- the classic
     feature-selection / keyness screen (Manning & Schuetze ch. 5)
     over token-instance contingency tables: for each (lang, word),
@@ -1370,8 +1359,8 @@ def q_term_chi2_keywords(
 
     -- every input an EXACT integer count, the statistic one fixed
     IEEE chain, identical cross-engine. [lang, rank, word, n_in_lang,
-    chi2] for the top_k terms per language (chi2 desc, word asc
-    tie-break), candidates pruned to a >= min_count.
+    chi2] for the CHI2_TOP_K terms per language (chi2 desc, word asc
+    tie-break), candidates pruned to a >= CHI2_MIN_COUNT.
 
     Scale shape: one tokenize pass to (lang, word) grain; word
     marginals are a vocab-grain groupBy joined back on word; lang
@@ -1388,7 +1377,7 @@ def q_term_chi2_keywords(
     wtot = cnt.groupBy("w").agg(F.sum("a").alias("wt"))
     ntot = ltot.agg(F.sum("lt").alias("nn"))
     j = (
-        cnt.filter(F.col("a") >= min_count)
+        cnt.filter(F.col("a") >= CHI2_MIN_COUNT)
         .join(F.broadcast(ltot), "lang")
         .join(wtot, "w")
         .crossJoin(F.broadcast(ntot))
@@ -1417,7 +1406,7 @@ def q_term_chi2_keywords(
         ),
     )
     return (
-        ranked.filter(F.col("rank") <= top_k)
+        ranked.filter(F.col("rank") <= CHI2_TOP_K)
         .select(
             "lang",
             F.col("rank").cast("long").alias("rank"),

@@ -15,14 +15,37 @@ from .shared import (
     _bpe_encode_sql,
     _bpe_pack_sql,
     _pagerank_ctes,
+    _sql_quality,
 )
-from .reference_surface import _CORPUS_TXT
-from .text_shaping import BPE_MERGES
-from .curation import PAGERANK_ITERS, PPR_SEGMENT
+from .curation import (
+    BM25_B,
+    BM25_K1,
+    BM25_QUERY,
+    BM25_TOPN,
+    PAGERANK_ITERS,
+    PPR_SEGMENT,
+)
+from .dedup import SAMPLE_PER_LANG
+from .events_analytics import CUSUM_SLACK, CUSUM_THRESHOLD, RFM_TILES
+from .reference_surface import WORDCOUNT_TOP_N, _CORPUS_TXT
+from .similarity import N_QUERIES, TOPIC_MIN_COUNT, TOPIC_TOPN
+from .text_shaping import BPE_MERGES, BPE_PAIR_TOPN
+from ..operators.bloom import BITS_PER_SLOT, SLOT_SHIFT
+from ..operators.chunking import DEFAULT_PACK_BUDGET
+from ..operators.hll import M_REGISTERS, RAW_SCALE
+from ..operators.similarity import MIN_COSINE, N_PROBE, TOPK
+from ..plans.analytics import SESSION_GAP_S
+from ..sources.text import NUM_TASKS
 from .oracle_builders import (
+    _BLOOM_HITS,
+    _BLOOM_JOINS,
+    _BLOOM_POSITIONS,
+    _CMS_EST,
+    _CMS_ROWS,
     _ann_ivf_kmeans_sql,
     _ann_lsh_sql,
     _banded_pairs_sql,
+    _cms_joins,
     _curate_documents_sql,
     _dedup_clusters_sql,
     _dsir_sql,
@@ -42,14 +65,34 @@ from .oracle_builders import (
 )
 
 
+# BM25 over the query terms, term by term in the engine's order: the
+# per-term tf/df columns and the fixed-order score chain
+_BM25_TF = ",\n               ".join(
+    f"CAST(len(list_filter(toks, x -> x = '{t}')) AS BIGINT) AS tf_{i}"
+    for i, t in enumerate(BM25_QUERY)
+)
+_BM25_DF = ",\n              ".join(
+    f"CAST(sum(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_{i}"
+    for i in range(len(BM25_QUERY))
+)
+_BM25_SCORE = " + ".join(
+    f"round(ln((CAST(n_docs AS DOUBLE) - CAST(df_{i} AS DOUBLE) + CAST(0.5 AS DOUBLE))"
+    f" / (CAST(df_{i} AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)), 9)"
+    f" * (CAST(tf_{i} AS DOUBLE) * CAST({BM25_K1 + 1.0} AS DOUBLE))"
+    f" / (CAST(tf_{i} AS DOUBLE) + CAST({BM25_K1} AS DOUBLE)"
+    f" * (CAST({1.0 - BM25_B} AS DOUBLE) + (CAST({BM25_B} AS DOUBLE) * CAST(dl AS DOUBLE))"
+    f" / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))"
+    for i in range(len(BM25_QUERY))
+)
+
 
 # shared by purchase_attribution and attribution_summary
-_PURCHASE_ATTRIBUTION = """
+_PURCHASE_ATTRIBUTION = f"""
       WITH s AS (
         SELECT event_id, user_id, ts, event_type, value,
                CASE WHEN lag(ts) OVER w IS NULL
                       OR CAST(floor(epoch(ts)) AS BIGINT)
-                         - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+                         - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > {SESSION_GAP_S}
                     THEN 1 ELSE 0 END AS st
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
@@ -81,7 +124,9 @@ ORACLES: dict[str, str] = {
         FROM lines)
       SELECT word, count(*) AS cnt FROM words WHERE word <> '' GROUP BY word
     """,
-    "wordcount_topn": f"SELECT * FROM ({_SQL_WORDCOUNT}) ORDER BY cnt DESC, word ASC LIMIT 100",
+    "wordcount_topn": (
+        f"SELECT * FROM ({_SQL_WORDCOUNT}) ORDER BY cnt DESC, word ASC LIMIT {WORDCOUNT_TOP_N}"
+    ),
     "wordcount_rdd": _SQL_WORDCOUNT,
     "corpus_stats": f"""
       SELECT w.n_tokens, w.n_distinct_words, d.n_lines
@@ -89,9 +134,9 @@ ORACLES: dict[str, str] = {
             FROM ({_SQL_WORDS}) WHERE word <> '') w,
            (SELECT count(*) AS n_lines FROM documents) d
     """,
-    "map_task_stats": """
+    "map_task_stats": f"""
       WITH w AS (
-        SELECT CAST(doc_id % 4 AS INT) AS task_id,
+        SELECT CAST(doc_id % {NUM_TASKS} AS INT) AS task_id,
                unnest(string_split_regex(trim(lower(
                  regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g'))), '\\s+')) AS word
         FROM documents)
@@ -112,11 +157,7 @@ ORACLES: dict[str, str] = {
     """,
     "quality_score": f"""
       SELECT doc_id, round(
-        least(len(toks) / 50.0, 1.0) * 0.35
-        + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
-                 / greatest(length(text), 1)) * 0.25
-        + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
-        + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+        {_sql_quality(8)}
       , 6) AS quality
       FROM ({_SQL_TOKS})
     """,
@@ -153,7 +194,7 @@ ORACLES: dict[str, str] = {
              array_to_string(chunk, ' ') AS chunk_text
       FROM c
     """,
-    "pack_sequences": """
+    "pack_sequences": f"""
       WITH n AS (
         SELECT doc_id, source,
                CAST(coalesce(list_sum(list_transform(
@@ -169,8 +210,8 @@ ORACLES: dict[str, str] = {
                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix
         FROM n)
       SELECT doc_id, source, n_tokens,
-             CAST(prefix // 256 AS BIGINT) AS bin_id,
-             CAST(prefix % 256 AS BIGINT) AS offset
+             CAST(prefix // {DEFAULT_PACK_BUDGET} AS BIGINT) AS bin_id,
+             CAST(prefix % {DEFAULT_PACK_BUDGET} AS BIGINT) AS offset
       FROM p
     """,
     "ngram_counts": f"""
@@ -189,7 +230,7 @@ ORACLES: dict[str, str] = {
     "bpe_pair_counts": f"""
       WITH {_bpe_ctes(1)}
       SELECT l AS "left", r AS "right", cnt AS pair_freq
-      FROM p0 ORDER BY pair_freq DESC, "left", "right" LIMIT 50
+      FROM p0 ORDER BY pair_freq DESC, "left", "right" LIMIT {BPE_PAIR_TOPN}
     """,
     "bpe_merges": f"""
       WITH {_bpe_ctes(BPE_MERGES)}
@@ -206,18 +247,14 @@ ORACLES: dict[str, str] = {
     "bm25_topk": f"""
       WITH t AS ({_SQL_TOKS}),
       pd AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-               CAST(len(list_filter(toks, x -> x = 'spark')) AS BIGINT) AS tf_0,
-               CAST(len(list_filter(toks, x -> x = 'join')) AS BIGINT) AS tf_1,
-               CAST(len(list_filter(toks, x -> x = 'fast')) AS BIGINT) AS tf_2
+               {_BM25_TF}
              FROM t),
       st AS (SELECT count(*) AS n_docs, CAST(sum(dl) AS BIGINT) AS sum_dl,
-              CAST(sum(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
-              CAST(sum(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1,
-              CAST(sum(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_2
+              {_BM25_DF}
              FROM pd)
-      SELECT doc_id, round(CAST(0.0 AS DOUBLE) + (round(ln((CAST(n_docs AS DOUBLE) - CAST(df_0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / (CAST(df_0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)), 9) * (CAST(tf_0 AS DOUBLE) * CAST(2.2 AS DOUBLE)) / (CAST(tf_0 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * CAST(dl AS DOUBLE)) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))) + round(ln((CAST(n_docs AS DOUBLE) - CAST(df_1 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / (CAST(df_1 AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)), 9) * (CAST(tf_1 AS DOUBLE) * CAST(2.2 AS DOUBLE)) / (CAST(tf_1 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * CAST(dl AS DOUBLE)) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)))) + round(ln((CAST(n_docs AS DOUBLE) - CAST(df_2 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / (CAST(df_2 AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE)), 9) * (CAST(tf_2 AS DOUBLE) * CAST(2.2 AS DOUBLE)) / (CAST(tf_2 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * CAST(dl AS DOUBLE)) / (CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))))), 6) AS bm25
+      SELECT doc_id, round(CAST(0.0 AS DOUBLE) + ({_BM25_SCORE}), 6) AS bm25
       FROM pd CROSS JOIN st
-      ORDER BY bm25 DESC, doc_id ASC LIMIT 50
+      ORDER BY bm25 DESC, doc_id ASC LIMIT {BM25_TOPN}
     """,
     "inverted_index": f"""
       WITH s AS ({_SQL_SHINGLES}),
@@ -269,26 +306,20 @@ ORACLES: dict[str, str] = {
       h AS (SELECT word, cnt,
                    CAST(concat('0x', substr(md5(word), 1, 15)) AS BIGINT) AS hv
             FROM wc),
-      {", ".join(
-        f"s{j} AS (SELECT (hv >> {10 * j}) % 1024 AS b{j}, "
-        f"CAST(sum(cnt) AS BIGINT) AS c{j} FROM h GROUP BY 1)"
-        for j in range(4))},
+      {_CMS_ROWS},
       top AS (SELECT word, cnt, hv FROM h ORDER BY cnt DESC, word ASC LIMIT 20)
       SELECT top.word, top.cnt AS true_cnt,
-             least(s0.c0, s1.c1, s2.c2, s3.c3) AS est_cnt,
-             least(s0.c0, s1.c1, s2.c2, s3.c3) - top.cnt AS overcount
+             {_CMS_EST} AS est_cnt,
+             {_CMS_EST} - top.cnt AS overcount
       FROM top
-      JOIN s0 ON s0.b0 = (top.hv >> 0) % 1024
-      JOIN s1 ON s1.b1 = (top.hv >> 10) % 1024
-      JOIN s2 ON s2.b2 = (top.hv >> 20) % 1024
-      JOIN s3 ON s3.b3 = (top.hv >> 30) % 1024
+      {_cms_joins("top.hv", "      ")}
     """,
-    "hll_users_portable": """
+    "hll_users_portable": f"""
       WITH h AS (
         SELECT event_type, user_id,
                CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
         FROM events),
-      r AS (SELECT event_type, hv % 256 AS reg,
+      r AS (SELECT event_type, hv % {M_REGISTERS} AS reg,
                    CASE WHEN (hv >> 8) = 0 THEN 53
                         ELSE 53 - length(bin(hv >> 8)) END AS rho
             FROM h),
@@ -297,12 +328,12 @@ ORACLES: dict[str, str] = {
                    CAST(sum(1::BIGINT << CAST(53 - mj AS INTEGER)) AS BIGINT) AS s_filled
             FROM m GROUP BY 1),
       e AS (SELECT event_type, n_filled,
-                   4.2399330249068963e+20
-                   / CAST(s_filled + (256 - n_filled) * (1::BIGINT << 53) AS DOUBLE) AS e_raw
+                   {RAW_SCALE}
+                   / CAST(s_filled + ({M_REGISTERS} - n_filled) * (1::BIGINT << 53) AS DOUBLE) AS e_raw
             FROM g),
       est AS (SELECT event_type,
-                     round(CASE WHEN e_raw <= 640.0 AND n_filled < 256
-                           THEN 256.0 * ln(256.0 / CAST(256 - n_filled AS DOUBLE))
+                     round(CASE WHEN e_raw <= 640.0 AND n_filled < {M_REGISTERS}
+                           THEN {M_REGISTERS}.0 * ln({M_REGISTERS}.0 / CAST({M_REGISTERS} - n_filled AS DOUBLE))
                            ELSE e_raw END, 6) AS est_distinct
               FROM e),
       ex AS (SELECT event_type, count(DISTINCT user_id) AS exact_distinct
@@ -322,22 +353,18 @@ ORACLES: dict[str, str] = {
       tr AS (SELECT DISTINCT doc_id, sh FROM sh WHERE doc_id % 20 <> 0),
       evp AS (SELECT CAST(concat('0x', substr(md5(sh), 1, 15)) AS BIGINT) AS h FROM ev),
       bits AS (
-        SELECT p >> 5 AS slot, bit_or(1::BIGINT << CAST(p % 32 AS INTEGER)) AS bits
-        FROM (SELECT unnest([h % 131072, (h >> 17) % 131072, (h >> 34) % 131072]) AS p FROM evp)
+        SELECT p >> {SLOT_SHIFT} AS slot, bit_or(1::BIGINT << CAST(p % {BITS_PER_SLOT} AS INTEGER)) AS bits
+        FROM (SELECT unnest([{_BLOOM_POSITIONS}]) AS p FROM evp)
         GROUP BY 1),
       trp AS (SELECT doc_id, sh,
                      CAST(concat('0x', substr(md5(sh), 1, 15)) AS BIGINT) AS h
               FROM tr),
       probed AS (
         SELECT t.doc_id,
-               coalesce(((b0.bits >> CAST((t.h % 131072) % 32 AS INTEGER)) % 2) = 1, FALSE)
-               AND coalesce(((b1.bits >> CAST(((t.h >> 17) % 131072) % 32 AS INTEGER)) % 2) = 1, FALSE)
-               AND coalesce(((b2.bits >> CAST(((t.h >> 34) % 131072) % 32 AS INTEGER)) % 2) = 1, FALSE)
+               {_BLOOM_HITS}
                  AS maybe
         FROM trp t
-        LEFT JOIN bits b0 ON b0.slot = (t.h % 131072) >> 5
-        LEFT JOIN bits b1 ON b1.slot = ((t.h >> 17) % 131072) >> 5
-        LEFT JOIN bits b2 ON b2.slot = ((t.h >> 34) % 131072) >> 5),
+        {_BLOOM_JOINS}),
       pd AS (SELECT doc_id, max(maybe) AS bloom_hit FROM probed GROUP BY 1),
       ex AS (SELECT DISTINCT tr.doc_id FROM tr JOIN ev USING (sh))
       SELECT pd.bloom_hit, ex.doc_id IS NOT NULL AS exact_hit,
@@ -429,11 +456,7 @@ ORACLES: dict[str, str] = {
     "token_budget_mixture": f"""
       WITH q AS (
         SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_toks, round(
-          least(len(toks) / 50.0, 1.0) * 0.35
-          + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
-                   / greatest(length(text), 1)) * 0.25
-          + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
-          + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+          {_sql_quality(10)}
         , 6) AS quality
         FROM ({_SQL_TOKS})),
       c AS (
@@ -480,11 +503,7 @@ ORACLES: dict[str, str] = {
         SELECT doc_id,
                md5(trim(lower(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))) AS fp_md5,
                round(
-                 least(len(toks) / 50.0, 1.0) * 0.35
-                 + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
-                          / greatest(length(text), 1)) * 0.25
-                 + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
-                 + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+                 {_sql_quality(17)}
                , 6) AS quality
         FROM ({_SQL_TOKS})),
       r AS (SELECT fp_md5, doc_id, quality,
@@ -508,11 +527,7 @@ ORACLES: dict[str, str] = {
       WITH q AS (
         SELECT doc_id, lang,
                round(
-                 least(len(toks) / 50.0, 1.0) * 0.35
-                 + (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))
-                          / greatest(length(text), 1)) * 0.25
-                 + (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2
-                 + least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2
+                 {_sql_quality(17)}
                , 6) AS quality,
                round(ln((CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) + 1)
                         / 4294967297.0), 9) AS lnu
@@ -522,7 +537,7 @@ ORACLES: dict[str, str] = {
                      ORDER BY lnu / quality DESC, doc_id ASC) AS rn
             FROM q WHERE quality > 0)
       SELECT doc_id, lang, quality, CAST(rn AS BIGINT) AS "rank"
-      FROM r WHERE rn <= 20
+      FROM r WHERE rn <= {SAMPLE_PER_LANG}
     """,
     "events_profile": """
       SELECT 'event_id' AS "column", count(*) AS n_rows,
@@ -595,11 +610,11 @@ ORACLES: dict[str, str] = {
               round((CAST(cnt AS DOUBLE) / ctot) / (CAST(wtot AS DOUBLE) / gtot), 6)
                 AS lift
             FROM cw JOIN ct USING (cell) JOIN wt USING (word) CROSS JOIN g
-            WHERE cnt >= 5),
+            WHERE cnt >= {TOPIC_MIN_COUNT}),
       r AS (SELECT *, row_number() OVER (PARTITION BY cell
               ORDER BY lift DESC, word ASC) AS rn FROM s)
       SELECT cell, word, cnt, lift, CAST(rn AS BIGINT) AS "rank"
-      FROM r WHERE rn <= 5
+      FROM r WHERE rn <= {TOPIC_TOPN}
     """,
     "ngram_jaccard": f"""
       WITH sh AS ({_SQL_SHINGLES}),
@@ -757,21 +772,21 @@ ORACLES: dict[str, str] = {
              round(list_sum(list_transform(err, d -> d * d)) / nd, 6) AS mse
       FROM er
     """,
-    "knn_cosine": """
+    "knn_cosine": f"""
       WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
-                 FROM embeddings WHERE vec_id < 10),
+                 FROM embeddings WHERE vec_id < {N_QUERIES}),
       s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
                    round(list_cosine_similarity(q.qvec, CAST(e.embedding AS DOUBLE[])), 6) AS cosine
             FROM q, embeddings e WHERE e.vec_id <> q.query_id),
       r AS (SELECT *, row_number() OVER (PARTITION BY query_id
                       ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM s)
       SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank
-      FROM r WHERE rank <= 5
+      FROM r WHERE rank <= {TOPK}
     """,
     "ann_lsh": _ann_lsh_sql(),
     # IVF ANN: centroids are exact decimal-sum means, so the full
     # probe/serve plan is reproducible in SQL
-    "ann_ivf": """
+    "ann_ivf": f"""
       WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS dvec FROM embeddings),
       i AS (SELECT label, dvec, unnest(range(1, len(dvec) + 1)) AS idx FROM v),
       m AS (SELECT label AS cell, idx,
@@ -779,13 +794,13 @@ ORACLES: dict[str, str] = {
                    / count(*) AS c
             FROM i GROUP BY label, idx),
       cents AS (SELECT cell, list(c ORDER BY idx ASC) AS cvec FROM m GROUP BY cell),
-      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < 10),
+      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
       qc AS (SELECT q.query_id, q.qvec, c.cell,
                     list_cosine_similarity(q.qvec, c.cvec) AS csim
              FROM q CROSS JOIN cents c),
       probes AS (SELECT query_id, qvec, cell FROM (
           SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY csim DESC, cell ASC) AS pr FROM qc) WHERE pr <= 2),
+                    ORDER BY csim DESC, cell ASC) AS pr FROM qc) WHERE pr <= {N_PROBE}),
       s AS (SELECT p.query_id, p.cell, e.vec_id AS neighbor_id,
                    round(list_cosine_similarity(p.qvec, e.dvec), 6) AS cosine
             FROM probes p JOIN v e ON e.label = p.cell
@@ -793,10 +808,10 @@ ORACLES: dict[str, str] = {
       r AS (SELECT *, row_number() OVER (PARTITION BY query_id
                       ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM s)
       SELECT query_id, cell, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank
-      FROM r WHERE rank <= 5
+      FROM r WHERE rank <= {TOPK}
     """,
     # Banded-LSH dup pairs (round 8: OR-of-ANDs amplification; the
-    # old AND-only single bucket recalled ~5% at cos 0.35): bands are
+    # old AND-only single bucket recalled ~5% at MIN_COSINE): bands are
     # the deterministic splitmix64 planes (round 9 randomness fix), so
     # the recall<1 scale path is still exactly-checkable
     "embedding_dup_pairs_lsh": f"""
@@ -850,13 +865,13 @@ ORACLES: dict[str, str] = {
       )
       SELECT doc_id, min(label) AS cluster FROM cc GROUP BY doc_id
     """,
-    "embedding_dup_pairs": """
+    "embedding_dup_pairs": f"""
       SELECT * FROM (
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
                                             CAST(b.embedding AS DOUBLE[])), 6) AS cosine
         FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id
-      ) WHERE cosine >= 0.35
+      ) WHERE cosine >= {MIN_COSINE}
     """,
     # multimodal: meta, plus the deterministic fake decode recomputed
     # from the UTF-8 bytes (hex -> per-byte ints) entirely in SQL
@@ -1508,7 +1523,7 @@ ORACLES: dict[str, str] = {
       FROM att GROUP BY first_touch
       ORDER BY n_purchases DESC, first_touch
     """,
-    "customer_rfm": """
+    "customer_rfm": f"""
       WITH ref AS (SELECT max(o_orderdate) AS ref_date FROM orders),
       per AS (SELECT o_custkey AS custkey,
                 CAST(min(date_diff('day', CAST(o_orderdate AS DATE),
@@ -1518,9 +1533,9 @@ ORACLES: dict[str, str] = {
                      AS DOUBLE) AS monetary
               FROM orders CROSS JOIN ref GROUP BY 1),
       sc AS (SELECT *,
-              CAST(6 - ntile(5) OVER (ORDER BY recency_days ASC, custkey ASC) AS BIGINT) AS r_score,
-              CAST(6 - ntile(5) OVER (ORDER BY frequency DESC, custkey ASC) AS BIGINT) AS f_score,
-              CAST(6 - ntile(5) OVER (ORDER BY monetary DESC, custkey ASC) AS BIGINT) AS m_score
+              CAST({RFM_TILES + 1} - ntile({RFM_TILES}) OVER (ORDER BY recency_days ASC, custkey ASC) AS BIGINT) AS r_score,
+              CAST({RFM_TILES + 1} - ntile({RFM_TILES}) OVER (ORDER BY frequency DESC, custkey ASC) AS BIGINT) AS f_score,
+              CAST({RFM_TILES + 1} - ntile({RFM_TILES}) OVER (ORDER BY monetary DESC, custkey ASC) AS BIGINT) AS m_score
              FROM per)
       SELECT custkey, recency_days, frequency, round(monetary, 2) AS monetary,
              r_score, f_score, m_score,
@@ -1531,7 +1546,7 @@ ORACLES: dict[str, str] = {
                   ELSE 'regular' END AS segment
       FROM sc
     """,
-    "events_cusum": """
+    "events_cusum": f"""
       WITH daily AS (SELECT event_type, date_trunc('day', ts) AS day,
                             count(*) AS cnt
                      FROM events GROUP BY 1, 2),
@@ -1545,7 +1560,7 @@ ORACLES: dict[str, str] = {
                                  - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
                                    / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)), 9)
                         AS DECIMAL(20,9))
-                   - CAST('0.5' AS DECIMAL(20,9)) AS y
+                   - CAST('{CUSUM_SLACK}' AS DECIMAL(20,9)) AS y
             FROM daily d JOIN st USING (event_type)),
       pw AS (SELECT event_type, day, cnt,
                     sum(y) OVER (PARTITION BY event_type ORDER BY day
@@ -1561,7 +1576,7 @@ ORACLES: dict[str, str] = {
                    FROM pw))
       SELECT event_type, strftime(day, '%Y-%m-%d') AS day_s, cnt,
              CAST(CAST(p - m AS VARCHAR) AS DOUBLE) AS cusum,
-             (p - m) > CAST('4.0' AS DECIMAL(20,9)) AS alert
+             (p - m) > CAST('{CUSUM_THRESHOLD}' AS DECIMAL(20,9)) AS alert
       FROM mw
     """,
     "user_value_twap": """
@@ -1577,7 +1592,7 @@ ORACLES: dict[str, str] = {
                    / CAST(sum(dur) AS DOUBLE), 6) AS twap
       FROM d WHERE dur IS NOT NULL GROUP BY user_id
     """,
-    "session_concurrency": """
+    "session_concurrency": f"""
       WITH g AS (
         SELECT user_id, ts, event_id,
                CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
@@ -1586,7 +1601,7 @@ ORACLES: dict[str, str] = {
                     IS DISTINCT FROM NULL
                 AND CAST(floor(epoch(ts)) AS BIGINT)
                     - CAST(floor(epoch(lag(ts) OVER (PARTITION BY user_id
-                          ORDER BY ts ASC, event_id ASC))) AS BIGINT) <= 1800
+                          ORDER BY ts ASC, event_id ASC))) AS BIGINT) <= {SESSION_GAP_S}
                THEN 0 ELSE 1 END AS chg
         FROM events),
       i AS (SELECT user_id, ts, sum(chg) OVER (PARTITION BY user_id
@@ -1615,7 +1630,7 @@ ORACLES: dict[str, str] = {
              CAST(max(peak) AS BIGINT) AS max_concurrent
       FROM pk GROUP BY day
     """,
-    "events_sessionize": """
+    "events_sessionize": f"""
       WITH g AS (
         SELECT user_id,
                CAST(floor(epoch(ts)) AS BIGINT)
@@ -1623,7 +1638,7 @@ ORACLES: dict[str, str] = {
                      ORDER BY ts ASC, event_id ASC))) AS BIGINT) AS gap
         FROM events)
       SELECT user_id,
-             CAST(sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
+             CAST(sum(CASE WHEN gap IS NULL OR gap > {SESSION_GAP_S} THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
              count(*) AS n_events
       FROM g GROUP BY user_id
     """,

@@ -4,12 +4,35 @@
 
 from __future__ import annotations
 
-from .shared import PII_PATTERNS, _SQL_SHINGLES, _SQL_TOKS, _SQL_WORDCOUNT
-from .curation import PPR_SEGMENT
-from .similarity import _mmr_ctes
+from .shared import (
+    PII_PATTERNS,
+    _SQL_COSUPPLY,
+    _SQL_SHINGLES,
+    _SQL_TOKS,
+    _SQL_WORDCOUNT,
+)
+from .curation import BM25_QUERY, BM25_TOPN, PPR_SEGMENT, PRF_FEEDBACK, PRF_TOPN
+from .similarity import (
+    ANN_BANDED_SWEEP,
+    ANN_SWEEP_PROBES,
+    RRF_K,
+    RRF_TOPN,
+    SNIPPET_CTX,
+    SNIPPET_NO_TERM,
+    SNIPPET_TOPN,
+    SNIPPET_WIDTH,
+    _mmr_ctes,
+)
+from ..operators.hll import M_REGISTERS, RAW_SCALE
+from ..operators.kmv import KMV_K
+from ..operators.similarity import N_PROBE
+from ..plans.analytics import ASOF_AT
 from .oracle_builders import (
+    _CMS_EST,
+    _CMS_ROWS,
     _ann_lsh_banded_sql,
     _ann_lsh_multiprobe_sql,
+    _cms_joins,
     _dsir_sql,
     _temperature_sql,
 )
@@ -65,18 +88,18 @@ ORACLES["hybrid_rrf_topk"] = f"""
   denr AS (SELECT doc_id,
                   row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS r_den
            FROM sden),
-  den AS (SELECT doc_id, r_den FROM denr WHERE r_den <= 50)
+  den AS (SELECT doc_id, r_den FROM denr WHERE r_den <= {BM25_TOPN})
   SELECT doc_id,
-         round(coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(r_lex AS DOUBLE)), CAST(0 AS DOUBLE))
-               + coalesce(CAST(1 AS DOUBLE) / (CAST(60 AS DOUBLE) + CAST(r_den AS DOUBLE)), CAST(0 AS DOUBLE)), 6)
+         round(coalesce(CAST(1 AS DOUBLE) / (CAST({RRF_K} AS DOUBLE) + CAST(r_lex AS DOUBLE)), CAST(0 AS DOUBLE))
+               + coalesce(CAST(1 AS DOUBLE) / (CAST({RRF_K} AS DOUBLE) + CAST(r_den AS DOUBLE)), CAST(0 AS DOUBLE)), 6)
            AS rrf
   FROM lex FULL OUTER JOIN den USING (doc_id)
-  ORDER BY rrf DESC, doc_id ASC LIMIT 20
+  ORDER BY rrf DESC, doc_id ASC LIMIT {RRF_TOPN}
 """
 
 ORACLES["prf_rerank"] = f"""
   WITH bm AS (SELECT * FROM ({oracles_core.ORACLES["bm25_topk"]})),
-  fb AS (SELECT doc_id FROM bm ORDER BY bm25 DESC, doc_id ASC LIMIT 10),
+  fb AS (SELECT doc_id FROM bm ORDER BY bm25 DESC, doc_id ASC LIMIT {PRF_FEEDBACK}),
   fv AS (SELECT CAST(e.embedding AS DOUBLE[]) AS dvec
          FROM embeddings e JOIN fb ON e.vec_id = fb.doc_id),
   i AS (SELECT dvec, unnest(range(1, len(dvec) + 1)) AS idx FROM fv),
@@ -91,19 +114,24 @@ ORACLES["prf_rerank"] = f"""
                  AS cosine
         FROM bm JOIN embeddings e ON e.vec_id = bm.doc_id CROSS JOIN cv),
   r AS (SELECT *, row_number() OVER (ORDER BY cosine DESC, doc_id ASC) AS rn FROM s)
-  SELECT doc_id, bm25, cosine, CAST(rn AS BIGINT) AS "rank" FROM r WHERE rn <= 20
+  SELECT doc_id, bm25, cosine, CAST(rn AS BIGINT) AS "rank" FROM r WHERE rn <= {PRF_TOPN}
 """
 
+# position of the first query term, SNIPPET_NO_TERM when none occurs
+_FIRST_TERM_POS = ", ".join(
+    f"CASE WHEN instr(text, '{t}') > 0 THEN instr(text, '{t}') ELSE {SNIPPET_NO_TERM} END"
+    for t in BM25_QUERY
+)
 ORACLES["bm25_snippets"] = f"""
   WITH top AS (SELECT * FROM ({oracles_core.ORACLES["bm25_topk"]})
-               ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
+               ORDER BY bm25 DESC, doc_id ASC LIMIT {SNIPPET_TOPN}),
   j AS (SELECT top.doc_id, top.bm25, d.text,
-               least(CASE WHEN instr(text, 'spark') > 0 THEN instr(text, 'spark') ELSE 1000000000 END, CASE WHEN instr(text, 'join') > 0 THEN instr(text, 'join') ELSE 1000000000 END, CASE WHEN instr(text, 'fast') > 0 THEN instr(text, 'fast') ELSE 1000000000 END) AS first_pos
+               least({_FIRST_TERM_POS}) AS first_pos
         FROM top JOIN documents d ON top.doc_id = d.doc_id)
   SELECT doc_id, bm25,
-         CASE WHEN first_pos < 1000000000
-              THEN substr(text, CAST(greatest(first_pos - 30, 1) AS BIGINT), 80)
-              ELSE substr(text, 1, 80) END AS snippet
+         CASE WHEN first_pos < {SNIPPET_NO_TERM}
+              THEN substr(text, CAST(greatest(first_pos - {SNIPPET_CTX}, 1) AS BIGINT), {SNIPPET_WIDTH})
+              ELSE substr(text, 1, {SNIPPET_WIDTH}) END AS snippet
   FROM j ORDER BY bm25 DESC, doc_id ASC
 """
 
@@ -140,7 +168,7 @@ ORACLES["ann_recall_lsh_banded_sweep"] = "\nUNION ALL\n".join(
     f"SELECT CAST({b} AS BIGINT) AS bands, r.* FROM ("
     + _recall_block(_ann_lsh_banded_sql(bands=b))
     + ") r"
-    for b in (16, 32, 64)
+    for b in ANN_BANDED_SWEEP
 )
 ORACLES["mmr_rerank"] = _mmr_ctes()
 
@@ -148,9 +176,11 @@ ORACLES["mmr_rerank"] = _mmr_ctes()
 # routing predicate; everything else is byte-identical
 ORACLES["ann_recall_sweep"] = "\nUNION ALL\n".join(
     f"SELECT CAST({np} AS BIGINT) AS n_probe, r.* FROM ("
-    + _recall_block(oracles_core.ORACLES["ann_ivf"].replace("pr <= 2", f"pr <= {np}"))
+    + _recall_block(
+        oracles_core.ORACLES["ann_ivf"].replace(f"pr <= {N_PROBE}", f"pr <= {np}")
+    )
     + ") r"
-    for np in (1, 2, 4)
+    for np in ANN_SWEEP_PROBES
 )
 
 
@@ -231,34 +261,34 @@ def _hll_est_sql(regs_rel: str, key_sel: str, key_group: str, grain: str, gkey: 
     group = f"GROUP BY {key_group}" if key_group else ""
     return f"""
       (SELECT '{grain}' AS grain, {gkey} AS gkey,
-              round(CASE WHEN e_raw <= 640.0 AND n_filled < 256
-                    THEN 256.0 * ln(256.0 / CAST(256 - n_filled AS DOUBLE))
+              round(CASE WHEN e_raw <= 640.0 AND n_filled < {M_REGISTERS}
+                    THEN {M_REGISTERS}.0 * ln({M_REGISTERS}.0 / CAST({M_REGISTERS} - n_filled AS DOUBLE))
                     ELSE e_raw END, 6) AS est_distinct
        FROM (SELECT {key_sel} n_filled,
-                    4.2399330249068963e+20
-                    / CAST(s_filled + (256 - n_filled) * (1::BIGINT << 53) AS DOUBLE) AS e_raw
+                    {RAW_SCALE}
+                    / CAST(s_filled + ({M_REGISTERS} - n_filled) * (1::BIGINT << 53) AS DOUBLE) AS e_raw
              FROM (SELECT {key_sel} count(*) AS n_filled,
                           CAST(sum(1::BIGINT << CAST(53 - mj AS INTEGER)) AS BIGINT) AS s_filled
                    FROM {regs_rel} {group}) g) e)
     """
 
 
-ORACLES["kmv_user_overlap"] = """
+ORACLES["kmv_user_overlap"] = f"""
   WITH ap AS (SELECT DISTINCT CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
               FROM events WHERE event_type = 'purchase'),
   bs AS (SELECT DISTINCT CAST(concat('0x', substr(md5(CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
          FROM customer WHERE c_mktsegment = 'BUILDING'),
-  ka AS (SELECT h FROM ap ORDER BY h LIMIT 256),
-  kb AS (SELECT h FROM bs ORDER BY h LIMIT 256),
+  ka AS (SELECT h FROM ap ORDER BY h LIMIT {KMV_K}),
+  kb AS (SELECT h FROM bs ORDER BY h LIMIT {KMV_K}),
   ku AS (SELECT DISTINCT h FROM (SELECT h FROM ka UNION ALL SELECT h FROM kb)
-         ORDER BY h LIMIT 256),
+         ORDER BY h LIMIT {KMV_K}),
   st AS (SELECT max(h) AS hk, count(*) AS kct FROM ku),
   cm AS (SELECT count(*) AS cj FROM ku
          WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)),
   ex AS (SELECT count(*) AS exact_intersection FROM ap
          WHERE h IN (SELECT h FROM bs)),
-  r AS (SELECT CASE WHEN kct < 256 THEN CAST(kct AS DOUBLE)
-               ELSE round(255.0 * 1152921504606846976 / hk, 6) END AS est_union,
+  r AS (SELECT CASE WHEN kct < {KMV_K} THEN CAST(kct AS DOUBLE)
+               ELSE round({KMV_K - 1}.0 * {1 << 60} / hk, 6) END AS est_union,
                kct, cj, exact_intersection
         FROM st, cm, ex),
   sel AS (SELECT est_union,
@@ -312,8 +342,8 @@ ORACLES["user_state_intervals"] = """
 ORACLES["user_state_asof"] = f"""
   SELECT user_id, state, valid_from AS since_s, n_events, is_current
   FROM ({ORACLES["user_state_intervals"]})
-  WHERE valid_from <= '2024-01-15 00:00:00'
-    AND (valid_to IS NULL OR valid_to > '2024-01-15 00:00:00')
+  WHERE valid_from <= '{ASOF_AT}'
+    AND (valid_to IS NULL OR valid_to > '{ASOF_AT}')
   ORDER BY user_id
 """
 
@@ -322,17 +352,11 @@ ORACLES["cms_screened_wordcount"] = f"""
   h AS (SELECT word, cnt,
                CAST(concat('0x', substr(md5(word), 1, 15)) AS BIGINT) AS hv
         FROM wc),
-  {", ".join(
-    f"s{j} AS (SELECT (hv >> {10 * j}) % 1024 AS b{j}, "
-    f"CAST(sum(cnt) AS BIGINT) AS c{j} FROM h GROUP BY 1)"
-    for j in range(4))},
+  {_CMS_ROWS},
   n AS (SELECT CAST(sum(c0) AS BIGINT) // 500 AS thr FROM s0),
-  p AS (SELECT word, cnt, least(s0.c0, s1.c1, s2.c2, s3.c3) AS est_cnt
+  p AS (SELECT word, cnt, {_CMS_EST} AS est_cnt
         FROM h
-        JOIN s0 ON s0.b0 = (h.hv >> 0) % 1024
-        JOIN s1 ON s1.b1 = (h.hv >> 10) % 1024
-        JOIN s2 ON s2.b2 = (h.hv >> 20) % 1024
-        JOIN s3 ON s3.b3 = (h.hv >> 30) % 1024)
+        {_cms_joins("h.hv", "        ")})
   SELECT word, cnt AS true_cnt, est_cnt, cnt >= n.thr AS confirmed
   FROM p, n WHERE est_cnt >= n.thr
   ORDER BY true_cnt DESC, word ASC
@@ -343,7 +367,7 @@ ORACLES["hll_user_rollup"] = f"""
     SELECT event_type, CAST(ts AS DATE) AS d, user_id,
            CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
     FROM events),
-  r AS (SELECT event_type, d, hv % 256 AS reg,
+  r AS (SELECT event_type, d, hv % {M_REGISTERS} AS reg,
                CASE WHEN (hv >> 8) = 0 THEN 53
                     ELSE 53 - length(bin(hv >> 8)) END AS rho
         FROM h),
@@ -529,11 +553,8 @@ ORACLES["events_gap_fill"] = """
 
 # NAIVE triple-join enumeration (a<b<c): the hash match proves the
 # degree-oriented wedge form exact.
-ORACLES["cosupply_triangles"] = """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+ORACLES["cosupply_triangles"] = f"""
+  WITH {_SQL_COSUPPLY},
   e AS (SELECT s1, s2 FROM w, t WHERE c >= thr),
   tri AS (SELECT e1.s1 AS a, e1.s2 AS b, e2.s2 AS c
           FROM e e1 JOIN e e2 ON e1.s2 = e2.s1
@@ -546,11 +567,8 @@ ORACLES["cosupply_triangles"] = """
 
 # Naive 3-way-join triangles + degree table; the coefficient is one
 # int/int division both engines compute on identical integers.
-ORACLES["cosupply_clustering"] = """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+ORACLES["cosupply_clustering"] = f"""
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
   und AS (SELECT s1 AS suppkey FROM e UNION ALL SELECT s2 FROM e),
   deg AS (SELECT suppkey, count(*) AS degree FROM und GROUP BY 1),
@@ -570,7 +588,7 @@ ORACLES["cosupply_clustering"] = """
   ORDER BY clustering_coeff DESC, suppkey
 """
 
-ORACLES["cosupply_kcore"] = _kcore_ctes(k=8, rounds=8)
+ORACLES["cosupply_kcore"] = _kcore_ctes()
 ORACLES["supplier_reach"] = _bfs_ctes()
 ORACLES["supplier_cheapest_reach"] = _sssp_ctes()
 
@@ -954,11 +972,8 @@ ORACLES["value_drift_ks"] = """
 # neighbor, so ln(deg) > 0 always. Adamic-Adar terms are rounded to
 # 9dp and summed as DECIMAL (order-independent), then string-routed
 # to double; jaccard is one int/int division, shipped unrounded.
-ORACLES["cosupply_link_prediction"] = """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+ORACLES["cosupply_link_prediction"] = f"""
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
   und AS MATERIALIZED (SELECT s1 AS w, s2 AS x FROM e
                        UNION ALL SELECT s2, s1 FROM e),
@@ -987,11 +1002,8 @@ ORACLES["cosupply_link_prediction"] = """
 # Same wedge enumeration with centers capped at degree 256 (the scale
 # knob); endpoint degrees for Jaccard stay UNCAPPED -- the cap bounds
 # fan-out, not the denominator semantics.
-ORACLES["cosupply_link_prediction_capped"] = """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+ORACLES["cosupply_link_prediction_capped"] = f"""
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
   und AS MATERIALIZED (SELECT s1 AS w, s2 AS x FROM e
                        UNION ALL SELECT s2, s1 FROM e),
@@ -1047,7 +1059,7 @@ ORACLES["user_day_snapshot_diff"] = """
          old_n_events, new_n_events, old_sum_value, new_sum_value
   FROM c WHERE change IS NOT NULL
 """
-ORACLES["purchase_hits"] = _hits_ctes(iters=3)
+ORACLES["purchase_hits"] = _hits_ctes()
 
 ORACLES["embedding_dim_stats"] = """
   WITH ex AS (

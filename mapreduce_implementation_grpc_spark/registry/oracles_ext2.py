@@ -2,20 +2,34 @@
 
 from __future__ import annotations
 
-from .shared import _SQL_TOKS, _SQL_WORDCOUNT
+from .shared import _SQL_COSUPPLY, _SQL_TOKS
 from .oracle_builders import _banded_pairs_sql
-from .eval_temporal import MARKOV_ORACLE_CHANNELS, _absorption_ctes
-from .oracles_ext import _linkage_ctes
+from .eval_temporal import _absorption_ctes
+from .eval_temporal2 import (
+    CF_TOPN,
+    NEGATIVES_PER_POSITIVE,
+    RAKE_MAX_LEN,
+    RAKE_STOPWORDS,
+    RAKE_TOPN,
+)
+from .graph_layout import CHI2_MIN_COUNT, CHI2_TOP_K, NOVELTY_N
+from ..operators.basket import MIN_ORDERS
+from ..operators.similarity import MIN_COSINE
+from ..plans.analytics import SESSION_GAP_S
 
 ORACLES: dict[str, str] = {}
 
-ORACLES["market_basket_pairs"] = """
-  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+# operators/basket._frequent_pairs: baskets b(o, p), order count nn,
+# per-part counts item and the pairs of >= MIN_ORDERS co-orders
+_SQL_BASKET = f"""b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
   nn AS (SELECT count(DISTINCT o) AS n FROM b),
   item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
   pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS pair_n
             FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
-            GROUP BY 1, 2 HAVING count(*) >= 2)
+            GROUP BY 1, 2 HAVING count(*) >= {MIN_ORDERS})"""
+
+ORACLES["market_basket_pairs"] = f"""
+  WITH {_SQL_BASKET}
   SELECT p1, p2, pair_n,
          pair_n / n AS support,
          pair_n / i1.item_n AS confidence,
@@ -30,17 +44,12 @@ ORACLES["market_basket_pairs"] = """
 
 # NAIVE all-triples enumeration: the hash match proves the A-priori
 # candidate pruning in operators/basket.market_basket_triples lossless
-ORACLES["market_basket_triples"] = """
-  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-  nn AS (SELECT count(DISTINCT o) AS n FROM b),
-  item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
-  pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS pair_n
-            FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
-            GROUP BY 1, 2 HAVING count(*) >= 2),
+ORACLES["market_basket_triples"] = f"""
+  WITH {_SQL_BASKET},
   tri AS (SELECT a.p AS p1, c.p AS p2, d.p AS p3, count(*) AS tri_n
           FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
                    JOIN b d ON a.o = d.o AND c.p < d.p
-          GROUP BY 1, 2, 3 HAVING count(*) >= 2)
+          GROUP BY 1, 2, 3 HAVING count(*) >= {MIN_ORDERS})
   SELECT p1, p2, p3, tri_n,
          tri_n / n AS support,
          tri_n / pair_n AS confidence,
@@ -55,6 +64,7 @@ ORACLES["market_basket_triples"] = """
   LIMIT 30
 """
 
+_RAKE_STOPS = ", ".join(f"'{w}'" for w in RAKE_STOPWORDS)
 ORACLES["rake_keyphrases"] = f"""
   WITH t AS ({_SQL_TOKS}),
   w AS (SELECT doc_id,
@@ -62,7 +72,7 @@ ORACLES["rake_keyphrases"] = f"""
                unnest(toks) AS word
         FROM t),
   m AS (SELECT doc_id, pos, word,
-               CASE WHEN word IN ('the', 'a', 'join', 'merge', 'small', 'fast', 'slow', 'big') THEN 1 ELSE 0 END AS is_stop
+               CASE WHEN word IN ({_RAKE_STOPS}) THEN 1 ELSE 0 END AS is_stop
         FROM w),
   isl AS (SELECT doc_id, pos, word,
                  sum(is_stop) OVER (PARTITION BY doc_id ORDER BY pos
@@ -73,7 +83,7 @@ ORACLES["rake_keyphrases"] = f"""
   phr AS (SELECT doc_id, phrase_id,
                  string_agg(word, ' ' ORDER BY pos) AS phrase,
                  count(*) AS plen
-          FROM members GROUP BY 1, 2 HAVING count(*) <= 4),
+          FROM members GROUP BY 1, 2 HAVING count(*) <= {RAKE_MAX_LEN}),
   wstat AS (SELECT word, sum(plen) / count(*) AS wscore
             FROM members JOIN phr USING (doc_id, phrase_id) GROUP BY 1),
   pscore AS (SELECT doc_id, phrase_id,
@@ -85,10 +95,10 @@ ORACLES["rake_keyphrases"] = f"""
   SELECT phrase, count(*) AS n, round(max(score), 6) AS score
   FROM phr JOIN pscore USING (doc_id, phrase_id)
   GROUP BY phrase
-  ORDER BY score DESC, phrase ASC LIMIT 20
+  ORDER BY score DESC, phrase ASC LIMIT {RAKE_TOPN}
 """
 
-ORACLES["training_negatives"] = """
+ORACLES["training_negatives"] = f"""
   WITH pos AS (SELECT DISTINCT o_custkey AS custkey, l_partkey AS part
                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
   np AS (SELECT count(*) AS n_parts FROM part),
@@ -98,19 +108,19 @@ ORACLES["training_negatives"] = """
                         CAST(slot AS VARCHAR))), 1, 8)) AS BIGINT)
                   % n_parts AS neg_part
            FROM pos CROSS JOIN np
-           CROSS JOIN (SELECT unnest(range(1, 4)) AS slot))
+           CROSS JOIN (SELECT unnest(range(1, {NEGATIVES_PER_POSITIVE + 1})) AS slot))
   SELECT custkey, pos_part, CAST(slot AS BIGINT) AS slot, neg_part
   FROM cand c
   WHERE NOT EXISTS (SELECT 1 FROM pos p
                     WHERE p.custkey = c.custkey AND p.part = c.neg_part)
 """
 
-ORACLES["item_item_cf"] = """
+ORACLES["item_item_cf"] = f"""
   WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
   item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
   pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS c12
             FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
-            GROUP BY 1, 2 HAVING count(*) >= 2),
+            GROUP BY 1, 2 HAVING count(*) >= {MIN_ORDERS}),
   sym AS (SELECT p1, p2, c12 FROM pairs
           UNION ALL SELECT p2, p1, c12 FROM pairs),
   scored AS (SELECT sym.p1 AS part, sym.p2 AS neighbor, c12,
@@ -122,7 +132,7 @@ ORACLES["item_item_cf"] = """
   SELECT part, neighbor, c12, cosine, rank FROM (
     SELECT *, CAST(row_number() OVER (PARTITION BY part
               ORDER BY cosine DESC, neighbor ASC) AS BIGINT) AS rank
-    FROM scored) WHERE rank <= 5
+    FROM scored) WHERE rank <= {CF_TOPN}
 """
 
 ORACLES["dq_audit"] = """
@@ -203,12 +213,12 @@ ORACLES["dq_audit"] = """
 
 # U-shaped multi-touch credits: weights are IEEE expressions over
 # identical integers; per-touch credits round 6dp and sum as DECIMAL.
-ORACLES["attribution_position_weighted"] = """
+ORACLES["attribution_position_weighted"] = f"""
   WITH s AS (
     SELECT event_id, user_id, ts, event_type, value,
            CASE WHEN lag(ts) OVER w IS NULL
                   OR CAST(floor(epoch(ts)) AS BIGINT)
-                     - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > 1800
+                     - CAST(floor(epoch(lag(ts) OVER w)) AS BIGINT) > {SESSION_GAP_S}
                 THEN 1 ELSE 0 END AS st
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
@@ -273,7 +283,7 @@ ORACLES["user_wallet_balance"] = """
   FROM runs
 """
 
-ORACLES["embedding_mutual_nn"] = """
+ORACLES["embedding_mutual_nn"] = f"""
   WITH pairs AS (
     SELECT * FROM (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -281,7 +291,7 @@ ORACLES["embedding_mutual_nn"] = """
                                           CAST(b.embedding AS DOUBLE[])), 6)
                AS cosine
       FROM embeddings a, embeddings b WHERE a.vec_id < b.vec_id
-    ) WHERE cosine >= 0.35),
+    ) WHERE cosine >= {MIN_COSINE}),
   sym AS (SELECT vec_a AS v, vec_b AS nb, cosine FROM pairs
           UNION ALL SELECT vec_b, vec_a, cosine FROM pairs),
   best AS (SELECT v, nb, cosine,
@@ -423,13 +433,8 @@ ORACLES["nation_rank_spearman"] = """
 # Directed association rules: both directions of each pruned pair,
 # classical support/confidence/lift/leverage/conviction; conviction
 # NULL for exact rules (integer-equality guard, not a float compare).
-ORACLES["basket_rules"] = """
-  WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-  nn AS (SELECT count(DISTINCT o) AS n FROM b),
-  item AS (SELECT p, count(*) AS item_n FROM b GROUP BY 1),
-  pairs AS (SELECT a.p AS p1, c.p AS p2, count(*) AS pair_n
-            FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
-            GROUP BY 1, 2 HAVING count(*) >= 2),
+ORACLES["basket_rules"] = f"""
+  WITH {_SQL_BASKET},
   directed AS (SELECT p1 AS antecedent, p2 AS consequent, pair_n FROM pairs
                UNION ALL
                SELECT p2 AS antecedent, p1 AS consequent, pair_n FROM pairs)
@@ -492,8 +497,8 @@ ORACLES["heaps_law_fit"] = r"""
   FROM agg
 """
 
-# Per-doc distinct word-4-gram novelty vs all earlier docs.
-ORACLES["ngram_novelty"] = r"""
+# Per-doc distinct word-NOVELTY_N-gram novelty vs all earlier docs.
+ORACLES["ngram_novelty"] = rf"""
   WITH raw AS (
     SELECT doc_id,
            list_filter(string_split_regex(trim(lower(
@@ -501,9 +506,9 @@ ORACLES["ngram_novelty"] = r"""
              w -> w <> '') AS t
     FROM documents),
   g AS (SELECT DISTINCT doc_id,
-               unnest(list_transform(range(1, len(t) - 2),
-                 i -> array_to_string(list_slice(t, i, i + 3), ' '))) AS gram
-        FROM raw WHERE len(t) >= 4),
+               unnest(list_transform(range(1, len(t) - {NOVELTY_N - 2}),
+                 i -> array_to_string(list_slice(t, i, i + {NOVELTY_N - 1}), ' '))) AS gram
+        FROM raw WHERE len(t) >= {NOVELTY_N}),
   f AS (SELECT gram, min(doc_id) AS fd FROM g GROUP BY 1)
   SELECT g.doc_id,
          CAST(count(*) AS BIGINT) AS n_grams,
@@ -552,7 +557,7 @@ ORACLES["nearest_centroid_confusion"] = """
 """
 
 # Unrolled absorbing-chain value iteration at event-type grain.
-ORACLES["event_conversion_absorption"] = "WITH " + _absorption_ctes(8)
+ORACLES["event_conversion_absorption"] = "WITH " + _absorption_ctes()
 
 # Simplified silhouette: squared distances from the decimal-exact
 # dot/norm aggregates of the confusion oracle; per-term 9dp rounding.
@@ -596,11 +601,8 @@ ORACLES["label_silhouette"] = """
 
 # Newman modularity of the nation partition over the co-supply graph:
 # all-integer counts into one fixed IEEE chain per nation.
-ORACLES["cosupply_nation_modularity"] = """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+ORACLES["cosupply_nation_modularity"] = f"""
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
   sn AS (SELECT s_suppkey AS sk, n_name AS nation
          FROM supplier JOIN nation ON s_nationkey = n_nationkey),
@@ -625,11 +627,8 @@ ORACLES["cosupply_nation_modularity"] = """
 
 # Degree assortativity: exact decimal edge-moment accumulation, one
 # IEEE chain (sum_j == sum_k by both-orientation symmetry).
-ORACLES["cosupply_degree_assortativity"] = """
-  WITH ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
-  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
-        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
-  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * 1.1 AS thr FROM w),
+ORACLES["cosupply_degree_assortativity"] = f"""
+  WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
   und AS (SELECT s1 AS src, s2 AS dst FROM e
           UNION ALL SELECT s2, s1 FROM e),
@@ -850,8 +849,8 @@ ORACLES["score_lift_deciles"] = """
 
 # Chi-square keyness: every input an exact integer count; the
 # statistic one fixed IEEE chain (same association order as Spark).
-ORACLES["term_chi2_keywords"] = """
-  WITH t AS ({TOKS}),
+ORACLES["term_chi2_keywords"] = f"""
+  WITH t AS ({_SQL_TOKS}),
   tk AS (SELECT lang, unnest(toks) AS w FROM t),
   cnt AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS a
           FROM tk GROUP BY 1, 2),
@@ -863,7 +862,7 @@ ORACLES["term_chi2_keywords"] = """
            CAST(a AS DOUBLE) * CAST(nn - lt - (wt - a) AS DOUBLE)
              - CAST(wt - a AS DOUBLE) * CAST(lt - a AS DOUBLE) AS diff
     FROM cnt JOIN ltot USING (lang) JOIN wtot USING (w), ntot
-    WHERE a >= 5),
+    WHERE a >= {CHI2_MIN_COUNT}),
   scored AS (
     SELECT lang, w, a,
            CAST(nn AS DOUBLE) * (diff * diff)
@@ -877,8 +876,8 @@ ORACLES["term_chi2_keywords"] = """
     FROM scored)
   SELECT lang, CAST(rank AS BIGINT) AS rank, w AS word,
          a AS n_in_lang, chi2
-  FROM ranked WHERE rank <= 10 ORDER BY lang, rank
-""".replace("{TOKS}", _SQL_TOKS)
+  FROM ranked WHERE rank <= {CHI2_TOP_K} ORDER BY lang, rank
+"""
 
 # Jensen-Shannon: per-word contribution is one fixed IEEE chain
 # (0.5*p*ln(p/m) with the zero branch guarded), rounded 12dp into the
@@ -1010,7 +1009,7 @@ ORACLES["customer_cohort_ltv"] = """
 
 # Bounce profile: the events_sessionize epoch-floor gap convention;
 # entry pick via rn = 1 on the session-keyed total order.
-ORACLES["session_bounce_rate"] = """
+ORACLES["session_bounce_rate"] = f"""
   WITH g AS (
     SELECT user_id, ts, event_id, event_type,
            CAST(floor(epoch(ts)) AS BIGINT)
@@ -1019,7 +1018,7 @@ ORACLES["session_bounce_rate"] = """
     WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)),
   s AS (
     SELECT user_id, ts, event_id, event_type,
-           sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
+           sum(CASE WHEN gap IS NULL OR gap > {SESSION_GAP_S} THEN 1 ELSE 0 END)
              OVER (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
              AS sid

@@ -3,11 +3,29 @@
 from __future__ import annotations
 
 from .eval_temporal import (
+    ABSORB_STATE,
+    G2_MIN_COUNT,
+    G2_TOP_K,
     MARKOV_ORACLE_CHANNELS,
+    MARKOV_STEPS,
 )
+from .graph_layout import ACF_MAX_LAG, ZIPF_TOP_N
 from .oracle_builders import (
     _ann_ivf_kmeans_sql,
     _banded_bb_sql,
+    _kmeans_ctes,
+    _kmeans_means_cte,
+)
+from .similarity import ANN_BANDED_SWEEP, ANN_CLUSTERED_SWEEP, N_QUERIES
+from ..operators.linkage import SN_WINDOW
+from ..operators.similarity import (
+    ANN_ROWS_PER_BAND,
+    CLUSTERED_N_CLUSTERS,
+    CLUSTERED_SIGMA,
+    DIM,
+    N_PROBE,
+    TOPK,
+    clustered_centers,
 )
 from .oracles_ext import (
     _linkage_ctes,
@@ -170,7 +188,7 @@ ORACLES["events_ewma_control"] = """
 """
 
 
-def _sorted_neighborhood_oracle(window: int = 10) -> str:
+def _sorted_neighborhood_oracle() -> str:
     """Oracle for q_linkage_sorted_neighborhood: reuses the m/c
     record CTEs of _linkage_ctes (its blocked-pair CTEs go unused)
     and mirrors the global rank + banded neighborhood + FS scoring.
@@ -202,7 +220,7 @@ def _sorted_neighborhood_oracle(window: int = 10) -> str:
            a.bal = b.bal AS bal_agree,
            a.seg = b.seg AS seg_agree
     FROM r a JOIN r b
-      ON a.role = 0 AND b.role = 1 AND abs(a.rn - b.rn) <= {window}),
+      ON a.role = 0 AND b.role = 1 AND abs(a.rn - b.rn) <= {SN_WINDOW}),
   sn AS (SELECT custkey, contact_id, rank_gap, cross_block,
                 nm_agree, bal_agree, seg_agree, ({score}) AS score
          FROM pr)
@@ -264,7 +282,7 @@ ORACLES["nation_revenue_holt"] = """
 """
 
 
-def _markov_removal_sql(channels: tuple[str, ...], steps: int = 8) -> str:
+def _markov_removal_sql(channels: tuple[str, ...]) -> str:
     """Generated oracle for q_attribution_markov_removal: the shared
     transition/pi CTEs, one unrolled value-iteration chain for the
     base matrix and one per removed channel (edges INTO the channel
@@ -295,13 +313,13 @@ def _markov_removal_sql(channels: tuple[str, ...], steps: int = 8) -> str:
 
     def chain(prefix: str, tr_filter: str) -> list[str]:
         parts = [f"""{prefix}p0 AS (
-    SELECT node, CASE WHEN node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+    SELECT node, CASE WHEN node = '{ABSORB_STATE}' THEN CAST(1.0 AS DOUBLE)
                       ELSE CAST(0.0 AS DOUBLE) END AS p
     FROM st)"""]
-        for k in range(1, steps + 1):
+        for k in range(1, MARKOV_STEPS + 1):
             parts.append(f"""{prefix}p{k} AS (
     SELECT st.node,
-           CASE WHEN st.node = 'purchase' THEN CAST(1.0 AS DOUBLE)
+           CASE WHEN st.node = '{ABSORB_STATE}' THEN CAST(1.0 AS DOUBLE)
                 ELSE coalesce(x.sm, CAST(0.0 AS DOUBLE)) END AS p
     FROM st LEFT JOIN (
       SELECT s AS node,
@@ -317,13 +335,13 @@ def _markov_removal_sql(channels: tuple[str, ...], steps: int = 8) -> str:
     parts.append(f"""bval AS (
     SELECT CAST(CAST(sum(CAST(round(pi * p, 12) AS DECIMAL(24,12)))
                      AS VARCHAR) AS DOUBLE) AS v
-    FROM pi JOIN bp{steps} USING (node))""")
+    FROM pi JOIN bp{MARKOV_STEPS} USING (node))""")
     for i, ch in enumerate(channels):
         parts.extend(chain(f"r{i}", f"WHERE tr.t2 <> '{ch}'"))
         parts.append(f"""r{i}val AS (
     SELECT CAST(CAST(sum(CAST(round(pi * p, 12) AS DECIMAL(24,12)))
                      AS VARCHAR) AS DOUBLE) AS v
-    FROM pi JOIN r{i}p{steps} USING (node)
+    FROM pi JOIN r{i}p{MARKOV_STEPS} USING (node)
     WHERE pi.node <> '{ch}')""")
     union = "\n    UNION ALL ".join(
         f"SELECT '{ch}' AS channel, bval.v AS p_base, r{i}val.v AS p_removed"
@@ -402,8 +420,8 @@ ORACLES["feature_information_gain"] = """
 # Dunning G2 keyness: four O ln(O/E) terms each 9dp-rounded to
 # DECIMAL, summed exactly; the per-lang ranking happens ON the exact
 # decimal so the order is ulp-identical cross-engine.
-ORACLES["term_keyness_g2"] = """
-  WITH t AS ({TOKS}),
+ORACLES["term_keyness_g2"] = f"""
+  WITH t AS ({_SQL_TOKS}),
   tk AS (SELECT lang, unnest(toks) AS w FROM t),
   cnt AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS a
           FROM tk GROUP BY 1, 2),
@@ -414,7 +432,7 @@ ORACLES["term_keyness_g2"] = """
     SELECT cnt.lang, cnt.w, a, lt, wt, nn,
            wt - a AS b, lt - a AS c, nn - lt - (wt - a) AS d
     FROM cnt JOIN ltot USING (lang) JOIN wtot USING (w), ntot
-    WHERE a >= 5),
+    WHERE a >= {G2_MIN_COUNT}),
   g AS (
     SELECT lang, w, a,
            CAST(CASE WHEN a > 0 THEN round(
@@ -449,8 +467,8 @@ ORACLES["term_keyness_g2"] = """
     FROM g)
   SELECT lang, CAST(rank AS BIGINT) AS rank, w AS word,
          a AS n_in_lang, CAST(CAST(g2d AS VARCHAR) AS DOUBLE) AS g2
-  FROM ranked WHERE rank <= 10 ORDER BY lang, rank
-""".replace("{TOKS}", _SQL_TOKS)
+  FROM ranked WHERE rank <= {G2_TOP_K} ORDER BY lang, rank
+"""
 
 # Theil-Sen: same monthly-micros series as the OLS trend oracle; the
 # median pair slope by lower-median integer-rank selection.
@@ -490,7 +508,7 @@ ORACLES["nation_theilsen_trend"] = """
 
 # Mean-cleared integer ACF: z = n*y - S makes both sums exact
 # integers; the n^2 scale factor cancels in the ratio.
-ORACLES["events_acf"] = """
+ORACLES["events_acf"] = f"""
   WITH b AS (SELECT CAST(min(ts) AS DATE) AS d0, CAST(max(ts) AS DATE) AS d1
              FROM events),
   days AS (SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE)
@@ -512,7 +530,7 @@ ORACLES["events_acf"] = """
           FROM z GROUP BY 1),
   lagged AS (SELECT event_type, tt, z, l.lag
              FROM z CROSS JOIN
-                  (SELECT unnest(generate_series(1, 7)) AS lag) l),
+                  (SELECT unnest(generate_series(1, {ACF_MAX_LAG})) AS lag) l),
   num AS (SELECT a.event_type, a.lag, sum(a.z * b2.z) AS num
           FROM lagged a JOIN z b2 ON b2.event_type = a.event_type
                                  AND b2.tt = a.tt + a.lag
@@ -560,7 +578,7 @@ ORACLES["nation_revenue_trend"] = """
 
 ORACLES["zipf_word_fit"] = f"""
   WITH wc AS ({_SQL_WORDCOUNT}),
-  top AS (SELECT word, cnt FROM wc ORDER BY cnt DESC, word LIMIT 500),
+  top AS (SELECT word, cnt FROM wc ORDER BY cnt DESC, word LIMIT {ZIPF_TOP_N}),
   pts AS (
     SELECT CAST(round(ln(CAST(row_number() OVER (ORDER BY cnt DESC, word)
                               AS DOUBLE)), 9) AS DECIMAL(12,9)) AS lx,
@@ -1023,12 +1041,11 @@ ORACLES["ab_conversion_ztest"] = """
 # r9: the cost half of the banded-ANN tuning table -- per-query
 # candidate volume at each sweep width (the recall half is
 # ann_recall_lsh_banded_sweep; same (bands, query_id) keys)
-def _banded_candidates_sql(bands: int, rows_per_band: int = 7,
-                           n_queries: int = 10) -> str:
+def _banded_candidates_sql(bands: int) -> str:
     return f"""
       WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dvec FROM embeddings),
-      bb AS ({_banded_bb_sql(bands, rows_per_band)}),
-      qb AS (SELECT vec_id AS query_id, band, bucket FROM bb WHERE vec_id < {n_queries}),
+      bb AS ({_banded_bb_sql(bands, ANN_ROWS_PER_BAND)}),
+      qb AS (SELECT vec_id AS query_id, band, bucket FROM bb WHERE vec_id < {N_QUERIES}),
       cand AS (SELECT DISTINCT q.query_id, e.vec_id
                FROM qb q JOIN bb e USING (band, bucket)
                WHERE e.vec_id <> q.query_id),
@@ -1043,7 +1060,7 @@ def _banded_candidates_sql(bands: int, rows_per_band: int = 7,
 # each arm's WITH must live inside a subquery for the top-level UNION
 ORACLES["ann_banded_candidates_sweep"] = "\nUNION ALL\n".join(
     "SELECT * FROM (" + _banded_candidates_sql(b) + ") c" + str(b)
-    for b in (16, 32, 64)
+    for b in ANN_BANDED_SWEEP
 )
 
 
@@ -1062,36 +1079,33 @@ def _dlit(x: float) -> str:
     return s if "e" in s or "E" in s else s + "e0"
 
 
-def _clustered_v_ctes(n_clusters: int = 25, sigma: float = 0.5,
-                      dim: int = 64) -> str:
+def _clustered_v_ctes() -> str:
     """CTE chain (cent, v): the deterministic clustered corpus --
     exact twin of operators.similarity.synthetic_clustered_embeddings
     (same splitmix64 center literals, same md5-prefix noise; every
     arithmetic step exact in double except the one final add, so the
     generated vectors are bit-identical cross-engine)."""
-    from ..operators.similarity import clustered_centers
-
-    cents = clustered_centers(n_clusters)
+    cents = clustered_centers()
     vals = ",\n        ".join(
         "({c}, [{w}])".format(
             c=c, w=", ".join(_dlit(x) for x in cents[c])
         )
-        for c in range(n_clusters)
+        for c in range(CLUSTERED_N_CLUSTERS)
     )
     return f"""
       cent AS (SELECT * FROM (VALUES {vals}) AS t(cluster, cvec)),
-      v AS (SELECT e.vec_id, CAST(e.vec_id % {n_clusters} AS BIGINT) AS cluster,
-                   list_transform(range(0, {dim}),
+      v AS (SELECT e.vec_id, CAST(e.vec_id % {CLUSTERED_N_CLUSTERS} AS BIGINT) AS cluster,
+                   list_transform(range(0, {DIM}),
                      d -> c.cvec[CAST(d + 1 AS INT)]
-                          + {_dlit(sigma)} * (CAST(concat('0x', substr(md5(e.vec_id || ':' || d), 1, 8)) AS BIGINT)
+                          + {_dlit(CLUSTERED_SIGMA)} * (CAST(concat('0x', substr(md5(e.vec_id || ':' || d), 1, 8)) AS BIGINT)
                                               / 4294967296.0 - 0.5)) AS dvec
-            FROM embeddings e JOIN cent c ON c.cluster = e.vec_id % {n_clusters})"""
+            FROM embeddings e JOIN cent c ON c.cluster = e.vec_id % {CLUSTERED_N_CLUSTERS})"""
 
 
 ORACLES["clustered_corpus_structure"] = f"""
   WITH {_clustered_v_ctes()},
   q AS (SELECT vec_id AS query_id, cluster AS qcluster, dvec AS qvec
-        FROM v WHERE vec_id < 10),
+        FROM v WHERE vec_id < {N_QUERIES}),
   s AS (SELECT CAST(e.cluster = q.qcluster AS BIGINT) AS same_cluster,
                round(list_cosine_similarity(q.qvec, e.dvec), 6) AS cosine
         FROM q, v e WHERE e.vec_id <> q.query_id)
@@ -1103,33 +1117,32 @@ ORACLES["clustered_corpus_structure"] = f"""
 """
 
 
-def _clustered_selectivity_sql(bands: int, rows_per_band: int = 7,
-                               n_queries: int = 10, k: int = 5) -> str:
+def _clustered_selectivity_sql(bands: int) -> str:
     """One sweep arm of ann_clustered_selectivity: banded candidates
     + exact re-rank + exact kNN + per-query recall and candidate
     fraction, all over the clustered CTE (the banded block is the
     verbatim _banded_bb_sql -- it only references `v`)."""
     return f"""
       WITH {_clustered_v_ctes()},
-      bb AS ({_banded_bb_sql(bands, rows_per_band)}),
-      qb AS (SELECT vec_id AS query_id, band, bucket FROM bb WHERE vec_id < {n_queries}),
+      bb AS ({_banded_bb_sql(bands, ANN_ROWS_PER_BAND)}),
+      qb AS (SELECT vec_id AS query_id, band, bucket FROM bb WHERE vec_id < {N_QUERIES}),
       cand AS (SELECT DISTINCT q.query_id, e.vec_id AS neighbor_id
                FROM qb q JOIN bb e USING (band, bucket)
                WHERE e.vec_id <> q.query_id),
-      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {n_queries}),
+      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
       xs AS (SELECT q.query_id, e.vec_id AS neighbor_id,
                     round(list_cosine_similarity(q.qvec, e.dvec), 6) AS cosine
              FROM q, v e WHERE e.vec_id <> q.query_id),
       xr AS (SELECT *, row_number() OVER (PARTITION BY query_id
                        ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM xs),
-      exact AS (SELECT query_id, neighbor_id FROM xr WHERE rank <= {k}),
+      exact AS (SELECT query_id, neighbor_id FROM xr WHERE rank <= {TOPK}),
       asq AS (SELECT c.query_id, c.neighbor_id,
                      round(list_cosine_similarity(qv.qvec, ev.dvec), 6) AS cosine
               FROM cand c JOIN q qv ON qv.query_id = c.query_id
                           JOIN v ev ON ev.vec_id = c.neighbor_id),
       ar AS (SELECT *, row_number() OVER (PARTITION BY query_id
                        ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM asq),
-      ann AS (SELECT query_id, neighbor_id FROM ar WHERE rank <= {k}),
+      ann AS (SELECT query_id, neighbor_id FROM ar WHERE rank <= {TOPK}),
       h AS (SELECT e.query_id, count(*) AS n_hits FROM exact e
             JOIN ann a ON a.query_id = e.query_id
              AND a.neighbor_id = e.neighbor_id GROUP BY 1),
@@ -1147,35 +1160,31 @@ def _clustered_selectivity_sql(bands: int, rows_per_band: int = 7,
 
 ORACLES["ann_clustered_selectivity"] = "\nUNION ALL\n".join(
     "SELECT * FROM (" + _clustered_selectivity_sql(b) + ") s" + str(b)
-    for b in (4, 8, 16, 64)
+    for b in ANN_CLUSTERED_SWEEP
 )
 
 
-def _clustered_ivf_kmeans_sql(k_cells: int = 25, n_iter: int = 3,
-                              n_probe: int = 2, n_queries: int = 10,
-                              topk: int = 5) -> str:
+def _clustered_ivf_kmeans_sql() -> str:
     """ann_clustered_ivf_kmeans_recall twin: the unrolled Lloyd fit
     (oracle_builders._kmeans_ctes) over the clustered CTE, the
     standard probe/serve plan, then recall vs exact kNN plus the
     candidate count (rows in probed cells, self excluded)."""
-    from .oracle_builders import _kmeans_ctes, _kmeans_means_cte
-
     return f"""
-      WITH {_clustered_v_ctes()},{_kmeans_ctes(k_cells, n_iter)},{_kmeans_means_cte("sc", "fin")},
-      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {n_queries}),
+      WITH {_clustered_v_ctes()},{_kmeans_ctes(CLUSTERED_N_CLUSTERS)},{_kmeans_means_cte("sc", "fin")},
+      q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
       qc AS (SELECT q.query_id, q.qvec, c.cell,
                     list_cosine_similarity(q.qvec, c.cvec) AS csim
              FROM q CROSS JOIN sc c),
       probes AS (SELECT query_id, qvec, cell FROM (
           SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY csim DESC, cell ASC) AS pr FROM qc) WHERE pr <= {n_probe}),
+                    ORDER BY csim DESC, cell ASC) AS pr FROM qc) WHERE pr <= {N_PROBE}),
       s AS (SELECT p.query_id, e.vec_id AS neighbor_id,
                    round(list_cosine_similarity(p.qvec, e.dvec), 6) AS cosine
             FROM probes p JOIN fin e ON e.cell = p.cell
             WHERE e.vec_id <> p.query_id),
       r AS (SELECT *, row_number() OVER (PARTITION BY query_id
                       ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM s),
-      ann AS (SELECT query_id, neighbor_id FROM r WHERE rank <= {topk}),
+      ann AS (SELECT query_id, neighbor_id FROM r WHERE rank <= {TOPK}),
       nc AS (SELECT p.query_id, count(*) AS n_candidates
              FROM probes p JOIN fin e ON e.cell = p.cell
              WHERE e.vec_id <> p.query_id GROUP BY 1),
@@ -1184,7 +1193,7 @@ def _clustered_ivf_kmeans_sql(k_cells: int = 25, n_iter: int = 3,
              FROM q, v e WHERE e.vec_id <> q.query_id),
       xr AS (SELECT *, row_number() OVER (PARTITION BY query_id
                        ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM xs),
-      exact AS (SELECT query_id, neighbor_id FROM xr WHERE rank <= {topk}),
+      exact AS (SELECT query_id, neighbor_id FROM xr WHERE rank <= {TOPK}),
       h AS (SELECT e.query_id, count(*) AS n_hits FROM exact e
             JOIN ann a ON a.query_id = e.query_id
              AND a.neighbor_id = e.neighbor_id GROUP BY 1),

@@ -34,9 +34,12 @@ def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return word_count(corpus_from_documents(spark, sf_dir))
 
 
-def q_wordcount_topn(spark: SparkSession, sf_dir: str, n: int = 100) -> DataFrame:
+WORDCOUNT_TOP_N = 100
+
+
+def q_wordcount_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O11: top-N report with deterministic tie-break."""
-    return top_k(q_wordcount(spark, sf_dir), n)
+    return top_k(q_wordcount(spark, sf_dir), WORDCOUNT_TOP_N)
 
 
 # checked-in newline-delimited fixture (airline-tweet flavored, like
@@ -128,14 +131,14 @@ def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(docs.agg(F.count("*").alias("n_lines")))
 
 
-def q_map_task_stats(spark: SparkSession, sf_dir: str, num_tasks: int = 4) -> DataFrame:
+def q_map_task_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O4 observable surface: per-task (word,count) rollup mirroring
     the reference's MapOutputTask<N>.txt intermediates
-    (greeter_server.cc:81-86), with deterministic doc_id%4 task
-    assignment standing in for the contiguous split."""
+    (greeter_server.cc:81-86), with deterministic doc_id % NUM_TASKS
+    task assignment standing in for the contiguous split."""
     docs = corpus_from_documents(spark, sf_dir)
     words = tokenize(
-        docs.select(task_id_col(F.col("doc_id"), num_tasks).alias("task_id"),
+        docs.select(task_id_col(F.col("doc_id")).alias("task_id"),
                     normalized_col("line").alias("norm")),
         keep=["task_id"],
     )

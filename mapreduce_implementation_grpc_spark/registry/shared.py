@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from ..materialize import materialize
 
@@ -58,6 +58,8 @@ from ..operators.curation import (
     repetition_stats,
     shard_manifest,
 )
+from ..operators.chunking import DEFAULT_PACK_BUDGET
+from ..operators.graph_motifs import COSUPPLY_THRESHOLD
 from ..operators.normalize import normalized_col
 from ..operators.similarity import (
     ann_ivf_topk,
@@ -87,6 +89,36 @@ from ..multimodal.binary_ops import (
 )
 from ..sources.catalog import load_table
 from ..sources.text import corpus_from_documents, read_text_corpus, task_id_col
+
+def _rev_micros() -> Column:
+    """Exact lineitem revenue in integer micros: price * (1 - discount) * 10^6."""
+    return (
+        F.col("l_extendedprice").cast("decimal(18,2)")
+        * (F.lit(1).cast("decimal(8,4)") - F.col("l_discount").cast("decimal(8,4)"))
+        * F.lit(1000000).cast("decimal(7,0)")
+    ).cast("decimal(25,0)")
+
+
+def _order_month() -> Column:
+    """o_orderdate as whole months since 1992-01, the first order month."""
+    return (
+        (F.year("o_orderdate") * 12 + F.month("o_orderdate")) - F.lit(1992 * 12 + 1)
+    ).cast("long")
+
+
+def _customer_nation_lines(
+    spark: SparkSession, sf_dir: str, orders: DataFrame
+) -> DataFrame:
+    """lineitem joined to `orders`, their customers and (broadcast) nations."""
+    li = load_table(spark, sf_dir, "lineitem")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+    )
+
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments for oracles (DuckDB dialect)
@@ -131,6 +163,27 @@ def _sql_shingles(table: str = "documents") -> str:
 
 
 _SQL_SHINGLES = _sql_shingles()
+
+
+def _sql_quality(pad: int) -> str:
+    """functions/text_stats.quality_score_col over `text` and `toks`
+    (without the round), one term per line; lines after the first are
+    indented by `pad`."""
+    i = " " * pad
+    return (
+        "least(len(toks) / 50.0, 1.0) * 0.35\n"
+        f"{i}+ (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))\n"
+        f"{i}         / greatest(length(text), 1)) * 0.25\n"
+        f"{i}+ (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2\n"
+        f"{i}+ least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2"
+    )
+
+# Co-supply pair weights w(s1, s2, c) and edge threshold t(thr),
+# matching operators.graph_motifs.cosupply_edges.
+_SQL_COSUPPLY = f"""ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
+  w AS (SELECT a.s AS s1, b.s AS s2, count(*) AS c
+        FROM ps a JOIN ps b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2),
+  t AS (SELECT CAST(sum(c) AS DOUBLE) / count(*) * {COSUPPLY_THRESHOLD} AS thr FROM w)"""
 
 
 def _bpe_ctes(k: int) -> str:
@@ -193,7 +246,7 @@ def _bpe_compression_sql(k: int) -> str:
     """
 
 
-def _bpe_pack_sql(k: int, budget: int = 256) -> str:
+def _bpe_pack_sql(k: int) -> str:
     """pack_sequences over real trained-BPE counts (oracle twin of
     q_pack_sequences_bpe): the encode CTEs feed the per-shard
     prefix-sum block layout."""
@@ -226,8 +279,8 @@ def _bpe_pack_sql(k: int, budget: int = 256) -> str:
                     AS BIGINT) AS prefix
         FROM n)
       SELECT doc_id, source, n_tokens,
-             CAST(prefix // {budget} AS BIGINT) AS bin_id,
-             CAST(prefix % {budget} AS BIGINT) AS offset
+             CAST(prefix // {DEFAULT_PACK_BUDGET} AS BIGINT) AS bin_id,
+             CAST(prefix % {DEFAULT_PACK_BUDGET} AS BIGINT) AS offset
       FROM p
     """
 

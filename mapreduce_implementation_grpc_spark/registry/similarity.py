@@ -18,7 +18,10 @@ from .shared import (
     quantize_embeddings,
     with_token_array,
 )
-from .curation import BM25_QUERY, q_bm25_topk
+from .curation import BM25_QUERY, BM25_TOPN, q_bm25_topk
+from ..operators.mmr import MMR_K, MMR_LAM
+from ..operators.quantization import DEFAULT_PQ_M
+from ..operators.similarity import CLUSTERED_N_CLUSTERS, TOPK
 
 
 
@@ -26,16 +29,19 @@ from .curation import BM25_QUERY, q_bm25_topk
 # similarity search
 # ---------------------------------------------------------------------------
 
-def _query_vectors(spark: SparkSession, sf_dir: str, n: int = 10) -> DataFrame:
+N_QUERIES = 10  # the query set: vectors 0..N_QUERIES-1
+
+
+def _query_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return emb.filter(F.col("vec_id") < n).select(
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
 
 
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    knn = knn_brute_force(emb, _query_vectors(spark, sf_dir), k=5)
+    knn = knn_brute_force(emb, _query_vectors(spark, sf_dir))
     return knn.withColumn("rank", F.col("rank").cast("long"))
 
 
@@ -68,11 +74,14 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds run at DataFrame-construction time."""
     from ..operators.kmeans import kmeans_cells
 
-    return kmeans_cells(load_table(spark, sf_dir, "embeddings"), k=8, n_iter=3)
+    return kmeans_cells(load_table(spark, sf_dir, "embeddings"))
 
 
-def q_cluster_topics(spark: SparkSession, sf_dir: str, topn: int = 5,
-                     min_count: int = 5) -> DataFrame:
+TOPIC_TOPN = 5
+TOPIC_MIN_COUNT = 5
+
+
+def q_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Topic labeling of embedding clusters: k-means cells (the
     trained quantizer) joined to the documents' tokens, then each
     cell's top terms by LIFT = p(word|cell)/p(word) -- the
@@ -107,7 +116,7 @@ def q_cluster_topics(spark: SparkSession, sf_dir: str, topn: int = 5,
         6,
     )
     scored = (
-        cw.filter(F.col("cnt") >= min_count)
+        cw.filter(F.col("cnt") >= TOPIC_MIN_COUNT)
         .join(F.broadcast(ct), "cell")
         .join(wt, "word")
         .crossJoin(F.broadcast(g))
@@ -116,7 +125,7 @@ def q_cluster_topics(spark: SparkSession, sf_dir: str, topn: int = 5,
     w = Window.partitionBy("cell").orderBy(F.desc("lift"), F.asc("word"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= topn)
+        .filter(F.col("rank") <= TOPIC_TOPN)
     )
 
 
@@ -125,7 +134,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact decimal-sum means, so DuckDB reproduces the identical
     probe routing and serve ranking."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_ivf_topk(emb, _query_vectors(spark, sf_dir), k=5)
+    return ann_ivf_topk(emb, _query_vectors(spark, sf_dir))
 
 
 def _recall_df(spark, sf_dir, ann) -> DataFrame:
@@ -147,61 +156,70 @@ def _recall_df(spark, sf_dir, ann) -> DataFrame:
     )
 
 
-def q_bm25_snippets(spark: SparkSession, sf_dir: str, topn: int = 20,
-                    ctx: int = 30, width: int = 80) -> DataFrame:
-    """Search-result presentation: for each BM25 top-doc, an 80-char
-    snippet centered on the FIRST query-term occurrence (instr
+SNIPPET_TOPN = 20
+SNIPPET_CTX = 30
+SNIPPET_WIDTH = 80
+SNIPPET_NO_TERM = 1_000_000_000  # first-term position when no query term occurs
+
+
+def q_bm25_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Search-result presentation: for each BM25 top-doc, a
+    SNIPPET_WIDTH-char snippet centered on the FIRST query-term occurrence (instr
     positions; absent terms rank as +infinity via a sentinel). All
     expression-level string ops -- the snippet stage adds zero
     shuffles to the ranked join."""
-    far = F.lit(1_000_000_000)
+    far = F.lit(SNIPPET_NO_TERM)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    top = q_bm25_topk(spark, sf_dir, topn=topn)
+    top = q_bm25_topk(spark, sf_dir, topn=SNIPPET_TOPN)
     pos_cols = [
         F.when(F.instr(F.col("text"), F.lit(t)) > 0,
                F.instr(F.col("text"), F.lit(t))).otherwise(far)
         for t in BM25_QUERY
     ]
     first_pos = F.least(*pos_cols)
-    start = F.greatest(first_pos - F.lit(ctx), F.lit(1))
+    start = F.greatest(first_pos - F.lit(SNIPPET_CTX), F.lit(1))
     return (
         top.join(docs, "doc_id")
         .select(
             "doc_id",
             "bm25",
             F.when(first_pos < far,
-                   F.substr(F.col("text"), start, F.lit(width)))
-            .otherwise(F.substr(F.col("text"), F.lit(1), F.lit(width)))
+                   F.substr(F.col("text"), start, F.lit(SNIPPET_WIDTH)))
+            .otherwise(F.substr(F.col("text"), F.lit(1), F.lit(SNIPPET_WIDTH)))
             .alias("snippet"),
         )
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
     )
 
 
-def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k_each: int = 50,
-                      topn: int = 20, rrf_k: int = 60) -> DataFrame:
+RRF_K = 60
+RRF_TOPN = 20
+
+
+def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical
-    top-50 and the dense cosine top-50 (document vector 0 as the
-    query embedding) -- score = sum over systems of 1/(60 + rank), the
-    standard fusion that needs no score calibration. Both input
+    top-BM25_TOPN and the dense cosine top-BM25_TOPN (document vector 0
+    as the query embedding) -- score = sum over systems of
+    1/(RRF_K + rank), the standard fusion that needs no score
+    calibration. Both input
     rankings are deterministic plans already in the registry; fusion
-    is a full-outer join of two <=50-row lists, so the fused stage
+    is a full-outer join of two short lists, so the fused stage
     costs nothing at any corpus size. Exact cross-engine: ranks are
     integers, each term is one double division, and the two terms add
     in fixed order (expression, not aggregation)."""
     from pyspark.sql import Window
 
-    bm = q_bm25_topk(spark, sf_dir, topn=k_each)
+    bm = q_bm25_topk(spark, sf_dir)
     wl = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
     lex = bm.select("doc_id", F.row_number().over(wl).alias("r_lex"))
     emb = load_table(spark, sf_dir, "embeddings")
     q0 = emb.filter(F.col("vec_id") == 0).select(
         F.lit(0).alias("query_id"), F.col("embedding").alias("qvec")
     )
-    den = knn_brute_force(emb, q0, k=k_each).select(
+    den = knn_brute_force(emb, q0, k=BM25_TOPN).select(
         F.col("neighbor_id").alias("doc_id"), F.col("rank").alias("r_den")
     )
-    kd = F.lit(float(rrf_k))
+    kd = F.lit(float(RRF_K))
     one = F.lit(1.0)
     fused = lex.join(den, "doc_id", "full").select(
         "doc_id",
@@ -211,7 +229,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str, k_each: int = 50,
             6,
         ).alias("rrf"),
     )
-    return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(topn)
+    return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(RRF_TOPN)
 
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,29 +325,13 @@ def q_ann_banded_candidates_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     Plan shape: identical ids-only banded join as the serving path;
     the count is a per-query aggregate of the distinct candidate set;
     the corpus size joins in as one broadcast scalar."""
-    from ..operators.similarity import ANN_ROWS_PER_BAND, with_lsh_bands
+    from ..operators.similarity import banded_candidates
 
     emb = load_table(spark, sf_dir, "embeddings")
     total = emb.agg((F.count("*")).alias("_n"))
     out = None
     for bands in ANN_BANDED_SWEEP:
-        cb = with_lsh_bands(
-            emb.select("vec_id", "embedding"), bands, ANN_ROWS_PER_BAND,
-        ).select("vec_id", "band", "bucket")
-        qb = with_lsh_bands(
-            _query_vectors(spark, sf_dir).select(
-                "query_id", F.col("qvec").alias("embedding")
-            ),
-            bands,
-            ANN_ROWS_PER_BAND,
-        ).select("query_id", "band", "bucket")
-        cand = (
-            F.broadcast(qb)
-            .join(cb, ["band", "bucket"])
-            .filter(F.col("query_id") != F.col("vec_id"))
-            .select("query_id", "vec_id")
-            .distinct()
-        )
+        cand = banded_candidates(emb, _query_vectors(spark, sf_dir), bands)
         per_q = cand.groupBy("query_id").agg(
             F.count("*").alias("n_candidates")
         )
@@ -373,14 +375,14 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     out = None
     for np_ in ANN_SWEEP_PROBES:
-        ann = ann_ivf_topk(emb, _query_vectors(spark, sf_dir), k=5, n_probe=np_)
+        ann = ann_ivf_topk(emb, _query_vectors(spark, sf_dir), n_probe=np_)
         r = _recall_df(spark, sf_dir, ann.select("query_id", "neighbor_id"))
         r = r.select(F.lit(np_).cast("long").alias("n_probe"), "*")
         out = r if out is None else out.unionByName(r)
     return out
 
 
-def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
+def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = TOPK) -> DataFrame:
     """GRADED ranking-quality eval of the IVF ANN index: per query,
     recall@k, MRR (reciprocal rank of the first true neighbor in the
     ANN list) and nDCG@k with graded relevance rel = k+1-exact_rank
@@ -404,7 +406,7 @@ def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFram
     derives from the same k -- so recall@k/nDCG@k stay internally
     consistent at any k (ADVICE r5: the previous form graded a
     k-deep ANN list against a hard-pinned top-5 truth). The DuckDB
-    oracle covers the driver's k=5 call."""
+    oracle covers the default k = TOPK."""
     emb = load_table(spark, sf_dir, "embeddings")
     ann = ann_ivf_topk(emb, _query_vectors(spark, sf_dir), k=k).select(
         "query_id", "neighbor_id", F.col("rank").alias("ann_rank")
@@ -412,7 +414,7 @@ def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFram
     return _rank_quality_df(spark, sf_dir, ann, k=k)
 
 
-def _rank_quality_df(spark, sf_dir, ann: DataFrame, k: int = 5) -> DataFrame:
+def _rank_quality_df(spark, sf_dir, ann: DataFrame, k: int = TOPK) -> DataFrame:
     """Graded eval core: `ann` is any (query_id, neighbor_id,
     ann_rank) ranking cut at depth `k`; ground truth is the exact
     brute-force top-k AT THE SAME k. Self-eval invariant
@@ -470,23 +472,26 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cells = kmeans_cells(emb, k=8, n_iter=3).select("vec_id", "cell")
+    cells = kmeans_cells(emb).select("vec_id", "cell")
     emb_cells = emb.join(cells, "vec_id")
-    return ann_ivf_topk(emb_cells, _query_vectors(spark, sf_dir), k=5, by="cell")
+    return ann_ivf_topk(emb_cells, _query_vectors(spark, sf_dir), by="cell")
 
 
-def q_mmr_rerank(spark: SparkSession, sf_dir: str, n_cand: int = 20,
-                 k: int = 8, lam: float = 0.7) -> DataFrame:
-    """MMR diversified re-rank (operators/mmr.py): brute-force top-20
-    candidates per query, then greedy lam=0.7 relevance-vs-redundancy
-    selection of 8 via applyInPandas over query groups -- serving-time
-    dedup for a near-dup-heavy corpus. The oracle unrolls the 8 greedy
-    steps as materialized CTEs; literal lam/(1.0-lam) doubles and the
-    shared cosine fold keep every pick hash-exact."""
+MMR_N_CAND = 20
+
+
+def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MMR diversified re-rank (operators/mmr.py): brute-force
+    top-MMR_N_CAND candidates per query, then greedy MMR_LAM
+    relevance-vs-redundancy selection of MMR_K via applyInPandas over
+    query groups -- serving-time dedup for a near-dup-heavy corpus.
+    The oracle unrolls the MMR_K greedy steps as materialized CTEs;
+    literal MMR_LAM/(1.0-MMR_LAM) doubles and the shared cosine fold
+    keep every pick hash-exact."""
     from ..operators.mmr import mmr_select
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cand = knn_brute_force(emb, _query_vectors(spark, sf_dir), k=n_cand)
+    cand = knn_brute_force(emb, _query_vectors(spark, sf_dir), k=MMR_N_CAND)
     cand = cand.join(
         emb.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
         "neighbor_id",
@@ -496,34 +501,34 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str, n_cand: int = 20,
         F.col("cosine").alias("sim_q"),
         "embedding",
     )
-    return mmr_select(cand, k=k, lam=lam)
+    return mmr_select(cand)
 
 
-def _mmr_ctes(n_cand: int = 20, k: int = 8) -> str:
+def _mmr_ctes() -> str:
     """Unrolled greedy-MMR oracle: step i scores every not-yet-picked
     candidate against the selected set sel{i-1} and picks the argmax
-    (ties on doc_id asc). lam appears ONLY as the literals 0.7 and
-    (1.0 - 0.7), matching the Python operator's doubles."""
+    (ties on doc_id asc). lam appears ONLY as the literals MMR_LAM and
+    (1.0 - MMR_LAM), matching the Python operator's doubles."""
     parts = [
         f"""
   WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dvec FROM embeddings),
-  q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < 10),
+  q AS (SELECT vec_id AS query_id, dvec AS qvec FROM v WHERE vec_id < {N_QUERIES}),
   s AS (SELECT q.query_id, e.vec_id AS doc_id, e.dvec,
                round(list_cosine_similarity(q.qvec, e.dvec), 6) AS sim_q
         FROM q, v e WHERE e.vec_id <> q.query_id),
   cand AS MATERIALIZED (SELECT query_id, doc_id, dvec, sim_q FROM (
       SELECT *, row_number() OVER (PARTITION BY query_id
                 ORDER BY sim_q DESC, doc_id ASC) AS rn FROM s)
-    WHERE rn <= {n_cand}),
+    WHERE rn <= {MMR_N_CAND}),
   sel0 AS (SELECT query_id, doc_id, dvec FROM cand WHERE FALSE)"""
     ]
-    for i in range(1, k + 1):
+    for i in range(1, MMR_K + 1):
         parts.append(
             f""",
   sc{i} AS MATERIALIZED (
     SELECT c.query_id, c.doc_id,
-           CAST(0.7 AS DOUBLE) * c.sim_q
-           - (CAST(1.0 AS DOUBLE) - CAST(0.7 AS DOUBLE))
+           CAST({MMR_LAM} AS DOUBLE) * c.sim_q
+           - (CAST(1.0 AS DOUBLE) - CAST({MMR_LAM} AS DOUBLE))
              * coalesce(mx.m, CAST(0.0 AS DOUBLE)) AS score
     FROM cand c
     LEFT JOIN (SELECT c2.query_id, c2.doc_id,
@@ -544,22 +549,20 @@ def _mmr_ctes(n_cand: int = 20, k: int = 8) -> str:
     tail = "\n  UNION ALL\n".join(
         f"  SELECT query_id, doc_id, CAST({i} AS BIGINT) AS pick_rank,"
         f" score AS mmr FROM p{i}"
-        for i in range(1, k + 1)
+        for i in range(1, MMR_K + 1)
     )
     return "".join(parts) + "\n" + tail
 
 
 def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), min_cosine=0.35)
+    return embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
 def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path: pair search restricted to LSH buckets (recall<1,
     but deterministic -- the splitmix64 planes are embedded in the
     oracle, so even the approximate path hash-checks)."""
-    return embedding_dup_pairs(
-        load_table(spark, sf_dir, "embeddings"), min_cosine=0.35, use_lsh=True
-    )
+    return embedding_dup_pairs(load_table(spark, sf_dir, "embeddings"), use_lsh=True)
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,7 +592,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = pq_codes(load_table(spark, sf_dir, "embeddings"))
     return pq.select(
         "vec_id",
-        *[F.col("codes")[j].alias(f"c{j}") for j in range(4)],
+        *[F.col("codes")[j].alias(f"c{j}") for j in range(DEFAULT_PQ_M)],
         "recon_err",
     )
 
@@ -600,7 +603,7 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantization import pq_adc_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_adc_topk(emb, _query_vectors(spark, sf_dir), topk=5)
+    return pq_adc_topk(emb, _query_vectors(spark, sf_dir))
 
 
 def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,7 +623,7 @@ def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.quantization import ivfpq_residual_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivfpq_residual_topk(emb, _query_vectors(spark, sf_dir), topk=5)
+    return ivfpq_residual_topk(emb, _query_vectors(spark, sf_dir))
 
 
 def q_nb_lang_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -665,10 +668,10 @@ def q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: k-means cells bound the pair
     scan; within a cell, a vector with a smaller-id neighbor at
-    cosine >= 0.35 is marked keep=false. EAGER: trains the cells."""
+    cosine >= MIN_COSINE is marked keep=false. EAGER: trains the cells."""
     from ..operators.similarity import semantic_dedup
 
-    return semantic_dedup(load_table(spark, sf_dir, "embeddings"), min_cosine=0.35)
+    return semantic_dedup(load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -684,8 +687,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embeddings collide far more selectively" from an assertion into a
 # measured, oracle-checked curve.
 
-CLUSTERED_N_CLUSTERS = 25
-CLUSTERED_SIGMA = 0.5
 ANN_CLUSTERED_SWEEP = (4, 8, 16, 64)
 
 
@@ -693,13 +694,11 @@ def _clustered_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import synthetic_clustered_embeddings
 
     ids = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    return synthetic_clustered_embeddings(
-        ids, CLUSTERED_N_CLUSTERS, CLUSTERED_SIGMA
-    )
+    return synthetic_clustered_embeddings(ids)
 
 
-def _clustered_query_vecs(cv: DataFrame, n: int = 10) -> DataFrame:
-    return cv.filter(F.col("vec_id") < n).select(
+def _clustered_query_vecs(cv: DataFrame) -> DataFrame:
+    return cv.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
         F.col("cluster").alias("qcluster"),
@@ -773,7 +772,7 @@ def q_ann_clustered_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cv = _clustered_vecs(spark, sf_dir)
     corpus = cv.select("vec_id", "embedding")
     q = _clustered_query_vecs(cv).select("query_id", "qvec")
-    exact = knn_brute_force(corpus, q, k=5).select("query_id", "neighbor_id")
+    exact = knn_brute_force(corpus, q).select("query_id", "neighbor_id")
     n_exact = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
     total = corpus.agg(F.count("*").alias("_n"))
     out = None
@@ -824,10 +823,11 @@ def q_ann_clustered_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataF
     """Recall AND cost of the LEARNED-cell IVF path on the clustered
     corpus (VERDICT r9 #3: the one IVF variant that could be
     selective on clustered data had no quality number). k-means
-    (k=25, 3 Lloyd rounds, smallest-id seeds) learns the inverted
-    lists, the standard 2-probe serve runs, and the row reports
-    per-query top-5 recall vs exact kNN plus the candidate fraction
-    actually scanned (rows in the probed cells). On this corpus the
+    (CLUSTERED_N_CLUSTERS cells, KMEANS_ITER Lloyd rounds, smallest-id
+    seeds) learns the inverted lists, the standard N_PROBE-probe serve
+    runs, and the row reports per-query top-TOPK recall vs exact kNN
+    plus the candidate fraction actually scanned (rows in the probed
+    cells). On this corpus the
     learned cells align with the true clusters, so IVF reaches
     recall ~1.0 at ~8% of the corpus (2 of 25 cells) -- versus
     0.28-0.32 recall for the same plan on the near-orthogonal driver
@@ -839,15 +839,11 @@ def q_ann_clustered_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataF
 
     cv = _clustered_vecs(spark, sf_dir)
     corpus = cv.select("vec_id", "embedding")
-    cells = kmeans_cells(
-        corpus, k=CLUSTERED_N_CLUSTERS, n_iter=3
-    ).select("vec_id", "cell")
+    cells = kmeans_cells(corpus, k=CLUSTERED_N_CLUSTERS).select("vec_id", "cell")
     emb_cells = corpus.join(cells, "vec_id")
     q = _clustered_query_vecs(cv).select("query_id", "qvec")
-    ann = ann_ivf_topk(emb_cells, q, k=5, by="cell").select(
-        "query_id", "neighbor_id"
-    )
-    exact = knn_brute_force(corpus, q, k=5).select("query_id", "neighbor_id")
+    ann = ann_ivf_topk(emb_cells, q, by="cell").select("query_id", "neighbor_id")
+    exact = knn_brute_force(corpus, q).select("query_id", "neighbor_id")
     hits = (
         exact.join(ann, ["query_id", "neighbor_id"], "left_semi")
         .groupBy("query_id")

@@ -181,7 +181,26 @@ def q_training_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_MERGES = 4
 
 
-def q_bpe_pair_counts(spark: SparkSession, sf_dir: str, topn: int = 50) -> DataFrame:
+def _bpe_docs(spark: SparkSession, sf_dir: str):
+    """(documents with their `toks`, per-doc token count under the
+    BPE_MERGES merges trained on the corpus). Training is eager."""
+    from ..functions.text_stats import with_token_array
+    from ..operators import bpe
+
+    merges = bpe.trained_merges(spark, sf_dir, num_merges=BPE_MERGES)
+    docs = with_token_array(load_table(spark, sf_dir, "documents"))
+    n_bpe = F.aggregate(
+        F.transform(F.col("toks"), lambda w: bpe.encoded_len_col(w, merges)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x.cast("long"),
+    )
+    return docs, n_bpe
+
+
+BPE_PAIR_TOPN = 50
+
+
+def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BPE-trainer kernel: adjacent-symbol pair frequencies over
     the word-frequency table (corpus scanned once; the pair stage runs
     on |vocab| rows). Top-N with deterministic tie-break."""
@@ -193,7 +212,7 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str, topn: int = 50) -> DataF
     return (
         bpe.pair_counts(vocab)
         .orderBy(F.desc("pair_freq"), "left", "right")
-        .limit(topn)
+        .limit(BPE_PAIR_TOPN)
     )
 
 
@@ -214,16 +233,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the trained merges to every document: per-doc real BPE
     token count next to the whitespace count. The k learned merges are
     literal replace() calls -- encode is MAP-ONLY over the corpus."""
-    from ..functions.text_stats import with_token_array
-    from ..operators import bpe
-
-    merges = bpe.trained_merges(spark, sf_dir, num_merges=BPE_MERGES)
-    docs = with_token_array(load_table(spark, sf_dir, "documents"))
-    n_bpe = F.aggregate(
-        F.transform(F.col("toks"), lambda w: bpe.encoded_len_col(w, merges)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x.cast("long"),
-    )
+    docs, n_bpe = _bpe_docs(spark, sf_dir)
     return docs.select(
         "doc_id",
         F.size("toks").cast("long").alias("n_ws_tokens"),

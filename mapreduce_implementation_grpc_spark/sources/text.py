@@ -18,6 +18,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+NUM_TASKS = 4  # the reference's map tasks (greeter_client.cc:362-368)
+
 
 def read_text_corpus(spark: SparkSession, path: str, min_partitions: int | None = None) -> DataFrame:
     """O1: newline-delimited text -> DataFrame[line: string].
@@ -62,13 +64,13 @@ def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(path).select("doc_id", F.col("text").alias("line"))
 
 
-def task_id_col(key: Column, num_tasks: int = 4) -> Column:
+def task_id_col(key: Column) -> Column:
     """Deterministic task id mirroring the reference's 4-way split
-    (greeter_client.cc:362-368). Uses key % n rather than contiguous
+    (greeter_client.cc:362-368). Uses key % NUM_TASKS rather than contiguous
     ranges: word count is partition-invariant (SURVEY.md section 1),
     and modulo assignment is reproducible across runs/oracles while
     contiguous byte ranges are not."""
-    return (key % num_tasks).cast("int")
+    return (key % NUM_TASKS).cast("int")
 
 
 def with_task_id(df: DataFrame) -> DataFrame:

@@ -15,17 +15,21 @@ AST only; no Spark.
    anything but the default literal, except a bare name equal to the
    parameter's own name: that only forwards the switch one level up.
 
-2. Every defaulted parameter. Each defaulted parameter of a public
-   module-level function in ``operators/``, ``functions/``,
-   ``multimodal/``, ``sources/``, ``plans/``, ``streaming/`` and
-   ``materialize.py`` is set to another value by some call in the
-   package, ``tests/``, ``tools/``, ``bench.py``, ``perfbench/`` or
-   ``__spark_entry__.py``. The rule is in `never_set_parameters`.
-   ``registry/`` is out of scope: its ``q_*(spark, sf_dir)`` signature
-   is the driver contract. So are the deployment settings of
-   ``session.get_spark``. A parameter that only tests set still counts
-   as set; ``multimodal/binary_ops.decode_features(real_codec)`` is one
-   (tests run the real PNG/JPEG/GIF/WAV decoders through it).
+2. Every defaulted parameter. Each defaulted parameter of a
+   module-level function, public or private, in ``operators/``,
+   ``functions/``, ``multimodal/``, ``sources/``, ``plans/``,
+   ``streaming/``, ``registry/`` and ``materialize.py`` is set to
+   another value by some call in the package, ``tests/``, ``tools/``,
+   ``bench.py``, ``perfbench/`` or ``__spark_entry__.py``. The rule is
+   in `never_set_parameters`. A ``q_*`` function's place in the
+   ``QUERIES`` table sets nothing: the driver, ``bench.py`` and
+   ``perfbench`` call it with exactly ``(spark, sf_dir)``, so a value
+   that only the query uses is a module constant next to it, and an
+   oracle builder reads the same constant instead of restating it.
+   The deployment settings of ``session.get_spark`` are out of scope. A
+   parameter that only tests set still counts as set;
+   ``multimodal/binary_ops.decode_features(real_codec)`` is one (tests
+   run the real PNG/JPEG/GIF/WAV decoders through it).
 
 Callees are matched by function name across all sources, so a name
 clash can only keep a parameter, never flag one.
@@ -165,7 +169,9 @@ def test_every_operator_bool_switch_has_a_package_caller_for_each_value():
 # Every defaulted parameter: some caller sets another value.
 
 REPO = PKG.parent
-SCOPE_DIRS = ("operators", "functions", "multimodal", "sources", "plans", "streaming")
+SCOPE_DIRS = (
+    "operators", "functions", "multimodal", "sources", "plans", "streaming", "registry",
+)
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 
 
@@ -207,6 +213,7 @@ class _Index(ast.NodeVisitor):
         self.calls: list[tuple[str, ast.Call, tuple]] = []  # (callee, call, scopes)
         self.referenced: set[str] = set()
         self.aliases: dict[str, str] = {}
+        self.queries: dict[str, str] = {}  # QUERIES key -> function name
         self.module_level = {id(n) for n in tree.body}
         self._callee_nodes: set[int] = set()
         self.visit(tree)
@@ -236,9 +243,29 @@ class _Index(ast.NodeVisitor):
         self.generic_visit(node)
         self.stack.pop()
 
+    def visit_Assign(self, node):
+        # the QUERIES table: the driver calls each entry with (spark, sf_dir)
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        if isinstance(node.value, ast.Dict) and any(
+            isinstance(t, ast.Name) and t.id == "QUERIES" for t in targets
+        ):
+            for k, v in zip(node.value.keys, node.value.values):
+                self._callee_nodes.add(id(v))
+                if isinstance(k, ast.Constant):
+                    self.queries[k.value] = getattr(v, "attr", getattr(v, "id", None))
+        self.generic_visit(node)
+
+    visit_AnnAssign = visit_Assign
+
     def visit_Call(self, node):
         f = node.func
         name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if (
+            isinstance(f, ast.Subscript)
+            and getattr(f.value, "id", getattr(f.value, "attr", None)) == "QUERIES"
+            and isinstance(f.slice, ast.Constant)
+        ):
+            name = ("QUERIES", f.slice.value)  # resolved through the table
         if name is not None:
             self._callee_nodes.add(id(f))
             self.calls.append((name, node, tuple(self.stack)))
@@ -255,7 +282,7 @@ class _Index(ast.NodeVisitor):
 
 
 def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
-    """'module.function(param)' for every defaulted parameter of a public
+    """'module.function(param)' for every defaulted parameter of a
     module-level function in a `scope` module that no call in `sources`
     sets to anything but its default.
 
@@ -264,11 +291,15 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
     parameter's own name that forwards an enclosing function's parameter
     sets it only when that enclosing parameter is itself set. A call with
     ``*args`` or ``**kwargs`` sets every parameter, and so does a
-    reference to the function as a value. Callees are matched by name
+    reference to the function as a value -- except an entry of a
+    ``QUERIES`` dict, which the driver calls with ``(spark, sf_dir)``
+    only; a call through it, ``QUERIES["name"](...)``, counts as a call
+    of the function the entry names. Callees are matched by name
     (through ``import ... as`` aliases), so a name clash only keeps a
     parameter."""
     indexes = [_Index(m, ast.parse(src)) for m, src in sorted(sources.items())]
     aliases = {k: v for ix in indexes for k, v in ix.aliases.items()}
+    table = {k: v for ix in indexes for k, v in ix.queries.items()}
     referenced = {aliases.get(n, n) for ix in indexes for n in ix.referenced}
     defs: dict[str, list[ast.AST]] = {}
     for ix in indexes:
@@ -283,6 +314,8 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
                 is_set.add((id(node), p))
     for ix in indexes:
         for callee, call, scopes in ix.calls:
+            if isinstance(callee, tuple):
+                callee = table.get(callee[1])
             star = any(isinstance(a, ast.Starred) for a in call.args) or any(
                 k.arg is None for k in call.keywords
             )
@@ -323,7 +356,7 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
         if ix.module not in scope:
             continue
         for name, node, _ in ix.defs:
-            if id(node) not in ix.module_level or name.startswith("_"):
+            if id(node) not in ix.module_level:
                 continue
             for p, (_, default) in _params(node).items():
                 if default is not None and (id(node), p) not in is_set:
@@ -367,6 +400,8 @@ def test_defaulted_parameter_detector_self_test():
         "def clash(df, k=2): ...\n"
         "def _private(df, k=2): ...\n"
         "def required(df, k): ...\n"
+        "def q_listed(spark, sf_dir, n=100): ...\n"
+        "def q_called(spark, sf_dir, k=5): ...\n"
     )
     caller = (
         "from lib import aliased as _al\n"
@@ -392,20 +427,26 @@ def test_defaulted_parameter_detector_self_test():
         "class C:\n"
         "    def clash(self, df, k=2): ...\n"
         "C().clash(df, 7)\n"
+        "QUERIES = {'listed': lib.q_listed, 'called': lib.q_called}\n"
+        "QUERIES['called'](spark, d, k=3)\n"
     )
     never = never_set_parameters(
         {"pkg.operators.lib": lib, "tests.caller": caller}, {"pkg.operators.lib"}
     )
     assert never == [
+        "pkg.operators.lib._private(k)",
         "pkg.operators.lib.constant(bits)",
         "pkg.operators.lib.inner_unset(k)",
         "pkg.operators.lib.literal(text_col)",
+        "pkg.operators.lib.q_listed(n)",
         "pkg.operators.lib.slot(n)",
     ]
     # `clash` keeps k: the method of the same name is called with 7
     # (name matching can only keep a parameter). `inner_rebound` keeps
     # k: its caller passes a local computed from k, not a forward.
     # `outer_unset` is out of scope, so only its callee is listed.
+    # `q_listed` is only a QUERIES entry, which sets nothing; `q_called`
+    # keeps k through the QUERIES['called'](...) call.
 
 
 def test_every_defaulted_parameter_is_set_by_some_caller():

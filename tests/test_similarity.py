@@ -251,7 +251,7 @@ def test_mmr_prefers_diversity_over_redundancy(spark):
     )
     got = [
         (r.pick_rank, r.doc_id)
-        for r in mmr_select(cand, k=3, lam=0.7)
+        for r in mmr_select(cand, k=3)
         .orderBy("pick_rank")
         .collect()
     ]
