@@ -119,6 +119,8 @@ FINAL_REPORT_QUERIES = [
     "duplicate_spans",
     "orders_benford",
     "nation_rank_spearman",
+    "curve_locality_stats",
+    "hilbert_skipping_summary",
 ]
 
 

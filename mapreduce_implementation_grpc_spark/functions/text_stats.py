@@ -33,6 +33,16 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "zh": ("de", "shi", "le", "zai", "he"),
 }
 
+# quality_score_col's formula; its DuckDB oracle (registry/shared.
+# _sql_quality) is built from the same values
+QUALITY_LENGTH_WEIGHT = 0.35
+QUALITY_CLEAN_WEIGHT = 0.25  # weight of 1 - punct_ratio
+QUALITY_DISTINCT_WEIGHT = 0.2
+QUALITY_STOPWORD_WEIGHT = 0.2
+QUALITY_LENGTH_CAP = 50.0  # tokens for a full length score
+QUALITY_STOPWORD_CAP = 5.0  # stopword hits for a full stopword score
+QUALITY_STOPWORDS = ("the", "a", "and", "of", "is")
+
 ROLLING_HASH_MOD = 1_000_000_007
 ROLLING_HASH_BASE = 31
 
@@ -89,10 +99,10 @@ def bpe_like_token_count_col(text: Column | str, toks: Column | None = None) -> 
 
 
 def quality_score_col(text: Column | str, toks: Column | None = None) -> Column:
-    """Composite document quality in [0,1]:
-    0.35*length_score + 0.25*(1-punct_ratio) + 0.2*distinct_ratio
-    + 0.2*stopword_presence. Deterministic double arithmetic,
-    mirrored term-for-term in the oracle."""
+    """Composite document quality in [0,1], a weighted sum (the
+    QUALITY_* constants) of length_score, 1 - punct_ratio,
+    distinct_ratio and stopword presence. Deterministic double
+    arithmetic, mirrored term-for-term in the oracle."""
     text = F.col(text) if isinstance(text, str) else text
     toks = _toks(text) if toks is None else toks
     n_tokens = F.size(toks)
@@ -101,12 +111,14 @@ def quality_score_col(text: Column | str, toks: Column | None = None) -> Column:
     kept_len = F.length(F.regexp_replace(text, NORMALIZE_PATTERN, ""))
     punct_ratio = (raw_len - kept_len) / F.greatest(raw_len, F.lit(1))
     distinct_ratio = F.size(F.array_distinct(toks)) / safe_n
-    length_score = F.least(n_tokens / F.lit(50.0), F.lit(1.0))
-    stop_hits = F.size(F.filter(toks, lambda t: t.isin("the", "a", "and", "of", "is")))
-    stop_ratio = F.least(stop_hits / F.lit(5.0), F.lit(1.0))
+    length_score = F.least(n_tokens / F.lit(QUALITY_LENGTH_CAP), F.lit(1.0))
+    stop_hits = F.size(F.filter(toks, lambda t: t.isin(*QUALITY_STOPWORDS)))
+    stop_ratio = F.least(stop_hits / F.lit(QUALITY_STOPWORD_CAP), F.lit(1.0))
     return F.round(
-        length_score * 0.35 + (F.lit(1.0) - punct_ratio) * 0.25
-        + distinct_ratio * 0.2 + stop_ratio * 0.2,
+        length_score * QUALITY_LENGTH_WEIGHT
+        + (F.lit(1.0) - punct_ratio) * QUALITY_CLEAN_WEIGHT
+        + distinct_ratio * QUALITY_DISTINCT_WEIGHT
+        + stop_ratio * QUALITY_STOPWORD_WEIGHT,
         6,
     )
 

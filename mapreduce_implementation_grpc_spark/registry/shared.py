@@ -33,6 +33,13 @@ from ..materialize import materialize
 
 from ..functions.text_stats import (
     LANG_MARKERS,
+    QUALITY_CLEAN_WEIGHT,
+    QUALITY_DISTINCT_WEIGHT,
+    QUALITY_LENGTH_CAP,
+    QUALITY_LENGTH_WEIGHT,
+    QUALITY_STOPWORD_CAP,
+    QUALITY_STOPWORD_WEIGHT,
+    QUALITY_STOPWORDS,
     bpe_like_token_count_col,
     doc_fingerprint_cols,
     lang_score_cols,
@@ -170,12 +177,14 @@ def _sql_quality(pad: int) -> str:
     (without the round), one term per line; lines after the first are
     indented by `pad`."""
     i = " " * pad
+    stopwords = ",".join(f"'{w}'" for w in QUALITY_STOPWORDS)
     return (
-        "least(len(toks) / 50.0, 1.0) * 0.35\n"
+        f"least(len(toks) / {QUALITY_LENGTH_CAP}, 1.0) * {QUALITY_LENGTH_WEIGHT}\n"
         f"{i}+ (1.0 - (length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\\s]', '', 'g')))\n"
-        f"{i}         / greatest(length(text), 1)) * 0.25\n"
-        f"{i}+ (len(list_distinct(toks)) / greatest(len(toks), 1)) * 0.2\n"
-        f"{i}+ least(len(list_filter(toks, t -> t IN ('the','a','and','of','is'))) / 5.0, 1.0) * 0.2"
+        f"{i}         / greatest(length(text), 1)) * {QUALITY_CLEAN_WEIGHT}\n"
+        f"{i}+ (len(list_distinct(toks)) / greatest(len(toks), 1)) * {QUALITY_DISTINCT_WEIGHT}\n"
+        f"{i}+ least(len(list_filter(toks, t -> t IN ({stopwords}))) / {QUALITY_STOPWORD_CAP}, 1.0)"
+        f" * {QUALITY_STOPWORD_WEIGHT}"
     )
 
 # Co-supply pair weights w(s1, s2, c) and edge threshold t(thr),

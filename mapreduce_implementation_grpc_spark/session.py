@@ -12,6 +12,10 @@ shape is pure configuration: the same plans run on local[N] or a
 - shuffle.partitions sized to cores locally; on a real cluster this
   is overridden (or left to AQE's coalescing from a high initial).
 - Arrow enabled so any unavoidable pandas-UDF boundary is batched.
+- Python workers start from ``pyworker`` (``spark.python.daemon.module``),
+  which imports the installed, byte-compiled pyspark instead of Spark's
+  zips: those zips cost each Python task ~0.3 CPU-s of directory re-reads
+  and source compiles (SCALING.md, "Python worker start-up").
 """
 
 from __future__ import annotations
@@ -20,6 +24,10 @@ import json
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package, so workers import ``pyworker``
+# from any working directory
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _env_conf() -> dict[str, str]:
@@ -83,6 +91,8 @@ def get_spark(
         # nanos (converted to timestamp in sources.catalog) instead of
         # failing the scan
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "mapreduce_implementation_grpc_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in {**env_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

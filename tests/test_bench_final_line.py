@@ -35,6 +35,19 @@ def test_pinned_first_then_slowest_extras_within_budget():
     assert final["queries_omitted"] == len(timings) - len(final["queries"])
 
 
+def test_pinned_line_fits_the_budget_at_sf01_widths():
+    # the head bench.main prints, with every figure as wide as in an
+    # sf0.1 run: each query under 10 s, each total under 1000 s
+    head = {"metric": "total_query_seconds", "value": 999.999, "unit": "sec", "queries": {},
+            "sf": 0.1, "method": "median_of_3;fresh_jvm_tiers", "n_queries": 160,
+            "canary_total_sec": 99.999, "eager_total_sec": 999.999,
+            "extended_total_sec": 999.999, "n_queries_all": 282, "queries_omitted": 0,
+            "full": "BENCH.json"}
+    assert {"curve_locality_stats", "hilbert_skipping_summary"} <= set(bench.FINAL_REPORT_QUERIES)
+    final = bench.final_line(head, {name: 9.999 for name in bench.FINAL_REPORT_QUERIES})
+    assert len(json.dumps(final, separators=(",", ":"))) <= bench.FINAL_LINE_BUDGET
+
+
 def test_pinned_entries_that_did_not_run_are_skipped():
     timings = {"extra_a": 2.0, bench.FINAL_REPORT_QUERIES[0]: 1.0}
     final = bench.final_line(_head(), timings)
