@@ -10,11 +10,16 @@ way a bare count() would allow. Results are NOT collected to the
 driver.
 
 ISOLATION (round 8, VERDICT r7 #1): the old single-JVM sequential
-battery drifted ~1.33x r6->r7 on plans whose code did not change --
-each round's ~30 new plans inflate every later query's wall time
-(codegen cache, GC pressure, broadcast cleanup backlog), which makes
-round-over-round per-query comparison meaningless. The run is now
-tiered into FRESH JVM SUBPROCESSES:
+battery drifted ~1.33x r6->r7 on plans whose code did not change. A
+measured A/B refuted accumulation as the cause: after 100 or 400
+accumulated plans the canary ran ~25% faster, not slower (SCALING.md,
+"Round-8: bench accumulation A/B"), and with the session's codegen
+cache sized to hold a batch's classes each generated class is compiled
+once per worker (the Janino compile count and time are recorded in each
+tier's `calibration`; SCALING.md, "Codegen cache"). What a fresh JVM
+buys is a pinned environment: every query runs after the same warmup
+and the same preceding plans every round. The run is tiered into FRESH
+JVM SUBPROCESSES:
 
   canary   -- registry.CANARY_QUERIES (pinned, append-only, 25
               queries spanning every plan family), ALWAYS FIRST in
@@ -190,6 +195,16 @@ def _cpu_probe() -> float:
     return time.perf_counter() - t0
 
 
+def codegen_compiles(spark) -> tuple[int, float]:
+    """(Janino compiles, their total seconds) so far in this JVM. A
+    compile is a miss in Spark's generated-code cache, so a count above
+    the batch's distinct classes means the cache is evicting."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return compiles, nanos / 1e9
+
+
 def worker(spec_path: str) -> None:
     with open(spec_path) as fh:
         spec = json.load(fh)
@@ -222,6 +237,7 @@ def worker(spec_path: str) -> None:
         # flag queries whose worst run strayed >50% from the median
         if samples[-1] > 1.5 * median and samples[-1] - median > 0.25:
             spreads[name] = round(samples[-1], 3)
+    compiles, compile_sec = codegen_compiles(spark)
     with open(spec["out"], "w") as fh:
         json.dump(
             {
@@ -230,6 +246,8 @@ def worker(spec_path: str) -> None:
                 "calibration": {
                     "cpu_probe_sec": round(cal_cpu, 4),
                     "warmup_wordcount_sec": round(cal_warmup, 3),
+                    "codegen_compiles": compiles,
+                    "codegen_compile_sec": round(compile_sec, 3),
                 },
             },
             fh,

@@ -16,6 +16,14 @@ shape is pure configuration: the same plans run on local[N] or a
   which imports the installed, byte-compiled pyspark instead of Spark's
   zips: those zips cost each Python task ~0.3 CPU-s of directory re-reads
   and source compiles (SCALING.md, "Python worker start-up").
+- Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``)
+  holds ``CODEGEN_CACHE_ENTRIES`` classes instead of Spark's 100, so each
+  generated class is compiled once per session: one pass of five small
+  star-schema queries generates 105 classes at sf0.01, and at 100 every
+  repeat pass ran Janino and the JIT on 57-73 of them again (SCALING.md,
+  "Codegen cache"). The conf is static: the JVM reads it the first time
+  it compiles generated code, so sessions the engine does not build
+  (e.g. one handed to ``__spark_entry__.entry``) keep Spark's 100.
 """
 
 from __future__ import annotations
@@ -28,6 +36,12 @@ from pyspark.sql import SparkSession
 # the directory that holds this package, so workers import ``pyworker``
 # from any working directory
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# entries of Spark's generated-code cache: the smallest power of two that
+# holds the classes of one fresh-JVM bench batch plus the perfbench
+# workloads (at sf0.001 the canary tier generates 387, the eager tier
+# 706, all 160 headline queries 2,666 and the whole registry 4,603)
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def _env_conf() -> dict[str, str]:
@@ -93,6 +107,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "mapreduce_implementation_grpc_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in {**env_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

@@ -13,10 +13,10 @@ Reference surface covered (SURVEY.md section 2a):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .catalog import load_table
 
 NUM_TASKS = 4  # the reference's map tasks (greeter_client.cc:362-368)
 
@@ -58,10 +58,12 @@ def read_jsonl_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
 def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's standard corpus: documents.text as one line per doc.
 
-    Column-pruned scan: only doc_id/text are read from parquet.
+    Column-pruned scan: only doc_id/text are read from parquet, through
+    the catalog's one scan of the table.
     """
-    path = os.path.join(sf_dir, "documents.parquet")
-    return spark.read.parquet(path).select("doc_id", F.col("text").alias("line"))
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.col("text").alias("line")
+    )
 
 
 def task_id_col(key: Column) -> Column:
