@@ -65,14 +65,18 @@ def materialize_eager(df: DataFrame) -> DataFrame:
 
 def pin_before_overwrite(df: DataFrame) -> DataFrame:
     """EAGERLY pin `df` WITHOUT lineage, for read-modify-OVERWRITE of
-    the very files the plan reads (the parquet upsert/rollup sinks).
+    the very files the plan reads: the foreachBatch sinks
+    ``streaming.pipelines.parquet_upsert_sink`` and ``hll_rollup_sink``
+    read their stored table, merge the batch in and overwrite it.
 
     Its body equals `materialize_eager` today, but the two answer
     different questions: `materialize_eager` is a tuning choice that
     may change, while lineage truncation here is REQUIRED. A pin that
     kept lineage (e.g. persist) could "recompute" a lost block from a
     scan of the paths mode("overwrite") has already deleted — failing
-    at best, silently reading half-overwritten data at worst. Durable
-    crash-safety for these sinks comes from the rename-aside protocol
-    in sources/sinks.py, not from Spark block recovery."""
+    at best, silently reading half-overwritten data at worst. The pin
+    makes an overwrite that completes correct; it does not make it
+    durable. Plain parquet has no atomic swap: a crash during the
+    write leaves the table partial or gone, the pinned blocks die with
+    the process, and a replayed batch merges into whatever is left."""
     return df.localCheckpoint(eager=True)

@@ -297,8 +297,8 @@ def video_metadata(payload_df: DataFrame) -> DataFrame:
     work -- duration/resolution/codec filters, bitrate stats, corrupt
     file detection. Arrow mapInPandas over payload batches (same
     plumbing as decode_features); mp4.mp4_probe does the box-tree
-    walk, frame DECODE stays the documented codec boundary
-    (mp4.mp4_decode_frames raises). Non-MP4 or malformed payloads
+    walk; frame DECODE is out of scope (no video codec in the
+    package). Non-MP4 or malformed payloads
     land in `err` rather than killing the batch -- at corpus scale a
     triage scan must classify bad files, not crash on them."""
     from mapreduce_implementation_grpc_spark.multimodal.mp4 import mp4_probe

@@ -218,29 +218,6 @@ def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
     return samples.reshape(-1, channels), rate
 
 
-def wav_encode(samples: np.ndarray, rate: int) -> bytes:
-    """int16 array [n] or [n, channels] + rate -> PCM WAV bytes."""
-    arr = np.asarray(samples, dtype="<i2")
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    channels = arr.shape[1]
-    data = arr.tobytes()
-    byte_rate = rate * channels * 2
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, byte_rate, channels * 2, 16)
-    riff_len = 4 + (8 + len(fmt)) + (8 + len(data))
-    return (
-        b"RIFF"
-        + struct.pack("<I", riff_len)
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-
-
 # ---------------------------------------------------------------- GIF
 #
 # Pure-stdlib animated-GIF frame decoder (GIF89a spec, public:
@@ -249,10 +226,8 @@ def wav_encode(samples: np.ndarray, rate: int) -> bytes:
 # disposal methods 0/1 (leave) / 2 (background) / 3 (previous) and
 # transparency. This closes the repo's last multimodal boundary -- a
 # real multi-frame video-style container decoded without ffmpeg
-# (VERDICT r7 "What's missing" #3 / next-round #6). The encoder
-# exists for deterministic test fixtures: it emits literal LZW codes
-# with periodic Clear codes (the classic "uncompressed GIF"
-# technique), which every conforming decoder accepts.
+# (VERDICT r7 "What's missing" #3 / next-round #6). The GIF and WAV
+# encoders that build test fixtures are in `tests/media_encoders.py`.
 
 
 def _lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> np.ndarray:
@@ -448,82 +423,6 @@ def _gif_decode_blocks(payload: bytes) -> list[np.ndarray]:
     if not frames:
         raise ValueError("GIF contains no image frames")
     return frames
-
-
-def _lzw_encode_literals(indices: np.ndarray, min_code_size: int) -> bytes:
-    """Literal-codes-only GIF LZW stream: emit each pixel index as its
-    own code and a Clear before the decoder's dictionary would force a
-    width increase, so every code stays min_code_size+1 bits. Larger
-    than real LZW, but spec-conforming and fully deterministic."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    width = min_code_size + 1
-    # after a Clear, the first literal adds no entry; each subsequent
-    # code adds one; widen happens when next_code reaches 1 << width
-    per_block = (1 << width) - (end + 1)
-    out = bytearray()
-    bitbuf = 0
-    nbits = 0
-
-    def emit(code: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(bitbuf & 0xFF)
-            bitbuf >>= 8
-            nbits -= 8
-
-    emit(clear)
-    for i, px in enumerate(indices.ravel()):
-        if i and i % per_block == 0:
-            emit(clear)
-        emit(int(px))
-    emit(end)
-    if nbits:
-        out.append(bitbuf & 0xFF)
-    return bytes(out)
-
-
-def gif_encode(frames: list[np.ndarray]) -> bytes:
-    """List of (h, w, 3) uint8 RGB frames -> animated GIF89a bytes.
-
-    Builds one global palette from the union of colors (<= 256 or
-    ValueError), writes every frame full-size with disposal 1 ("leave
-    in place"). Fixture-grade: deterministic bytes for a given input."""
-    if not frames:
-        raise ValueError("gif_encode: no frames")
-    h, w = frames[0].shape[:2]
-    stack = np.stack([np.asarray(f, dtype=np.uint8) for f in frames])
-    if stack.shape[1:] != (h, w, 3):
-        raise ValueError("gif_encode: frames must share (h, w, 3) shape")
-    flat = stack.reshape(-1, 3)
-    palette, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(palette) > 256:
-        raise ValueError(f"gif_encode: {len(palette)} colors > 256")
-    # palette size must be a power of two >= 2
-    bits = max(1, int(len(palette) - 1).bit_length())
-    table = np.zeros((1 << bits, 3), dtype=np.uint8)
-    table[: len(palette)] = palette
-    min_code_size = max(2, bits)
-    indices = inverse.astype(np.uint8).reshape(len(frames), h, w)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += table.tobytes()
-    for f in range(len(frames)):
-        # graphic control: disposal 1, no transparency
-        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0x04, 4, 0) + b"\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-        out.append(min_code_size)
-        lzw = _lzw_encode_literals(indices[f], min_code_size)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)
 
 
 # ------------------------------------------------- feature extraction

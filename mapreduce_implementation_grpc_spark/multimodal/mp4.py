@@ -4,10 +4,9 @@ core -- CODEC work needs ffmpeg; the CONTAINER is a plain box tree
 (ISO/IEC 14496-12, public spec) and parsing it covers the metadata
 half of what a training-data pipeline does with video columns:
 modality routing, duration/resolution/codec filters, sample-count
-and bitrate stats, corrupt-file triage. Frame DECODE remains a
-documented NotImplementedError boundary (H.264/H.265 entropy
-decoding is out of scope by design, unlike the baseline-JPEG case
-where the whole codec was tractable).
+and bitrate stats, corrupt-file triage. Frame DECODE is out of
+scope: the package has no H.264/H.265 decoder (unlike the
+baseline-JPEG case, where the whole codec was tractable).
 
 - mp4_probe(payload) -> dict: box-tree walk. ftyp brand; mvhd
   movie timescale/duration (v0 and v1); per trak: tkhd track id +
@@ -212,17 +211,6 @@ def mp4_probe(payload: bytes) -> dict:
         raise ValueError("MP4 stream has no moov box")
     out["n_tracks"] = len(out["tracks"])
     return out
-
-
-def mp4_decode_frames(payload: bytes):
-    """Documented boundary: decoding H.264/H.265/AV1 samples needs a
-    real codec stack (ffmpeg-class, absent from this container by
-    design). The container METADATA path above is fully implemented;
-    only pixel reconstruction is out of scope."""
-    raise NotImplementedError(
-        "MP4 frame decode requires an external video codec; "
-        "use mp4_probe for container metadata"
-    )
 
 
 # ---------------------------------------------------------------- writer

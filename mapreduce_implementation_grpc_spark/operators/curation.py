@@ -332,21 +332,6 @@ def shard_manifest(docs: DataFrame) -> DataFrame:
     )
 
 
-def write_training_shards(
-    docs: DataFrame, path: str, n_shards: int = 8
-) -> None:
-    """Write the corpus as n_shards range-partitioned, internally
-    doc_id-sorted parquet files -- the layout downstream training
-    loaders want (contiguous id ranges, sorted within file, parquet
-    min/max footer stats enabling range pruning on read)."""
-    (
-        docs.repartitionByRange(n_shards, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def duplicate_spans(docs: DataFrame) -> DataFrame:
     """Exact-substring duplicate spans (the distributed shape of Lee
     et al., "Deduplicating Training Data Makes Language Models

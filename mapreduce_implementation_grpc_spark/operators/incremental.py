@@ -4,20 +4,17 @@ The reference engine reprocesses its whole input every run
 (greeter_client.cc:298-314 re-reads the full HDFS file); a real
 100 TB pipeline instead ingests a NEW batch each day and needs to
 dedup it against the EXISTING corpus without re-shuffling the
-corpus' text. These operators express that incremental contract:
+corpus' text. `incremental_dedup_exact` expresses that incremental
+contract: new docs whose content fingerprint does not already exist
+in the corpus (left-anti join on md5). The corpus side is reduced to
+its distinct 128-bit fingerprints before the join -- at scale that
+fingerprint set is what you'd persist between runs (it is ~32
+bytes/doc, re-derivable, and the join key is uniformly distributed
+so the anti-join never skews).
 
-- `incremental_dedup_exact`: new docs whose content fingerprint does
-  not already exist in the corpus (left-anti join on md5). The
-  corpus side is reduced to its distinct 128-bit fingerprints before
-  the join -- at scale that fingerprint set is what you'd persist
-  between runs (it is ~32 bytes/doc, re-derivable, and the join key
-  is uniformly distributed so the anti-join never skews).
-- `incremental_dedup_report`: per-batch summary (kept / dropped /
-  total) -- the monitoring row a daily ingest job emits.
-
-Both are pure DataFrame plans: one shuffle on the fingerprint for
-the anti-join (or a broadcast if the batch is small -- AQE picks),
-zero Python.
+A pure DataFrame plan: one shuffle on the fingerprint for the
+anti-join (or a broadcast if the batch is small -- AQE picks), zero
+Python.
 """
 
 from __future__ import annotations
@@ -45,20 +42,3 @@ def incremental_dedup_exact(new_docs: DataFrame, corpus_docs: DataFrame) -> Data
     new_fp = _fingerprints(new_docs, TEXT_COL)
     corpus_fp = _fingerprints(corpus_docs, TEXT_COL).select("fp_md5").distinct()
     return new_fp.join(corpus_fp, "fp_md5", "left_anti").select("doc_id", "fp_md5")
-
-
-def incremental_dedup_report(new_docs: DataFrame, corpus_docs: DataFrame) -> DataFrame:
-    """One-row ingest report: batch size, novel count, duplicate
-    count. The novel side reuses `incremental_dedup_exact`; the two
-    counts are tiny aggregates."""
-    novel = incremental_dedup_exact(new_docs, corpus_docs)
-    n_new = new_docs.select(F.count("*").alias("n_batch"))
-    n_novel = novel.select(F.count("*").alias("n_novel"))
-    return (
-        n_new.crossJoin(n_novel)
-        .select(
-            "n_batch",
-            "n_novel",
-            (F.col("n_batch") - F.col("n_novel")).alias("n_dup"),
-        )
-    )

@@ -100,17 +100,6 @@ def _purchase_graph_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def purchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetrized edge list [src, dst, d(egree of src)] with the
-    presentation string labels -- a relabeled view over the long-keyed
-    builder the iterations actually shuffle (see module docstring)."""
-    return _purchase_graph_keys(spark, sf_dir).select(
-        _label(F.col("src")).alias("src"),
-        _label(F.col("dst")).alias("dst"),
-        "d",
-    )
-
-
 def pagerank(
     spark: SparkSession,
     sf_dir: str,

@@ -32,10 +32,7 @@ metrics are DuckDB-hash-checkable:
 
 Scale: one stats aggregate (4 numbers, broadcast), then a map-only
 bin/interleave projection -- no shuffle until the consumer's own
-groupBy or the writer's range partitioning. The sort in
-`write_zordered` is `repartitionByRange(z)`: Spark's range
-partitioner samples z to build balanced contiguous ranges, the
-distributed form of the reference's hand-scanned newline splits.
+groupBy. The module measures layouts; it writes none.
 """
 
 from __future__ import annotations
@@ -179,9 +176,9 @@ def _hilbert_level_sql(i: int, s: int, n: int) -> tuple[str, str, str]:
     return x_sql, y_sql, d_sql
 
 
-def with_hilbert(df: DataFrame, x: str = "bx", y: str = "bt", out: str = "h") -> DataFrame:
-    """Append the Hilbert curve index of integer bin ranks (`x`, `y`)
-    in [0, 2^BITS) as `out`. Unlike the Morton interleave (a single
+def with_hilbert(df: DataFrame) -> DataFrame:
+    """Append the Hilbert curve index of the integer bin ranks `bx`,
+    `bt` in [0, 2^BITS) as `h`. Unlike the Morton interleave (a single
     flat expression), the Hilbert recurrence rotates state between
     levels, so it is unrolled as a CHAIN of named columns (hx1..hd8,
     dropped at the end) -- each level references the previous by
@@ -190,8 +187,8 @@ def with_hilbert(df: DataFrame, x: str = "bx", y: str = "bt", out: str = "h") ->
     projection pipeline: no shuffle, stays in whole-stage codegen."""
     n = 1 << BITS
     cur = (
-        df.withColumn("hx0", F.col(x))
-        .withColumn("hy0", F.col(y))
+        df.withColumn("hx0", F.col("bx"))
+        .withColumn("hy0", F.col("bt"))
         .withColumn("hd0", F.lit(0).cast("long"))
     )
     for i in range(1, BITS + 1):
@@ -207,7 +204,7 @@ def with_hilbert(df: DataFrame, x: str = "bx", y: str = "bt", out: str = "h") ->
         for i in range(BITS + 1)
         for c in (f"hx{i}", f"hy{i}", f"hd{i}")
     ]
-    return cur.withColumn(out, F.col(f"hd{BITS}")).drop(*drop)
+    return cur.withColumn("h", F.col(f"hd{BITS}")).drop(*drop)
 
 
 def hilbert_ctes_sql(base: str) -> str:
@@ -327,54 +324,3 @@ def curve_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return stats("h", "hilbert").unionByName(stats("z", "zorder"))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: str,
-    y: str,
-    curve: str = "morton",
-) -> None:
-    """Write `df` as parquet laid out along a space-filling curve of
-    integer columns (`x`, `y`): bin both dimensions, compute the
-    curve index, range-partition on it (contiguous curve ranges ->
-    files whose footer min/max cover bounded rectangles in BOTH
-    dimensions), sort within partitions so row groups inherit the
-    same locality.
-
-    curve="morton" (default) interleaves bits -- one flat expression.
-    curve="hilbert" uses the xy2d recurrence (with_hilbert): the
-    measured successor-locality win (curve_locality_stats: 28428 vs
-    43562 total successor span at sf0.1) is thereby available at the
-    WRITE path, while file-level skipping spans tie at aligned
-    power-of-two chunks (hilbert_skipping_summary pins the tie).
-    Both variants are map-only up to the single range shuffle."""
-    if curve not in ("morton", "hilbert"):
-        raise ValueError(f"write_zordered: unknown curve {curve!r}")
-    stats = df.agg(
-        F.min(x).alias("lo_x"),
-        F.max(x).alias("hi_x"),
-        F.min(y).alias("lo_y"),
-        F.max(y).alias("hi_y"),
-    )
-    bx = F.expr(f"(({x} - lo_x) * {1 << BITS}) div (hi_x - lo_x + 1)")
-    by = F.expr(f"(({y} - lo_y) * {1 << BITS}) div (hi_y - lo_y + 1)")
-    binned = (
-        df.crossJoin(F.broadcast(stats))
-        .withColumn("_bx", bx.cast("long"))
-        .withColumn("_by", by.cast("long"))
-        .drop("lo_x", "hi_x", "lo_y", "hi_y")
-    )
-    if curve == "morton":
-        keyed = binned.withColumn("_z", morton_col(F.col("_bx"), F.col("_by")))
-    else:
-        keyed = with_hilbert(binned, x="_bx", y="_by", out="_z")
-    (
-        keyed.drop("_bx", "_by")
-        .repartitionByRange(32, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -6,12 +6,11 @@ engine exists for.
       -> near-dup removal   (MinHash clusters, keep cluster canonical)
       -> quality filter     (composite score threshold)
       -> annotate           (token counts, fingerprint, language)
-      -> partitioned parquet sink (by lang)
 
 Every stage is one of the engine's tested operators; the composition
 itself adds no new semantics -- which is the point: curation at
-100 TB is exactly these five shuffles, nothing more. Returns the
-curated DataFrame; `run_curation` also writes the partitioned sink.
+100 TB is exactly these shuffles, nothing more. Returns the curated
+DataFrame; the caller chooses the sink.
 """
 
 from __future__ import annotations
@@ -31,11 +30,7 @@ from ..sources.catalog import load_table
 MIN_QUALITY = 0.5
 
 
-def curate_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    min_quality: float = MIN_QUALITY,
-) -> DataFrame:
+def curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
 
     # 1. exact dedup: keep the canonical (min doc_id) of each
@@ -78,16 +73,8 @@ def curate_documents(
             bpe_like_token_count_col("text", toks=toks).alias("n_bpe_tokens"),
             F.md5(normalized_col("text")).alias("fingerprint"),
         )
-        .filter(F.col("quality") >= min_quality)
+        .filter(F.col("quality") >= MIN_QUALITY)
     )
-
-
-def run_curation(
-    spark: SparkSession, sf_dir: str, out_dir: str, min_quality: float = MIN_QUALITY
-) -> DataFrame:
-    curated = curate_documents(spark, sf_dir, min_quality)
-    curated.write.mode("overwrite").partitionBy("lang").parquet(out_dir)
-    return spark.read.parquet(out_dir)
 
 
 def select_pretraining_corpus(

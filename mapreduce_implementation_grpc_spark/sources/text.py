@@ -34,27 +34,6 @@ def read_text_corpus(spark: SparkSession, path: str, min_partitions: int | None 
     return df
 
 
-def read_csv_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """CSV source with explicit schema (schema inference is a full
-    extra pass over the data -- never acceptable at 100 TB; callers
-    pass the schema)."""
-    reader = spark.read.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "false")
-    return reader.csv(path)
-
-
-def read_jsonl_table(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Newline-delimited JSON source with explicit schema (same
-    no-inference rule as CSV)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's standard corpus: documents.text as one line per doc.
 
@@ -77,9 +56,3 @@ def task_id_col(key: Column) -> Column:
 
 def with_task_id(df: DataFrame) -> DataFrame:
     return df.withColumn("task_id", task_id_col(F.col("doc_id")))
-
-
-def read_orc_table(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar ORC scan: filter pushdown + column pruning apply as
-    with parquet (plan-shape asserted in tests/test_sources_sinks)."""
-    return spark.read.orc(path)

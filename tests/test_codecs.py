@@ -22,8 +22,8 @@ from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     real_decode_features,
     sniff,
     wav_decode,
-    wav_encode,
 )
+from tests.media_encoders import wav_encode
 
 
 def _rng(seed=7):

@@ -1,5 +1,5 @@
 """Curation operators (decontamination, repetition filters, PII
-redaction, mixture sampling, shard export): exact crafted-corpus
+redaction, mixture sampling, shard manifest): exact crafted-corpus
 properties + oracle parity on driver testdata."""
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from mapreduce_implementation_grpc_spark.operators.curation import (
     pii_redact,
     repetition_stats,
     shard_manifest,
-    write_training_shards,
 )
 
 
@@ -167,28 +166,6 @@ def test_shard_manifest_partitions_id_space(spark, sf_check):
     # contiguous, non-overlapping id ranges
     for a, b in zip(rows, rows[1:]):
         assert a.max_doc_id < b.min_doc_id
-
-
-def test_write_training_shards_sorted_ranges(spark, sf_smoke, tmp_path):
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, n_shards=4)
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    # each physical file holds a contiguous doc_id range, sorted within
-    import glob
-
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert len(files) == 4
-    ranges = []
-    for f in files:
-        ids = [r.doc_id for r in spark.read.parquet(f).collect()]
-        assert ids == sorted(ids)
-        if ids:
-            ranges.append((min(ids), max(ids)))
-    ranges.sort()
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi < lo
 
 
 # ---------------------------------------------------------------------------

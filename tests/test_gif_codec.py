@@ -1,6 +1,6 @@
 """GIF frame decoder (the last multimodal boundary, VERDICT r7 #6):
 pure-stdlib LZW + frame composition, fixture GIFs built by the
-repo's own literal-code encoder, plus the Spark mapInPandas frame
+literal-code encoder in tests/media_encoders.py, plus the Spark mapInPandas frame
 pipeline and the phash-dedup integration.
 
 No oracle: the domain is binary (DuckDB has no GIF surface), so the
@@ -15,12 +15,11 @@ import pytest
 
 from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     _lzw_decode,
-    _lzw_encode_literals,
     gif_decode,
-    gif_encode,
     real_decode_features,
     sniff,
 )
+from tests.media_encoders import _lzw_encode_literals, gif_encode
 
 
 def test_lzw_hand_vector():

@@ -13,10 +13,7 @@ from mapreduce_implementation_grpc_spark.functions.indexing import (
     inverted_index,
     top_terms_per_group,
 )
-from mapreduce_implementation_grpc_spark.operators.incremental import (
-    incremental_dedup_exact,
-    incremental_dedup_report,
-)
+from mapreduce_implementation_grpc_spark.operators.incremental import incremental_dedup_exact
 
 
 def _docs(spark, rows):
@@ -107,8 +104,6 @@ def test_incremental_dedup_exact_and_report(spark):
     )
     novel = incremental_dedup_exact(new, corpus)
     assert [r["doc_id"] for r in novel.collect()] == [11]
-    rep = incremental_dedup_report(new, corpus).collect()[0]
-    assert (rep["n_batch"], rep["n_novel"], rep["n_dup"]) == (3, 1, 2)
 
 
 def test_incremental_dedup_partition_invariant(spark):

@@ -20,10 +20,8 @@ from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     real_decode_features,
     sniff,
 )
-from mapreduce_implementation_grpc_spark.multimodal.jpeg import (
-    jpeg_decode,
-    jpeg_encode,
-)
+from mapreduce_implementation_grpc_spark.multimodal.jpeg import jpeg_decode
+from tests.media_encoders import jpeg_encode
 
 
 def _smooth_rgb(h: int = 40, w: int = 56) -> np.ndarray:

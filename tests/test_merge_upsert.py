@@ -1,90 +1,8 @@
-"""merge_upsert: bucketed copy-on-write MERGE semantics.
-
-Last-write-wins correctness vs a driver-side dict oracle over a
-random batch sequence, physical untouched-bucket stability (the COW
-promise), and byte-level replay idempotence.
-"""
+"""snapshot_diff: keyed change capture between two table versions
+(insert / delete / update, null-safe), on crafted rows and against
+its DuckDB oracle."""
 
 from __future__ import annotations
-
-import glob
-import random
-
-from pyspark.sql import functions as F
-
-from mapreduce_implementation_grpc_spark.sources.sinks import merge_upsert
-
-
-def _table(spark, path):
-    return {
-        r.k: (r.v, r.seq)
-        for r in spark.read.parquet(path).select("k", "v", "seq").collect()
-    }
-
-
-def test_merge_upsert_lww_matches_dict_oracle(spark, tmp_path):
-    path = str(tmp_path / "t")
-    rng = random.Random(7)
-    oracle: dict[int, tuple[str, int]] = {}
-    seq = 0
-    for _ in range(4):
-        batch = []
-        for _ in range(rng.randint(3, 12)):
-            k = rng.randint(0, 20)
-            seq += 1
-            batch.append((k, f"v{seq}", seq))
-        # within-batch collisions resolve by seq (order_col) descending
-        for k, v, s in batch:
-            best = oracle.get(k)
-            if best is None or s > best[1]:
-                oracle[k] = (v, s)
-        df = spark.createDataFrame(batch, "k long, v string, seq long")
-        merge_upsert(spark, path, df, "k", order_col="seq", n_buckets=8)
-    assert _table(spark, path) == oracle
-
-
-def test_merge_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [(k, "a", 1) for k in range(64)], "k long, v string, seq long"
-    )
-    merge_upsert(spark, path, base, "k", order_col="seq", n_buckets=8)
-    files_before = {
-        b: sorted(glob.glob(f"{path}/_bkt={b}/*.parquet")) for b in range(8)
-    }
-    # one single-key update touches exactly one bucket
-    upd = spark.createDataFrame([(5, "b", 2)], "k long, v string, seq long")
-    merge_upsert(spark, path, upd, "k", order_col="seq", n_buckets=8)
-    hot = upd.select(
-        F.pmod(F.xxhash64(F.col("k")), F.lit(8)).cast("int").alias("b")
-    ).collect()[0].b
-    for b in range(8):
-        after = sorted(glob.glob(f"{path}/_bkt={b}/*.parquet"))
-        if b == hot:
-            assert after != files_before[b]
-        else:
-            assert after == files_before[b]
-    assert _table(spark, path)[5] == ("b", 2)
-
-
-def test_merge_upsert_replay_is_idempotent(spark, tmp_path):
-    path = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 2)], "k long, v string, seq long"
-    )
-    b2 = spark.createDataFrame(
-        [(2, "c", 3), (3, "d", 4)], "k long, v string, seq long"
-    )
-    merge_upsert(spark, path, b1, "k", order_col="seq")
-    merge_upsert(spark, path, b2, "k", order_col="seq")
-    state = _table(spark, path)
-    # at-least-once redelivery of the LAST batch converges
-    merge_upsert(spark, path, b2, "k", order_col="seq")
-    assert _table(spark, path) == state == {
-        1: ("a", 1),
-        2: ("c", 3),
-        3: ("d", 4),
-    }
 
 
 def test_snapshot_diff_semantics(spark):

@@ -6,10 +6,22 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.operators.pagerank import (
+    _label,
+    _purchase_graph_keys,
     pagerank,
-    purchase_graph,
 )
 from mapreduce_implementation_grpc_spark.registry import QUERIES
+
+
+def purchase_graph(spark, sf_dir):
+    """Symmetrized edge list [src, dst, d(egree of src)] with the
+    presentation string labels -- a relabeled view over the long-keyed
+    builder the iterations actually shuffle."""
+    return _purchase_graph_keys(spark, sf_dir).select(
+        _label(F.col("src")).alias("src"),
+        _label(F.col("dst")).alias("dst"),
+        "d",
+    )
 
 
 def test_rank_lower_bound_and_node_count(spark, sf_smoke):

@@ -1,17 +1,13 @@
-"""Curation pipeline: end-to-end behavior on crafted corpora + the
-partitioned sink round trip + grouped-map trend fit."""
+"""Curation pipeline: end-to-end behavior on crafted corpora +
+grouped-map trend fit."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark import registry
-from mapreduce_implementation_grpc_spark.plans.pipeline import (
-    curate_documents,
-    run_curation,
-)
+from mapreduce_implementation_grpc_spark.plans.pipeline import curate_documents
 
 GOOD = (
     "the quick analysis of a large spark table shows that partial aggregation is "
@@ -33,7 +29,7 @@ def corpus(spark):
     return rows
 
 
-def _curate_frame(spark, corpus, tmp_path, min_quality=0.5):
+def _curate_frame(spark, corpus, tmp_path):
     docs = spark.createDataFrame(corpus)
     path = str(tmp_path / "docs_sf")
     docs.write.mode("overwrite").parquet(f"{path}/documents.parquet")
@@ -42,23 +38,13 @@ def _curate_frame(spark, corpus, tmp_path, min_quality=0.5):
 
 def test_curation_dedups_and_filters(spark, corpus, tmp_path):
     path = _curate_frame(spark, corpus, tmp_path)
-    out = curate_documents(spark, path, min_quality=0.5)
+    out = curate_documents(spark, path)
     kept = {r.doc_id: r for r in out.collect()}
     assert 1 in kept           # canonical of the exact-dup group
     assert 2 not in kept       # exact dup removed
     assert 3 not in kept       # near dup removed (cluster canonical is 1)
     assert 4 not in kept       # junk fails the quality gate
     assert kept[1].n_bpe_tokens > 0 and len(kept[1].fingerprint) == 32
-
-
-def test_curation_sink_roundtrip_partitioned(spark, corpus, tmp_path):
-    src = _curate_frame(spark, corpus, tmp_path)
-    out_dir = str(tmp_path / "curated")
-    back = run_curation(spark, src, out_dir, min_quality=0.0)
-    assert back.count() == curate_documents(spark, src, min_quality=0.0).count()
-    # lang partition pruning works on the sink output
-    plan = back.filter(F.col("lang") == "en")._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan
 
 
 def test_events_type_trend(spark, sf_check):

@@ -1,6 +1,7 @@
-"""Settable-value lints: a defaulted parameter needs a caller that
-passes another value. A knob with one value in use is a constant.
-AST only; no Spark.
+"""Settable-value and reachability lints: a defaulted parameter needs
+a caller that passes another value, and a package def needs a caller
+outside the tests. A knob with one value in use is a constant; code
+that only tests run is a test fixture or dead. AST only; no Spark.
 
 1. Plan switches. Every bool-defaulted parameter of a public function
    under ``operators/`` has a caller in the package that passes the
@@ -31,8 +32,19 @@ AST only; no Spark.
    ``multimodal/binary_ops.decode_features(real_codec)`` is one (tests
    run the real PNG/JPEG/GIF/WAV decoders through it).
 
+3. Every package def is reached. Each module-level def or class of
+   the package is reached from a root by name: every module-level
+   statement of the package that is not a def or class (``QUERIES``,
+   ``ORACLES``, ``__all__``, constants, ``q_* = ...`` aliases) and
+   every other caller source except ``tests/`` (``tools/``,
+   ``bench.py``, ``perfbench/``, ``__spark_entry__.py``). A reached
+   def reaches the names its body, decorators and defaults use. The
+   rule is in `unreached_defs`. Code that only tests run belongs
+   under ``tests/`` (``tests/media_encoders.py`` builds the codec
+   fixtures) or goes, together with the tests that exist only for it.
+
 Callees are matched by function name across all sources, so a name
-clash can only keep a parameter, never flag one.
+clash can only keep a parameter or a def, never flag one.
 """
 
 from __future__ import annotations
@@ -453,3 +465,108 @@ def test_every_defaulted_parameter_is_set_by_some_caller():
     sources, scope = _callers()
     never = never_set_parameters(sources, scope)
     assert never == [], f"{len(never)} never-set parameters: {never}"
+
+
+# ---------------------------------------------------------------------------
+# Every package def is reached from a query, the bench, the CLI or a tool.
+
+
+def _names_used(node: ast.AST) -> set[str]:
+    """Every name `node` uses: ``Name`` ids, attribute names and
+    identifier-shaped string constants (``__all__`` entries, names
+    looked up by string)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
+            out.add(n.value)
+    return out
+
+
+def unreached_defs(sources: dict[str, str], package: str) -> list[str]:
+    """'module.name' for every module-level def or class of a `package`
+    module that no root reaches. The roots are the module-level
+    statements of the package that are not defs or classes, and every
+    source outside the package and outside ``tests``. A reached name
+    reaches every package def of that name (through ``import ... as``
+    aliases), and a reached def reaches every name its node uses
+    (body, decorators, defaults). Matching is by name, so a name clash
+    can only keep a def."""
+    defs: dict[str, list[str]] = {}
+    uses: dict[str, set[str]] = {}
+    aliases: dict[str, set[str]] = {}
+    todo: set[str] = set()
+    for mod, src in sources.items():
+        tree = ast.parse(src)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    if a.asname and a.asname != a.name:
+                        aliases.setdefault(a.asname, set()).add(a.name)
+        if mod.split(".")[0] == "tests":
+            continue
+        if not mod.startswith(f"{package}."):
+            todo |= _names_used(tree)
+            continue
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append(mod)
+                uses.setdefault(stmt.name, set()).update(_names_used(stmt))
+            else:
+                todo |= _names_used(stmt)
+    reached: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo |= aliases.get(name, set()) | uses.get(name, set())
+    return sorted(
+        f"{mod}.{name}" for name, mods in defs.items() if name not in reached
+        for mod in mods
+    )
+
+
+def test_reachability_detector_self_test():
+    lib = (
+        "__all__ = ['exported']\n"
+        "def q_listed(spark, sf_dir):\n"
+        "    return helper(spark)\n"
+        "def helper(spark): ...\n"
+        "def for_constant(): ...\n"
+        "LIMIT = for_constant()\n"
+        "def exported(): ...\n"
+        "def timed(fn): ...\n"
+        "@timed\n"
+        "def q_decorated(spark, sf_dir): ...\n"
+        "def tool_only(): ...\n"
+        "def via_alias(): ...\n"
+        "def fixture_only(): ...\n"
+        "class TestOnly: ...\n"
+        "def ping(): return pong()\n"
+        "def pong(): return ping()\n"
+    )
+    table = "QUERIES = {'listed': lib.q_listed, 'decorated': lib.q_decorated}\n"
+    tool = (
+        "from pkg.lib import via_alias as _va\n"
+        "lib.tool_only()\n"
+        "_va()\n"
+    )
+    test = "lib.fixture_only(); lib.TestOnly(); lib.ping()\n"
+    unreached = unreached_defs(
+        {"pkg.lib": lib, "pkg.table": table, "tools.t": tool, "tests.t": test}, "pkg"
+    )
+    assert unreached == [
+        "pkg.lib.TestOnly",
+        "pkg.lib.fixture_only",
+        "pkg.lib.ping",
+        "pkg.lib.pong",
+    ]
+
+
+def test_every_package_def_is_reached_outside_the_tests():
+    sources, _ = _callers()
+    unreached = unreached_defs(sources, PKG.name)
+    assert unreached == [], f"{len(unreached)} defs only tests reach: {unreached}"

@@ -132,22 +132,31 @@ def test_built_package_includes_registry(tmp_path):
 
 # Repo-relative paths to the recorded-evidence areas: a script or JSON
 # ledger under tools/, a plan-dump round directory, or an import of a
-# tools module.
+# tools module. Package module paths (`sources/sinks.py`) resolve under
+# the package.
 _PATH_REF = re.compile(r"\b(tools/\w+\.(?:py|json)|plans/r\d+)\b")
 _TOOLS_IMPORT = re.compile(r"^\s*(?:from|import)\s+(tools\.\w+)", re.M)
+_PKG_PATH_REF = re.compile(
+    r"\b((?:operators|functions|multimodal|sources|plans|streaming|registry)/\w+\.py)\b"
+)
 
 
 def _dangling_paths(text: str) -> list[str]:
     refs = set(_PATH_REF.findall(text))
     refs |= {m.replace(".", "/") + ".py" for m in _TOOLS_IMPORT.findall(text)}
-    return sorted(r for r in refs if not os.path.exists(os.path.join(REPO, r)))
+    dangling = {r for r in refs if not os.path.exists(os.path.join(REPO, r))}
+    dangling |= {
+        r for r in _PKG_PATH_REF.findall(text)
+        if not os.path.exists(os.path.join(REPO, PKG, r))
+    }
+    return sorted(dangling)
 
 
 def test_cited_tools_and_plan_paths_exist():
-    """A docstring or comment that cites a deleted probe script or plan
-    dump sends the reader to nothing; an import of one fails only when
-    that one test runs."""
-    entries = [PKG, *CALLERS, "README.md", "PARITY.md"]
+    """A docstring or comment that cites a deleted probe script, plan
+    dump or package module sends the reader to nothing; an import of a
+    deleted tools module fails only when that one test runs."""
+    entries = [PKG, *CALLERS, "README.md", "PARITY.md", "SCALING.md"]
     dangling = [
         f"{os.path.relpath(path, REPO)}: {ref}"
         for path in _caller_files(entries, (".py", ".md"))
@@ -162,13 +171,16 @@ def test_dangling_path_detector_catches_planted_paths():
     missing_ledger = "tools/" + "no_such_ledger.json"
     missing_plans = "plans/" + "r99"
     missing_module = "tools." + "no_such_module"
+    missing_operator = "operators/" + "no_such_operator.py"
     text = (
         f"see {missing_script} and {missing_ledger}; dumps in "
         f"{missing_plans}/q_after.txt\n"
         f"    import {missing_module} as m\n"
         "numbers from tools/check_correctness.py and tools/scale_probe.json\n"
         "from tools.scale_probe_data import x\n"
+        f"the plan lives in {missing_operator}, its sink in sources/sinks.py\n"
     )
     assert _dangling_paths(text) == sorted(
-        [missing_ledger, missing_script, "tools/" + "no_such_module.py", missing_plans]
+        [missing_ledger, missing_script, "tools/" + "no_such_module.py",
+         missing_plans, missing_operator]
     )

@@ -60,55 +60,6 @@ def test_task_id_mirrors_reference_split(spark):
     assert got == {i: i % 4 for i in range(8)}
 
 
-def test_csv_and_jsonl_sources(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from mapreduce_implementation_grpc_spark.sources.text import (
-        read_csv_table,
-        read_jsonl_table,
-    )
-
-    schema = StructType(
-        [StructField("id", LongType()), StructField("name", StringType())]
-    )
-    csv_dir = tmp_path / "csv"
-    csv_dir.mkdir()
-    (csv_dir / "a.csv").write_text("id,name\n1,alpha\n2,beta\n")
-    got = sorted(map(tuple, read_csv_table(spark, str(csv_dir), schema).collect()))
-    assert got == [(1, "alpha"), (2, "beta")]
-
-    jl_dir = tmp_path / "jl"
-    jl_dir.mkdir()
-    (jl_dir / "a.jsonl").write_text('{"id": 3, "name": "gamma"}\n{"id": 4, "name": null}\n')
-    got2 = sorted(map(tuple, read_jsonl_table(spark, str(jl_dir), schema).collect()))
-    assert got2 == [(3, "gamma"), (4, None)]
-
-
-def test_orc_roundtrip_partitioned_and_pruned(spark, tmp_path, sf_smoke):
-    """ORC sink/scan round trip: partitioned write, identical rows
-    back, and the scan plan keeps column pruning + filter pushdown
-    (the same contract the parquet scans are linted for)."""
-    from mapreduce_implementation_grpc_spark.sources.sinks import write_orc
-    from mapreduce_implementation_grpc_spark.sources.text import read_orc_table
-    from mapreduce_implementation_grpc_spark.sources.catalog import load_table
-
-    docs = load_table(spark, sf_smoke, "documents").select("doc_id", "lang", "n_chars")
-    out = str(tmp_path / "docs_orc")
-    write_orc(docs, out, partition_by=["lang"])
-
-    back = read_orc_table(spark, out)
-    want = sorted(map(tuple, docs.collect()))
-    got = sorted(
-        (r["doc_id"], r["lang"], r["n_chars"]) for r in back.collect()
-    )
-    assert got == want
-
-    pruned = back.filter(back["n_chars"] > 100).select("doc_id")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "n_chars" in plan and "text" not in plan
-    assert "PushedFilters: [" in plan or "pushedFilters" in plan.lower()
-
-
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """A 100 TB table accretes columns over time: older files lack
     them. mergeSchema reads the union schema with nulls for the
@@ -163,76 +114,3 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, tmp_
     assert back == {1, 5, 3, 4}
     # and the session config was restored
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-
-
-def test_compact_parquet_merges_small_files_losslessly(spark, tmp_path):
-    """Five per-batch appends -> many tiny files; compaction folds
-    them to the target count with identical rows."""
-    from mapreduce_implementation_grpc_spark.sources.sinks import compact_parquet
-
-    out = str(tmp_path / "many_small")
-    for b in range(5):
-        spark.createDataFrame(
-            [(b * 10 + i, f"doc {b}-{i}") for i in range(4)], ["doc_id", "text"]
-        ).coalesce(1).write.mode("append").parquet(out)
-    import glob
-    before_files = glob.glob(f"{out}/*.parquet")
-    assert len(before_files) >= 5
-    before_rows = sorted(map(tuple, spark.read.parquet(out).collect()))
-
-    n = compact_parquet(spark, out, target_file_bytes=10**9)
-    after_files = glob.glob(f"{out}/*.parquet")
-    assert n == 1 and len(after_files) == 1
-    assert sorted(map(tuple, spark.read.parquet(out).collect())) == before_rows
-
-
-def test_compact_parquet_refuses_partitioned_tables(spark, tmp_path):
-    """A naive rewrite would flatten dir=value layouts -- the helper
-    must refuse loudly instead."""
-    import pytest
-
-    from mapreduce_implementation_grpc_spark.sources.sinks import (
-        compact_parquet,
-        write_parquet,
-    )
-
-    out = str(tmp_path / "parted")
-    write_parquet(
-        spark.createDataFrame([(1, "en"), (2, "fr")], ["id", "lang"]),
-        out,
-        partition_by=["lang"],
-    )
-    with pytest.raises(ValueError, match="partitioned table"):
-        compact_parquet(spark, out)
-
-
-def test_compact_parquet_crash_safe_swap(spark, tmp_path):
-    """The swap is rename-aside -> rename-in -> delete: a crash at any
-    point leaves a complete table at a known path. A stale __old dir
-    (evidence of a previous mid-swap crash) must be refused loudly
-    instead of silently deleted."""
-    import pytest
-
-    from mapreduce_implementation_grpc_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(100).repartition(8).write.parquet(path)
-    # leave a stale aside-copy from a "crashed" earlier compaction
-    stale = str(tmp_path / "t__old")
-    spark.range(5).write.parquet(stale)
-    with pytest.raises(IOError, match="crashed mid-swap"):
-        compact_parquet(spark, path)
-    # original table untouched by the refusal
-    assert spark.read.parquet(path).count() == 100
-    # after the operator clears the stale copy, compaction succeeds
-    # and no auxiliary paths remain
-    import shutil
-
-    shutil.rmtree(stale)
-    n = compact_parquet(spark, path)
-    assert n >= 1
-    assert spark.read.parquet(path).count() == 100
-    import os as _os
-
-    leftovers = [d for d in _os.listdir(tmp_path) if "__" in d]
-    assert leftovers == [], leftovers

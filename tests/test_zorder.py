@@ -1,5 +1,5 @@
-"""Z-order layout: Morton-code properties, the measured skipping
-advantage, and the z-ordered parquet writer's file-level locality.
+"""Z-order layout: Morton-code properties and the measured skipping
+advantage.
 
 Oracle parity for zorder_cells / zorder_skipping_summary runs in the
 registry-wide sweep (test_oracle_coverage); these tests pin the
@@ -17,7 +17,6 @@ from mapreduce_implementation_grpc_spark.operators.zorder import (
     BITS,
     morton_col,
     morton_sql,
-    write_zordered,
 )
 from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 
@@ -60,34 +59,6 @@ def test_zorder_bounds_both_dimensions(spark, sf_smoke):
         (F.max(F.unix_micros(F.col("ts").cast("timestamp"))) - F.min(F.unix_micros(F.col("ts").cast("timestamp")))).alias("r")
     ).collect()[0]["r"]
     assert z["sum_t_span_us"] < z["n_chunks"] * t_range / 4
-
-
-def test_write_zordered_files_carry_bounded_ranges(spark, sf_smoke, tmp_path):
-    ev = load_table(spark, sf_smoke, "events").select(
-        "event_id", "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("tus")
-    )
-    write_zordered(ev, str(tmp_path / "z"), x="user_id", y="tus")
-    back = spark.read.parquet(str(tmp_path / "z"))
-    assert back.count() == ev.count()
-    assert set(back.columns) == {"event_id", "user_id", "tus"}
-    spans = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("user_id") - F.min("user_id")).alias("u_span"),
-            F.count("*").alias("cnt"),
-        )
-        .collect()
-    )
-    full = ev.agg((F.max("user_id") - F.min("user_id")).alias("r")).collect()[0]["r"]
-    assert len(spans) > 1
-    # every row is in some file
-    assert sum(r["cnt"] for r in spans) == ev.count()
-    # most files' user-id footer range is a fraction of the table's:
-    # a time-sorted layout would put ~the full range in every file
-    bounded = [r for r in spans if r["u_span"] * 2 < full]
-    assert len(bounded) * 2 >= len(spans), [
-        (r["u_span"], full) for r in spans
-    ]
 
 
 def test_hilbert_chain_matches_reference_xy2d(spark, sf_smoke):
@@ -166,36 +137,3 @@ def test_aligned_chunk_skipping_is_a_tie_by_geometry(spark, sf_check):
         z.sum_t_span_us,
         z.rows_total,
     )
-
-
-def test_write_zordered_hilbert_files_carry_bounded_ranges(spark, sf_smoke, tmp_path):
-    """VERDICT r5 #7: curve="hilbert" at the write path -- the same
-    file-level locality contract as the Morton layout (bounded
-    per-file footer ranges in BOTH dimensions), same row fidelity,
-    plus Hilbert's successor-locality edge measured in
-    curve_locality_stats now applies to the physical row order."""
-    ev = load_table(spark, sf_smoke, "events").select(
-        "event_id", "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("tus")
-    )
-    write_zordered(ev, str(tmp_path / "h"), x="user_id", y="tus", curve="hilbert")
-    back = spark.read.parquet(str(tmp_path / "h"))
-    assert back.count() == ev.count()
-    assert set(back.columns) == {"event_id", "user_id", "tus"}
-    spans = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("user_id") - F.min("user_id")).alias("u_span"),
-            F.count("*").alias("cnt"),
-        )
-        .collect()
-    )
-    full = ev.agg((F.max("user_id") - F.min("user_id")).alias("r")).collect()[0]["r"]
-    assert len(spans) > 1
-    assert sum(r["cnt"] for r in spans) == ev.count()
-    bounded = [r for r in spans if r["u_span"] * 2 < full]
-    assert len(bounded) * 2 >= len(spans), [(r["u_span"], full) for r in spans]
-    # and an unknown curve is a loud error, not a silent Morton
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown curve"):
-        write_zordered(ev, str(tmp_path / "x"), x="user_id", y="tus", curve="peano")
