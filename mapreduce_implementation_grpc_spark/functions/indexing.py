@@ -13,8 +13,8 @@ statistic built from the same token stream), and per-group top terms
   after tokenization except stopword-like heavy hitters, which the
   df/min-count bounds drop from the OUTPUT but which still aggregate
   safely because the partial hash-agg collapses them map-side);
-- posting lists are bounded by `max_df`, so no reducer row can exceed
-  max_df ids -- the classic unbounded-posting skew (stopwords) is
+- posting lists are bounded by INDEX_MAX_DF, so no reducer row can
+  exceed INDEX_MAX_DF ids -- the classic unbounded-posting skew (stopwords) is
   excluded by construction, which is what production indexes do
   anyway (stopword posting lists are useless for retrieval);
 - PMI joins are aggregate-to-aggregate (vocab-sized, orders of
@@ -34,6 +34,9 @@ from ..operators.tokenize import tokens_col
 
 TEXT_COL = "text"
 GROUP_COL = "lang"
+INDEX_MAX_DF = 20  # inverted_index drops phrases in more docs than this
+PMI_MIN_COUNT = 5  # bigram_pmi keeps bigrams seen at least this often
+TOP_TERMS_K = 5  # top_terms_per_group's terms per group
 
 
 def _doc_tokens(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -46,12 +49,9 @@ def _doc_tokens(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-def inverted_index(
-    docs: DataFrame,
-    max_df: int = 20,
-) -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Phrase (k-token shingle) inverted index with df bounds: for
-    each phrase appearing in [2, max_df] distinct docs, the
+    each phrase appearing in [2, INDEX_MAX_DF] distinct docs, the
     document frequency and the sorted posting list (comma-joined
     string, so the gate can hash it). The same index shape that backs
     contamination lookup and phrase search over a training corpus.
@@ -59,10 +59,10 @@ def inverted_index(
     Plan: distinct (sh, doc_id) pairs from the shuffle-free flat
     shingle builder -> one hash aggregation keyed on the phrase
     building the posting list. The df bounds make every output row
-    O(max_df); phrases outside the band (hapaxes and boilerplate)
+    O(INDEX_MAX_DF); phrases outside the band (hapaxes and boilerplate)
     are dropped. At 100 TB the same plan holds: the distinct and the
     groupBy share the phrase-keyed Exchange, and no posting list
-    exceeds max_df entries."""
+    exceeds INDEX_MAX_DF entries."""
     from ..operators.dedup import shingle_rows_flat
 
     pairs = shingle_rows_flat(docs).distinct()
@@ -70,15 +70,12 @@ def inverted_index(
         F.count("*").alias("df"),
         F.concat_ws(",", F.sort_array(F.collect_list("doc_id"))).alias("postings"),
     )
-    return agg.filter((F.col("df") >= 2) & (F.col("df") <= max_df))
+    return agg.filter((F.col("df") >= 2) & (F.col("df") <= INDEX_MAX_DF))
 
 
-def bigram_pmi(
-    docs: DataFrame,
-    min_count: int = 5,
-) -> DataFrame:
+def bigram_pmi(docs: DataFrame) -> DataFrame:
     """Pointwise mutual information for adjacent-token bigrams with
-    count >= min_count:
+    count >= PMI_MIN_COUNT:
 
         pmi = ln( (c_xy * N * N) / (Nb * c_x * c_y) )
 
@@ -88,7 +85,7 @@ def bigram_pmi(
     Plan: unigram and bigram counts are two aggregations over the
     exploded token stream; the PMI join is vocab-sized x vocab-sized
     (post-aggregation), never corpus-sized, and the two scalar totals
-    are 1-row broadcasts. The min_count filter is applied to the
+    are 1-row broadcasts. The PMI_MIN_COUNT filter is applied to the
     bigram side BEFORE the joins, shrinking the join probe to the
     surviving collocations."""
     toks = docs.select(F.explode(F.array(tokens_col(normalized_col(TEXT_COL)))).alias("toks"))
@@ -113,7 +110,7 @@ def bigram_pmi(
     big = (
         grams.groupBy("w1", "w2")
         .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= PMI_MIN_COUNT)
     )
     totals = uni.agg(
         F.sum("c").cast("double").alias("n_tok_total")
@@ -147,11 +144,8 @@ def bigram_pmi(
     )
 
 
-def top_terms_per_group(
-    docs: DataFrame,
-    k: int = 5,
-) -> DataFrame:
-    """Top-k most frequent terms per group (per-language vocabulary
+def top_terms_per_group(docs: DataFrame) -> DataFrame:
+    """Top-TOP_TERMS_K most frequent terms per group (per-language vocabulary
     report), deterministic tie-break (cnt desc, word asc).
 
     Plan: one aggregation keyed on (group, word), then the top-k
@@ -166,5 +160,5 @@ def top_terms_per_group(
     w = Window.partitionBy(GROUP_COL).orderBy(F.desc("cnt"), F.asc("word"))
     return (
         counts.select(GROUP_COL, "word", "cnt", F.row_number().over(w).cast("long").alias("rn"))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= TOP_TERMS_K)
     )

@@ -3,18 +3,19 @@
 Image/audio/video payloads are opaque `binary` columns with a typed
 metadata struct; decode/feature-extraction runs as Arrow-batched
 `mapInPandas` so the Python boundary is crossed once per batch, not
-per row. Two codec paths share the identical Spark plumbing:
+per row. Each row's ``meta.modality`` picks its codec:
 
-- default (synthetic): deterministic byte-level stand-ins, used by
-  the oracle-checked registry queries (DuckDB can re-derive them);
-- ``real_codec=True``: actual format decoding via
-  ``multimodal.codecs`` — pure-stdlib PNG (zlib + numpy unfilter),
-  16-bit PCM WAV, and animated GIF (LZW + frame composition) — no
-  PIL/ffmpeg needed. Image resize re-encodes a real PNG thumbnail;
-  frame sampling decodes GIF frames to PNG thumbnails (real video
-  frame extraction) or windows the decoded PCM stream; only
-  ffmpeg-class codecs (H.264 etc.) remain out of scope in this
-  container.
+- ``"text"`` (what `with_binary_payload` attaches, and what the
+  oracle-checked registry queries read): deterministic byte-level
+  stand-ins that DuckDB can re-derive;
+- ``"png"``, ``"jpeg"``, ``"gif"``, ``"wav"``: actual format decoding
+  via ``multimodal.codecs`` and ``multimodal.jpeg`` -- pure-stdlib
+  PNG (zlib + numpy unfilter), baseline JPEG, 16-bit PCM WAV and
+  animated GIF (LZW + frame composition), no PIL/ffmpeg needed.
+  Image resize re-encodes a real PNG thumbnail; frame sampling
+  decodes GIF frames to PNG thumbnails (real video frame extraction)
+  or windows the decoded PCM stream. A media row whose bytes do not
+  sniff as its declared modality raises.
 
 At 100 TB: payloads stay columnar in parquet (binary column chunks),
 the scan prunes metadata-only queries to the metadata columns, and
@@ -38,6 +39,17 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .codecs import (
+    gif_decode,
+    png_decode,
+    png_encode,
+    png_resize_nearest,
+    real_decode_features,
+    sniff,
+    wav_decode,
+)
+from .jpeg import jpeg_decode
 
 DECODED_FEATURE_SCHEMA = StructType(
     [
@@ -89,68 +101,49 @@ FRAME_SCHEMA = StructType(
     ]
 )
 
+FRAME_EVERY_K = 4  # sample_frames keeps every 4th frame ...
+FRAME_BYTES = 16  # ... of 16-byte chunks (even: whole 16-bit PCM samples)
 
-def sample_frames(payload_df: DataFrame, every_k: int = 4, frame_bytes: int = 16,
-                  real_codec: bool = False) -> DataFrame:
-    """Frame sampling for video-like payloads: emit every k-th
-    fixed-size chunk of the payload as a 'frame' row (1 input row ->
-    N output rows -- the mapInPandas shape a real ffmpeg-based
-    sampler uses; here the chunker is the deterministic stand-in).
-    Row explosion happens executor-side per Arrow batch; nothing is
-    widened before the scan."""
-    if real_codec:
-        # Real containers, dispatched on magic bytes:
-        # - GIF: a genuine multi-frame video-style container -- decode
-        #   every frame (pure-stdlib LZW, multimodal.codecs), keep
-        #   every k-th, re-encode each kept frame as PNG. This IS
-        #   video frame extraction, minus only the ffmpeg-class
-        #   codecs this container lacks.
-        # - WAV: window the decoded PCM sample stream (the same
-        #   1-row -> N-rows shape with time standing in for frames).
-        from mapreduce_implementation_grpc_spark.multimodal.codecs import (
-            gif_decode,
-            png_encode,
-            sniff,
-            wav_decode,
-        )
 
-        def _sample_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = {"doc_id": [], "frame_idx": [], "frame": [], "n_bytes": []}
-                for doc_id, raw in zip(pdf["doc_id"], pdf["payload"]):
-                    b = bytes(raw)
-                    if sniff(b) == "gif":
-                        for idx, frame in enumerate(gif_decode(b)[::every_k]):
-                            png = png_encode(frame)
-                            out["doc_id"].append(doc_id)
-                            out["frame_idx"].append(idx)
-                            out["frame"].append(png.hex())
-                            out["n_bytes"].append(len(png))
-                        continue
-                    samples, _rate = wav_decode(b)
-                    pcm = samples.tobytes()
-                    step = max(2, frame_bytes - (frame_bytes % 2))
-                    chunks = [pcm[i:i + step] for i in range(0, len(pcm), step)]
-                    for idx, chunk in enumerate(chunks[::every_k]):
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(idx)
-                        out["frame"].append(chunk.hex())
-                        out["n_bytes"].append(len(chunk))
-                yield pd.DataFrame(out)
+def _media_bytes(modality: str, raw) -> bytes:
+    """A media row's payload, which must sniff as its declared modality."""
+    b = bytes(raw)
+    if sniff(b) != modality:
+        raise ValueError(f"payload declared {modality!r} sniffs as {sniff(b)!r}")
+    return b
 
-        return payload_df.mapInPandas(_sample_real, FRAME_SCHEMA)
+
+def _frames(modality: str, raw) -> list[bytes]:
+    """Every FRAME_EVERY_K-th frame of one payload. GIF, a real
+    multi-frame container: its decoded frames, re-encoded as PNG.
+    WAV: FRAME_BYTES windows of the decoded PCM stream (time standing
+    in for frames). Text: FRAME_BYTES chunks of the raw bytes."""
+    if modality == "text":
+        b = bytes(raw) if raw is not None else b""
+    elif modality == "gif":
+        frames = gif_decode(_media_bytes(modality, raw))[::FRAME_EVERY_K]
+        return [png_encode(frame) for frame in frames]
+    else:
+        b = wav_decode(_media_bytes(modality, raw))[0].tobytes()
+    return [b[i:i + FRAME_BYTES] for i in range(0, len(b), FRAME_BYTES)][::FRAME_EVERY_K]
+
+
+def sample_frames(payload_df: DataFrame) -> DataFrame:
+    """Frame sampling for video-like payloads (`_frames`, chosen per
+    row by meta.modality): 1 input row -> N frame rows, the
+    mapInPandas shape a real ffmpeg-based sampler uses. Row explosion
+    happens executor-side per Arrow batch; nothing is widened before
+    the scan."""
 
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame": [], "n_bytes": []}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(raw) if raw is not None else b""
-                chunks = [b[i:i + frame_bytes] for i in range(0, len(b), frame_bytes)]
-                for idx, chunk in enumerate(chunks[::every_k]):
+            for doc_id, meta, raw in zip(pdf["doc_id"], pdf["meta"], pdf["payload"]):
+                for idx, frame in enumerate(_frames(meta["modality"], raw)):
                     out["doc_id"].append(doc_id)
                     out["frame_idx"].append(idx)
-                    out["frame"].append(chunk.hex())
-                    out["n_bytes"].append(len(chunk))
+                    out["frame"].append(frame.hex())
+                    out["n_bytes"].append(len(frame))
             yield pd.DataFrame(out)
 
     return payload_df.mapInPandas(_sample, FRAME_SCHEMA)
@@ -165,100 +158,57 @@ RESIZED_SCHEMA = StructType(
     ]
 )
 
+THUMB_SIZE = 8  # resize_images' thumbs are 8x8
 
-def resize_images(payload_df: DataFrame, width: int = 8, height: int = 8,
-                  real_codec: bool = False) -> DataFrame:
-    """Image resize for image-like payloads. The deterministic
-    stand-in 'resizes' by striding the byte stream down to
-    width*height samples; a real pipeline drops PIL/opencv into the
-    same per-batch slot -- schema, batching, and partition behavior
-    are identical."""
-    if real_codec:
-        from mapreduce_implementation_grpc_spark.multimodal.codecs import (
-            png_decode,
-            png_encode,
-            png_resize_nearest,
-            sniff,
-        )
-        from mapreduce_implementation_grpc_spark.multimodal.jpeg import (
-            jpeg_decode,
-        )
 
-        def _resize_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                thumbs = []
-                for raw in pdf["payload"]:
-                    b = bytes(raw)
-                    # r9: photos arrive as JPEG; thumbs re-encode as
-                    # PNG (lossless at thumb size, single downstream
-                    # format)
-                    img = jpeg_decode(b) if sniff(b) == "jpeg" else png_decode(b)
-                    thumbs.append(
-                        png_encode(png_resize_nearest(img, width, height)).hex()
-                    )
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "width": width,
-                        "height": height,
-                        "thumb": thumbs,
-                    }
-                )
+def _thumb(modality: str, raw) -> str:
+    """Hex thumb of one payload. An image (JPEG or PNG) is decoded,
+    nearest-resized and re-encoded as PNG; text is strided down to
+    THUMB_SIZE**2 bytes."""
+    if modality == "text":
+        b = bytes(raw) if raw is not None else b""
+        target = THUMB_SIZE * THUMB_SIZE
+        return b[::max(1, len(b) // target)][:target].hex()
+    b = _media_bytes(modality, raw)
+    img = jpeg_decode(b) if modality == "jpeg" else png_decode(b)
+    return png_encode(png_resize_nearest(img, THUMB_SIZE, THUMB_SIZE)).hex()
 
-        return payload_df.mapInPandas(_resize_real, RESIZED_SCHEMA)
 
-    target = width * height
+def resize_images(payload_df: DataFrame) -> DataFrame:
+    """Image resize to THUMB_SIZE x THUMB_SIZE (`_thumb`, chosen per
+    row by meta.modality); a PIL/opencv resize drops into the same
+    per-batch slot -- schema, batching, and partition behavior are
+    identical."""
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            thumbs = []
-            for raw in pdf["payload"]:
-                b = bytes(raw) if raw is not None else b""
-                if len(b) == 0:
-                    thumbs.append("")
-                    continue
-                step = max(1, len(b) // target)
-                thumbs.append(b[::step][:target].hex())
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "thumb": thumbs,
+                    "width": THUMB_SIZE,
+                    "height": THUMB_SIZE,
+                    "thumb": [
+                        _thumb(meta["modality"], raw)
+                        for meta, raw in zip(pdf["meta"], pdf["payload"])
+                    ],
                 }
             )
 
     return payload_df.mapInPandas(_resize, RESIZED_SCHEMA)
 
 
-def decode_features(payload_df: DataFrame, real_codec: bool = False) -> DataFrame:
-    """Arrow-batched decode: binary payload -> fixed-width feature
-    vector via mapInPandas (one Python crossing per ~10k-row batch).
+def _features(modality: str, raw) -> list[float]:
+    if modality == "text":
+        return fake_decode_batch([raw])[0]
+    return real_decode_features(_media_bytes(modality, raw))
 
-    By default each payload goes through the stub decoder
-    (fake_decode_batch). real_codec=True decodes the actual PNG, JPEG,
-    GIF or WAV bytes with the pure-numpy codecs
-    (codecs.real_decode_features) into a feature vector of the same
-    shape, and raises ValueError on any other format."""
-    if real_codec:
-        from mapreduce_implementation_grpc_spark.multimodal.codecs import (
-            real_decode_features,
-        )
 
-        def _decode_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "modality": [m["modality"] for m in pdf["meta"]],
-                        "n_bytes": [m["n_bytes"] for m in pdf["meta"]],
-                        "feature": [
-                            real_decode_features(bytes(raw)) for raw in pdf["payload"]
-                        ],
-                    }
-                )
-
-        return payload_df.mapInPandas(_decode_real, DECODED_FEATURE_SCHEMA)
+def decode_features(payload_df: DataFrame) -> DataFrame:
+    """Arrow-batched decode: binary payload -> 4-float feature vector
+    via mapInPandas (one Python crossing per ~10k-row batch). A text
+    row goes through the byte-level stand-in (fake_decode_batch); a
+    PNG, JPEG, GIF or WAV row is decoded by its real codec
+    (codecs.real_decode_features)."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -267,7 +217,10 @@ def decode_features(payload_df: DataFrame, real_codec: bool = False) -> DataFram
                     "doc_id": pdf["doc_id"],
                     "modality": [m["modality"] for m in pdf["meta"]],
                     "n_bytes": [m["n_bytes"] for m in pdf["meta"]],
-                    "feature": fake_decode_batch(pdf["payload"]),
+                    "feature": [
+                        _features(m["modality"], raw)
+                        for m, raw in zip(pdf["meta"], pdf["payload"])
+                    ],
                 }
             )
 

@@ -3,9 +3,9 @@
 The container has no PIL/opencv/ffmpeg, but PNG is just DEFLATE
 (stdlib ``zlib``) plus per-row byte filters (vectorizable in numpy),
 and PCM WAV is a RIFF header plus raw samples (stdlib ``struct``).
-Implementing them here makes ``real_codec=True`` in
-``multimodal.binary_ops`` a genuinely real decode path instead of a
-NotImplementedError, with zero new dependencies.
+Implementing them here gives the PNG, GIF and WAV rows of
+``multimodal.binary_ops`` (picked per row by ``meta.modality``) a
+genuinely real decode path, with zero new dependencies.
 
 Formats are implemented from their public specifications (PNG:
 RFC 2083 / W3C PNG spec; WAV: RIFF/WAVE PCM layout). Scope is the
@@ -431,8 +431,8 @@ def _gif_decode_blocks(payload: bytes) -> list[np.ndarray]:
 def real_decode_features(payload: bytes) -> list[float]:
     """Typed 4-float feature vector from a real payload, dispatched
     on magic bytes. Mirrors the shape of
-    ``binary_ops.fake_decode_batch`` so the two codec paths are
-    drop-in interchangeable in ``decode_features``.
+    ``binary_ops.fake_decode_batch``, the stand-in ``decode_features``
+    runs on text rows.
 
     png  -> [width, height, channels, mean_pixel]
     jpeg -> [width, height, channels, mean_pixel]

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 LEFT_TS = "ts"
+RIGHT_TS = "ts"  # asof_join_nearest's right-side timestamp column
 
 
 def _micros(c: Column) -> Column:
@@ -77,12 +78,11 @@ def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
     by: str,
-    right_ts: str = "ts",
     value_cols: list[str] | None = None,
     tolerance_us: int | None = None,
 ) -> DataFrame:
     """Nearest as-of join: every left row plus the right row (same
-    `by` key) whose right_ts is CLOSEST to left_ts in either
+    `by` key) whose RIGHT_TS is CLOSEST to left_ts in either
     direction, optionally within +-tolerance_us microseconds; ties
     (one candidate exactly as far in the past as another is in the
     future) prefer the PAST row, matching the leakage bias of the
@@ -97,12 +97,12 @@ def asof_join_nearest(
     BOTH passes (side asc), so an exact-ts match is inclusive and the
     tie resolves to that same row.
 
-    Requirement (as asof_join): right unique per (by, right_ts) --
+    Requirement (as asof_join): right unique per (by, RIGHT_TS) --
     callers pre-aggregate. The matched right timestamp is returned as
     `asof_ts_us` (microseconds, long) so callers can compute signed
     gaps; it is NULL exactly when the payload is NULL."""
     value_cols = value_cols or [
-        c for c in right.columns if c not in (by, right_ts)
+        c for c in right.columns if c not in (by, RIGHT_TS)
     ]
     left_payload = [c for c in left.columns if c not in (by, LEFT_TS)]
     _validate_asof_columns(
@@ -124,12 +124,12 @@ def asof_join_nearest(
     )
     r_side = right.select(
         F.col(by),
-        _micros(F.col(right_ts)).alias("_tus"),
-        F.col(right_ts).cast(left.schema[LEFT_TS].dataType).alias("_t"),
+        _micros(F.col(RIGHT_TS)).alias("_tus"),
+        F.col(RIGHT_TS).cast(left.schema[LEFT_TS].dataType).alias("_t"),
         F.lit(0).alias("_side"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_payload],
         F.struct(
-            _micros(F.col(right_ts)).alias("_rts"),
+            _micros(F.col(RIGHT_TS)).alias("_rts"),
             *[F.col(c) for c in value_cols],
         ).alias("_snap"),
     )

@@ -60,11 +60,11 @@ def _positions(sh):
     return [F.shiftright(h, M_LOG2 * j) % M for j in range(NUM_HASHES)]
 
 
-def bloom_bitmap(items: DataFrame, col: str = "sh") -> DataFrame:
-    """[slot, bits]: the Bloom bitmap of `items[col]`, 32 bits per
+def bloom_bitmap(items: DataFrame) -> DataFrame:
+    """[slot, bits]: the Bloom bitmap of `items.sh`, 32 bits per
     slot row. Built with one partial-agg'd groupBy on <= SLOTS keys."""
     pos = items.select(
-        F.explode(F.array(*_positions(F.col(col)))).alias("p")
+        F.explode(F.array(*_positions(F.col("sh")))).alias("p")
     )
     return (
         pos.select(

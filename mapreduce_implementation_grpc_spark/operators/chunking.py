@@ -31,14 +31,10 @@ DEFAULT_STRIDE = 24
 DEFAULT_PACK_BUDGET = 256
 
 
-def doc_chunks(
-    docs: DataFrame,
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-    stride: int = DEFAULT_STRIDE,
-) -> DataFrame:
+def doc_chunks(docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, chunk_id, n_tokens, chunk_text]: overlapping
-    token windows of `chunk_size` tokens every `stride` tokens
-    (stride < chunk_size => overlap of chunk_size - stride). Tail
+    token windows of DEFAULT_CHUNK_SIZE tokens every DEFAULT_STRIDE
+    tokens (an overlap of DEFAULT_CHUNK_SIZE - DEFAULT_STRIDE). Tail
     chunks may be shorter; docs with zero tokens produce no chunks.
 
     Plan shape: Project (tokenize once per doc) -> Generate
@@ -50,12 +46,12 @@ def doc_chunks(
         "doc_id", tokens_col(normalized_col("text")).alias("toks")
     ).filter(F.size("toks") > 0)
     starts = F.sequence(
-        F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)), F.lit(stride)
+        F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)), F.lit(DEFAULT_STRIDE)
     )
     chunked = toks_df.select(
         "doc_id", "toks", F.posexplode(starts).alias("chunk_id", "start")
     )
-    chunk = F.slice("toks", F.col("start") + 1, chunk_size)
+    chunk = F.slice("toks", F.col("start") + 1, DEFAULT_CHUNK_SIZE)
     return chunked.select(
         "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
@@ -64,15 +60,13 @@ def doc_chunks(
     )
 
 
-def pack_sequences(
-    docs: DataFrame,
-    budget: int = DEFAULT_PACK_BUDGET,
-) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, source, n_tokens, bin_id, offset]:
     deterministic sequential packing. Within each shard (source),
     documents are laid head-to-tail in doc_id order; a document
     starts at running offset `prefix` and belongs to block
-    `floor(prefix / budget)` of `budget` tokens -- the concatenate-
+    `floor(prefix / DEFAULT_PACK_BUDGET)` of DEFAULT_PACK_BUDGET
+    tokens -- the concatenate-
     then-block recipe for packing short documents into fixed-length
     training sequences.
 
@@ -92,6 +86,6 @@ def pack_sequences(
         "doc_id",
         "source",
         "n_tokens",
-        F.floor(prefix / budget).cast("long").alias("bin_id"),
-        (prefix % budget).cast("long").alias("offset"),
+        F.floor(prefix / DEFAULT_PACK_BUDGET).cast("long").alias("bin_id"),
+        (prefix % DEFAULT_PACK_BUDGET).cast("long").alias("offset"),
     )

@@ -61,13 +61,10 @@ SPAN_MIN_COUNT = 2  # occurrences that make a window a duplicate
 GROUP_COL = "lang"
 
 
-def decontaminate(
-    train_docs: DataFrame,
-    eval_docs: DataFrame,
-    k: int = DECONTAM_NGRAM_K,
-) -> DataFrame:
+def decontaminate(train_docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Benchmark decontamination: for each training doc, the number
-    of distinct k-token n-grams it shares with the eval corpus.
+    of distinct DECONTAM_NGRAM_K-token n-grams it shares with the eval
+    corpus.
 
     Docs that appear here at all are contaminated; callers anti-join
     the result against the corpus to drop them. k=6 follows the
@@ -79,8 +76,8 @@ def decontaminate(
     Exchange), so distinct-counting AFTER the join is the only
     corpus-side shuffle -- and it sees matched rows only, a vanishing
     fraction."""
-    train_sh = shingle_rows_flat(train_docs, k)
-    eval_sh = shingle_rows_flat(eval_docs, k).select("sh").distinct()
+    train_sh = shingle_rows_flat(train_docs, DECONTAM_NGRAM_K)
+    eval_sh = shingle_rows_flat(eval_docs, DECONTAM_NGRAM_K).select("sh").distinct()
     hits = train_sh.join(F.broadcast(eval_sh), "sh")
     return hits.groupBy("doc_id").agg(
         F.count_distinct("sh").alias("n_shared_ngrams")
@@ -470,14 +467,13 @@ def temperature_sample(docs: DataFrame) -> DataFrame:
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    group_col: str = "lang",
-    num: int = 1,
-    den: int = 10,
-) -> DataFrame:
-    """EXACT proportional stratified sample with largest-remainder
-    (Hamilton) apportionment: total sample size n = N*num div den,
+STRATIFIED_DEN = 10  # stratified_sample keeps N div 10 of N docs
+
+
+def stratified_sample(docs: DataFrame) -> DataFrame:
+    """EXACT proportional stratified sample over GROUP_COL with
+    largest-remainder (Hamilton) apportionment: total sample size
+    n = N div STRATIFIED_DEN,
     per-stratum quota q_h = (n*N_h) div N, and the d = n - sum(q_h)
     leftover slots go to the strata with the largest remainders
     (n*N_h mod N, ties broken by stratum name) -- the apportionment
@@ -502,14 +498,7 @@ def stratified_sample(
     is sized for stratum sorts that fit an executor's spill budget.
 
     Output: [group, doc_id, n_h, quota], ordered."""
-    if not 0 < int(num) <= int(den):
-        raise ValueError(
-            f"stratified_sample: num/den={num}/{den} -- the sampling "
-            "fraction must be in (0, 1]; above 1 a stratum's quota "
-            "can exceed its population and the shortfall would be "
-            "silent"
-        )
-    c = docs.groupBy(F.col(group_col).alias("g")).agg(
+    c = docs.groupBy(F.col(GROUP_COL).alias("g")).agg(
         F.count("*").alias("n_h")
     )
     # NB: Spark resolves column names case-insensitively by default,
@@ -517,7 +506,7 @@ def stratified_sample(
     wall = Window.partitionBy()
     t = (
         c.withColumn("_tot", F.sum("n_h").over(wall))
-        .withColumn("_n", F.expr(f"(_tot * {int(num)}) div {int(den)}"))
+        .withColumn("_n", F.expr(f"_tot div {STRATIFIED_DEN}"))
         .withColumn("_q0", F.expr("(_n * n_h) div _tot"))
         .withColumn("_r", F.expr("(_n * n_h) % _tot"))
     )
@@ -534,18 +523,18 @@ def stratified_sample(
             ).cast("long").alias("quota"),
         )
     )
-    wsel = Window.partitionBy(group_col).orderBy(
+    wsel = Window.partitionBy(GROUP_COL).orderBy(
         F.md5(F.col("doc_id").cast("string")), F.asc("doc_id")
     )
-    ranked = docs.select(group_col, "doc_id").withColumn(
+    ranked = docs.select(GROUP_COL, "doc_id").withColumn(
         "_rnk", F.row_number().over(wsel)
     )
     return (
         ranked.join(
             F.broadcast(quota),
-            ranked[group_col] == quota["g"],
+            ranked[GROUP_COL] == quota["g"],
         )
         .filter(F.col("_rnk") <= F.col("quota"))
-        .select(group_col, "doc_id", "n_h", "quota")
-        .orderBy(group_col, "doc_id")
+        .select(GROUP_COL, "doc_id", "n_h", "quota")
+        .orderBy(GROUP_COL, "doc_id")
     )

@@ -180,15 +180,15 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    max_doc_freq: int = 3,
-) -> DataFrame:
+RARE_DOC_FREQ = 3  # ngram_jaccard_pairs' rare shingles sit in 2..3 docs
+
+
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Exact shingle-Jaccard for pairs sharing at least one *rare*
-    shingle (document frequency <= max_doc_freq).
+    shingle (document frequency <= RARE_DOC_FREQ).
 
     The rare-shingle restriction is the scale lever: each qualifying
-    shingle contributes at most C(max_doc_freq,2) pairs, so the
+    shingle contributes at most C(RARE_DOC_FREQ,2) pairs, so the
     candidate join is linear in corpus size instead of quadratic.
     (MinHash banding below is the fully general variant; this one is
     SQL-expressible and oracle-checked.)
@@ -198,7 +198,7 @@ def ngram_jaccard_pairs(
     rare = (
         sh.groupBy("sh")
         .agg(F.count("*").alias("df"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= max_doc_freq))
+        .filter((F.col("df") >= 2) & (F.col("df") <= RARE_DOC_FREQ))
         .select("sh")
     )
     sh_rare = sh.join(rare, "sh")  # AQE broadcasts `rare` when small
@@ -343,7 +343,10 @@ def minhash_near_dup_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+LP_MAX_ITER = 20  # label_propagation's round budget
+
+
+def label_propagation(pairs: DataFrame) -> DataFrame:
     """Connected components over an undirected pair graph via
     iterative min-label propagation with pointer jumping:
     DataFrame[doc_id, cluster] where cluster = smallest doc_id
@@ -375,7 +378,7 @@ def label_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .withColumn("label", F.col("doc_id"))
     )
     changed = None
-    for _ in range(max_iter):
+    for _ in range(LP_MAX_ITER):
         neigh = (
             edges.join(
                 labels.select(F.col("doc_id").alias("doc_b"), F.col("label").alias("nlabel")),
@@ -410,8 +413,8 @@ def label_propagation(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             break
     if changed is not None and changed > 0:
         raise RuntimeError(
-            f"label_propagation did not converge in {max_iter} rounds "
-            f"({changed} labels still moving); raise max_iter"
+            f"label_propagation did not converge in {LP_MAX_ITER} rounds "
+            f"({changed} labels still moving); raise LP_MAX_ITER"
         )
     return labels.select("doc_id", F.col("label").alias("cluster"))
 

@@ -114,11 +114,7 @@ def categorical_drift_from_counts(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def ks_test(
-    sample_a: DataFrame,
-    sample_b: DataFrame,
-    n_buckets: int = 1024,
-) -> DataFrame:
+def ks_test(sample_a: DataFrame, sample_b: DataFrame) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov statistic: one row
     [n_a, n_b, ks_d, at_value] where ks_d = max over distinct values
     of |F_a(v) - F_b(v)| (right-continuous empirical CDFs) and
@@ -140,7 +136,7 @@ def ks_test(
             F.coalesce(F.col("_cb"), F.lit(0)).alias("_cb"),
         )
     )
-    bk = bucketize_by_key(counts, "_v", n_buckets=n_buckets)
+    bk = bucketize_by_key(counts, "_v")
     offs_a = bucket_offsets(bk, weight=F.col("_ca")).withColumnRenamed(
         "_off", "_offa"
     ).withColumnRenamed("_tot", "_na")

@@ -17,9 +17,8 @@ Plan shape (the NB-classifier recipe, operators/nb_classify.py):
 training is two vocab-sized aggregations of the token stream (target
 counts, raw counts) — far smaller than the corpus; the per-token
 log-ratio table joins into the per-doc token histogram (pre-grouped
-on (doc, w), so hot stopwords are one row per doc). With the
-max_vocab top-K gate the ratio table is guaranteed broadcast; without
-it AQE chooses broadcast vs shuffle join at runtime (a 100 TB
+on (doc, w), so hot stopwords are one row per doc). AQE chooses
+broadcast vs shuffle join for the ratio table at runtime (a 100 TB
 vocabulary does not fit an executor). No driver collection anywhere.
 
 Cross-engine determinism: each ln term is rounded to 9 decimals and
@@ -38,36 +37,22 @@ from .tokenize import tokens_col
 TARGET_SOURCE = "src0"
 
 
-def _tokens(docs: DataFrame, text_col: str, max_vocab: int | None):
-    toks = docs.select(
+def _tokens(docs: DataFrame) -> DataFrame:
+    return docs.select(
         "doc_id",
         "source",
-        F.explode(tokens_col(normalized_col(text_col))).alias("w"),
+        F.explode(tokens_col(normalized_col("text"))).alias("w"),
     )
-    if max_vocab is not None:
-        keep = (
-            toks.groupBy("w")
-            .agg(F.count("*").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("w"))
-            .limit(max_vocab)
-            .select("w")
-        )
-        toks = toks.join(F.broadcast(keep), "w")
-    return toks
 
 
-def dsir_log_ratios(
-    docs: DataFrame,
-    target_source: str = TARGET_SOURCE,
-    max_vocab: int | None = None,
-) -> DataFrame:
+def dsir_log_ratios(docs: DataFrame) -> DataFrame:
     """DataFrame[w, lr]: per-token log-likelihood ratio
     ln p_t(w) - ln p_r(w) (decimal(14,9)) — the trained DSIR model.
     This is the reusable serve artifact: join it onto any per-doc
     token stream (batch dsir_weights, or an unbounded stream via
     streaming.streaming_dsir_filter) and sum."""
-    toks = _tokens(docs, "text", max_vocab)
-    is_target = F.col("source") == target_source
+    toks = _tokens(docs)
+    is_target = F.col("source") == TARGET_SOURCE
     # Both LMs trained in ONE pass over the token stream: conditional
     # counts per token, plus the two totals from the same aggregates.
     tc = toks.groupBy("w").agg(
@@ -91,28 +76,22 @@ def dsir_log_ratios(
     return tc.crossJoin(F.broadcast(totals)).select("w", (ln_t - ln_r).alias("lr"))
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target_source: str = TARGET_SOURCE,
-    max_vocab: int | None = None,
-) -> DataFrame:
+def dsir_weights(docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, lang, source, dsir_logw]: importance log-
-    weight for every RAW-pool doc (source != target_source) under a
-    target unigram LM trained on target_source docs vs a raw LM
+    weight for every RAW-pool doc (source != TARGET_SOURCE) under a
+    target unigram LM trained on TARGET_SOURCE docs vs a raw LM
     trained on the pool. Raw docs with zero tokens are excluded (no
     evidence). dsir_logw is the decimal-exact sum cast to double and
     rounded to 6dp."""
-    toks = _tokens(docs, "text", max_vocab)
-    hint = F.broadcast if max_vocab is not None else (lambda df: df)
-    ratios = dsir_log_ratios(docs, target_source, max_vocab)
-
+    ratios = dsir_log_ratios(docs)
     raw_hist = (
-        toks.filter(F.col("source") != target_source)
+        _tokens(docs)
+        .filter(F.col("source") != TARGET_SOURCE)
         .groupBy("doc_id", "w")
         .agg(F.count("*").alias("m"))
     )
     logw = (
-        raw_hist.join(hint(ratios), "w")
+        raw_hist.join(ratios, "w")
         .groupBy("doc_id")
         .agg(F.sum(F.col("m").cast("decimal(10,0)") * F.col("lr")).alias("s"))
     )

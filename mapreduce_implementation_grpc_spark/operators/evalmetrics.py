@@ -19,7 +19,7 @@ computed entirely from per-distinct-score aggregates: no per-row
 rank is ever materialized, and the only order-dependent quantity
 (negatives strictly below each score) reuses the two-level bucketed
 cumulative-sum machinery of operators/ranking.py -- per-bucket totals
-cross a single-partition exchange only as a <= n_buckets-row
+cross a single-partition exchange only as a <= 1024-row
 AGGREGATE, and the within-bucket running sum is a per-bucket window
 over the distinct-score table. Everything is integer arithmetic
 (u2 = 2U stays integral, accumulated as DECIMAL so a 100 TB corpus
@@ -49,10 +49,7 @@ N_BINS = 10
 N_DECILES = 10
 
 
-def auc_rank_sum(
-    scored: DataFrame,
-    n_buckets: int = 1024,
-) -> DataFrame:
+def auc_rank_sum(scored: DataFrame) -> DataFrame:
     """Exact tie-corrected ROC AUC of `score` predicting the 0/1
     `label`: one row [n_pos, n_neg, u2, auc] where u2 = 2U (the
     doubled Mann-Whitney statistic, exact integer as DECIMAL(38,0))
@@ -67,7 +64,7 @@ def auc_rank_sum(
     # (neg-weighted) + a within-bucket running sum ending at the
     # PREVIOUS row -- each score is one row post-groupBy, so "previous
     # rows in score order" is exactly "strictly lower scores"
-    bk = bucketize_by_key(per_score, "_s", n_buckets=n_buckets)
+    bk = bucketize_by_key(per_score, "_s")
     offs = bucket_offsets(bk, weight=F.col("_neg"))
     w_below = (
         Window.partitionBy("_bkt")

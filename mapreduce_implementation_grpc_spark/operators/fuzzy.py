@@ -37,13 +37,11 @@ def _remove_at(s: Column, i: Column) -> Column:
     return F.concat(F.substr(s, F.lit(1), i - 1), F.substr(s, i + 1))
 
 
-def deletion_variants(w: Column, max_dist: int = MAX_DIST) -> Column:
-    """Distinct <=max_dist-deletion neighborhood of `w`, including
-    `w` itself. max_dist is 1 or 2 (the practical SymSpell settings)."""
+def deletion_variants(w: Column) -> Column:
+    """Distinct <=MAX_DIST-deletion neighborhood of `w` (MAX_DIST = 2,
+    the practical SymSpell setting), including `w` itself."""
     d0 = F.array(w)
     d1 = F.transform(F.sequence(F.lit(1), F.length(w)), lambda i: _remove_at(w, i))
-    if max_dist == 1:
-        return F.array_distinct(F.concat(d0, d1))
     d2 = F.flatten(
         F.transform(
             d1,
@@ -58,14 +56,12 @@ def deletion_variants(w: Column, max_dist: int = MAX_DIST) -> Column:
     return F.array_distinct(F.concat(d0, d1, d2))
 
 
-def fuzzy_word_pairs(
-    freqs: DataFrame, max_dist: int = MAX_DIST
-) -> DataFrame:
-    """All word pairs (w1 < w2) within Levenshtein distance max_dist,
+def fuzzy_word_pairs(freqs: DataFrame) -> DataFrame:
+    """All word pairs (w1 < w2) within Levenshtein distance MAX_DIST,
     with the exact distance and both corpus counts, from a (w, c)
     word-frequency table."""
     var = freqs.select(
-        "w", "c", F.explode(deletion_variants(F.col("w"), max_dist)).alias("v")
+        "w", "c", F.explode(deletion_variants(F.col("w"))).alias("v")
     )
     left = var.select(
         F.col("w").alias("w1"), F.col("c").alias("c1"), F.col("v").alias("v1")
@@ -84,4 +80,4 @@ def fuzzy_word_pairs(
         F.levenshtein("w1", "w2").cast("long").alias("dist"),
         "c1",
         "c2",
-    ).filter(F.col("dist") <= max_dist)
+    ).filter(F.col("dist") <= MAX_DIST)

@@ -71,30 +71,23 @@ def purchase_edges(
 
 
 def copurchase_butterflies(
-    spark: SparkSession,
-    sf_dir: str,
-    max_degree: int | None = None,
-    segment: str | None = None,
+    spark: SparkSession, sf_dir: str, segment: str | None = None
 ) -> DataFrame:
     """Top customer pairs by shared-supplier count, with butterfly
     support C(shared, 2): [custkey_1, custkey_2, shared_suppliers,
     butterflies], deterministic order (shared desc, keys asc).
 
-    `max_degree` (None = exact) drops suppliers with more than that
-    many distinct customers before the wedge join -- the degree-bound
-    that keeps the quadratic fan-out linear-ish at 100 TB.
     `segment` restricts to customers of one market segment, pushed
     below the edge build's join+distinct (see purchase_edges): on
     this synthetic graph supplier degree is ~4% of ALL customers
     (avg 587 of 15 000 at sf0.1 -- measured), so the full exact
     wedge set is ~170 M rows; a 5x customer cut shrinks it ~25x
     (quadratic in degree). Sparse real-world graphs don't need it;
-    dense ones scope the analysis or cap degree.
+    dense ones scope the analysis.
 
     r10 shape: ONE groupBy(suppkey) builds each supplier's sorted
     distinct customer array (collect_set subsumes the old edge-list
-    distinct, so its exchange disappears too), the degree cap is a
-    size() filter on that array, and the C(deg, 2) wedges explode
+    distinct, so its exchange disappears too), and the C(deg, 2) wedges explode
     shuffle-locally — identical fan-out and placement to the old
     a x b self-join on suppkey (which also co-located every wedge of
     a supplier in one partition), minus the self-join's two
@@ -105,8 +98,6 @@ def copurchase_butterflies(
     nbrs = raw.groupBy("suppkey").agg(
         F.sort_array(F.collect_set("custkey")).alias("cs")
     )
-    if max_degree is not None:
-        nbrs = nbrs.filter(F.size("cs") <= max_degree)
     # two-step Generate, not inline(flatten(transform(...))) -- see
     # cosupply_edges for the measured interpreted-HOF penalty
     wedges = nbrs.select(F.posexplode("cs").alias("i", "c1"), "cs").select(
@@ -209,12 +200,10 @@ def cosupply_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_counts(cosupply_edges(spark, sf_dir))
 
 
-def kcore(
-    undirected_edges: DataFrame,
-    k: int,
-    max_rounds: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
+KCORE_MAX_ROUNDS = 20
+
+
+def kcore(undirected_edges: DataFrame, k: int) -> DataFrame:
     """The k-core of an undirected (s1, s2) edge list: iteratively
     peel nodes of degree < k until fixpoint; return the surviving
     nodes with their within-core degree [suppkey, core_deg].
@@ -226,18 +215,11 @@ def kcore(
     peeling depth (4 on the sf0.01 co-supply graph), not the node
     count. Like dedup_clusters' pointer jumping, each round is
     EAGERLY pinned (the convergence check runs a count anyway) so
-    the plan never nests; non-convergence within `max_rounds` raises
-    LOUDLY rather than returning a half-peeled graph.
-    `stats`, when given, receives {"rounds": N, "edges_in": E0,
-    "edges_out": E1} -- the peel-depth instrumentation behind the
-    SCALING.md "Round-6: iterative-graph ladder" numbers."""
+    the plan never nests; non-convergence within KCORE_MAX_ROUNDS
+    raises LOUDLY rather than returning a half-peeled graph."""
     cur = materialize_eager(undirected_edges)
     n_edges = cur.count()
-    if stats is not None:
-        stats["rounds"] = 0
-        stats["edges_in"] = n_edges
-        stats["edges_out"] = n_edges
-    for _ in range(max_rounds):
+    for _ in range(KCORE_MAX_ROUNDS):
         if n_edges == 0:
             break
         deg = (
@@ -254,16 +236,13 @@ def kcore(
         )
         n_next = nxt.count()
         cur = nxt
-        if stats is not None:
-            stats["rounds"] += 1
-            stats["edges_out"] = n_next
         if n_next == n_edges:
             break
         n_edges = n_next
     else:
         raise RuntimeError(
-            f"kcore: no fixpoint within {max_rounds} rounds "
-            f"({n_edges} edges remain) -- raise max_rounds"
+            f"kcore: no fixpoint within {KCORE_MAX_ROUNDS} rounds "
+            f"({n_edges} edges remain) -- raise KCORE_MAX_ROUNDS"
         )
     return (
         cur.select(F.col("s1").alias("suppkey"))

@@ -141,22 +141,18 @@ def kmeans_fit(
     return cent_rows
 
 
-def kmeans_cells(
-    emb: DataFrame,
-    k: int = KMEANS_K,
-    n_iter: int = KMEANS_ITER,
-) -> DataFrame:
+def kmeans_cells(emb: DataFrame, k: int = KMEANS_K) -> DataFrame:
     """DataFrame[vec_id, cell, obj]: k-means cell per vector (obj =
     final assignment objective, for inertia checks).
 
-    Training is eager (n_iter jobs, one shuffle each); the returned
+    Training is eager (KMEANS_ITER jobs, one shuffle each); the returned
     assignment is a lazy narrow map against the final centroids.
     For very large k (where a k*dim literal tree would bloat
     codegen), the same argmin is expressible as an explode +
     groupBy("vec_id").agg(min(struct(obj, cell))) -- one narrow
     shuffle -- but coarse quantizers live at k <= a few hundred,
     where the literal wins outright."""
-    cent_rows = kmeans_fit(emb, k, n_iter)
+    cent_rows = kmeans_fit(emb, k)
     return _assign(emb, cent_rows, "embedding").select(
         "vec_id", "cell", F.round("obj", 6).alias("obj")
     )

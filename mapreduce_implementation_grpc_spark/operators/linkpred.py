@@ -39,7 +39,7 @@ adjacent to everyone scores every pair -- pure noise for prediction,
 exactly the butterfly-counting rationale in graph_motifs.py), keeping
 per-center fan-out bounded; None keeps the operator exact (the
 oracle's form). Degree tables are node-sized and AQE-broadcast; no
-pair table crosses SinglePartition; top_n goes through TakeOrdered.
+pair table crosses SinglePartition; the top-N goes through TakeOrdered.
 
 Reference scope note: the reference engine (greeter_client.cc /
 greeter_server.cc) has no graph surface; this extends the repo's
@@ -56,12 +56,13 @@ from ..materialize import materialize
 from .graph_motifs import cosupply_edges
 
 
+LINKPRED_TOP_N = 20
+
+
 def link_prediction(
-    undirected_edges: DataFrame,
-    top_n: int = 20,
-    max_degree: int | None = None,
+    undirected_edges: DataFrame, max_degree: int | None = None
 ) -> DataFrame:
-    """Top non-adjacent pairs by Adamic-Adar for an undirected
+    """Top LINKPRED_TOP_N non-adjacent pairs by Adamic-Adar for an undirected
     (s1, s2) edge list with s1 < s2 and no duplicates:
     [s1, s2, common_neighbors, jaccard, adamic_adar], ordered
     adamic_adar desc, common_neighbors desc, s1, s2."""
@@ -138,15 +139,12 @@ def link_prediction(
             F.asc("s1"),
             F.asc("s2"),
         )
-        .limit(top_n)
+        .limit(LINKPRED_TOP_N)
     )
 
 
 def cosupply_link_prediction(
-    spark: SparkSession,
-    sf_dir: str,
-    top_n: int = 20,
-    max_degree: int | None = None,
+    spark: SparkSession, sf_dir: str, max_degree: int | None = None
 ) -> DataFrame:
     """Link prediction over the thresholded co-supply graph
     (graph_motifs.cosupply_edges): which supplier pairs are closest
@@ -155,8 +153,4 @@ def cosupply_link_prediction(
     40M wedges in the SCALING.md "Round-6: link-prediction wedge
     fan-out" ladder); None is the
     exact oracle-of-record form."""
-    return link_prediction(
-        cosupply_edges(spark, sf_dir),
-        top_n=top_n,
-        max_degree=max_degree,
-    )
+    return link_prediction(cosupply_edges(spark, sf_dir), max_degree=max_degree)

@@ -75,16 +75,13 @@ def _cos6(a, b) -> float:
     return _round6(dot / (math.sqrt(na) * math.sqrt(nb)))
 
 
-def mmr_select(
-    candidates: DataFrame,
-    k: int = MMR_K,
-) -> DataFrame:
+def mmr_select(candidates: DataFrame) -> DataFrame:
     """Greedy MMR over per-query candidate groups.
 
     candidates: DataFrame[query_id, doc_id, sim_q, embedding] where
     sim_q is the (already rounded) query similarity. Returns
     [query_id, doc_id, pick_rank (1-based), mmr (score at pick time,
-    rounded 6dp)] with min(k, group size) rows per query."""
+    rounded 6dp)] with min(MMR_K, group size) rows per query."""
     one_minus_lam = 1.0 - MMR_LAM
 
     def _pick(pdf):
@@ -97,7 +94,7 @@ def mmr_select(
         remaining = sorted(docs)
         selected: list[int] = []
         out = []
-        while remaining and len(selected) < k:
+        while remaining and len(selected) < MMR_K:
             best_d, best_score = None, None
             for d in remaining:  # ascending doc_id -> ties keep the first
                 # true max over selected (can be negative); 0.0 only

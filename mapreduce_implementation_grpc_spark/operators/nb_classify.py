@@ -14,10 +14,9 @@ prediction = argmax score (ties to the smaller language code).
 Plan shape: training is two aggregations of the token stream
 (class-token counts and class totals -- vocab-sized outputs, far
 smaller than the corpus); the model table (|V| x |langs| rows) joins
-into the scoring join either by AQE's runtime choice (full vocab:
-broadcast when it fits, shuffle join when an unbounded 100 TB
-vocabulary doesn't) or as a guaranteed broadcast under the
-max_vocab top-K truncation gate. Scoring runs over the per-doc token
+into the scoring join by AQE's runtime choice (broadcast when it
+fits, shuffle join when an unbounded 100 TB vocabulary doesn't).
+Scoring runs over the per-doc token
 histogram (pre-aggregated on (doc, w), so a stopword is one row per
 doc, not a hot key). The final aggregation keys on (doc_id, cand).
 No driver collection.
@@ -38,34 +37,16 @@ from .normalize import normalized_col
 from .tokenize import tokens_col
 
 
-def nb_lang_scores(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
+def nb_lang_scores(docs: DataFrame) -> DataFrame:
     """DataFrame[doc_id, lang, pred_lang, nb_score]: the true label,
     the NB prediction, and the winning log-score (6dp). Docs with no
     tokens are excluded (no evidence).
 
-    Scale gate (max_vocab): with max_vocab=None the model spans the
-    FULL vocabulary and the scoring join carries no broadcast hint --
-    AQE picks broadcast when the trained model is small and falls
-    back to a shuffle join when a 100 TB corpus's vocabulary doesn't
-    fit an executor (the r2 VERDICT caveat). With max_vocab=K the
-    token stream is restricted to the K globally most frequent tokens
-    (count desc, token asc -- the standard NB language-ID truncation;
-    selected via the distributed TakeOrderedAndProject top-K, no
-    single-partition sort), bounding the model at K x |langs| rows,
-    which IS safely broadcast. Out-of-vocabulary tokens drop from
-    training and scoring alike, so K >= V reproduces the full-vocab
-    answer exactly."""
+    The model spans the FULL vocabulary and the scoring join carries
+    no broadcast hint -- AQE picks broadcast when the trained model is
+    small and falls back to a shuffle join when a 100 TB corpus's
+    vocabulary doesn't fit an executor (the r2 VERDICT caveat)."""
     toks = docs.select("doc_id", "lang", F.explode(tokens_col(normalized_col("text"))).alias("w"))
-    if max_vocab is not None:
-        keep = (
-            toks.groupBy("w")
-            .agg(F.count("*").alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("w"))
-            .limit(max_vocab)
-            .select("w")
-        )
-        toks = toks.join(F.broadcast(keep), "w")
-    hint = F.broadcast if max_vocab is not None else (lambda df: df)
     tokm = toks.groupBy("doc_id", "lang", "w").agg(F.count("*").alias("m"))
     tokc = toks.groupBy("lang", "w").agg(F.count("*").alias("c"))
     cls = toks.groupBy("lang").agg(F.count("*").alias("nt"))
@@ -99,7 +80,7 @@ def nb_lang_scores(docs: DataFrame, max_vocab: int | None = None) -> DataFrame:
     )
 
     scored = (
-        tokm.join(hint(model), "w")
+        tokm.join(model, "w")
         .groupBy("doc_id", "lang", "cand")
         .agg(F.sum(F.col("m").cast("decimal(10,0)") * F.col("lp")).alias("s"))
         .join(F.broadcast(priors), "cand")

@@ -41,14 +41,11 @@ def projection_planes() -> list[list[float]]:
     ]
 
 
-def project_embeddings(
-    emb: DataFrame,
-    decimals: int = 6,
-) -> DataFrame:
+def project_embeddings(emb: DataFrame) -> DataFrame:
     """(id, p0..p7): the vector's coordinates along the 8
-    projection directions, rounded for cross-engine comparison.
-    Sequential double fold in element order == DuckDB
-    list_dot_product, so results hash-match exactly at `decimals`."""
+    projection directions, rounded to 6 decimals for cross-engine
+    comparison. Sequential double fold in element order == DuckDB
+    list_dot_product, so results hash-match exactly."""
     planes = projection_planes()
     cols = [
         F.round(
@@ -61,7 +58,7 @@ def project_embeddings(
                 F.lit(0.0),
                 lambda acc, v: acc + v,
             ),
-            decimals,
+            6,
         ).alias(f"p{p}")
         for p, plane in enumerate(planes)
     ]

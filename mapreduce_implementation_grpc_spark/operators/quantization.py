@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .kmeans import KMEANS_ITER, KMEANS_K
 from .similarity import DIM, N_PROBE, TOPK, VEC_COL
 
 DEFAULT_LEVELS = 255  # int8 code range [0, 255]
@@ -104,13 +103,11 @@ DEFAULT_PQ_ITER = 2    # Lloyd rounds per subspace
 def pq_fit(
     emb: DataFrame,
     m: int = DEFAULT_PQ_M,
-    k: int = DEFAULT_PQ_K,
-    n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = DIM,
     vec_col: str = VEC_COL,
 ) -> list[list[tuple[int, list[float], float]]]:
-    """Train one k-means codebook per contiguous dim/m-wide subspace
-    (eager: m small Lloyd fits). Fully deterministic -- kmeans_fit
+    """Train one k-means codebook of DEFAULT_PQ_K codewords per
+    contiguous DIM/m-wide subspace (eager: m small Lloyd fits of
+    DEFAULT_PQ_ITER rounds). Fully deterministic -- kmeans_fit
     seeds from the smallest vec_ids and uses exact decimal-sum means
     -- so codes and ADC distances are DuckDB-oracle-checkable, which
     is rare for a lossy ANN compression operator."""
@@ -118,17 +115,17 @@ def pq_fit(
 
     from .kmeans import kmeans_fit
 
-    if dim % m != 0:
-        raise ValueError(f"dim={dim} not divisible by m={m}")
-    w = dim // m
+    if DIM % m != 0:
+        raise ValueError(f"DIM={DIM} not divisible by m={m}")
+    w = DIM // m
 
     def fit(j: int):
         return kmeans_fit(
             emb.select(
                 "vec_id", F.slice(F.col(vec_col), j * w + 1, w).alias("subvec")
             ),
-            k=k,
-            n_iter=n_iter,
+            k=DEFAULT_PQ_K,
+            n_iter=DEFAULT_PQ_ITER,
             vec_col="subvec",
         )
 
@@ -145,9 +142,6 @@ def pq_fit(
 def pq_codes(
     emb: DataFrame,
     m: int = DEFAULT_PQ_M,
-    k: int = DEFAULT_PQ_K,
-    n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = DIM,
     vec_col: str = VEC_COL,
     codebooks: list[list[tuple[int, list[float], float]]] | None = None,
     carry_cols: tuple[str, ...] = (),
@@ -172,8 +166,8 @@ def pq_codes(
     from .kmeans import _centroid_literal
 
     if codebooks is None:
-        codebooks = pq_fit(emb, m, k, n_iter, dim, vec_col)
-    w = dim // m
+        codebooks = pq_fit(emb, m, vec_col)
+    w = DIM // m
     carry = [F.col(c) for c in carry_cols]
 
     def best(j: int):
@@ -226,15 +220,15 @@ def _codebook_df(spark, codebooks, vec: str) -> DataFrame:
     )
 
 
-def _adc_topk(scored: DataFrame, topk: int) -> DataFrame:
-    """[query_id, neighbor_id, adc_dist, rank]: the `topk` smallest
+def _adc_topk(scored: DataFrame) -> DataFrame:
+    """[query_id, neighbor_id, adc_dist, rank]: the TOPK smallest
     (query_id, vec_id, adc) rows per query, ties to the smaller id."""
     from pyspark.sql import Window
 
     win = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= TOPK)
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -244,15 +238,7 @@ def _adc_topk(scored: DataFrame, topk: int) -> DataFrame:
     )
 
 
-def pq_adc_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    topk: int = TOPK,
-    m: int = DEFAULT_PQ_M,
-    k: int = DEFAULT_PQ_K,
-    n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = DIM,
-) -> DataFrame:
+def pq_adc_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: approximate nearest
     neighbors scanning only the compressed codes.
 
@@ -268,9 +254,9 @@ def pq_adc_topk(
     O(n*m) tiny integer rows per query batch -- the whole point of
     PQ; compose with kmeans cells (IVF-PQ) to cut the scan to probed
     cells only."""
-    codebooks = pq_fit(emb, m, k, n_iter, dim)
-    codes = pq_codes(emb, m, k, n_iter, dim, codebooks=codebooks)
-    w = dim // m
+    codebooks = pq_fit(emb)
+    codes = pq_codes(emb, codebooks=codebooks)
+    w = DIM // DEFAULT_PQ_M
 
     spark = emb.sparkSession
     cent_df = _codebook_df(spark, codebooks, "cvec")
@@ -291,7 +277,7 @@ def pq_adc_topk(
         .groupBy("query_id", "vec_id")
         .agg(dsum.cast("string").cast("double").alias("adc"))
     )
-    return _adc_topk(scored, topk)
+    return _adc_topk(scored)
 
 
 def ivfpq_topk(
@@ -372,35 +358,23 @@ def ivfpq_topk(
         .groupBy("query_id", "vec_id")
         .agg(dsum.cast("string").cast("double").alias("adc"))
     )
-    return _adc_topk(scored, TOPK)
+    return _adc_topk(scored)
 
 
-def _coarse_lookup_literal(
-    coarse: list[tuple[int, list[float], float]], dim: int
-):
+def _coarse_lookup_literal(coarse: list[tuple[int, list[float], float]]):
     """array<array<double>> literal mapping cell id -> centroid (one
     Catalyst Literal node; gaps from emptied cells hold zero vectors
     that nothing references). Per-row element_at by the DATA-dependent
     cell id is the one place the nested-literal form is right: the
     index isn't constant, so there is nothing to constant-fold."""
     max_cell = max(c for c, _v, _n in coarse)
-    table = [[0.0] * dim for _ in range(max_cell + 1)]
+    table = [[0.0] * DIM for _ in range(max_cell + 1)]
     for cell, cvec, _n2 in coarse:
         table[cell] = [float(x) for x in cvec]
     return F.lit(table)
 
 
-def ivfpq_residual_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    topk: int = TOPK,
-    coarse_k: int = KMEANS_K,
-    coarse_iter: int = KMEANS_ITER,
-    m: int = DEFAULT_PQ_M,
-    k: int = DEFAULT_PQ_K,
-    n_iter: int = DEFAULT_PQ_ITER,
-    dim: int = DIM,
-) -> DataFrame:
+def ivfpq_residual_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVFADC proper (Jegou et al. 2011): PQ codebooks are trained on
     RESIDUALS v - coarse_centroid(cell(v)), which concentrates the
     quantizer's capacity on within-cell variation -- tighter codes
@@ -416,8 +390,8 @@ def ivfpq_residual_topk(
 
     from .kmeans import _assign, kmeans_fit
 
-    coarse = kmeans_fit(emb, coarse_k, coarse_iter)
-    lookup = _coarse_lookup_literal(coarse, dim)
+    coarse = kmeans_fit(emb)
+    lookup = _coarse_lookup_literal(coarse)
 
     # the assign expression is narrow and already carries the vector,
     # so the residual is one more per-row expression -- no join of
@@ -433,10 +407,9 @@ def ivfpq_residual_topk(
             lambda x, y: x.cast("double") - y,
         ).alias("res"),
     )
-    codebooks = pq_fit(res, m, k, n_iter, dim, vec_col="res")
-    codes = pq_codes(res, m, k, n_iter, dim, vec_col="res",
-                     codebooks=codebooks, carry_cols=("cell",))
-    w = dim // m
+    codebooks = pq_fit(res, vec_col="res")
+    codes = pq_codes(res, vec_col="res", codebooks=codebooks, carry_cols=("cell",))
+    w = DIM // DEFAULT_PQ_M
 
     spark = emb.sparkSession
     coarse_df = spark.createDataFrame(
@@ -488,4 +461,4 @@ def ivfpq_residual_topk(
         .groupBy("query_id", "vec_id")
         .agg(dsum.cast("string").cast("double").alias("adc"))
     )
-    return _adc_topk(scored, topk)
+    return _adc_topk(scored)

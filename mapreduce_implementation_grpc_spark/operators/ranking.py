@@ -160,7 +160,6 @@ def with_global_row_number(
     key: str,
     tiebreaks: Sequence[Column] = (),
     ascending: bool = True,
-    n_buckets: int = 1024,
     out_col: str = "rn",
     total_col: str | None = None,
 ) -> DataFrame:
@@ -173,7 +172,7 @@ def with_global_row_number(
     for the 2^53 caveat on huge integer keys); `tiebreaks` are
     F.asc/F.desc columns applied after the key, exactly as in a
     window ORDER BY."""
-    bk = bucketize_by_key(df, key, ascending=ascending, n_buckets=n_buckets)
+    bk = bucketize_by_key(df, key, ascending=ascending)
     offsets = bucket_offsets(bk)
     w_local = Window.partitionBy("_bkt").orderBy(F.asc("_ak"), *tiebreaks)
     ranked = (

@@ -36,27 +36,24 @@ ITEM_COL = "event_type"
 USER_COL = "user_id"
 
 
-def contiguous_sequences(
-    events: DataFrame,
-    n: int = 3,
-    min_support: int = 1,
-    top_n: int = 20,
-) -> DataFrame:
-    """Top contiguous length-`n` item sequences by user support:
-    [step_1..step_n, support, occurrences], support = distinct users
-    executing the run at least once, occurrences = total runs;
-    ordered support desc, occurrences desc, then steps. `n` >= 2."""
-    if n < 2:
-        raise ValueError(f"contiguous_sequences: n must be >= 2, got {n}")
+SEQ_N = 3  # contiguous_sequences mines event-type trigrams ...
+SEQ_TOP_N = 20  # ... and keeps the top 20
+
+
+def contiguous_sequences(events: DataFrame) -> DataFrame:
+    """Top SEQ_TOP_N contiguous length-SEQ_N item sequences by user
+    support: [step_1..step_SEQ_N, support, occurrences], support =
+    distinct users executing the run at least once, occurrences =
+    total runs; ordered support desc, occurrences desc, then steps."""
     w = Window.partitionBy(USER_COL).orderBy(F.asc("ts"), F.asc("event_id"))
     steps = [F.col(ITEM_COL).alias("step_1")] + [
         F.lead(ITEM_COL, i).over(w).alias(f"step_{i + 1}")
-        for i in range(1, n)
+        for i in range(1, SEQ_N)
     ]
     grams = events.select(F.col(USER_COL).alias("_u"), *steps).filter(
-        F.col(f"step_{n}").isNotNull()
+        F.col(f"step_{SEQ_N}").isNotNull()
     )
-    step_names = [f"step_{i + 1}" for i in range(n)]
+    step_names = [f"step_{i + 1}" for i in range(SEQ_N)]
     per_user = grams.groupBy("_u", *step_names).agg(
         F.count("*").alias("_occ")
     )
@@ -66,11 +63,10 @@ def contiguous_sequences(
             F.count("*").alias("support"),
             F.sum("_occ").alias("occurrences"),
         )
-        .filter(F.col("support") >= min_support)
         .orderBy(
             F.desc("support"),
             F.desc("occurrences"),
             *[F.asc(c) for c in step_names],
         )
-        .limit(top_n)
+        .limit(SEQ_TOP_N)
     )

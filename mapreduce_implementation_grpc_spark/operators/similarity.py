@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_col, l2_norm_col
 from ..materialize import materialize
-from .kmeans import KMEANS_ITER, KMEANS_K
 
 DEFAULT_NUM_PLANES = 8
 
@@ -58,10 +57,8 @@ def _mix64(x: int) -> int:
     return z ^ (z >> 31)
 
 
-def lsh_planes(
-    num_planes: int = DEFAULT_NUM_PLANES, dim: int = DIM
-) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes in [-0.5, 0.5):
+def lsh_planes(num_planes: int = DEFAULT_NUM_PLANES) -> list[list[float]]:
+    """Deterministic DIM-wide pseudo-random hyperplanes in [-0.5, 0.5):
     splitmix64 on the flat index. Reproducible in any engine (the
     oracle embeds the same double literals), no RNG state.
 
@@ -75,7 +72,7 @@ def lsh_planes(
     measured recall matches the 1-(1-p^r)^B prediction (SCALING.md
     r9 ANN ladder)."""
     return [
-        [_mix64(p * dim + d) / 2.0**64 - 0.5 for d in range(dim)]
+        [_mix64(p * DIM + d) / 2.0**64 - 0.5 for d in range(DIM)]
         for p in range(num_planes)
     ]
 
@@ -172,8 +169,8 @@ def _bucket_col(vec, planes: list[list[float]]):
     return bucket
 
 
-def with_lsh_bucket(emb: DataFrame, dim: int = DIM) -> DataFrame:
-    return emb.withColumn("bucket", _bucket_col(F.col(VEC_COL), lsh_planes(dim=dim)))
+def with_lsh_bucket(emb: DataFrame) -> DataFrame:
+    return emb.withColumn("bucket", _bucket_col(F.col(VEC_COL), lsh_planes()))
 
 
 LSH_BANDS = 24
@@ -184,7 +181,6 @@ def with_lsh_bands(
     emb: DataFrame,
     bands: int = LSH_BANDS,
     rows_per_band: int = LSH_ROWS_PER_BAND,
-    dim: int = DIM,
 ) -> DataFrame:
     """Banded (OR-of-ANDs) hyperplane LSH: `bands` independent tables
     of `rows_per_band` planes each; a pair is a candidate if it
@@ -202,7 +198,7 @@ def with_lsh_bands(
     Scale: row explosion factor = `bands` (one (band, bucket) row per
     band); the (band, bucket) pair is the shuffle key, so candidate
     generation shards like any equi-join."""
-    planes = lsh_planes(bands * rows_per_band, dim)
+    planes = lsh_planes(bands * rows_per_band)
 
     # 32 plane dots per row as interpreted zip_with/aggregate HOFs
     # measured 7.4 s for 2000 rows (the whole banded pair scan's
@@ -233,7 +229,7 @@ def with_lsh_bands(
             for p in range(rows_per_band):
                 w = plane_mat[b * rows_per_band + p]
                 acc = np.zeros(n, dtype=np.float64)
-                # min(): a vector shorter than `dim` contributes its
+                # min(): a vector shorter than DIM contributes its
                 # own length (equivalent to zero-padding), so crafted
                 # low-dim fixtures stay usable
                 for d in range(min(V.shape[1], len(w))):
@@ -583,7 +579,6 @@ def ann_ivf_candidate_counts(
 def ann_ivf_topk(
     emb: DataFrame,
     queries: DataFrame,
-    k: int = TOPK,
     n_probe: int = N_PROBE,
     by: str = "label",
 ) -> DataFrame:
@@ -612,20 +607,13 @@ def ann_ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK)
         .select("query_id", "cell", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
 
-def embedding_dup_pairs(
-    emb: DataFrame,
-    min_cosine: float = MIN_COSINE,
-    use_lsh: bool = False,
-    bands: int = LSH_BANDS,
-    rows_per_band: int = LSH_ROWS_PER_BAND,
-    dim: int = DIM,
-) -> DataFrame:
-    """Near-duplicate vector pairs by cosine.
+def embedding_dup_pairs(emb: DataFrame, use_lsh: bool = False) -> DataFrame:
+    """Near-duplicate vector pairs by cosine >= MIN_COSINE.
 
     use_lsh=False: full O(n^2) pair scan -- the oracle-checkable
     ground truth, fine up to ~10^4 vectors per partition-side.
@@ -633,17 +621,13 @@ def embedding_dup_pairs(
     form if they collide in ANY of the `with_lsh_bands` (band,
     bucket) tables, the 100 TB path. The old AND-only single-bucket
     form recalled only ~5% of the sf0.1 mutual-NN pairs at
-    min_cosine=0.35; the 24x5 splitmix64-plane banding measures pair
+    MIN_COSINE=0.35; the 24x5 splitmix64-plane banding measures pair
     recall 0.92 and mutual-NN recall 0.95 on the same task
     (tests/test_mutual_nn_recall.py pins the floors). Duplicate
     candidates across bands collapse via one distinct() at candidate
     grain (cosine is deterministically rounded, so duplicates are
     exact)."""
-    base = (
-        with_lsh_bands(emb, bands, rows_per_band, dim)
-        if use_lsh
-        else emb
-    )
+    base = with_lsh_bands(emb) if use_lsh else emb
     base = base.withColumn("nrm", l2_norm_col(VEC_COL))  # once per row, pre-join
     cols = ["vec_id", VEC_COL, "nrm"] + (["band", "bucket"] if use_lsh else [])
     a = base.select(*[F.col(c).alias(f"a_{c}") for c in cols])
@@ -683,7 +667,7 @@ def embedding_dup_pairs(
                 dot_col(f"a_{VEC_COL}", f"b_{VEC_COL}") / (F.col("a_nrm") * F.col("b_nrm")), 6
             ).alias("cosine"),
         )
-        .filter(F.col("cosine") >= min_cosine)
+        .filter(F.col("cosine") >= MIN_COSINE)
     )
     if use_lsh:
         # a pair colliding in k bands appears k times with the
@@ -692,16 +676,11 @@ def embedding_dup_pairs(
     return out
 
 
-def semantic_dedup(
-    emb: DataFrame,
-    min_cosine: float = MIN_COSINE,
-    coarse_k: int = KMEANS_K,
-    coarse_iter: int = KMEANS_ITER,
-) -> DataFrame:
+def semantic_dedup(emb: DataFrame) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al., 2023,
     arXiv:2303.09540): cluster the embedding space with k-means,
     then WITHIN each cell drop every vector that has a
-    higher-priority near-duplicate (cosine >= min_cosine and smaller
+    higher-priority near-duplicate (cosine >= MIN_COSINE and smaller
     vec_id -- the deterministic keep-the-canonical rule).
 
     DataFrame[vec_id, cell, keep]: keep=false iff a same-cell
@@ -709,7 +688,7 @@ def semantic_dedup(
 
     Scale shape: pairs only ever form inside a cell (shuffle on
     cell, never a global cross join), so pair cost is bounded by the
-    largest cell, tuned by coarse_k -- at 100 TB you raise k so
+    largest cell, tuned by KMEANS_K -- at 100 TB you raise k so
     cells stay ~10^4 vectors (SemDeDup itself uses k = 11k on
     LAION). Norms are projected once per row before the self-join;
     the drop set is a broadcast-size list of ids whenever near-dup
@@ -719,7 +698,7 @@ def semantic_dedup(
     DuckDB-oracle-checkable end to end."""
     from .kmeans import _assign, kmeans_fit
 
-    cells = _assign(emb, kmeans_fit(emb, coarse_k, coarse_iter), VEC_COL).select(
+    cells = _assign(emb, kmeans_fit(emb), VEC_COL).select(
         "vec_id", "cell"
     )
     base = (
@@ -744,7 +723,7 @@ def semantic_dedup(
         .filter(F.col("a_id") < F.col("b_id"))
         .filter(
             F.round(dot_col("a_vec", "b_vec") / (F.col("a_nrm") * F.col("b_nrm")), 6)
-            >= min_cosine
+            >= MIN_COSINE
         )
         .select(F.col("b_id").alias("vec_id"))
         .distinct()

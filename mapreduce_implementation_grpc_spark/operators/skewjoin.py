@@ -13,10 +13,10 @@ have gaps the salted form covers:
   thresholds and only for the patterns AQE recognizes.
 
 `salted_join` is the explicit, planner-independent form: fact rows get
-a DETERMINISTIC salt in [0, n_salt) derived from a non-join column
-(so one hot key's rows spread over n_salt partitions), the dim side is
-replicated n_salt times with an explode, and the join runs on
-(key, salt). Replication costs n_salt x |dim| rows shuffled -- cheap
+a DETERMINISTIC salt in [0, N_SALT) derived from a non-join column
+(so one hot key's rows spread over N_SALT partitions), the dim side is
+replicated N_SALT times with an explode, and the join runs on
+(key, salt). Replication costs N_SALT x |dim| rows shuffled -- cheap
 when |dim| << |fact|, which is exactly the regime where the dim is
 too big to broadcast but small next to the fact table.
 
@@ -37,16 +37,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+N_SALT = 16  # salted_join spreads each hot key over 16 partitions
+
+
 def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str | list[str],
-    salt_from: str | Column,
-    n_salt: int = 16,
+    fact: DataFrame, dim: DataFrame, key: str | list[str], salt_from: str | Column
 ) -> DataFrame:
     """Equi-join `fact` (large, key-skewed) to `dim` (small next to
     fact, too big to broadcast) on `key`, spreading each hot key over
-    `n_salt` shuffle partitions. Result rows are IDENTICAL to the
+    N_SALT shuffle partitions. Result rows are IDENTICAL to the
     plain join -- the salt only changes partitioning (the registry
     oracle for doc_idf_salted_join is the naive SQL join, so the
     driver's hash match proves it).
@@ -62,9 +61,9 @@ def salted_join(
     """
     keys = [key] if isinstance(key, str) else list(key)
     salt_src = F.col(salt_from) if isinstance(salt_from, str) else salt_from
-    fact_s = fact.withColumn("_salt", F.pmod(F.hash(salt_src), F.lit(n_salt)))
+    fact_s = fact.withColumn("_salt", F.pmod(F.hash(salt_src), F.lit(N_SALT)))
     dim_s = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALT)]))
     )
     return fact_s.join(dim_s.hint("shuffle_hash"), keys + ["_salt"], "inner").drop(
         "_salt"

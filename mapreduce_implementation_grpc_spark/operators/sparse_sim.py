@@ -43,19 +43,19 @@ def _term_counts(docs: DataFrame, text_col: str) -> DataFrame:
     return words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
 
 
-def tf_cosine_pairs(
-    docs: DataFrame,
-    max_df: int = 100,
-    threshold: float = 0.3,
-) -> DataFrame:
+TF_MAX_DF = 100  # tf_cosine_pairs drops terms in more docs than this
+TF_MIN_COSINE = 0.3
+
+
+def tf_cosine_pairs(docs: DataFrame) -> DataFrame:
     """All document pairs (doc_a < doc_b) with token-count cosine >=
-    threshold, computed over terms with df <= max_df.
+    TF_MIN_COSINE, computed over terms with df <= TF_MAX_DF.
 
     Returns DataFrame[doc_a, doc_b, n_shared_terms, cosine(6dp)].
     """
     tf = _term_counts(docs, "text")
     df_t = tf.groupBy("word").agg(F.count("*").alias("df"))
-    kept = tf.join(df_t.filter(F.col("df") <= max_df), "word").select(
+    kept = tf.join(df_t.filter(F.col("df") <= TF_MAX_DF), "word").select(
         "doc_id", "word", "tf"
     )
     norms = kept.groupBy("doc_id").agg(
@@ -97,4 +97,4 @@ def tf_cosine_pairs(
             ).alias("cosine"),
         )
     )
-    return cos.filter(F.col("cosine") >= F.lit(threshold))
+    return cos.filter(F.col("cosine") >= F.lit(TF_MIN_COSINE))

@@ -67,22 +67,25 @@ def word_count_sql(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     )
 
 
-def word_count_salted(corpus: DataFrame, salt_buckets: int = 16) -> DataFrame:
+SALT_BUCKETS = 16
+
+
+def word_count_salted(corpus: DataFrame) -> DataFrame:
     """Skew-resilient two-stage aggregation: groupBy(word, salt) then
     groupBy(word).
 
     The reference corpus has a real heavy hitter ('flight' ~3% of all
     tokens, SURVEY.md F1) and at 100 TB a hot key can overwhelm the
     single reducer that owns it. Salting splits each key across
-    `salt_buckets` reducers in stage 1; stage 2 merges the per-salt
-    partials (cheap: salt_buckets rows per distinct word). With AQE's
+    SALT_BUCKETS reducers in stage 1; stage 2 merges the per-salt
+    partials (cheap: SALT_BUCKETS rows per distinct word). With AQE's
     skew handling this is usually unnecessary for joins, but
     aggregation skew on a hot GROUP BY key is still the user's problem
     -- this operator is the pattern. Result identical to word_count.
     """
     words = tokenize(corpus.select(normalized_col(TEXT_COL).alias("norm")))
     salted = words.withColumn(
-        "salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
+        "salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(SALT_BUCKETS))
     )
     partial = salted.groupBy("word", "salt").agg(F.count("*").alias("c"))
     return partial.groupBy("word").agg(F.sum("c").alias("cnt"))

@@ -29,6 +29,9 @@ from ..sources.catalog import load_table
 
 SESSION_GAP_S = 1800  # a longer gap between a user's events starts a new session
 ASOF_AT = "2024-01-15 00:00:00"  # user_state_asof's point in time
+REGION = "ASIA"  # the customer region of the TPC-H Q5/Q8 shapes
+LATE_DAYS = 90  # late_shipments' and waiting_suppliers' "late" cutoff
+PART_NAME_WORD = "red"  # the part-name filter of product_profit, dominant_suppliers
 
 
 def _dec(col, scale: int = 2):
@@ -96,7 +99,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_by_nation(spark: SparkSession, sf_dir: str, region: str = "ASIA") -> DataFrame:
+def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: fact table joined through a broadcast star of
     dimensions; revenue summed as exact decimal."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -111,14 +114,17 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str, region: str = "ASIA") ->
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(reg.filter(F.col("r_name") == region)),
+        .join(F.broadcast(reg.filter(F.col("r_name") == REGION)),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(_dec2dbl(F.sum(revenue)).alias("revenue"), F.count("*").alias("n_items"))
     )
 
 
-def top_customers(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+TOP_CUSTOMERS_K = 10
+
+
+def top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue per customer + name lookup, deterministic top-k."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
@@ -131,11 +137,14 @@ def top_customers(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
         .select(F.col("c_custkey").alias("custkey"), F.col("c_name").alias("name"),
                 "revenue", "n_orders")
         .orderBy(F.desc("revenue"), F.asc("custkey"))
-        .limit(k)
+        .limit(TOP_CUSTOMERS_K)
     )
 
 
-def customer_order_ranks(spark: SparkSession, sf_dir: str, top_n: int = 3) -> DataFrame:
+ORDER_RANKS_TOP_N = 3
+
+
+def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window: top-N orders per customer by totalprice (row_number
     over a high-cardinality partition key -- shuffles once on
     custkey, no global sort)."""
@@ -143,7 +152,7 @@ def customer_order_ranks(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Da
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (
         orders.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_n)
+        .filter(F.col("rn") <= ORDER_RANKS_TOP_N)
         .select(F.col("o_custkey").alias("custkey"), F.col("o_orderkey").alias("orderkey"),
                 F.col("o_totalprice").alias("totalprice"), F.col("rn").cast("long").alias("rn"))
     )
@@ -163,18 +172,16 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sessionize(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = SESSION_GAP_S
-) -> DataFrame:
+def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via lag: a session starts where the gap from
-    the previous event of the same user exceeds gap_seconds. Output:
+    the previous event of the same user exceeds SESSION_GAP_S. Output:
     per-user session count + event count. Scales as one shuffle on
     user_id; state never leaves the executor (cf. streaming/ for the
     incremental variant)."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    starts = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    starts = F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
     return (
         ev.withColumn("session_start", starts)
         .groupBy("user_id")
@@ -341,7 +348,10 @@ def revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shipping_priority(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+SHIPPING_PRIORITY_K = 10
+
+
+def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective filters on all three tables, join,
     aggregate, top-k. Filters sit below the joins (pushed to scans);
     top-k is TakeOrdered with full tie-breaks."""
@@ -361,7 +371,7 @@ def shipping_priority(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFram
         )
         .agg(_dec2dbl(F.sum(rev)).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("orderdate"), F.asc("orderkey"))
-        .limit(k)
+        .limit(SHIPPING_PRIORITY_K)
     )
 
 
@@ -380,9 +390,7 @@ def events_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def orders_price_deciles(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 1024
-) -> DataFrame:
+def orders_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(10) decile summary of order value: each decile's row
     count and min/max price -- the distribution-summary shape for
     curriculum bucketing / data balancing.
@@ -397,7 +405,7 @@ def orders_price_deciles(
     2. exact global rank range [s, e] of each price run via a
        two-level cumulative sum: a value-range bucket id (monotone in
        price, so bucket order == price order), per-bucket totals
-       (<= n_buckets aggregate rows; the only single-partition window
+       (<= 1024 aggregate rows; the only single-partition window
        in the plan runs over THAT), plus a within-bucket running sum
        partitioned by bucket;
     3. the 10 ntile intervals in closed form from the 1-row count
@@ -420,7 +428,7 @@ def orders_price_deciles(
     # the distribution is lazily checkpointed inside bucketize, so the
     # within-bucket cumsum, the offsets, and the N aggregate all read
     # one materialization instead of re-scanning orders
-    db = bucketize_by_key(dist, "o_totalprice", n_buckets=n_buckets)
+    db = bucketize_by_key(dist, "o_totalprice")
     boff = bucket_offsets(db, weight=F.col("cnt"))
     wl = (
         Window.partitionBy("_bkt")
@@ -485,7 +493,10 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(keep).select("doc_id", "lang", "source")
 
 
-def large_orders(spark: SparkSession, sf_dir: str, min_qty: float = 150.0) -> DataFrame:
+LARGE_ORDER_QTY = 150.0
+
+
+def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING-filtered aggregate joined back to the
     order/customer dimensions. The heavy groupBy runs on the narrow
     (orderkey, quantity) projection; only qualifying keys join."""
@@ -495,7 +506,7 @@ def large_orders(spark: SparkSession, sf_dir: str, min_qty: float = 150.0) -> Da
     big = (
         li.groupBy("l_orderkey")
         .agg(_dec2dbl(F.sum(_dec(F.col("l_quantity")))).alias("total_qty"))
-        .filter(F.col("total_qty") > min_qty)
+        .filter(F.col("total_qty") > LARGE_ORDER_QTY)
     )
     return (
         big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -678,12 +689,17 @@ def events_trailing_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def customers_without_orders(spark: SparkSession, sf_dir: str, since: str = "2000-01-01") -> DataFrame:
+LAPSED_SINCE = "2000-01-01"
+
+
+def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti join: customers with no orders since a cutoff (lapsed
     customers). Planned as a hash anti join; the date filter pushes
     into the orders scan so the build side only carries recent keys."""
     cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= F.lit(since))
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderdate") >= F.lit(LAPSED_SINCE)
+    )
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .select(F.col("c_custkey").alias("custkey"), F.col("c_name").alias("name"))
@@ -842,9 +858,10 @@ def cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def nation_market_share(
-    spark: SparkSession, sf_dir: str, region: str = "ASIA", nation: str = "NATION_2"
-) -> DataFrame:
+NATION_MARKET_SHARE_NATION = "NATION_2"
+
+
+def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one supplier-nation's share of yearly revenue
     to customers in a region.
 
@@ -874,7 +891,7 @@ def nation_market_share(
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(cnat), F.col("c_nationkey") == F.col("cn_key"))
         .join(
-            F.broadcast(reg.filter(F.col("r_name") == region)),
+            F.broadcast(reg.filter(F.col("r_name") == REGION)),
             F.col("cn_region") == F.col("r_regionkey"),
         )
         .join(sup, F.col("l_suppkey") == F.col("s_suppkey"))
@@ -884,7 +901,9 @@ def nation_market_share(
     agg = joined.groupBy(F.year("o_orderdate").cast("long").alias("o_year")).agg(
         F.sum(disc_price).alias("total_dec"),
         F.sum(
-            F.when(F.col("supp_nation") == nation, disc_price).otherwise(zero)
+            F.when(
+                F.col("supp_nation") == NATION_MARKET_SHARE_NATION, disc_price
+            ).otherwise(zero)
         ).alias("nation_dec"),
     )
     return agg.select(
@@ -923,15 +942,16 @@ def events_last_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def segment_event_stats_salted(
-    spark: SparkSession, sf_dir: str, salts: int = 8
-) -> DataFrame:
+SEGMENT_SALTS = 8
+
+
+def segment_event_stats_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant fact-to-dimension join: events.user_id is a
     HOT-KEY column (150 distinct users at sf0.01 -- a plain shuffle
     join puts entire users on single tasks). Salting spreads each
-    user's events over `salts` tasks: the dim side is exploded
-    `salts` ways (tiny: n_customers x salts rows), the fact side
-    computes salt = pmod(xxhash64(event_id), salts) -- uniform and
+    user's events over SEGMENT_SALTS tasks: the dim side is exploded
+    that many ways (tiny: n_customers x SEGMENT_SALTS rows), the fact
+    side computes salt = pmod(xxhash64(event_id), SEGMENT_SALTS) -- uniform and
     deterministic -- and the equi-join runs on (key, salt).
 
     The join result is identical to the unsalted join (the oracle IS
@@ -945,9 +965,11 @@ def segment_event_stats_salted(
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     dim = cust.withColumn(
-        "salt", F.explode(F.array(*[F.lit(s) for s in range(salts)]))
+        "salt", F.explode(F.array(*[F.lit(s) for s in range(SEGMENT_SALTS)]))
     )
-    fact = ev.withColumn("salt", F.pmod(F.xxhash64("event_id"), F.lit(salts)).cast("int"))
+    fact = ev.withColumn(
+        "salt", F.pmod(F.xxhash64("event_id"), F.lit(SEGMENT_SALTS)).cast("int")
+    )
     joined = fact.join(
         dim, (F.col("user_id") == F.col("c_custkey")) & (fact["salt"] == dim["salt"])
     )
@@ -958,9 +980,9 @@ def segment_event_stats_salted(
     )
 
 
-def late_shipments(spark: SparkSession, sf_dir: str, late_days: int = 90) -> DataFrame:
+def late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape adapted to this schema: per order priority,
-    how many lineitems shipped more than `late_days` after the order
+    how many lineitems shipped more than LATE_DAYS after the order
     date. One equi-join on the uniform orderkey + a conditional
     aggregation -- both map-side-combinable; the date arithmetic is
     exact integer day math in both engines."""
@@ -968,7 +990,7 @@ def late_shipments(spark: SparkSession, sf_dir: str, late_days: int = 90) -> Dat
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = (F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > late_days).cast(
+    late = (F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > LATE_DAYS).cast(
         "long"
     )
     return (
@@ -1021,9 +1043,12 @@ def purchase_and_signup_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.intersect(b)
 
 
-def events_anomaly_zscore(spark: SparkSession, sf_dir: str, z: float = 3.0) -> DataFrame:
+ANOMALY_Z = 3.0
+
+
+def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type z-score outlier detection: events whose value sits
-    more than z standard deviations from their type's mean. Moments
+    more than ANOMALY_Z standard deviations from their type's mean. Moments
     are exact decimal sums (sum and sum-of-squares), so mean/std --
     and the exact outlier set -- reproduce cross-engine; the
     population variance uses the computational formula
@@ -1044,7 +1069,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str, z: float = 3.0) -> D
         F.sqrt((F.col("s2") / F.col("n")) - (F.col("s1") / F.col("n")) * (F.col("s1") / F.col("n"))).alias("sd"),
     )
     # nullif guards the degenerate sd=0 case (constant-valued type):
-    # the null zscore fails abs()>z in both engines, so such rows are
+    # the null zscore fails abs()>ANOMALY_Z in both engines, so such rows are
     # dropped identically here and in the DuckDB oracle (no ANSI
     # DIVIDE_BY_ZERO vs inf divergence).
     out = (
@@ -1054,7 +1079,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str, z: float = 3.0) -> D
             (F.col("value").cast("double") - F.col("mu"))
             / F.nullif(F.col("sd"), F.lit(0.0)),
         )
-        .filter(F.abs(F.col("zscore")) > z)
+        .filter(F.abs(F.col("zscore")) > ANOMALY_Z)
     )
     return out.select(
         "event_id",
@@ -1116,11 +1141,12 @@ def customer_spend_percentiles_scalable(spark: SparkSession, sf_dir: str) -> Dat
     )
 
 
-def order_priority_backlog(
-    spark: SparkSession, sf_dir: str, late_days: int = 60
-) -> DataFrame:
+BACKLOG_DAYS = 60
+
+
+def order_priority_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: per priority, how many ORDERS have at least
-    one lineitem shipped more than `late_days` after the order date
+    one lineitem shipped more than BACKLOG_DAYS after the order date
     -- the EXISTS pattern. Spark plans the exists as a LEFT SEMI join
     on the uniform orderkey (no row explosion: an order with 7 late
     lineitems counts once, without a distinct), then a tiny
@@ -1132,7 +1158,7 @@ def order_priority_backlog(
     backlogged = orders.join(
         li,
         (F.col("o_orderkey") == F.col("l_orderkey"))
-        & (F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > late_days),
+        & (F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > BACKLOG_DAYS),
         "left_semi",
     )
     return (
@@ -1141,7 +1167,10 @@ def order_priority_backlog(
     )
 
 
-def returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
+RETURNED_TOP_K = 20
+
+
+def returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: the top-k customers by revenue lost to
     returns (l_returnflag = 'R'), with their nation. The fact-side
     filter pushes into the parquet scan; revenue sums as exact
@@ -1174,15 +1203,16 @@ def returned_items(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
             _dec2dbl(F.col("rev_dec")).alias("returned_revenue"),
         )
         .orderBy(F.desc("returned_revenue"), F.asc("custkey"))
-        .limit(k)
+        .limit(RETURNED_TOP_K)
     )
 
 
-def important_parts(
-    spark: SparkSession, sf_dir: str, ratio: float = 1.5
-) -> DataFrame:
+IMPORTANT_RATIO = 1.5
+
+
+def important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (partsupp-free variant): parts whose total
-    sold value exceeds `ratio` times the AVERAGE part's value -- the
+    sold value exceeds IMPORTANT_RATIO times the AVERAGE part's value -- the
     HAVING-against-a-global-aggregate pattern, scale-invariant (a
     fixed absolute share would go empty as the part count grows).
     The global total and part count derive from the per-part
@@ -1207,7 +1237,7 @@ def important_parts(
     return (
         per_part.filter(
             _dec2dbl(F.col("val_dec"))
-            > F.lit(ratio) * _dec2dbl(F.col("tot_dec")) / F.col("n_parts")
+            > F.lit(IMPORTANT_RATIO) * _dec2dbl(F.col("tot_dec")) / F.col("n_parts")
         )
         .select(
             F.col("l_partkey").alias("partkey"),
@@ -1253,12 +1283,13 @@ def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sales_opportunity(
-    spark: SparkSession, sf_dir: str, since: str = "1998-06-01"
-) -> DataFrame:
+OPPORTUNITY_SINCE = "1998-06-01"
+
+
+def sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (phone-code-free variant): per market segment,
     the customers with above-average positive account balance and no
-    order since `since` (lapsed high-value accounts) -- the
+    order since OPPORTUNITY_SINCE (lapsed high-value accounts) -- the
     scalar-subquery + anti-join pattern. The global average is a
     broadcast 1-row aggregate; the anti-join keys on the uniform
     custkey with the date filter pushed into the orders scan; output
@@ -1268,7 +1299,7 @@ def sales_opportunity(
     )
     orders = (
         load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit(since))
+        .filter(F.col("o_orderdate") >= F.lit(OPPORTUNITY_SINCE))
         .select("o_custkey")
     )
     bal = F.col("c_acctbal").cast("decimal(12,2)")
@@ -1292,12 +1323,10 @@ def sales_opportunity(
     )
 
 
-def volume_shipping(
-    spark: SparkSession,
-    sf_dir: str,
-    nation_a: str = "NATION_1",
-    nation_b: str = "NATION_2",
-) -> DataFrame:
+VOLUME_NATIONS = ("NATION_1", "NATION_2")
+
+
+def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: revenue shipped between two nations, grouped
     by (supplier nation, customer nation, ship year).
 
@@ -1314,7 +1343,7 @@ def volume_shipping(
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
 
-    two = nation.filter(F.col("n_name").isin(nation_a, nation_b))
+    two = nation.filter(F.col("n_name").isin(*VOLUME_NATIONS))
     s2 = supp.join(
         F.broadcast(two.select(F.col("n_nationkey").alias("s_nk"),
                                F.col("n_name").alias("supp_nation"))),
@@ -1346,13 +1375,11 @@ def volume_shipping(
     )
 
 
-def market_share(
-    spark: SparkSession,
-    sf_dir: str,
-    nation: str = "NATION_1",
-    region: str = "ASIA",
-    part_type: str = "PROMO",
-) -> DataFrame:
+MARKET_SHARE_NATION = "NATION_1"
+MARKET_SHARE_PART_TYPE = "PROMO"
+
+
+def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: the target nation's share of revenue for one
     part type sold into one region, per order year.
 
@@ -1370,7 +1397,7 @@ def market_share(
     reg = load_table(spark, sf_dir, "region")
     part = load_table(spark, sf_dir, "part")
 
-    p = part.filter(F.col("p_type") == part_type).select("p_partkey")
+    p = part.filter(F.col("p_type") == MARKET_SHARE_PART_TYPE).select("p_partkey")
     sn = supp.join(
         F.broadcast(nat.select(F.col("n_nationkey").alias("s_nk"),
                                F.col("n_name").alias("supp_nation"))),
@@ -1382,7 +1409,7 @@ def market_share(
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(reg.filter(F.col("r_name") == region)),
+            F.broadcast(reg.filter(F.col("r_name") == REGION)),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("c_custkey")
@@ -1401,7 +1428,7 @@ def market_share(
     return (
         joined.groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
-            _dec2dbl(F.sum(F.when(F.col("supp_nation") == nation,
+            _dec2dbl(F.sum(F.when(F.col("supp_nation") == MARKET_SHARE_NATION,
                                   revenue.cast("decimal(16,6)")).otherwise(zero)))
             .alias("nation_revenue"),
             _dec2dbl(F.sum(revenue)).alias("total_revenue"),
@@ -1415,9 +1442,10 @@ def market_share(
     )
 
 
-def large_volume_customers(
-    spark: SparkSession, sf_dir: str, qty_threshold: int = 180
-) -> DataFrame:
+LARGE_VOLUME_QTY = 180
+
+
+def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: customers whose single orders exceed a total
     line quantity — an IN-subquery over an aggregate, planned as an
     inner join against the aggregated (and therefore tiny post-HAVING)
@@ -1430,7 +1458,7 @@ def large_volume_customers(
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(12,2)")).alias("tq"))
-        .filter(F.col("tq") > F.lit(qty_threshold).cast("decimal(12,2)"))
+        .filter(F.col("tq") > F.lit(LARGE_VOLUME_QTY).cast("decimal(12,2)"))
     )
     return (
         orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -1503,15 +1531,17 @@ def customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def top_supplier(
-    spark: SparkSession, sf_dir: str, start: str = "1996-01-01", end: str = "1996-04-01"
-) -> DataFrame:
+TOP_SUPPLIER_QUARTER = ("1996-01-01", "1996-04-01")  # [start, end)
+
+
+def top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) with maximum revenue over one
     quarter -- the revenue 'view' plus a scalar max subquery. The view
     aggregates lineitem once (decimal-exact, so the equality against
     the max is safe cross-engine); the 1-row max is broadcast and the
     equality filter evaluates map-side over the tiny per-supplier
     aggregate. Ties all surface, as in the spec."""
+    start, end = TOP_SUPPLIER_QUARTER
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(end).cast("timestamp"))
@@ -1536,9 +1566,10 @@ def top_supplier(
     )
 
 
-def small_qty_revenue(
-    spark: SparkSession, sf_dir: str, brand: str = "Brand#3"
-) -> DataFrame:
+SMALL_QTY_BRAND = "Brand#3"
+
+
+def small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: yearly-average revenue lost to small-quantity
     orders -- the correlated AVG subquery per part, decorrelated into a
     per-part aggregate joined back to the lines. The 0.2*avg threshold
@@ -1547,7 +1578,7 @@ def small_qty_revenue(
     both engines keep identical rows. lineitem shuffles once on partkey
     for the aggregate and reuses that partitioning for the join; the
     brand filter lands on the broadcast part side."""
-    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == brand)
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == SMALL_QTY_BRAND)
     li = load_table(spark, sf_dir, "lineitem").join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     )
@@ -1568,9 +1599,10 @@ def small_qty_revenue(
     )
 
 
-def waiting_suppliers(
-    spark: SparkSession, sf_dir: str, late_days: int = 90, topn: int = 25
-) -> DataFrame:
+WAITING_TOP_N = 25
+
+
+def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the SOLE late shipper on a
     finished multi-supplier order. Canonical Q21 is an EXISTS plus a
     NOT-EXISTS self-join on lineitem; the scalable decorrelation is a
@@ -1583,7 +1615,7 @@ def waiting_suppliers(
     joined fact before the shuffle (measured 1.9x slower at sf0.1);
     the two-level form's second shuffle is over the already-tiny
     per-(order,supplier) rows. 'Late' adapts the missing
-    l_receiptdate/l_commitdate as shipping > late_days after the order
+    l_receiptdate/l_commitdate as shipping > LATE_DAYS after the order
     date. Top-N by waiting count => TakeOrderedAndProject."""
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
@@ -1592,7 +1624,7 @@ def waiting_suppliers(
         orders, F.col("l_orderkey") == F.col("o_orderkey")
     )
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
-        f"INTERVAL {late_days} DAYS"
+        f"INTERVAL {LATE_DAYS} DAYS"
     )
     per_os = li.groupBy("l_orderkey", "l_suppkey").agg(F.max(late).alias("late"))
     per_order = per_os.groupBy("l_orderkey").agg(
@@ -1612,13 +1644,11 @@ def waiting_suppliers(
             F.col("numwait"),
         )
         .orderBy(F.desc("numwait"), F.asc("suppkey"))
-        .limit(topn)
+        .limit(WAITING_TOP_N)
     )
 
 
-def product_profit(
-    spark: SparkSession, sf_dir: str, name_word: str = "red"
-) -> DataFrame:
+def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation and order year for
     parts matching a name word. This schema has no partsupp, so the
     ps_supplycost term becomes a retail-price cost proxy
@@ -1627,7 +1657,7 @@ def product_profit(
     the name predicate prunes lineitem map-side; supplier/nation
     broadcast; orders joins on orderkey for the year."""
     part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_name").contains(name_word)
+        F.col("p_name").contains(PART_NAME_WORD)
     )
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
@@ -1685,9 +1715,10 @@ def supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dominant_suppliers(
-    spark: SparkSession, sf_dir: str, name_word: str = "red", year: int = 1997
-) -> DataFrame:
+DOMINANT_YEAR = 1997
+
+
+def dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers holding 'excess' share of a part --
     availqty > half the year's shipped quantity in the canonical query;
     without partsupp this becomes suppliers who themselves shipped MORE
@@ -1696,11 +1727,11 @@ def dominant_suppliers(
     over one partkey shuffle, then a DISTINCT supplier semi-set joined
     to the supplier dimension by broadcast."""
     part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_name").contains(name_word)
+        F.col("p_name").contains(PART_NAME_WORD)
     ).select("p_partkey")
     li = (
         load_table(spark, sf_dir, "lineitem")
-        .filter(F.year("l_shipdate") == year)
+        .filter(F.year("l_shipdate") == DOMINANT_YEAR)
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
     )
     qty = F.col("l_quantity").cast("decimal(12,2)")
@@ -1731,9 +1762,7 @@ def dominant_suppliers(
     )
 
 
-def purchase_attribution(
-    spark: SparkSession, sf_dir: str, gap_seconds: int = SESSION_GAP_S
-) -> DataFrame:
+def purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch attribution: every purchase attributed to the FIRST
     event of its session (lag-gap sessions, same 30-min rule as
     events_sessionize) -- the marketing-analytics query behind 'which
@@ -1747,7 +1776,7 @@ def purchase_attribution(
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    starts = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
+    starts = F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
     sess = ev.withColumn(
         "session_id",
         F.sum(starts).over(w.rowsBetween(Window.unboundedPreceding, 0)),

@@ -176,7 +176,7 @@ def q_dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents")).select(
         "doc_a", "doc_b"
     )
-    return label_propagation(pairs, max_iter=20)
+    return label_propagation(pairs)
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -974,14 +974,12 @@ def _absorb_p(tr: DataFrame, states: DataFrame, steps: int) -> DataFrame:
     return p
 
 
-def q_event_conversion_absorption(
-    spark: SparkSession, sf_dir: str, steps: int = MARKOV_STEPS
-) -> DataFrame:
+def q_event_conversion_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Absorbing-chain conversion probability: for each event type,
     the probability that a user's Markov walk (first-order, the
-    event_transitions matrix) reaches 'purchase' within `steps`
+    event_transitions matrix) reaches 'purchase' within MARKOV_STEPS
     steps -- the attribution-modeling primitive behind Markov
-    removal-effect analysis, computed by `steps` unrolled
+    removal-effect analysis, computed by MARKOV_STEPS unrolled
     value-iteration rounds p_k(s) = sum_t T[s,t] * p_{k-1}(t) with
     'purchase' clamped to 1 (absorbing). ALL iteration work happens
     at event-TYPE grain (a k x k matrix, k = |event types|): the one
@@ -990,7 +988,7 @@ def q_event_conversion_absorption(
     summed (the pagerank recipe) so every round is bit-identical
     cross-engine. [event_type, p_convert]."""
     _, tr, states = _markov_transitions(spark, sf_dir)
-    p = _absorb_p(tr, states, steps)
+    p = _absorb_p(tr, states, MARKOV_STEPS)
     return p.select(
         F.col("node").alias("event_type"), F.col("p").alias("p_convert")
     ).orderBy("event_type")

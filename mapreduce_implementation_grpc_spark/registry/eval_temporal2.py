@@ -112,9 +112,7 @@ def q_frequent_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gram, user) -> (gram) groupBy. Oracle = native lead() SQL."""
     from ..operators.seqmine import contiguous_sequences
 
-    return contiguous_sequences(
-        load_table(spark, sf_dir, "events"), n=3, top_n=20
-    )
+    return contiguous_sequences(load_table(spark, sf_dir, "events"))
 
 
 def q_user_day_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -158,7 +158,6 @@ def q_events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         purchases,
         clicks,
         by="user_id",
-        right_ts="ts",
         value_cols=["click_id"],
         tolerance_us=2 * 3600 * 1_000_000,
     )

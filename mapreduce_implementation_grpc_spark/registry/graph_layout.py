@@ -598,7 +598,7 @@ def q_cosupply_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join + degree arithmetic exact."""
     from ..operators.linkpred import cosupply_link_prediction
 
-    return cosupply_link_prediction(spark, sf_dir, top_n=20)
+    return cosupply_link_prediction(spark, sf_dir)
 
 
 def q_cosupply_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,7 +617,7 @@ def q_cosupply_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataF
     oracle-of-record twin."""
     from ..operators.linkpred import cosupply_link_prediction
 
-    return cosupply_link_prediction(spark, sf_dir, top_n=20, max_degree=256)
+    return cosupply_link_prediction(spark, sf_dir, max_degree=256)
 
 
 def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -79,7 +79,7 @@ def q_multimodal_phash_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling (every 4th 16-byte chunk) via mapInPandas --
+    """Frame sampling (every FRAME_EVERY_K-th FRAME_BYTES chunk) via mapInPandas --
     the video-frame-sampler shape with the deterministic stand-in
     chunker; fully oracle-checked byte-for-byte from hex(encode)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -87,7 +87,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image-resize shape: stride the byte stream to an 8x8 'thumb'
+    """Image-resize shape: stride the byte stream to a THUMB_SIZE^2-byte 'thumb'
     via mapInPandas; oracle recomputes the strided hex pairs."""
     docs = load_table(spark, sf_dir, "documents")
     return resize_images(with_binary_payload(docs))

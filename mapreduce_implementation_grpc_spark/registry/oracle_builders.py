@@ -64,7 +64,7 @@ def _bucket_terms_sql() -> str:
     """The deterministic LSH bucket id as a SQL expression over a
     DOUBLE[] column named dvec -- the exact twin of
     operators.similarity._bucket_col."""
-    planes = lsh_planes(DEFAULT_NUM_PLANES, DIM)
+    planes = lsh_planes(DEFAULT_NUM_PLANES)
     return " + ".join(
         "(CASE WHEN list_dot_product(dvec, [{w}]) >= 0 THEN {p2} ELSE 0 END)".format(
             w=", ".join(repr(x) for x in plane), p2=2**p
@@ -82,7 +82,7 @@ def _banded_bb_sql(
     [b*r, (b+1)*r) of the splitmix64 sequence, bucket = per-band
     local sign bits (2^0..2^(r-1)). The defaults are with_lsh_bands'
     own: LSH_BANDS x LSH_ROWS_PER_BAND."""
-    planes = lsh_planes(bands * rows_per_band, DIM)
+    planes = lsh_planes(bands * rows_per_band)
     selects = []
     for b in range(bands):
         band_planes = planes[b * rows_per_band : (b + 1) * rows_per_band]

@@ -30,11 +30,39 @@ from .events_analytics import CUSUM_SLACK, CUSUM_THRESHOLD, RFM_TILES
 from .reference_surface import WORDCOUNT_TOP_N, _CORPUS_TXT
 from .similarity import N_QUERIES, TOPIC_MIN_COUNT, TOPIC_TOPN
 from .text_shaping import BPE_MERGES, BPE_PAIR_TOPN
+from ..functions.indexing import INDEX_MAX_DF, PMI_MIN_COUNT, TOP_TERMS_K
+from ..multimodal.binary_ops import FRAME_BYTES, FRAME_EVERY_K, THUMB_SIZE
 from ..operators.bloom import BITS_PER_SLOT, SLOT_SHIFT
-from ..operators.chunking import DEFAULT_PACK_BUDGET
+from ..operators.chunking import DEFAULT_CHUNK_SIZE, DEFAULT_PACK_BUDGET, DEFAULT_STRIDE
+from ..operators.dedup import RARE_DOC_FREQ
 from ..operators.hll import M_REGISTERS, RAW_SCALE
 from ..operators.similarity import MIN_COSINE, N_PROBE, TOPK
-from ..plans.analytics import SESSION_GAP_S
+from ..operators.sparse_sim import TF_MAX_DF, TF_MIN_COSINE
+from ..plans.analytics import (
+    ANOMALY_Z,
+    BACKLOG_DAYS,
+    DOMINANT_YEAR,
+    IMPORTANT_RATIO,
+    LAPSED_SINCE,
+    LARGE_ORDER_QTY,
+    LARGE_VOLUME_QTY,
+    LATE_DAYS,
+    MARKET_SHARE_NATION,
+    MARKET_SHARE_PART_TYPE,
+    NATION_MARKET_SHARE_NATION,
+    OPPORTUNITY_SINCE,
+    ORDER_RANKS_TOP_N,
+    PART_NAME_WORD,
+    REGION,
+    RETURNED_TOP_K,
+    SESSION_GAP_S,
+    SHIPPING_PRIORITY_K,
+    SMALL_QTY_BRAND,
+    TOP_CUSTOMERS_K,
+    TOP_SUPPLIER_QUARTER,
+    VOLUME_NATIONS,
+    WAITING_TOP_N,
+)
 from ..sources.text import NUM_TASKS
 from .oracle_builders import (
     _BLOOM_HITS,
@@ -183,11 +211,11 @@ ORACLES: dict[str, str] = {
       WITH t AS ({_SQL_TOKS}),
       nz AS (SELECT doc_id, toks FROM t WHERE len(toks) > 0),
       s AS (SELECT doc_id, toks,
-                   unnest(range(1, greatest(len(toks) - 1, 0) + 2, 24)) AS start1
+                   unnest(range(1, greatest(len(toks) - 1, 0) + 2, {DEFAULT_STRIDE})) AS start1
             FROM nz),
       c AS (SELECT doc_id,
-                   CAST((start1 - 1) // 24 AS BIGINT) AS chunk_id,
-                   list_slice(toks, start1, start1 + 31) AS chunk
+                   CAST((start1 - 1) // {DEFAULT_STRIDE} AS BIGINT) AS chunk_id,
+                   list_slice(toks, start1, start1 + {DEFAULT_CHUNK_SIZE - 1}) AS chunk
             FROM s)
       SELECT doc_id, chunk_id,
              CAST(len(chunk) AS BIGINT) AS n_tokens,
@@ -261,7 +289,7 @@ ORACLES: dict[str, str] = {
       p AS (SELECT DISTINCT doc_id, unnest(shset) AS phrase FROM s)
       SELECT phrase, count(*) AS df,
              array_to_string(list_sort(list(doc_id)), ',') AS postings
-      FROM p GROUP BY phrase HAVING count(*) BETWEEN 2 AND 20
+      FROM p GROUP BY phrase HAVING count(*) BETWEEN 2 AND {INDEX_MAX_DF}
     """,
     "bigram_pmi": f"""
       WITH t AS ({_SQL_TOKS}),
@@ -270,7 +298,7 @@ ORACLES: dict[str, str] = {
       b AS (SELECT pr[1] AS w1, pr[2] AS w2, count(*) AS cnt
             FROM (SELECT unnest(list_transform(range(1, len(toks)),
                         i -> [toks[i], toks[i + 1]])) AS pr FROM t)
-            GROUP BY 1, 2 HAVING count(*) >= 5),
+            GROUP BY 1, 2 HAVING count(*) >= {PMI_MIN_COUNT}),
       tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n_tok_total FROM u),
       nbt AS (SELECT CAST(sum(greatest(len(toks) - 1, 0)) AS DOUBLE) AS n_big_total
               FROM t)
@@ -289,7 +317,7 @@ ORACLES: dict[str, str] = {
         SELECT lang, word, cnt,
                CAST(row_number() OVER (PARTITION BY lang
                     ORDER BY cnt DESC, word ASC) AS BIGINT) AS rn
-        FROM cc) WHERE rn <= 5
+        FROM cc) WHERE rn <= {TOP_TERMS_K}
     """,
     "incremental_dedup": """
       WITH fp AS (
@@ -619,7 +647,7 @@ ORACLES: dict[str, str] = {
     "ngram_jaccard": f"""
       WITH sh AS ({_SQL_SHINGLES}),
       e AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-      rare AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND 3),
+      rare AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND {RARE_DOC_FREQ}),
       cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                FROM e a JOIN rare USING (s) JOIN e b USING (s)
                WHERE a.doc_id < b.doc_id),
@@ -703,7 +731,7 @@ ORACLES: dict[str, str] = {
              round(cume_dist() OVER (ORDER BY spend ASC, o_custkey ASC), 6) AS cume
       FROM s
     """,
-    "events_anomaly_zscore": """
+    "events_anomaly_zscore": f"""
       WITH e AS (SELECT event_id, event_type, CAST(value AS DOUBLE) AS v FROM events),
       st AS (SELECT event_type,
                     CAST(CAST(sum(CAST(v AS DECIMAL(27,12))) AS VARCHAR) AS DOUBLE) AS s1,
@@ -718,14 +746,14 @@ ORACLES: dict[str, str] = {
                    (e.v - m.mu) / nullif(m.sd, 0) AS zscore
             FROM e JOIN m USING (event_type))
       SELECT event_id, event_type, round(v, 6) AS value, round(zscore, 6) AS zscore
-      FROM o WHERE abs(zscore) > 3.0
+      FROM o WHERE abs(zscore) > {ANOMALY_Z}
     """,
-    "late_shipments": """
+    "late_shipments": f"""
       SELECT o_orderpriority AS priority,
              count(*) AS n_lineitems,
-             CAST(sum(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
+             CAST(sum(CASE WHEN l_shipdate > o_orderdate + INTERVAL {LATE_DAYS} DAY
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-             round(sum(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
+             round(sum(CASE WHEN l_shipdate > o_orderdate + INTERVAL {LATE_DAYS} DAY
                             THEN 1 ELSE 0 END) / count(*), 6) AS late_frac
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY 1
@@ -843,7 +871,7 @@ ORACLES: dict[str, str] = {
       WITH RECURSIVE base AS (
         WITH sh AS ({_SQL_SHINGLES}),
         e AS (SELECT doc_id, unnest(shset) AS s FROM sh),
-        rare AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND 3),
+        rare AS (SELECT s FROM e GROUP BY s HAVING count(*) BETWEEN 2 AND {RARE_DOC_FREQ}),
         cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
                  FROM e a JOIN rare USING (s) JOIN e b USING (s)
                  WHERE a.doc_id < b.doc_id),
@@ -920,29 +948,29 @@ ORACLES: dict[str, str] = {
       SELECT phash, min(doc_id) AS keep_doc_id, count(*) AS n_docs
       FROM p GROUP BY 1
     """,
-    "multimodal_frames": """
+    "multimodal_frames": f"""
       WITH h AS (
         SELECT doc_id, octet_length(encode(text)) AS nb,
                lower(hex(encode(text))) AS hx
         FROM documents),
       f AS (SELECT doc_id, nb, hx,
-                   unnest(range(0, ((nb + 15) // 16 + 3) // 4)) AS j
+                   unnest(range(0, ((nb + {FRAME_BYTES - 1}) // {FRAME_BYTES} + {FRAME_EVERY_K - 1}) // {FRAME_EVERY_K})) AS j
             FROM h WHERE nb > 0)
       SELECT doc_id, CAST(j AS BIGINT) AS frame_idx,
-             substr(hx, 2 * j * 64 + 1, 2 * least(16, nb - j * 64)) AS frame,
-             CAST(least(16, nb - j * 64) AS BIGINT) AS n_bytes
+             substr(hx, 2 * j * {FRAME_BYTES * FRAME_EVERY_K} + 1, 2 * least({FRAME_BYTES}, nb - j * {FRAME_BYTES * FRAME_EVERY_K})) AS frame,
+             CAST(least({FRAME_BYTES}, nb - j * {FRAME_BYTES * FRAME_EVERY_K}) AS BIGINT) AS n_bytes
       FROM f
     """,
-    "multimodal_resize": """
+    "multimodal_resize": f"""
       WITH h AS (
         SELECT doc_id, octet_length(encode(text)) AS nb,
                lower(hex(encode(text))) AS hx
         FROM documents),
-      s AS (SELECT doc_id, nb, hx, greatest(nb // 64, 1) AS step FROM h)
-      SELECT doc_id, CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
+      s AS (SELECT doc_id, nb, hx, greatest(nb // {THUMB_SIZE**2}, 1) AS step FROM h)
+      SELECT doc_id, CAST({THUMB_SIZE} AS BIGINT) AS width, CAST({THUMB_SIZE} AS BIGINT) AS height,
              CASE WHEN nb = 0 THEN '' ELSE
                array_to_string(list_transform(
-                 range(0, least(64, (nb + step - 1) // step)),
+                 range(0, least({THUMB_SIZE**2}, (nb + step - 1) // step)),
                  k -> substr(hx, 2 * k * step + 1, 2)), '') END AS thumb
       FROM s
     """,
@@ -1008,7 +1036,7 @@ ORACLES: dict[str, str] = {
       tf AS (SELECT doc_id, w, count(*) AS tf FROM tk GROUP BY 1, 2),
       dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
       kept AS (SELECT tf.doc_id, tf.w, tf.tf
-               FROM tf JOIN dfq USING (w) WHERE df <= 100),
+               FROM tf JOIN dfq USING (w) WHERE df <= {TF_MAX_DF}),
       nrm AS (SELECT doc_id, sum(tf * tf) AS n2 FROM kept GROUP BY 1),
       dots AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                       count(*) AS n_shared_terms, sum(a.tf * b.tf) AS dot
@@ -1019,7 +1047,7 @@ ORACLES: dict[str, str] = {
                                   * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cosine
               FROM dots JOIN nrm na ON na.doc_id = dots.doc_a
                         JOIN nrm nb ON nb.doc_id = dots.doc_b)
-      SELECT * FROM cos WHERE cosine >= 0.3
+      SELECT * FROM cos WHERE cosine >= {TF_MIN_COSINE}
     """,
     "events_range_join": """
       SELECT l.user_id, l.event_id AS purchase_id, r.event_id AS click_id,
@@ -1124,7 +1152,7 @@ ORACLES: dict[str, str] = {
         AND l_discount BETWEEN 0.04 AND 0.06
         AND l_quantity < 24
     """,
-    "shipping_priority": """
+    "shipping_priority": f"""
       SELECT l_orderkey AS orderkey,
              strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
              o_orderpriority AS priority,
@@ -1137,9 +1165,9 @@ ORACLES: dict[str, str] = {
         AND o_orderdate < TIMESTAMP '1996-06-30 00:00:00'
         AND l_shipdate > TIMESTAMP '1996-06-30 00:00:00'
       GROUP BY 1, 2, 3
-      ORDER BY revenue DESC, orderdate ASC, orderkey ASC LIMIT 10
+      ORDER BY revenue DESC, orderdate ASC, orderkey ASC LIMIT {SHIPPING_PRIORITY_K}
     """,
-    "large_orders": """
+    "large_orders": f"""
       SELECT l_orderkey AS orderkey, c_name AS customer,
              strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
              o_totalprice AS totalprice, total_qty
@@ -1148,7 +1176,7 @@ ORACLES: dict[str, str] = {
             FROM lineitem GROUP BY l_orderkey)
       JOIN orders ON l_orderkey = o_orderkey
       JOIN customer ON o_custkey = c_custkey
-      WHERE total_qty > 150.0
+      WHERE total_qty > {LARGE_ORDER_QTY}
     """,
     "events_quantiles": """
       SELECT event_type,
@@ -1165,11 +1193,11 @@ ORACLES: dict[str, str] = {
                             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS n_trailing_hour
       FROM events
     """,
-    "customers_without_orders": """
+    "customers_without_orders": f"""
       SELECT c_custkey AS custkey, c_name AS name FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders
                         WHERE o_custkey = c_custkey
-                          AND o_orderdate >= TIMESTAMP '2000-01-01 00:00:00')
+                          AND o_orderdate >= TIMESTAMP '{LAPSED_SINCE} 00:00:00')
     """,
     "brands_shipped": """
       SELECT p_brand, count(*) AS n_parts FROM part
@@ -1247,11 +1275,11 @@ ORACLES: dict[str, str] = {
       WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
       GROUP BY l_returnflag, l_linestatus
     """,
-    "large_volume_customers": """
+    "large_volume_customers": f"""
       WITH big AS (SELECT l_orderkey,
                           sum(CAST(l_quantity AS DECIMAL(12,2))) AS tq
                    FROM lineitem GROUP BY 1
-                   HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 180)
+                   HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > {LARGE_VOLUME_QTY})
       SELECT c_custkey AS custkey, c_name AS name, o_orderkey AS orderkey,
              strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
              CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR) AS DOUBLE) AS totalprice,
@@ -1279,13 +1307,13 @@ ORACLES: dict[str, str] = {
       SELECT c_count, count(*) AS custdist FROM pc GROUP BY c_count
       ORDER BY custdist DESC, c_count DESC
     """,
-    "top_supplier": """
+    "top_supplier": f"""
       WITH r AS (SELECT l_suppkey AS supplier_no,
                         sum(CAST(l_extendedprice AS DECIMAL(12,2))
                             * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS total_rev
                  FROM lineitem
-                 WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-                   AND l_shipdate < TIMESTAMP '1996-04-01'
+                 WHERE l_shipdate >= TIMESTAMP '{TOP_SUPPLIER_QUARTER[0]}'
+                   AND l_shipdate < TIMESTAMP '{TOP_SUPPLIER_QUARTER[1]}'
                  GROUP BY 1)
       SELECT s_suppkey AS suppkey, s_name AS name,
              CAST(CAST(total_rev AS VARCHAR) AS DOUBLE) AS total_revenue
@@ -1293,11 +1321,11 @@ ORACLES: dict[str, str] = {
       WHERE total_rev = (SELECT max(total_rev) FROM r)
       ORDER BY suppkey
     """,
-    "small_qty_revenue": """
+    "small_qty_revenue": f"""
       WITH j AS (SELECT l_partkey, CAST(l_quantity AS DECIMAL(12,2)) AS qty,
                         CAST(l_extendedprice AS DECIMAL(12,2)) AS ep
                  FROM lineitem JOIN part ON l_partkey = p_partkey
-                 WHERE p_brand = 'Brand#3'),
+                 WHERE p_brand = '{SMALL_QTY_BRAND}'),
       pp AS (SELECT l_partkey AS agg_partkey, sum(qty) AS sum_qty,
                     count(*) AS cnt_qty
              FROM j GROUP BY 1)
@@ -1306,9 +1334,9 @@ ORACLES: dict[str, str] = {
       FROM j JOIN pp ON l_partkey = agg_partkey
       WHERE qty * CAST(5 AS DECIMAL(3,0)) * CAST(cnt_qty AS DECIMAL(10,0)) < sum_qty
     """,
-    "waiting_suppliers": """
+    "waiting_suppliers": f"""
       WITH lo AS (SELECT l_orderkey, l_suppkey,
-                         l_shipdate > o_orderdate + INTERVAL 90 DAY AS late
+                         l_shipdate > o_orderdate + INTERVAL {LATE_DAYS} DAY AS late
                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
                   WHERE o_orderstatus = 'F'),
       per AS (SELECT l_orderkey,
@@ -1321,9 +1349,9 @@ ORACLES: dict[str, str] = {
       WHERE n_supp >= 2 AND n_late = 1
       GROUP BY 1, 2
       ORDER BY numwait DESC, suppkey ASC
-      LIMIT 25
+      LIMIT {WAITING_TOP_N}
     """,
-    "product_profit": """
+    "product_profit": f"""
       SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
              CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
                            * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))
@@ -1332,7 +1360,7 @@ ORACLES: dict[str, str] = {
                            * CAST(l_quantity AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE)
                AS sum_profit
       FROM lineitem
-      JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
+      JOIN part ON l_partkey = p_partkey AND p_name LIKE '%{PART_NAME_WORD}%'
       JOIN supplier ON l_suppkey = s_suppkey
       JOIN nation ON s_nationkey = n_nationkey
       JOIN orders ON l_orderkey = o_orderkey
@@ -1351,11 +1379,11 @@ ORACLES: dict[str, str] = {
       GROUP BY 1, 2, 3
       ORDER BY supplier_cnt DESC, brand, type, size
     """,
-    "dominant_suppliers": """
+    "dominant_suppliers": f"""
       WITH j AS (SELECT l_partkey, l_suppkey,
                         CAST(l_quantity AS DECIMAL(12,2)) AS qty
                  FROM lineitem JOIN part ON l_partkey = p_partkey
-                 WHERE p_name LIKE '%red%' AND year(l_shipdate) = 1997),
+                 WHERE p_name LIKE '%{PART_NAME_WORD}%' AND year(l_shipdate) = {DOMINANT_YEAR}),
       ps AS (SELECT l_partkey, l_suppkey, sum(qty) AS sq FROM j GROUP BY 1, 2),
       tot AS (SELECT l_partkey AS tp, sum(sq) AS total_q, count(*) AS n_supp
               FROM ps GROUP BY 1),
@@ -1366,9 +1394,9 @@ ORACLES: dict[str, str] = {
       JOIN nation ON s_nationkey = n_nationkey
       ORDER BY suppkey
     """,
-    "volume_shipping": """
+    "volume_shipping": f"""
       WITH two AS (SELECT n_nationkey, n_name FROM nation
-                   WHERE n_name IN ('NATION_1', 'NATION_2'))
+                   WHERE n_name IN ('{VOLUME_NATIONS[0]}', '{VOLUME_NATIONS[1]}'))
       SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
              CAST(year(l_shipdate) AS BIGINT) AS l_year,
              CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -1383,34 +1411,34 @@ ORACLES: dict[str, str] = {
       WHERE sn.n_name <> cn.n_name
       GROUP BY 1, 2, 3
     """,
-    "market_share": """
+    "market_share": f"""
       WITH cr AS (SELECT c_custkey FROM customer
                   JOIN nation ON c_nationkey = n_nationkey
                   JOIN region ON n_regionkey = r_regionkey
-                  WHERE r_name = 'ASIA'),
+                  WHERE r_name = '{REGION}'),
       j AS (SELECT year(o_orderdate) AS o_year,
                    CAST(l_extendedprice AS DECIMAL(12,2))
                      * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4))) AS rev,
                    n_name AS supp_nation
             FROM lineitem
-            JOIN part ON l_partkey = p_partkey AND p_type = 'PROMO'
+            JOIN part ON l_partkey = p_partkey AND p_type = '{MARKET_SHARE_PART_TYPE}'
             JOIN supplier ON l_suppkey = s_suppkey
             JOIN nation ON s_nationkey = n_nationkey
             JOIN orders ON l_orderkey = o_orderkey
             JOIN cr ON o_custkey = c_custkey)
       SELECT CAST(o_year AS BIGINT) AS o_year,
-             CAST(CAST(sum(CASE WHEN supp_nation = 'NATION_1'
+             CAST(CAST(sum(CASE WHEN supp_nation = '{MARKET_SHARE_NATION}'
                            THEN CAST(rev AS DECIMAL(16,6))
                            ELSE CAST(0 AS DECIMAL(16,6)) END) AS VARCHAR) AS DOUBLE)
                AS nation_revenue,
              CAST(CAST(sum(rev) AS VARCHAR) AS DOUBLE) AS total_revenue,
-             round(CAST(CAST(sum(CASE WHEN supp_nation = 'NATION_1'
+             round(CAST(CAST(sum(CASE WHEN supp_nation = '{MARKET_SHARE_NATION}'
                            THEN CAST(rev AS DECIMAL(16,6))
                            ELSE CAST(0 AS DECIMAL(16,6)) END) AS VARCHAR) AS DOUBLE)
                    / CAST(CAST(sum(rev) AS VARCHAR) AS DOUBLE), 6) AS mkt_share
       FROM j GROUP BY 1
     """,
-    "revenue_by_nation": """
+    "revenue_by_nation": f"""
       SELECT n_name,
         CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))
                  * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))) AS VARCHAR) AS DOUBLE) AS revenue,
@@ -1420,25 +1448,25 @@ ORACLES: dict[str, str] = {
       JOIN customer ON o_custkey = c_custkey
       JOIN nation ON c_nationkey = n_nationkey
       JOIN region ON n_regionkey = r_regionkey
-      WHERE r_name = 'ASIA'
+      WHERE r_name = '{REGION}'
       GROUP BY n_name
     """,
-    "top_customers": """
+    "top_customers": f"""
       SELECT c_custkey AS custkey, c_name AS name, revenue, n_orders FROM (
         SELECT o_custkey,
                CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS revenue,
                count(*) AS n_orders
         FROM orders GROUP BY o_custkey)
       JOIN customer ON o_custkey = c_custkey
-      ORDER BY revenue DESC, custkey ASC LIMIT 10
+      ORDER BY revenue DESC, custkey ASC LIMIT {TOP_CUSTOMERS_K}
     """,
-    "customer_order_ranks": """
+    "customer_order_ranks": f"""
       SELECT custkey, orderkey, totalprice, rn FROM (
         SELECT o_custkey AS custkey, o_orderkey AS orderkey, o_totalprice AS totalprice,
                CAST(row_number() OVER (PARTITION BY o_custkey
                     ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT) AS rn
         FROM orders)
-      WHERE rn <= 3
+      WHERE rn <= {ORDER_RANKS_TOP_N}
     """,
     "user_retention": """
       WITH f AS (SELECT user_id, CAST(min(ts) AS DATE) AS cohort FROM events GROUP BY 1),
@@ -1464,7 +1492,7 @@ ORACLES: dict[str, str] = {
              JOIN nation n ON s.s_nationkey = n.n_nationkey
       WHERE rn = 1
     """,
-    "nation_market_share": """
+    "nation_market_share": f"""
       WITH j AS (
         SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
                CAST(l_extendedprice AS DECIMAL(12,2))
@@ -1477,10 +1505,10 @@ ORACLES: dict[str, str] = {
         JOIN region ON cn.n_regionkey = r_regionkey
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation sn ON s_nationkey = sn.n_nationkey
-        WHERE r_name = 'ASIA'),
+        WHERE r_name = '{REGION}'),
       a AS (
         SELECT o_year, sum(dp) AS total_dec,
-               sum(CASE WHEN supp_nation = 'NATION_2' THEN dp
+               sum(CASE WHEN supp_nation = '{NATION_MARKET_SHARE_NATION}' THEN dp
                         ELSE CAST(0 AS DECIMAL(21,6)) END) AS nation_dec
         FROM j GROUP BY 1)
       SELECT o_year,
@@ -1686,15 +1714,15 @@ ORACLES: dict[str, str] = {
              max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
       FROM events GROUP BY event_type
     """,
-    "order_priority_backlog": """
+    "order_priority_backlog": f"""
       SELECT o_orderpriority AS priority, count(*) AS n_backlogged
       FROM orders
       WHERE EXISTS (SELECT 1 FROM lineitem
                     WHERE l_orderkey = o_orderkey
-                      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+                      AND l_shipdate > o_orderdate + INTERVAL {BACKLOG_DAYS} DAY)
       GROUP BY 1
     """,
-    "returned_items": """
+    "returned_items": f"""
       WITH pc AS (
         SELECT o_custkey,
                sum(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -1709,9 +1737,9 @@ ORACLES: dict[str, str] = {
       JOIN customer ON o_custkey = c_custkey
       JOIN nation ON c_nationkey = n_nationkey
       ORDER BY returned_revenue DESC, custkey ASC
-      LIMIT 20
+      LIMIT {RETURNED_TOP_K}
     """,
-    "important_parts": """
+    "important_parts": f"""
       WITH pv AS (
         SELECT l_partkey,
                sum(CAST(l_extendedprice AS DECIMAL(12,2))
@@ -1726,7 +1754,7 @@ ORACLES: dict[str, str] = {
                    / CAST(CAST(tot_dec AS VARCHAR) AS DOUBLE), 9) AS value_share
       FROM w
       WHERE CAST(CAST(val_dec AS VARCHAR) AS DOUBLE)
-            > 1.5 * CAST(CAST(tot_dec AS VARCHAR) AS DOUBLE) / n_parts
+            > {IMPORTANT_RATIO} * CAST(CAST(tot_dec AS VARCHAR) AS DOUBLE) / n_parts
     """,
     "promo_revenue": """
       SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
@@ -1747,7 +1775,7 @@ ORACLES: dict[str, str] = {
       FROM lineitem JOIN part ON l_partkey = p_partkey
       GROUP BY 1
     """,
-    "sales_opportunity": """
+    "sales_opportunity": f"""
       WITH a AS (
         SELECT CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE)
                / count(*) AS avg_bal
@@ -1758,7 +1786,7 @@ ORACLES: dict[str, str] = {
       FROM customer, a
       WHERE CAST(c_acctbal AS DOUBLE) > avg_bal
         AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                        AND o_orderdate >= DATE '1998-06-01')
+                        AND o_orderdate >= DATE '{OPPORTUNITY_SINCE}')
       GROUP BY 1
     """,
 }

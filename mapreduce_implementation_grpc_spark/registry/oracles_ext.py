@@ -25,7 +25,9 @@ from .similarity import (
 )
 from ..operators.hll import M_REGISTERS, RAW_SCALE
 from ..operators.kmv import KMV_K
-from ..operators.similarity import N_PROBE
+from ..operators.linkpred import LINKPRED_TOP_N
+from ..operators.seqmine import SEQ_TOP_N
+from ..operators.similarity import N_PROBE, TOPK
 from ..plans.analytics import ASOF_AT
 from .oracle_builders import (
     _CMS_EST,
@@ -189,11 +191,11 @@ ORACLES["ann_recall_sweep"] = "\nUNION ALL\n".join(
 ORACLES["ann_rank_quality"] = (
     "WITH exact AS (" + oracles_core.ORACLES["knn_cosine"] + "),\n"
     "ann AS (" + oracles_core.ORACLES["ann_ivf"] + "),\n"
-    """j AS (SELECT a.query_id, a.rank AS ann_rank, e.rank AS exact_rank
+    f"""j AS (SELECT a.query_id, a.rank AS ann_rank, e.rank AS exact_rank
         FROM ann a LEFT JOIN exact e ON a.query_id = e.query_id
          AND a.neighbor_id = e.neighbor_id),
   terms AS (SELECT query_id, ann_rank,
-        CASE WHEN exact_rank IS NOT NULL THEN 6 - exact_rank ELSE 0 END AS rel
+        CASE WHEN exact_rank IS NOT NULL THEN {TOPK + 1} - exact_rank ELSE 0 END AS rel
       FROM j),
   pq AS (SELECT query_id,
         sum(CAST(round(CAST(rel AS DOUBLE)
@@ -203,7 +205,7 @@ ORACLES["ann_rank_quality"] = (
         sum(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS n_hits
       FROM terms GROUP BY 1),
   ideal AS (SELECT query_id,
-        sum(CAST(round(CAST(6 - rank AS DOUBLE)
+        sum(CAST(round(CAST({TOPK + 1} - rank AS DOUBLE)
               / (round(ln(CAST(rank AS DOUBLE) + CAST(1.0 AS DOUBLE)), 9)
                  / round(ln(CAST(2.0 AS DOUBLE)), 9)), 9) AS DECIMAL(20,9))) AS idcg_d,
         count(*) AS n_exact
@@ -694,7 +696,7 @@ ORACLES["events_dow_seasonality"] = """
   ORDER BY 1, 2
 """
 
-ORACLES["frequent_event_trigrams"] = """
+ORACLES["frequent_event_trigrams"] = f"""
   WITH g AS (
     SELECT user_id,
            event_type AS step_1,
@@ -710,7 +712,7 @@ ORACLES["frequent_event_trigrams"] = """
          CAST(sum(occ) AS BIGINT) AS occurrences
   FROM pu GROUP BY 1, 2, 3
   ORDER BY support DESC, occurrences DESC, step_1, step_2, step_3
-  LIMIT 20
+  LIMIT {SEQ_TOP_N}
 """
 
 def _linkage_ctes() -> str:
@@ -996,7 +998,7 @@ ORACLES["cosupply_link_prediction"] = f"""
          CAST(CAST(n.aa AS VARCHAR) AS DOUBLE) AS adamic_adar
   FROM nonadj n JOIN deg d1 ON d1.w = n.x1 JOIN deg d2 ON d2.w = n.x2
   ORDER BY adamic_adar DESC, common_neighbors DESC, s1, s2
-  LIMIT 20
+  LIMIT {LINKPRED_TOP_N}
 """
 
 # Same wedge enumeration with centers capped at degree 256 (the scale
@@ -1027,7 +1029,7 @@ ORACLES["cosupply_link_prediction_capped"] = f"""
          CAST(CAST(n.aa AS VARCHAR) AS DOUBLE) AS adamic_adar
   FROM nonadj n JOIN deg d1 ON d1.w = n.x1 JOIN deg d2 ON d2.w = n.x2
   ORDER BY adamic_adar DESC, common_neighbors DESC, s1, s2
-  LIMIT 20
+  LIMIT {LINKPRED_TOP_N}
 """
 
 ORACLES["user_day_snapshot_diff"] = """

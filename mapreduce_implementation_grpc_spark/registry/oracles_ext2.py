@@ -14,6 +14,7 @@ from .eval_temporal2 import (
 )
 from .graph_layout import CHI2_MIN_COUNT, CHI2_TOP_K, NOVELTY_N
 from ..operators.basket import MIN_ORDERS
+from ..operators.robust import TRIM_PCT
 from ..operators.similarity import MIN_COSINE
 from ..plans.analytics import SESSION_GAP_S
 
@@ -326,7 +327,7 @@ ORACLES["embedding_mutual_nn_lsh"] = f"""
 # Winsorized mean: the trimmed-mean machinery with the tails CLAMPED
 # to the rank-(k+1)/(n-k) fences instead of dropped; fences selected
 # by cumulative count, winsorized sum in exact BIGINTs.
-ORACLES["events_winsorized_mean"] = """
+ORACLES["events_winsorized_mean"] = f"""
   WITH grain AS (
     SELECT event_type AS g,
            CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
@@ -340,7 +341,7 @@ ORACLES["events_winsorized_mean"] = """
            CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
     FROM grain),
   kk AS (
-    SELECT *, (n * 5) // 100 AS k FROM cum),
+    SELECT *, (n * {TRIM_PCT}) // 100 AS k FROM cum),
   kept AS (
     SELECT g, v, cnt, cum, n, k,
            greatest(CAST(0 AS BIGINT),

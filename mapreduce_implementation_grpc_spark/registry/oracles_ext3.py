@@ -17,7 +17,9 @@ from .oracle_builders import (
     _kmeans_means_cte,
 )
 from .similarity import ANN_BANDED_SWEEP, ANN_CLUSTERED_SWEEP, N_QUERIES
+from ..operators.curation import STRATIFIED_DEN
 from ..operators.linkage import SN_WINDOW
+from ..operators.robust import TRIM_PCT
 from ..operators.similarity import (
     ANN_ROWS_PER_BAND,
     CLUSTERED_N_CLUSTERS,
@@ -778,7 +780,7 @@ ORACLES["customer_spend_lorenz"] = """
 # Trimmed mean: integer rank boundaries (k = n*5 div 100), clamp
 # arithmetic on exact cumulative counts, two final long/long
 # divisions -- no interpolation.
-ORACLES["events_trimmed_mean"] = """
+ORACLES["events_trimmed_mean"] = f"""
   WITH grain AS (
     SELECT event_type AS g,
            CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS v,
@@ -792,7 +794,7 @@ ORACLES["events_trimmed_mean"] = """
            CAST(sum(cnt) OVER (PARTITION BY g) AS BIGINT) AS n
     FROM grain),
   k AS (
-    SELECT *, (n * 5) // 100 AS k FROM cum),
+    SELECT *, (n * {TRIM_PCT}) // 100 AS k FROM cum),
   kept AS (
     SELECT g, v, cnt, n, k,
            greatest(CAST(0 AS BIGINT),
@@ -902,7 +904,7 @@ ORACLES["events_rolling_wau"] = """
 
 # Hamilton-apportioned stratified sample: all-integer quota
 # arithmetic, md5-hex selection order (portable string compare).
-ORACLES["stratified_sample_exact"] = """
+ORACLES["stratified_sample_exact"] = f"""
   WITH c AS (SELECT lang AS g, count(*) AS n_h FROM documents
              GROUP BY 1),
   t AS (
@@ -911,9 +913,9 @@ ORACLES["stratified_sample_exact"] = """
     FROM c),
   q AS (
     SELECT g, n_h, tot,
-           (tot // 10 * n_h) // tot AS q0,
-           (tot // 10 * n_h) % tot AS r,
-           tot // 10 AS n_samp
+           (tot // {STRATIFIED_DEN} * n_h) // tot AS q0,
+           (tot // {STRATIFIED_DEN} * n_h) % tot AS r,
+           tot // {STRATIFIED_DEN} AS n_samp
     FROM t),
   rk AS (
     SELECT *, row_number() OVER (ORDER BY r DESC, g) AS rr,

@@ -382,10 +382,11 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = TOPK) -> DataFrame:
+def q_ann_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRADED ranking-quality eval of the IVF ANN index: per query,
     recall@k, MRR (reciprocal rank of the first true neighbor in the
     ANN list) and nDCG@k with graded relevance rel = k+1-exact_rank
+    at k = TOPK
     (the exact brute-force top-k is the ground truth, rel 0 for
     non-members) -- recall alone cannot distinguish an index that
     returns the right set in the wrong order.
@@ -401,28 +402,25 @@ def q_ann_rank_quality(spark: SparkSession, sf_dir: str, k: int = TOPK) -> DataF
     string-routes both decimal sums to double and rounds to 6dp. MRR
     and recall are exact small rationals rounded to 6dp.
 
-    `k` is plumbed through BOTH rankings: the ANN list and the exact
-    ground truth are each cut at depth k, and rel = k+1-exact_rank
-    derives from the same k -- so recall@k/nDCG@k stay internally
-    consistent at any k (ADVICE r5: the previous form graded a
-    k-deep ANN list against a hard-pinned top-5 truth). The DuckDB
-    oracle covers the default k = TOPK."""
+    The ANN list and the exact ground truth are each cut at depth
+    TOPK, and rel = TOPK+1-exact_rank derives from the same depth, so
+    recall@k/nDCG@k stay internally consistent."""
     emb = load_table(spark, sf_dir, "embeddings")
-    ann = ann_ivf_topk(emb, _query_vectors(spark, sf_dir), k=k).select(
+    ann = ann_ivf_topk(emb, _query_vectors(spark, sf_dir)).select(
         "query_id", "neighbor_id", F.col("rank").alias("ann_rank")
     )
-    return _rank_quality_df(spark, sf_dir, ann, k=k)
+    return _rank_quality_df(spark, sf_dir, ann)
 
 
-def _rank_quality_df(spark, sf_dir, ann: DataFrame, k: int = TOPK) -> DataFrame:
+def _rank_quality_df(spark, sf_dir, ann: DataFrame) -> DataFrame:
     """Graded eval core: `ann` is any (query_id, neighbor_id,
-    ann_rank) ranking cut at depth `k`; ground truth is the exact
-    brute-force top-k AT THE SAME k. Self-eval invariant
+    ann_rank) ranking cut at depth TOPK; ground truth is the exact
+    brute-force top-k AT THE SAME depth. Self-eval invariant
     (pytest-pinned): feeding the exact ranking itself yields
     recall = mrr = ndcg = 1.0 for every query."""
     emb = load_table(spark, sf_dir, "embeddings")
     exact = materialize(
-        knn_brute_force(emb, _query_vectors(spark, sf_dir), k=k).select(
+        knn_brute_force(emb, _query_vectors(spark, sf_dir), k=TOPK).select(
             "query_id", "neighbor_id", F.col("rank").cast("long").alias("exact_rank")
         )
     )
@@ -434,7 +432,7 @@ def _rank_quality_df(spark, sf_dir, ann: DataFrame, k: int = TOPK) -> DataFrame:
 
     j = ann.join(exact, ["query_id", "neighbor_id"], "left")
     rel = F.when(
-        F.col("exact_rank").isNotNull(), F.lit(k + 1) - F.col("exact_rank")
+        F.col("exact_rank").isNotNull(), F.lit(TOPK + 1) - F.col("exact_rank")
     ).otherwise(F.lit(0)).cast("long")
     per_q = (
         j.select("query_id", rel.alias("rel"), "ann_rank")
@@ -447,7 +445,7 @@ def _rank_quality_df(spark, sf_dir, ann: DataFrame, k: int = TOPK) -> DataFrame:
     )
     ideal = exact.groupBy("query_id").agg(
         F.sum(
-            _dcg_term(F.lit(k + 1) - F.col("exact_rank"), F.col("exact_rank"))
+            _dcg_term(F.lit(TOPK + 1) - F.col("exact_rank"), F.col("exact_rank"))
         ).alias("idcg_d"),
         F.count("*").alias("n_exact"),
     )

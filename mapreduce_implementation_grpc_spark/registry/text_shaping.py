@@ -65,7 +65,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Phrase inverted index (3-token shingles, df in [2, 20]): the
     search-side generalization of word count -- phrase -> document
     frequency + sorted posting list (comma-joined so the gate can
-    hash it). Posting rows are bounded by max_df, so no reducer row
+    hash it). Posting rows are bounded by INDEX_MAX_DF, so no reducer row
     can blow up on a boilerplate phrase."""
     from ..functions.indexing import inverted_index
 

@@ -17,11 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
 
 
 def write_word_counts_text(df: DataFrame, path: str) -> None:

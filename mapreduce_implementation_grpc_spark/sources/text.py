@@ -21,17 +21,14 @@ from .catalog import load_table
 NUM_TASKS = 4  # the reference's map tasks (greeter_client.cc:362-368)
 
 
-def read_text_corpus(spark: SparkSession, path: str, min_partitions: int | None = None) -> DataFrame:
+def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
     """O1: newline-delimited text -> DataFrame[line: string].
 
     Unlike the reference (whole file into one master-side string),
     Spark assigns byte-range splits to executors; 100 TB of text
     never touches the driver.
     """
-    df = spark.read.text(path).withColumnRenamed("value", "line")
-    if min_partitions and df.rdd.getNumPartitions() < min_partitions:
-        df = df.repartition(min_partitions)
-    return df
+    return spark.read.text(path).withColumnRenamed("value", "line")
 
 
 def corpus_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,12 +39,15 @@ from ..materialize import materialize, pin_before_overwrite
 from ..operators.curation import DECONTAM_NGRAM_K
 from ..operators.normalize import normalized_col
 from ..operators.tokenize import tokens_col
+from ..plans.analytics import ANOMALY_Z
 
 TEXT_COL = "text"
 BM25_B = 0.75
 BM25_K1 = 1.2
 TS_COL = "ts"
 JOIN_WATERMARK = "2 hours"
+DEDUP_WATERMARK = "1 hour"  # streaming_dedup's duplicate horizon
+WINDOW_WATERMARK = "2 hours"  # lateness bound of the windowed aggregations
 
 
 def streaming_user_totals_stateful(events: DataFrame) -> DataFrame:
@@ -274,10 +277,7 @@ def streaming_user_state_intervals(events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_dedup(
-    docs: DataFrame,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_dedup(docs: DataFrame) -> DataFrame:
     """Streaming exact dedup: first occurrence of each content
     fingerprint wins, duplicates arriving within the watermark
     horizon are dropped.
@@ -292,7 +292,9 @@ def streaming_dedup(
     from ..operators.normalize import normalized_col as _norm
 
     fp = docs.withColumn("fingerprint", F.md5(_norm(TEXT_COL)))
-    return fp.withWatermark(TS_COL, watermark).dropDuplicatesWithinWatermark(["fingerprint"])
+    return fp.withWatermark(TS_COL, DEDUP_WATERMARK).dropDuplicatesWithinWatermark(
+        ["fingerprint"]
+    )
 
 
 def streaming_signup_purchase_join(events: DataFrame) -> DataFrame:
@@ -336,15 +338,12 @@ def streaming_word_count(lines: DataFrame) -> DataFrame:
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
 
 
-def streaming_event_counts(
-    events: DataFrame,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_event_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window counts per event_type; watermark bounds state
     size (and lateness) -- without it, 100 TB of stream state never
     ages out."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WINDOW_WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"),
              F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"))
@@ -357,14 +356,11 @@ def streaming_event_counts(
     )
 
 
-def streaming_sessionize(
-    events: DataFrame,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Session windows per user: built-in gap-based session_window --
     the incremental twin of the batch lag()-based sessionizer."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WINDOW_WATERMARK)
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -532,13 +528,11 @@ def streaming_decontaminate(
 
 
 def streaming_anomaly_filter(
-    events_stream: DataFrame,
-    stats: list[tuple[str, float, float]],
-    z: float = 3.0,
+    events_stream: DataFrame, stats: list[tuple[str, float, float]]
 ) -> DataFrame:
     """Score an unbounded event stream against BATCH-trained per-type
     moments (train once with plans.analytics.events_anomaly_zscore's
-    aggregation, serve forever): emit only events beyond z standard
+    aggregation, serve forever): emit only events beyond ANOMALY_Z standard
     deviations of their type's mean. The (type, mu, sd) table ships
     as a literal map via a stacked CASE -- stateless, append mode,
     map-only; re-train on a cadence and restart the query to roll the
@@ -568,7 +562,7 @@ def streaming_anomaly_filter(
     scored = events_stream.withColumn(
         "zscore", (F.col("value").cast("double") - mu) / sd
     )
-    return scored.filter(F.abs(F.col("zscore")) > z)
+    return scored.filter(F.abs(F.col("zscore")) > ANOMALY_Z)
 
 
 def streaming_doc_chunks(docs_stream: DataFrame) -> DataFrame:
@@ -604,8 +598,8 @@ def streaming_dsir_filter(
     decimal addition is associative, so per-instance accumulation
     equals the batch histogram form bit-for-bit. State is one sum per
     in-flight (window, doc), evicted by the watermark. OOV tokens
-    (absent from the trained vocabulary) drop in the join, matching
-    the batch max_vocab semantics."""
+    (absent from the trained vocabulary) drop in the join, as in the
+    batch ratio join."""
     from ..operators.tokenize import tokens_col
 
     toks = docs_stream.select(

@@ -12,6 +12,9 @@ against, so they live with the tests.
   (the classic "uncompressed GIF" technique), which every conforming
   decoder accepts.
 - `wav_encode`: 16-bit PCM RIFF/WAVE, mono or interleaved channels.
+- `media_df`: a payload DataFrame whose rows declare the modality
+  their bytes sniff as, so `multimodal.binary_ops` decodes each row
+  with its real codec.
 """
 
 from __future__ import annotations
@@ -20,11 +23,25 @@ import struct
 
 import numpy as np
 
+from mapreduce_implementation_grpc_spark.multimodal.codecs import sniff
 from mapreduce_implementation_grpc_spark.multimodal.jpeg import (
     DCT_C,
     ZIGZAG,
     _build_huffman,
 )
+
+
+def media_df(spark, payloads: dict[int, bytes], modality: str | None = None):
+    """[doc_id, payload, meta] rows; meta.modality is `modality`, or
+    by default what each payload sniffs as."""
+    return spark.createDataFrame(
+        [
+            (doc_id, bytearray(p), (modality or sniff(bytes(p)), len(p), ""))
+            for doc_id, p in payloads.items()
+        ],
+        "doc_id long, payload binary,"
+        " meta struct<modality: string, n_bytes: int, content_sha256: string>",
+    )
 
 # ---------------------------------------------------------------- JPEG
 

@@ -132,11 +132,11 @@ def nearest_frames(spark):
     )
     right = spark.createDataFrame(
         [
-            Row(user_id=1, rts=_ts(9, 50), tag="early"),
-            Row(user_id=1, rts=_ts(10, 10), tag="late"),
-            Row(user_id=2, rts=_ts(12, 30), tag="future"),
-            Row(user_id=3, rts=_ts(14, 0), tag="far"),
-            Row(user_id=5, rts=_ts(12, 0), tag="exact"),
+            Row(user_id=1, ts=_ts(9, 50), tag="early"),
+            Row(user_id=1, ts=_ts(10, 10), tag="late"),
+            Row(user_id=2, ts=_ts(12, 30), tag="future"),
+            Row(user_id=3, ts=_ts(14, 0), tag="far"),
+            Row(user_id=5, ts=_ts(12, 0), tag="exact"),
         ]
     )
     return left, right
@@ -149,8 +149,7 @@ def test_asof_nearest_semantics(nearest_frames):
     out = {
         r.event_id: (r.tag, r.asof_ts_us)
         for r in asof_join_nearest(
-            left, right, by="user_id", right_ts="rts",
-            tolerance_us=3600 * 1_000_000,
+            left, right, by="user_id", tolerance_us=3600 * 1_000_000,
         ).collect()
     }
     assert out[100][0] == "early"   # equal distance -> past preferred
@@ -159,7 +158,7 @@ def test_asof_nearest_semantics(nearest_frames):
     assert out[200][0] == "future"  # forward-only match within tolerance
     assert out[300] == (None, None)  # 2 h away > 1 h tolerance
     assert out[400] == (None, None)  # no candidates at all
-    assert out[500][0] == "exact"   # rts == ts matches (inclusive)
+    assert out[500][0] == "exact"   # equal timestamps match (inclusive)
     # asof_ts_us is the matched right timestamp, NULL iff payload NULL
     assert out[101][1] == int(_ts(10, 10).timestamp() * 1_000_000)
 
@@ -171,7 +170,7 @@ def test_asof_nearest_single_exchange(nearest_frames):
 
     left, right = nearest_frames
     plan = asof_join_nearest(
-        left, right, by="user_id", right_ts="rts"
+        left, right, by="user_id"
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
 

@@ -33,7 +33,7 @@ def test_chained_near_dups_merge_into_one_cluster(chained_docs):
 
 
 def test_deep_chain_converges_past_old_cap(spark):
-    """A path graph of diameter 12 (> the old max_iter=6 cap) must
+    """A path graph of diameter 12 (> an old 6-round cap) must
     fully merge: pointer jumping needs ~log2(12) rounds, and the
     convergence check must not trip the non-convergence guard."""
     from mapreduce_implementation_grpc_spark.operators.dedup import label_propagation
@@ -46,16 +46,19 @@ def test_deep_chain_converges_past_old_cap(spark):
     assert set(labels.values()) == {0}
 
 
-def test_non_convergence_raises_loudly(spark):
+def test_non_convergence_raises_loudly(spark, monkeypatch):
     """Exhausting the iteration budget while labels still move must
-    raise, not silently return an under-merged clustering."""
-    from mapreduce_implementation_grpc_spark.operators.dedup import label_propagation
+    raise, not silently return an under-merged clustering. Pointer
+    jumping needs ~log2(diameter) rounds, so a graph deeper than
+    LP_MAX_ITER allows is huge: shrink the budget instead."""
+    from mapreduce_implementation_grpc_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "LP_MAX_ITER", 1)
     pairs = spark.createDataFrame(
         [Row(doc_a=i, doc_b=i + 1) for i in range(30)]
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        label_propagation(pairs, max_iter=1)
+        dedup.label_propagation(pairs)
 
 
 def test_cluster_ids_are_member_min(spark, sf_check):
@@ -94,7 +97,7 @@ def test_bloom_prune_no_false_negatives(spark):
     )
     expected = fact.join(keys, "skey").count()
     assert expected > 0
-    bm = bloom_bitmap(keys, "skey")
+    bm = bloom_bitmap(keys.select(F.col("skey").alias("sh")))
     pruned = bloom_prune(fact, F.col("skey"), bm)
     # no false negatives: the exact join over survivors is complete
     assert pruned.join(keys, "skey").count() == expected

@@ -1,5 +1,6 @@
 """Real-codec path: pure-stdlib PNG/WAV round trips and the Spark
-mapInPandas integration (`real_codec=True`) over genuine media bytes.
+mapInPandas integration over genuine media bytes (rows whose
+meta.modality is their media format).
 
 The PNG decoder handles all five row filters; the encoder emits
 filter 0. Cross-filter decode is exercised by hand-filtering rows.
@@ -12,8 +13,6 @@ import zlib
 
 import numpy as np
 import pytest
-from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     png_decode,
@@ -23,7 +22,7 @@ from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     sniff,
     wav_decode,
 )
-from tests.media_encoders import wav_encode
+from tests.media_encoders import media_df, wav_encode
 
 
 def _rng(seed=7):
@@ -154,23 +153,13 @@ def test_real_decode_features_dispatch():
 # --------------------------------------------------- spark integration
 
 
-def _media_df(spark, payloads):
-    rows = [
-        Row(doc_id=i, payload=bytearray(p),
-            meta=Row(modality=sniff(bytes(p)), n_bytes=len(p),
-                     content_sha256=""))
-        for i, p in enumerate(payloads)
-    ]
-    return spark.createDataFrame(rows)
-
-
 def test_spark_real_decode_png_and_wav(spark):
     from mapreduce_implementation_grpc_spark.multimodal import decode_features
 
     img = _rng(1).integers(0, 256, size=(9, 4, 3), dtype=np.uint8)
     tone = _rng(2).integers(-2000, 2000, size=64).astype(np.int16)
-    df = _media_df(spark, [png_encode(img), wav_encode(tone, 22050)])
-    out = {r.doc_id: r for r in decode_features(df, real_codec=True).collect()}
+    df = media_df(spark, {0: png_encode(img), 1: wav_encode(tone, 22050)})
+    out = {r.doc_id: r for r in decode_features(df).collect()}
     assert out[0].feature[:3] == [4.0, 9.0, 3.0]
     assert out[0].feature[3] == pytest.approx(float(img.mean()))
     assert out[1].feature[:3] == [64.0, 22050.0, 1.0]
@@ -179,26 +168,33 @@ def test_spark_real_decode_png_and_wav(spark):
 
 def test_spark_real_resize_round_trip(spark):
     from mapreduce_implementation_grpc_spark.multimodal import resize_images
+    from mapreduce_implementation_grpc_spark.multimodal.binary_ops import THUMB_SIZE
 
     img = _rng(5).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    df = _media_df(spark, [png_encode(img)])
-    row = resize_images(df, width=8, height=8, real_codec=True).collect()[0]
+    df = media_df(spark, {0: png_encode(img)})
+    row = resize_images(df).collect()[0]
     thumb = png_decode(bytes.fromhex(row.thumb))
-    assert thumb.shape == (8, 8, 3)
-    assert np.array_equal(thumb, png_resize_nearest(img, 8, 8))
+    assert thumb.shape == (THUMB_SIZE, THUMB_SIZE, 3)
+    assert np.array_equal(thumb, png_resize_nearest(img, THUMB_SIZE, THUMB_SIZE))
 
 
 def test_spark_real_frame_sampling_wav(spark):
     from mapreduce_implementation_grpc_spark.multimodal import sample_frames
+    from mapreduce_implementation_grpc_spark.multimodal.binary_ops import (
+        FRAME_BYTES,
+        FRAME_EVERY_K,
+    )
 
     tone = np.arange(256, dtype=np.int16)  # 512 PCM bytes
-    df = _media_df(spark, [wav_encode(tone, 8000)])
-    frames = sample_frames(df, every_k=2, frame_bytes=64, real_codec=True).collect()
-    # 512 bytes / 64 = 8 chunks, every 2nd -> 4 frames
-    assert [r.frame_idx for r in frames] == [0, 1, 2, 3]
-    assert all(r.n_bytes == 64 for r in frames)
-    # frame 0 is samples 0..31 little-endian
-    assert bytes.fromhex(frames[0].frame) == tone[:32].tobytes()
+    df = media_df(spark, {0: wav_encode(tone, 8000)})
+    frames = sample_frames(df).collect()
+    # 512 bytes in FRAME_BYTES windows, every FRAME_EVERY_K-th kept
+    n = 512 // FRAME_BYTES // FRAME_EVERY_K
+    assert [r.frame_idx for r in frames] == list(range(n))
+    assert all(r.n_bytes == FRAME_BYTES for r in frames)
+    # frame 1 is window FRAME_EVERY_K of the little-endian samples
+    per = FRAME_BYTES // 2
+    assert bytes.fromhex(frames[1].frame) == tone[FRAME_EVERY_K * per:][:per].tobytes()
 
 
 # ------------------------------------------------------ property tests

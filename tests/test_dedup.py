@@ -100,7 +100,7 @@ def test_hamming_banding_full_recall(spark):
 
 
 def test_ngram_jaccard_exact_dup_is_one(docs):
-    pairs = {(r.doc_a, r.doc_b): r.jaccard for r in ngram_jaccard_pairs(docs, max_doc_freq=5).collect()}
+    pairs = {(r.doc_a, r.doc_b): r.jaccard for r in ngram_jaccard_pairs(docs).collect()}
     assert pairs[(1, 2)] == 1.0
 
 

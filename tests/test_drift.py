@@ -82,7 +82,7 @@ def test_ks_differential_vs_python(spark):
     ys = [round(rng.gauss(0.4, 1.3), 3) for _ in range(200)]
     sa = spark.createDataFrame([(x,) for x in xs], "v double")
     sb = spark.createDataFrame([(y,) for y in ys], "v double")
-    row = ks_test(sa, sb, n_buckets=8).collect()[0]
+    row = ks_test(sa, sb).collect()[0]
     d_ref, at_ref = python_ks(xs, ys)
     assert row.ks_d == pytest.approx(d_ref, abs=1e-12)
     assert row.at_value == at_ref

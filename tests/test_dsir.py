@@ -1,19 +1,18 @@
-"""DSIR importance weighting: semantic direction, vocab gate, and
-exclusions. Oracle parity is covered by the registry-wide sweep
+"""DSIR importance weighting: semantic direction and exclusions. Oracle parity is covered by the registry-wide sweep
 (test_oracle_coverage) and was hand-verified at sf0.001 + sf0.01."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
-from mapreduce_implementation_grpc_spark.operators.dsir import dsir_weights
+from mapreduce_implementation_grpc_spark.operators.dsir import TARGET_SOURCE, dsir_weights
 
 
 def _docs(spark):
     rows = [
         # target domain: legal-ish vocabulary
-        Row(doc_id=1, text="whereas the party agrees to the terms", lang="en", source="tgt"),
-        Row(doc_id=2, text="the party shall comply with the terms", lang="en", source="tgt"),
+        Row(doc_id=1, text="whereas the party agrees to the terms", lang="en", source=TARGET_SOURCE),
+        Row(doc_id=2, text="the party shall comply with the terms", lang="en", source=TARGET_SOURCE),
         # raw pool: doc 10 looks like the target, doc 11 does not
         Row(doc_id=10, text="the party agrees to comply with terms", lang="en", source="web"),
         Row(doc_id=11, text="lol cats meme pics funny videos", lang="en", source="web"),
@@ -26,28 +25,7 @@ def _docs(spark):
 def test_target_like_docs_score_higher(spark):
     out = {
         r.doc_id: r.dsir_logw
-        for r in dsir_weights(_docs(spark), target_source="tgt").collect()
+        for r in dsir_weights(_docs(spark)).collect()
     }
     assert set(out) == {10, 11}  # target docs and empty docs excluded
     assert out[10] > out[11]
-
-
-def test_max_vocab_full_k_reproduces_untruncated(spark):
-    docs = _docs(spark)
-    full = {r.doc_id: r.dsir_logw for r in dsir_weights(docs, "tgt").collect()}
-    gated = {
-        r.doc_id: r.dsir_logw
-        for r in dsir_weights(docs, "tgt", max_vocab=10_000).collect()
-    }
-    assert full == gated
-
-
-def test_max_vocab_truncation_changes_support(spark):
-    docs = _docs(spark)
-    # K=1 keeps only the most frequent token ("the"), shared by both
-    # LMs -> weights still defined but computed on a 1-token vocab.
-    out = {
-        r.doc_id: r.dsir_logw
-        for r in dsir_weights(docs, "tgt", max_vocab=1).collect()
-    }
-    assert 10 in out and 11 not in out  # doc 11 has no "the"

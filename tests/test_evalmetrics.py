@@ -56,7 +56,7 @@ def test_differential_vs_quadratic_reference(spark):
         (float(rng.randint(0, 20)), rng.randint(0, 1)) for _ in range(400)
     ]
     df = spark.createDataFrame(pairs, "score double, label int")
-    got = auc_rank_sum(df, n_buckets=8).collect()[0].auc
+    got = auc_rank_sum(df).collect()[0].auc
     assert got == pytest.approx(python_auc(pairs), abs=1e-12)
 
 

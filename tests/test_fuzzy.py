@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.operators.fuzzy import (
+    MAX_DIST,
     deletion_variants,
     fuzzy_word_pairs,
 )
@@ -45,12 +46,15 @@ for v in VOCABS:
 
 
 @pytest.mark.parametrize("words", VOCABS)
-@pytest.mark.parametrize("d", [1, 2])
+@pytest.mark.parametrize("d", [1, MAX_DIST])
 def test_band_matches_brute_force(spark, words, d):
+    # the band holds every pair within MAX_DIST; its pairs at each
+    # distance d <= MAX_DIST are exactly the brute-force ones
     freqs = spark.createDataFrame(list(words.items()), "w string, c long")
     got = {
         (r.w1, r.w2, r.dist, r.c1, r.c2)
-        for r in fuzzy_word_pairs(freqs, max_dist=d).collect()
+        for r in fuzzy_word_pairs(freqs).collect()
+        if r.dist <= d
     }
     assert got == _brute(words, d)
 
@@ -86,7 +90,7 @@ def test_band_matches_brute_force_hypothesis(spark, words):
     freqs = spark.createDataFrame([(w, 1) for w in words], "w string, c long")
     got = {
         (r.w1, r.w2, r.dist)
-        for r in fuzzy_word_pairs(freqs, max_dist=2).collect()
+        for r in fuzzy_word_pairs(freqs).collect()
     }
-    want = {(a, b, d) for (a, b, d, _, _) in _brute(dict.fromkeys(words, 1), 2)}
+    want = {(a, b, d) for (a, b, d, _, _) in _brute(dict.fromkeys(words, 1), MAX_DIST)}
     assert got == want

@@ -277,14 +277,17 @@ def test_kcore_peels_to_fixpoint(spark):
     assert got == {n: 4 for n in range(1, 6)}
 
 
-def test_kcore_raises_on_round_budget(spark):
+def test_kcore_raises_on_round_budget(spark, monkeypatch):
     import pytest
 
-    from mapreduce_implementation_grpc_spark.operators.graph_motifs import kcore
+    from mapreduce_implementation_grpc_spark.operators import graph_motifs
 
+    # a graph deeper than the round budget: shrink the budget rather
+    # than build a path longer than KCORE_MAX_ROUNDS peels
+    monkeypatch.setattr(graph_motifs, "KCORE_MAX_ROUNDS", 0)
     edges = spark.createDataFrame([(1, 2), (2, 3)], "s1 long, s2 long")
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        kcore(edges, k=1, max_rounds=0)
+        graph_motifs.kcore(edges, k=1)
 
 
 def test_event_transitions_is_a_markov_matrix(spark, sf_smoke):

@@ -19,7 +19,7 @@ from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     real_decode_features,
     sniff,
 )
-from tests.media_encoders import _lzw_encode_literals, gif_encode
+from tests.media_encoders import _lzw_encode_literals, gif_encode, media_df
 
 
 def test_lzw_hand_vector():
@@ -116,38 +116,40 @@ def test_gif_feature_vector():
     assert feat == [8.0, 6.0, 2.0, 20.0]  # w, h, n_frames, mean
 
 
+_DOC3_FRAMES = (7, 9, 11, 13, 15)
+
+
 @pytest.fixture(scope="module")
 def gif_docs(spark):
     a = gif_encode([np.full((4, 4, 3), v, np.uint8) for v in (10, 200)])
     b = gif_encode([np.full((4, 4, 3), v, np.uint8) for v in (10, 200)])
-    c = gif_encode([np.full((5, 3, 3), v, np.uint8) for v in (7, 9, 11)])
-    return spark.createDataFrame(
-        [(1, bytearray(a)), (2, bytearray(b)), (3, bytearray(c))],
-        "doc_id long, payload binary",
-    )
+    c = gif_encode([np.full((5, 3, 3), v, np.uint8) for v in _DOC3_FRAMES])
+    return media_df(spark, {1: a, 2: b, 3: c})
 
 
 def test_spark_gif_frame_sampling(spark, gif_docs):
     from mapreduce_implementation_grpc_spark.multimodal.binary_ops import (
+        FRAME_EVERY_K,
         sample_frames,
     )
     from mapreduce_implementation_grpc_spark.multimodal.codecs import (
         png_decode,
     )
 
-    rows = sample_frames(gif_docs, every_k=2, real_codec=True).collect()
+    rows = sample_frames(gif_docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
-    # every_k=2: docs 1/2 (2 frames) keep frame 0; doc 3 (3 frames)
-    # keeps frames 0 and 2
+    # every FRAME_EVERY_K-th frame: docs 1/2 (2 frames) keep frame 0;
+    # doc 3 (5 frames) keeps frames 0 and FRAME_EVERY_K
+    kept = _DOC3_FRAMES[::FRAME_EVERY_K]
     assert len(by_doc[1]) == 1 and len(by_doc[2]) == 1
-    assert len(by_doc[3]) == 2
+    assert len(by_doc[3]) == len(kept) == 2
     # frames are real PNGs of the composed GIF frames
     img = png_decode(bytes.fromhex(by_doc[1][0].frame))
     assert img.shape == (4, 4, 3) and int(img[0, 0, 0]) == 10
     img3 = png_decode(bytes.fromhex(sorted(by_doc[3], key=lambda r: r.frame_idx)[1].frame))
-    assert int(img3[0, 0, 0]) == 11  # third GIF frame (kept as idx 1)
+    assert int(img3[0, 0, 0]) == kept[1]  # GIF frame FRAME_EVERY_K (kept as idx 1)
 
 
 def test_spark_gif_phash_dedup_groups_identical_animations(spark, gif_docs):
@@ -161,16 +163,7 @@ def test_spark_gif_phash_dedup_groups_identical_animations(spark, gif_docs):
         decode_features,
     )
 
-    meta = gif_docs.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit("gif").alias("modality"),
-            F.length("payload").alias("n_bytes"),
-            F.sha2("payload", 256).alias("content_sha256"),
-        ).alias("meta"),
-    )
-    feat = decode_features(meta, real_codec=True)
+    feat = decode_features(gif_docs)
     phash = (
         F.conv(
             F.concat(

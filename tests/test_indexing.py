@@ -9,6 +9,9 @@ import math
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.functions.indexing import (
+    INDEX_MAX_DF,
+    PMI_MIN_COUNT,
+    TOP_TERMS_K,
     bigram_pmi,
     inverted_index,
     top_terms_per_group,
@@ -30,7 +33,7 @@ def test_inverted_index_postings_and_bounds(spark):
             (4, "entirely different words here", "en"),
         ],
     )
-    out = inverted_index(docs, max_df=10)
+    out = inverted_index(docs)
     rows = {r["phrase"]: r for r in out.collect()}
     # "the quick brown" occurs in docs 1,2,3; "quick brown fox" in 1,3.
     assert rows["the quick brown"]["df"] == 3
@@ -42,32 +45,35 @@ def test_inverted_index_postings_and_bounds(spark):
 
 
 def test_inverted_index_max_df_excludes_boilerplate(spark):
-    rows = [(i, "common boiler plate text", "en") for i in range(1, 6)]
-    rows.append((99, "common boiler plate text", "en"))
+    rows = [(i, "common boiler plate text", "en") for i in range(INDEX_MAX_DF + 1)]
     docs = _docs(spark, rows)
-    out = inverted_index(docs, max_df=5)
-    # Every phrase appears in 6 docs > max_df -> empty result.
+    out = inverted_index(docs)
+    # Every phrase appears in INDEX_MAX_DF + 1 docs -> empty result.
     assert out.count() == 0
 
 
 def test_bigram_pmi_hand_computed(spark):
-    # Corpus: "a b" x4 and "c d" x1  ->  5 docs, 10 tokens, 5 bigrams.
-    rows = [(i, "a b", "en") for i in range(4)] + [(4, "c d", "en")]
+    # Corpus: "a b" x n and "c d" x1  ->  n+1 docs, 2(n+1) tokens,
+    # n+1 bigrams.
+    n = PMI_MIN_COUNT
+    rows = [(i, "a b", "en") for i in range(n)] + [(n, "c d", "en")]
     docs = _docs(spark, rows)
-    out = {r["gram"]: r for r in bigram_pmi(docs, min_count=4).collect()}
-    # Only "a b" (cnt=4) survives min_count; c("a")=c("b")=4, N=10, Nb=5.
+    out = {r["gram"]: r for r in bigram_pmi(docs).collect()}
+    # Only "a b" (cnt=n) survives the min count; c("a")=c("b")=n.
     assert set(out) == {"a b"}
-    expected = math.log((4.0 * 10.0 * 10.0) / (5.0 * 4.0 * 4.0))
+    big, tok = n + 1.0, 2.0 * (n + 1)
+    expected = math.log((n * tok * tok) / (big * n * n))
     assert abs(out["a b"]["pmi"] - round(expected, 6)) < 1e-9
-    assert out["a b"]["cnt"] == 4
+    assert out["a b"]["cnt"] == n
 
 
 def test_bigram_pmi_min_count_filters(spark):
-    rows = [(0, "x y x y x y", "en"), (1, "p q", "en")]
+    rows = [(0, " ".join(["x y"] * PMI_MIN_COUNT), "en"), (1, "p q", "en")]
     docs = _docs(spark, rows)
-    grams = {r["gram"] for r in bigram_pmi(docs, min_count=2).collect()}
+    grams = {r["gram"] for r in bigram_pmi(docs).collect()}
     assert "p q" not in grams  # cnt=1
-    assert "x y" in grams  # cnt=3
+    assert "y x" not in grams  # cnt=PMI_MIN_COUNT-1
+    assert "x y" in grams  # cnt=PMI_MIN_COUNT
 
 
 def test_top_terms_per_group_ranks_and_ties(spark):
@@ -77,16 +83,18 @@ def test_top_terms_per_group_ranks_and_ties(spark):
             (1, "apple apple banana", "en"),
             (2, "banana cherry", "en"),
             (3, "zeta zeta alpha alpha", "fr"),
+            (4, "d e f g h", "en"),
         ],
     )
-    out = top_terms_per_group(docs, k=2).collect()
+    out = top_terms_per_group(docs).collect()
     en = {r["rn"]: r for r in out if r["lang"] == "en"}
     fr = {r["rn"]: r for r in out if r["lang"] == "fr"}
     # en: apple=2, banana=2 -> tie broken alphabetically.
     assert en[1]["word"] == "apple" and en[2]["word"] == "banana"
     # fr: alpha=2, zeta=2 -> alpha first.
     assert fr[1]["word"] == "alpha" and fr[2]["word"] == "zeta"
-    assert all(r["rn"] <= 2 for r in out)
+    # en has 8 terms: only the top TOP_TERMS_K are kept
+    assert sorted(en) == list(range(1, TOP_TERMS_K + 1)) and len(fr) == 2
 
 
 def test_incremental_dedup_exact_and_report(spark):

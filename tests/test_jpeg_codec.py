@@ -21,7 +21,7 @@ from mapreduce_implementation_grpc_spark.multimodal.codecs import (
     sniff,
 )
 from mapreduce_implementation_grpc_spark.multimodal.jpeg import jpeg_decode
-from tests.media_encoders import jpeg_encode
+from tests.media_encoders import jpeg_encode, media_df
 
 
 def _smooth_rgb(h: int = 40, w: int = 56) -> np.ndarray:
@@ -150,8 +150,6 @@ def test_spark_resize_pipeline_decodes_jpeg(spark):
     """JPEG payloads flow through the real-codec resize_images
     mapInPandas path next to PNGs: decode -> nearest-resize -> PNG
     thumb, deterministic bytes."""
-    from pyspark.sql import Row
-
     from mapreduce_implementation_grpc_spark.multimodal.binary_ops import (
         resize_images,
     )
@@ -161,12 +159,10 @@ def test_spark_resize_pipeline_decodes_jpeg(spark):
     )
 
     imgs = {1: _smooth_rgb(20, 28), 2: _smooth_rgb(33, 17)}
-    rows = [
-        Row(doc_id=1, payload=bytearray(jpeg_encode(imgs[1], quality=95))),
-        Row(doc_id=2, payload=bytearray(png_encode(imgs[2]))),
-    ]
-    df = spark.createDataFrame(rows)
-    out = {r.doc_id: r for r in resize_images(df, 8, 8, real_codec=True).collect()}
+    df = media_df(
+        spark, {1: jpeg_encode(imgs[1], quality=95), 2: png_encode(imgs[2])}
+    )
+    out = {r.doc_id: r for r in resize_images(df).collect()}
     assert set(out) == {1, 2}
     for doc_id, r in out.items():
         thumb = png_decode(bytes.fromhex(r.thumb))

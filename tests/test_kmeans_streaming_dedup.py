@@ -20,6 +20,7 @@ from mapreduce_implementation_grpc_spark.operators.kmeans import (
     _assign,
     _centroids_from,
     kmeans_cells,
+    kmeans_fit,
 )
 from mapreduce_implementation_grpc_spark.streaming import streaming_dedup
 
@@ -41,7 +42,7 @@ def clustered_emb(spark):
 
 
 def test_kmeans_separates_clusters_and_groups_dups(clustered_emb):
-    cells = {r.vec_id: r.cell for r in kmeans_cells(clustered_emb, k=2, n_iter=4).collect()}
+    cells = {r.vec_id: r.cell for r in kmeans_cells(clustered_emb, k=2).collect()}
     assert cells[0] == cells[1] == cells[2]       # cluster A together (incl. dup)
     assert cells[3] == cells[4] == cells[5]       # cluster B together
     assert cells[0] != cells[3]
@@ -50,7 +51,7 @@ def test_kmeans_separates_clusters_and_groups_dups(clustered_emb):
 def test_kmeans_inertia_nonincreasing(clustered_emb):
     prev = None
     for n in (1, 2, 4):
-        assigned = kmeans_cells(clustered_emb, k=2, n_iter=n)
+        assigned = _assign(clustered_emb, kmeans_fit(clustered_emb, 2, n), "embedding")
         inertia = assigned.agg(F.sum("obj")).collect()[0][0]
         if prev is not None:
             assert inertia <= prev + 1e-9
@@ -88,7 +89,7 @@ def test_streaming_dedup_across_microbatches(spark, tmp_path):
     write("b1.json", [(1, "2024-01-01 10:00:00", "Hello World"),
                       (2, "2024-01-01 10:01:00", "hello, world!")])  # dup after normalize
     stream = spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).json(src)
-    out = streaming_dedup(stream, watermark="2 hours")
+    out = streaming_dedup(stream)
     q = out.writeStream.format("memory").queryName("dedup_stream").outputMode("append").start()
     try:
         q.processAllAvailable()

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from mapreduce_implementation_grpc_spark.operators.linkpred import (
+    LINKPRED_TOP_N,
     cosupply_link_prediction,
     link_prediction,
 )
@@ -20,7 +21,7 @@ def edges_df(spark):
 
 
 def test_hand_computed_scores(spark, edges_df):
-    rows = link_prediction(edges_df, top_n=10).collect()
+    rows = link_prediction(edges_df).collect()
     got = {(r.s1, r.s2): r for r in rows}
     # non-adjacent pairs with >= 1 common neighbor, and nothing else
     assert set(got) == {(1, 4), (2, 5), (3, 5)}
@@ -41,19 +42,19 @@ def test_hand_computed_scores(spark, edges_df):
 
 
 def test_adjacent_pairs_never_scored(spark, edges_df):
-    got = {(r.s1, r.s2) for r in link_prediction(edges_df, top_n=10).collect()}
+    got = {(r.s1, r.s2) for r in link_prediction(edges_df).collect()}
     assert got.isdisjoint(set(EDGES))
 
 
 def test_max_degree_drops_hub_centers(spark, edges_df):
     # max_degree=2 keeps only node 1 (deg 2) as a wedge center:
     # its neighbors {2, 3} are adjacent, so NO pair survives
-    rows = link_prediction(edges_df, top_n=10, max_degree=2).collect()
+    rows = link_prediction(edges_df, max_degree=2).collect()
     assert rows == []
 
 
 def test_cosupply_smoke(spark, sf_check):
-    df = cosupply_link_prediction(spark, sf_check, top_n=5)
+    df = cosupply_link_prediction(spark, sf_check)
     rows = df.collect()
     assert df.columns == [
         "s1",
@@ -62,7 +63,7 @@ def test_cosupply_smoke(spark, sf_check):
         "jaccard",
         "adamic_adar",
     ]
-    assert len(rows) == 5
+    assert len(rows) == LINKPRED_TOP_N
     assert all(0.0 < r.jaccard <= 1.0 for r in rows)
     aas = [r.adamic_adar for r in rows]
     assert aas == sorted(aas, reverse=True)

@@ -86,7 +86,7 @@ def cosine_docs(spark):
 def test_tf_cosine_exact_dup_and_partial(cosine_docs):
     pairs = {
         (r.doc_a, r.doc_b): r.cosine
-        for r in tf_cosine_pairs(cosine_docs, threshold=0.1).collect()
+        for r in tf_cosine_pairs(cosine_docs).collect()
     }
     assert pairs[(0, 1)] == pytest.approx(1.0)
     # dot=2, norms=sqrt(3): 2/3
@@ -95,16 +95,14 @@ def test_tf_cosine_exact_dup_and_partial(cosine_docs):
 
 
 def test_tf_cosine_max_df_drops_hot_terms(spark):
-    # 'the' appears in every doc; with max_df=2 it is excluded from
-    # the vector space, so docs sharing ONLY 'the' never pair
+    # 'the' appears in TF_MAX_DF + 1 docs, so it is excluded from the
+    # vector space, and docs sharing ONLY 'the' (cosine 0.5) never pair
+    from mapreduce_implementation_grpc_spark.operators.sparse_sim import TF_MAX_DF
+
     docs = spark.createDataFrame(
-        [
-            Row(doc_id=0, text="the apple"),
-            Row(doc_id=1, text="the banana"),
-            Row(doc_id=2, text="the cherry"),
-        ]
+        [Row(doc_id=i, text=f"the w{i}") for i in range(TF_MAX_DF + 1)]
     )
-    assert tf_cosine_pairs(docs, max_df=2, threshold=0.01).count() == 0
+    assert tf_cosine_pairs(docs).count() == 0
 
 
 def test_doc_tf_cosine_oracle(spark, sf_check):

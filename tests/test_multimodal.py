@@ -1,5 +1,5 @@
 """Multimodal binary-column plumbing: schema, Arrow-batched decode,
-and the explicit NotImplementedError stub for real codecs."""
+and the per-row codec choice by meta.modality."""
 
 from __future__ import annotations
 
@@ -12,7 +12,15 @@ from mapreduce_implementation_grpc_spark.multimodal import (
     fake_decode_batch,
     with_binary_payload,
 )
+from mapreduce_implementation_grpc_spark.multimodal.binary_ops import (
+    FRAME_BYTES,
+    FRAME_EVERY_K,
+    THUMB_SIZE,
+)
+from tests.media_encoders import media_df
 from tests.oracle_utils import assert_matches_oracle
+
+MEDIA = ("png", "jpeg", "gif", "wav")
 
 
 @pytest.fixture(scope="module")
@@ -42,11 +50,28 @@ def test_decode_features_matches_local_computation(docs):
     assert out[3].n_bytes == 11
 
 
-def test_real_codec_rejects_non_media_payload(docs):
-    # real_codec=True now actually decodes (see test_codecs.py); over
-    # text payloads it must fail loudly, not emit junk features.
-    with pytest.raises(Exception, match="unknown payload format"):
-        decode_features(with_binary_payload(docs), real_codec=True).collect()
+def test_media_row_with_text_bytes_raises(spark):
+    # a row declared as media is decoded by its real codec; text bytes
+    # there must fail loudly, not emit junk features
+    for modality in MEDIA:
+        df = media_df(spark, {1: b"abc"}, modality=modality)
+        with pytest.raises(Exception, match=f"declared '{modality}' sniffs as 'unknown'"):
+            decode_features(df).collect()
+
+
+def test_mixed_rows_take_their_own_codec(spark):
+    import numpy as np
+
+    from mapreduce_implementation_grpc_spark.multimodal.codecs import png_encode
+
+    img = np.full((3, 5, 3), 40, np.uint8)
+    df = media_df(spark, {1: b"hello"}, modality="text").unionByName(
+        media_df(spark, {2: png_encode(img)})
+    )
+    out = {r.doc_id: r for r in decode_features(df).collect()}
+    assert out[1].modality == "text" and out[2].modality == "png"
+    assert out[1].feature == fake_decode_batch([b"hello"])[0]
+    assert out[2].feature == [5.0, 3.0, 3.0, 40.0]  # width, height, channels, mean
 
 
 def test_meta_oracle_parity(spark, sf_check):
@@ -61,32 +86,32 @@ def test_sample_frames_chunking(spark):
     from mapreduce_implementation_grpc_spark.multimodal import sample_frames
 
     docs = spark.createDataFrame([Row(doc_id=1, text="x" * 100)])
-    frames = sample_frames(with_binary_payload(docs), every_k=2, frame_bytes=16).collect()
-    # 100 bytes -> 7 chunks of <=16 -> every 2nd -> 4 frames
-    assert [r.frame_idx for r in frames] == [0, 1, 2, 3]
-    assert frames[0].n_bytes == 16
-    assert frames[0].frame == ("78" * 16)  # 'x' == 0x78
+    frames = sample_frames(with_binary_payload(docs)).collect()
+    # 100 bytes -> ceil(100 / FRAME_BYTES) chunks -> every FRAME_EVERY_K-th
+    n_chunks = -(-100 // FRAME_BYTES)
+    assert [r.frame_idx for r in frames] == list(range(-(-n_chunks // FRAME_EVERY_K)))
+    assert frames[0].n_bytes == FRAME_BYTES
+    assert frames[0].frame == ("78" * FRAME_BYTES)  # 'x' == 0x78
 
 
 def test_resize_images_fixed_output(spark):
     from mapreduce_implementation_grpc_spark.multimodal import resize_images
 
     docs = spark.createDataFrame([Row(doc_id=1, text="abcdefgh" * 32), Row(doc_id=2, text="")])
-    out = {r.doc_id: r for r in resize_images(with_binary_payload(docs), 4, 4).collect()}
-    assert len(out[1].thumb) == 2 * 16  # 16 sampled bytes, hex-encoded
+    out = {r.doc_id: r for r in resize_images(with_binary_payload(docs)).collect()}
+    assert len(out[1].thumb) == 2 * THUMB_SIZE**2  # sampled bytes, hex-encoded
     assert out[2].thumb == ""
-    assert out[1].width == 4 and out[1].height == 4
+    assert out[1].width == THUMB_SIZE and out[1].height == THUMB_SIZE
 
 
-def test_real_codec_media_ops_reject_non_media(spark):
+def test_media_ops_reject_text_bytes_declared_media(spark):
     from mapreduce_implementation_grpc_spark.multimodal import resize_images, sample_frames
 
-    docs = spark.createDataFrame([Row(doc_id=1, text="abc")])
-    p = with_binary_payload(docs)
-    with pytest.raises(Exception, match="not a WAV payload"):
-        sample_frames(p, real_codec=True).collect()
-    with pytest.raises(Exception, match="not a PNG payload"):
-        resize_images(p, real_codec=True).collect()
+    for modality in MEDIA:
+        p = media_df(spark, {1: b"abc"}, modality=modality)
+        for op in (sample_frames, resize_images):
+            with pytest.raises(Exception, match=f"declared '{modality}' sniffs as 'unknown'"):
+                op(p).collect()
 
 
 def test_streaming_decode_features_matches_batch(spark, tmp_path):

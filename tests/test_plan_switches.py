@@ -20,17 +20,20 @@ that only tests run is a test fixture or dead. AST only; no Spark.
    module-level function, public or private, in ``operators/``,
    ``functions/``, ``multimodal/``, ``sources/``, ``plans/``,
    ``streaming/``, ``registry/`` and ``materialize.py`` is set to
-   another value by some call in the package, ``tests/``, ``tools/``,
-   ``bench.py``, ``perfbench/`` or ``__spark_entry__.py``. The rule is
-   in `never_set_parameters`. A ``q_*`` function's place in the
+   another value by some call in the package, ``tools/``,
+   ``bench.py``, ``perfbench/`` or ``__spark_entry__.py``. Tests do
+   not count: a value that only a test passes is a constant, and the
+   test checks the behaviour at that constant. The rule is in
+   `never_set_parameters`. A ``q_*`` function's place in the
    ``QUERIES`` table sets nothing: the driver, ``bench.py`` and
    ``perfbench`` call it with exactly ``(spark, sf_dir)``, so a value
    that only the query uses is a module constant next to it, and an
-   oracle builder reads the same constant instead of restating it.
-   The deployment settings of ``session.get_spark`` are out of scope. A
-   parameter that only tests set still counts as set;
-   ``multimodal/binary_ops.decode_features(real_codec)`` is one (tests
-   run the real PNG/JPEG/GIF/WAV decoders through it).
+   oracle builder reads the same constant instead of restating it. A
+   module-level ``q_x = analytics.fn`` is an alias of ``fn``, not a use
+   of it, and a literal equal to the value of a named constant default
+   (``min_quality=0.5`` against ``MIN_QUALITY = 0.5``) passes the
+   default. The deployment settings of ``session.get_spark`` are out of
+   scope.
 
 3. Every package def is reached. Each module-level def or class of
    the package is reached from a root by name: every module-level
@@ -217,14 +220,16 @@ def _stores(fn, name: str) -> bool:
 
 
 class _Index(ast.NodeVisitor):
-    """Every def, call and by-value function reference in one module."""
+    """Every def, call, by-value function reference, alias and
+    module-level literal constant in one module."""
 
     def __init__(self, module: str, tree: ast.Module):
         self.module, self.stack = module, []
         self.defs: list[tuple[str, ast.AST, bool]] = []  # (name, node, plain)
         self.calls: list[tuple[str, ast.Call, tuple]] = []  # (callee, call, scopes)
         self.referenced: set[str] = set()
-        self.aliases: dict[str, str] = {}
+        self.aliases: list[tuple[str, str]] = []  # (alias, name)
+        self.constants: dict[str, ast.expr] = {}  # UPPER_CASE = <expr>
         self.queries: dict[str, str] = {}  # QUERIES key -> function name
         self.module_level = {id(n) for n in tree.body}
         self._callee_nodes: set[int] = set()
@@ -233,7 +238,7 @@ class _Index(ast.NodeVisitor):
     def visit_ImportFrom(self, node):
         for a in node.names:
             if a.asname and a.asname != a.name:
-                self.aliases[a.asname] = a.name
+                self.aliases.append((a.asname, a.name))
 
     def _visit_def(self, node, plain: bool):
         self.defs.append((getattr(node, "name", "<lambda>"), node, plain))
@@ -256,8 +261,21 @@ class _Index(ast.NodeVisitor):
         self.stack.pop()
 
     def visit_Assign(self, node):
-        # the QUERIES table: the driver calls each entry with (spark, sf_dir)
         targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        if (
+            id(node) in self.module_level
+            and len(targets) == 1
+            and isinstance(targets[0], ast.Name)
+            and node.value is not None
+        ):
+            name, value = targets[0].id, node.value
+            if isinstance(value, (ast.Name, ast.Attribute)):
+                # `q_x = analytics.fn` renames fn, like `import ... as`
+                self._callee_nodes.add(id(value))
+                self.aliases.append((name, getattr(value, "attr", getattr(value, "id", None))))
+            if name.lstrip("_").isupper():
+                self.constants[name] = value
+        # the QUERIES table: the driver calls each entry with (spark, sf_dir)
         if isinstance(node.value, ast.Dict) and any(
             isinstance(t, ast.Name) and t.id == "QUERIES" for t in targets
         ):
@@ -293,6 +311,57 @@ class _Index(ast.NodeVisitor):
         self.generic_visit(node)
 
 
+_UNKNOWN = object()
+
+
+def _value(node: ast.expr, values: dict[str, object]) -> object:
+    """The literal value of `node`, a name or attribute bound to a
+    literal by a module-level constant, or `_UNKNOWN`."""
+    if isinstance(node, (ast.Name, ast.Attribute)):
+        return values.get(getattr(node, "id", getattr(node, "attr", None)), _UNKNOWN)
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _UNKNOWN
+
+
+def _constant_values(indexes) -> dict[str, object]:
+    """Module-level constant name -> literal value, following
+    ``A = B`` chains across modules; a name bound to two different
+    values in two modules is left out."""
+    values: dict[str, object] = {}
+    clashing: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for ix in indexes:
+            for name, node in ix.constants.items():
+                v = _value(node, values)
+                if v is _UNKNOWN or name in clashing:
+                    continue
+                if name not in values:
+                    values[name], grew = v, True
+                elif not _same(values[name], v):
+                    clashing.add(name)
+                    del values[name]
+    return values
+
+
+def _same(a: object, b: object) -> bool:
+    return type(a) is type(b) and a == b
+
+
+def _same_value(arg: ast.expr, default: ast.expr, values: dict[str, object]) -> bool:
+    """A literal argument passes a literal default, or a named constant
+    default, of the same value; any other argument only passes an
+    identical default expression."""
+    if not isinstance(arg, (ast.Name, ast.Attribute)):
+        a, d = _value(arg, values), _value(default, values)
+        if a is not _UNKNOWN and d is not _UNKNOWN:
+            return _same(a, d)
+    return ast.dump(arg) == ast.dump(default)
+
+
 def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
     """'module.function(param)' for every defaulted parameter of a
     module-level function in a `scope` module that no call in `sources`
@@ -306,13 +375,23 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
     reference to the function as a value -- except an entry of a
     ``QUERIES`` dict, which the driver calls with ``(spark, sf_dir)``
     only; a call through it, ``QUERIES["name"](...)``, counts as a call
-    of the function the entry names. Callees are matched by name
-    (through ``import ... as`` aliases), so a name clash only keeps a
-    parameter."""
+    of the function the entry names. Callees are matched by name, and
+    through ``import ... as`` and module-level ``name = mod.fn``
+    aliases, so a name clash only keeps a parameter. A literal argument
+    passes the default when it has the default's value, also when the
+    default is a module-level constant (``0.5`` passes
+    ``MIN_QUALITY = 0.5``); any other argument passes it only when its
+    AST is the default's."""
     indexes = [_Index(m, ast.parse(src)) for m, src in sorted(sources.items())]
-    aliases = {k: v for ix in indexes for k, v in ix.aliases.items()}
+    aliases: dict[str, set[str]] = {}
+    for ix in indexes:
+        for alias, name in ix.aliases:
+            aliases.setdefault(alias, set()).add(name)
     table = {k: v for ix in indexes for k, v in ix.queries.items()}
-    referenced = {aliases.get(n, n) for ix in indexes for n in ix.referenced}
+    referenced = {
+        r for ix in indexes for n in ix.referenced for r in {n} | aliases.get(n, set())
+    }
+    values = _constant_values(indexes)
     defs: dict[str, list[ast.AST]] = {}
     for ix in indexes:
         for name, node, _ in ix.defs:
@@ -331,7 +410,8 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
             star = any(isinstance(a, ast.Starred) for a in call.args) or any(
                 k.arg is None for k in call.keywords
             )
-            for fn in defs.get(aliases.get(callee, callee), []):
+            targets = {callee} | aliases.get(callee, set())
+            for fn in (fn for t in targets for fn in defs.get(t, [])):
                 for p, (idx, default) in _params(fn).items():
                     if default is None:
                         continue
@@ -340,7 +420,7 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
                         arg = call.args[idx]
                     if star:
                         is_set.add((id(fn), p))
-                    elif arg is None or ast.dump(arg) == ast.dump(default):
+                    elif arg is None or _same_value(arg, default, values):
                         continue
                     elif isinstance(arg, ast.Name) and arg.id == p:
                         outer = next(
@@ -377,11 +457,11 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
 
 
 def _callers() -> tuple[dict[str, str], set[str]]:
-    """Every caller source (the package, tests, tools, bench.py,
-    perfbench, the driver entry) keyed by dotted module name, and the
-    modules in scope for the lint."""
-    paths = [p for d in ("mapreduce_implementation_grpc_spark", "tests", "tools",
-                         "perfbench") for p in sorted((REPO / d).rglob("*.py"))]
+    """Every caller source outside the tests (the package, tools,
+    bench.py, perfbench, the driver entry) keyed by dotted module name,
+    and the modules in scope for the lint."""
+    paths = [p for d in ("mapreduce_implementation_grpc_spark", "tools", "perfbench")
+             for p in sorted((REPO / d).rglob("*.py"))]
     paths += [REPO / "bench.py", REPO / "__spark_entry__.py"]
     sources = {
         p.relative_to(REPO).with_suffix("").as_posix().replace("/", "."): p.read_text()
@@ -414,6 +494,10 @@ def test_defaulted_parameter_detector_self_test():
         "def required(df, k): ...\n"
         "def q_listed(spark, sf_dir, n=100): ...\n"
         "def q_called(spark, sf_dir, k=5): ...\n"
+        "MIN_Q = 0.5\n"
+        "def named(df, q=MIN_Q, r=MIN_Q): ...\n"
+        "def renamed_listed(spark, sf_dir, n=9): ...\n"
+        "def renamed_called(spark, sf_dir, n=9): ...\n"
     )
     caller = (
         "from lib import aliased as _al\n"
@@ -439,18 +523,25 @@ def test_defaulted_parameter_detector_self_test():
         "class C:\n"
         "    def clash(self, df, k=2): ...\n"
         "C().clash(df, 7)\n"
-        "QUERIES = {'listed': lib.q_listed, 'called': lib.q_called}\n"
+        "named(df, q=0.5, r=0.25)\n"
+        "q_renamed_listed = lib.renamed_listed\n"
+        "q_renamed_called = renamed_called\n"
+        "q_renamed_called(spark, d, n=4)\n"
+        "QUERIES = {'listed': lib.q_listed, 'called': lib.q_called,\n"
+        "           'rl': q_renamed_listed, 'rc': q_renamed_called}\n"
         "QUERIES['called'](spark, d, k=3)\n"
     )
     never = never_set_parameters(
-        {"pkg.operators.lib": lib, "tests.caller": caller}, {"pkg.operators.lib"}
+        {"pkg.operators.lib": lib, "tools.caller": caller}, {"pkg.operators.lib"}
     )
     assert never == [
         "pkg.operators.lib._private(k)",
         "pkg.operators.lib.constant(bits)",
         "pkg.operators.lib.inner_unset(k)",
         "pkg.operators.lib.literal(text_col)",
+        "pkg.operators.lib.named(q)",
         "pkg.operators.lib.q_listed(n)",
+        "pkg.operators.lib.renamed_listed(n)",
         "pkg.operators.lib.slot(n)",
     ]
     # `clash` keeps k: the method of the same name is called with 7
@@ -458,7 +549,10 @@ def test_defaulted_parameter_detector_self_test():
     # k: its caller passes a local computed from k, not a forward.
     # `outer_unset` is out of scope, so only its callee is listed.
     # `q_listed` is only a QUERIES entry, which sets nothing; `q_called`
-    # keeps k through the QUERIES['called'](...) call.
+    # keeps k through the QUERIES['called'](...) call. `named(q)` is
+    # passed 0.5, the value of its default MIN_Q. A module-level
+    # `q_x = fn` renames fn: a table holding the alias sets nothing,
+    # and a call through it sets n.
 
 
 def test_every_defaulted_parameter_is_set_by_some_caller():

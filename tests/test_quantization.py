@@ -8,8 +8,11 @@ from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark import registry
 from mapreduce_implementation_grpc_spark.operators.quantization import (
+    DEFAULT_PQ_K,
+    DEFAULT_PQ_M,
     quantize_embeddings,
 )
+from mapreduce_implementation_grpc_spark.operators.similarity import DIM, TOPK
 
 
 def test_codes_in_range_and_error_bounded(spark, sf_check):
@@ -53,25 +56,25 @@ def test_pq_codes_properties(spark, sf_check):
     from mapreduce_implementation_grpc_spark.operators.quantization import pq_codes
 
     emb = spark.read.parquet(f"{sf_check}/embeddings.parquet")
-    pq = pq_codes(emb, m=4, k=4, n_iter=1)
+    pq = pq_codes(emb)
     rows = pq.collect()
     assert len(rows) == emb.count()
     for r in rows[:50]:
-        assert len(r.codes) == 4
-        assert all(0 <= c < 4 for c in r.codes)
+        assert len(r.codes) == DEFAULT_PQ_M
+        assert all(0 <= c < DEFAULT_PQ_K for c in r.codes)
         assert r.recon_err >= -1e-9
 
 
 def test_pq_identical_vectors_same_codes(spark):
     from mapreduce_implementation_grpc_spark.operators.quantization import pq_codes
 
-    base = [float(i % 7) for i in range(8)]
-    other = [float((i * 3) % 5) for i in range(8)]
+    base = [float(i % 7) for i in range(DIM)]
+    other = [float((i * 3) % 5) for i in range(DIM)]
     emb = spark.createDataFrame(
         [(0, base), (1, other), (2, base), (3, [x + 0.01 for x in base])],
         "vec_id long, embedding array<double>",
     )
-    got = {r.vec_id: r for r in pq_codes(emb, m=2, k=2, n_iter=2, dim=8).collect()}
+    got = {r.vec_id: r for r in pq_codes(emb).collect()}
     assert got[0].codes == got[2].codes
     assert got[0].recon_err == got[2].recon_err
 
@@ -84,16 +87,16 @@ def test_pq_adc_planted_duplicate_ranks_first(spark):
     import random
 
     rng = random.Random(7)
-    vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(2, 40)]
-    q = [0.9, -0.8, 0.7, -0.6, 0.5, -0.4, 0.3, -0.2]
+    vecs = [(i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(2, 40)]
+    q = [0.9, -0.8, 0.7, -0.6, 0.5, -0.4, 0.3, -0.2] * (DIM // 8)
     emb = spark.createDataFrame(
         [(0, q), (1, list(q))] + vecs, "vec_id long, embedding array<double>"
     )
     queries = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    top = pq_adc_topk(emb, queries, topk=3, m=2, k=4, n_iter=2, dim=8).collect()
-    assert [r.rank for r in top] == [1, 2, 3]
+    top = pq_adc_topk(emb, queries).collect()
+    assert [r.rank for r in top] == list(range(1, TOPK + 1))
     assert top[0].neighbor_id == 1  # the planted duplicate
 
 
@@ -157,17 +160,15 @@ def test_ivfpq_residual_planted_duplicate_ranks_first(spark):
     import random
 
     rng = random.Random(23)
-    vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(2, 60)]
-    q = [0.7, -0.6, 0.5, -0.4, 0.3, -0.2, 0.1, -0.9]
+    vecs = [(i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(2, 60)]
+    q = [0.7, -0.6, 0.5, -0.4, 0.3, -0.2, 0.1, -0.9] * (DIM // 8)
     emb = spark.createDataFrame(
         [(0, q), (1, list(q))] + vecs, "vec_id long, embedding array<double>"
     )
     queries = emb.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
-    top = ivfpq_residual_topk(
-        emb, queries, topk=3, coarse_k=4, coarse_iter=2, m=2, k=4, n_iter=2, dim=8
-    ).collect()
+    top = ivfpq_residual_topk(emb, queries).collect()
     assert top[0].neighbor_id == 1 and top[0].rank == 1
 
 

@@ -106,16 +106,17 @@ def test_projection_is_linear(spark):
     df = spark.createDataFrame(
         [Row(vec_id=0, embedding=a), Row(vec_id=1, embedding=b), Row(vec_id=2, embedding=s)]
     )
-    rows = {r.vec_id: r for r in project_embeddings(df, decimals=9).collect()}
+    rows = {r.vec_id: r for r in project_embeddings(df).collect()}
     for p in range(8):
         pa, pb, ps = (rows[i][f"p{p}"] for i in (0, 1, 2))
-        assert ps == pytest.approx(pa + pb, abs=1e-6)
+        # each coordinate is rounded to 6 decimals: 3 half-ulps of 1e-6
+        assert ps == pytest.approx(pa + pb, abs=1.5e-6 + 1e-12)
 
 
 def test_projection_planes_differ_from_lsh(spark):
     from mapreduce_implementation_grpc_spark.operators.similarity import lsh_planes
 
-    assert projection_planes() != lsh_planes(8, 64)
+    assert projection_planes() != lsh_planes(8)
 
 
 def test_projection_plan_has_no_exchange(spark, sf_check):

@@ -30,7 +30,7 @@ CASES = [
 def test_matches_naive_window(spark, rows, asc):
     df = spark.createDataFrame(rows, "k double, t string")
     got = with_global_row_number(
-        df, "k", tiebreaks=[F.asc("t")], ascending=asc, n_buckets=4
+        df, "k", tiebreaks=[F.asc("t")], ascending=asc
     )
     w = Window.orderBy(F.asc("k") if asc else F.desc("k"), F.asc("t"))
     want = df.withColumn("rn", F.row_number().over(w))

@@ -8,7 +8,6 @@ import pytest
 from mapreduce_implementation_grpc_spark import registry
 from mapreduce_implementation_grpc_spark.operators.robust import (
     mad_outliers,
-    trimmed_mean,
     weighted_median,
 )
 
@@ -85,20 +84,12 @@ def test_parameter_guards_raise(spark):
     NaN/short output at execution time."""
     import pytest
 
-    from mapreduce_implementation_grpc_spark.operators.curation import (
-        stratified_sample,
-    )
     from mapreduce_implementation_grpc_spark.operators.regression import (
         trailing_ols,
     )
 
-    df = spark.createDataFrame([("g", 1, 1)], "g string, v long, w long")
+    df = spark.createDataFrame([("g", 1, 1)], "total_weight string, v long, w long")
     with pytest.raises(ValueError, match="collides"):
-        weighted_median(df, "g", "v", "w", out_col="total_weight")
-    with pytest.raises(ValueError, match="trim_pct"):
-        trimmed_mean(df, "g", "v", trim_pct=50)
+        weighted_median(df, "total_weight", "v", "w")
     with pytest.raises(ValueError, match="width"):
         trailing_ols(df, ["g"], "v", "w", width=0)
-    docs = spark.createDataFrame([("en", 1)], "lang string, doc_id long")
-    with pytest.raises(ValueError, match="fraction"):
-        stratified_sample(docs, num=3, den=2)

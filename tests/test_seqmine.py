@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-
 from mapreduce_implementation_grpc_spark.operators.seqmine import (
     contiguous_sequences,
 )
@@ -35,7 +33,7 @@ def test_hand_computed_trigram_support(spark):
         + [(10 + i, 2, t) for i, t in enumerate("abc")]
         + [(20 + i, 3, t) for i, t in enumerate("xy")],
     )
-    rows = contiguous_sequences(ev, n=3, top_n=10).collect()
+    rows = contiguous_sequences(ev).collect()
     got = {(r.step_1, r.step_2, r.step_3): (r.support, r.occurrences) for r in rows}
     assert got == {
         ("a", "b", "c"): (2, 3),
@@ -59,22 +57,6 @@ def test_sequences_never_cross_users(spark):
     )
     got = {
         (r.step_1, r.step_2, r.step_3)
-        for r in contiguous_sequences(ev, n=3, top_n=10).collect()
+        for r in contiguous_sequences(ev).collect()
     }
     assert got == {("a", "b", "c"), ("x", "y", "z")}
-
-
-def test_min_support_and_pair_mode(spark):
-    ev = _events(
-        spark,
-        [(i, u, t) for u in (1, 2, 3) for i, t in [(u * 10, "a"), (u * 10 + 1, "b")]]
-        + [(99, 1, "q")],
-    )
-    pairs = contiguous_sequences(ev, n=2, min_support=3, top_n=10).collect()
-    assert [(r.step_1, r.step_2, r.support) for r in pairs] == [("a", "b", 3)]
-
-
-def test_n_below_two_raises(spark):
-    ev = _events(spark, [(0, 1, "a")])
-    with pytest.raises(ValueError, match="n must be >= 2"):
-        contiguous_sequences(ev, n=1)

@@ -207,8 +207,7 @@ def test_hll_rollup_registers_identical_to_direct(spark, sf_check):
 
 def test_butterflies_match_bruteforce_and_degree_cap(spark, sf_smoke):
     """Wedge-join butterfly support vs a driver-side brute force over
-    the collected edge list; and the degree-capped variant must equal
-    the exact form whenever the cap clears every supplier degree."""
+    the collected edge list (no supplier degree is capped)."""
     from collections import Counter
     from itertools import combinations
 
@@ -233,9 +232,6 @@ def test_butterflies_match_bruteforce_and_degree_cap(spark, sf_smoke):
     assert [(r.shared_suppliers, r.custkey_1, r.custkey_2) for r in got] == want
     for r in got:
         assert r.butterflies == r.shared_suppliers * (r.shared_suppliers - 1) // 2
-    max_deg = max(len(set(c)) for c in by_supp.values())
-    capped = copurchase_butterflies(spark, sf_smoke, max_degree=max_deg).collect()
-    assert [tuple(r) for r in capped] == [tuple(r) for r in got]
 
 
 def test_cms_screen_has_no_false_negatives_and_broadcast_only_probe(spark, sf_check):

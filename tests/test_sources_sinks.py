@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from mapreduce_implementation_grpc_spark.operators import word_count
 from mapreduce_implementation_grpc_spark.sources import read_text_corpus, with_task_id
 from mapreduce_implementation_grpc_spark.sources.sinks import (
-    write_parquet,
+    overwrite_partitions,
     write_word_counts_text,
 )
 
@@ -21,7 +21,7 @@ def test_text_scan_wordcount_roundtrip(spark, tmp_path):
     src.mkdir()
     (src / "part1.txt").write_text("Hello world!\nhello AGAIN\n")
     (src / "part2.txt").write_text("world world\n")
-    corpus = read_text_corpus(spark, str(src), min_partitions=4)
+    corpus = read_text_corpus(spark, str(src))
     got = {r.word: r.cnt for r in word_count(corpus).collect()}
     assert got == {"hello": 2, "world": 3, "again": 1}
 
@@ -44,7 +44,7 @@ def test_parquet_sink_partitioned(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "a", 30)], ["id", "grp", "v"]
     )
-    write_parquet(df, out, partition_by=["grp"])
+    overwrite_partitions(df, out, partition_by=["grp"])
     back = spark.read.parquet(out)
     assert back.count() == 3
     # partition pruning: reading one partition touches only its files
@@ -88,17 +88,12 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, tmp_
     full-table rewrite."""
     import glob
 
-    from mapreduce_implementation_grpc_spark.sources.sinks import (
-        overwrite_partitions,
-        write_parquet,
-    )
-
     out = str(tmp_path / "by_lang")
     full = spark.createDataFrame(
         [(1, "en", "aa"), (2, "en", "bb"), (3, "fr", "cc"), (4, "de", "dd")],
         ["doc_id", "lang", "text"],
     )
-    write_parquet(full, out, partition_by=["lang"])
+    overwrite_partitions(full, out, partition_by=["lang"])
     fr_before = sorted(glob.glob(f"{out}/lang=fr/*.parquet"))
     de_before = sorted(glob.glob(f"{out}/lang=de/*.parquet"))
 

@@ -73,7 +73,7 @@ def test_streaming_event_counts_tumbling(spark, tmp_path, event_rows):
     path = str(tmp_path / "events")
     _write_events_json(path, event_rows)
     stream = spark.readStream.schema(EVENTS_SCHEMA).json(path).withColumn("value", F.lit(1.0))
-    out = streaming_event_counts(stream, watermark="4 hours")
+    out = streaming_event_counts(stream)
     _run_stream(out, "ev_stream", "append")
     # append mode only emits closed windows; rerun in update-ish way via complete on a fresh query
     got = {(r.bucket, r.event_type): r.n_events for r in spark.sql("SELECT * FROM ev_stream").collect()}
@@ -101,7 +101,7 @@ def test_streaming_sessionize(spark, tmp_path, event_rows):
     path = str(tmp_path / "events2")
     _write_events_json(path, event_rows)
     stream = spark.readStream.schema(EVENTS_SCHEMA).json(path)
-    out = streaming_sessionize(stream, watermark="10 hours")
+    out = streaming_sessionize(stream)
     q = out.writeStream.format("memory").queryName("sess_stream").outputMode("complete").start()
     q.processAllAvailable()
     q.stop()
@@ -234,7 +234,7 @@ def test_session_window_stream_equals_batch_operator(spark, tmp_path, event_rows
     path = str(tmp_path / "events_swb")
     _write_events_json(path, event_rows)
     stream = spark.readStream.schema(EVENTS_SCHEMA).json(path)
-    out = streaming_sessionize(stream, watermark="10 hours")
+    out = streaming_sessionize(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("sess_sb")

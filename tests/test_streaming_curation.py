@@ -197,17 +197,19 @@ def test_streaming_anomaly_filter_constant_type_dropped(spark, tmp_path):
     )
 
     rows = [Row(event_id=i, event_type="const", value=5.0) for i in range(10)]
-    rows += [Row(event_id=100 + i, event_type="vary", value=float(i)) for i in range(9)]
+    # 19 small values and one far outlier: its z-score (~4.4) clears
+    # ANOMALY_Z (a sample of n values caps |z| at sqrt(n - 1))
+    rows += [Row(event_id=100 + i, event_type="vary", value=float(i)) for i in range(19)]
     rows.append(Row(event_id=200, event_type="vary", value=1000.0))
     ev = spark.createDataFrame(rows)
-    vals = [float(i) for i in range(9)] + [1000.0]
+    vals = [float(i) for i in range(19)] + [1000.0]
     mu = sum(vals) / len(vals)
     sd = (sum(v * v for v in vals) / len(vals) - mu * mu) ** 0.5
     stats = [("const", 5.0, 0.0), ("vary", mu, sd)]
     src = tmp_path / "ev_const"
     ev.write.parquet(str(src))
     stream = spark.readStream.schema(ev.schema).parquet(str(src))
-    out = streaming_anomaly_filter(stream, stats, z=2.0).select("event_id")
+    out = streaming_anomaly_filter(stream, stats).select("event_id")
     q = (
         out.writeStream.format("memory")
         .queryName("anom_const")
@@ -300,6 +302,7 @@ def test_streaming_doc_chunks_matches_batch(spark, tmp_path):
 
 def test_streaming_dsir_filter_matches_batch(spark, tmp_path):
     from mapreduce_implementation_grpc_spark.operators.dsir import (
+        TARGET_SOURCE,
         dsir_log_ratios,
         dsir_weights,
     )
@@ -316,8 +319,8 @@ def test_streaming_dsir_filter_matches_batch(spark, tmp_path):
         ]
     )
     corpus = [
-        (1, "2024-01-01 10:00:00", "whereas the party agrees to the terms", "en", "tgt"),
-        (2, "2024-01-01 10:00:30", "the party shall comply with the terms", "en", "tgt"),
+        (1, "2024-01-01 10:00:00", "whereas the party agrees to the terms", "en", TARGET_SOURCE),
+        (2, "2024-01-01 10:00:30", "the party shall comply with the terms", "en", TARGET_SOURCE),
         (10, "2024-01-01 10:01:00", "the party agrees to comply with terms", "en", "web"),
         (11, "2024-01-01 10:02:00", "lol cats meme pics funny videos", "en", "web"),
     ]
@@ -332,11 +335,11 @@ def test_streaming_dsir_filter_matches_batch(spark, tmp_path):
     # train on the full static corpus; materialize the tiny model so
     # the streaming join is a plain static table, as in production
     ratios = spark.createDataFrame(
-        dsir_log_ratios(batch, target_source="tgt").collect()
+        dsir_log_ratios(batch).collect()
     )
-    want = {r.doc_id: r.dsir_logw for r in dsir_weights(batch, "tgt").collect()}
+    want = {r.doc_id: r.dsir_logw for r in dsir_weights(batch).collect()}
 
-    stream = spark.readStream.schema(schema).json(src).filter("source <> 'tgt'")
+    stream = spark.readStream.schema(schema).json(src).filter(f"source <> '{TARGET_SOURCE}'")
     # complete mode so the bounded fixture emits without needing the
     # watermark to advance past the window end (append-mode emission
     # requires a later batch; production streams have one).

@@ -100,38 +100,6 @@ def test_nb_oracle_parity(spark, sf_check):
     )
 
 
-def test_nb_max_vocab_gate(spark):
-    """The max_vocab scale gate: K >= V reproduces the full-vocab
-    answer exactly (truncation is a no-op), and an adversarially
-    small K still trains/scores over the bounded vocabulary without
-    error -- the broadcast-bound path a 100 TB corpus would use."""
-    from pyspark.sql import Row
-
-    from mapreduce_implementation_grpc_spark.operators.nb_classify import (
-        nb_lang_scores,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, lang="en", text="cat dog house tree cat dog"),
-            Row(doc_id=2, lang="en", text="dog house tree house cat"),
-            Row(doc_id=3, lang="fr", text="chien maison arbre chat chien"),
-            Row(doc_id=4, lang="fr", text="maison arbre chat maison"),
-            Row(doc_id=5, lang="de", text="hund haus baum katze hund"),
-            Row(doc_id=6, lang="de", text="haus baum katze baum"),
-        ]
-    )
-    full = sorted(map(tuple, nb_lang_scores(docs).collect()))
-    wide = sorted(map(tuple, nb_lang_scores(docs, max_vocab=10_000).collect()))
-    assert wide == full
-    tiny = {r.doc_id: r for r in nb_lang_scores(docs, max_vocab=3).collect()}
-    # top-3 tokens by (count desc, token asc) over this corpus still
-    # cover at least the docs containing them; predictions stay within
-    # the label set and scores stay log-probabilities
-    assert tiny and all(r.pred_lang in {"en", "fr", "de"} for r in tiny.values())
-    assert all(r.nb_score < 0 for r in tiny.values())
-
-
 def test_bm25_ranks_matching_docs_first(spark, sf_smoke):
     """BM25 sanity: every doc in the top-10 must contain at least one
     query term, scores are positive there, and a doc with zero query
