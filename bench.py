@@ -211,7 +211,13 @@ def worker(spec_path: str) -> None:
     from mapreduce_implementation_grpc_spark.session import get_spark
 
     cal_cpu = _cpu_probe()
+    t0 = time.perf_counter()
     spark = get_spark(app_name=f"bench-{spec['tier']}")
+    session_start = time.perf_counter() - t0
+    # start-up's size and the JIT's total time: a start-up regression, or
+    # JIT work moving between start-up and the queries, shows here
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    classes_loaded = mx.getClassLoadingMXBean().getTotalLoadedClassCount()
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM + parquet footers once so timings measure the
     # plans, not class loading -- identical warmup in every worker so
@@ -238,6 +244,7 @@ def worker(spec_path: str) -> None:
         if samples[-1] > 1.5 * median and samples[-1] - median > 0.25:
             spreads[name] = round(samples[-1], 3)
     compiles, compile_sec = codegen_compiles(spark)
+    jit_sec = mx.getCompilationMXBean().getTotalCompilationTime() / 1e3
     with open(spec["out"], "w") as fh:
         json.dump(
             {
@@ -248,6 +255,9 @@ def worker(spec_path: str) -> None:
                     "warmup_wordcount_sec": round(cal_warmup, 3),
                     "codegen_compiles": compiles,
                     "codegen_compile_sec": round(compile_sec, 3),
+                    "session_start_sec": round(session_start, 3),
+                    "jvm_classes_loaded": classes_loaded,
+                    "jit_sec": round(jit_sec, 3),
                 },
             },
             fh,

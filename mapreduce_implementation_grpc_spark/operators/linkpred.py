@@ -57,6 +57,9 @@ from .graph_motifs import cosupply_edges
 
 
 LINKPRED_TOP_N = 20
+# wedge centers above this degree are dropped by the capped query
+# (registry q_cosupply_link_prediction_capped and its oracle)
+LINKPRED_MAX_DEGREE = 256
 
 
 def link_prediction(

@@ -603,21 +603,22 @@ def q_cosupply_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cosupply_link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB wiring of link prediction (VERDICT r6 #5): wedge
-    CENTERS with degree > 256 are dropped before the self-join, so
-    per-center fan-out is bounded by C(256, 2) regardless of hub size
-    -- SCALING.md's link-prediction ladder measured one 8000-degree
-    hub producing 32M of 40M wedges (and an OOM at 4M edges) in the
-    exact form, and 11x speedup from a cap at 1M edges. Cap choice: the
+    CENTERS with degree > LINKPRED_MAX_DEGREE (256) are dropped before
+    the self-join, so per-center fan-out is bounded by C(256, 2)
+    regardless of hub size -- SCALING.md's link-prediction ladder
+    measured one 8000-degree hub producing 32M of 40M wedges (and an
+    OOM at 4M edges) in the exact form, and 11x speedup from a cap at
+    1M edges. Cap choice: the
     sf0.1 co-supply graph's degree floor is 134 (min/median/max =
     134/296/559), so the r6-suggested 64 empties the benched result;
-    256 keeps the sub-median half of centers while still bounding a
-    100TB hub to 32k wedges. The cap is embedded in the oracle's
-    wedge CTE, so the approximate-by-design path stays
+    LINKPRED_MAX_DEGREE = 256 keeps the sub-median half of centers while
+    still bounding a 100TB hub to 32k wedges. The oracle's wedge CTE
+    reads the same constant, so the approximate-by-design path stays
     hash-checkable; `cosupply_link_prediction` remains the exact
     oracle-of-record twin."""
-    from ..operators.linkpred import cosupply_link_prediction
+    from ..operators.linkpred import LINKPRED_MAX_DEGREE, cosupply_link_prediction
 
-    return cosupply_link_prediction(spark, sf_dir, max_degree=256)
+    return cosupply_link_prediction(spark, sf_dir, max_degree=LINKPRED_MAX_DEGREE)
 
 
 def q_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:

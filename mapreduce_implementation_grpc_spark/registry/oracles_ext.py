@@ -25,7 +25,7 @@ from .similarity import (
 )
 from ..operators.hll import M_REGISTERS, RAW_SCALE
 from ..operators.kmv import KMV_K
-from ..operators.linkpred import LINKPRED_TOP_N
+from ..operators.linkpred import LINKPRED_MAX_DEGREE, LINKPRED_TOP_N
 from ..operators.seqmine import SEQ_TOP_N
 from ..operators.similarity import N_PROBE, TOPK
 from ..plans.analytics import ASOF_AT
@@ -1001,9 +1001,9 @@ ORACLES["cosupply_link_prediction"] = f"""
   LIMIT {LINKPRED_TOP_N}
 """
 
-# Same wedge enumeration with centers capped at degree 256 (the scale
-# knob); endpoint degrees for Jaccard stay UNCAPPED -- the cap bounds
-# fan-out, not the denominator semantics.
+# Same wedge enumeration with centers capped at degree
+# LINKPRED_MAX_DEGREE (the scale knob); endpoint degrees for Jaccard
+# stay UNCAPPED -- the cap bounds fan-out, not the denominator semantics.
 ORACLES["cosupply_link_prediction_capped"] = f"""
   WITH {_SQL_COSUPPLY},
   e AS MATERIALIZED (SELECT s1, s2 FROM w, t WHERE c >= thr),
@@ -1016,7 +1016,7 @@ ORACLES["cosupply_link_prediction_capped"] = f"""
                 AS DECIMAL(12,9)) AS term
     FROM und a JOIN und b ON a.w = b.w AND a.x < b.x
                JOIN deg ON deg.w = a.w
-    WHERE deg.d <= 256),
+    WHERE deg.d <= {LINKPRED_MAX_DEGREE}),
   pairs AS (
     SELECT x1, x2, count(*) AS cn, sum(term) AS aa
     FROM wedge GROUP BY 1, 2),

@@ -24,6 +24,14 @@ shape is pure configuration: the same plans run on local[N] or a
   "Codegen cache"). The conf is static: the JVM reads it the first time
   it compiles generated code, so sessions the engine does not build
   (e.g. one handed to ``__spark_entry__.entry``) keep Spark's 100.
+- Session extensions come only from ``spark.sql.extensions`` (which the
+  engine leaves empty), not from a ServiceLoader scan of the classpath
+  (``spark.sql.extensions.test.loadFromCp=false``). The scan's only hit
+  is spark-mllib's provider, which registers three internal ML
+  functions through Scala runtime reflection: about 3,000 classes and
+  2 s of ``get_spark`` wall on 4 cores, for functions no engine plan
+  calls (SCALING.md, "Session start-up"). The conf is static, so sessions the
+  engine does not build keep the scan.
 """
 
 from __future__ import annotations
@@ -101,13 +109,17 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet carries TIMESTAMP(NANOS): read as raw int64
-        # nanos (converted to timestamp in sources.catalog) instead of
+        # an events.parquet with TIMESTAMP(NANOS) columns (the generated
+        # ones are TIMESTAMP(MICROS), read as TIMESTAMP_NTZ) is read as
+        # raw int64 nanos, converted in sources.catalog, instead of
         # failing the scan
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "mapreduce_implementation_grpc_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # only the extensions spark.sql.extensions names (none): skips
+        # spark-mllib's provider and its Scala runtime reflection
+        .config("spark.sql.extensions.test.loadFromCp", "false")
     )
     for k, v in {**env_conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)

@@ -39,15 +39,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table; filters/projections placed on the result are
     pushed into the parquet scan by Catalyst."""
     if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS), which Spark 4
-        # rejects outright; set the legacy int64 fallback at runtime so
-        # the engine also works under SparkSessions it did not build
-        # (e.g. the external verify driver's)
+        # the generated events.parquet is TIMESTAMP(MICROS), but one
+        # written as TIMESTAMP(NANOS) is rejected outright by Spark 4;
+        # set the legacy int64 fallback at runtime so the engine also
+        # reads it under SparkSessions it did not build (e.g. the
+        # external verify driver's)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # TIMESTAMP(NANOS) columns arrive as int64 nanos under
     # spark.sql.legacy.parquet.nanosAsLong; convert with exact integer
-    # division (ns -> us) so engines agree to the microsecond.
+    # division (ns -> us) so engines agree to the microsecond. The
+    # result is a TIMESTAMP, where the MICROS file reads as
+    # TIMESTAMP_NTZ; the instants' text is the same in the UTC session
+    # (tests/test_sources_sinks.py).
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

@@ -75,3 +75,12 @@ def test_quality_weight_reaches_the_oracle(name):
     oracles = _oracles_with("functions.text_stats", "QUALITY_LENGTH_WEIGHT", 0.4)
     assert "least(len(toks) / 50.0, 1.0) * 0.35" in registry.ORACLES[name]
     assert "least(len(toks) / 50.0, 1.0) * 0.4" in oracles[name]
+
+
+def test_linkpred_degree_cap_reaches_the_oracle():
+    name = "cosupply_link_prediction_capped"
+    oracles = _oracles_with("operators.linkpred", "LINKPRED_MAX_DEGREE", 128)
+    assert "WHERE deg.d <= 256)" in registry.ORACLES[name]
+    assert "WHERE deg.d <= 128)" in oracles[name]
+    others = {k for k, sql in oracles.items() if sql != registry.ORACLES[k]}
+    assert others == {name}

@@ -4,10 +4,13 @@ MapOutputTask format)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.operators import word_count
 from mapreduce_implementation_grpc_spark.sources import read_text_corpus, with_task_id
+from mapreduce_implementation_grpc_spark.sources.catalog import load_table
 from mapreduce_implementation_grpc_spark.sources.sinks import (
     overwrite_partitions,
     write_word_counts_text,
@@ -109,3 +112,23 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, tmp_
     assert back == {1, 5, 3, 4}
     # and the session config was restored
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+
+
+def test_events_nanos_timestamps_load_like_micros(spark, sf_smoke, tmp_path):
+    """``events.parquet`` as TIMESTAMP(NANOS) goes through
+    ``load_table``'s int64-nanos branch and yields the same instants as
+    the TIMESTAMP(MICROS) file the generators write."""
+    table = pq.read_table(f"{sf_smoke}/events.parquet")
+    ts = table.schema.get_field_index("ts")
+    table = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(table, tmp_path / "events.parquet")
+    logical = pq.ParquetFile(tmp_path / "events.parquet").schema.column(ts).logical_type
+    assert "timeUnit=nanoseconds" in str(logical)
+
+    def ts_text(sf_dir):
+        df = load_table(spark, sf_dir, "events")
+        return dict(df.select("event_id", F.col("ts").cast("string")).collect())
+
+    micros, nanos = ts_text(sf_smoke), ts_text(str(tmp_path))
+    assert len(micros) == table.num_rows
+    assert nanos == micros
