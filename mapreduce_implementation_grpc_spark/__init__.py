@@ -13,7 +13,6 @@ Layout:
   operators/   -- normalize, tokenize, wordcount, topk, dedup, similarity
   functions/   -- scalar/text/vector column functions (all JVM-side)
   plans/       -- composed analytics query plans (joins/windows/aggs)
-  streaming/   -- Structured Streaming variants
   multimodal/  -- binary-column plumbing (decode stubs via mapInPandas)
 """
 

@@ -13,8 +13,6 @@ anywhere else). There is one mechanism per need and no option:
   several consumers of one plan re-read.
 - ``materialize_eager``: ``localCheckpoint(eager=True)``, the
   per-round pin of the iterative loops.
-- ``pin_before_overwrite``: ``localCheckpoint(eager=True)`` as a
-  correctness requirement of the read-modify-overwrite sinks.
 
 localCheckpoint keeps partition blocks in the executors' block store
 and TRUNCATES THE LINEAGE. It was measured faster than ``persist`` at
@@ -60,23 +58,4 @@ def materialize_eager(df: DataFrame) -> DataFrame:
     rounds 1..N-1 and (b) the next round's plan starts from a flat
     scan, never a nested lineage. A superseded round's blocks are
     reclaimed when its checkpointed RDD is garbage-collected."""
-    return df.localCheckpoint(eager=True)
-
-
-def pin_before_overwrite(df: DataFrame) -> DataFrame:
-    """EAGERLY pin `df` WITHOUT lineage, for read-modify-OVERWRITE of
-    the very files the plan reads: the foreachBatch sinks
-    ``streaming.pipelines.parquet_upsert_sink`` and ``hll_rollup_sink``
-    read their stored table, merge the batch in and overwrite it.
-
-    Its body equals `materialize_eager` today, but the two answer
-    different questions: `materialize_eager` is a tuning choice that
-    may change, while lineage truncation here is REQUIRED. A pin that
-    kept lineage (e.g. persist) could "recompute" a lost block from a
-    scan of the paths mode("overwrite") has already deleted — failing
-    at best, silently reading half-overwritten data at worst. The pin
-    makes an overwrite that completes correct; it does not make it
-    durable. Plain parquet has no atomic swap: a crash during the
-    write leaves the table partial or gone, the pinned blocks die with
-    the process, and a replayed batch merges into whatever is left."""
     return df.localCheckpoint(eager=True)

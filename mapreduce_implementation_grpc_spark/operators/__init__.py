@@ -1,10 +1,9 @@
-from .normalize import normalize_text, normalized_col
+from .normalize import normalized_col
 from .tokenize import tokenize, tokens_col
 from .wordcount import word_count, word_count_rdd, word_count_salted, word_count_sql
 from .topk import top_k
 
 __all__ = [
-    "normalize_text",
     "normalized_col",
     "tokenize",
     "tokens_col",

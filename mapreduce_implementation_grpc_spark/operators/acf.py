@@ -51,16 +51,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ACF_MAX_LAG = 7
+
 
 def autocorrelation(
     series: DataFrame,
     group_col: str,
     t_col: str,
     y_col: str,
-    max_lag: int = 7,
 ) -> DataFrame:
     """series[group, t (0..n-1 dense), y (integral)] ->
-    [group, lag, n_points, acf] for lag 1..max_lag, constant groups
+    [group, lag, n_points, acf] for lag 1..ACF_MAX_LAG, constant groups
     dropped. A group whose t is not exactly 0..n-1 fails the query
     (raise_error) instead of returning misaligned lags.
 
@@ -108,7 +109,7 @@ def autocorrelation(
         .alias("_z"),
         *[
             F.lead("_z", k).over(wo).alias(f"_z{k}")
-            for k in range(1, max_lag + 1)
+            for k in range(1, ACF_MAX_LAG + 1)
         ],
     )
     agg = z.groupBy(group_col).agg(
@@ -125,7 +126,7 @@ def autocorrelation(
             )
             .cast("decimal(38,0)")
             .alias(f"_num{k}")
-            for k in range(1, max_lag + 1)
+            for k in range(1, ACF_MAX_LAG + 1)
         ],
     )
     stacked = agg.filter(F.col("_den") != 0).selectExpr(
@@ -133,9 +134,9 @@ def autocorrelation(
         "n_points",
         "_den",
         "stack({n}, {parts}) AS (lag, _num)".format(
-            n=max_lag,
+            n=ACF_MAX_LAG,
             parts=", ".join(
-                f"CAST({k} AS BIGINT), _num{k}" for k in range(1, max_lag + 1)
+                f"CAST({k} AS BIGINT), _num{k}" for k in range(1, ACF_MAX_LAG + 1)
             ),
         ),
     )

@@ -40,6 +40,7 @@ from ..operators.tokenize import tokenize
 from ..sources.catalog import load_table
 
 SEP = "||"
+BPE_MERGES = 4  # merge rounds of the trained tokenizer
 
 
 def word_freqs_df(docs: DataFrame) -> DataFrame:
@@ -87,9 +88,9 @@ def merge_pattern(left: str, right: str) -> tuple[str, str]:
 
 
 def train_merges(
-    freqs: DataFrame, num_merges: int = 4
+    freqs: DataFrame,
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Learn `num_merges` merge rules from a (w, c) word-frequency
+    """Learn BPE_MERGES merge rules from a (w, c) word-frequency
     table. Returns (merges, final vocab); merges are (rank, left,
     right, merged, pair_freq). Deterministic: ties broken by
     (left, right) string order, identical in DuckDB."""
@@ -97,7 +98,7 @@ def train_merges(
         "ws", symbolized(F.col("w"))
     ).select("ws", "c").transform(materialize)
     merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(1, num_merges + 1):
+    for rank in range(1, BPE_MERGES + 1):
         top = (
             pair_counts(vocab)
             .orderBy(F.desc("pair_freq"), "left", "right")
@@ -116,9 +117,9 @@ def train_merges(
 
 
 def bpe_train(
-    spark: SparkSession, sf_dir: str, num_merges: int = 4
+    spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    return train_merges(word_freqs(spark, sf_dir), num_merges)
+    return train_merges(word_freqs(spark, sf_dir))
 
 
 def encoded_len_col(word_col, merges: list[tuple[int, str, str, str, int]]):
@@ -131,21 +132,21 @@ def encoded_len_col(word_col, merges: list[tuple[int, str, str, str, int]]):
     return F.size(_syms(ws))
 
 
-_MERGES_CACHE: dict[tuple[str, int], list[tuple[int, str, str, str, int]]] = {}
+_MERGES_CACHE: dict[str, list[tuple[int, str, str, str, int]]] = {}
 
 
 def trained_merges(
-    spark: SparkSession, sf_dir: str, num_merges: int = 4
+    spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, str, int]]:
     """Session-lifetime memo of the trained merge table: training is
     deterministic (greedy with total-order tie-breaks), so re-running
     it for every encode-style query over the same corpus is pure
     waste -- this is the same train-once/serve-many artifact reuse as
-    dsir_log_ratios. Keyed by (corpus dir, k); the first caller pays
+    dsir_log_ratios. Keyed by corpus dir; the first caller pays
     the training jobs, later callers embed the cached literals."""
     import os as _os
 
-    key = (_os.path.abspath(sf_dir), num_merges)
+    key = _os.path.abspath(sf_dir)
     if key not in _MERGES_CACHE:
-        _MERGES_CACHE[key] = bpe_train(spark, sf_dir, num_merges)[0]
+        _MERGES_CACHE[key] = bpe_train(spark, sf_dir)[0]
     return _MERGES_CACHE[key]

@@ -204,8 +204,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
 
 def pii_cols():
     """(count_cols, redacted_col) column expressions for the PII
-    pass -- shared by the batch operator and the streaming curation
-    pipeline (same expressions, incremental execution)."""
+    pass."""
     cur = F.col("text")
     count_cols = []
     for name, pat, repl in PII_PATTERNS:

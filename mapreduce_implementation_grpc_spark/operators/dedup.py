@@ -263,9 +263,7 @@ def minhash_signatures(
 
 def band_key_rows(sigs: DataFrame) -> DataFrame:
     """Slim (doc_id, band_id, band_hash) rows from a signature table:
-    the LSH collision keys. Shared by the batch near-dup join and the
-    streaming near-dup append sink (streaming/pipelines.py) so both
-    use the identical banding."""
+    the LSH collision keys of the near-dup join."""
     rows_per_band = DEFAULT_NUM_PERM // DEFAULT_BANDS
     return sigs.select(
         "doc_id",

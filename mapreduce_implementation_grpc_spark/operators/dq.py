@@ -61,10 +61,8 @@ def _row_local(df: DataFrame, checks: dict[str, F.Column]) -> DataFrame:
 
 
 def events_row_checks() -> dict[str, F.Column]:
-    """Row-local violation predicates for the events table -- shared
-    by the batch audit below and the streaming monitor
-    (streaming/pipelines.dq_monitor_sink), so both paths enforce the
-    identical contract."""
+    """Row-local violation predicates for the events table, run by
+    the audit below."""
     return {
         "events_value_nonnull": F.col("value").isNull(),
         "events_props_json_valid": F.try_parse_json(F.col("props")).isNull(),
@@ -264,9 +262,7 @@ def duplicate_charge_pairs(events: DataFrame) -> DataFrame:
     row per repeat, and a chain of m duplicates surfaces as m-1
     adjacent pairs). Exact integer cents and exact microsecond gaps
     decide everything; event_id breaks equal-timestamp ties so the
-    pairing is deterministic. Shared by the registry batch query and
-    the streaming twin's parity test (both sides must run the
-    identical arithmetic on the identical frame).
+    pairing is deterministic.
 
     Output: [user_id, event_type, cents, first_event_id,
     second_event_id, gap_us], ordered."""

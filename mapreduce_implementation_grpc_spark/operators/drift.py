@@ -66,10 +66,8 @@ def categorical_drift(
 
 def categorical_drift_from_counts(a: DataFrame, b: DataFrame) -> DataFrame:
     """categorical_drift, starting from already-aggregated per-
-    category counts [cat, n_base] / [cat, n_curr] -- the shared tail
-    for the batch operator and the streaming monitor (which maintains
-    its running counts in an idempotent sink and must emit the
-    IDENTICAL report arithmetic on them)."""
+    category counts [cat, n_base] / [cat, n_curr] -- the report
+    arithmetic of categorical_drift."""
     ta = a.agg(F.sum("n_base").alias("_ta"))
     tb = b.agg(F.sum("n_curr").alias("_tb"))
     joined = (

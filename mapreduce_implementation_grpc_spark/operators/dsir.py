@@ -49,8 +49,7 @@ def dsir_log_ratios(docs: DataFrame) -> DataFrame:
     """DataFrame[w, lr]: per-token log-likelihood ratio
     ln p_t(w) - ln p_r(w) (decimal(14,9)) — the trained DSIR model.
     This is the reusable serve artifact: join it onto any per-doc
-    token stream (batch dsir_weights, or an unbounded stream via
-    streaming.streaming_dsir_filter) and sum."""
+    token stream (as dsir_weights does) and sum."""
     toks = _tokens(docs)
     is_target = F.col("source") == TARGET_SOURCE
     # Both LMs trained in ONE pass over the token stream: conditional

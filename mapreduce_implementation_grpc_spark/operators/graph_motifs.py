@@ -365,19 +365,18 @@ def clustering_coefficients(undirected_edges: DataFrame) -> DataFrame:
     )
 
 
-def bfs_hops(
-    undirected_edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int = 3,
-) -> DataFrame:
+REACH_HOPS = 3  # BFS hops and Bellman-Ford rounds of the reach operators
+
+
+def bfs_hops(undirected_edges: DataFrame, sources: DataFrame) -> DataFrame:
     """Multi-source BFS hop distance over an undirected (s1, s2) edge
-    list: [suppkey, hops] for every node within max_hops of ANY
+    list: [suppkey, hops] for every node within REACH_HOPS of ANY
     source (hops = distance to the nearest source; sources themselves
     are hops 0, whether or not they touch an edge). The
     blast-radius / reachability primitive (supplier risk contagion,
     contamination spread from a seed set).
 
-    Scale: synchronous frontier expansion, max_hops rounds; each
+    Scale: synchronous frontier expansion, REACH_HOPS rounds; each
     round is one equi-join of the node-sized frontier against the
     (materialized once) doubled edge list plus an anti-join against
     the visited set -- node-sized tables on short integer keys, never
@@ -396,7 +395,7 @@ def bfs_hops(
         F.lit(0).cast("long").alias("hops"),
     ).distinct()
     frontier = visited.select("suppkey")
-    for h in range(1, max_hops + 1):
+    for h in range(1, REACH_HOPS + 1):
         nxt = materialize(
             und.join(frontier.withColumnRenamed("suppkey", "u"), "u")
             .select(F.col("v").alias("suppkey"))
@@ -412,14 +411,10 @@ def bfs_hops(
     return visited
 
 
-def sssp_min_cost(
-    weighted_edges: DataFrame,
-    sources: DataFrame,
-    rounds: int = 3,
-) -> DataFrame:
+def sssp_min_cost(weighted_edges: DataFrame, sources: DataFrame) -> DataFrame:
     """Bounded-round Bellman-Ford over an undirected weighted edge
     list (s1, s2, w; INTEGER weights): [suppkey, min_cost] = the
-    cheapest path cost from any source using at most `rounds` edges
+    cheapest path cost from any source using at most REACH_HOPS edges
     (sources cost 0). All-integer min-plus relaxation -- exact, no
     float path sums to diverge cross-engine.
 
@@ -458,7 +453,7 @@ def sssp_min_cost(
         F.col(sources.columns[0]).alias("suppkey"),
         F.lit(0).cast("long").alias("min_cost"),
     ).distinct()
-    for _ in range(rounds):
+    for _ in range(REACH_HOPS):
         relaxed = (
             und.join(dist.withColumnRenamed("suppkey", "u"), "u")
             .select(
@@ -475,12 +470,9 @@ def sssp_min_cost(
 
 
 def cosupply_cheapest_reach(
-    spark: SparkSession,
-    sf_dir: str,
-    sources: DataFrame,
-    rounds: int = 3,
+    spark: SparkSession, sf_dir: str, sources: DataFrame
 ) -> DataFrame:
-    """Weighted blast radius: cheapest <= `rounds`-hop path cost from
+    """Weighted blast radius: cheapest <= REACH_HOPS-hop path cost from
     a supplier seed set over the thresholded co-supply graph, edge
     cost = (max co-supply weight + 1) - c, so the STRONGEST tie is
     the cheapest hop (cost >= 1: a path cost is never free). The max
@@ -491,4 +483,4 @@ def cosupply_cheapest_reach(
     weighted = we.crossJoin(F.broadcast(mx)).select(
         "s1", "s2", (F.col("_mx") - F.col("c")).cast("long").alias("w")
     )
-    return sssp_min_cost(weighted, sources, rounds=rounds)
+    return sssp_min_cost(weighted, sources)

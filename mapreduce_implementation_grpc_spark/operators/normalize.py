@@ -34,7 +34,7 @@ build from it.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 NORMALIZE_PATTERN = r"[^\p{Alnum}\s]"
@@ -43,7 +43,3 @@ NORMALIZE_PATTERN = r"[^\p{Alnum}\s]"
 def normalized_col(col: Column | str) -> Column:
     col = F.col(col) if isinstance(col, str) else col
     return F.trim(F.lower(F.regexp_replace(col, NORMALIZE_PATTERN, "")))
-
-
-def normalize_text(df: DataFrame) -> DataFrame:
-    return df.withColumn("norm", normalized_col("line"))

@@ -56,6 +56,7 @@ from ..sources.catalog import load_table
 
 DAMPING = 0.85
 TELEPORT = 0.15
+PAGERANK_ITERS = 3
 
 
 def _label(key: F.Column) -> F.Column:
@@ -100,13 +101,9 @@ def _purchase_graph_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    iters: int = 3,
-) -> DataFrame:
-    """DataFrame[node, r] after `iters` damped power iterations from
-    uniform r0 = 1.0. Deterministic and engine-portable (see module
+def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DataFrame[node, r] after PAGERANK_ITERS damped power iterations
+    from uniform r0 = 1.0. Deterministic and engine-portable (see module
     docstring); serve with an orderBy+limit for a top-k report.
 
     The rank table is exactly |V| rows and is broadcast every
@@ -115,14 +112,11 @@ def pagerank(
     (measured 1.35x over the key join at sf0.1). The limit is the
     module docstring's: |V| must fit one executor."""
     ewd = _purchase_graph_keys(spark, sf_dir)
-    return _power_iterate(ewd, None, iters)
+    return _power_iterate(ewd, None)
 
 
 def personalized_pagerank(
-    spark: SparkSession,
-    sf_dir: str,
-    seeds: DataFrame,
-    iters: int = 3,
+    spark: SparkSession, sf_dir: str, seeds: DataFrame
 ) -> DataFrame:
     """Personalized PageRank: teleport mass lands only on the `seeds`
     node set (DataFrame[node], presentation labels) instead of
@@ -151,10 +145,10 @@ def personalized_pagerank(
                 F.coalesce(F.col("i1"), F.lit(0.0)).alias("ind"))
         .transform(materialize)
     )
-    return _power_iterate(ewd, ind, iters)
+    return _power_iterate(ewd, ind)
 
 
-def _power_iterate(ewd: DataFrame, ind: DataFrame | None, iters: int) -> DataFrame:
+def _power_iterate(ewd: DataFrame, ind: DataFrame | None) -> DataFrame:
     """Shared damped power iteration; `ind` is the per-node teleport
     indicator (None = uniform 1.0, classic PageRank). Iterates on the
     long node keys; the presentation label is rebuilt once on the
@@ -165,7 +159,7 @@ def _power_iterate(ewd: DataFrame, ind: DataFrame | None, iters: int) -> DataFra
         )
     else:
         ranks = ind.select(F.col("inode").alias("node"), F.col("ind").alias("r"))
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = ewd.join(F.broadcast(ranks), F.col("src") == F.col("node")).select(
             "dst",
             F.round(F.col("r") / F.col("d"), 9).cast("decimal(12,9)").alias("term"),

@@ -102,19 +102,19 @@ DEFAULT_PQ_ITER = 2    # Lloyd rounds per subspace
 
 def pq_fit(
     emb: DataFrame,
-    m: int = DEFAULT_PQ_M,
     vec_col: str = VEC_COL,
 ) -> list[list[tuple[int, list[float], float]]]:
     """Train one k-means codebook of DEFAULT_PQ_K codewords per
-    contiguous DIM/m-wide subspace (eager: m small Lloyd fits of
-    DEFAULT_PQ_ITER rounds). Fully deterministic -- kmeans_fit
-    seeds from the smallest vec_ids and uses exact decimal-sum means
-    -- so codes and ADC distances are DuckDB-oracle-checkable, which
+    contiguous DIM/m-wide subspace, m = DEFAULT_PQ_M (eager: m small
+    Lloyd fits of DEFAULT_PQ_ITER rounds). Fully deterministic --
+    kmeans_fit seeds from the smallest vec_ids and uses exact
+    decimal-sum means -- so codes and ADC distances are DuckDB-oracle-checkable, which
     is rare for a lossy ANN compression operator."""
     from concurrent.futures import ThreadPoolExecutor
 
     from .kmeans import kmeans_fit
 
+    m = DEFAULT_PQ_M
     if DIM % m != 0:
         raise ValueError(f"DIM={DIM} not divisible by m={m}")
     w = DIM // m
@@ -141,7 +141,6 @@ def pq_fit(
 
 def pq_codes(
     emb: DataFrame,
-    m: int = DEFAULT_PQ_M,
     vec_col: str = VEC_COL,
     codebooks: list[list[tuple[int, list[float], float]]] | None = None,
     carry_cols: tuple[str, ...] = (),
@@ -166,7 +165,8 @@ def pq_codes(
     from .kmeans import _centroid_literal
 
     if codebooks is None:
-        codebooks = pq_fit(emb, m, vec_col)
+        codebooks = pq_fit(emb, vec_col)
+    m = DEFAULT_PQ_M
     w = DIM // m
     carry = [F.col(c) for c in carry_cols]
 

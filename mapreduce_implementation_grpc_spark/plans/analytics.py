@@ -159,8 +159,7 @@ def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-bucketed aggregation (the batch twin of the streaming
-    tumbling window in streaming/): events per type per hour.
+    """Time-bucketed aggregation: events per type per hour.
     Bucket emitted as a formatted string so engines hash identically."""
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -176,8 +175,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via lag: a session starts where the gap from
     the previous event of the same user exceeds SESSION_GAP_S. Output:
     per-user session count + event count. Scales as one shuffle on
-    user_id; state never leaves the executor (cf. streaming/ for the
-    incremental variant)."""
+    user_id; state never leaves the executor."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -528,17 +526,13 @@ def user_activity_decay_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FOLD form of user_activity_decay: per user, left-fold the
     chronologically ordered values through decayed = (decayed + v)/2.
     Same quantity as the window form's sum of v_i * 0.5^k_i, but as
-    the O(1)-state recursion a STREAMING operator can maintain --
-    streaming/pipelines.streaming_user_activity_decay is bit-exact
-    against this (identical IEEE op sequence), and the DuckDB
-    list_reduce oracle folds in the same order, so this form is
-    hash-checkable too. The two batch forms agree to float
-    reassociation (the fold re-rounds one addition per event; the
-    window form rounds each term to 9dp once).
+    an O(1)-state recursion; the DuckDB list_reduce oracle folds in
+    the same order, so this form is hash-checkable too. The two batch
+    forms agree to float reassociation (the fold re-rounds one
+    addition per event; the window form rounds each term to 9dp once).
 
     Scale note: collect_list buffers one user's history per group --
-    bounded by per-user event counts (thousands), not stream length;
-    the streaming twin needs only the folded (decayed, n) pair."""
+    bounded by per-user event counts (thousands)."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", F.col("value").cast("double").alias("v")
     )

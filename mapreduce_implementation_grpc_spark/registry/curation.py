@@ -27,7 +27,6 @@ from .shared import (
     word_count,
 )
 from .text_shaping import _bpe_docs
-from ..streaming.pipelines import BM25_B, BM25_K1
 
 
 
@@ -334,6 +333,8 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BM25_QUERY = ("spark", "join", "fast")
 BM25_TOPN = 50
+BM25_B = 0.75
+BM25_K1 = 1.2
 
 
 def _eq_lit(t: str):
@@ -464,7 +465,6 @@ def q_prf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PAGERANK_ITERS = 3
 PPR_SEGMENT = "BUILDING"
 
 
@@ -480,7 +480,7 @@ def q_segment_affinity_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = cust.filter(F.col("c_mktsegment") == PPR_SEGMENT).select(
         F.concat(F.lit("c"), F.col("c_custkey")).alias("node")
     )
-    r = personalized_pagerank(spark, sf_dir, seeds, iters=PAGERANK_ITERS)
+    r = personalized_pagerank(spark, sf_dir, seeds)
     return (
         r.filter(F.col("node").startswith("s"))
         .orderBy(F.desc("r"), F.asc("node"))
@@ -497,7 +497,7 @@ def q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazy plan (see operators/pagerank.py for the scale notes)."""
     from ..operators.pagerank import pagerank
 
-    r = pagerank(spark, sf_dir, iters=PAGERANK_ITERS)
+    r = pagerank(spark, sf_dir)
     return (
         r.orderBy(F.desc("r"), F.asc("node"))
         .limit(100)

@@ -690,9 +690,8 @@ def q_duplicate_charge_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Legitimately SPARSE on clean data (3 hits at sf0.01, 29 at
     sf0.1, exact-amount collisions are the anomaly being screened
     for) -- pytest injects a synthetic duplicate chain for the
-    structural check, and streaming/pipelines.py carries the
-    O(1)-state online twin (parity-pinned). Output: [user_id,
-    event_type, cents, first_event_id, second_event_id, gap_us]."""
+    structural check. Output: [user_id, event_type, cents,
+    first_event_id, second_event_id, gap_us]."""
     from ..operators.dq import duplicate_charge_pairs
 
     return duplicate_charge_pairs(load_table(spark, sf_dir, "events"))

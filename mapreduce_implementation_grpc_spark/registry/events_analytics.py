@@ -184,8 +184,7 @@ def q_embedding_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window aggregate (1 h windows sliding every 15 min):
-    each event lands in exactly 4 overlapping windows -- the batch
-    twin of the streaming windowed aggregation. Spark expands the
+    each event lands in exactly 4 overlapping windows. Spark expands the
     window generator map-side; one shuffle on window start."""
     ev = load_table(spark, sf_dir, "events")
     return (
@@ -605,8 +604,8 @@ def q_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via Spark's NATIVE session_window operator (the
-    dynamic-gap merge inside the aggregation, the same operator the
-    streaming twin uses) -- per-session rows, not per-user counts.
+    dynamic-gap merge inside the aggregation) -- per-session rows,
+    not per-user counts.
     The oracle is the classic SQL gaps-and-islands rewrite, so the
     hash match PROVES the built-in's merge semantics (half-open
     [start, last+gap): a gap of exactly 30 min starts a NEW session)

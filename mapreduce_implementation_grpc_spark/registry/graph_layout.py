@@ -19,7 +19,7 @@ from .shared import (
     _rev_micros,
 )
 from .reference_surface import q_wordcount
-from ..operators.graph_motifs import KCORE_K
+from ..operators.graph_motifs import KCORE_K, REACH_HOPS
 from ..operators.hits import HITS_ITERS
 
 
@@ -457,7 +457,6 @@ def _kcore_ctes() -> str:
 
 
 REACH_NATION = "NATION_19"
-REACH_HOPS = 3
 
 
 def _reach_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,7 +480,7 @@ def q_supplier_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph_motifs import bfs_hops, cosupply_edges
 
     edges = cosupply_edges(spark, sf_dir)
-    return bfs_hops(edges, _reach_sources(spark, sf_dir), max_hops=REACH_HOPS)
+    return bfs_hops(edges, _reach_sources(spark, sf_dir))
 
 
 def _bfs_ctes() -> str:
@@ -526,9 +525,7 @@ def q_supplier_cheapest_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs."""
     from ..operators.graph_motifs import cosupply_cheapest_reach
 
-    return cosupply_cheapest_reach(
-        spark, sf_dir, _reach_sources(spark, sf_dir), rounds=REACH_HOPS
-    )
+    return cosupply_cheapest_reach(spark, sf_dir, _reach_sources(spark, sf_dir))
 
 
 def _sssp_ctes() -> str:
@@ -1252,9 +1249,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ACF_MAX_LAG = 7
-
-
 def q_events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact daily-count autocorrelogram per event type at lags 1..ACF_MAX_LAG
     (operators/acf.py): counts land on a dense zero-filled day spine
@@ -1284,7 +1278,7 @@ def q_events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("y", F.lit(0)).cast("long").alias("y"),
         )
     )
-    return autocorrelation(series, "event_type", "t", "y", max_lag=ACF_MAX_LAG)
+    return autocorrelation(series, "event_type", "t", "y")
 
 
 def q_user_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,20 +22,21 @@ from .curation import (
     BM25_K1,
     BM25_QUERY,
     BM25_TOPN,
-    PAGERANK_ITERS,
     PPR_SEGMENT,
 )
 from .dedup import SAMPLE_PER_LANG
 from .events_analytics import CUSUM_SLACK, CUSUM_THRESHOLD, RFM_TILES
 from .reference_surface import WORDCOUNT_TOP_N, _CORPUS_TXT
 from .similarity import N_QUERIES, TOPIC_MIN_COUNT, TOPIC_TOPN
-from .text_shaping import BPE_MERGES, BPE_PAIR_TOPN
+from .text_shaping import BPE_PAIR_TOPN
 from ..functions.indexing import INDEX_MAX_DF, PMI_MIN_COUNT, TOP_TERMS_K
 from ..multimodal.binary_ops import FRAME_BYTES, FRAME_EVERY_K, THUMB_SIZE
 from ..operators.bloom import BITS_PER_SLOT, SLOT_SHIFT
+from ..operators.bpe import BPE_MERGES
 from ..operators.chunking import DEFAULT_CHUNK_SIZE, DEFAULT_PACK_BUDGET, DEFAULT_STRIDE
 from ..operators.dedup import RARE_DOC_FREQ
 from ..operators.hll import M_REGISTERS, RAW_SCALE
+from ..operators.pagerank import PAGERANK_ITERS
 from ..operators.similarity import MIN_COSINE, N_PROBE, TOPK
 from ..operators.sparse_sim import TF_MAX_DF, TF_MIN_COSINE
 from ..plans.analytics import (

@@ -9,7 +9,7 @@ from .eval_temporal import (
     MARKOV_ORACLE_CHANNELS,
     MARKOV_STEPS,
 )
-from .graph_layout import ACF_MAX_LAG, ZIPF_TOP_N
+from .graph_layout import ZIPF_TOP_N
 from .oracle_builders import (
     _ann_ivf_kmeans_sql,
     _banded_bb_sql,
@@ -17,6 +17,7 @@ from .oracle_builders import (
     _kmeans_means_cte,
 )
 from .similarity import ANN_BANDED_SWEEP, ANN_CLUSTERED_SWEEP, N_QUERIES
+from ..operators.acf import ACF_MAX_LAG
 from ..operators.curation import STRATIFIED_DEN
 from ..operators.linkage import SN_WINDOW
 from ..operators.robust import TRIM_PCT

@@ -158,7 +158,8 @@ def _sql_toks(table: str = "documents") -> str:
 _SQL_TOKS = _sql_toks()
 
 
-# 3-token shingle set per doc, matching operators.dedup._shingles.
+# 3-token shingle set per doc, matching operators.dedup.shingle_rows
+# and shingle_rows_flat.
 def _sql_shingles(table: str = "documents") -> str:
     return f"""
   SELECT doc_id, CASE WHEN len(toks) >= 3 THEN

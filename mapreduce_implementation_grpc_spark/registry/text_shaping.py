@@ -178,16 +178,13 @@ def q_training_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BPE_MERGES = 4
-
-
 def _bpe_docs(spark: SparkSession, sf_dir: str):
     """(documents with their `toks`, per-doc token count under the
     BPE_MERGES merges trained on the corpus). Training is eager."""
     from ..functions.text_stats import with_token_array
     from ..operators import bpe
 
-    merges = bpe.trained_merges(spark, sf_dir, num_merges=BPE_MERGES)
+    merges = bpe.trained_merges(spark, sf_dir)
     docs = with_token_array(load_table(spark, sf_dir, "documents"))
     n_bpe = F.aggregate(
         F.transform(F.col("toks"), lambda w: bpe.encoded_len_col(w, merges)),
@@ -223,7 +220,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern). Oracle: the rounds unrolled in SQL (_bpe_ctes)."""
     from ..operators import bpe
 
-    merges, _ = bpe.bpe_train(spark, sf_dir, num_merges=BPE_MERGES)
+    merges, _ = bpe.bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges, "rank long, left string, right string, merged string, pair_freq long"
     ).orderBy("rank")

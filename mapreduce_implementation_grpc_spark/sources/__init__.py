@@ -1,5 +1,5 @@
 from .catalog import TABLES, load_table, register_views
-from .text import corpus_from_documents, read_text_corpus, with_task_id
+from .text import corpus_from_documents, read_text_corpus
 
 __all__ = [
     "TABLES",
@@ -7,5 +7,4 @@ __all__ = [
     "register_views",
     "corpus_from_documents",
     "read_text_corpus",
-    "with_task_id",
 ]

@@ -48,12 +48,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     # TIMESTAMP(NANOS) columns arrive as int64 nanos under
     # spark.sql.legacy.parquet.nanosAsLong; convert with exact integer
-    # division (ns -> us) so engines agree to the microsecond. The
-    # result is a TIMESTAMP, where the MICROS file reads as
-    # TIMESTAMP_NTZ; the instants' text is the same in the UTC session
-    # (tests/test_sources_sinks.py).
+    # division (ns -> us) so engines agree to the microsecond, onto a
+    # TIMESTAMP_NTZ epoch: the MICROS file reads as TIMESTAMP_NTZ, so
+    # both files give the same type and the same wall clock in every
+    # session time zone (tests/test_sources_sinks.py).
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = df.withColumn(
+            "ts",
+            F.expr(
+                "timestampadd(MICROSECOND, ts div 1000, "
+                "TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+            ),
+        )
     return df
 
 

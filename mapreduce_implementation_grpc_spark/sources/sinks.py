@@ -31,20 +31,3 @@ def write_word_counts_text(df: DataFrame, path: str) -> None:
         "overwrite"
     ).text(path)
 
-
-def overwrite_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions
-    present in `df`, leaving every other partition's files physically
-    untouched -- the incremental-recompute primitive (re-curate one
-    day / one language / one source without rewriting a 100 TB
-    table). Static overwrite mode would drop the whole table first;
-    this flips spark.sql.sources.partitionOverwriteMode to 'dynamic'
-    for just this write and restores the previous value."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)

@@ -5,7 +5,7 @@ Reference surface covered (SURVEY.md section 2a):
   O4 range partition (greeter_client.cc:362-390) -> input splits /
      repartition; the reference's contiguous 4-way line split is
      order-irrelevant for word count, so any partitioning is
-     semantically equivalent. ``with_task_id`` reproduces the
+     semantically equivalent. ``task_id_col`` reproduces the
      reference's *observable* task-id bookkeeping (task number
      prepended to each payload, greeter_client.cc:268) as a
      deterministic column rather than a string prefix.
@@ -49,7 +49,3 @@ def task_id_col(key: Column) -> Column:
     and modulo assignment is reproducible across runs/oracles while
     contiguous byte ranges are not."""
     return (key % NUM_TASKS).cast("int")
-
-
-def with_task_id(df: DataFrame) -> DataFrame:
-    return df.withColumn("task_id", task_id_col(F.col("doc_id")))

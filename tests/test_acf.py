@@ -29,7 +29,7 @@ def test_alternating_series_exact_rationals(spark):
     ys = [1, 0] * 5
     rows = {
         r.lag: r.acf
-        for r in autocorrelation(_series_df(spark, ys), "g", "t", "y", 3).collect()
+        for r in autocorrelation(_series_df(spark, ys), "g", "t", "y").collect()
     }
     assert rows[1] == -9 / 10
     assert rows[2] == 8 / 10
@@ -40,7 +40,7 @@ def test_acf_differential_vs_pure_python(spark):
     ys = [(i * 37 + (i * i) % 11) % 23 for i in range(40)]
     got = {
         r.lag: r.acf
-        for r in autocorrelation(_series_df(spark, ys), "g", "t", "y", 7).collect()
+        for r in autocorrelation(_series_df(spark, ys), "g", "t", "y").collect()
     }
     for k in range(1, 8):
         assert got[k] == pytest.approx(_py_acf(ys, k), abs=1e-15), k
@@ -51,7 +51,7 @@ def test_constant_series_dropped_other_groups_kept(spark):
         ("var", t, t % 3) for t in range(10)
     ]
     df = spark.createDataFrame(rows, "g string, t long, y long")
-    out = autocorrelation(df, "g", "t", "y", 2).collect()
+    out = autocorrelation(df, "g", "t", "y").collect()
     assert {r.g for r in out} == {"var"}
     assert all(r.n_points == 10 for r in out)
 
@@ -59,8 +59,8 @@ def test_constant_series_dropped_other_groups_kept(spark):
 def test_lag1_of_smooth_series_positive(spark):
     # a slow ramp is strongly positively autocorrelated at lag 1
     ys = [t // 4 for t in range(32)]
-    rows = autocorrelation(_series_df(spark, ys), "g", "t", "y", 1).collect()
-    assert rows[0].acf > 0.8
+    rows = autocorrelation(_series_df(spark, ys), "g", "t", "y").collect()
+    assert {r.lag: r.acf for r in rows}[1] > 0.8
 
 
 def test_non_dense_series_fails_inside_the_plan(spark):
@@ -75,12 +75,12 @@ def test_non_dense_series_fails_inside_the_plan(spark):
     for rows in (gapped, duped, shifted):
         df = spark.createDataFrame(rows, schema)
         with pytest.raises(Exception, match="is not the dense series"):
-            autocorrelation(df, "g", "t", "y", 3).collect()
+            autocorrelation(df, "g", "t", "y").collect()
     # a dense group is unaffected by the check
     got = {
         r.lag: r.acf
         for r in autocorrelation(
-            spark.createDataFrame(dense, schema), "g", "t", "y", 3
+            spark.createDataFrame(dense, schema), "g", "t", "y"
         ).collect()
     }
     for k in range(1, 4):

@@ -119,69 +119,6 @@ def test_merged_symbol_can_be_left_operand(spark):
     assert sp_merges[0][3] == "ab" and sp_merges[1][1] == "ab"
 
 
-def test_streaming_bpe_encode_matches_batch(spark, tmp_path):
-    import json as _json
-    import os as _os
-
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
-    )
-
-    from mapreduce_implementation_grpc_spark.streaming import streaming_bpe_encode
-    from mapreduce_implementation_grpc_spark.operators.normalize import normalized_col
-    from mapreduce_implementation_grpc_spark.operators.tokenize import tokens_col
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("text", StringType()),
-    ])
-    src = str(tmp_path / "bpe_docs")
-    _os.makedirs(src, exist_ok=True)
-    rows = [
-        (1, "2024-01-01 10:00:00", "low lower lowest newest"),
-        (2, "2024-01-01 10:01:00", "the newest low widget"),
-        (3, "2024-01-01 10:02:00", "???"),  # zero tokens
-    ]
-    with open(_os.path.join(src, "d.json"), "w") as f:
-        for doc_id, ts, text in rows:
-            f.write(_json.dumps({"doc_id": doc_id, "ts": ts, "text": text}) + "\n")
-
-    merges = [(1, "e", "s", "es", 3), (2, "es", "t", "est", 3), (3, "l", "o", "lo", 3)]
-    stream = spark.readStream.schema(schema).json(src)
-    q = (
-        streaming_bpe_encode(stream, merges)
-        .writeStream.format("memory")
-        .queryName("bpe_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.doc_id: (r.n_ws_tokens, r.n_bpe_tokens)
-        for r in spark.sql("select * from bpe_stream").collect()
-    }
-    batch = spark.read.schema(schema).json(src)
-    n_bpe = F.aggregate(
-        F.transform(tokens_col(normalized_col("text")),
-                    lambda w: bpe.encoded_len_col(w, merges)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x.cast("long"),
-    )
-    want = {
-        r.doc_id: (r.n_ws_tokens, r.n_bpe_tokens)
-        for r in batch.select(
-            "doc_id",
-            F.size(tokens_col(normalized_col("text"))).cast("long").alias("n_ws_tokens"),
-            n_bpe.alias("n_bpe_tokens"),
-        ).collect()
-    }
-    assert got == want and len(got) == 3
-    # merged symbols shrink the count: 'lowest' = lo|w|est -> 3 < 6 chars
-    assert got[1][1] < sum(len(w) for w in "low lower lowest newest".split())
-
-
 def test_degenerate_corpus_oracle_noops_instead_of_nulling(spark):
     """A corpus that exhausts before BPE_MERGES rounds: the Spark
     trainer breaks out of its loop, and the unrolled oracle's empty
@@ -192,7 +129,6 @@ def test_degenerate_corpus_oracle_noops_instead_of_nulling(spark):
     import duckdb
 
     from mapreduce_implementation_grpc_spark import registry
-    from mapreduce_implementation_grpc_spark.registry.text_shaping import BPE_MERGES
 
     # tokens: ab x3, cd x2 -> merge1 (a,b,3), merge2 (c,d,2), then dry
     text = "ab ab ab cd cd"
@@ -204,10 +140,9 @@ def test_degenerate_corpus_oracle_noops_instead_of_nulling(spark):
     orows = con.execute(registry.ORACLES["bpe_merges"]).fetchall()
 
     merges, _ = bpe.train_merges(
-        spark.createDataFrame([("ab", 3), ("cd", 2)], "w string, c long"),
-        num_merges=BPE_MERGES,
+        spark.createDataFrame([("ab", 3), ("cd", 2)], "w string, c long")
     )
-    assert len(merges) == 2 < BPE_MERGES  # the degenerate case is real
+    assert len(merges) == 2 < bpe.BPE_MERGES  # the degenerate case is real
     assert [tuple(m) for m in merges] == [tuple(r) for r in orows]
 
     # and the downstream encode/compression oracles must not null out

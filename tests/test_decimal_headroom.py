@@ -90,7 +90,7 @@ def test_autocorrelation_survives_billion_row_magnitudes(spark):
     )
     got = {
         r["lag"]: r["acf"]
-        for r in autocorrelation(df, "g", "t", "y", max_lag=2).collect()
+        for r in autocorrelation(df, "g", "t", "y").collect()
     }
     s = sum(ys)
     z = [n * y - s for y in ys]

@@ -81,116 +81,3 @@ def test_duplicate_charge_screen_oracle(spark, sf_check):
         registry.ORACLES["duplicate_charge_screen"],
         sf_check,
     )
-
-
-def test_streaming_twin_matches_batch_across_microbatches(
-    spark, tmp_path, sf_smoke
-):
-    """The O(1)-state online screen == the batch lag window on an
-    events frame AUGMENTED with injected duplicate chains (the raw
-    sf0.001 slice legitimately has zero collisions), with the stream
-    split across two microbatches mid-history."""
-    import json as _json
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from mapreduce_implementation_grpc_spark.operators.dq import (
-        duplicate_charge_pairs,
-    )
-    from mapreduce_implementation_grpc_spark.sources.catalog import load_table
-    from mapreduce_implementation_grpc_spark.streaming import (
-        streaming_duplicate_charges,
-    )
-
-    base = [
-        (r.event_id, r.ts, r.user_id, r.event_type, r.value)
-        for r in load_table(spark, sf_smoke, "events").collect()
-    ]
-    # inject: every 7th event re-billed 2h later (pair), plus one
-    # 3-chain and one just-outside-the-window repeat
-    inj = [
-        (eid + 10_000_000, ts + datetime.timedelta(hours=2), uid, et, val)
-        for (eid, ts, uid, et, val) in base[::7]
-    ]
-    e0 = base[3]
-    inj += [
-        (e0[0] + 20_000_000, e0[1] + datetime.timedelta(days=2), *e0[2:]),
-        (e0[0] + 20_000_001, e0[1] + datetime.timedelta(days=4), *e0[2:]),
-        (e0[0] + 30_000_000, e0[1] + datetime.timedelta(days=8), *e0[2:]),
-    ]
-    ev = sorted(base + inj, key=lambda x: (x[1], x[0]))
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    frame = spark.createDataFrame(ev, schema)
-    batch = {
-        (r.user_id, r.event_type, r.cents, r.second_event_id): (
-            r.first_event_id,
-            r.gap_us,
-        )
-        for r in duplicate_charge_pairs(frame).collect()
-    }
-    assert len(batch) > len(base) // 7  # the injection actually fires
-
-    src = str(tmp_path / "dupev")
-    os.makedirs(src)
-    half = len(ev) // 2
-    for name, chunk in (("b1.json", ev[:half]), ("b2.json", ev[half:])):
-        with open(os.path.join(src, name), "w") as f:
-            for eid, ts, uid, et, val in chunk:
-                f.write(
-                    _json.dumps(
-                        {
-                            "event_id": eid,
-                            "ts": ts.strftime("%Y-%m-%d %H:%M:%S.%f"),
-                            "user_id": uid,
-                            "event_type": et,
-                            "value": val,
-                        }
-                    )
-                    + "\n"
-                )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q = (
-        streaming_duplicate_charges(stream)
-        .writeStream.format("memory")
-        .queryName("dup_stream")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        got = {}
-        while time.time() < deadline:
-            q.processAllAvailable()
-            got = {
-                (r.user_id, r.event_type, r.cents, r.second_event_id): (
-                    r.first_event_id,
-                    r.gap_us,
-                )
-                for r in spark.sql("SELECT * FROM dup_stream").collect()
-            }
-            if len(got) == len(batch):
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    assert got == batch

@@ -1,138 +1,11 @@
-"""Wave-11 r7: streaming_ewma_control (O(1)-state online twin of the
-batch EWMA chart, closed-day parity across a microbatch split) and
-the customer value-quintile migration matrix."""
+"""The customer value-quintile migration matrix."""
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from mapreduce_implementation_grpc_spark import registry
 from mapreduce_implementation_grpc_spark.sources.catalog import load_table
-
-
-def test_streaming_ewma_matches_batch_on_closed_days(
-    spark, tmp_path, sf_smoke
-):
-    """Stream the smoke events in two microbatches; every emitted row
-    is a CLOSED day, and the final closed-day state per type equals
-    the batch operator run on that type's closed-day prefix."""
-    from mapreduce_implementation_grpc_spark.streaming import (
-        streaming_ewma_control,
-    )
-
-    ev = sorted(
-        (
-            (
-                r.event_id,
-                r.ts.strftime("%Y-%m-%d %H:%M:%S.%f"),
-                r.user_id,
-                r.event_type,
-                r.value,
-            )
-            for r in load_table(spark, sf_smoke, "events").collect()
-        ),
-        # (ts, event_id): ties on the ts string alone could land the
-        # microbatch split between two same-timestamp events with
-        # event_ids out of order, tripping the operator's loud
-        # out-of-order guard (advice r7).
-        key=lambda x: (x[1], x[0]),
-    )
-    src = str(tmp_path / "ev")
-    os.makedirs(src)
-    half = len(ev) // 2
-    for name, chunk in (("b1.json", ev[:half]), ("b2.json", ev[half:])):
-        with open(os.path.join(src, name), "w") as f:
-            for eid, ts, uid, et, val in chunk:
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": eid,
-                            "ts": ts,
-                            "user_id": uid,
-                            "event_type": et,
-                            "value": val,
-                        }
-                    )
-                    + "\n"
-                )
-    schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
-    )
-    q = (
-        streaming_ewma_control(stream)
-        .writeStream.format("memory")
-        .queryName("ewma_stream")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        got = []
-        while time.time() < deadline:
-            q.processAllAvailable()
-            got = spark.sql("SELECT * FROM ewma_stream").collect()
-            if got:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    assert got
-    from collections import defaultdict
-
-    by_type = defaultdict(list)
-    for r in got:
-        by_type[r.event_type].append(r)
-    # per-type: trajectory is consecutive closed days; final state ==
-    # batch on the closed-day prefix written to a temp dir
-    import pandas as pd
-
-    evdf = load_table(spark, sf_smoke, "events")
-    for etype, rows in by_type.items():
-        rows.sort(key=lambda r: r.day_index)
-        assert [r.day_index for r in rows] == list(range(1, len(rows) + 1))
-        max_closed = max(r.day_epoch for r in rows)
-        d = str(tmp_path / f"closed_{etype}")
-        evdf.filter(
-            (F.col("event_type") != etype)
-            | (
-                F.col("ts").cast("date").cast("timestamp").cast("long")
-                / 86400
-                <= max_closed
-            )
-        ).write.parquet(os.path.join(d, "events.parquet"))
-        batch = {
-            r.event_type: r
-            for r in registry.QUERIES["events_ewma_control"](
-                spark, d
-            ).collect()
-        }
-        last = rows[-1]
-        b = batch[etype]
-        assert b.n_days == last.day_index
-        assert b.ewma_last_micros == float(last.z_micros)
-        assert b.max_abs_dev_micros == float(last.max_abs_dev_micros)
 
 
 def test_value_migration_invariants(spark, sf_check):

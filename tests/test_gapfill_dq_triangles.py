@@ -140,81 +140,6 @@ def test_dq_audit_order_grain_checks_report_zero_on_empty_tables(spark, sf_smoke
         assert (rows[check].n_checked, rows[check].n_violations) == (0, 0), check
 
 
-def test_dq_monitor_sink_totals_and_replay(spark, tmp_path):
-    """Streaming DQ monitor: totals equal the batch predicates over
-    everything streamed, and a crashed-batch replay (same batch_id)
-    leaves the totals unchanged."""
-    import json
-    import os
-
-    from mapreduce_implementation_grpc_spark.operators.dq import (
-        _row_local,
-        events_row_checks,
-    )
-    from mapreduce_implementation_grpc_spark.streaming import (
-        dq_monitor_sink,
-        dq_monitor_totals,
-    )
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "dq")
-    os.makedirs(src)
-    schema = "event_id long, value double, props string"
-    b1 = [(1, 1.0, '{"a": 1}'), (2, None, "{not json"), (3, 2.0, "[]")]
-    b2 = [(4, None, None), (None, 5.0, '{"b": 2}')]
-
-    def write(name, rows):
-        with open(os.path.join(src, name), "w") as f:
-            for eid, v, p in rows:
-                f.write(
-                    json.dumps({"event_id": eid, "value": v, "props": p}) + "\n"
-                )
-
-    def run(ckpt):
-        q = (
-            spark.readStream.schema(schema)
-            .json(src)
-            .writeStream.foreachBatch(dq_monitor_sink(spark, out))
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .start()
-        )
-        q.awaitTermination(120)
-
-    write("b1.json", b1)
-    run("ckpt")
-    write("b2.json", b2)
-    run("ckpt")
-
-    def totals():
-        return {
-            r.check_name: (r.n_checked, r.n_violations)
-            for r in dq_monitor_totals(spark, out).collect()
-        }
-
-    both = spark.createDataFrame(b1 + b2, schema)
-    want = {
-        r.check_name: (r.n_checked, r.n_violations)
-        for r in _row_local(both, events_row_checks()).collect()
-    }
-    got = totals()
-    assert got == want
-    # the monitor actually fired: nulls and the bad json were counted
-    assert got["events_value_nonnull"][1] == 2
-    assert got["events_event_id_nonnull"][1] == 1
-    assert got["events_props_json_valid"][1] >= 1
-
-    # crashed-batch redelivery: Spark re-runs under the SAME batch_id;
-    # the partition overwrite must not double-count
-    seen_batches = sorted(
-        int(r._batch_id)
-        for r in spark.read.parquet(out).select("_batch_id").distinct().collect()
-    )
-    replay_id = seen_batches[-1]
-    dq_monitor_sink(spark, out)(spark.createDataFrame(b2, schema), replay_id)
-    assert totals() == want
-
-
 def test_market_basket_metrics_match_bruteforce(spark, sf_smoke):
     """Association metrics vs a driver-side brute force over the
     collected baskets (sf0.001 is small enough), including the
@@ -351,9 +276,10 @@ def test_streaks_and_dim_stats_sanity(spark, sf_smoke):
 
 
 def test_bfs_hops_chain_and_min_distance(spark):
-    """Crafted graph: chain 1-2-3-4 plus shortcut 1-3; sources {1, 9}
-    (9 is isolated). Hops must be the MIN distance, the isolated
-    source still appears at 0, and nodes beyond max_hops are absent."""
+    """Crafted graph: chain 1-2-3-4-5-6 plus shortcut 1-3; sources
+    {1, 9} (9 is isolated). Hops must be the MIN distance, the
+    isolated source still appears at 0, and nodes beyond REACH_HOPS
+    (3) are absent."""
     from mapreduce_implementation_grpc_spark.operators.graph_motifs import bfs_hops
 
     edges = spark.createDataFrame(
@@ -362,13 +288,14 @@ def test_bfs_hops_chain_and_min_distance(spark):
     sources = spark.createDataFrame([(1,), (9,)], "suppkey long")
     got = {
         r.suppkey: r.hops
-        for r in bfs_hops(edges, sources, max_hops=2).collect()
+        for r in bfs_hops(edges, sources).collect()
     }
     assert got[1] == 0 and got[9] == 0
     assert got[2] == 1
     assert got[3] == 1          # shortcut 1-3 beats the 2-hop path
     assert got[4] == 2          # via 3
-    assert 5 not in got and 6 not in got  # beyond max_hops
+    assert got[5] == 3
+    assert 6 not in got         # beyond REACH_HOPS
 
 
 def test_supplier_reach_oracle_parity(spark, sf_check):

@@ -1,20 +1,10 @@
-"""K-means coarse quantizer properties + streaming dedup behavior."""
+"""K-means coarse quantizer properties."""
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from mapreduce_implementation_grpc_spark.operators.kmeans import (
     _assign,
@@ -22,7 +12,6 @@ from mapreduce_implementation_grpc_spark.operators.kmeans import (
     kmeans_cells,
     kmeans_fit,
 )
-from mapreduce_implementation_grpc_spark.streaming import streaming_dedup
 
 
 @pytest.fixture(scope="module")
@@ -66,39 +55,3 @@ def test_kmeans_cells_on_real_embeddings(spark, sf_check):
     assert cells.count() == 500
     assert len(counts) == 8                       # all 8 cells survive
     assert all(r["count"] > 0 for r in counts)
-
-
-DOC_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("text", StringType()),
-    ]
-)
-
-
-def test_streaming_dedup_across_microbatches(spark, tmp_path):
-    src = str(tmp_path / "docs")
-    os.makedirs(src, exist_ok=True)
-
-    def write(name, rows):
-        with open(os.path.join(src, name), "w") as f:
-            for doc_id, ts, text in rows:
-                f.write(json.dumps({"doc_id": doc_id, "ts": ts, "text": text}) + "\n")
-
-    write("b1.json", [(1, "2024-01-01 10:00:00", "Hello World"),
-                      (2, "2024-01-01 10:01:00", "hello, world!")])  # dup after normalize
-    stream = spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).json(src)
-    out = streaming_dedup(stream)
-    q = out.writeStream.format("memory").queryName("dedup_stream").outputMode("append").start()
-    try:
-        q.processAllAvailable()
-        write("b2.json", [(3, "2024-01-01 10:05:00", "HELLO world"),   # dup again
-                          (4, "2024-01-01 10:06:00", "fresh content here")])
-        q.processAllAvailable()
-        got = {r.doc_id for r in spark.sql("SELECT doc_id FROM dedup_stream").collect()}
-        assert 4 in got                       # new content passes
-        assert 3 not in got                   # cross-batch duplicate dropped
-        assert len(got & {1, 2}) == 1         # exactly one of the in-batch dups
-    finally:
-        q.stop()

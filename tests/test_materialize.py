@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from mapreduce_implementation_grpc_spark.materialize import (
     materialize,
     materialize_eager,
-    pin_before_overwrite,
 )
 from mapreduce_implementation_grpc_spark.operators.dedup import label_propagation
 from mapreduce_implementation_grpc_spark.operators.graph_motifs import kcore
@@ -66,18 +65,6 @@ def test_materialize_job_count_at_call_time(spark):
         spark, "pin_groupby", lambda: materialize(grouped)
     ) >= 1
 
-
-def test_pin_before_overwrite_truncates_lineage(spark, tmp_path):
-    # the read-modify-overwrite sinks MUST pin without lineage: after
-    # the pin, the plan must not reference the parquet files that the
-    # subsequent overwrite is about to delete
-    path = str(tmp_path / "t")
-    spark.range(5).write.parquet(path)
-    pinned = pin_before_overwrite(spark.read.parquet(path))
-    analyzed = _analyzed(pinned)
-    assert "LogicalRDD" in analyzed and path not in analyzed
-    pinned.write.mode("overwrite").parquet(path)
-    assert spark.read.parquet(path).count() == 5
 
 
 def test_kcore_peels_pendants_to_the_clique(spark):

@@ -112,54 +112,3 @@ def test_media_ops_reject_text_bytes_declared_media(spark):
         for op in (sample_frames, resize_images):
             with pytest.raises(Exception, match=f"declared '{modality}' sniffs as 'unknown'"):
                 op(p).collect()
-
-
-def test_streaming_decode_features_matches_batch(spark, tmp_path):
-    """The Arrow mapInPandas decode composed onto a stream must emit
-    the identical feature vectors the batch path computes."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    from mapreduce_implementation_grpc_spark.multimodal.binary_ops import (
-        decode_features,
-        with_binary_payload,
-    )
-    from mapreduce_implementation_grpc_spark.streaming import (
-        streaming_decode_features,
-    )
-
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ])
-    src = str(tmp_path / "mm_docs")
-    _os.makedirs(src, exist_ok=True)
-    rows = [(1, "the quick brown fox"), (2, "lazy dog"), (3, "x")]
-    with open(_os.path.join(src, "d.json"), "w") as f:
-        for doc_id, text in rows:
-            f.write(_json.dumps({"doc_id": doc_id, "text": text}) + "\n")
-
-    stream = spark.readStream.schema(schema).json(src)
-    q = (
-        streaming_decode_features(stream)
-        .writeStream.format("memory")
-        .queryName("mm_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r.doc_id: (r.modality, r.n_bytes, tuple(r.feature))
-        for r in spark.sql("select * from mm_stream").collect()
-    }
-    batch = spark.read.schema(schema).json(src)
-    want = {
-        r.doc_id: (r.modality, r.n_bytes, tuple(r.feature))
-        for r in decode_features(with_binary_payload(batch)).collect()
-    }
-    assert got == want and len(got) == 3

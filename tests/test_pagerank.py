@@ -27,7 +27,7 @@ def purchase_graph(spark, sf_dir):
 def test_rank_lower_bound_and_node_count(spark, sf_smoke):
     g = purchase_graph(spark, sf_smoke)
     n_nodes = g.select("src").distinct().count()
-    r = pagerank(spark, sf_smoke, iters=3)
+    r = pagerank(spark, sf_smoke)
     rows = r.collect()
     assert len(rows) == n_nodes
     # teleport term is a hard floor
@@ -58,7 +58,7 @@ def test_degree_monotone_within_suppliers(spark, sf_smoke):
     }
     ranks = {
         r["node"]: r["r"]
-        for r in pagerank(spark, sf_smoke, iters=3).collect()
+        for r in pagerank(spark, sf_smoke).collect()
         if r["node"].startswith("s")
     }
     hi = max(deg, key=deg.get)
@@ -77,8 +77,8 @@ def test_ppr_with_all_seeds_equals_classic(spark, sf_smoke):
 
     g = purchase_graph(spark, sf_smoke)
     all_nodes = g.select(F.col("src").alias("node")).distinct()
-    a = sorted(map(tuple, pagerank(spark, sf_smoke, iters=3).collect()))
-    b = sorted(map(tuple, personalized_pagerank(spark, sf_smoke, all_nodes, iters=3).collect()))
+    a = sorted(map(tuple, pagerank(spark, sf_smoke).collect()))
+    b = sorted(map(tuple, personalized_pagerank(spark, sf_smoke, all_nodes).collect()))
     assert a == b
 
 
@@ -88,7 +88,7 @@ def test_ppr_empty_seed_set_is_all_zero(spark, sf_smoke):
     )
 
     empty = spark.createDataFrame([], "node string")
-    rows = personalized_pagerank(spark, sf_smoke, empty, iters=2).collect()
+    rows = personalized_pagerank(spark, sf_smoke, empty).collect()
     assert rows and all(r["r"] == 0.0 for r in rows)
 
 

@@ -19,8 +19,8 @@ that only tests run is a test fixture or dead. AST only; no Spark.
 2. Every defaulted parameter. Each defaulted parameter of a
    module-level function, public or private, in ``operators/``,
    ``functions/``, ``multimodal/``, ``sources/``, ``plans/``,
-   ``streaming/``, ``registry/`` and ``materialize.py`` is set to
-   another value by some call in the package, ``tools/``,
+   ``registry/`` and ``materialize.py`` is set to another value by
+   some call in the package, ``tools/``,
    ``bench.py``, ``perfbench/`` or ``__spark_entry__.py``. Tests do
    not count: a value that only a test passes is a constant, and the
    test checks the behaviour at that constant. The rule is in
@@ -30,19 +30,23 @@ that only tests run is a test fixture or dead. AST only; no Spark.
    that only the query uses is a module constant next to it, and an
    oracle builder reads the same constant instead of restating it. A
    module-level ``q_x = analytics.fn`` is an alias of ``fn``, not a use
-   of it, and a literal equal to the value of a named constant default
-   (``min_quality=0.5`` against ``MIN_QUALITY = 0.5``) passes the
-   default. The deployment settings of ``session.get_spark`` are out of
-   scope.
+   of it. A literal or a named constant equal to the value of the
+   default passes the default: ``min_quality=0.5`` against
+   ``MIN_QUALITY = 0.5``, and ``max_lag=MAX_LAG`` against
+   ``max_lag=14`` when ``MAX_LAG = 14``. The deployment settings of
+   ``session.get_spark`` are out of scope.
 
 3. Every package def is reached. Each module-level def or class of
    the package is reached from a root by name: every module-level
-   statement of the package that is not a def or class (``QUERIES``,
-   ``ORACLES``, ``__all__``, constants, ``q_* = ...`` aliases) and
-   every other caller source except ``tests/`` (``tools/``,
-   ``bench.py``, ``perfbench/``, ``__spark_entry__.py``). A reached
-   def reaches the names its body, decorators and defaults use. The
-   rule is in `unreached_defs`. Code that only tests run belongs
+   statement of the package that is not a def, a class or an
+   ``__all__`` assignment (``QUERIES``, ``ORACLES``, constants,
+   ``q_* = ...`` aliases) and every other caller source except
+   ``tests/`` (``tools/``, ``bench.py``, ``perfbench/``,
+   ``__spark_entry__.py``). An export list names what a package
+   offers, not what anything calls, so a def that only ``__all__``
+   and the tests name is not reached. A reached def reaches the
+   names its body, decorators and defaults use. The rule is in
+   `unreached_defs`. Code that only tests run belongs
    under ``tests/`` (``tests/media_encoders.py`` builds the codec
    fixtures) or goes, together with the tests that exist only for it.
 
@@ -184,9 +188,7 @@ def test_every_operator_bool_switch_has_a_package_caller_for_each_value():
 # Every defaulted parameter: some caller sets another value.
 
 REPO = PKG.parent
-SCOPE_DIRS = (
-    "operators", "functions", "multimodal", "sources", "plans", "streaming", "registry",
-)
+SCOPE_DIRS = ("operators", "functions", "multimodal", "sources", "plans", "registry")
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
 
 
@@ -352,13 +354,13 @@ def _same(a: object, b: object) -> bool:
 
 
 def _same_value(arg: ast.expr, default: ast.expr, values: dict[str, object]) -> bool:
-    """A literal argument passes a literal default, or a named constant
-    default, of the same value; any other argument only passes an
-    identical default expression."""
-    if not isinstance(arg, (ast.Name, ast.Attribute)):
-        a, d = _value(arg, values), _value(default, values)
-        if a is not _UNKNOWN and d is not _UNKNOWN:
-            return _same(a, d)
+    """An argument that is a literal, or a named constant bound to one,
+    passes a default that is a literal or a named constant of the same
+    value; any other argument only passes an identical default
+    expression."""
+    a, d = _value(arg, values), _value(default, values)
+    if a is not _UNKNOWN and d is not _UNKNOWN:
+        return _same(a, d)
     return ast.dump(arg) == ast.dump(default)
 
 
@@ -377,11 +379,12 @@ def never_set_parameters(sources: dict[str, str], scope: set[str]) -> list[str]:
     only; a call through it, ``QUERIES["name"](...)``, counts as a call
     of the function the entry names. Callees are matched by name, and
     through ``import ... as`` and module-level ``name = mod.fn``
-    aliases, so a name clash only keeps a parameter. A literal argument
-    passes the default when it has the default's value, also when the
-    default is a module-level constant (``0.5`` passes
-    ``MIN_QUALITY = 0.5``); any other argument passes it only when its
-    AST is the default's."""
+    aliases, so a name clash only keeps a parameter. A literal argument,
+    or a module-level constant bound to a literal, passes the default
+    when it has the default's value, also when the default is itself
+    such a constant (``0.5`` passes ``MIN_QUALITY = 0.5``, and
+    ``MAX_LAG = 14`` passes ``14``); any other argument passes it only
+    when its AST is the default's."""
     indexes = [_Index(m, ast.parse(src)) for m, src in sorted(sources.items())]
     aliases: dict[str, set[str]] = {}
     for ix in indexes:
@@ -498,6 +501,8 @@ def test_defaulted_parameter_detector_self_test():
         "def named(df, q=MIN_Q, r=MIN_Q): ...\n"
         "def renamed_listed(spark, sf_dir, n=9): ...\n"
         "def renamed_called(spark, sf_dir, n=9): ...\n"
+        "def const_arg(df, max_lag=14, hops=3): ...\n"
+        "def other_const(df, k=2): ...\n"
     )
     caller = (
         "from lib import aliased as _al\n"
@@ -530,12 +535,19 @@ def test_defaulted_parameter_detector_self_test():
         "QUERIES = {'listed': lib.q_listed, 'called': lib.q_called,\n"
         "           'rl': q_renamed_listed, 'rc': q_renamed_called}\n"
         "QUERIES['called'](spark, d, k=3)\n"
+        "MAX_LAG = 14\n"
+        "HOPS = 3\n"
+        "K_WIDE = 5\n"
+        "const_arg(df, max_lag=MAX_LAG, hops=cfg.HOPS)\n"
+        "other_const(df, k=K_WIDE)\n"
     )
     never = never_set_parameters(
         {"pkg.operators.lib": lib, "tools.caller": caller}, {"pkg.operators.lib"}
     )
     assert never == [
         "pkg.operators.lib._private(k)",
+        "pkg.operators.lib.const_arg(hops)",
+        "pkg.operators.lib.const_arg(max_lag)",
         "pkg.operators.lib.constant(bits)",
         "pkg.operators.lib.inner_unset(k)",
         "pkg.operators.lib.literal(text_col)",
@@ -550,7 +562,9 @@ def test_defaulted_parameter_detector_self_test():
     # `outer_unset` is out of scope, so only its callee is listed.
     # `q_listed` is only a QUERIES entry, which sets nothing; `q_called`
     # keeps k through the QUERIES['called'](...) call. `named(q)` is
-    # passed 0.5, the value of its default MIN_Q. A module-level
+    # passed 0.5, the value of its default MIN_Q. `const_arg` is passed
+    # MAX_LAG and cfg.HOPS, named constants equal to its literal
+    # defaults; `other_const` keeps k, set to K_WIDE = 5. A module-level
     # `q_x = fn` renames fn: a table holding the alias sets nothing,
     # and a call through it sets n.
 
@@ -567,8 +581,7 @@ def test_every_defaulted_parameter_is_set_by_some_caller():
 
 def _names_used(node: ast.AST) -> set[str]:
     """Every name `node` uses: ``Name`` ids, attribute names and
-    identifier-shaped string constants (``__all__`` entries, names
-    looked up by string)."""
+    identifier-shaped string constants (names looked up by string)."""
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -580,11 +593,17 @@ def _names_used(node: ast.AST) -> set[str]:
     return out
 
 
+def _is_export_list(stmt: ast.stmt) -> bool:
+    targets = getattr(stmt, "targets", None) or [getattr(stmt, "target", None)]
+    return any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets)
+
+
 def unreached_defs(sources: dict[str, str], package: str) -> list[str]:
     """'module.name' for every module-level def or class of a `package`
     module that no root reaches. The roots are the module-level
-    statements of the package that are not defs or classes, and every
-    source outside the package and outside ``tests``. A reached name
+    statements of the package that are not defs, classes or
+    ``__all__`` assignments, and every source outside the package and
+    outside ``tests``. A reached name
     reaches every package def of that name (through ``import ... as``
     aliases), and a reached def reaches every name its node uses
     (body, decorators, defaults). Matching is by name, so a name clash
@@ -609,7 +628,7 @@ def unreached_defs(sources: dict[str, str], package: str) -> list[str]:
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs.setdefault(stmt.name, []).append(mod)
                 uses.setdefault(stmt.name, set()).update(_names_used(stmt))
-            else:
+            elif not _is_export_list(stmt):
                 todo |= _names_used(stmt)
     reached: set[str] = set()
     while todo:
@@ -648,16 +667,19 @@ def test_reachability_detector_self_test():
         "lib.tool_only()\n"
         "_va()\n"
     )
-    test = "lib.fixture_only(); lib.TestOnly(); lib.ping()\n"
+    test = "lib.fixture_only(); lib.TestOnly(); lib.ping(); lib.exported()\n"
     unreached = unreached_defs(
         {"pkg.lib": lib, "pkg.table": table, "tools.t": tool, "tests.t": test}, "pkg"
     )
     assert unreached == [
         "pkg.lib.TestOnly",
+        "pkg.lib.exported",
         "pkg.lib.fixture_only",
         "pkg.lib.ping",
         "pkg.lib.pong",
     ]
+    # `exported` is named only by __all__ and a test, so nothing
+    # reaches it.
 
 
 def test_every_package_def_is_reached_outside_the_tests():

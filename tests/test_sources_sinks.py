@@ -9,12 +9,10 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.operators import word_count
-from mapreduce_implementation_grpc_spark.sources import read_text_corpus, with_task_id
+from mapreduce_implementation_grpc_spark.sources import read_text_corpus
 from mapreduce_implementation_grpc_spark.sources.catalog import load_table
-from mapreduce_implementation_grpc_spark.sources.sinks import (
-    overwrite_partitions,
-    write_word_counts_text,
-)
+from mapreduce_implementation_grpc_spark.sources.sinks import write_word_counts_text
+from mapreduce_implementation_grpc_spark.sources.text import task_id_col
 
 
 def test_text_scan_wordcount_roundtrip(spark, tmp_path):
@@ -42,24 +40,10 @@ def test_word_counts_text_sink_reference_format(spark, tmp_path):
     assert lines2 == {"alpha 3"}  # -f overwrite semantics
 
 
-def test_parquet_sink_partitioned(spark, tmp_path):
-    out = str(tmp_path / "pq_out")
-    df = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "a", 30)], ["id", "grp", "v"]
-    )
-    overwrite_partitions(df, out, partition_by=["grp"])
-    back = spark.read.parquet(out)
-    assert back.count() == 3
-    # partition pruning: reading one partition touches only its files
-    pruned = back.filter(F.col("grp") == "a")
-    assert pruned.count() == 2
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(grp" in plan
-
 
 def test_task_id_mirrors_reference_split(spark):
     df = spark.createDataFrame([(i,) for i in range(8)], ["doc_id"])
-    got = {r.doc_id: r.task_id for r in with_task_id(df).collect()}
+    got = dict(df.select("doc_id", task_id_col(F.col("doc_id"))).collect())
     assert got == {i: i % 4 for i in range(8)}
 
 
@@ -84,40 +68,12 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert "score" not in plan  # old-column query never reads the new one
 
 
-def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, tmp_path):
-    """Incremental recompute: rewriting one lang partition must leave
-    the other partitions' data files physically untouched (same file
-    set on disk) -- at 100 TB, re-curating one slice cannot cost a
-    full-table rewrite."""
-    import glob
-
-    out = str(tmp_path / "by_lang")
-    full = spark.createDataFrame(
-        [(1, "en", "aa"), (2, "en", "bb"), (3, "fr", "cc"), (4, "de", "dd")],
-        ["doc_id", "lang", "text"],
-    )
-    overwrite_partitions(full, out, partition_by=["lang"])
-    fr_before = sorted(glob.glob(f"{out}/lang=fr/*.parquet"))
-    de_before = sorted(glob.glob(f"{out}/lang=de/*.parquet"))
-
-    # re-curate ONLY the en slice (doc 2 dropped, doc 5 added)
-    en_v2 = spark.createDataFrame(
-        [(1, "en", "aa"), (5, "en", "ee")], ["doc_id", "lang", "text"]
-    )
-    overwrite_partitions(en_v2, out, partition_by=["lang"])
-
-    assert sorted(glob.glob(f"{out}/lang=fr/*.parquet")) == fr_before
-    assert sorted(glob.glob(f"{out}/lang=de/*.parquet")) == de_before
-    back = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert back == {1, 5, 3, 4}
-    # and the session config was restored
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
-
 
 def test_events_nanos_timestamps_load_like_micros(spark, sf_smoke, tmp_path):
     """``events.parquet`` as TIMESTAMP(NANOS) goes through
-    ``load_table``'s int64-nanos branch and yields the same instants as
-    the TIMESTAMP(MICROS) file the generators write."""
+    ``load_table``'s int64-nanos branch and yields the type and the
+    wall clock of the TIMESTAMP(MICROS) file the generators write, in
+    the UTC session and in one west of it."""
     table = pq.read_table(f"{sf_smoke}/events.parquet")
     ts = table.schema.get_field_index("ts")
     table = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp("ns")))
@@ -129,6 +85,17 @@ def test_events_nanos_timestamps_load_like_micros(spark, sf_smoke, tmp_path):
         df = load_table(spark, sf_dir, "events")
         return dict(df.select("event_id", F.col("ts").cast("string")).collect())
 
-    micros, nanos = ts_text(sf_smoke), ts_text(str(tmp_path))
-    assert len(micros) == table.num_rows
-    assert nanos == micros
+    micros_df = load_table(spark, sf_smoke, "events")
+    nanos_df = load_table(spark, str(tmp_path), "events")
+    assert nanos_df.schema["ts"].dataType == micros_df.schema["ts"].dataType
+
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    try:
+        for zone in ("UTC", "America/Los_Angeles"):
+            spark.conf.set(key, zone)
+            micros, nanos = ts_text(sf_smoke), ts_text(str(tmp_path))
+            assert len(micros) == table.num_rows
+            assert nanos == micros, zone
+    finally:
+        spark.conf.set(key, prev)

@@ -9,7 +9,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mapreduce_implementation_grpc_spark.operators import (
-    normalize_text,
+    normalized_col,
     tokenize,
     top_k,
     word_count,
@@ -31,16 +31,16 @@ CORPUS = [
 def corpus_df(spark):
     return spark.createDataFrame([Row(line=s) for s in CORPUS])
 
-
 def test_normalize_strips_and_lowercases(corpus_df):
-    rows = {r.line: r.norm for r in normalize_text(corpus_df).collect()}
+    norm = corpus_df.select("line", normalized_col("line").alias("norm"))
+    rows = {r.line: r.norm for r in norm.collect()}
     assert rows["Hello, World! hello"] == "hello world hello"
     assert rows["!!! ???"] == ""  # only punctuation+space, trimmed away
     assert rows["MiXeD CaSe mixed case 42 42"] == "mixed case mixed case 42 42"
 
 
 def test_tokenize_no_empty_tokens(spark, corpus_df):
-    words = tokenize(normalize_text(corpus_df))
+    words = tokenize(corpus_df.select(normalized_col("line").alias("norm")))
     toks = [r.word for r in words.collect()]
     assert "" not in toks
     assert toks.count("hello") == 2
@@ -61,7 +61,7 @@ def test_word_count_invariants(spark, corpus_df):
     (FIXTURES.md F2 invariants)."""
     wc = word_count(corpus_df)
     total = wc.agg(F.sum("cnt")).collect()[0][0]
-    toks = tokenize(normalize_text(corpus_df)).count()
+    toks = tokenize(corpus_df.select(normalized_col("line").alias("norm"))).count()
     assert total == toks
     wc8 = word_count(corpus_df.repartition(8))
     assert sorted(map(tuple, wc.collect())) == sorted(map(tuple, wc8.collect()))
